@@ -1087,9 +1087,18 @@ def ivfpq_rerank_topk(
     shortlist pass can hand it in and skip the internal one — it must be
     exactly ``ivfpq_adc_topk(..., k=shortlist)`` over the same inputs
     (the rerank-recall query shares one materialized shortlist between
-    its adc and rerank branches this way)."""
+    its adc and rerank branches this way).  Its columns are checked from
+    the schema at call time: a frame without ``query_id_col``,
+    ``neighbor_id`` or ``adc_d2`` raises ``ValueError``."""
     from pyspark.sql import Window
 
+    if shortlist_df is not None:
+        missing = [c for c in (query_id_col, "neighbor_id", "adc_d2")
+                   if c not in shortlist_df.columns]
+        if missing:
+            raise ValueError(
+                f"shortlist_df lacks column(s) {missing}; pass the output of "
+                f"ivfpq_adc_topk(..., k=shortlist)")
     short = shortlist_df if shortlist_df is not None else ivfpq_adc_topk(
         queries, encoded, coarse, books, k=shortlist, m=m, ks=ks, dim=dim,
         n_probe=n_probe, id_col=id_col, query_id_col=query_id_col,

@@ -7,6 +7,9 @@ md5-portable hashing so the DuckDB oracles reproduce results exactly.
 
 from __future__ import annotations
 
+import operator
+from functools import partial, reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -835,6 +838,262 @@ def bm25_topk(
     )
 
 
+# ---------------------------------------------------------------------------
+# n-gram LM core.  Every smoothing function below (stupid backoff,
+# Jelinek-Mercer, Witten-Bell, Kneser-Ney, modified Kneser-Ney) is one
+# gram stream over the scored corpus, a list of count tables left-joined
+# onto it in order, a probability expression, and the shared per-doc
+# rollup.  Only the tables and the expression differ per smoothing.
+# ---------------------------------------------------------------------------
+
+
+def _ngram_stream(df: DataFrame, n: int, top: int | None = None,
+                  id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """One row per word ``n``-gram of every document: ``id_col`` plus the
+    words, named suffix-aligned for an order-``top`` model
+    (``w{top-n+1}..w{top}``; the bigram stream of a trigram model is
+    ``w2, w3``).  Words split on single spaces with empties dropped.  The
+    gram array is one generated ``zip_with`` over ``n`` offset slices;
+    ``greatest(.., 0)`` keeps docs shorter than ``n`` from throwing in
+    ``slice`` (they yield no grams).
+
+    The scan goes through ``spread_for_compute`` first: a small parquet
+    scans as 1-2 splits and AQE keeps it that narrow, so the explode +
+    hash + partial-agg map stage, the ladder's heavy pass, would run
+    serial (sf1: 4.7 effective cores on local[32]).  Above 4 GB the
+    scan's own splits are trusted and no corpus shuffle is added."""
+    from .dedup import spread_for_compute
+
+    top = n if top is None else top
+    names = [f"w{i}" for i in range(top - n + 1, top + 1)]
+    spread = spread_for_compute(df.select(id_col, text_col))
+    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    if n == 1:
+        # explode the expression, not a ``__w`` column: over an attribute
+        # InferFiltersFromGenerate adds a size(..) > 0 filter that pushes
+        # below the spread and costs the shared corpus exchange its reuse
+        return spread.select(F.col(id_col), F.explode(words).alias(names[0]))
+    words = spread.withColumn("__w", words)
+    span = f"greatest(size(__w) - {n - 1}, 0)"
+    sl = [f"slice(__w, {i}, {span})" for i in range(1, n + 1)]
+    arr = (f"zip_with({sl[-2]}, {sl[-1]},"
+           f" (a, b) -> struct(a as {names[-2]}, b as {names[-1]}))")
+    for i in range(n - 3, -1, -1):
+        rest = ", ".join(f"r.{c} as {c}" for c in names[i + 1:])
+        arr = f"zip_with({sl[i]}, {arr}, (a, r) -> struct(a as {names[i]}, {rest}))"
+    return words.select(F.col(id_col), F.explode(F.expr(arr)).alias("g")).select(
+        id_col, *(f"g.{c}" for c in names)
+    )
+
+
+def _gram_keys(df: DataFrame) -> list[str]:
+    return [c for c in df.columns if c[0] == "w" and c[1:].isdigit()]
+
+
+def _gram_counts(df: DataFrame, n: int, top: int, cnt: str,
+                 id_col: str, text_col: str) -> DataFrame:
+    """Raw ``n``-gram count table (column ``cnt``), keyed like
+    ``_ngram_stream``.  The all-keys isNotNull filter keeps nothing out
+    (split tokens are never null).  It absorbs the join-key isnotnull
+    sets that InferFiltersFromConstraints would push into each fan-out
+    copy of the table, so every copy canonicalizes identically and AQE
+    materializes one shuffle per table (the rest are ReusedExchange)."""
+    s = _ngram_stream(df, n, top, id_col, text_col)
+    keys = _gram_keys(s)
+    keep = reduce(operator.and_, [F.col(k).isNotNull() for k in keys])
+    return s.filter(keep).groupBy(*keys).agg(F.count(F.lit(1)).alias(cnt))
+
+
+def _lm_tables(train: DataFrame, n: int, continuation: bool,
+               id_col: str, text_col: str) -> tuple[list[DataFrame], DataFrame]:
+    """Count tables of an interpolated order-``n`` model, in join order:
+    for each level k = n..2 the count table (``tcnt`` at the top, ``c{k}``
+    below) and its per-context totals (``n{k}`` = Σ counts, ``t{k}`` =
+    distinct continuations); then the base table ``c1`` keyed by
+    ``w{n}``.  Also returns the 1-row normalizer ``__total``.
+
+    ``continuation=False`` (Witten-Bell, Jelinek-Mercer): raw counts at
+    every order; ``c1`` is the unigram count, ``__total`` its sum
+    (``__vocab`` its row count).  ``continuation=True`` (Kneser-Ney): each
+    lower level is the continuation count N₁₊(·u) of the level above
+    (KenLM's adjusted counts, so every table derives from the single
+    top-order table); ``c1`` = N₁₊(·w) and ``__total`` = N_types over the
+    order-2 continuation table.  ``count_rows_keeping`` pins the parent
+    count column so pruning cannot turn a derived table into a separate
+    re-aggregation of the corpus."""
+    from ..functions import count_rows_keeping
+
+    ws = [f"w{i}" for i in range(1, n + 1)]
+    t, cnt = _gram_counts(train, n, n, "tcnt", id_col, text_col), "tcnt"
+    tables = []
+    for k in range(n, 1, -1):
+        if k < n:
+            if continuation:
+                t = t.groupBy(*ws[n - k:]).agg(count_rows_keeping(cnt).alias(f"c{k}"))
+            else:
+                t = _gram_counts(train, k, n, f"c{k}", id_col, text_col)
+            cnt = f"c{k}"
+        tables += [t, t.groupBy(*ws[n - k:n - 1]).agg(
+            F.sum(cnt).alias(f"n{k}"), F.count(F.lit(1)).alias(f"t{k}"))]
+    if continuation:
+        base = t.groupBy(ws[-1]).agg(count_rows_keeping(cnt).alias("c1"))
+        total = t.groupBy().agg(count_rows_keeping(cnt).alias("__total"))
+    else:
+        base = _gram_counts(train, 1, n, "c1", id_col, text_col)
+        total = base.groupBy().agg(
+            F.sum("c1").alias("__total"), F.count(F.lit(1)).alias("__vocab"))
+    return tables + [base], total
+
+
+def _backoff_tables(documents: DataFrame, n: int, id_col: str,
+                    text_col: str) -> tuple[list[DataFrame], DataFrame]:
+    """Raw k-gram counts of the scored corpus itself, k = n..1, in join
+    order.  Each lower order k is joined twice: as the context of order
+    k+1 (keys ``w{n-k}..w{n-1}``), then at the transition's suffix
+    (``w{n-k+1}..w{n}``).  Count columns are named after their keys
+    (``c_w1w2``); the 1-row ``__total`` sums the unigram table."""
+    ws = [f"w{i}" for i in range(1, n + 1)]
+    tables = []
+    for k in range(n, 0, -1):
+        # counted under keys past w{n}, so every placement below is a
+        # real rename: the copies canonicalize alike and AQE reuses one
+        # broadcast (a same-name alias would be dropped as redundant)
+        t = _gram_counts(documents, k, n + k, "__c", id_col, text_col)
+        for lo in range(max(n - k - 1, 0), n - k + 1):
+            keys = ws[lo:lo + k]
+            tables.append(t.select(
+                *(F.col(a).alias(b) for a, b in zip(_gram_keys(t), keys)),
+                F.col("__c").alias("c_" + "".join(keys))))
+    return tables, t.groupBy().agg(F.sum("__c").alias("__total"))
+
+
+# One interpolation level as a fully-parenthesized IEEE-double SQL dag,
+# mirrored verbatim in the DuckDB oracles (multiplication/division order
+# is bit-significant).  ``inner`` is the next-lower level's probability.
+def _kn_level(d: str, cnt: str, nctx: str, n1p: str, inner: str) -> str:
+    return (
+        f"((greatest(cast(coalesce({cnt}, 0) as double)"
+        f" - cast({d} as double), cast(0 as double))"
+        f" / cast({nctx} as double))"
+        f" + (((cast({d} as double) * cast({n1p} as double))"
+        f" / cast({nctx} as double)) * {inner}))"
+    )
+
+
+def _wb_level(cnt: str, nctx: str, n1p: str, inner: str) -> str:
+    return (
+        f"((cast(coalesce({cnt}, 0) as double)"
+        f" + (cast({n1p} as double) * {inner}))"
+        f" / (cast({nctx} as double) + cast({n1p} as double)))"
+    )
+
+
+_BASE_PROB = "(cast(c1 as double) / cast(__total as double))"
+
+
+def _interpolated(documents: DataFrame, train_docs: "DataFrame | None", n: int,
+                  level, continuation: bool, id_col: str,
+                  text_col: str) -> DataFrame:
+    """Order-``n`` interpolated model (Kneser-Ney, Witten-Bell): the
+    probability is ``level`` applied from the base ``c1/__total`` up to
+    the top, and a transition is OOV when its top context or its last
+    word is missing from the train tables."""
+    train = documents if train_docs is None else train_docs
+    tables, total = _lm_tables(train, n, continuation, id_col, text_col)
+    p = _BASE_PROB
+    for k in range(2, n + 1):
+        p = level("tcnt" if k == n else f"c{k}", f"n{k}", f"t{k}", p)
+    return _lm_score(documents, n, tables, [total], F.expr(p), id_col,
+                     text_col, unseen=True, oov=True)
+
+
+def _stupid_backoff(documents: DataFrame, n: int, alpha: float, id_col: str,
+                    text_col: str) -> DataFrame:
+    """Order-``n`` stupid backoff: the first seen suffix order j (from the
+    top) scores α^j·c(suffix)/c(its context), the unigram floor divides
+    by the corpus total."""
+    ws = [f"w{i}" for i in range(1, n + 1)]
+    tables, total = _backoff_tables(documents, n, id_col, text_col)
+    steps, wt = [], 1.0
+    for j in range(n):
+        num = F.col("c_" + "".join(ws[j:]))
+        den = F.col("c_" + "".join(ws[j:-1])) if j < n - 1 else F.col("__total")
+        steps.append((num.isNotNull(), (F.lit(wt) * num if j else num) / den))
+        wt *= alpha
+    p = F.when(*steps[0])
+    for seen, score in steps[1:-1]:
+        p = p.when(seen, score)
+    return _lm_score(documents, n, tables, [total], p.otherwise(steps[-1][1]),
+                     id_col, text_col)
+
+
+def _lm_score(documents: DataFrame, n: int, tables: list[DataFrame],
+              totals: list[DataFrame], prob, id_col: str, text_col: str,
+              unseen: bool = False, oov: bool = False,
+              flag: str | None = None) -> DataFrame:
+    """Score every order-``n`` transition of ``documents`` with ``prob``
+    and roll up per doc.  The gram stream left-joins each table on its
+    word keys in order: a table keyed by one word is vocabulary-bounded
+    and broadcast; tuple-keyed tables stay shuffle joins.  The 1-row
+    ``totals`` are broadcast cross joins.  With ``oov``, a transition
+    whose top context (``n{n}``) or last word (``c1``) is missing from
+    the train tables is OOV: unscored and counted instead."""
+    scored = _ngram_stream(documents, n, id_col=id_col, text_col=text_col)
+    for t in tables:
+        keys = _gram_keys(t)
+        scored = scored.join(F.broadcast(t) if len(keys) == 1 else t, keys, "left")
+    for t in totals:
+        scored = scored.crossJoin(F.broadcast(t))
+    s = F.round(F.log(prob), 6).cast("decimal(20,6)")
+    if oov:
+        scored = scored.withColumn(
+            "__oov", F.col(f"n{n}").isNull() | F.col("c1").isNull())
+        s = F.when(~F.col("__oov"), s)
+    return _lm_rollup(documents, scored.withColumn("__s", s), id_col,
+                      unseen, oov, flag)
+
+
+def _lm_rollup(documents: DataFrame, scored: DataFrame, id_col: str,
+               unseen: bool, oov: bool, flag: str | None) -> DataFrame:
+    """Per-doc rollup of the transition scores ``__s``, shared by the
+    whole family.  Each ``__s`` is a round-6 ln as DECIMAL(20,6), so the
+    per-doc sum is exact and order-independent: Spark's partial-agg order
+    and DuckDB's scan order give identical means.  The mean rounds by
+    floor(x·1e6 + 0.5)/1e6, not round(): engines disagree on the
+    half-way rule (caught at sf0.1, one doc's quotient landed exactly on
+    a 6th-decimal boundary), while floor is the same three IEEE ops
+    everywhere; ``ppl`` = exp(−mean) rounds the same way at 4 places.
+    Docs without transitions emit zero counts and NULL scores.
+
+    Columns: ``id_col, n_transitions, [n_oov], [n_unseen], avg_logscore,
+    ppl, [flag]``.  ``n_unseen`` counts scored transitions whose
+    top-order gram (``tcnt``) is novel; with ``oov`` the ``__oov`` rows
+    are counted in ``n_oov`` and left out of the mean.  ``flag`` carries
+    a boolean column per doc by min, true for docs with no transitions."""
+    counts = {"n_transitions": F.count(F.lit(1))}
+    novel = F.col("tcnt").isNull()
+    if oov:
+        counts["n_oov"] = F.sum(F.col("__oov").cast("long"))
+        novel = novel & ~F.col("__oov")
+    if unseen:
+        counts["n_unseen"] = F.sum(novel.cast("long"))
+    aggs = [c.alias(name) for name, c in counts.items()]
+    aggs += [F.sum("__s").alias("__sum"), F.count("__s").alias("__n_scored")]
+    if flag:
+        aggs.append(F.min(flag).alias(flag))
+    per = scored.groupBy(id_col).agg(*aggs)
+    n = F.col("__n_scored" if oov else "n_transitions")
+    avg = F.floor(F.col("__sum").cast("double") / n * 1e6 + 0.5) / 1e6
+    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
+    return documents.select(id_col).join(per, id_col, "left").select(
+        F.col(id_col),
+        *(F.coalesce(c, F.lit(0)).cast("long").alias(c) for c in counts),
+        avg.alias("avg_logscore"),
+        ppl.alias("ppl"),
+        *([F.coalesce(flag, F.lit(True)).alias(flag)] if flag else []),
+    )
+
+
 def lm_bigram_stupid_backoff(
     documents: DataFrame,
     id_col: str = "doc_id",
@@ -864,83 +1123,7 @@ def lm_bigram_stupid_backoff(
     (the bigram table is vocabulary²-bounded — too big to broadcast at
     real scale, so the transition scoring JOINS on the pair key);
     unigram table broadcast; total folds from the unigram table."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    # greatest(.., 0) guards 0/1-token docs (slice() throws on a
-    # negative length); they fall through to the documented
-    # left-join/coalesce path with n_transitions = 0
-    pairs_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 1, 0)),"
-        " slice(__w, 2, greatest(size(__w) - 1, 0)),"
-        " (a, b) -> struct(a as w1, b as w2))"
-    )
-    # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
-    # CPU-bound explode+partial-agg map stages (see lm_5gram_kneser_ney);
-    # both gram streams derive from the ONE spread frame so its exchange
-    # is shared
-    from .dedup import spread_for_compute
-
-    d = spread_for_compute(documents.select(id_col, text_col))
-    pairs = (
-        d.withColumn("__w", words)
-        .select(F.col(id_col), F.explode(pairs_arr).alias("p"))
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
-    toks = d.select(
-        F.col(id_col), F.explode(words).alias("token")
-    )
-    # No-op isNotNull filter (split tokens are never null) aligning the
-    # three uni copies' inferred join-key isnotnull sets so they share
-    # one shuffle stage (r18-opt, the lm_5gram_kneser_ney shape).
-    uni = toks.filter(F.col("token").isNotNull()).groupBy("token").agg(
-        F.count(F.lit(1)).alias("ucnt")
-    )
-    tot = uni.groupBy().agg(F.sum("ucnt").alias("__total"))
-    bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("bcnt"))
-    u1 = uni.select(F.col("token").alias("w1"), F.col("ucnt").alias("c1"))
-    u2 = uni.select(F.col("token").alias("w2"), F.col("ucnt").alias("c2"))
-    scored = (
-        pairs.join(bi, ["w1", "w2"], "left")
-        .join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "__s",
-            F.round(
-                F.when(
-                    F.col("bcnt").isNotNull(),
-                    F.log(F.col("bcnt") / F.col("c1")),
-                ).otherwise(
-                    F.log(F.lit(alpha) * F.col("c2") / F.col("__total"))
-                ),
-                6,
-            ).cast("decimal(20,6)"),
-        )
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum("__s").alias("__sum"),
-    )
-    # the MEAN rounds via explicit floor arithmetic rather than round():
-    # engines disagree on the half-way rule (caught at sf0.1 — one doc's
-    # quotient landed exactly on a 6th-decimal boundary), while
-    # floor(x·1e6 + 0.5)/1e6 is the same three IEEE ops everywhere
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("n_transitions") * 1e6
-            + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _stupid_backoff(documents, 2, alpha, id_col, text_col)
 
 
 def c4_line_filter(
@@ -1076,99 +1259,7 @@ def lm_trigram_stupid_backoff(
     on (w1,w2,w3), join bigram counts on (w1,w2) [denominator — always
     present for a seen trigram] and left-join on (w2,w3) [backoff
     numerator]; the unigram table and total are broadcast."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    tri_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 2, 0)),"
-        " zip_with(slice(__w, 2, greatest(size(__w) - 2, 0)),"
-        "          slice(__w, 3, greatest(size(__w) - 2, 0)),"
-        "          (b, c) -> struct(b as w2, c as w3)),"
-        " (a, bc) -> struct(a as w1, bc.w2 as w2, bc.w3 as w3))"
-    )
-    pair_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 1, 0)),"
-        " slice(__w, 2, greatest(size(__w) - 1, 0)),"
-        " (a, b) -> struct(a as w1, b as w2))"
-    )
-    # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
-    # CPU-bound explode+partial-agg map stages (see lm_5gram_kneser_ney)
-    from .dedup import spread_for_compute
-
-    docs_w = spread_for_compute(
-        documents.select(id_col, text_col)
-    ).withColumn("__w", words)
-    tris = (
-        docs_w.select(F.col(id_col), F.explode(tri_arr).alias("t"))
-        .select(id_col, "t.w1", "t.w2", "t.w3")
-    )
-    pairs = (
-        docs_w.select(F.explode(pair_arr).alias("p"))
-        .select("p.w1", "p.w2")
-    )
-    toks = docs_w.select(F.explode("__w").alias("token"))
-    # No-op isNotNull filters (split tokens are never null) aligning
-    # each fan-out branch's inferred join-key isnotnull set so the
-    # uni (3 copies) and bi (2 copies) subtrees share one shuffle stage
-    # each (r18-opt, the lm_5gram_kneser_ney shape).
-    uni = toks.filter(F.col("token").isNotNull()).groupBy("token").agg(
-        F.count(F.lit(1)).alias("ucnt")
-    )
-    tot = uni.groupBy().agg(F.sum("ucnt").alias("__total"))
-    bi = pairs.filter(
-        F.col("w1").isNotNull() & F.col("w2").isNotNull()
-    ).groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("bcnt"))
-    tri = tris.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("tcnt"))
-    b12 = bi.select(F.col("w1"), F.col("w2"), F.col("bcnt").alias("c12"))
-    b23 = bi.select(F.col("w1").alias("w2"), F.col("w2").alias("w3"),
-                    F.col("bcnt").alias("c23"))
-    u2 = uni.select(F.col("token").alias("w2"), F.col("ucnt").alias("cu2"))
-    u3 = uni.select(F.col("token").alias("w3"), F.col("ucnt").alias("cu3"))
-    scored = (
-        tris.join(tri, ["w1", "w2", "w3"], "left")
-        .join(b12, ["w1", "w2"], "left")
-        .join(b23, ["w2", "w3"], "left")
-        .join(F.broadcast(u2), "w2")
-        .join(F.broadcast(u3), "w3")
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "__s",
-            F.round(
-                F.when(
-                    F.col("tcnt").isNotNull(),
-                    F.log(F.col("tcnt") / F.col("c12")),
-                )
-                .when(
-                    F.col("c23").isNotNull(),
-                    F.log(F.lit(alpha) * F.col("c23") / F.col("cu2")),
-                )
-                .otherwise(
-                    F.log(F.lit(alpha * alpha) * F.col("cu3")
-                          / F.col("__total"))
-                ),
-                6,
-            ).cast("decimal(20,6)"),
-        )
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum("__s").alias("__sum"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("n_transitions") * 1e6
-            + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _stupid_backoff(documents, 3, alpha, id_col, text_col)
 
 
 def fineweb_rules(
@@ -1255,70 +1346,12 @@ def lm_bigram_interpolated(
     Same plan and determinism discipline as ``lm_bigram_stupid_backoff``:
     bigram counts shuffle on the pair key, unigrams + total broadcast,
     round-6 logs → DECIMAL(20,6) sums → floor-mean."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    pairs_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 1, 0)),"
-        " slice(__w, 2, greatest(size(__w) - 1, 0)),"
-        " (a, b) -> struct(a as w1, b as w2))"
-    )
-    # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
-    # CPU-bound explode+partial-agg map stages (see lm_5gram_kneser_ney);
-    # both gram streams derive from the ONE spread frame so its exchange
-    # is shared
-    from .dedup import spread_for_compute
-
-    d = spread_for_compute(documents.select(id_col, text_col))
-    pairs = (
-        d.withColumn("__w", words)
-        .select(F.col(id_col), F.explode(pairs_arr).alias("p"))
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
-    toks = d.select(
-        F.col(id_col),
-        F.explode(words).alias("token"),
-    )
-    # No-op isNotNull filter (split tokens are never null) aligning the
-    # three uni copies' inferred join-key isnotnull sets so they share
-    # one shuffle stage (r18-opt, the lm_5gram_kneser_ney shape).
-    uni = toks.filter(F.col("token").isNotNull()).groupBy("token").agg(
-        F.count(F.lit(1)).alias("ucnt")
-    )
-    tot = uni.groupBy().agg(F.sum("ucnt").alias("__total"))
-    bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("bcnt"))
-    u1 = uni.select(F.col("token").alias("w1"), F.col("ucnt").alias("c1"))
-    u2 = uni.select(F.col("token").alias("w2"), F.col("ucnt").alias("c2"))
+    tables, total = _backoff_tables(documents, 2, id_col, text_col)
     mix = (
-        F.lit(lam) * F.coalesce(F.col("bcnt"), F.lit(0)) / F.col("c1")
-        + F.lit(1.0 - lam) * F.col("c2") / F.col("__total")
+        F.lit(lam) * F.coalesce(F.col("c_w1w2"), F.lit(0)) / F.col("c_w1")
+        + F.lit(1.0 - lam) * F.col("c_w2") / F.col("__total")
     )
-    scored = (
-        pairs.join(bi, ["w1", "w2"], "left")
-        .join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("__s", F.round(F.log(mix), 6).cast("decimal(20,6)"))
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum("__s").alias("__sum"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("n_transitions") * 1e6
-            + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _lm_score(documents, 2, tables, [total], mix, id_col, text_col)
 
 
 def lm_bigram_witten_bell(
@@ -1353,95 +1386,8 @@ def lm_bigram_witten_bell(
     train bigram table; the context table (token count + distinct
     continuations), the unigram table, and the total are vocab-bounded
     (or 1-row) broadcasts."""
-    if train_docs is None:
-        train_docs = documents
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    pairs_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 1, 0)),"
-        " slice(__w, 2, greatest(size(__w) - 1, 0)),"
-        " (a, b) -> struct(a as w1, b as w2))"
-    )
-
-    def to_pairs(df: DataFrame) -> DataFrame:
-        # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
-        # CPU-bound explode+partial-agg map stage (see lm_5gram_kneser_ney)
-        from .dedup import spread_for_compute
-
-        return (
-            spread_for_compute(df.select(id_col, text_col))
-            .withColumn("__w", words)
-            .select(F.col(id_col), F.explode(pairs_arr).alias("p"))
-            .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        )
-
-    # No-op isNotNull filters (split tokens are never null) aligning
-    # each fan-out branch's inferred join-key isnotnull set so the
-    # bi and uni subtrees share one shuffle stage per table (r18-opt,
-    # the lm_5gram_kneser_ney shape).
-    bi = to_pairs(train_docs).filter(
-        F.col("w1").isNotNull() & F.col("w2").isNotNull()
-    ).groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("bcnt")
-    )
-    left_tab = bi.groupBy("w1").agg(
-        F.sum("bcnt").alias("n_w1"),
-        F.count(F.lit(1)).alias("n1p_l"),
-    )
-    uni = (
-        train_docs.withColumn("__w", words)
-        .select(F.explode("__w").alias("w2"))
-        .filter(F.col("w2").isNotNull())
-        .groupBy("w2").agg(F.count(F.lit(1)).alias("c2"))
-    )
-    tot = uni.groupBy().agg(F.sum("c2").alias("__total"))
-    prob = (
-        "((cast(coalesce(bcnt, 0) as double)"
-        " + (cast(n1p_l as double)"
-        " * (cast(c2 as double) / cast(__total as double))))"
-        " / (cast(n_w1 as double) + cast(n1p_l as double)))"
-    )
-    scored = (
-        to_pairs(documents)
-        .join(bi, ["w1", "w2"], "left")
-        .join(F.broadcast(left_tab), "w1", "left")
-        .join(F.broadcast(uni), "w2", "left")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("__oov", F.col("n_w1").isNull() | F.col("c2").isNull())
-        .withColumn(
-            "__s",
-            F.when(
-                ~F.col("__oov"),
-                F.round(F.log(F.expr(prob)), 6).cast("decimal(20,6)"),
-            ),
-        )
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum(F.col("__oov").cast("long")).alias("n_oov"),
-        F.sum(
-            (F.col("bcnt").isNull() & ~F.col("__oov")).cast("long")
-        ).alias("n_unseen"),
-        F.sum("__s").alias("__sum"),
-        F.count("__s").alias("__n_scored"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("__n_scored") * 1e6 + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            F.coalesce("n_oov", F.lit(0)).cast("long").alias("n_oov"),
-            F.coalesce("n_unseen", F.lit(0)).cast("long").alias("n_unseen"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _interpolated(documents, train_docs, 2, _wb_level, False,
+                         id_col, text_col)
 
 
 def lm_bigram_modified_kneser_ney(
@@ -1504,51 +1450,22 @@ def lm_bigram_modified_kneser_ney(
     carrying N₁/N₂/N₃₊ alongside the total) and the continuation table
     are vocab-bounded broadcasts; the count-of-counts row is a 1-row
     broadcast."""
-    if train_docs is None:
-        train_docs = documents
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    pairs_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 1, 0)),"
-        " slice(__w, 2, greatest(size(__w) - 1, 0)),"
-        " (a, b) -> struct(a as w1, b as w2))"
+    train = documents if train_docs is None else train_docs
+    tables, types = _lm_tables(train, 2, True, id_col, text_col)
+    bi = tables[0]
+    # per-context totals plus N₁/N₂/N₃₊(w₁·), the per-class type counts
+    tables[1] = bi.groupBy("w1").agg(
+        F.sum("tcnt").alias("n2"),
+        F.sum((F.col("tcnt") == 1).cast("long")).alias("nd1"),
+        F.sum((F.col("tcnt") == 2).cast("long")).alias("nd2"),
+        F.sum((F.col("tcnt") >= 3).cast("long")).alias("nd3p"),
     )
-
-    def to_pairs(df: DataFrame) -> DataFrame:
-        # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
-        # CPU-bound explode+partial-agg map stage (see lm_5gram_kneser_ney)
-        from .dedup import spread_for_compute
-
-        return (
-            spread_for_compute(df.select(id_col, text_col))
-            .withColumn("__w", words)
-            .select(F.col(id_col), F.explode(pairs_arr).alias("p"))
-            .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        )
-
-    from ..functions import count_rows_keeping
-
-    # No-op filter (split tokens are never null) aligning each branch's
-    # inferred isnotnull set so the five bi copies share one shuffle
-    # stage (r18-opt, the lm_5gram_kneser_ney shape).
-    bi = to_pairs(train_docs).filter(
-        F.col("w1").isNotNull() & F.col("w2").isNotNull()
-    ).groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("bcnt")
-    )
-    left_tab = bi.groupBy("w1").agg(
-        F.sum("bcnt").alias("n_w1"),
-        F.sum((F.col("bcnt") == 1).cast("long")).alias("nd1"),
-        F.sum((F.col("bcnt") == 2).cast("long")).alias("nd2"),
-        F.sum((F.col("bcnt") >= 3).cast("long")).alias("nd3p"),
-    )
-    right_tab = bi.groupBy("w2").agg(count_rows_keeping("bcnt").alias("n1p_r"))
-    types = bi.groupBy().agg(count_rows_keeping("bcnt").alias("n_types"))
     cc = bi.groupBy().agg(
-        F.sum((F.col("bcnt") == 1).cast("long")).alias("n1"),
-        F.sum((F.col("bcnt") == 2).cast("long")).alias("n2"),
-        F.sum((F.col("bcnt") == 3).cast("long")).alias("n3"),
-        F.sum((F.col("bcnt") == 4).cast("long")).alias("n4"),
-        F.sum((F.col("bcnt") >= 3).cast("long")).alias("n3p"),
+        F.sum((F.col("tcnt") == 1).cast("long")).alias("n1"),
+        F.sum((F.col("tcnt") == 2).cast("long")).alias("n2"),
+        F.sum((F.col("tcnt") == 3).cast("long")).alias("n3"),
+        F.sum((F.col("tcnt") == 4).cast("long")).alias("n4"),
+        F.sum((F.col("tcnt") >= 3).cast("long")).alias("n3p"),
     )
     # Discount dags mirrored verbatim in the oracle (op order is
     # bit-significant in IEEE double).  CASE = the SRILM-style
@@ -1601,84 +1518,30 @@ def lm_bigram_modified_kneser_ney(
         " and ((n3p = 0) or (__d3 > cast(0 as double))), false)"
     )
     disc = disc.select(
-        F.expr(
-            f"(case when {ok_sql} then __d1"
-            " else cast(0.75 as double) end)"
-        ).alias("__d1"),
-        F.expr(
-            f"(case when {ok_sql} then __d2"
-            " else cast(0.75 as double) end)"
-        ).alias("__d2"),
-        F.expr(
-            f"(case when {ok_sql} then __d3"
-            " else cast(0.75 as double) end)"
-        ).alias("__d3"),
+        *(F.expr(f"(case when {ok_sql} then {d}"
+                 " else cast(0.75 as double) end)").alias(d)
+          for d in ("__d1", "__d2", "__d3")),
         F.expr(ok_sql).alias("mkn_regime_ok"),
     )
     dd = (
-        "(case when coalesce(bcnt, 0) >= 3 then __d3"
-        " when coalesce(bcnt, 0) = 2 then __d2"
-        " when coalesce(bcnt, 0) = 1 then __d1"
+        "(case when coalesce(tcnt, 0) >= 3 then __d3"
+        " when coalesce(tcnt, 0) = 2 then __d2"
+        " when coalesce(tcnt, 0) = 1 then __d1"
         " else cast(0 as double) end)"
     )
     lam = (
         "((((__d1 * cast(nd1 as double)) + (__d2 * cast(nd2 as double)))"
-        " + (__d3 * cast(nd3p as double))) / cast(n_w1 as double))"
+        " + (__d3 * cast(nd3p as double))) / cast(n2 as double))"
     )
     prob = (
-        f"((greatest(cast(coalesce(bcnt, 0) as double) - {dd},"
-        f" cast(0 as double)) / cast(n_w1 as double))"
-        f" + ({lam} * (cast(n1p_r as double) / cast(n_types as double))))"
+        f"((greatest(cast(coalesce(tcnt, 0) as double) - {dd},"
+        f" cast(0 as double)) / cast(n2 as double))"
+        f" + ({lam} * {_BASE_PROB}))"
     )
-    scored = (
-        to_pairs(documents)
-        .join(bi, ["w1", "w2"], "left")
-        .join(F.broadcast(left_tab), "w1", "left")
-        .join(F.broadcast(right_tab), "w2", "left")
-        .crossJoin(F.broadcast(types))
-        .crossJoin(F.broadcast(disc))
-        .withColumn(
-            "__oov", F.col("n_w1").isNull() | F.col("n1p_r").isNull()
-        )
-        .withColumn(
-            "__s",
-            F.when(
-                ~F.col("__oov"),
-                F.round(F.log(F.expr(prob)), 6).cast("decimal(20,6)"),
-            ),
-        )
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum(F.col("__oov").cast("long")).alias("n_oov"),
-        F.sum(
-            (F.col("bcnt").isNull() & ~F.col("__oov")).cast("long")
-        ).alias("n_unseen"),
-        F.sum("__s").alias("__sum"),
-        F.count("__s").alias("__n_scored"),
-        # carries the in-plan regime assert through aggregation so
-        # column pruning cannot drop it
-        F.min("mkn_regime_ok").alias("mkn_regime_ok"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("__n_scored") * 1e6 + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            F.coalesce("n_oov", F.lit(0)).cast("long").alias("n_oov"),
-            F.coalesce("n_unseen", F.lit(0)).cast("long").alias("n_unseen"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-            F.coalesce("mkn_regime_ok", F.lit(True)).alias("mkn_regime_ok"),
-        )
-    )
+    # the regime flag rides through the per-doc aggregation (min) so
+    # column pruning cannot drop it
+    return _lm_score(documents, 2, tables, [types, disc], F.expr(prob), id_col,
+                     text_col, unseen=True, oov=True, flag="mkn_regime_ok")
 
 
 def lm_bigram_kneser_ney(
@@ -1730,98 +1593,9 @@ def lm_bigram_kneser_ney(
     scoring joins corpus transitions to the bigram table on the pair
     key and broadcasts the two vocab-bounded side tables — the same
     shape as the JM/backoff siblings, one extra broadcast each way."""
-    if train_docs is None:
-        train_docs = documents
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    pairs_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 1, 0)),"
-        " slice(__w, 2, greatest(size(__w) - 1, 0)),"
-        " (a, b) -> struct(a as w1, b as w2))"
-    )
-
-    def to_pairs(df: DataFrame) -> DataFrame:
-        # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
-        # CPU-bound explode+partial-agg map stage (see lm_5gram_kneser_ney)
-        from .dedup import spread_for_compute
-
-        return (
-            spread_for_compute(df.select(id_col, text_col))
-            .withColumn("__w", words)
-            .select(F.col(id_col), F.explode(pairs_arr).alias("p"))
-            .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        )
-
-    from ..functions import count_rows_keeping
-
-    # No-op filter (split tokens are never null) aligning each branch's
-    # inferred isnotnull set so the four bi copies share one shuffle
-    # stage (r18-opt, the lm_5gram_kneser_ney shape).
-    bi = to_pairs(train_docs).filter(
-        F.col("w1").isNotNull() & F.col("w2").isNotNull()
-    ).groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("bcnt")
-    )
-    left_tab = bi.groupBy("w1").agg(
-        F.sum("bcnt").alias("n_w1"),
-        F.count(F.lit(1)).alias("n1p_l"),
-    )
-    right_tab = bi.groupBy("w2").agg(count_rows_keeping("bcnt").alias("n1p_r"))
-    types = bi.groupBy().agg(count_rows_keeping("bcnt").alias("n_types"))
-
-    d = repr(float(discount))
-    # ONE fully-parenthesized op dag, mirrored verbatim in the oracle SQL
-    # (multiplication/division order is bit-significant in IEEE double)
-    prob = (
-        f"(greatest(cast(coalesce(bcnt, 0) as double) - cast({d} as double),"
-        f" cast(0 as double)) / cast(n_w1 as double))"
-        f" + ((cast({d} as double) * cast(n1p_l as double)"
-        f" / cast(n_w1 as double))"
-        f" * (cast(n1p_r as double) / cast(n_types as double)))"
-    )
-    scored = (
-        to_pairs(documents)
-        .join(bi, ["w1", "w2"], "left")
-        .join(F.broadcast(left_tab), "w1", "left")
-        .join(F.broadcast(right_tab), "w2", "left")
-        .crossJoin(F.broadcast(types))
-        .withColumn(
-            "__oov", F.col("n_w1").isNull() | F.col("n1p_r").isNull()
-        )
-        .withColumn(
-            "__s",
-            F.when(
-                ~F.col("__oov"),
-                F.round(F.log(F.expr(prob)), 6).cast("decimal(20,6)"),
-            ),
-        )
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum(F.col("__oov").cast("long")).alias("n_oov"),
-        F.sum(
-            (F.col("bcnt").isNull() & ~F.col("__oov")).cast("long")
-        ).alias("n_unseen"),
-        F.sum("__s").alias("__sum"),
-        F.count("__s").alias("__n_scored"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("__n_scored") * 1e6 + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            F.coalesce("n_oov", F.lit(0)).cast("long").alias("n_oov"),
-            F.coalesce("n_unseen", F.lit(0)).cast("long").alias("n_unseen"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _interpolated(documents, train_docs, 2,
+                         partial(_kn_level, repr(float(discount))), True,
+                         id_col, text_col)
 
 
 def lm_trigram_kneser_ney(
@@ -1877,119 +1651,9 @@ def lm_trigram_kneser_ney(
     stupid-backoff sibling documents); the two w-keyed tables
     (N₁₊(·w₂·)+N₁₊(w₂·), N₁₊(·w₃)) are vocab-bounded broadcasts and
     N_types₂ is a 1-row broadcast."""
-    if train_docs is None:
-        train_docs = documents
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    tri_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 2, 0)),"
-        " zip_with(slice(__w, 2, greatest(size(__w) - 2, 0)),"
-        "          slice(__w, 3, greatest(size(__w) - 2, 0)),"
-        "          (b, c) -> struct(b as w2, c as w3)),"
-        " (a, bc) -> struct(a as w1, bc.w2 as w2, bc.w3 as w3))"
-    )
-
-    def to_triples(df: DataFrame) -> DataFrame:
-        # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
-        # CPU-bound explode+partial-agg map stage (see lm_5gram_kneser_ney)
-        from .dedup import spread_for_compute
-
-        return (
-            spread_for_compute(df.select(id_col, text_col))
-            .withColumn("__w", words)
-            .select(F.col(id_col), F.explode(tri_arr).alias("t"))
-            .select(id_col, "t.w1", "t.w2", "t.w3")
-        )
-
-    from ..functions import count_rows_keeping
-
-    # No-op filter (split tokens are never null) that aligns every
-    # fan-out branch's inferred join-key isnotnull set, so the shared
-    # tri/cont subtrees canonicalize identically and AQE reuses one
-    # shuffle stage per table (r18-opt, the lm_5gram_kneser_ney shape).
-    tri = to_triples(train_docs).filter(
-        F.col("w1").isNotNull() & F.col("w2").isNotNull()
-        & F.col("w3").isNotNull()
-    ).groupBy("w1", "w2", "w3").agg(
-        F.count(F.lit(1)).alias("tcnt")
-    )
-    # top-level context stats: totals + distinct continuations
-    ctx2 = tri.groupBy("w1", "w2").agg(
-        F.sum("tcnt").alias("n_ctx"),
-        F.count(F.lit(1)).alias("n1p_ctx"),
-    )
-    # middle level: continuation counts c'(w2,w3) = distinct w1
-    cont = tri.groupBy("w2", "w3").agg(
-        count_rows_keeping("tcnt").alias("ccnt")
-    )
-    mid = cont.groupBy("w2").agg(
-        F.sum("ccnt").alias("n_midctx"),
-        F.count(F.lit(1)).alias("n1p_mid"),
-    )
-    low = cont.groupBy("w3").agg(count_rows_keeping("ccnt").alias("n1p_low"))
-    types2 = cont.groupBy().agg(count_rows_keeping("ccnt").alias("n_types2"))
-
-    d = repr(float(discount))
-    pm = (
-        f"((greatest(cast(coalesce(ccnt, 0) as double)"
-        f" - cast({d} as double), cast(0 as double))"
-        f" / cast(n_midctx as double))"
-        f" + (((cast({d} as double) * cast(n1p_mid as double))"
-        f" / cast(n_midctx as double))"
-        f" * (cast(n1p_low as double) / cast(n_types2 as double))))"
-    )
-    prob = (
-        f"((greatest(cast(coalesce(tcnt, 0) as double)"
-        f" - cast({d} as double), cast(0 as double))"
-        f" / cast(n_ctx as double))"
-        f" + (((cast({d} as double) * cast(n1p_ctx as double))"
-        f" / cast(n_ctx as double)) * {pm}))"
-    )
-    scored = (
-        to_triples(documents)
-        .join(tri, ["w1", "w2", "w3"], "left")
-        .join(ctx2, ["w1", "w2"], "left")
-        .join(cont, ["w2", "w3"], "left")
-        .join(F.broadcast(mid), "w2", "left")
-        .join(F.broadcast(low), "w3", "left")
-        .crossJoin(F.broadcast(types2))
-        .withColumn(
-            "__oov", F.col("n_ctx").isNull() | F.col("n1p_low").isNull()
-        )
-        .withColumn(
-            "__s",
-            F.when(
-                ~F.col("__oov"),
-                F.round(F.log(F.expr(prob)), 6).cast("decimal(20,6)"),
-            ),
-        )
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum(F.col("__oov").cast("long")).alias("n_oov"),
-        F.sum(
-            (F.col("tcnt").isNull() & ~F.col("__oov")).cast("long")
-        ).alias("n_unseen"),
-        F.sum("__s").alias("__sum"),
-        F.count("__s").alias("__n_scored"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("__n_scored") * 1e6 + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            F.coalesce("n_oov", F.lit(0)).cast("long").alias("n_oov"),
-            F.coalesce("n_unseen", F.lit(0)).cast("long").alias("n_unseen"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _interpolated(documents, train_docs, 3,
+                         partial(_kn_level, repr(float(discount))), True,
+                         id_col, text_col)
 
 
 def lm_5gram_kneser_ney(
@@ -2049,143 +1713,9 @@ def lm_5gram_kneser_ney(
     23 shuffle stages / 24 parquet scans into 11 stages / 3 scans —
     the corpus is scanned and exploded once for training, once for
     scoring (r18-opt, guide §2.4)."""
-    if train_docs is None:
-        train_docs = documents
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    n5 = "greatest(size(__w) - 4, 0)"
-    five_arr = F.expr(
-        f"zip_with(slice(__w, 1, {n5}),"
-        f" zip_with(slice(__w, 2, {n5}),"
-        f"  zip_with(slice(__w, 3, {n5}),"
-        f"   zip_with(slice(__w, 4, {n5}), slice(__w, 5, {n5}),"
-        f"            (d, e) -> struct(d as w4, e as w5)),"
-        f"   (c, de) -> struct(c as w3, de.w4 as w4, de.w5 as w5)),"
-        f"  (b, x) -> struct(b as w2, x.w3 as w3, x.w4 as w4, x.w5 as w5)),"
-        f" (a, y) -> struct(a as w1, y.w2 as w2, y.w3 as w3,"
-        f"                  y.w4 as w4, y.w5 as w5))"
-    )
-
-    def to_fives(df: DataFrame) -> DataFrame:
-        # r19-opt (guide §2.5 input skew): a small corpus parquet scans as
-        # 1-2 splits and AQE's byte-based coalescing keeps it that narrow,
-        # so the explode+hash+partial-agg map stage — the ladder's heavy
-        # pass — ran serial (sf1: 4.7 effective cores on local[32]).
-        # spread_for_compute repartitions only sub-4GB inputs; at the
-        # 100 TB target the scan's own splits are trusted (no corpus
-        # shuffle is added).
-        from .dedup import spread_for_compute
-
-        return (
-            spread_for_compute(df.select(id_col, text_col))
-            .withColumn("__w", words)
-            .select(F.col(id_col), F.explode(five_arr).alias("t"))
-            .select(id_col, "t.w1", "t.w2", "t.w3", "t.w4", "t.w5")
-        )
-
-    from ..functions import count_rows_keeping
-
-    # The isNotNull filter keeps nothing out (split tokens are never
-    # null): it exists so every fan-out branch's inferred join-key
-    # isnotnull set is absorbed by the same superset and the t5 subtree
-    # canonicalizes identically in all ten copies (AQE exchange reuse).
-    t5 = to_fives(train_docs).filter(
-        F.col("w1").isNotNull() & F.col("w2").isNotNull()
-        & F.col("w3").isNotNull() & F.col("w4").isNotNull()
-        & F.col("w5").isNotNull()
-    ).groupBy("w1", "w2", "w3", "w4", "w5").agg(
-        F.count(F.lit(1)).alias("tcnt")
-    )
-    ctx = t5.groupBy("w1", "w2", "w3", "w4").agg(
-        F.sum("tcnt").alias("n_ctx"),
-        F.count(F.lit(1)).alias("n1p_ctx"),
-    )
-    c4 = t5.groupBy("w2", "w3", "w4", "w5").agg(
-        count_rows_keeping("tcnt").alias("ccnt4")
-    )
-    m4 = c4.groupBy("w2", "w3", "w4").agg(
-        F.sum("ccnt4").alias("n4ctx"), F.count(F.lit(1)).alias("n1p4")
-    )
-    c3 = c4.groupBy("w3", "w4", "w5").agg(
-        count_rows_keeping("ccnt4").alias("ccnt3")
-    )
-    m3 = c3.groupBy("w3", "w4").agg(
-        F.sum("ccnt3").alias("n3ctx"), F.count(F.lit(1)).alias("n1p3")
-    )
-    c2 = c3.groupBy("w4", "w5").agg(
-        count_rows_keeping("ccnt3").alias("ccnt2")
-    )
-    m2 = c2.groupBy("w4").agg(
-        F.sum("ccnt2").alias("n2ctx"), F.count(F.lit(1)).alias("n1p2")
-    )
-    low = c2.groupBy("w5").agg(count_rows_keeping("ccnt2").alias("n1p_low"))
-    types2 = c2.groupBy().agg(count_rows_keeping("ccnt2").alias("n_types2"))
-
-    d = repr(float(discount))
-
-    def kn_level(cnt: str, nctx: str, n1p: str, inner: str) -> str:
-        return (
-            f"((greatest(cast(coalesce({cnt}, 0) as double)"
-            f" - cast({d} as double), cast(0 as double))"
-            f" / cast({nctx} as double))"
-            f" + (((cast({d} as double) * cast({n1p} as double))"
-            f" / cast({nctx} as double)) * {inner}))"
-        )
-
-    pc = "(cast(n1p_low as double) / cast(n_types2 as double))"
-    p2 = kn_level("ccnt2", "n2ctx", "n1p2", pc)
-    p3 = kn_level("ccnt3", "n3ctx", "n1p3", p2)
-    p4 = kn_level("ccnt4", "n4ctx", "n1p4", p3)
-    prob = kn_level("tcnt", "n_ctx", "n1p_ctx", p4)
-    scored = (
-        to_fives(documents)
-        .join(t5, ["w1", "w2", "w3", "w4", "w5"], "left")
-        .join(ctx, ["w1", "w2", "w3", "w4"], "left")
-        .join(c4, ["w2", "w3", "w4", "w5"], "left")
-        .join(m4, ["w2", "w3", "w4"], "left")
-        .join(c3, ["w3", "w4", "w5"], "left")
-        .join(m3, ["w3", "w4"], "left")
-        .join(c2, ["w4", "w5"], "left")
-        .join(F.broadcast(m2), "w4", "left")
-        .join(F.broadcast(low), "w5", "left")
-        .crossJoin(F.broadcast(types2))
-        .withColumn(
-            "__oov", F.col("n_ctx").isNull() | F.col("n1p_low").isNull()
-        )
-        .withColumn(
-            "__s",
-            F.when(
-                ~F.col("__oov"),
-                F.round(F.log(F.expr(prob)), 6).cast("decimal(20,6)"),
-            ),
-        )
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum(F.col("__oov").cast("long")).alias("n_oov"),
-        F.sum(
-            (F.col("tcnt").isNull() & ~F.col("__oov")).cast("long")
-        ).alias("n_unseen"),
-        F.sum("__s").alias("__sum"),
-        F.count("__s").alias("__n_scored"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("__n_scored") * 1e6 + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            F.coalesce("n_oov", F.lit(0)).cast("long").alias("n_oov"),
-            F.coalesce("n_unseen", F.lit(0)).cast("long").alias("n_unseen"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _interpolated(documents, train_docs, 5,
+                         partial(_kn_level, repr(float(discount))), True,
+                         id_col, text_col)
 
 
 def lm_trigram_witten_bell(
@@ -2227,122 +1757,8 @@ def lm_trigram_witten_bell(
     (pair-cardinality); the w₂-context, unigram, and total tables are
     vocab-bounded (or 1-row) broadcasts — the lm_trigram_kneser_ney
     shape with raw-count inputs."""
-    if train_docs is None:
-        train_docs = documents
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    tri_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 2, 0)),"
-        " zip_with(slice(__w, 2, greatest(size(__w) - 2, 0)),"
-        "          slice(__w, 3, greatest(size(__w) - 2, 0)),"
-        "          (b, c) -> struct(b as w2, c as w3)),"
-        " (a, bc) -> struct(a as w1, bc.w2 as w2, bc.w3 as w3))"
-    )
-    pair_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 1, 0)),"
-        " slice(__w, 2, greatest(size(__w) - 1, 0)),"
-        " (a, b) -> struct(a as w2, b as w3))"
-    )
-
-    def to_triples(df: DataFrame) -> DataFrame:
-        # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
-        # CPU-bound explode+partial-agg map stage (see lm_5gram_kneser_ney)
-        from .dedup import spread_for_compute
-
-        return (
-            spread_for_compute(df.select(id_col, text_col))
-            .withColumn("__w", words)
-            .select(F.col(id_col), F.explode(tri_arr).alias("t"))
-            .select(id_col, "t.w1", "t.w2", "t.w3")
-        )
-
-    train_w = train_docs.withColumn("__w", words)
-    # The isNotNull filters keep nothing out (split tokens are never
-    # null): they align each fan-out branch's inferred join-key
-    # isnotnull set so the tri/bi/uni subtrees canonicalize identically
-    # across their two copies each and AQE reuses one shuffle stage per
-    # table (r18-opt, the lm_5gram_kneser_ney shape).
-    tri = to_triples(train_docs).filter(
-        F.col("w1").isNotNull() & F.col("w2").isNotNull()
-        & F.col("w3").isNotNull()
-    ).groupBy("w1", "w2", "w3").agg(
-        F.count(F.lit(1)).alias("tcnt")
-    )
-    ctx12 = tri.groupBy("w1", "w2").agg(
-        F.sum("tcnt").alias("n_12"),
-        F.count(F.lit(1)).alias("t_12"),
-    )
-    bi = (
-        train_w.select(F.explode(pair_arr).alias("p"))
-        .select("p.w2", "p.w3")
-        .filter(F.col("w2").isNotNull() & F.col("w3").isNotNull())
-        .groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("bcnt"))
-    )
-    ctx2 = bi.groupBy("w2").agg(
-        F.sum("bcnt").alias("n_2"),
-        F.count(F.lit(1)).alias("t_2"),
-    )
-    uni = (
-        train_w.select(F.explode("__w").alias("w3"))
-        .filter(F.col("w3").isNotNull())
-        .groupBy("w3").agg(F.count(F.lit(1)).alias("c3"))
-    )
-    tot = uni.groupBy().agg(F.sum("c3").alias("__total"))
-
-    pb = (
-        "((cast(coalesce(bcnt, 0) as double)"
-        " + (cast(t_2 as double)"
-        " * (cast(c3 as double) / cast(__total as double))))"
-        " / (cast(n_2 as double) + cast(t_2 as double)))"
-    )
-    prob = (
-        f"((cast(coalesce(tcnt, 0) as double)"
-        f" + (cast(t_12 as double) * {pb}))"
-        f" / (cast(n_12 as double) + cast(t_12 as double)))"
-    )
-    scored = (
-        to_triples(documents)
-        .join(tri, ["w1", "w2", "w3"], "left")
-        .join(ctx12, ["w1", "w2"], "left")
-        .join(bi, ["w2", "w3"], "left")
-        .join(F.broadcast(ctx2), "w2", "left")
-        .join(F.broadcast(uni), "w3", "left")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("__oov", F.col("n_12").isNull() | F.col("c3").isNull())
-        .withColumn(
-            "__s",
-            F.when(
-                ~F.col("__oov"),
-                F.round(F.log(F.expr(prob)), 6).cast("decimal(20,6)"),
-            ),
-        )
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum(F.col("__oov").cast("long")).alias("n_oov"),
-        F.sum(
-            (F.col("tcnt").isNull() & ~F.col("__oov")).cast("long")
-        ).alias("n_unseen"),
-        F.sum("__s").alias("__sum"),
-        F.count("__s").alias("__n_scored"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("__n_scored") * 1e6 + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            F.coalesce("n_oov", F.lit(0)).cast("long").alias("n_oov"),
-            F.coalesce("n_unseen", F.lit(0)).cast("long").alias("n_unseen"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _interpolated(documents, train_docs, 3, _wb_level, False,
+                         id_col, text_col)
 
 
 def lm_trigram_interpolated(
@@ -2380,109 +1796,22 @@ def lm_trigram_interpolated(
     and the total broadcast — same shape as the other three rungs."""
     l3, l2, l1, l0 = lambdas
     train = train_docs if train_docs is not None else documents
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    tri_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 2, 0)),"
-        " zip_with(slice(__w, 2, greatest(size(__w) - 2, 0)),"
-        "          slice(__w, 3, greatest(size(__w) - 2, 0)),"
-        "          (b, c) -> struct(b as w2, c as w3)),"
-        " (a, bc) -> struct(a as w1, bc.w2 as w2, bc.w3 as w3))"
-    )
-    pair_arr = F.expr(
-        "zip_with(slice(__w, 1, greatest(size(__w) - 1, 0)),"
-        " slice(__w, 2, greatest(size(__w) - 1, 0)),"
-        " (a, b) -> struct(a as w2, b as w3))"
-    )
-    # r19-opt (guide §2.5): spread the sub-4GB corpus scans before the
-    # CPU-bound explode+partial-agg map stages (see lm_5gram_kneser_ney)
-    from .dedup import spread_for_compute
+    tables, total = _lm_tables(train, 3, False, id_col, text_col)
 
-    eval_w = spread_for_compute(
-        documents.select(id_col, text_col)
-    ).withColumn("__w", words)
-    train_w = spread_for_compute(
-        train.select(id_col, text_col)
-    ).withColumn("__w", words)
-    tr = (
-        eval_w.select(F.col(id_col), F.explode(tri_arr).alias("t"))
-        .select(id_col, "t.w1", "t.w2", "t.w3")
-    )
-    # The isNotNull filters keep nothing out (split tokens are never
-    # null): they align each fan-out branch's inferred join-key
-    # isnotnull set so the ttr/tbi/uni subtrees canonicalize
-    # identically across their two copies each and AQE reuses one
-    # shuffle stage per table (r18-opt, the lm_5gram_kneser_ney shape).
-    ttr = (
-        train_w.select(F.explode(tri_arr).alias("t"))
-        .select("t.w1", "t.w2", "t.w3")
-        .filter(
-            F.col("w1").isNotNull() & F.col("w2").isNotNull()
-            & F.col("w3").isNotNull()
-        )
-        .groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("tcnt"))
-    )
-    c12 = ttr.groupBy("w1", "w2").agg(F.sum("tcnt").alias("n12"))
-    tbi = (
-        train_w.select(F.explode(pair_arr).alias("p"))
-        .select("p.w2", "p.w3")
-        .filter(F.col("w2").isNotNull() & F.col("w3").isNotNull())
-        .groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("bcnt"))
-    )
-    c2 = tbi.groupBy("w2").agg(F.sum("bcnt").alias("n2"))
-    uni = (
-        train_w.select(F.explode("__w").alias("w3"))
-        .filter(F.col("w3").isNotNull())
-        .groupBy("w3").agg(F.count(F.lit(1)).alias("c3"))
-    )
-    tot = uni.groupBy().agg(
-        F.sum("c3").alias("__total"),
-        F.count(F.lit(1)).alias("__vocab"),
-    )
+    def term(lam: float, cnt: str, nctx: str):
+        # a never-seen context contributes exactly zero
+        return F.when(
+            F.col(nctx).isNotNull(),
+            F.lit(lam) * F.coalesce(F.col(cnt), F.lit(0)) / F.col(nctx),
+        ).otherwise(F.lit(0.0))
+
     mix = (
-        F.when(
-            F.col("n12").isNotNull(),
-            F.lit(l3) * F.coalesce(F.col("tcnt"), F.lit(0)) / F.col("n12"),
-        ).otherwise(F.lit(0.0))
-        + F.when(
-            F.col("n2").isNotNull(),
-            F.lit(l2) * F.coalesce(F.col("bcnt"), F.lit(0)) / F.col("n2"),
-        ).otherwise(F.lit(0.0))
-        + F.lit(l1) * F.coalesce(F.col("c3"), F.lit(0)) / F.col("__total")
+        term(l3, "tcnt", "n3") + term(l2, "c2", "n2")
+        + F.lit(l1) * F.coalesce(F.col("c1"), F.lit(0)) / F.col("__total")
         + F.lit(l0) / F.col("__vocab")
     )
-    scored = (
-        tr.join(ttr, ["w1", "w2", "w3"], "left")
-        .join(c12, ["w1", "w2"], "left")
-        .join(tbi, ["w2", "w3"], "left")
-        .join(F.broadcast(c2), "w2", "left")
-        .join(F.broadcast(uni), "w3", "left")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("__unseen", F.col("tcnt").isNull())
-        .withColumn("__s", F.round(F.log(mix), 6).cast("decimal(20,6)"))
-    )
-    per = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum(F.col("__unseen").cast("long")).alias("n_unseen"),
-        F.sum("__s").alias("__sum"),
-    )
-    avg = (
-        F.floor(
-            F.col("__sum").cast("double") / F.col("n_transitions") * 1e6
-            + 0.5
-        ) / 1e6
-    )
-    ppl = F.floor(F.exp(-avg) * 1e4 + 0.5) / 1e4
-    return (
-        documents.select(id_col).join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_transitions", F.lit(0)).cast("long")
-            .alias("n_transitions"),
-            F.coalesce("n_unseen", F.lit(0)).cast("long").alias("n_unseen"),
-            avg.alias("avg_logscore"),
-            ppl.alias("ppl"),
-        )
-    )
+    return _lm_score(documents, 3, tables, [total], mix, id_col, text_col,
+                     unseen=True)
 
 
 def watermark_zscore(

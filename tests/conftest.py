@@ -36,109 +36,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
-
-
-# ---------------------------------------------------------------------------
-# Fast default tier (r19-opt, VERDICT r18 item 7): the full suite takes
-# ~24 min and the round driver's verify capture truncates before pytest can
-# print its summary line — a gate that cannot reach its verdict protects
-# nothing.  The tests below (measured with --durations: every test whose
-# call time is >= 4.5 s on the reference box; together ~900 s of the
-# ~1410 s total) carry the `slow` marker and are deselected by the
-# `addopts = -m "not slow"` default in pyproject.toml, leaving a <10-min
-# default tier that still runs every operator's correctness tests.
-#
-#   full suite:  python -m pytest tests/ -m "" -q     (CLI -m overrides)
-#   slow only:   python -m pytest tests/ -m slow -q
-#
-# A renamed test simply drops out of this list and re-enters the default
-# tier — fails safe (slower default run, never lost coverage).  The slow
-# tier was run in full at the r19 round close: 716 passed / 3 skipped.
-SLOW_TESTS = {
-    "test_asof.py::test_asof_basic_backward_inclusive",
-    "test_classifier.py::test_langid_trained_recovers_planted_and_follows_label_flip",
-    "test_classifier.py::test_train_then_score_roundtrip",
-    "test_collapsing.py::test_plain_collapse_batch_boundary_insensitive",
-    "test_collapsing.py::test_plain_collapse_explicit_purge_bounds_state",
-    "test_collapsing.py::test_plain_collapse_insert_update_delete",
-    "test_collapsing.py::test_versioned_collapse_out_of_order_cancel",
-    "test_curation.py::test_pack_best_fit_matches_reference_bfd",
-    "test_dedup.py::test_connected_components_matches_union_find",
-    "test_dedup.py::test_star_cc_long_chain_logarithmic_rounds",
-    "test_dedup.py::test_star_cc_matches_min_label_and_union_find",
-    "test_dedup.py::test_substring_removal_matches_reference_property",
-    "test_graph.py::test_pagerank_redistribute_conserves_total_mass",
-    "test_incremental_snapshot.py::test_adhoc_rerun_remerges",
-    "test_incremental_snapshot.py::test_blocking_signal_via_process_signals",
-    "test_incremental_snapshot.py::test_blocking_snapshot_plan_failure_no_orphan_aborted",
-    "test_incremental_snapshot.py::test_blocking_snapshot_releases_lock_on_failure",
-    "test_incremental_snapshot.py::test_blocking_snapshot_suspends_stream_merges",
-    "test_incremental_snapshot.py::test_filtered_snapshot_additional_condition",
-    "test_incremental_snapshot.py::test_incremental_snapshot_full_scenario",
-    "test_incremental_snapshot.py::test_kafka_channel_cli_roundtrip",
-    "test_incremental_snapshot.py::test_kafka_channel_signal_lifecycle",
-    "test_incremental_snapshot.py::test_multi_snapshot_consistency_vector_read",
-    "test_incremental_snapshot.py::test_multi_table_snapshot_while_txns_stream",
-    "test_incremental_snapshot.py::test_notification_feed",
-    "test_incremental_snapshot.py::test_pause_resume_equals_uninterrupted",
-    "test_incremental_snapshot.py::test_resume_after_crash_skips_completed_chunks",
-    "test_incremental_snapshot.py::test_resume_reuses_persisted_bounds",
-    "test_incremental_snapshot.py::test_signal_lifecycle",
-    "test_incremental_snapshot.py::test_snapshot_is_idempotent",
-    "test_incremental_snapshot.py::test_stopped_signal_id_not_reusable",
-    "test_registry.py::test_no_query_plans_a_cartesian_product",
-    "test_similarity.py::test_kmeans_par_seeding_beats_idorder_on_planted_clusters",
-    "test_sketch.py::test_hll_state_column_batch_boundary_insensitive",
-    "test_store_lifecycle.py::test_bloom_filters_written_by_every_publisher",
-    "test_streaming.py::test_rebucket_preserves_state_and_future_merges",
-    "test_streaming.py::test_silver_long_stream_dead_files_bounded",
-    "test_streaming.py::test_silver_no_resurrection_across_batches",
-    "test_streaming.py::test_silver_snapshot_reads_survive_publish_and_vacuum",
-    "test_streaming_properties.py::test_streamed_collapse_equals_whole_log",
-    "test_streaming_properties.py::test_streamed_silver_equals_batch",
-    "test_streaming_properties.py::test_streamed_summing_equals_batch_groupby",
-    "test_summing_ttl.py::test_agg_spec_min_max_across_batches",
-    "test_summing_ttl.py::test_bitmap_state_exact_distinct_and_set_algebra",
-    "test_summing_ttl.py::test_kmv_state_column_batch_boundary_insensitive",
-    "test_summing_ttl.py::test_map_state_columns_across_batches",
-    "test_summing_ttl.py::test_qsample_state_column_batch_boundary_insensitive",
-    "test_summing_ttl.py::test_replay_watermark_never_evicts_silently",
-    "test_summing_ttl.py::test_sortedarray_state_n_smallest_with_duplicates",
-    "test_summing_ttl.py::test_summing_does_not_resurrect_tombstones",
-    "test_summing_ttl.py::test_summing_empty_batch_publishes_nothing",
-    "test_summing_ttl.py::test_summing_replay_guard_skips_applied_batch",
-    "test_summing_ttl.py::test_summing_sums_across_batches",
-    "test_summing_ttl.py::test_topk_state_column_guarantees",
-    "test_summing_ttl.py::test_topk_state_ignores_null_source",
-    "test_summing_ttl.py::test_topkweighted_state_column",
-    "test_summing_ttl.py::test_ttl_expires_rows_and_keeps_history",
-    "test_time_travel.py::test_as_of_read_returns_each_committed_state",
-    "test_time_travel.py::test_compaction_commits_a_version_and_history_survives",
-    "test_time_travel.py::test_mutation_touches_only_matching_buckets",
-    "test_time_travel.py::test_vacuum_retain_versions_keeps_time_travel_alive",
-    "test_tokenizer.py::test_bpe_encode_arrow_k100_learned_merges",
-    "test_tokenizer.py::test_bpe_subwords_always_reconstruct_the_word",
-    "test_tokenizer.py::test_bytebpe_multibyte_distinguishes_from_char_level",
-    "test_tokenizer.py::test_unigram_hard_em_objective_monotone",
-    "test_tokenizer.py::test_unigram_prune_loss_delta_beats_adversarial_prune",
-    "test_tokenizer.py::test_unigram_prune_regime_guard_fires_on_drift",
-    "test_tokenizer.py::test_wordpiece_encode_greedy_longest_and_unk",
-    "test_tokenizer.py::test_wordpiece_likelihood_beats_count_and_continuation",
-    "test_txn_consistent.py::test_batch_boundary_insensitive",
-    "test_txn_consistent.py::test_delete_inside_transaction",
-    "test_txn_consistent.py::test_duplicate_rows_within_buffer_are_idempotent",
-    "test_txn_consistent.py::test_envelope_to_txn_sink_wiring",
-    "test_txn_consistent.py::test_multi_store_all_or_none",
-    "test_txn_consistent.py::test_multi_store_batch_replay_idempotent",
-    "test_txn_consistent.py::test_multi_store_end_marker_and_staged_replay",
-    "test_txn_consistent.py::test_partial_transactions_stay_invisible",
-    "test_upsert_properties.py::test_agg_and_window_strategies_agree",
-    "test_vp8l.py::test_fuzz_never_wrong_only_deadletter",
-}
-
-
-def pytest_collection_modifyitems(config, items):
-    for item in items:
-        key = f"{item.fspath.basename}::{item.name.split('[')[0]}"
-        if key in SLOW_TESTS:
-            item.add_marker(pytest.mark.slow)

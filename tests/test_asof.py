@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 from postgres_debezium_clickhouse_spark.operators.asof import asof_join
 
 
@@ -11,6 +13,7 @@ def _ts(s: int) -> datetime.datetime:
     return datetime.datetime(2024, 1, 1, 0, 0, s)
 
 
+@pytest.mark.slow
 def test_asof_basic_backward_inclusive(spark):
     quotes = spark.createDataFrame(
         [(1, _ts(1), 10.0), (1, _ts(5), 11.0), (1, _ts(9), 12.0), (2, _ts(3), 99.0)],

@@ -4,6 +4,7 @@ with the same map-only operator)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgres_debezium_clickhouse_spark.operators.classifier import (
@@ -54,6 +55,7 @@ def test_hashed_count_features_shape(spark):
     assert sum(feats) == 3.0  # every token lands in exactly one bucket
 
 
+@pytest.mark.slow
 def test_train_then_score_roundtrip(spark):
     """LogisticRegression on gopher weak labels, exported to milli-int
     weights, applied by the map-only scorer: the learned filter must beat
@@ -111,6 +113,7 @@ def test_passthrough_chains_map_only(spark):
     assert row.keep == (row.gopher_ok and row.clf_ok)
 
 
+@pytest.mark.slow
 def test_langid_trained_recovers_planted_and_follows_label_flip(spark):
     # Guard that the model LEARNS from labels rather than echoing
     # fixture structure: (1) every planted label is recovered; (2) with

@@ -44,6 +44,7 @@ def _state(spark, dirs, version_col=None):
     return {r["k"]: (r["payload"], r["__sign_net"]) for r in df.collect()}
 
 
+@pytest.mark.slow
 def test_plain_collapse_insert_update_delete(spark, dirs):
     # batch 0: insert k=1 (v1), insert k=2 (v1)
     _run(spark, dirs, [(1, 1, 10, 0, "one-a"), (2, 1, 11, 0, "two-a")], 0,
@@ -57,6 +58,7 @@ def test_plain_collapse_insert_update_delete(spark, dirs):
     assert st == {1: ("one-b", 1)}          # k=2 fully cancelled → invisible
 
 
+@pytest.mark.slow
 def test_plain_collapse_batch_boundary_insensitive(spark, dirs, tmp_path):
     """State after N batches == state after 1 batch carrying all rows —
     the associative+commutative merge argument, checked concretely."""
@@ -76,6 +78,7 @@ def test_plain_collapse_batch_boundary_insensitive(spark, dirs, tmp_path):
     assert split_state == _state(spark, dirs2) == {1: ("a2", 1), 2: ("b0", 1)}
 
 
+@pytest.mark.slow
 def test_versioned_collapse_out_of_order_cancel(spark, dirs):
     """The VersionedCollapsing contract: a cancel row arriving BEFORE its
     +1 (even in an earlier micro-batch) still annihilates exactly its own
@@ -141,6 +144,7 @@ def test_plain_net_zero_payload_beats_straggler(spark, dirs):
     assert _state(spark, dirs) == {1: ("new", 1)}
 
 
+@pytest.mark.slow
 def test_plain_collapse_explicit_purge_bounds_state(spark, dirs):
     """ADVICE r9 (low), resolved as an explicit OPTIMIZE-FINAL analogue:
     ``collapse_purge_silver`` tombstones fully-cancelled (net-0) keys in

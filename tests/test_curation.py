@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgres_debezium_clickhouse_spark.operators.curation import (
@@ -690,6 +691,7 @@ def test_pack_best_fit_beats_next_fit_and_tie_rule(spark):
     assert rows[1] == rows[2] and rows[0] not in (rows[1],)
 
 
+@pytest.mark.slow
 @given(
     sizes=st.lists(st.integers(1, 40), min_size=1, max_size=25),
     budget=st.integers(8, 64),

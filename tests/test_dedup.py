@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgres_debezium_clickhouse_spark.operators.dedup import (
@@ -112,6 +113,7 @@ def test_connected_components_long_chain_converges(spark):
     assert set(out.values()) == {0} and len(out) == 13
 
 
+@pytest.mark.slow
 def test_connected_components_matches_union_find(spark):
     """Property check on a pseudo-random graph: the distributed min-label
     propagation must agree with a sequential union-find."""
@@ -192,6 +194,7 @@ def test_incremental_dedup_shuffle_fallback_same_result(spark):
     assert sorted(r.doc_id for r in slow.collect()) == [200, 201, 202, 203, 204]
 
 
+@pytest.mark.slow
 def test_star_cc_matches_min_label_and_union_find(spark):
     """The star-contraction implementation must produce EXACTLY the same
     (node, component) map as min-label propagation / sequential union-find
@@ -213,6 +216,7 @@ def test_star_cc_matches_min_label_and_union_find(spark):
     assert got == want
 
 
+@pytest.mark.slow
 def test_star_cc_long_chain_logarithmic_rounds(spark):
     """A 200-link path graph (diameter 200): min-label propagation needs
     ~200 rounds, star contraction must finish well inside its default
@@ -478,6 +482,7 @@ def test_winnowing_guarantee_and_budget(spark):
     assert 0 < len(by_doc[1]) < n_pos_1 / 4
 
 
+@pytest.mark.slow
 def test_substring_removal_matches_reference_property(spark):
     """r12 — property check: substring_removal against an independent
     pure-Python reference of the ExactSubstr spec (duplicated L-gram

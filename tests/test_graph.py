@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from postgres_debezium_clickhouse_spark.operators.graph import pagerank
 
 
@@ -40,6 +42,7 @@ def test_pagerank_loop_is_lineage_truncated(spark):
     assert math.isclose(total, 1.0, rel_tol=1e-9)  # 2-cycle conserves mass
 
 
+@pytest.mark.slow
 def test_pagerank_redistribute_conserves_total_mass(spark):
     """a→b with b a sink: redistribution must keep Σrank = 1 exactly each
     round and match the hand-computed first iteration."""

@@ -111,6 +111,7 @@ def test_plan_chunks_partition_key_space(spark):
     assert sum(skew.filter(_chunk_pred("k", lo, hi)).count() for lo, hi in sb) == 50
 
 
+@pytest.mark.slow
 def test_incremental_snapshot_full_scenario(spark, dirs):
     """Backfill + window dedup + mid-snapshot deletes, adversarially
     interleaved: change events land between chunks; events for keys in
@@ -131,6 +132,7 @@ def test_incremental_snapshot_full_scenario(spark, dirs):
     assert _state(spark, dirs) == _expected()
 
 
+@pytest.mark.slow
 def test_snapshot_is_idempotent(spark, dirs):
     _stream_merge(spark, dirs, _seed_rows(), "seed")
     for _ in range(2):   # running the same snapshot twice = same state
@@ -143,6 +145,7 @@ def test_snapshot_is_idempotent(spark, dirs):
     assert len(st) == N
 
 
+@pytest.mark.slow
 def test_resume_after_crash_skips_completed_chunks(spark, dirs, tmp_path):
     _stream_merge(spark, dirs, _seed_rows(), "seed")
 
@@ -176,6 +179,7 @@ def test_resume_after_crash_skips_completed_chunks(spark, dirs, tmp_path):
     assert _state(spark, dirs) == _state(spark, d2)
 
 
+@pytest.mark.slow
 def test_signal_lifecycle(spark, dirs):
     _stream_merge(spark, dirs, _seed_rows(), "seed")
     sid = signal_snapshot(
@@ -233,6 +237,7 @@ def test_stop_snapshot_signal(spark, dirs):
     assert _state(spark, dirs) == mid        # store untouched by sigpend
 
 
+@pytest.mark.slow
 def test_resume_reuses_persisted_bounds(spark, dirs, monkeypatch):
     """ADVICE r11: chunk boundaries are planned ONCE and persisted with
     the progress; a crash-resume must reuse them verbatim (Debezium
@@ -274,6 +279,7 @@ def test_resume_reuses_persisted_bounds(spark, dirs, monkeypatch):
     assert len(_state(spark, dirs)) == N      # full-table convergence
 
 
+@pytest.mark.slow
 def test_adhoc_rerun_remerges(spark, dirs):
     """ADVICE r11: two direct ad-hoc snapshots must both do work — the
     default signal id is fresh per invocation and progress is cleared on
@@ -291,6 +297,7 @@ def test_adhoc_rerun_remerges(spark, dirs):
     assert m1 > 0 and m2 == m1                # second run re-merges all
 
 
+@pytest.mark.slow
 def test_stopped_signal_id_not_reusable(spark, dirs):
     """ADVICE r11: a drained-stopped signal id is history like .done —
     re-issuing it must fail loudly, not create an instantly-cancelled
@@ -317,6 +324,7 @@ def test_stopped_signal_id_not_reusable(spark, dirs):
     assert len(_state(spark, dirs)) == N      # it actually snapshotted
 
 
+@pytest.mark.slow
 def test_pause_resume_equals_uninterrupted(spark, dirs, tmp_path):
     """r12: Debezium pause-snapshot / resume-snapshot — a pause mid-run
     keeps progress (and the planned bounds), the signal stays pending in
@@ -363,6 +371,7 @@ def test_pause_resume_equals_uninterrupted(spark, dirs, tmp_path):
     signal_resume_snapshot(dirs["silver"])
 
 
+@pytest.mark.slow
 def test_blocking_snapshot_suspends_stream_merges(spark, dirs):
     """r13 (verdict item 8) — ad-hoc BLOCKING snapshot: a stream merge
     attempted while the snapshot holds the store must WAIT until the
@@ -415,6 +424,7 @@ def test_blocking_snapshot_suspends_stream_merges(spark, dirs):
     assert _state(spark, dirs) == _expected()
 
 
+@pytest.mark.slow
 def test_blocking_snapshot_releases_lock_on_failure(spark, dirs):
     """A crash mid-blocking-snapshot must release the lock (finally
     path) so the stream is never wedged; a second snapshot can run."""
@@ -443,6 +453,7 @@ def test_blocking_snapshot_releases_lock_on_failure(spark, dirs):
     assert n == 4
 
 
+@pytest.mark.slow
 def test_blocking_signal_via_process_signals(spark, dirs):
     """The signal route: snapshot_type='blocking' dispatches to the
     blocking runner and the signal file lands at .json.done."""
@@ -472,6 +483,7 @@ def test_blocking_signal_via_process_signals(spark, dirs):
                         watermark_version=W, snapshot_type="full")
 
 
+@pytest.mark.slow
 def test_filtered_snapshot_additional_condition(spark, dirs):
     """r13 — Debezium additional-conditions (filtered ad-hoc snapshot)
     via the signal route: only ODD ids are chunk-read; evens keep their
@@ -509,6 +521,7 @@ def test_filtered_snapshot_additional_condition(spark, dirs):
     assert st == expected
 
 
+@pytest.mark.slow
 def test_kafka_channel_signal_lifecycle(spark, dirs, tmp_path):
     """r14 — Debezium `signal.enabled.channels=kafka`: an operator
     appends the kafka-signal envelope to the signal topic (no write
@@ -564,6 +577,7 @@ def test_kafka_channel_signal_lifecycle(spark, dirs, tmp_path):
     assert not os.path.exists(os.path.join(sdir, "pause"))  # paused then resumed
 
 
+@pytest.mark.slow
 def test_kafka_channel_cli_roundtrip(spark, dirs, tmp_path):
     """r14 — the CLI surface: --channel kafka appends the envelope,
     poll-signals drains it into the queue."""
@@ -582,6 +596,7 @@ def test_kafka_channel_cli_roundtrip(spark, dirs, tmp_path):
     assert done == [sigs[0]["id"]]
 
 
+@pytest.mark.slow
 def test_notification_feed(spark, dirs):
     """r15 Debezium notification surface: a complete incremental
     snapshot emits STARTED -> IN_PROGRESS per chunk ->
@@ -662,6 +677,7 @@ def test_notification_feed(spark, dirs):
     assert read_notifications(dirs["silver"])[-1]["type"] == "SKIPPED"
 
 
+@pytest.mark.slow
 def test_blocking_snapshot_plan_failure_no_orphan_aborted(spark, dirs):
     """r16 (r15 ADVICE): a failure in chunk PLANNING (before STARTED)
     must not emit an orphan ABORTED — the notification feed either has a
@@ -736,6 +752,7 @@ def _run_multi_txn(spark, dirs, rows, tag):
     assert q.awaitTermination(120)
 
 
+@pytest.mark.slow
 def test_multi_table_snapshot_while_txns_stream(spark, dirs):
     """The composition: run_incremental_snapshot_multi backfills the
     hdr+det stores IN LOCKSTEP while cross-table transactions stream
@@ -855,6 +872,7 @@ def test_multi_snapshot_stop_marker_consumed(spark, dirs):
     assert n2 == 2                                   # marker consumed
 
 
+@pytest.mark.slow
 def test_multi_snapshot_consistency_vector_read(spark, dirs):
     """r18 (verdict item 6): the multi-table snapshot records a
     cross-store version vector at every lockstep boundary, and

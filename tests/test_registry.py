@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -40,6 +41,7 @@ def test_latest_wins_agg_is_map_side_combinable(spark):
     assert plan.count("SortAggregate") + plan.count("HashAggregate") >= 2
 
 
+@pytest.mark.slow
 def test_no_query_plans_a_cartesian_product(spark, sf_dir):
     """Plan + schema hygiene across the ENTIRE registered surface: no query
     may plan a CartesianProduct, BroadcastNestedLoopJoin is allowed only

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from postgres_debezium_clickhouse_spark.operators.similarity import (
     cosine_topk,
     embedding_near_dups,
@@ -361,6 +363,7 @@ def _recall_at5(spark, corpus, queries, cents):
     return len(exact & approx) / len(exact)
 
 
+@pytest.mark.slow
 def test_kmeans_par_seeding_beats_idorder_on_planted_clusters(spark):
     """Planted fixture where id-order seeds (the 4 lowest ids, ALL in
     cluster 0) measurably under-recall at n_probe=1, while the
@@ -642,6 +645,53 @@ def test_ivfpq_rerank_superset_optimality_and_recall(spark):
     assert rr_sel == truth                       # shortlist holds the truth
     assert rr_hits >= adc_hits
     assert adc_hits < rr_hits                    # the refine stage's value
+
+
+def test_ivfpq_rerank_rejects_shortlist_without_adc_d2(spark):
+    """A hand-built shortlist missing a required column fails at call
+    time from the schema alone, naming the column, before any job."""
+    from postgres_debezium_clickhouse_spark.operators.similarity import (
+        ivfpq_rerank_topk,
+    )
+
+    docs = _pq_fixture(spark, n=8)
+    bad = spark.createDataFrame([(0, 5)], "query_id long, neighbor_id long")
+    sc = spark.sparkContext
+    sc.setJobGroup("shortlist-schema-check", "no job expected")
+    try:
+        with pytest.raises(ValueError, match="adc_d2"):
+            ivfpq_rerank_topk(docs, docs, docs, docs, docs, shortlist_df=bad)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("shortlist-schema-check") == []
+
+
+def test_ivfpq_encode_init_books_equal_full_residual_init(spark):
+    """With refine_iters=0 ivfpq_encode trains its codebooks on the ks
+    lowest-id residuals only (a TakeOrdered shortcut); they must equal
+    pq_codebooks over ALL residuals, whose init takes the same ks rows."""
+    from postgres_debezium_clickhouse_spark.operators.similarity import (
+        ivf_centroids_df, ivfpq_encode, pq_codebooks,
+    )
+
+    corpus = _pq_fixture(spark).filter("vec_id >= 4")
+    coarse = ivf_centroids_df(corpus, n_centroids=4)
+    cents = {r.cell: list(r.cv) for r in coarse.collect()}
+    rows = []
+    for r in corpus.collect():
+        v = list(r.embedding)
+        cell = min(cents, key=lambda c: (
+            sum((a - b) ** 2 for a, b in zip(v, cents[c])), c))
+        rows.append((r.vec_id, [a - b for a, b in zip(v, cents[cell])]))
+    residuals = spark.createDataFrame(rows, "vec_id long, rv array<double>")
+
+    def books(df):
+        return sorted((r.j, r.cell, list(r.ctr)) for r in df.collect())
+
+    _, init = ivfpq_encode(corpus, coarse, m=4, ks=8, dim=16, refine_iters=0)
+    full = pq_codebooks(residuals, m=4, ks=8, dim=16, refine_iters=0,
+                        vec_col="rv")
+    assert books(init) == books(full)
 
 
 def test_l2_topk_matches_bruteforce(spark):

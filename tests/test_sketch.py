@@ -4,6 +4,7 @@ recount phase must return exact counts, and ties must break on item asc."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgres_debezium_clickhouse_spark.operators.sketch import space_saving_topk
@@ -255,6 +256,7 @@ def test_hll_register_layout_matches_duckdb(spark):
     assert got == want
 
 
+@pytest.mark.slow
 def test_hll_state_column_batch_boundary_insensitive(spark, tmp_path):
     """The sink's hll state must be identical whether the stream arrives
     in 1 file or 4 — register arrays compare bit-equal, and a key whose

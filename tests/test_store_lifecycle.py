@@ -84,6 +84,7 @@ def test_restore_silver_rolls_back_as_new_version(spark, tmp_path):
     assert pl.read_silver(spark, path).count() == n_after_ttl
 
 
+@pytest.mark.slow
 def test_bloom_filters_written_by_every_publisher(spark, tmp_path):
     """r10: set_bloom_filters is a metadata-only declaration that every
     later publish honors — proven by the parquet footprint: the bloomed

@@ -66,6 +66,7 @@ def test_silver_upsert_stream_matches_batch_semantics(spark, dirs):
     assert full[3] is True
 
 
+@pytest.mark.slow
 def test_silver_no_resurrection_across_batches(spark, dirs):
     """A delete in an early micro-batch must not be undone by an OLDER
     version of the key arriving in a later micro-batch."""
@@ -310,6 +311,7 @@ def test_silver_untouched_buckets_not_rewritten(spark, dirs):
     }
 
 
+@pytest.mark.slow
 def test_silver_snapshot_reads_survive_publish_and_vacuum(spark, dirs):
     """Concurrent-reader contract (VERDICT r2 #6): a reader that loaded the
     manifest before a publish still reads its full consistent snapshot
@@ -482,6 +484,7 @@ def test_silver_legacy_flat_store_migrates_not_discarded(spark, dirs):
     )
 
 
+@pytest.mark.slow
 def test_silver_long_stream_dead_files_bounded(spark, dirs):
     """17 micro-batches against the same key: the vacuum cadence (every 16
     publishes) fires mid-stream, so dead files stay bounded instead of
@@ -782,6 +785,7 @@ def test_store_schema_narrows_without_losing_history(spark, tmp_path):
     assert state == {1: ("x2", None), 2: ("y", "silver")}
 
 
+@pytest.mark.slow
 def test_rebucket_preserves_state_and_future_merges(spark, tmp_path):
     """r9: rebucket_silver changes the store width as one committed
     version — state identical before/after, tombstones carried, later

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -33,6 +34,7 @@ raw_events = st.lists(
 split_seed = st.integers(min_value=0, max_value=6)
 
 
+@pytest.mark.slow
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(events=raw_events, seed=split_seed)
 def test_streamed_silver_equals_batch(spark, tmp_path_factory, events, seed):
@@ -74,6 +76,7 @@ def test_streamed_silver_equals_batch(spark, tmp_path_factory, events, seed):
     assert streamed == batch
 
 
+@pytest.mark.slow
 @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
     rows=st.lists(
@@ -129,6 +132,7 @@ def test_streamed_summing_equals_batch_groupby(spark, tmp_path_factory, rows, se
     assert streamed == {k: (c / 100.0, n) for k, (c, n) in expect.items()}
 
 
+@pytest.mark.slow
 @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
     ops=st.lists(

@@ -37,6 +37,7 @@ def _run_summing(spark, dirs, rows, batch_no):
     assert q.awaitTermination(120)
 
 
+@pytest.mark.slow
 def test_summing_sums_across_batches(spark, dirs):
     _run_summing(spark, dirs, [(1, "a", 1.10), (1, "a", 2.20), (2, "b", 5.00)], 0)
     _run_summing(spark, dirs, [(1, "a", 0.70), (3, "a", 9.99)], 1)
@@ -53,6 +54,7 @@ def test_summing_sums_across_batches(spark, dirs):
     assert pl.read_silver(spark, dirs["silver"]).count() == 3
 
 
+@pytest.mark.slow
 def test_summing_empty_batch_publishes_nothing(spark, dirs):
     _run_summing(spark, dirs, [(1, "a", 1.0)], 0)
     v1 = pl.silver_versions(dirs["silver"])
@@ -60,6 +62,7 @@ def test_summing_empty_batch_publishes_nothing(spark, dirs):
     assert pl.silver_versions(dirs["silver"]) == v1
 
 
+@pytest.mark.slow
 def test_ttl_expires_rows_and_keeps_history(spark, dirs):
     base = spark.createDataFrame(
         [(i, f"u{i}", 1000 + i) for i in range(20)], "k long, val string, ts long"
@@ -80,6 +83,7 @@ def test_ttl_expires_rows_and_keeps_history(spark, dirs):
     assert pl.ttl_silver(spark, dirs["silver"], ["k"], "ts", F.lit(1010)) == 0
 
 
+@pytest.mark.slow
 def test_agg_spec_min_max_across_batches(spark, dirs):
     def run(rows, batch_no):
         spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").json(
@@ -168,6 +172,7 @@ def test_merge_stage_width_stays_bounded(spark, dirs):
     assert max(seen) <= 256, f"cached-plan shuffle ran a {max(seen)}-task stage"
 
 
+@pytest.mark.slow
 def test_summing_does_not_resurrect_tombstones(spark, dirs):
     """Review r8: a TTL/mutation tombstone must survive later merges of
     its bucket untouched — and a NEW batch row for the expired key must
@@ -232,6 +237,7 @@ def test_summing_refuses_legacy_flat_store(spark, dirs):
             raise RuntimeError(str(q.exception()))
 
 
+@pytest.mark.slow
 def test_summing_replay_guard_skips_applied_batch(spark, dirs):
     """Review r8: addition is not idempotent, so a micro-batch replayed
     after a crash-between-commit-and-checkpoint must be skipped — the
@@ -260,6 +266,7 @@ def test_summing_replay_guard_skips_applied_batch(spark, dirs):
     assert state == {"a": 3.0}
 
 
+@pytest.mark.slow
 def test_kmv_state_column_batch_boundary_insensitive(spark, dirs, tmp_path):
     """r9 (verdict item 3): the kmv sketch-STATE column must produce the
     BIT-IDENTICAL sketch whether the rows arrive as one batch or three —
@@ -326,6 +333,7 @@ def test_compaction_preserves_replay_watermarks(spark, dirs):
     assert state == {"a": 1.0, "b": 2.0}
 
 
+@pytest.mark.slow
 def test_replay_watermark_never_evicts_silently(spark, dirs):
     """Advice r9 (supersedes the r8 recency-prune): evicting ANY
     checkpoint's watermark re-arms the double-apply hazard for that
@@ -467,6 +475,7 @@ def test_ttl_rollup_keeps_null_ttl_rows(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_qsample_state_column_batch_boundary_insensitive(spark, dirs, tmp_path):
     """r10 (verdict item 4): the quantile bottom-k-sample state must be
     BIT-IDENTICAL whether rows arrive as one batch or three, and a
@@ -518,6 +527,7 @@ def test_qsample_state_column_batch_boundary_insensitive(spark, dirs, tmp_path):
     assert (got.p50, got.p100) == (10.0, 20.0)
 
 
+@pytest.mark.slow
 def test_topk_state_column_guarantees(spark, dirs, tmp_path):
     """r10: the Space-Saving topK state column.  The merge is only
     bound-preserving (truncation loses information — CH topK has the
@@ -593,6 +603,7 @@ def test_mixed_agg_spec_with_topk(spark, dirs):
     assert [(x["item"], x["cnt"]) for x in st[2]["g_top"]] == [("c", 1)]
 
 
+@pytest.mark.slow
 def test_topk_state_ignores_null_source(spark, dirs):
     """r11 (ADVICE r10): NULL source values must not occupy a topK
     summary slot — matching the kmv/hll/qsample siblings and ClickHouse
@@ -617,6 +628,7 @@ def test_topk_state_ignores_null_source(spark, dirs):
     assert st[2]["tk"] == [] and st[2]["__n_rows"] == 1
 
 
+@pytest.mark.slow
 def test_map_state_columns_across_batches(spark, dirs):
     """r11: summap/minmap/maxmap state columns (CH SummingMergeTree map
     columns / sumMap-family states).  Values combine per MAP-KEY across
@@ -658,6 +670,7 @@ def test_map_state_columns_across_batches(spark, dirs):
     assert st[1]["__n_rows"] == 4
 
 
+@pytest.mark.slow
 def test_bitmap_state_exact_distinct_and_set_algebra(spark, dirs):
     """r11: groupBitmap state — EXACT distinct set as sorted array,
     union-merged (idempotent: duplicate delivery cannot change it).
@@ -686,6 +699,7 @@ def test_bitmap_state_exact_distinct_and_set_algebra(spark, dirs):
     assert inter == [20, 40]
 
 
+@pytest.mark.slow
 def test_sortedarray_state_n_smallest_with_duplicates(spark, dirs):
     """r11: groupArraySorted(N) state — the N smallest values per key,
     DUPLICATES KEPT (CH semantics, unlike bitmap's set union), bounded
@@ -713,6 +727,7 @@ def test_sortedarray_state_n_smallest_with_duplicates(spark, dirs):
     assert st[2] == [7.0]
 
 
+@pytest.mark.slow
 def test_topkweighted_state_column(spark, dirs, tmp_path):
     """r12: the CH topKWeighted state column — the Space-Saving summary
     with weight-sum contributions.  Sub-cap keys are exact weight sums

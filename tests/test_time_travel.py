@@ -50,6 +50,7 @@ def _state(spark, dirs, **kw):
     return {r.id: r.val for r in pl.read_silver(spark, dirs["silver"], **kw).collect()}
 
 
+@pytest.mark.slow
 def test_as_of_read_returns_each_committed_state(spark, dirs):
     _publish(spark, dirs, 1, [(1, "a1", "c", 100, 1), (2, "b1", "c", 100, 2)])
     _publish(spark, dirs, 2, [(1, "a2", "u", 200, 3)])
@@ -76,6 +77,7 @@ def _age_store(path, seconds=7200):
             os.utime(full, (t, t))
 
 
+@pytest.mark.slow
 def test_vacuum_retain_versions_keeps_time_travel_alive(spark, dirs):
     _publish(spark, dirs, 1, [(1, "a1", "c", 100, 1)])
     _publish(spark, dirs, 2, [(1, "a2", "u", 200, 2)])
@@ -103,6 +105,7 @@ def test_vacuumed_version_fails_loudly(spark, dirs):
         pl.read_silver(spark, dirs["silver"], as_of_version=versions[0])
 
 
+@pytest.mark.slow
 def test_compaction_commits_a_version_and_history_survives(spark, dirs):
     """OPTIMIZE-style compaction is itself a versioned commit: the
     pre-compaction state stays reachable via as-of (its superseded files
@@ -147,6 +150,7 @@ def test_as_of_composes_with_include_deleted(spark, dirs):
     assert _state(spark, dirs, as_of_version=versions[0]) == {1: "a1", 2: "b1"}
 
 
+@pytest.mark.slow
 def test_mutation_touches_only_matching_buckets(spark, dirs):
     """mutate_silver must be O(touched buckets): an UPDATE matching one
     key republished only that key's bucket (manifest keeps every other

@@ -5,6 +5,7 @@ deterministically, and the loop must stop early when no pair remains."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgres_debezium_clickhouse_spark.operators.tokenizer import (
@@ -70,6 +71,7 @@ def test_bpe_encode_roundtrip_with_learned_table(spark):
     assert (out[3].n_words, out[3].n_subwords) == (0, 0)
 
 
+@pytest.mark.slow
 def test_bpe_subwords_always_reconstruct_the_word(spark):
     """Property (hypothesis): for ANY corpus of random small-alphabet
     words and the merge table learned from it, every word's subword
@@ -152,6 +154,7 @@ def test_bpe_encode_arrow_bit_equal_small_table(spark):
     assert arrow == expr
 
 
+@pytest.mark.slow
 def test_bpe_encode_arrow_k100_learned_merges(spark):
     """K≥100 LEARNED merges (r7 verdict item 6).  At K=110 the expression
     path cannot even ANALYZE (Catalyst hits `Max iterations (100) reached
@@ -272,6 +275,7 @@ def test_unigram_train_counts_floor_and_determinism(spark):
     assert "at" not in out1
 
 
+@pytest.mark.slow
 def test_unigram_hard_em_objective_monotone(spark, sf_dir):
     """Viterbi-EM (classification EM): the corpus Viterbi cost under
     each iteration's OWN vocab is non-increasing — M maximizes the fixed
@@ -346,6 +350,7 @@ def test_unigram_prune_planted_closed_form(spark):
     assert abs(out["a"][1] - round(math.log(0.5 / t), 6)) < 1e-9
 
 
+@pytest.mark.slow
 def test_unigram_prune_loss_delta_beats_adversarial_prune(spark, sf_dir):
     """The monotone-objective invariant extended to the prune path: the
     corpus Viterbi cost under the loss-delta-ranked prune must not
@@ -391,6 +396,7 @@ def test_unigram_prune_loss_delta_beats_adversarial_prune(spark, sf_dir):
     assert c_full <= c_pruned + 1e-3
 
 
+@pytest.mark.slow
 def test_wordpiece_likelihood_beats_count_and_continuation(spark):
     """r12 — WordPiece (Schuster & Nakajima 2012): the trainer must rank
     by n/(cnt(l)·cnt(r)), NOT raw pair count — on this corpus BPE's
@@ -414,6 +420,7 @@ def test_wordpiece_likelihood_beats_count_and_continuation(spark):
     assert (bpe[0].left_sym, bpe[0].right_sym) == ("d", "e")  # the contrast
 
 
+@pytest.mark.slow
 def test_wordpiece_encode_greedy_longest_and_unk(spark):
     """Greedy longest-match-first with ## continuation; a dead end makes
     the WHOLE word one [UNK] (BERT semantics) — even when a prefix
@@ -443,6 +450,7 @@ def test_wordpiece_encode_greedy_longest_and_unk(spark):
     assert out[3] == (2, 2, 1)
 
 
+@pytest.mark.slow
 def test_unigram_prune_regime_guard_fires_on_drift(spark):
     """r12 verdict item 5: the corpus_unigram_prune oracle replays
     exactly ONE prune round keeping target_multi pieces; the
@@ -465,6 +473,7 @@ def test_unigram_prune_regime_guard_fires_on_drift(spark):
     assert unigram_prune(docs, target_multi=8, shrink=0.25).count() > 0
 
 
+@pytest.mark.slow
 def test_bytebpe_multibyte_distinguishes_from_char_level(spark):
     """r13 — byte-level BPE (GPT-2): é enters as its UTF-8 byte pair
     (Ã, ©) and the first learned merge fuses it back; base-symbol

@@ -54,6 +54,7 @@ def _pending_rows(spark, dirs):
     return pl.read_txn_pending(spark, dirs["silver"] + "_txn_pending").count()
 
 
+@pytest.mark.slow
 def test_partial_transactions_stay_invisible(spark, dirs):
     """Batches cut transactions mid-flight; after EVERY batch the store
     holds only whole transactions, and the final state equals the plain
@@ -88,6 +89,7 @@ def test_end_marker_declares_completeness(spark, dirs):
     assert _pending_rows(spark, dirs) == 0          # marker drained too
 
 
+@pytest.mark.slow
 def test_delete_inside_transaction(spark, dirs):
     """A transaction mixing an update and a delete applies atomically:
     the tombstone and the update become visible in the same commit."""
@@ -101,6 +103,7 @@ def test_delete_inside_transaction(spark, dirs):
     assert withd.filter("__deleted").count() == 1        # tombstone retained
 
 
+@pytest.mark.slow
 def test_batch_boundary_insensitive(spark, dirs, tmp_path):
     """State after adversarial splits == state after one batch with the
     whole log (both fully released)."""
@@ -118,6 +121,7 @@ def test_batch_boundary_insensitive(spark, dirs, tmp_path):
     assert split_state == _silver(spark, dirs2) == {1: "b1", 2: "a2", 4: "b4"}
 
 
+@pytest.mark.slow
 def test_duplicate_rows_within_buffer_are_idempotent(spark, dirs):
     """(txn_id, txn_order) is the row identity: re-delivery of a buffered
     row must not inflate the seen-count into a premature release."""
@@ -135,6 +139,7 @@ def test_pending_store_is_directoried_beside_silver(spark, dirs):
     assert not os.path.isdir(dirs["silver"])         # nothing released yet
 
 
+@pytest.mark.slow
 def test_envelope_to_txn_sink_wiring(spark, dirs):
     """T9 end-to-end from the REFERENCE SURFACE: Debezium envelope JSON
     (payload.transaction carried by parse_envelope + unwrap_envelope
@@ -258,6 +263,7 @@ def _marker(txn, total, ts=0):
     return (None, None, None, None, None, None, ts, txn, 10**6, total)
 
 
+@pytest.mark.slow
 def test_multi_store_all_or_none(spark, dirs):
     """r16 (verdict item 2): a transaction spanning orders + lineitem
     becomes visible in BOTH stores in the same trigger, or in neither —
@@ -282,6 +288,7 @@ def test_multi_store_all_or_none(spark, dirs):
     assert "lk" not in ocols and "lqty" not in ocols
 
 
+@pytest.mark.slow
 def test_multi_store_end_marker_and_staged_replay(spark, dirs):
     """END-marker totals (NULL table row carrying the cross-collection
     event count) + a 3-stage replay cutting every txn mid-flight: after
@@ -322,6 +329,7 @@ def test_multi_store_end_marker_and_staged_replay(spark, dirs):
     assert pl.read_txn_pending(spark, dirs["silver"] + "_txn_pending").count() == 0
 
 
+@pytest.mark.slow
 def test_multi_store_batch_replay_idempotent(spark, dirs):
     """Whole-batch replay (the foreachBatch crash window): re-delivering
     an already-applied batch through a fresh checkpoint neither tears a

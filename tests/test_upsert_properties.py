@@ -8,6 +8,7 @@ order, any duplication.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -73,6 +74,7 @@ def test_rewrite_mode_matches_model(spark, events):
     assert got == model_final_state(phys, "rewrite")
 
 
+@pytest.mark.slow
 @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(events=events_strategy)
 def test_agg_and_window_strategies_agree(spark, events):

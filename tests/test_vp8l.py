@@ -270,6 +270,7 @@ def test_roundtrips_every_feature():
     assert d["pixels"] == pxa and d["has_alpha"]
 
 
+@pytest.mark.slow
 def test_fuzz_never_wrong_only_deadletter():
     rng = random.Random(8)
     px = [(0xFF << 24) | (rng.randrange(1 << 24)) for _ in range(16 * 12)]
