@@ -291,8 +291,8 @@ def split_on_drift(
       ``corrupt_filter``); conforming events keep flowing.
     * ``policy='widen'`` — nothing is quarantined: unknown fields ride
       through to the sink, which accepts additive evolution (apply_cdc's
-      mergeSchema path / _read_live_files) — the second frame is empty by
-      construction.
+      schema alignment / the manifest's union schema in _read_live_files)
+      — the second frame is empty by construction.
 
     A row with no ``after`` image (delete/tombstone) carries no field
     evidence and is always conforming — same contract as
@@ -335,7 +335,7 @@ def schema_drift_report(
     with occurrence count and first-seen offset (the replay point for a
     backfill once the registry is updated).  The tolerate-side is already
     handled (PERMISSIVE parsing nulls unknown fields; the silver store's
-    mergeSchema accepts additive evolution — see apply_cdc /
+    union schema accepts additive evolution — see apply_cdc /
     _read_live_files); this operator closes the loop by making drift
     OBSERVABLE instead of silent.
 

@@ -21,9 +21,12 @@ basic_example/init_transpassport.sql:60-61).  Semantics:
 Scale design (100 TB): dedup is one hash shuffle on the key columns —
 exactly the shuffle a keyed upsert fundamentally requires, nothing more.
 ``apply_cdc`` merges *per micro-batch*: it unions the (small) batch with
-only the current silver rows whose keys appear in the batch when
+only the current rows whose keys appear in the batch when
 ``changed_keys_only=True``, so a 1000-executor cluster never rewrites the
-whole silver table per trigger.  AQE handles skewed keys (session.py).
+whole table per trigger.  The bucketed silver store bounds ``current``
+to the touched buckets before the merge, so its sinks use
+:func:`merge_touched` instead — one aggregate over batch ∪ current, no
+changed-keys pass.  AQE handles skewed keys (session.py).
 """
 
 from __future__ import annotations
@@ -114,9 +117,15 @@ def latest_wins(
     version_cols: list[str | Column],
     keep: str = "last",
     strategy: str = "agg",
+    extra_aggs: dict[str, Column] | None = None,
 ) -> DataFrame:
     """W1/W2 — keep exactly one row per key: max version (then max
     tie-breaker).  ``version_cols`` order = significance; all descending.
+
+    ``extra_aggs`` maps a column of ``df`` to an aggregate computed in the
+    same grouping (agg strategy only); that column is output as the
+    aggregate instead of the winner's value, and takes no part in picking
+    the winner.
 
     Equivalent to ClickHouse ``FINAL`` on ReplacingMergeTree(version).
 
@@ -144,8 +153,10 @@ def latest_wins(
     is NULL in all ordering columns AND preserves their arbitrary-order
     determinism).
     """
+    extra = extra_aggs or {}
     if strategy == "agg":
-        other = [c for c in df.columns if c not in keys]
+        other = [c for c in df.columns if c not in keys and c not in extra]
+        aggs = [a.alias(c) for c, a in extra.items()]
         plain = all(isinstance(c, str) and c in df.columns for c in version_cols)
         if plain and _all_orderable(df.schema, set(other)):
             vnames = list(version_cols)
@@ -153,16 +164,18 @@ def latest_wins(
             picker = F.max if keep == "last" else F.min
             return (
                 df.groupBy(*keys)
-                .agg(picker(F.struct(*vnames, *rest)).alias("__row"))
-                .select(*keys, *[F.col("__row").getField(c).alias(c) for c in other])
+                .agg(picker(F.struct(*vnames, *rest)).alias("__row"), *aggs)
+                .select(*keys, *[F.col("__row").getField(c).alias(c) for c in other], *extra)
             )
         ver = [(F.col(c) if isinstance(c, str) else c) for c in version_cols]
         picker = F.max_by if keep == "last" else F.min_by
         return (
             df.groupBy(*keys)
-            .agg(picker(F.struct(*other), F.struct(*ver)).alias("__row"))
-            .select(*keys, "__row.*")
+            .agg(picker(F.struct(*other), F.struct(*ver)).alias("__row"), *aggs)
+            .select(*keys, "__row.*", *extra)
         )
+    if extra:
+        raise ValueError("extra_aggs needs strategy='agg'")
     order = [
         (F.col(c) if isinstance(c, str) else c).desc_nulls_last()
         if keep == "last"
@@ -203,7 +216,8 @@ def apply_cdc(
     delete_mode='rewrite' → deleted keys stay with __deleted=true
                             (abcsvb-connector-secure.json:33-34).
 
-    ``max_broadcast_keys`` bounds the changed-keys semi-join strategy: a
+    ``max_broadcast_keys`` bounds the changed-keys semi-join strategy (the
+    bucketed silver sinks do not take this path, see :func:`merge_touched`): a
     steady-state micro-batch has few distinct keys, so broadcasting them is
     the right plan — but the T5 snapshot/backfill "batch" is the whole
     table, and an unconditional broadcast of millions of keys OOMs the
@@ -240,48 +254,18 @@ def apply_cdc(
             untouched = current.join(batch_keys, on=keys, how="left_anti")
         else:
             touched, untouched = current, None
-        # additive schema evolution, both directions (Debezium sources add
-        # and drop columns over a table's life):
-        # - column NEW in the batch → old silver rows get NULL for it;
-        # - column GONE from the batch → it is preserved in the store (NULL
-        #   for new rows), never silently dropped — historical data is not
-        #   discarded because the source narrowed.  Type changes are not
-        #   coerced (additive-only policy; unionByName surfaces them).
-        cur = touched
-        cur_dtypes = dict(cur.dtypes)
-        for c, t in batch.dtypes:
-            if c not in cur.columns:
-                cur = cur.withColumn(c, F.lit(None).cast(t))
-        for c in cur.columns:
-            if c not in batch.columns and c != DELETED_FLAG:
-                batch = batch.withColumn(c, F.lit(None).cast(cur_dtypes[c]))
-        cur = cur.select(*batch.columns)
-        batch = batch.unionByName(cur)
+        batch = _union_evolved(batch, touched)
     else:
         untouched = None
 
-    version_order: list[str | Column] = [version_col]
-    if tiebreak_col is not None and tiebreak_col in batch.columns:
-        version_order.append(tiebreak_col)
+    version_order = _version_order(batch, version_col, tiebreak_col)
     if carry_forward_cols:
         cf = [c for c in carry_forward_cols if c in batch.columns]
         merged = _latest_wins_carry_forward(
-            batch, keys, [c for c in version_order if isinstance(c, str)],
-            cf, unavailable_placeholder,
+            batch, keys, version_order, cf, unavailable_placeholder,
         )
-        if delete_mode == "drop":
-            merged = merged.filter(~F.col(op_col).eqNullSafe(F.lit("d")))
-        else:
-            merged = merged.withColumn(
-                DELETED_FLAG, F.col(op_col).eqNullSafe(F.lit("d"))
-            )
-        if untouched is not None:
-            if delete_mode == "rewrite" and DELETED_FLAG not in untouched.columns:
-                untouched = untouched.withColumn(DELETED_FLAG, F.lit(False))
-            merged = merged.unionByName(untouched, allowMissingColumns=True)
-        return merged
-
-    merged = latest_wins(batch, keys, version_order)
+    else:
+        merged = latest_wins(batch, keys, version_order)
 
     # Null-safe: a caller-supplied current state may lack the op column
     # (padded with NULL by schema evolution above); NULL != 'd' evaluates
@@ -297,6 +281,72 @@ def apply_cdc(
             untouched = untouched.withColumn(DELETED_FLAG, F.lit(False))
         merged = merged.unionByName(untouched, allowMissingColumns=True)
     return merged
+
+
+def _union_evolved(batch: DataFrame, current: DataFrame) -> DataFrame:
+    """``batch ∪ current`` under additive schema evolution, both directions
+    (Debezium sources add and drop columns over a table's life):
+
+    - column NEW in the batch → current rows get NULL for it;
+    - column GONE from the batch → it is preserved (NULL for batch rows),
+      never silently dropped — historical data is not discarded because
+      the source narrowed.  ``current``'s ``__deleted`` is not carried
+      (the merge re-derives it).  Type changes are not coerced
+      (additive-only policy; unionByName surfaces them)."""
+    cur = current
+    cur_dtypes = dict(cur.dtypes)
+    for c, t in batch.dtypes:
+        if c not in cur.columns:
+            cur = cur.withColumn(c, F.lit(None).cast(t))
+    for c in cur.columns:
+        if c not in batch.columns and c != DELETED_FLAG:
+            batch = batch.withColumn(c, F.lit(None).cast(cur_dtypes[c]))
+    return batch.unionByName(cur.select(*batch.columns))
+
+
+def _version_order(df: DataFrame, version_col: str, tiebreak_col: str | None) -> list[str]:
+    if tiebreak_col is not None and tiebreak_col in df.columns:
+        return [version_col, tiebreak_col]
+    return [version_col]
+
+
+_FROM_BATCH = "__from_batch"
+_STORED_DELETED = "__stored_deleted"
+
+
+def merge_touched(
+    events: DataFrame,
+    current: DataFrame | None,
+    keys: list[str],
+    version_col: str = "ts_ms",
+    tiebreak_col: str | None = "offset",
+    op_col: str = "op",
+) -> DataFrame:
+    """The keyed silver sinks' merge: ``apply_cdc(delete_mode="rewrite")``
+    over ``events ∪ current`` as ONE latest-wins aggregate, with no
+    changed-keys split (``current`` is already bounded to the touched
+    buckets).  A key with a batch row takes ``__deleted`` from the
+    winner's ``op``; a key without one keeps its STORED ``__deleted`` —
+    ``mutate_silver`` deletes and legacy stores set the flag without
+    changing ``op``, so re-deriving it would resurrect them.  Winners and
+    tie-breaks are ``apply_cdc``'s: the stored flag rides last in the row
+    struct, and the batch marker is a separate aggregate."""
+    if current is None:
+        return apply_cdc(events, keys, version_col, tiebreak_col, op_col,
+                         delete_mode="rewrite")
+    stored = F.col(DELETED_FLAG) if DELETED_FLAG in current.columns else F.lit(False)
+    both = _union_evolved(
+        events.withColumn(_FROM_BATCH, F.lit(True)),
+        current.withColumn(_STORED_DELETED, stored).withColumn(_FROM_BATCH, F.lit(False)),
+    )
+    merged = latest_wins(
+        both, keys, _version_order(both, version_col, tiebreak_col),
+        extra_aggs={_FROM_BATCH: F.max(_FROM_BATCH)},
+    )
+    flag = F.when(
+        F.col(_FROM_BATCH), F.col(op_col).eqNullSafe(F.lit("d"))
+    ).otherwise(F.col(_STORED_DELETED))
+    return merged.withColumn(DELETED_FLAG, flag).drop(_FROM_BATCH, _STORED_DELETED)
 
 
 def with_ingest_seq(df: DataFrame) -> DataFrame:

@@ -48,6 +48,13 @@ _MIN_PARTITION_SIZE = "65536b"
 #: combining of genuinely tiny files — one task per 256 KB file is fine.
 _OPEN_COST = "262144b"
 
+#: File-listing fan-out floor.  Above the default of 32 paths, opening a
+#: file DataFrame lists them in a Spark job; silver reads pass the
+#: manifest's explicit file list, so on a 64-bucket store that was a job
+#: per trigger and per read just to stat known local files.  An
+#: object-store port must revisit this: there each stat is a remote call.
+_LISTING_THRESHOLD = "1000000"
+
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Set the runtime-settable confs the engine's semantics depend on, for
@@ -64,6 +71,7 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", _MIN_PARTITION_SIZE)
     spark.conf.set("spark.sql.files.openCostInBytes", _OPEN_COST)
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", _LISTING_THRESHOLD)
     # cached plans must stay AQE-coalescible (see get_spark) — without it a
     # foreign session with a high initialPartitionNum pays uncoalesced
     # shuffles under every persist() in the foreachBatch merges
@@ -106,6 +114,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", _MIN_PARTITION_SIZE)
         .config("spark.sql.files.openCostInBytes", _OPEN_COST)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", _LISTING_THRESHOLD)
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         # Let AQE coalesce CACHED plans too (default false): with the
         # scale-tuned initialPartitionNum=2048, a persist() upstream of a

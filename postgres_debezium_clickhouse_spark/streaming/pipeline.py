@@ -22,12 +22,15 @@ Mapping:
   errors.tolerance=none, abcsvb-connector-secure.json:51-53)
 
 Scale: bronze append is shuffle-free (narrow projection → partitioned
-parquet).  Silver upsert is bounded O(touched) on BOTH sides per trigger:
-the merge *computation* via ``apply_cdc(changed_keys_only=True)`` and the
-merge *write I/O* via the hash-bucketed store — only buckets whose keys
-appear in the batch are re-published; every other bucket's files are
-untouched (the write-side analogue of ReplacingMergeTree merging only
-affected parts, basic_example/clickhouse.sql:51).
+parquet).  Silver upsert is bounded O(touched buckets) per trigger, for
+both the merge and its write I/O: only the buckets whose keys appear in
+the batch are read, merged (one latest-wins aggregate over batch ∪ those
+buckets' rows, ``operators.upsert.merge_touched``) and re-published at
+core width; every other bucket's files are untouched (the analogue of
+ReplacingMergeTree merging only affected parts,
+basic_example/clickhouse.sql:51).  A trigger lists no directories and
+reads no parquet footers: the manifest names every live file and records
+the store's union schema.
 
 Silver store layout (manifest-committed, bucketed)::
 
@@ -60,6 +63,7 @@ mirrors.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -69,9 +73,10 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.upsert import DELETED_FLAG, apply_cdc
+from ..operators.upsert import DELETED_FLAG, merge_touched
 
 
 def bronze_append_stream(
@@ -210,25 +215,68 @@ def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(F.hash(*keys), F.lit(n_buckets))
 
 
+#: manifest flag: ``schema`` is the UNION of every live file's schema
+#: (manifests written before it record only the last publish's frame).
+SCHEMA_UNION = "schema_union"
+
+
+def _manifest_schema(manifest: dict) -> T.StructType:
+    return T.StructType.fromJson(json.loads(manifest["schema"]))
+
+
 def _read_live_files(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
     """Load the manifest's live-file set as one DataFrame.  ``basePath``
-    keeps the ``__epoch``/``__bucket`` partition columns derivable;
-    mergeSchema honors additive schema evolution across epochs (an
-    untouched bucket may predate a column the source added later).  A
-    zero-file manifest (e.g. compaction GC'd every row) reconstructs an
-    empty frame from the schema recorded at publish time."""
+    keeps the ``__epoch``/``__bucket`` partition columns derivable.
+    Additive schema evolution across epochs (an untouched bucket may
+    predate a column the source added, or keep one it dropped) is honored
+    by reading with the manifest's union schema: files lacking a column
+    read it as NULL, and no footer job runs.  A manifest without the
+    union flag (written before it existed) reads through ``mergeSchema``,
+    which opens every footer.  A zero-file manifest (e.g. compaction GC'd
+    every row) reconstructs an empty frame from the recorded schema."""
     files = manifest["files"]
     if not files:
-        from pyspark.sql import types as T
-
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.option("basePath", path)
-        .option("mergeSchema", "true")
-        .parquet(*[os.path.join(path, f) for f in files])
-        .drop("__epoch", "__bucket")
+        return spark.createDataFrame([], _manifest_schema(manifest))
+    reader = spark.read.option("basePath", path)
+    if manifest.get(SCHEMA_UNION):
+        reader = reader.schema(_manifest_schema(manifest))
+    else:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*[os.path.join(path, f) for f in files]).drop(
+        "__epoch", "__bucket"
     )
+
+
+def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
+    """``old``'s fields in order, nested structs merged, then ``new``'s
+    fields ``old`` lacks — the additive union ``mergeSchema`` computes
+    from footers.  On a non-struct type clash ``new`` wins."""
+    fields = {f.name: f for f in new.fields}
+    out = []
+    for f in old.fields:
+        g = fields.pop(f.name, None)
+        if g is None:
+            out.append(f)
+        elif isinstance(f.dataType, T.StructType) and isinstance(g.dataType, T.StructType):
+            out.append(T.StructField(
+                f.name, _merge_schemas(f.dataType, g.dataType), f.nullable or g.nullable
+            ))
+        else:
+            out.append(T.StructField(g.name, g.dataType, f.nullable or g.nullable))
+    return T.StructType(out + list(fields.values()))
+
+
+def _store_schema(path: str, manifest: dict, kept: list[str], df: DataFrame) -> T.StructType:
+    """Union schema of the files the next version keeps plus ``df``.  A
+    manifest without the union flag is upgraded once, from the kept
+    files' footers."""
+    if not kept:
+        return df.schema
+    if manifest.get(SCHEMA_UNION):
+        prev = _manifest_schema(manifest)
+    else:
+        prev = _read_live_files(df.sparkSession, path, {**manifest, "files": kept}).schema
+    return _merge_schemas(prev, df.schema)
 
 
 def _publish_buckets(
@@ -242,7 +290,8 @@ def _publish_buckets(
     """Write ``df`` as fresh files under a new ``__epoch`` dir (one
     key-sorted file per bucket — the O1 sparse-index layout within a
     bucket), then commit: new manifest = old live files minus
-    ``replaced_buckets`` plus the new epoch's files.
+    ``replaced_buckets`` plus the new epoch's files, with the union schema
+    of every live file (see :func:`_read_live_files`).
 
     Two guards make a concurrent publisher fail LOUDLY instead of losing
     data: the epoch claim (taken before any file I/O — the leftover
@@ -254,6 +303,12 @@ def _publish_buckets(
     epoch = manifest["version"] + 1
     n_buckets = manifest["n_buckets"]
     epoch_dir = os.path.join(path, f"__epoch={epoch}")
+    # EXPLICIT width: a bare repartition(col) starts at AQE's
+    # initialPartitionNum (2048) and AQE never coalesces user repartitions.
+    # Hashing on __bucket puts each bucket in exactly one task (one
+    # key-sorted file per bucket at any width); core width, because a
+    # small trigger touches few buckets and more tasks are pure overhead.
+    width = max(1, min(len(replaced_buckets), df.sparkSession.sparkContext.defaultParallelism))
     claim = _claim_epoch(path, epoch)
     try:
         # Re-verify AFTER claiming and BEFORE any file I/O: a publisher
@@ -281,13 +336,7 @@ def _publish_buckets(
             shutil.rmtree(epoch_dir)
         out = (
             df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-            # EXPLICIT width: a bare repartition(col) starts at AQE's
-            # initialPartitionNum (2048 in the scale-tuned session) and AQE
-            # never coalesces user repartitions — every publish was paying
-            # a 2048-task exchange regardless of store size (measured r8:
-            # the whole silver family, upsert/mutation/TTL/summing).  One
-            # partition per bucket is the store's natural write width.
-            .repartition(n_buckets, "__bucket")
+            .repartition(width, "__bucket")
             .sortWithinPartitions("__bucket", *keys)
         )
         # Write INTO the epoch dir, partitioned by __bucket ONLY (r9 fix,
@@ -361,7 +410,7 @@ def _publish_buckets(
                     shutil.rmtree(pepoch_dir)
                 pout = (
                     df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-                    .repartition(n_buckets, "__bucket")
+                    .repartition(width, "__bucket")
                     .sortWithinPartitions("__bucket", *pspec["keys"])
                 )
                 pout.write.mode("append").options(**bloom_opts).partitionBy(
@@ -386,7 +435,8 @@ def _publish_buckets(
                     "version": epoch,
                     "n_buckets": n_buckets,
                     "files": kept + new_files,
-                    "schema": df.schema.json(),  # empty-store reads reconstruct from this
+                    "schema": _store_schema(path, manifest, kept, df).json(),
+                    SCHEMA_UNION: True,
                     "sort_keys": list(keys),  # r10: primary in-bucket order, for projection routing
                     **({"projections": proj_updates} if projections else {}),
                     **(manifest_extra or {}),
@@ -495,6 +545,22 @@ def _touched_bucket_merge(
         vacuum_silver(path)
 
 
+def _cdc_upsert(batch: DataFrame, path: str, keys: list[str], n_buckets: int,
+                version_col: str, tiebreak_col: str | None, op_col: str = "op",
+                legacy_mode: str = "migrate") -> None:
+    """One trigger of a keyed upsert sink: :func:`_touched_bucket_merge`
+    with the latest-wins merge :func:`merge_touched` (rewrite-mode: the
+    store keeps tombstones across batches)."""
+    _touched_bucket_merge(
+        batch, path, keys, n_buckets,
+        prepare=lambda b: b,
+        merge_fn=lambda current, prepared: merge_touched(
+            prepared, current, keys, version_col, tiebreak_col, op_col
+        ),
+        legacy_mode=legacy_mode,
+    )
+
+
 #: marker file under the store's ``_signals/`` dir while an ad-hoc
 #: BLOCKING snapshot holds the store (Debezium ``execute-snapshot`` with
 #: ``type: BLOCKING`` — the connector stops streaming, re-reads the
@@ -558,13 +624,16 @@ def silver_upsert_stream(
     filter ``__deleted`` yourself) to consume the store.
 
     Per trigger, only the hash buckets containing batch keys are read,
-    merged (``apply_cdc`` bounds the merge computation to touched keys) and
-    re-published; untouched buckets' files are not opened, written, or
-    moved (see the store-layout contract in the module docstring).
+    merged (one latest-wins aggregate over the batch and those buckets'
+    rows) and re-published; untouched buckets' files are not opened,
+    written, or moved (see the store-layout contract in the module
+    docstring).  ``max_broadcast_keys`` is kept for compatibility: the
+    bucketed merge has no changed-keys join, so it no longer has an
+    effect.
 
     foreachBatch because the merge is keyed state over an external store;
-    the merge itself is `operators.upsert.apply_cdc` (batch-tested logic —
-    streaming is a thin shell, SURVEY §7.3 M4).
+    the merge itself is `operators.upsert.merge_touched` (batch-tested
+    logic — streaming is a thin shell, SURVEY §7.3 M4).
     """
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
@@ -572,25 +641,7 @@ def silver_upsert_stream(
         # whole duration (Debezium semantics); incremental snapshots
         # never set the lock and interleave freely
         wait_until_unblocked(path)
-
-        def merge_fn(current: DataFrame | None, prepared: DataFrame) -> DataFrame:
-            return apply_cdc(
-                prepared,
-                keys=keys,
-                version_col=version_col,
-                tiebreak_col=tiebreak_col,
-                delete_mode="rewrite",  # tombstones must persist across batches
-                current=current,
-                # replayed-backfill triggers (availableNow over a whole
-                # bronze archive, T5) can be table-sized: let apply_cdc fall
-                # back to a shuffle semi-join past the threshold
-                max_broadcast_keys=max_broadcast_keys,
-            )
-
-        _touched_bucket_merge(
-            batch, path, keys, n_buckets,
-            prepare=lambda b: b, merge_fn=merge_fn, legacy_mode="migrate",
-        )
+        _cdc_upsert(batch, path, keys, n_buckets, version_col, tiebreak_col)
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
     if available_now:
@@ -598,6 +649,62 @@ def silver_upsert_stream(
     elif processing_interval_ms is not None:
         writer = writer.trigger(processingTime=f"{processing_interval_ms} milliseconds")
     return writer.start()
+
+
+def _txn_trigger(batch: DataFrame, batch_id: int, ppath: str, checkpoint: str,
+                 txn_cols: tuple[str, str, str], is_data,
+                 release: Callable[[DataFrame], None], n_buckets: int,
+                 max_broadcast_keys: int) -> None:
+    """One trigger of a transaction-consistent sink: the batch joins the
+    pending buckets it touches (deduped on txn id + order); the data rows
+    (``is_data``) of COMPLETE transactions go to ``release``, which commits
+    them to silver; everything else republishes to pending, last, with the
+    ``_replay_guard`` watermark.  ``txn_cols`` = (id, order, total)."""
+    txn_id_col, txn_order_col, txn_total_col = txn_cols
+    keep = _replay_guard(ppath, checkpoint, batch_id)
+    if keep is None or not batch.take(1):
+        return
+    pmanifest = _read_manifest(ppath) or {"version": 0, "n_buckets": n_buckets, "files": []}
+    batch.persist()
+    try:
+        tx_buckets = {
+            int(r[0])
+            for r in batch.select(
+                _bucket_expr([txn_id_col], pmanifest["n_buckets"]).alias("b")
+            ).distinct().collect()
+        }
+        pend_files = [
+            f for f in pmanifest["files"]
+            if int(f.split("__bucket=")[1].split("/")[0]) in tx_buckets
+        ]
+        universe = batch
+        if pend_files:
+            universe = _read_live_files(
+                batch.sparkSession, ppath, {**pmanifest, "files": pend_files}
+            ).unionByName(batch, allowMissingColumns=True)
+        universe = universe.dropDuplicates([txn_id_col, txn_order_col])
+        universe.persist()
+        try:
+            totals = universe.groupBy(txn_id_col).agg(
+                F.sum(F.when(is_data, 1).otherwise(0)).alias("__seen"),
+                F.max(txn_total_col).alias("__expect"),
+            )
+            complete = totals.filter(
+                F.col("__expect").isNotNull()
+                & (F.col("__seen") == F.col("__expect"))
+            ).select(txn_id_col)
+            if max_broadcast_keys and complete.count() <= max_broadcast_keys:
+                complete = F.broadcast(complete)
+            release(universe.filter(is_data).join(complete, txn_id_col))
+            _publish_buckets(
+                universe.join(complete, txn_id_col, "left_anti"), ppath,
+                [txn_id_col], pmanifest, tx_buckets,
+                manifest_extra={"applied": keep},
+            )
+        finally:
+            universe.unpersist()
+    finally:
+        batch.unpersist()
 
 
 def silver_txn_upsert_stream(
@@ -646,9 +753,8 @@ def silver_txn_upsert_stream(
        never a global pass), deduped on (txn id, order).
     2. A transaction is COMPLETE when its distinct data-row count equals
        its declared total.  Complete transactions' data rows are RELEASED
-       through the normal ``apply_cdc`` latest-wins merge into the main
-       store; markers and released rows leave pending; incomplete rows
-       stay buffered.
+       through the normal latest-wins merge into the main store; markers
+       and released rows leave pending; incomplete rows stay buffered.
     3. Commit order is silver FIRST, pending SECOND, with the replay
        watermark (``_replay_guard``) on the PENDING commit.  Every crash
        window is safe: a replay after both commits is skipped by the
@@ -664,86 +770,25 @@ def silver_txn_upsert_stream(
     run ``stream_stateful_dedup`` upstream if the transport is
     at-least-once (Spark's Kafka/file sources with checkpointing are
     exactly-once into foreachBatch, where only whole-batch replays
-    happen, which the guard handles)."""
-    from ..operators.upsert import apply_cdc
+    happen, which the guard handles).
 
+    ``max_broadcast_keys`` bounds the broadcast of the complete-txn ids;
+    it no longer affects the merge into the bucketed store."""
     ppath = pending_path if pending_path is not None else path + "_txn_pending"
-    txn_cols = [txn_id_col, txn_order_col, txn_total_col]
+    txn_cols = (txn_id_col, txn_order_col, txn_total_col)
+    is_data = F.lit(False)
+    for k in keys:
+        is_data = is_data | F.col(k).isNotNull()
 
-    import hashlib as _hashlib
-
-    ckpt_key = _hashlib.md5(checkpoint.encode()).hexdigest()[:12]
+    def _release(released: DataFrame) -> None:
+        _cdc_upsert(
+            released.drop(*txn_cols), path, keys, n_buckets, version_col,
+            tiebreak_col, legacy_mode="error",
+        )
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        keep = _replay_guard(ppath, ckpt_key, batch_id)
-        if keep is None:
-            return
-        if not batch.take(1):
-            return
-        pmanifest = _read_manifest(ppath) or {
-            "version": 0, "n_buckets": n_buckets, "files": [],
-        }
-        nbp = pmanifest["n_buckets"]
-        batch.persist()
-        try:
-            tx_buckets = {
-                int(r[0])
-                for r in batch.select(
-                    _bucket_expr([txn_id_col], nbp).alias("b")
-                ).distinct().collect()
-            }
-            pend_files = [
-                f for f in pmanifest["files"]
-                if int(f.split("__bucket=")[1].split("/")[0]) in tx_buckets
-            ]
-            universe = batch
-            if pend_files:
-                universe = _read_live_files(
-                    spark, ppath, {**pmanifest, "files": pend_files}
-                ).unionByName(batch, allowMissingColumns=True)
-            universe = universe.dropDuplicates([txn_id_col, txn_order_col])
-            universe.persist()
-            try:
-                is_data = F.lit(False)
-                for k in keys:
-                    is_data = is_data | F.col(k).isNotNull()
-                totals = universe.groupBy(txn_id_col).agg(
-                    F.sum(F.when(is_data, 1).otherwise(0)).alias("__seen"),
-                    F.max(txn_total_col).alias("__expect"),
-                )
-                complete = totals.filter(
-                    F.col("__expect").isNotNull()
-                    & (F.col("__seen") == F.col("__expect"))
-                ).select(txn_id_col)
-                if max_broadcast_keys and complete.count() <= max_broadcast_keys:
-                    complete = F.broadcast(complete)
-                released = (
-                    universe.filter(is_data)
-                    .join(complete, txn_id_col)
-                    .drop(*txn_cols)
-                )
-
-                def merge_fn(current, prepared):
-                    return apply_cdc(
-                        prepared, keys=keys, version_col=version_col,
-                        tiebreak_col=tiebreak_col, delete_mode="rewrite",
-                        current=current, max_broadcast_keys=max_broadcast_keys,
-                    )
-
-                _touched_bucket_merge(
-                    released, path, keys, n_buckets,
-                    prepare=lambda b: b, merge_fn=merge_fn, legacy_mode="error",
-                )
-                incomplete = universe.join(complete, txn_id_col, "left_anti")
-                _publish_buckets(
-                    incomplete, ppath, [txn_id_col], pmanifest, tx_buckets,
-                    manifest_extra={"applied": keep},
-                )
-            finally:
-                universe.unpersist()
-        finally:
-            batch.unpersist()
+        _txn_trigger(batch, batch_id, ppath, checkpoint, txn_cols, is_data,
+                     _release, n_buckets, max_broadcast_keys)
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
     if available_now:
@@ -815,7 +860,7 @@ def silver_txn_multi_upsert_stream(
        BEFORE any store is touched — the all-or-none-across-stores
        invariant is by construction, not by commit protocol.
     3. Complete transactions release per collection into that
-       collection's store (latest-wins ``apply_cdc``, O(touched
+       collection's store (latest-wins ``merge_touched``, O(touched
        buckets) each); stores commit in sorted-name order, the shared
        pending store LAST with the ``_replay_guard`` watermark.  Any
        crash window replays the whole trigger; every release is
@@ -827,111 +872,45 @@ def silver_txn_multi_upsert_stream(
     in-flight transactions, completeness never leaves a bucket, each
     store's merge touches only its dirty buckets.  The fan-out adds no
     shuffle class: the per-collection filter rides the already-persisted
-    released frame."""
-    from ..operators.upsert import apply_cdc
-
-    import hashlib as _hashlib
-
-    ckpt_key = _hashlib.md5(checkpoint.encode()).hexdigest()[:12]
+    released frame.  ``max_broadcast_keys`` bounds the broadcast of the
+    complete-txn ids; it no longer affects the per-store merges."""
+    def _release(released: DataFrame) -> None:
+        released.persist()
+        try:
+            unknown = released.filter(
+                ~F.col(table_col).isin(*stores.keys())
+            ).select(table_col).take(1)
+            if unknown:
+                raise ValueError(
+                    "silver_txn_multi_upsert_stream: released row "
+                    f"for collection {unknown[0][0]!r} has no "
+                    "configured store — add it to `stores` (silent "
+                    "drop would break the all-or-none contract)"
+                )
+            for tname in sorted(stores):
+                cfg = stores[tname]
+                keys = cfg["keys"]
+                version_col = cfg.get("version_col", "ts_ms")
+                tiebreak_col = cfg.get("tiebreak_col")
+                cols = cfg.get("columns") or (
+                    keys + [version_col]
+                    + ([tiebreak_col] if tiebreak_col else [])
+                )
+                if op_col not in cols:
+                    cols = list(cols) + [op_col]
+                part = released.filter(F.col(table_col) == tname).select(*cols)
+                _cdc_upsert(
+                    part, cfg["path"], keys, n_buckets, version_col,
+                    tiebreak_col, op_col, legacy_mode="error",
+                )
+        finally:
+            released.unpersist()
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        keep = _replay_guard(pending_path, ckpt_key, batch_id)
-        if keep is None:
-            return
-        if not batch.take(1):
-            return
-        pmanifest = _read_manifest(pending_path) or {
-            "version": 0, "n_buckets": n_buckets, "files": [],
-        }
-        nbp = pmanifest["n_buckets"]
-        batch.persist()
-        try:
-            tx_buckets = {
-                int(r[0])
-                for r in batch.select(
-                    _bucket_expr([txn_id_col], nbp).alias("b")
-                ).distinct().collect()
-            }
-            pend_files = [
-                f for f in pmanifest["files"]
-                if int(f.split("__bucket=")[1].split("/")[0]) in tx_buckets
-            ]
-            universe = batch
-            if pend_files:
-                universe = _read_live_files(
-                    spark, pending_path, {**pmanifest, "files": pend_files}
-                ).unionByName(batch, allowMissingColumns=True)
-            universe = universe.dropDuplicates([txn_id_col, txn_order_col])
-            universe.persist()
-            try:
-                is_data = F.col(table_col).isNotNull()
-                totals = universe.groupBy(txn_id_col).agg(
-                    F.sum(F.when(is_data, 1).otherwise(0)).alias("__seen"),
-                    F.max(txn_total_col).alias("__expect"),
-                )
-                complete = totals.filter(
-                    F.col("__expect").isNotNull()
-                    & (F.col("__seen") == F.col("__expect"))
-                ).select(txn_id_col)
-                if max_broadcast_keys and complete.count() <= max_broadcast_keys:
-                    complete = F.broadcast(complete)
-                released = (
-                    universe.filter(is_data)
-                    .join(complete, txn_id_col)
-                )
-                released.persist()
-                try:
-                    unknown = released.filter(
-                        ~F.col(table_col).isin(*stores.keys())
-                    ).select(table_col).take(1)
-                    if unknown:
-                        raise ValueError(
-                            "silver_txn_multi_upsert_stream: released row "
-                            f"for collection {unknown[0][0]!r} has no "
-                            "configured store — add it to `stores` (silent "
-                            "drop would break the all-or-none contract)"
-                        )
-                    for tname in sorted(stores):
-                        cfg = stores[tname]
-                        keys = cfg["keys"]
-                        version_col = cfg.get("version_col", "ts_ms")
-                        tiebreak_col = cfg.get("tiebreak_col")
-                        cols = cfg.get("columns") or (
-                            keys + [version_col]
-                            + ([tiebreak_col] if tiebreak_col else [])
-                        )
-                        if op_col not in cols:
-                            cols = list(cols) + [op_col]
-                        part = released.filter(
-                            F.col(table_col) == tname
-                        ).select(*cols)
-
-                        def merge_fn(current, prepared,
-                                     _k=keys, _v=version_col, _t=tiebreak_col):
-                            return apply_cdc(
-                                prepared, keys=_k, version_col=_v,
-                                tiebreak_col=_t, op_col=op_col,
-                                delete_mode="rewrite", current=current,
-                                max_broadcast_keys=max_broadcast_keys,
-                            )
-
-                        _touched_bucket_merge(
-                            part, cfg["path"], keys, n_buckets,
-                            prepare=lambda b: b, merge_fn=merge_fn,
-                            legacy_mode="error",
-                        )
-                finally:
-                    released.unpersist()
-                incomplete = universe.join(complete, txn_id_col, "left_anti")
-                _publish_buckets(
-                    incomplete, pending_path, [txn_id_col], pmanifest,
-                    tx_buckets, manifest_extra={"applied": keep},
-                )
-            finally:
-                universe.unpersist()
-        finally:
-            batch.unpersist()
+        _txn_trigger(batch, batch_id, pending_path, checkpoint,
+                     (txn_id_col, txn_order_col, txn_total_col),
+                     F.col(table_col).isNotNull(), _release, n_buckets,
+                     max_broadcast_keys)
 
     writer = events.writeStream.foreachBatch(_merge).option(
         "checkpointLocation", checkpoint
@@ -1230,7 +1209,7 @@ def optimize_deduplicate(
     return n
 
 
-def _replay_guard(path: str, ckpt_key: str, batch_id: int) -> dict | None:
+def _replay_guard(path: str, checkpoint: str, batch_id: int) -> dict | None:
     """Shared replay guard for the NON-IDEMPOTENT sinks (summing /
     aggregating / collapsing — anything whose merge ADDS rather than
     displaces): the manifest records the last applied batch id per
@@ -1248,6 +1227,7 @@ def _replay_guard(path: str, ckpt_key: str, batch_id: int) -> dict | None:
     - a 9th checkpoint sequence would need a silent eviction, re-arming
       double-apply for the evicted stream → raise with the remedy.
     """
+    ckpt_key = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
     applied = (_read_manifest(path) or {}).get("applied", {})
     watermark = applied.get(ckpt_key, -1)
     if watermark >= batch_id:
@@ -1765,16 +1745,12 @@ def silver_summing_stream(
             )
         return part
 
-    import hashlib as _hashlib
-
-    ckpt_key = _hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
     def _merge(batch: DataFrame, batch_id: int) -> None:
         # REPLAY GUARD (r8 review): unlike latest-wins (where re-merging an
         # identical batch is a no-op), ADDITION is not idempotent — a
         # micro-batch replayed after a crash between the manifest commit
         # and the checkpoint write would double every sum it carries.
-        keep = _replay_guard(path, ckpt_key, batch_id)
+        keep = _replay_guard(path, checkpoint, batch_id)
         if keep is None:
             return
 
@@ -1952,12 +1928,8 @@ def silver_collapsing_stream(
             merged = merged.filter(F.col("__sign_net") != 0)
         return merged
 
-    import hashlib as _hashlib
-
-    ckpt_key = _hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        keep = _replay_guard(path, ckpt_key, batch_id)
+        keep = _replay_guard(path, checkpoint, batch_id)
         if keep is None:
             return
 

@@ -53,8 +53,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.upsert import apply_cdc
-from .pipeline import DEFAULT_SILVER_BUCKETS, _touched_bucket_merge
+from .pipeline import DEFAULT_SILVER_BUCKETS, _cdc_upsert
 
 SIGNAL_DIR = "_signals"
 _EPOCH_DATE = datetime.date(1970, 1, 1)
@@ -475,22 +474,7 @@ def run_incremental_snapshot(
             .withColumn(version_col, F.lit(watermark_version))
             .withColumn(tiebreak_col, F.lit(-1).cast("long"))
         )
-
-        def merge_fn(current: DataFrame | None, prepared: DataFrame) -> DataFrame:
-            return apply_cdc(
-                prepared,
-                keys=keys,
-                version_col=version_col,
-                tiebreak_col=tiebreak_col,
-                op_col=op_col,
-                delete_mode="rewrite",  # tombstones must persist (T4)
-                current=current,
-            )
-
-        _touched_bucket_merge(
-            chunk, path, keys, n_buckets,
-            prepare=lambda b: b, merge_fn=merge_fn, legacy_mode="migrate",
-        )
+        _cdc_upsert(chunk, path, keys, n_buckets, version_col, tiebreak_col, op_col)
         done.add(i)
         _write_progress(path, sid, done, bounds)
         merged += 1
@@ -589,19 +573,8 @@ def run_blocking_snapshot(
                 .withColumn(version_col, F.lit(watermark_version))
                 .withColumn(tiebreak_col, F.lit(-1).cast("long"))
             )
-
-            def merge_fn(current, prepared):
-                return apply_cdc(
-                    prepared, keys=keys, version_col=version_col,
-                    tiebreak_col=tiebreak_col, op_col=op_col,
-                    delete_mode="rewrite", current=current,
-                )
-
-            _touched_bucket_merge(
-                chunk, path, keys, n_buckets,
-                prepare=lambda b: b, merge_fn=merge_fn,
-                legacy_mode="migrate",
-            )
+            _cdc_upsert(chunk, path, keys, n_buckets, version_col,
+                        tiebreak_col, op_col)
             merged += 1
             if interleave_hook is not None:
                 interleave_hook(i)
@@ -1022,20 +995,8 @@ def run_incremental_snapshot_multi(
                 .withColumn(version_col, F.lit(watermark_version))
                 .withColumn(tiebreak_col, F.lit(-1).cast("long"))
             )
-            keys = tables[t]["keys"]
-
-            def merge_fn(current, prepared, _k=keys):
-                return apply_cdc(
-                    prepared, keys=_k, version_col=version_col,
-                    tiebreak_col=tiebreak_col, op_col=op_col,
-                    delete_mode="rewrite", current=current,
-                )
-
-            _touched_bucket_merge(
-                chunk, tables[t]["path"], keys, n_buckets,
-                prepare=lambda b: b, merge_fn=merge_fn,
-                legacy_mode="migrate",
-            )
+            _cdc_upsert(chunk, tables[t]["path"], tables[t]["keys"],
+                        n_buckets, version_col, tiebreak_col, op_col)
             done.add((t, i))
             _write_progress_multi(coord, sid, done, bounds)
             merged += 1

@@ -73,10 +73,8 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         (").distinct().collect()",
          "touched silver bucket ids: ≤ n_buckets values"),
         (").distinct().collect()",
-         "touched silver bucket ids: ≤ n_buckets values"),
-        (").distinct().collect()",
-         "multi-store txn sink (r16): touched PENDING bucket ids, "
-         "≤ n_buckets values — same shape as the single-store sink"),
+         "txn sinks (single- and multi-store share _txn_trigger): touched "
+         "PENDING bucket ids, ≤ n_buckets values"),
         (".collect()",
          "OPTIMIZE stats: 1 row per touched bucket"),
         (".collect()",

@@ -357,9 +357,9 @@ def test_silver_snapshot_reads_survive_publish_and_vacuum(spark, dirs):
 
 
 def test_silver_stream_backfill_threshold_same_state(spark, dirs):
-    """T5 through the streaming sink: with the broadcast threshold forced
-    to 0 (every merge takes the shuffle semi-join path) the final silver
-    state is identical to the default broadcast path."""
+    """T5 through the streaming sink: ``max_broadcast_keys=0`` is still
+    accepted and leaves the final silver state unchanged (the bucketed
+    merge has no broadcast join left for it to bound)."""
     from postgres_debezium_clickhouse_spark.streaming.pipeline import (
         read_silver,
         silver_upsert_stream,
