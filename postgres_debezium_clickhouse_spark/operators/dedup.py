@@ -306,7 +306,8 @@ def connected_components(
     changing the contract.  Lineage is truncated per round with an eager
     localCheckpoint, so the loop's plan does not grow with the iteration
     count; the convergence check is a scalar count, never a collect of
-    data rows.
+    data rows.  No fixpoint within ``max_iter`` rounds raises
+    ``RuntimeError`` instead of returning unconverged labels.
 
     Round shape (r7): TWO shuffles per round, down from three — the
     neighbor labels and each node's own labeled row are UNIONED and
@@ -355,6 +356,12 @@ def connected_components(
         labels = merged.drop("__old")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds — "
+            "refusing to return partial labels (raise max_iter, or use "
+            "connected_components_star for long-diameter graphs)"
+        )
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
 
@@ -383,7 +390,8 @@ def connected_components_star(
     truncated per round (eager localCheckpoint); convergence = the edge
     set reaches a fixpoint (scalar ``exceptAll().count()``, never a
     collect).  At the fixpoint the graph is a forest of stars centered at
-    component minima, so the label map is one final groupBy-min."""
+    component minima, so the label map is one final groupBy-min.  No
+    fixpoint within ``max_iter`` rounds raises ``RuntimeError``."""
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
@@ -436,6 +444,11 @@ def connected_components_star(
         edges = new_edges
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_iter} "
+            "rounds — refusing to return partial labels"
+        )
     labels = edges.groupBy("hi").agg(F.min("lo").alias("component"))
     return nodes.join(
         labels.withColumnRenamed("hi", "node"), "node", "left"

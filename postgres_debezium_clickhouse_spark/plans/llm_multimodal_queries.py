@@ -388,17 +388,14 @@ def q_multimodal_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     char count, and the 2-files-per-sample contract restated from the
     fixture."""
     import json as _json
-    import shutil as _sh
-    import tempfile
-    import uuid
+    import os as _os
 
     from ..sources.webdataset import read_webdataset, webdataset_encode_shard
+    from ._scratch import scratch
     from .ops_queries import _write_fixture_segments
 
-    src = f"{tempfile.gettempdir()}/wds_src_{uuid.uuid4().hex[:12]}"
-    try:
-        import os as _os
-
+    with scratch(spark, "wds") as s:
+        src = s.dir("src")
         _os.makedirs(src, exist_ok=True)
 
         def encode_segment(seg: int, rows: list[dict]) -> None:
@@ -430,7 +427,7 @@ def q_multimodal_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("__meta"),
             F.count(F.lit(1)).alias("n_files"),
         )
-        return (
+        return s.materialize(
             per.select(
                 F.col("sample_key").cast("long").alias("doc_id"),
                 F.get_json_object("__meta", "$.lang").alias("lang"),
@@ -439,10 +436,7 @@ def q_multimodal_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_txt_chars").cast("long").alias("n_txt_chars"),
                 F.col("n_files").cast("long").alias("n_files"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        _sh.rmtree(src, ignore_errors=True)
 
 
 def q_multimodal_audio_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -97,27 +97,17 @@ def q_ann_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     with static partition pruning (only the probed cells' files are
     opened).  Same semantics/tie-breaks as the in-memory variants, so the
     shared similarity_ann_ivf_topk oracle must match bit-for-bit."""
-    import tempfile as _tf
-    import uuid as _uuid
-
     from ..operators.similarity import ivf_search_index, ivf_write_index
+    from ._scratch import scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).withColumnRenamed("vec_id", "query_id")
     corpus = emb.filter(F.col("vec_id") >= 5)
-    path = f"{_tf.gettempdir()}/ivf_idx_{_uuid.uuid4().hex[:12]}"
-    try:
-        ivf_write_index(corpus, path, n_centroids=16)
-        # materialize the (tiny, top-k) result before deleting the index
-        # files it reads — otherwise every invocation leaks a full corpus
-        # copy under tempdir (ADVICE r6)
-        return ivf_search_index(spark, path, queries, k=5, n_probe=4).localCheckpoint(
-            eager=True
+    with scratch(spark, "ivf_idx") as s:
+        ivf_write_index(corpus, s.dir("index"), n_centroids=16)
+        return s.materialize(
+            ivf_search_index(spark, s.dir("index"), queries, k=5, n_probe=4)
         )
-    finally:
-        import shutil as _sh
-
-        _sh.rmtree(path, ignore_errors=True)
 
 
 def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,8 +6,7 @@ these; value-level assertions live in tests/.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -16,6 +15,7 @@ from ..functions import enum_by_bucket, gen_uuid, rand_int, round2, ts_minus_ran
 from ..schemas import ORDERS_ENVELOPE
 from ..sources.cdc import orders_cdc_events, parse_envelope
 from ..streaming.pipeline import bronze_append_stream, corrupt_filter
+from ._scratch import Scratch, scratch
 
 
 def synthetic_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,18 +58,9 @@ def stream_bronze_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARCHIVED value_json, so the check proves the raw log survived the
     stream → append → re-read round trip intact (only the wall-clock
     ingestion_time is excluded)."""
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/bronze_src_{run}"
-    dst = f"{root}/bronze_out_{run}"
-    ckpt = f"{root}/bronze_ckpt_{run}"
-    try:
+    with scratch(spark, "bronze") as s:
         events = orders_cdc_events(spark, sf_dir)
-        events.write.mode("overwrite").json(src)
-
-        stream = spark.readStream.schema(events.schema).json(src)
+        stream = s.replay(events, files=4, per_trigger=4, fmt="json")
         parsed = parse_envelope(stream, ORDERS_ENVELOPE)
         good, _dead = corrupt_filter(parsed)
         bronze = good.select(
@@ -77,15 +68,10 @@ def stream_bronze_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("partition").cast("string").alias("partition_str"),
             F.col("offset").alias("offset_num"),
         )
-        q = bronze_append_stream(bronze, dst, ckpt, available_now=True)
-        if not q.awaitTermination(120):
-            q.stop()  # don't leave a zombie stream behind the error
-            raise TimeoutError(
-                "stream did not finish in 120s — refusing to "
-                "return a partial result"
-            )
+        dst = s.dir("out")
+        s.wait(bronze_append_stream(bronze, dst, s.dir("ckpt"), available_now=True))
         p = F.col("j.payload")
-        return (
+        return s.materialize(
             spark.read.parquet(dst)
             .withColumn("j", F.from_json("value_json", ORDERS_ENVELOPE))
             .select(
@@ -94,13 +80,7 @@ def stream_bronze_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "partition_str",
                 "offset_num",
             )
-            # materialize before the finally deletes the dirs it reads
-            # (ADVICE r6 scratch-leak pattern, applied to every stream query)
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_silver_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,27 +90,11 @@ def stream_silver_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert sink — and the resulting silver store must equal the pure-batch
     latest-wins state (same oracle as cdc_current_state modulo columns).
     Proves S7/S8/T1/T3/T4 end-to-end under real micro-batching."""
-    from ..schemas import ORDERS_ENVELOPE
-    from ..sources.cdc import orders_cdc_events, parse_envelope
     from ..streaming.pipeline import read_silver, silver_upsert_stream
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/silver_src_{run}"
-    dst = f"{root}/silver_out_{run}"
-    ckpt = f"{root}/silver_ckpt_{run}"
-    try:
+    with scratch(spark, "silver") as s:
         events = orders_cdc_events(spark, sf_dir)
-        # several files → several micro-batches under maxFilesPerTrigger
-        events.repartition(4).write.mode("overwrite").json(src)
-
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .json(src)
-        )
+        stream = s.replay(events, files=4, per_trigger=2, fmt="json")
         p = F.col("j.payload")
         flat = parse_envelope(stream, ORDERS_ENVELOPE).select(
             F.coalesce(p.after["o_orderkey"], p.before["o_orderkey"]).alias("o_orderkey"),
@@ -140,19 +104,13 @@ def stream_silver_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             p.source["ts_ms"].alias("ts_ms"),
             F.col("offset"),
         )
-        q = silver_upsert_stream(flat, dst, ckpt, keys=["o_orderkey"], available_now=True)
-        if not q.awaitTermination(300):
-            q.stop()  # don't leave a zombie stream behind the error
-            raise TimeoutError(
-                "stream did not finish in 300s — refusing to "
-                "return a partial result"
-            )
-        return read_silver(spark, dst).select(
+        dst = s.dir("out")
+        s.wait(silver_upsert_stream(
+            flat, dst, s.dir("ckpt"), keys=["o_orderkey"], available_now=True,
+        ))
+        return s.materialize(read_silver(spark, dst).select(
             "o_orderkey", "o_orderstatus", "o_totalprice", "ts_ms"
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        ))
 
 
 def cdc_replay_from_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,52 +151,17 @@ def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.stateful import stateful_dedup
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/state_src_{run}"
-    out = f"{root}/state_out_{run}"
-    ckpt = f"{root}/state_ckpt_{run}"
-
-    events = orders_cdc_events(spark, sf_dir).select(
-        F.get_json_object("key", "$.payload.o_orderkey").cast("long").alias("o_orderkey"),
-        "offset",
-    )
-    events.repartition(2).write.mode("overwrite").json(src)
-
-    schema = T.StructType(
-        [T.StructField("o_orderkey", T.LongType()), T.StructField("offset", T.LongType())]
-    )
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").json(src)
-    # the state store materializes one instance per shuffle partition per
-    # micro-batch — at harness scale that fixed overhead dominates, so run
-    # this query with a small state partition count (restored after; a real
-    # deployment sizes it to key cardinality instead)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stateful_dedup(stream, "o_orderkey", schema)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with scratch(spark, "state") as s:
+        events = orders_cdc_events(spark, sf_dir).select(
+            F.get_json_object("key", "$.payload.o_orderkey").cast("long").alias("o_orderkey"),
+            "offset",
         )
-        if not q.awaitTermination(300):
-            q.stop()  # don't leave a zombie stream behind the error
-            raise TimeoutError(
-                "stream did not finish in 300s — refusing to "
-                "return a partial result"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        return spark.read.parquet(out).select("o_orderkey").localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        schema = T.StructType(
+            [T.StructField("o_orderkey", T.LongType()), T.StructField("offset", T.LongType())]
+        )
+        stream = s.replay(events, files=2, per_trigger=1, fmt="json", schema=schema)
+        out = s.drain(stateful_dedup(stream, "o_orderkey", schema))
+        return s.materialize(spark.read.parquet(out).select("o_orderkey"))
 
 
 def stream_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,53 +204,46 @@ def stream_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute would count the late row — which is precisely what the
     constant pins.  The eviction-timing narrative stays in
     tests/test_lifecycle.py::test_late_event_dropped_after_eviction."""
-    import os as _os
-    import shutil as _sh
-
     from pyspark.sql import types as T
 
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/late_src_{run}"
-    out = f"{root}/late_out_{run}"
-    ckpt = f"{root}/late_ckpt_{run}"
     schema = T.StructType(
         [T.StructField("event_type", T.StringType()), T.StructField("ts", T.TimestampType())]
     )
+    with scratch(spark, "late") as s:
+        src = s.dir("src")
 
-    def _one_file(rows, name, mtime):
-        # pyarrow, not a Spark job, per 2-row file: the replay's cost is
-        # its 5 micro-batch triggers — don't add 4 write jobs on top
-        from datetime import datetime
+        def _one_file(rows, name, mtime):
+            # pyarrow, not a Spark job, per 2-row file: the replay's cost is
+            # its 5 micro-batch triggers — don't add 4 write jobs on top
+            from datetime import datetime
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+            import pyarrow as pa
+            import pyarrow.parquet as pq
 
-        _os.makedirs(src, exist_ok=True)
-        dst = _os.path.join(src, f"{name}.parquet")
-        table = pa.table(
-            {
-                "event_type": pa.array([e for e, _ in rows], pa.string()),
-                "ts": pa.array(
-                    [datetime.strptime(t, "%Y-%m-%d %H:%M:%S") for _, t in rows],
-                    pa.timestamp("us"),
-                ),
-            }
+            os.makedirs(src, exist_ok=True)
+            dst = os.path.join(src, f"{name}.parquet")
+            table = pa.table(
+                {
+                    "event_type": pa.array([e for e, _ in rows], pa.string()),
+                    "ts": pa.array(
+                        [datetime.strptime(t, "%Y-%m-%d %H:%M:%S") for _, t in rows],
+                        pa.timestamp("us"),
+                    ),
+                }
+            )
+            pq.write_table(table, dst)
+            os.utime(dst, (mtime, mtime))  # file source orders by mtime
+
+        now = 1_700_000_000
+        _one_file([("view", "2024-01-01 10:05:00"), ("view", "2024-01-01 10:40:00")],
+                  "b1", now)
+        _one_file([("view", "2024-01-01 14:00:00")], "b2", now + 60)
+        _one_file([("view", "2024-01-01 14:05:00")], "b3", now + 120)
+        _one_file(
+            [("view", "2024-01-01 10:45:00"),   # LATE: state evicted in t3
+             ("view", "2024-01-01 14:15:00")],  # on-time; window still open
+            "b4", now + 180,
         )
-        pq.write_table(table, dst)
-        _os.utime(dst, (mtime, mtime))  # file source orders by mtime
-
-    now = 1_700_000_000
-    _one_file([("view", "2024-01-01 10:05:00"), ("view", "2024-01-01 10:40:00")],
-              "b1", now)
-    _one_file([("view", "2024-01-01 14:00:00")], "b2", now + 60)
-    _one_file([("view", "2024-01-01 14:05:00")], "b3", now + 120)
-    _one_file(
-        [("view", "2024-01-01 10:45:00"),   # LATE: state evicted in t3
-         ("view", "2024-01-01 14:15:00")],  # on-time; window still open
-        "b4", now + 180,
-    )
-    try:
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -339,26 +255,7 @@ def stream_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                agg.writeStream.format("parquet")
-                .outputMode("append")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("late-event replay did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        return s.materialize(spark.read.parquet(s.drain(agg)))
 
 
 def silver_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,43 +270,26 @@ def silver_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each publish writes O(touched buckets) files and one manifest;
     the as-of read costs the same as a current read (manifest lookup +
     pruned file scan)."""
-    import shutil as _sh
+    from ..streaming.pipeline import read_silver, silver_versions
 
-    from ..streaming.pipeline import (
-        _publish_buckets,
-        _read_manifest,
-        read_silver,
-        silver_versions,
-    )
-
-    path = f"{tempfile.gettempdir()}/tt_store_{uuid.uuid4().hex[:12]}"
-    try:
-        base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    with scratch(spark, "tt") as s:
+        v1 = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_orderstatus"
         )
-        v1 = base.withColumn("__deleted", F.lit(False))
-        v2 = base.withColumn(
+        v2 = v1.withColumn(
             "o_orderstatus",
             F.when(F.col("o_orderkey") % 3 == 0, "U").otherwise(F.col("o_orderstatus")),
-        ).withColumn("__deleted", F.lit(False))
+        )
         v3 = v2.filter(F.col("o_orderkey") % 7 != 0)
         for state in (v1, v2, v3):
-            manifest = _read_manifest(path) or {
-                "version": 0, "n_buckets": 8, "files": [],
-            }
-            _publish_buckets(
-                state, path, ["o_orderkey"], manifest,
-                set(range(manifest["n_buckets"])),
-            )
+            path = s.publish(state, ["o_orderkey"])
         out = None
         for rank, v in enumerate(sorted(silver_versions(path)), 1):
             df = read_silver(spark, path, as_of_version=v).select(
                 F.lit(rank).alias("version_rank"), "o_orderkey", "o_orderstatus"
             )
             out = df if out is None else out.unionByName(df)
-        return out.localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
+        return s.materialize(out)
 
 
 def silver_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,25 +300,15 @@ def silver_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
     time travel — so one query value-checks the mutation semantics AND
     the audit path a destructive mutation needs.  Each mutation is one
     O(touched-buckets) versioned publish."""
-    import shutil as _sh
+    from ..streaming.pipeline import mutate_silver, read_silver, silver_versions
 
-    from ..streaming.pipeline import (
-        _publish_buckets,
-        _read_manifest,
-        mutate_silver,
-        read_silver,
-        silver_versions,
-    )
-
-    path = f"{tempfile.gettempdir()}/mut_store_{uuid.uuid4().hex[:12]}"
-    try:
-        base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            F.col("o_orderkey").alias("key"),
-            F.col("o_orderstatus").alias("status"),
-        ).withColumn("__deleted", F.lit(False))
-        _publish_buckets(
-            base, path, ["key"],
-            {"version": 0, "n_buckets": 8, "files": []}, set(range(8)),
+    with scratch(spark, "mut") as s:
+        path = s.publish(
+            spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+                F.col("o_orderkey").alias("key"),
+                F.col("o_orderstatus").alias("status"),
+            ),
+            ["key"],
         )
         v_base = silver_versions(path)[-1]
         mutate_silver(
@@ -452,9 +322,7 @@ def silver_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
         before = read_silver(spark, path, as_of_version=v_base).select(
             F.lit("before").alias("stage"), "key", "status"
         )
-        return final.unionByName(before).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
+        return s.materialize(final.unionByName(before))
 
 
 def silver_optimize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,25 +336,16 @@ def silver_optimize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the pre-optimize state via time travel, so one query
     value-checks the dedup semantics AND that the maintenance op kept
     the audit trail."""
-    import shutil as _sh
+    from ..streaming.pipeline import optimize_deduplicate, read_silver, silver_versions
 
-    from ..streaming.pipeline import (
-        _publish_buckets,
-        optimize_deduplicate,
-        read_silver,
-        silver_versions,
-    )
-
-    path = f"{tempfile.gettempdir()}/optdedup_store_{uuid.uuid4().hex[:12]}"
-    try:
-        base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            F.col("o_orderkey").alias("key"),
-            F.col("o_custkey").alias("custkey"),
-            F.col("o_orderstatus").alias("status"),
-        ).withColumn("__deleted", F.lit(False))
-        _publish_buckets(
-            base, path, ["key"],
-            {"version": 0, "n_buckets": 8, "files": []}, set(range(8)),
+    with scratch(spark, "optdedup") as s:
+        path = s.publish(
+            spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+                F.col("o_orderkey").alias("key"),
+                F.col("o_custkey").alias("custkey"),
+                F.col("o_orderstatus").alias("status"),
+            ),
+            ["key"],
         )
         v_base = silver_versions(path)[-1]
         optimize_deduplicate(spark, path, ["key"], ["custkey", "status"])
@@ -496,9 +355,7 @@ def silver_optimize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         before = read_silver(spark, path, as_of_version=v_base).select(
             F.lit("before").alias("stage"), "key", "custkey", "status"
         )
-        return after.unionByName(before).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
+        return s.materialize(after.unionByName(before))
 
 
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,64 +368,34 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     — each (window, type) key's final emission carries its total count.
     No watermark for the same finite-replay reason as stream_hourly_counts
     (arbitrary file order; a live deployment sets one to bound state)."""
-    import shutil as _sh
-
     from pyspark.sql import types as T
 
     from ..operators.upsert import latest_wins
     from ..sources.files import load_table
 
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/slide_src_{run}"
-    out = f"{root}/slide_out_{run}"
-    ckpt = f"{root}/slide_ckpt_{run}"
-    try:
+    with scratch(spark, "slide") as s:
         events = load_table(spark, sf_dir, "events").select("event_type", "ts")
-        events.repartition(4).write.mode("overwrite").parquet(src)
         schema = T.StructType(
             [T.StructField("event_type", T.StringType()),
              T.StructField("ts", events.schema["ts"].dataType)]
         )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-        )
+        stream = s.replay(events, files=4, per_trigger=2, schema=schema)
         agg = (
             stream.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
         )
+        out = s.dir("out")
 
         def sink(batch: DataFrame, batch_id: int) -> None:
             batch.withColumn("__bid", F.lit(batch_id)).write.mode("append").parquet(out)
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("sliding replay did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        s.drain(agg, sink, mode="update")
         emitted = spark.read.parquet(out)
         final = latest_wins(
             emitted, keys=["window_start", "event_type"], version_cols=["__bid"]
         )
-        return final.select(
-            "window_start", "event_type", "n_events"
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        return s.materialize(final.select("window_start", "event_type", "n_events"))
 
 
 def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -600,29 +427,33 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: session_window state is per (user, open session) — bounded by
     the watermark in a live deployment; one shuffle on user_id per
     trigger."""
-    import os as _os
-    import shutil as _sh
-
     from pyspark.sql import types as T
 
     from ..sources.files import load_table
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/sess_src_{run}"
-    out = f"{root}/sess_out_{run}"
-    ckpt = f"{root}/sess_ckpt_{run}"
 
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
     lo, hi = events.groupBy().agg(F.min("ts"), F.max("ts")).collect()[0]
     span_s = int((hi - lo).total_seconds()) + 1
     flush_delay_s = span_s + 3600  # past every session close + gap
 
-    try:
-        events.repartition(4).write.mode("overwrite").parquet(src)
+    with scratch(spark, "sess") as s:
+        schema = T.StructType(
+            [T.StructField("user_id", T.LongType()),
+             T.StructField("ts", events.schema["ts"].dataType)]
+        )
+        stream = (
+            s.replay(events, files=4, per_trigger=2, schema=schema)
+            # watermarks require TIMESTAMP (LTZ); the fixture is NTZ.
+            # Session tz is pinned UTC (session.py), so the cast — and the
+            # cast back on output — are wall-clock identities.
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+        )
+        # the stream lists its files when it starts: pin the fixture's
+        # mtimes and add the flush file (mtime order: flush LAST) first
+        src = s.dir("src")
         now = 1_700_000_000.0
-        for f in _os.listdir(src):
-            _os.utime(_os.path.join(src, f), (now, now))
+        for f in os.listdir(src):
+            os.utime(os.path.join(src, f), (now, now))
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -635,23 +466,10 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
                                pa.timestamp("us")),
             }
         )
-        fpath = _os.path.join(src, "zz_flush.parquet")
+        fpath = os.path.join(src, "zz_flush.parquet")
         pq.write_table(flush, fpath)
-        _os.utime(fpath, (now + 60, now + 60))  # mtime order: flush LAST
+        os.utime(fpath, (now + 60, now + 60))
 
-        schema = T.StructType(
-            [T.StructField("user_id", T.LongType()),
-             T.StructField("ts", events.schema["ts"].dataType)]
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-            # watermarks require TIMESTAMP (LTZ); the fixture is NTZ.
-            # Session tz is pinned UTC (session.py), so the cast — and the
-            # cast back on output — are wall-clock identities.
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
         agg = (
             stream.withWatermark("ts", f"{span_s} seconds")
             .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
@@ -662,33 +480,9 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        # streaming aggs bypass AQE: one state-store instance per shuffle
-        # partition per micro-batch — use a small state partition count at
-        # harness scale (restored after; production sizes it to key count)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                agg.writeStream.format("parquet")
-                .outputMode("append")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("session replay did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return (
-            spark.read.parquet(out)
-            .filter(F.col("user_id") >= 0)
-            .localCheckpoint(eager=True)
+        return s.materialize(
+            spark.read.parquet(s.drain(agg)).filter(F.col("user_id") >= 0)
         )
-    finally:
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,73 +503,53 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from ..operators.upsert import latest_wins
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/hourly_src_{run}"
-    out = f"{root}/hourly_out_{run}"
-    ckpt = f"{root}/hourly_ckpt_{run}"
-
     from ..sources.files import load_table
 
-    events = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
-    events.repartition(4).write.mode("overwrite").parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(src)
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_dec"),
+    with scratch(spark, "hourly") as s:
+        events = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
+        schema = T.StructType(
+            [
+                T.StructField("event_type", T.StringType()),
+                T.StructField("ts", T.TimestampType()),
+                T.StructField("value", T.DoubleType()),
+            ]
         )
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_dec")
-    )
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.withColumn("__bid", F.lit(batch_id)).write.mode("append").parquet(out)
-
-    # streaming aggs bypass AQE: one state-store instance per shuffle
-    # partition per micro-batch, so harness-scale runs use a small state
-    # partition count (restored after; production sizes it to key cardinality)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()  # don't leave a zombie stream behind the error
-            raise TimeoutError(
-                "stream did not finish in 300s — refusing to "
-                "return a partial result"
+        stream = s.replay(events, files=4, per_trigger=2, schema=schema)
+        agg = (
+            stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_dec"),
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    import shutil as _sh
+            .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_dec")
+        )
+        out = s.dir("out")
 
-    try:
+        def sink(batch: DataFrame, batch_id: int) -> None:
+            batch.withColumn("__bid", F.lit(batch_id)).write.mode("append").parquet(out)
+
+        s.drain(agg, sink, mode="update")
         emitted = spark.read.parquet(out)
         final = latest_wins(emitted, keys=["window_start", "event_type"], version_cols=["__bid"])
-        return final.select(
+        return s.materialize(final.select(
             "window_start",
             "event_type",
             "n_events",
             F.round(F.col("sum_dec").cast("double"), 2).alias("sum_value"),
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        ))
+
+
+def _summing_replay(s: Scratch, events: DataFrame, **sink_args) -> DataFrame:
+    """Replay ``events`` (4 files, 2 per trigger) through the aggregating
+    sink with ``sink_args`` and return the stored state."""
+    from ..streaming.pipeline import read_silver, silver_summing_stream
+
+    dst = s.dir("out")
+    s.wait(silver_summing_stream(
+        s.replay(events, files=4, per_trigger=2), dst, s.dir("ckpt"),
+        available_now=True, **sink_args,
+    ))
+    return read_silver(s.spark, dst)
 
 
 def stream_summing_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,49 +561,18 @@ def stream_summing_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     are carried as DECIMAL(30,2), which is also what makes the DuckDB
     oracle exact (a double sum would differ in the last bits by
     accumulation order)."""
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/summing_src_{run}"
-    dst = f"{root}/summing_out_{run}"
-    ckpt = f"{root}/summing_ckpt_{run}"
-    try:
+    with scratch(spark, "summing") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "user_id", "event_type", "value"
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["user_id", "event_type"], sum_cols=["value"],
         )
-        # streaming disables AQE, so the session's initialPartitionNum
-        # becomes the RAW shuffle width of every merge groupBy — shrink it
-        # for the replay (restored after; same pattern as
-        # stream_stateful_dedup)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["user_id", "event_type"],
-                sum_cols=["value"], available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("summing stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return read_silver(spark, dst).select(
+        return s.materialize(state.select(
             "user_id", "event_type",
             F.col("value").cast("double").alias("sum_value"),
             F.col("__n_rows").alias("n_rows"),
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        ))
 
 
 def stream_agg_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,49 +581,22 @@ def stream_agg_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``value`` per event_type).  Every op is associative+commutative, so
     the multi-micro-batch result must equal the whole-table GROUP BY —
     min/max are float-exact (no accumulation), the sum is exact decimal."""
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/aggst_src_{run}"
-    dst = f"{root}/aggst_out_{run}"
-    ckpt = f"{root}/aggst_ckpt_{run}"
-    try:
+    with scratch(spark, "aggst") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type", "value"
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"v_sum": ("value", "sum"),
+                      "v_min": ("value", "min"),
+                      "v_max": ("value", "max")},
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"v_sum": ("value", "sum"),
-                          "v_min": ("value", "min"),
-                          "v_max": ("value", "max")},
-                available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("agg stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return read_silver(spark, dst).select(
+        return s.materialize(state.select(
             "event_type",
             F.col("v_sum").cast("double").alias("v_sum"),
             "v_min", "v_max",
             F.col("__n_rows").alias("n_rows"),
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        ))
 
 
 def stream_agg_summap_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -891,16 +607,7 @@ def stream_agg_summap_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key union; exact decimal for the sums), and the final exploded
     (event_type, map-key) rows must equal the whole-table GROUP BY —
     proving the map states are insensitive to batch boundaries."""
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/summap_src_{run}"
-    dst = f"{root}/summap_out_{run}"
-    ckpt = f"{root}/summap_ckpt_{run}"
-    try:
+    with scratch(spark, "summap") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type",
             F.create_map(
@@ -909,42 +616,22 @@ def stream_agg_summap_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("all"), F.col("value"),
             ).alias("m"),
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"ms": ("m", "summap"), "mn": ("m", "minmap"),
+                      "mx": ("m", "maxmap")},
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"ms": ("m", "summap"), "mn": ("m", "minmap"),
-                          "mx": ("m", "maxmap")},
-                available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("summap stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         # the three maps share one key set by construction; explode one,
         # look the others up
-        return (
-            read_silver(spark, dst)
-            .select("event_type", "mn", "mx", F.explode("ms").alias("mk", "sv"))
+        return s.materialize(
+            state.select("event_type", "mn", "mx", F.explode("ms").alias("mk", "sv"))
             .select(
                 "event_type", "mk",
                 F.col("sv").cast("double").alias("mv_sum"),
                 F.element_at("mn", F.col("mk")).cast("double").alias("mv_min"),
                 F.element_at("mx", F.col("mk")).cast("double").alias("mv_max"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_agg_bitmap_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -956,57 +643,27 @@ def stream_agg_bitmap_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ordered (type_a, type_b) pair's intersection cardinality, the
     CH bitmapAnd use case — without touching the source table again.
     Oracle: whole-table COUNT(DISTINCT) self-join."""
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/bitmap_src_{run}"
-    dst = f"{root}/bitmap_out_{run}"
-    ckpt = f"{root}/bitmap_ckpt_{run}"
-    try:
+    with scratch(spark, "bitmap") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type", "user_id"
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"bm": ("user_id", "bitmap")},
-                available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("bitmap stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = read_silver(spark, dst).select("event_type", "bm")
+        states = _summing_replay(
+            s, events, keys=["event_type"], agg_spec={"bm": ("user_id", "bitmap")},
+        ).select("event_type", "bm")
         a = states.select(F.col("event_type").alias("type_a"),
                           F.col("bm").alias("bm_a"))
         b = states.select(F.col("event_type").alias("type_b"),
                           F.col("bm").alias("bm_b"))
         # one row per event_type pair (n_types² rows total — bounded by
         # the key cardinality, not the data); broadcast keeps it shuffle-free
-        return (
+        return s.materialize(
             a.join(F.broadcast(b))
             .select(
                 "type_a", "type_b",
                 F.size(F.array_intersect("bm_a", "bm_b")).cast("long")
                 .alias("n_common_users"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_agg_sortedarray_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1016,51 +673,22 @@ def stream_agg_sortedarray_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot change it; the sink's replay guard covers non-idempotence
     like sum's).  Hash-checked: the exploded (event_type, rank, value)
     rows must equal the whole-table per-type bottom-32."""
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/sarr_src_{run}"
-    dst = f"{root}/sarr_out_{run}"
-    ckpt = f"{root}/sarr_ckpt_{run}"
-    try:
+    with scratch(spark, "sarr") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type", "value"
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"sa": ("value", "sortedarray")}, sorted_k=32,
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"sa": ("value", "sortedarray")}, sorted_k=32,
-                available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("sortedarray stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return (
-            read_silver(spark, dst)
-            .select("event_type", F.posexplode("sa").alias("idx", "v"))
+        return s.materialize(
+            state.select("event_type", F.posexplode("sa").alias("idx", "v"))
             .select(
                 "event_type",
                 (F.col("idx") + 1).cast("int").alias("rnk"),
                 F.col("v").cast("double").alias("v"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_agg_argmax_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1070,50 +698,23 @@ def stream_agg_argmax_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative+commutative with a deterministic payload tie-break, so
     the multi-batch replay must equal the whole-table argmax/argmin
     exactly (the oracle's row_number with the same tie-break)."""
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/argm_src_{run}"
-    dst = f"{root}/argm_out_{run}"
-    ckpt = f"{root}/argm_ckpt_{run}"
-    try:
+    with scratch(spark, "argm") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type", "ts", "value"
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"last": ("value", "argmax:ts"),
+                      "first": ("value", "argmin:ts")},
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"last": ("value", "argmax:ts"),
-                          "first": ("value", "argmin:ts")},
-                available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("argmax stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return read_silver(spark, dst).select(
+        return s.materialize(state.select(
             "event_type",
             F.col("last.o").alias("last_ts"),
             F.col("last.v").alias("last_value"),
             F.col("first.o").alias("first_ts"),
             F.col("first.v").alias("first_value"),
             F.col("__n_rows").alias("n_rows"),
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        ))
 
 
 def stream_agg_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1132,47 +733,23 @@ def stream_agg_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     band at sf0.1's 1500 distinct — caught by the engine's own sf0.1
     re-verification, hence the wider sketch)."""
     from ..operators.sketch import kmv_estimate_expr
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
 
     kmv_k = 128
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/kmvst_src_{run}"
-    dst = f"{root}/kmvst_out_{run}"
-    ckpt = f"{root}/kmvst_ckpt_{run}"
-    try:
+    with scratch(spark, "kmvst") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type", "user_id"
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"u_sketch": ("user_id", "kmv")}, kmv_k=kmv_k,
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"u_sketch": ("user_id", "kmv")},
-                kmv_k=kmv_k, available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("kmv-state stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        state = read_silver(spark, dst)
         exact = (
             spark.read.parquet(f"{sf_dir}/events.parquet")
             .groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("exact_users"))
         )
         est = kmv_estimate_expr("u_sketch", kmv_k)
-        return (
+        return s.materialize(
             state.join(F.broadcast(exact), "event_type")
             .select(
                 "event_type",
@@ -1198,11 +775,7 @@ def stream_agg_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.abs(est / F.col("exact_users") - 1.0) <= 0.15
                 ).alias("accurate"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_agg_quantile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1220,40 +793,16 @@ def stream_agg_quantile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 hash makes the draw deterministic — measured max |err| 0.046 at
     BOTH sf0.01 and sf0.1, so the verdict is a fixture constant)."""
     from ..operators.sketch import qsample_quantile_expr
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
 
     k_sample = 512
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/qst_src_{run}"
-    dst = f"{root}/qst_out_{run}"
-    ckpt = f"{root}/qst_ckpt_{run}"
-    try:
+    with scratch(spark, "qst") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_id", "event_type", "value"
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"v_q": ("value", "qsample:event_id")},
-                qsample_k=k_sample, available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("qsample-state stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        state = read_silver(spark, dst).select(
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"v_q": ("value", "qsample:event_id")}, qsample_k=k_sample,
+        ).select(
             "event_type",
             qsample_quantile_expr("v_q", 0.5).alias("p50"),
             qsample_quantile_expr("v_q", 0.9).alias("p90"),
@@ -1273,7 +822,7 @@ def stream_agg_quantile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sample_full"),
             F.col("__n_rows").alias("n_events"),
         )
-        return (
+        return s.materialize(
             events.join(F.broadcast(state), "event_type")
             .groupBy("event_type", "p50", "p90", "sample_full", "n_events")
             .agg(
@@ -1287,11 +836,7 @@ def stream_agg_quantile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.abs(F.col("r50") - 0.5) <= 0.08).alias("accurate_p50"),
                 (F.abs(F.col("r90") - 0.9) <= 0.08).alias("accurate_p90"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_agg_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1309,47 +854,23 @@ def stream_agg_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``accurate``, 15%: measured |err| 0.5% at sf0.01 / 2.2% at sf0.1,
     linear-counting regime at both since m=4096 ≫ the user universe)."""
     from ..operators.sketch import hll_estimate_expr
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
 
     hll_p = 12
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/hllst_src_{run}"
-    dst = f"{root}/hllst_out_{run}"
-    ckpt = f"{root}/hllst_ckpt_{run}"
-    try:
+    with scratch(spark, "hllst") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type", "user_id"
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"u_hll": ("user_id", "hll")}, hll_p=hll_p,
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"u_hll": ("user_id", "hll")},
-                hll_p=hll_p, available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("hll-state stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        state = read_silver(spark, dst)
         exact = (
             spark.read.parquet(f"{sf_dir}/events.parquet")
             .groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("exact_users"))
         )
         est = hll_estimate_expr("u_hll", hll_p)
-        return (
+        return s.materialize(
             state.join(F.broadcast(exact), "event_type")
             .select(
                 "event_type",
@@ -1361,11 +882,7 @@ def stream_agg_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.abs(F.round(est, 0) / F.col("exact_users") - 1.0) <= 0.15
                 ).alias("accurate"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_projection_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1387,13 +904,6 @@ def stream_projection_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         silver_upsert_stream,
     )
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/spm_src_{run}"
-    dst = f"{root}/spm_out_{run}"
-    ckpt = f"{root}/spm_ckpt_{run}"
     schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -1403,7 +913,7 @@ def stream_projection_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("ts", T.LongType()),
         ]
     )
-    try:
+    with scratch(spark, "spm") as s:
         k = F.col("o_orderkey")
         base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             k, F.col("o_custkey"),
@@ -1413,28 +923,17 @@ def stream_projection_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         upd = base.filter(k % 3 == 0).withColumn(
             "price", F.col("price") + 100.0
         ).withColumn("op", F.lit("u")).withColumn("ts", F.lit(2).cast("long"))
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            for stage, df in (("b0", base), ("b1", upd)):
-                df.repartition(2).write.mode("overwrite").parquet(f"{src}/{stage}")
-                stream = (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(f"{src}/{stage}")
-                )
-                q = silver_upsert_stream(
-                    stream, dst, f"{ckpt}/{stage}", keys=["o_orderkey"],
-                    version_col="ts", available_now=True, n_buckets=8,
-                )
-                if not q.awaitTermination(300):
-                    q.stop()
-                    raise TimeoutError(f"stage {stage} did not finish in 300s")
-                if stage == "b0":
-                    add_projection(spark, dst, ["o_orderkey"], "by_cust",
-                                   ["o_custkey"])
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        dst = s.dir("out")
+        for stage, df in (("b0", base), ("b1", upd)):
+            stream = s.replay(df, files=2, per_trigger=1, schema=schema,
+                              name=f"src/{stage}")
+            s.wait(silver_upsert_stream(
+                stream, dst, s.dir(f"ckpt/{stage}"), keys=["o_orderkey"],
+                version_col="ts", available_now=True, n_buckets=8,
+            ))
+            if stage == "b0":
+                add_projection(spark, dst, ["o_orderkey"], "by_cust",
+                               ["o_custkey"])
         routed = read_silver_auto(
             spark, dst,
             where=(F.col("o_custkey") >= 400) & (F.col("o_custkey") < 500),
@@ -1442,13 +941,7 @@ def stream_projection_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         files = routed.inputFiles()
         if not files or not all("__proj_by_cust" in f for f in files):
             raise AssertionError("streamed store did not route to the projection")
-        return (
-            routed.select("o_orderkey", "o_custkey", "price")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        return s.materialize(routed.select("o_orderkey", "o_custkey", "price"))
 
 
 def stream_agg_topk_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1464,52 +957,23 @@ def stream_agg_topk_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_summing_ttl.py::test_topk_state_column_guarantees (they
     are approximate by construction, like CH topK, so no exact oracle
     can exist for them)."""
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/tkst_src_{run}"
-    dst = f"{root}/tkst_out_{run}"
-    ckpt = f"{root}/tkst_ckpt_{run}"
-    try:
+    with scratch(spark, "tkst") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type", (F.col("user_id") % 7).alias("u7")
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"tk": ("u7", "topk")}, topk_cap=16,
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"tk": ("u7", "topk")}, topk_cap=16,
-                available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("topk-state stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return (
-            read_silver(spark, dst)
-            .select("event_type", F.explode("tk").alias("e"))
+        return s.materialize(
+            state.select("event_type", F.explode("tk").alias("e"))
             .select(
                 "event_type",
                 F.col("e.item").alias("item"),
                 F.col("e.cnt").alias("cnt"),
                 F.col("e.err").alias("err"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def silver_projection_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1523,23 +987,17 @@ def silver_projection_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the closed form — proving the projection tracked the mutation
     atomically, not just the backfill."""
     from ..streaming.pipeline import (
-        _publish_buckets,
-        _read_manifest,
         add_projection,
         mutate_silver,
         read_silver_projection,
     )
 
-    import shutil as _sh
-
-    path = f"{tempfile.gettempdir()}/proj_store_{uuid.uuid4().hex[:12]}"
-    try:
-        base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            "o_orderkey", "o_custkey", "o_orderstatus"
-        ).withColumn("__deleted", F.lit(False))
-        _publish_buckets(
-            base, path, ["o_orderkey"],
-            {"version": 0, "n_buckets": 8, "files": []}, set(range(8)),
+    with scratch(spark, "proj") as s:
+        path = s.publish(
+            spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+                "o_orderkey", "o_custkey", "o_orderstatus"
+            ),
+            ["o_orderkey"],
         )
         add_projection(spark, path, ["o_orderkey"], "by_cust", ["o_custkey"])
         mutate_silver(
@@ -1547,14 +1005,11 @@ def silver_projection_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             where=F.col("o_orderkey") % 3 == 0,
             set_exprs={"o_orderstatus": F.lit("U")},
         )
-        return (
+        return s.materialize(
             read_silver_projection(spark, path, "by_cust")
             .filter((F.col("o_custkey") >= 100) & (F.col("o_custkey") < 200))
             .select("o_orderkey", "o_custkey", "o_orderstatus")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
 
 
 def silver_projection_route(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1569,23 +1024,14 @@ def silver_projection_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing regression fails the oracle run, not just a unit test.
     Values must equal the primary-path closed form exactly (the routed
     read is an access-path choice, never a semantic one)."""
-    from ..streaming.pipeline import (
-        _publish_buckets,
-        add_projection,
-        mutate_silver,
-        read_silver_auto,
-    )
+    from ..streaming.pipeline import add_projection, mutate_silver, read_silver_auto
 
-    import shutil as _sh
-
-    path = f"{tempfile.gettempdir()}/projr_store_{uuid.uuid4().hex[:12]}"
-    try:
-        base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            "o_orderkey", "o_custkey", "o_orderstatus"
-        ).withColumn("__deleted", F.lit(False))
-        _publish_buckets(
-            base, path, ["o_orderkey"],
-            {"version": 0, "n_buckets": 8, "files": []}, set(range(8)),
+    with scratch(spark, "projr") as s:
+        path = s.publish(
+            spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+                "o_orderkey", "o_custkey", "o_orderstatus"
+            ),
+            ["o_orderkey"],
         )
         add_projection(spark, path, ["o_orderkey"], "by_cust", ["o_custkey"])
         mutate_silver(
@@ -1604,12 +1050,7 @@ def silver_projection_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         pfiles = primary.inputFiles()
         if not pfiles or any("__proj_" in f for f in pfiles):
             raise AssertionError("orderkey filter left the primary layout")
-        return (
-            routed.select("o_orderkey", "o_custkey", "o_orderstatus")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
+        return s.materialize(routed.select("o_orderkey", "o_custkey", "o_orderstatus"))
 
 
 def silver_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1623,43 +1064,25 @@ def silver_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     inserted key that is also ≡0 (mod 7) was never live in v1 and got
     deleted in v2 → absent from the diff entirely; an inserted ≡0
     (mod 3) key reads as inserted, not updated)."""
-    from ..streaming.pipeline import _publish_buckets, _read_manifest, diff_silver
+    from ..streaming.pipeline import diff_silver, silver_versions
 
-    import shutil as _sh
-
-    path = f"{tempfile.gettempdir()}/diff_store_{uuid.uuid4().hex[:12]}"
-    try:
+    with scratch(spark, "diff") as s:
         k = F.col("o_orderkey")
         base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_orderstatus"
         )
-        v1 = base.filter(k % 11 != 1).withColumn("__deleted", F.lit(False))
-        v2 = (
-            base.withColumn(
-                "o_orderstatus",
-                F.when(k % 3 == 0, "U").otherwise(F.col("o_orderstatus")),
-            )
-            .filter(k % 7 != 0)
-            .withColumn("__deleted", F.lit(False))
-        )
+        v1 = base.filter(k % 11 != 1)
+        v2 = base.withColumn(
+            "o_orderstatus",
+            F.when(k % 3 == 0, "U").otherwise(F.col("o_orderstatus")),
+        ).filter(k % 7 != 0)
         for state in (v1, v2):
-            manifest = _read_manifest(path) or {
-                "version": 0, "n_buckets": 8, "files": [],
-            }
-            _publish_buckets(
-                state, path, ["o_orderkey"], manifest,
-                set(range(manifest["n_buckets"])),
-            )
-        from ..streaming.pipeline import silver_versions
-
+            path = s.publish(state, ["o_orderkey"])
         first = sorted(silver_versions(path))[0]
-        return (
+        return s.materialize(
             diff_silver(spark, path, ["o_orderkey"], from_version=first)
             .select("o_orderkey", "change")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
 
 
 def stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1674,14 +1097,7 @@ def stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Closed form over orders — exactly what the oracle states."""
     from ..streaming.pipeline import read_silver, silver_upsert_stream
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src1, src2 = f"{root}/sev_src1_{run}", f"{root}/sev_src2_{run}"
-    dst = f"{root}/sev_out_{run}"
-    ck1, ck2 = f"{root}/sev_ck1_{run}", f"{root}/sev_ck2_{run}"
-    try:
+    with scratch(spark, "sev") as s:
         k = F.col("o_orderkey")
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", F.col("o_totalprice").alias("price")
@@ -1695,36 +1111,19 @@ def stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("u").alias("op"), F.lit(2).cast("long").alias("ts_ms"),
             k.alias("offset"), F.lit("web").alias("channel"),
         )
-        phase1.repartition(4).write.mode("overwrite").json(src1)
-        phase2.repartition(2).write.mode("overwrite").json(src2)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            for src, ck, schema in (
-                (src1, ck1, phase1.schema),
-                (src2, ck2, phase2.schema),
-            ):
-                stream = (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", "2").json(src)
-                )
-                q = silver_upsert_stream(
-                    stream, dst, ck, keys=["o_orderkey"],
-                    version_col="ts_ms", available_now=True,
-                )
-                if not q.awaitTermination(300):
-                    q.stop()
-                    raise TimeoutError("schema-evolution stream did not finish")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return read_silver(spark, dst).select(
+        dst = s.dir("out")
+        for phase, (df, files) in enumerate(((phase1, 4), (phase2, 2)), 1):
+            stream = s.replay(df, files=files, per_trigger=2, fmt="json",
+                              name=f"src{phase}")
+            s.wait(silver_upsert_stream(
+                stream, dst, s.dir(f"ck{phase}"), keys=["o_orderkey"],
+                version_col="ts_ms", available_now=True,
+            ))
+        return s.materialize(read_silver(spark, dst).select(
             "o_orderkey",
             F.col("price").cast("double").alias("price"),
             "channel",
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src1, src2, dst, ck1, ck2):
-            _sh.rmtree(d, ignore_errors=True)
+        ))
 
 
 def silver_ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1735,12 +1134,9 @@ def silver_ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity as one committed version — old mass is preserved at
     coarser keys, not deleted.  The post-rollup state must equal the
     closed form: day-aggregated before the cutoff, hour rows after."""
-    from ..streaming.pipeline import _publish_buckets, read_silver, ttl_rollup_silver
+    from ..streaming.pipeline import read_silver, ttl_rollup_silver
 
-    import shutil as _sh
-
-    path = f"{tempfile.gettempdir()}/ttlru_store_{uuid.uuid4().hex[:12]}"
-    try:
+    with scratch(spark, "ttlru") as s:
         hours = (
             spark.read.parquet(f"{sf_dir}/events.parquet")
             .groupBy(
@@ -1752,23 +1148,19 @@ def silver_ttl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("decimal(30,2)").alias("v"),
                 F.count(F.lit(1)).alias("__n_rows"),
             )
-            .withColumn("__deleted", F.lit(False))
         )
-        manifest = {"version": 0, "n_buckets": 8, "files": []}
-        _publish_buckets(hours, path, ["ts", "event_type"], manifest, set(range(8)))
+        path = s.publish(hours, ["ts", "event_type"])
         ttl_rollup_silver(
             spark, path, ["ts", "event_type"], "ts",
             F.lit("2024-01-15").cast("timestamp_ntz"),
             coarsen={"ts": lambda c: F.date_trunc("day", c)},
             agg_spec={"v": "sum"},
         )
-        return read_silver(spark, path).select(
+        return s.materialize(read_silver(spark, path).select(
             "ts", "event_type",
             F.col("v").cast("double").alias("v"),
             F.col("__n_rows").alias("n_rows"),
-        ).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
+        ))
 
 
 def _signed_order_stream(spark: SparkSession, sf_dir: str, versioned: bool):
@@ -1810,46 +1202,22 @@ def _signed_order_stream(spark: SparkSession, sf_dir: str, versioned: bool):
 def _run_collapsing(spark: SparkSession, sf_dir: str, versioned: bool) -> DataFrame:
     from ..streaming.pipeline import read_collapsed, silver_collapsing_stream
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/clps_src_{run}"
-    dst = f"{root}/clps_out_{run}"
-    ckpt = f"{root}/clps_ckpt_{run}"
-    try:
+    with scratch(spark, "clps") as s:
         signed = _signed_order_stream(spark, sf_dir, versioned)
         # repartition SCATTERS inserts/cancels across files, so cancels
         # routinely land in EARLIER micro-batches than their +1 rows —
         # the replay is a genuine out-of-order stress, not a politely
         # ordered log
-        signed.repartition(6).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(signed.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_collapsing_stream(
-                stream, dst, ckpt, keys=["k"],
-                **({"version_col": "ver"} if versioned else {"seq_col": "seq"}),
-                available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("collapsing stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return read_collapsed(
+        stream = s.replay(signed, files=6, per_trigger=2)
+        dst = s.dir("out")
+        s.wait(silver_collapsing_stream(
+            stream, dst, s.dir("ckpt"), keys=["k"],
+            **({"version_col": "ver"} if versioned else {"seq_col": "seq"}),
+            available_now=True,
+        ))
+        return s.materialize(read_collapsed(
             spark, dst, keys=["k"], version_col="ver" if versioned else None
-        ).select(
-            "k", "price", F.col("__sign_net").alias("sign_net")
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        ).select("k", "price", F.col("__sign_net").alias("sign_net")))
 
 
 def stream_txn_consistent_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1877,17 +1245,11 @@ def stream_txn_consistent_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import (
         _read_manifest,
         read_silver,
+        read_txn_pending,
         silver_txn_upsert_stream,
     )
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/txn_src_{run}"
-    dst = f"{root}/txn_out_{run}"
-    ckpt = f"{root}/txn_ckpt_{run}"
-    try:
+    with scratch(spark, "txn") as s:
         k = F.col("o_orderkey")
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_totalprice"
@@ -1912,55 +1274,37 @@ def stream_txn_consistent_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("txn_order", k)
             .withColumn("txn_total", F.count(F.lit(1)).over(w))
         )
+        # closed-form txn → keys map (both waves; key sets disjoint)
+        txn_keys = signed.select("txn_id", "o_orderkey")
+        dst = s.dir("out")
         for stage in range(3):
             # abs(): the delete wave's keys are negated, and Spark's %
             # keeps the dividend's sign — without abs they'd all pile
             # into one stage (or none)
-            signed.filter(F.abs(k) % 3 == stage).repartition(2).write.mode(
-                "overwrite"
-            ).parquet(f"{src}/s{stage}")
-
-        # closed-form txn → keys map (both waves; key sets disjoint)
-        txn_keys = signed.select("txn_id", "o_orderkey")
-
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            for stage in range(3):
-                stream = (
-                    spark.readStream.schema(signed.schema)
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(f"{src}/s{stage}")
+            stream = s.replay(signed.filter(F.abs(k) % 3 == stage), files=2,
+                              per_trigger=1, name=f"src/s{stage}")
+            s.wait(silver_txn_upsert_stream(
+                stream, dst, s.dir(f"ckpt/s{stage}"), keys=["o_orderkey"],
+                version_col="ts", available_now=True, n_buckets=8,
+            ))
+            if _read_manifest(dst) is None:
+                continue  # nothing released yet — trivially atomic
+            applied = read_silver(spark, dst, include_deleted=True).select(
+                "o_orderkey"
+            )
+            status = (
+                txn_keys.join(
+                    applied.withColumn("__hit", F.lit(1)), "o_orderkey", "left"
                 )
-                q = silver_txn_upsert_stream(
-                    stream, dst, f"{ckpt}/s{stage}", keys=["o_orderkey"],
-                    version_col="ts", available_now=True, n_buckets=8,
+                .groupBy("txn_id")
+                .agg(F.sum("__hit").alias("n_hit"), F.count(F.lit(1)).alias("n"))
+                .filter(F.col("n_hit").isNotNull() & (F.col("n_hit") != F.col("n")))
+            )
+            torn = status.count()
+            if torn:
+                raise AssertionError(
+                    f"stage {stage}: {torn} transactions partially applied"
                 )
-                if not q.awaitTermination(300):
-                    q.stop()
-                    raise TimeoutError(f"txn stage {stage} did not finish in 300s")
-                if _read_manifest(dst) is None:
-                    continue  # nothing released yet — trivially atomic
-                applied = read_silver(spark, dst, include_deleted=True).select(
-                    "o_orderkey"
-                )
-                status = (
-                    txn_keys.join(
-                        applied.withColumn("__hit", F.lit(1)), "o_orderkey", "left"
-                    )
-                    .groupBy("txn_id")
-                    .agg(F.sum("__hit").alias("n_hit"), F.count(F.lit(1)).alias("n"))
-                    .filter(F.col("n_hit").isNotNull() & (F.col("n_hit") != F.col("n")))
-                )
-                torn = status.count()
-                if torn:
-                    raise AssertionError(
-                        f"stage {stage}: {torn} transactions partially applied"
-                    )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        from ..streaming.pipeline import read_txn_pending
-
         n_pending = read_txn_pending(spark, dst + "_txn_pending").count()
         if n_pending:
             raise AssertionError(f"{n_pending} rows never released from pending")
@@ -1969,17 +1313,12 @@ def stream_txn_consistent_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_expected = orders.filter(k % 7 == 0).count()
         if n_tombs != n_expected:
             raise AssertionError(f"delete wave: {n_tombs} tombstones, expected {n_expected}")
-        return (
-            read_silver(spark, dst)
-            .select(
+        return s.materialize(
+            read_silver(spark, dst).select(
                 "o_orderkey",
                 F.col("o_totalprice").cast("double").alias("o_totalprice"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt, dst + "_txn_pending"):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_txn_multi_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2017,23 +1356,15 @@ def stream_txn_multi_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         silver_txn_multi_upsert_stream,
     )
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/txnm_src_{run}"
-    opath = f"{root}/txnm_orders_{run}"
-    lpath = f"{root}/txnm_li_{run}"
-    ppath = f"{root}/txnm_pend_{run}"
-    ckpt = f"{root}/txnm_ckpt_{run}"
-    stores = {
-        "orders": {"path": opath, "keys": ["ok"], "version_col": "ts",
-                   "columns": ["ok", "oprice", "ts"]},
-        "lineitem": {"path": lpath, "keys": ["lk", "ln"],
-                     "version_col": "ts",
-                     "columns": ["lk", "ln", "lqty", "ts"]},
-    }
-    try:
+    with scratch(spark, "txnm") as s:
+        opath, lpath = s.dir("orders"), s.dir("li")
+        stores = {
+            "orders": {"path": opath, "keys": ["ok"], "version_col": "ts",
+                       "columns": ["ok", "oprice", "ts"]},
+            "lineitem": {"path": lpath, "keys": ["lk", "ln"],
+                         "version_col": "ts",
+                         "columns": ["lk", "ln", "lqty", "ts"]},
+        }
         k = F.col("o_orderkey")
         orders = (
             spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -2093,10 +1424,6 @@ def stream_txn_multi_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.coalesce(F.col("ln"), F.lit(0))
             + F.when(F.col("ts") == 2, 2).otherwise(0)
         ) % 3
-        for stage in range(3):
-            signed.filter(stage_expr == stage).repartition(2).write.mode(
-                "overwrite"
-            ).parquet(f"{src}/s{stage}")
 
         # closed-form per-order expectation for the atomicity probe
         exp = (
@@ -2114,72 +1441,61 @@ def stream_txn_multi_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "mln", "qm")
         ).localCheckpoint(eager=True)
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            for stage in range(3):
-                stream = (
-                    spark.readStream.schema(signed.schema)
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(f"{src}/s{stage}")
+        for stage in range(3):
+            stream = s.replay(signed.filter(stage_expr == stage), files=2,
+                              per_trigger=1, name=f"src/s{stage}")
+            s.wait(silver_txn_multi_upsert_stream(
+                stream, stores, s.dir(f"ckpt/s{stage}"), pending_path=s.dir("pend"),
+                available_now=True, n_buckets=8,
+            ))
+            o_now = (
+                read_silver(spark, opath).select("ok", "oprice")
+                if _read_manifest(opath) is not None
+                else spark.createDataFrame([], "ok long, oprice double")
+            )
+            l_now = (
+                read_silver(spark, lpath).select("lk", "ln", "lqty")
+                if _read_manifest(lpath) is not None
+                else spark.createDataFrame(
+                    [], "lk long, ln long, lqty double"
                 )
-                q = silver_txn_multi_upsert_stream(
-                    stream, stores, f"{ckpt}/s{stage}", pending_path=ppath,
-                    available_now=True, n_buckets=8,
+            )
+            l_agg = l_now.groupBy(F.col("lk").alias("k")).agg(
+                F.count(F.lit(1)).alias("dp"),
+            )
+            status = (
+                exp.join(o_now.withColumnRenamed("ok", "k"), "k", "left")
+                .join(l_agg, "k", "left")
+                .join(
+                    l_now.select(
+                        F.col("lk").alias("k"),
+                        F.col("ln").alias("mln"),
+                        F.col("lqty").alias("got_qm"),
+                    ),
+                    ["k", "mln"], "left",
                 )
-                if not q.awaitTermination(300):
-                    q.stop()
-                    raise TimeoutError(f"txn-multi stage {stage} timed out")
-                o_now = (
-                    read_silver(spark, opath).select("ok", "oprice")
-                    if _read_manifest(opath) is not None
-                    else spark.createDataFrame([], "ok long, oprice double")
+                .withColumn("dp", F.coalesce("dp", F.lit(0)))
+            )
+            hdr = F.col("oprice").isNotNull()
+            doubled = hdr & (F.col("oprice") == 2 * F.col("p"))
+            bumped = F.col("got_qm").isNotNull() & (
+                F.col("got_qm") == F.col("qm") + 100
+            )
+            pairing = doubled == bumped
+            legal = (
+                (~hdr & (F.col("dp") == 0))
+                | (hdr & (F.col("ndet") == 0) & (F.col("dp") == 0))
+                | (hdr & (F.col("dp") == F.col("ndet")) & pairing)
+                | (hdr & (F.col("dp") == 1)
+                   & F.col("got_qm").isNotNull() & pairing)
+            )
+            torn = status.filter(~legal).count()
+            if torn:
+                raise AssertionError(
+                    f"stage {stage}: {torn} orders with cross-store "
+                    "partially-applied transactions"
                 )
-                l_now = (
-                    read_silver(spark, lpath).select("lk", "ln", "lqty")
-                    if _read_manifest(lpath) is not None
-                    else spark.createDataFrame(
-                        [], "lk long, ln long, lqty double"
-                    )
-                )
-                l_agg = l_now.groupBy(F.col("lk").alias("k")).agg(
-                    F.count(F.lit(1)).alias("dp"),
-                )
-                status = (
-                    exp.join(o_now.withColumnRenamed("ok", "k"), "k", "left")
-                    .join(l_agg, "k", "left")
-                    .join(
-                        l_now.select(
-                            F.col("lk").alias("k"),
-                            F.col("ln").alias("mln"),
-                            F.col("lqty").alias("got_qm"),
-                        ),
-                        ["k", "mln"], "left",
-                    )
-                    .withColumn("dp", F.coalesce("dp", F.lit(0)))
-                )
-                hdr = F.col("oprice").isNotNull()
-                doubled = hdr & (F.col("oprice") == 2 * F.col("p"))
-                bumped = F.col("got_qm").isNotNull() & (
-                    F.col("got_qm") == F.col("qm") + 100
-                )
-                pairing = doubled == bumped
-                legal = (
-                    (~hdr & (F.col("dp") == 0))
-                    | (hdr & (F.col("ndet") == 0) & (F.col("dp") == 0))
-                    | (hdr & (F.col("dp") == F.col("ndet")) & pairing)
-                    | (hdr & (F.col("dp") == 1)
-                       & F.col("got_qm").isNotNull() & pairing)
-                )
-                torn = status.filter(~legal).count()
-                if torn:
-                    raise AssertionError(
-                        f"stage {stage}: {torn} orders with cross-store "
-                        "partially-applied transactions"
-                    )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if read_txn_pending(spark, ppath).count():
+        if read_txn_pending(spark, s.dir("pend")).count():
             raise AssertionError("rows never released from pending")
         o_out = read_silver(spark, opath).select(
             F.lit("orders").alias("store"), F.col("ok").alias("k1"),
@@ -2189,10 +1505,7 @@ def stream_txn_multi_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("lineitem").alias("store"), F.col("lk").alias("k1"),
             F.col("ln").alias("k2"), F.col("lqty").alias("val"),
         )
-        return o_out.unionByName(l_out).localCheckpoint(eager=True)
-    finally:
-        for d in (src, opath, lpath, ppath, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        return s.materialize(o_out.unionByName(l_out))
 
 
 def stream_collapsing_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2222,27 +1535,23 @@ def silver_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form survivor set; expiry is tombstones, so the pre-TTL state
     stays reachable by time travel (lifecycle-tested in
     tests/test_time_travel.py)."""
-    from ..streaming.pipeline import _publish_buckets, read_silver, ttl_silver
+    from ..streaming.pipeline import read_silver, ttl_silver
 
-    import shutil as _sh
-
-    path = f"{tempfile.gettempdir()}/ttl_store_{uuid.uuid4().hex[:12]}"
-    try:
-        base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            "o_orderkey", "o_orderdate", "o_totalprice"
-        ).withColumn("__deleted", F.lit(False))
-        manifest = {"version": 0, "n_buckets": 8, "files": []}
-        _publish_buckets(base, path, ["o_orderkey"], manifest, set(range(8)))
+    with scratch(spark, "ttl") as s:
+        path = s.publish(
+            spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+                "o_orderkey", "o_orderdate", "o_totalprice"
+            ),
+            ["o_orderkey"],
+        )
         ttl_silver(
             spark, path, ["o_orderkey"], "o_orderdate",
             F.lit("1997-01-01").cast("timestamp"),
         )
-        return read_silver(spark, path).select(
+        return s.materialize(read_silver(spark, path).select(
             "o_orderkey", "o_orderdate",
             F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        ).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(path, ignore_errors=True)
+        ))
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2258,16 +1567,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered rows outside the join window)."""
     from pyspark.sql import types as T
 
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/ssjoin_src_{run}"
-    out = f"{root}/ssjoin_out_{run}"
-    ckpt = f"{root}/ssjoin_ckpt_{run}"
-
     from ..sources.files import load_table
-
-    events = load_table(spark, sf_dir, "events").select("event_id", "event_type", "user_id", "ts")
-    events.repartition(4).write.mode("overwrite").parquet(src)
 
     schema = T.StructType(
         [
@@ -2277,52 +1577,26 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("ts", T.TimestampType()),
         ]
     )
-
-    def stream():
-        return spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(src)
-
-    purchases = (
-        stream().filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("purchase_ts"))
-    )
-    clicks = (
-        stream().filter(F.col("event_type") == "click")
-        .select(F.col("event_id").alias("click_id"), F.col("user_id").alias("c_user_id"), F.col("ts").alias("click_ts"))
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "user_id = c_user_id AND "
-            "click_ts BETWEEN purchase_ts - INTERVAL 1 HOUR AND purchase_ts"
-        ),
-        "inner",
-    ).select("purchase_id", "click_id", "user_id")
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with scratch(spark, "ssjoin") as s:
+        events = load_table(spark, sf_dir, "events").select("event_id", "event_type", "user_id", "ts")
+        stream = s.replay(events, files=4, per_trigger=2, schema=schema)
+        purchases = (
+            stream.filter(F.col("event_type") == "purchase")
+            .select(F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("purchase_ts"))
         )
-        if not q.awaitTermination(300):
-            q.stop()  # don't leave a zombie stream behind the error
-            raise TimeoutError(
-                "stream did not finish in 300s — refusing to "
-                "return a partial result"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    import shutil as _sh
-
-    try:
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(F.col("event_id").alias("click_id"), F.col("user_id").alias("c_user_id"), F.col("ts").alias("click_ts"))
+        )
+        joined = purchases.join(
+            clicks,
+            F.expr(
+                "user_id = c_user_id AND "
+                "click_ts BETWEEN purchase_ts - INTERVAL 1 HOUR AND purchase_ts"
+            ),
+            "inner",
+        ).select("purchase_id", "click_id", "user_id")
+        return s.materialize(spark.read.parquet(s.drain(joined)))
 
 
 def _write_fixture_segments(df: DataFrame, encode_segment, n_segments: int = 4) -> None:
@@ -2370,8 +1644,6 @@ def object_store_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     row restated from orders arithmetic."""
     from ..sources.avro import avro_ocf_encode, read_avro
 
-    import shutil as _sh
-
     schema = {
         "type": "record", "name": "order", "fields": [
             {"name": "o_orderkey", "type": "long"},
@@ -2381,10 +1653,9 @@ def object_store_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       "symbols": ["a", "b", "c"]}},
         ],
     }
-    src = f"{tempfile.gettempdir()}/avro_src_{uuid.uuid4().hex[:12]}"
-    try:
-        os_mod = __import__("os")
-        os_mod.makedirs(src, exist_ok=True)
+    with scratch(spark, "avro") as s:
+        src = s.dir("src")
+        os.makedirs(src, exist_ok=True)
 
         def encode_segment(seg: int, rows: list[dict]) -> None:
             recs = []
@@ -2407,9 +1678,7 @@ def object_store_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_orderkey", "o_orderstatus", "o_totalprice"),
             encode_segment,
         )
-        return read_avro(spark, src).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(src, ignore_errors=True)
+        return s.materialize(read_avro(spark, src))
 
 
 def object_store_avro_registry_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2485,10 +1754,8 @@ def object_store_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Typed plane matches the Avro fixture: nullable union column
     (price NULL for keys ≡0 mod 11), enum-ish kind from key mod 3.
     Full value oracle: every row restated from orders arithmetic."""
-    import shutil as _sh
-
-    src = f"{tempfile.gettempdir()}/orc_src_{uuid.uuid4().hex[:12]}"
-    try:
+    with scratch(spark, "orc") as s:
+        src = s.dir("src")
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
         k = F.col("o_orderkey")
         typed = orders.select(
@@ -2506,9 +1773,7 @@ def object_store_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("compression", "zlib")
             .orc(src)
         )
-        return spark.read.orc(src).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(src, ignore_errors=True)
+        return s.materialize(spark.read.orc(src))
 
 
 def object_store_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2529,13 +1794,10 @@ def object_store_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture."""
     from ..sources.warc import read_warc, warc_encode_segment
 
-    import shutil as _sh
-
-    src = f"{tempfile.gettempdir()}/warc_src_{uuid.uuid4().hex[:12]}"
     http_head = b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n"
-    try:
-        os_mod = __import__("os")
-        os_mod.makedirs(src, exist_ok=True)
+    with scratch(spark, "warc") as s:
+        src = s.dir("src")
+        os.makedirs(src, exist_ok=True)
 
         def encode_segment(seg: int, rows: list[dict]) -> None:
             recs: list[tuple[dict, bytes]] = [(
@@ -2578,7 +1840,7 @@ def object_store_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         resp = read_warc(spark, src).filter(F.col("warc_type") == "response")
         txt = F.col("payload").cast("string")
         body = F.element_at(F.split(txt, "\\r\\n\\r\\n", 2), 2)
-        return (
+        return s.materialize(
             resp.select(
                 F.regexp_extract("target_uri", r"/doc/(\d+)$", 1)
                 .cast("long").alias("doc_id"),
@@ -2589,10 +1851,76 @@ def object_store_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.length(body).cast("long").alias("n_body_chars"),
                 F.sha2(body, 256).alias("body_sha"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        _sh.rmtree(src, ignore_errors=True)
+
+
+#: the snapshot signal's watermark version in the cdc_*snapshot* schedule
+_SNAPSHOT_W = 5_000_000
+
+
+def _snapshot_schedule(spark: SparkSession, sf_dir: str):
+    """The adversarial schedule shared by the single-table snapshot
+    queries → (seed, mid, table_truth).  ``seed``: only odd keys ever got
+    a 'c' (ts 1e6); keys ≡0 mod 3 get a +100 'U' update below the
+    watermark, keys ≡0 mod 9 a +70 'V' update after it.  ``mid`` lands
+    during the snapshot: +300 'X' updates for keys ≡0 mod 4 (ts 7e6+k)
+    and deletes for keys ≡0 mod 5 (ts 7.5e6+k).  ``table_truth`` is the
+    table as of the watermark: base plus the mod-3 update."""
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        "o_orderkey", "o_orderstatus",
+        F.col("o_totalprice").cast("double").alias("o_totalprice"),
+    )
+    k = F.col("o_orderkey")
+    base = F.col("o_totalprice")
+
+    def ev(df, status, price, op, ts, slot):
+        return df.select(
+            k.alias("o_orderkey"),
+            status.alias("o_orderstatus"),
+            price.cast("double").alias("o_totalprice"),
+            F.lit(op).alias("op"),
+            ts.cast("long").alias("ts_ms"),
+            (k * 10 + slot).cast("long").alias("offset"),
+        )
+
+    seed = (
+        ev(orders.filter(k % 2 == 1), F.col("o_orderstatus"), base,
+           "c", F.lit(1_000_000), 0)
+        .unionByName(ev(orders.filter(k % 3 == 0), F.lit("U"),
+                        base + 100, "u", F.lit(2_000_000) + k % 1_000_000, 1))
+        .unionByName(ev(orders.filter(k % 9 == 0), F.lit("V"),
+                        base + 170, "u", F.lit(6_000_000) + k, 2))
+    )
+    mid = (
+        ev(orders.filter(k % 4 == 0), F.lit("X"),
+           base + F.when(k % 3 == 0, 100).otherwise(0) + 300,
+           "u", F.lit(7_000_000) + k, 3)
+        .unionByName(ev(orders.filter(k % 5 == 0),
+                        F.lit(None).cast("string"),
+                        F.lit(None).cast("double"),
+                        "d", F.lit(7_500_000) + k, 4))
+    )
+    table_truth = orders.select(
+        "o_orderkey",
+        F.when(k % 3 == 0, F.lit("U")).otherwise(
+            F.col("o_orderstatus")).alias("o_orderstatus"),
+        (base + F.when(k % 3 == 0, 100).otherwise(0))
+        .cast("double").alias("o_totalprice"),
+    )
+    return seed, mid, table_truth
+
+
+def _stream_merge(s: Scratch, events: DataFrame, tag: str) -> None:
+    """Merge one change batch into the run's ``out`` store as a
+    one-trigger stream."""
+    from ..streaming.pipeline import silver_upsert_stream
+
+    stream = s.replay(events, files=2, per_trigger=2, fmt="json",
+                      name=f"src/{tag}")
+    s.wait(silver_upsert_stream(
+        stream, s.dir("out"), s.dir(f"ckpt/{tag}"), keys=["o_orderkey"],
+        available_now=True,
+    ))
 
 
 def cdc_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2616,92 +1944,26 @@ def cdc_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
        the reason the feature exists), each with the latest-wins value
        and version; plain-snapshot keys carry ts_ms = W exactly,
        proving the chunk write won (not the stale 'c'/'u')."""
-    from ..streaming.pipeline import read_silver, silver_upsert_stream
+    from ..streaming.pipeline import read_silver
     from ..streaming.snapshot import run_incremental_snapshot
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/incsnap_src_{run}"
-    dst = f"{root}/incsnap_out_{run}"
-    ckpt = f"{root}/incsnap_ckpt_{run}"
-    W = 5_000_000
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderstatus",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-    )
-    k = F.col("o_orderkey")
-    base = F.col("o_totalprice")
-
-    def ev(df, status, price, op, ts, slot):
-        return df.select(
-            k.alias("o_orderkey"),
-            status.alias("o_orderstatus"),
-            price.cast("double").alias("o_totalprice"),
-            F.lit(op).alias("op"),
-            ts.cast("long").alias("ts_ms"),
-            (k * 10 + slot).cast("long").alias("offset"),
-        )
-
-    def stream_merge(events, tag):
-        d = f"{src}/{tag}"
-        events.coalesce(2).write.json(d)
-        stream = spark.readStream.schema(events.schema).json(d)
-        q = silver_upsert_stream(
-            stream, dst, f"{ckpt}/{tag}", keys=["o_orderkey"],
-            available_now=True,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("incremental-snapshot seed stream stalled")
-
-    try:
-        seed = (
-            ev(orders.filter(k % 2 == 1), F.col("o_orderstatus"), base,
-               "c", F.lit(1_000_000), 0)
-            .unionByName(ev(orders.filter(k % 3 == 0), F.lit("U"),
-                            base + 100, "u", F.lit(2_000_000) + k % 1_000_000, 1))
-            .unionByName(ev(orders.filter(k % 9 == 0), F.lit("V"),
-                            base + 170, "u", F.lit(6_000_000) + k, 2))
-        )
-        stream_merge(seed, "seed")
-
-        mid = (
-            ev(orders.filter(k % 4 == 0), F.lit("X"),
-               base + F.when(k % 3 == 0, 100).otherwise(0) + 300,
-               "u", F.lit(7_000_000) + k, 3)
-            .unionByName(ev(orders.filter(k % 5 == 0),
-                            F.lit(None).cast("string"),
-                            F.lit(None).cast("double"),
-                            "d", F.lit(7_500_000) + k, 4))
-        )
+    with scratch(spark, "incsnap") as s:
+        seed, mid, table_truth = _snapshot_schedule(spark, sf_dir)
+        _stream_merge(s, seed, "seed")
 
         def hook(i):
             if i == 2:
-                stream_merge(mid, "mid")
+                _stream_merge(s, mid, "mid")
 
-        table_truth = orders.select(
-            "o_orderkey",
-            F.when(k % 3 == 0, F.lit("U")).otherwise(
-                F.col("o_orderstatus")).alias("o_orderstatus"),
-            (base + F.when(k % 3 == 0, 100).otherwise(0))
-            .cast("double").alias("o_totalprice"),
-        )
         run_incremental_snapshot(
-            table_truth, dst, ["o_orderkey"],
-            order_col="o_orderkey", watermark_version=W, n_chunks=6,
+            table_truth, s.dir("out"), ["o_orderkey"],
+            order_col="o_orderkey", watermark_version=_SNAPSHOT_W, n_chunks=6,
             interleave_hook=hook,
         )
-        return (
-            read_silver(spark, dst)
+        return s.materialize(
+            read_silver(spark, s.dir("out"))
             .select("o_orderkey", "o_orderstatus", "o_totalprice", "ts_ms")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def cdc_snapshot_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2735,86 +1997,72 @@ def cdc_snapshot_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import read_silver, silver_txn_multi_upsert_stream
     from ..streaming.snapshot import run_incremental_snapshot_multi
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/snapmt_src_{run}"
-    hdr_dst = f"{root}/snapmt_hdr_{run}"
-    det_dst = f"{root}/snapmt_det_{run}"
-    pend = f"{root}/snapmt_pend_{run}"
-    ckpt = f"{root}/snapmt_ckpt_{run}"
-    W = 5_000_000
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderstatus",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-    )
-    # the fixture's lineitem carries duplicate (orderkey, linenumber)
-    # pairs; the detail table must have a unique PK (it is a CDC-captured
-    # table), so the universe is the keywise MAX-quantity aggregate —
-    # deterministic in both engines
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .select("l_orderkey",
-                F.col("l_linenumber").cast("int").alias("l_linenumber"),
-                F.col("l_quantity").cast("double").alias("l_quantity"))
-        .groupBy("l_orderkey", "l_linenumber")
-        .agg(F.max("l_quantity").alias("l_quantity"))
-    )
-    k = F.col("o_orderkey")
-    lk = F.col("l_orderkey")
-
-    def mux(df, table, op, ts, order, offset, hval=None, price=None,
-            dval=None, total=None):
-        """One slice of the sparse multiplexed union schema."""
-        return df.select(
-            F.lit(table).cast("string").alias("table"),
-            F.lit(op).cast("string").alias("op"),
-            (F.col("o_orderkey") if table == "hdr" else
-             F.lit(None)).cast("long").alias("o_orderkey"),
-            (hval if table == "hdr" and hval is not None else
-             F.lit(None)).cast("string").alias("o_orderstatus"),
-            (price if table == "hdr" and price is not None else
-             F.lit(None)).cast("double").alias("o_totalprice"),
-            (F.col("l_orderkey") if table == "det" else
-             F.lit(None)).cast("long").alias("l_orderkey"),
-            (F.col("l_linenumber") if table == "det" else
-             F.lit(None)).cast("int").alias("l_linenumber"),
-            (dval if table == "det" and dval is not None else
-             F.lit(None)).cast("double").alias("l_quantity"),
-            ts.cast("long").alias("ts_ms"),
-            offset.cast("long").alias("offset"),
-            F.col("__txn").alias("txn_id"),
-            order.cast("long").alias("txn_order"),
-            (total if total is not None
-             else F.lit(None)).cast("long").alias("txn_total"),
+    with scratch(spark, "snapmt") as s:
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+            "o_orderkey", "o_orderstatus",
+            F.col("o_totalprice").cast("double").alias("o_totalprice"),
         )
-
-    stores = {
-        "det": {"path": det_dst, "keys": ["l_orderkey", "l_linenumber"],
-                "version_col": "ts_ms", "tiebreak_col": "offset",
-                "columns": ["l_orderkey", "l_linenumber", "l_quantity",
-                            "ts_ms", "offset"]},
-        "hdr": {"path": hdr_dst, "keys": ["o_orderkey"],
-                "version_col": "ts_ms", "tiebreak_col": "offset",
-                "columns": ["o_orderkey", "o_orderstatus", "o_totalprice",
-                            "ts_ms", "offset"]},
-    }
-
-    def stream_txns(events, tag):
-        d = f"{src}/{tag}"
-        events.coalesce(2).write.json(d)
-        stream = spark.readStream.schema(events.schema).json(d)
-        q = silver_txn_multi_upsert_stream(
-            stream, stores, f"{ckpt}/{tag}", pending_path=pend,
-            available_now=True,
+        # the fixture's lineitem carries duplicate (orderkey, linenumber)
+        # pairs; the detail table must have a unique PK (it is a CDC-captured
+        # table), so the universe is the keywise MAX-quantity aggregate —
+        # deterministic in both engines
+        li = (
+            spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+            .select("l_orderkey",
+                    F.col("l_linenumber").cast("int").alias("l_linenumber"),
+                    F.col("l_quantity").cast("double").alias("l_quantity"))
+            .groupBy("l_orderkey", "l_linenumber")
+            .agg(F.max("l_quantity").alias("l_quantity"))
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("multi-table txn stream stalled")
+        k = F.col("o_orderkey")
+        lk = F.col("l_orderkey")
 
-    try:
+        def mux(df, table, op, ts, order, offset, hval=None, price=None,
+                dval=None, total=None):
+            """One slice of the sparse multiplexed union schema."""
+            return df.select(
+                F.lit(table).cast("string").alias("table"),
+                F.lit(op).cast("string").alias("op"),
+                (F.col("o_orderkey") if table == "hdr" else
+                 F.lit(None)).cast("long").alias("o_orderkey"),
+                (hval if table == "hdr" and hval is not None else
+                 F.lit(None)).cast("string").alias("o_orderstatus"),
+                (price if table == "hdr" and price is not None else
+                 F.lit(None)).cast("double").alias("o_totalprice"),
+                (F.col("l_orderkey") if table == "det" else
+                 F.lit(None)).cast("long").alias("l_orderkey"),
+                (F.col("l_linenumber") if table == "det" else
+                 F.lit(None)).cast("int").alias("l_linenumber"),
+                (dval if table == "det" and dval is not None else
+                 F.lit(None)).cast("double").alias("l_quantity"),
+                ts.cast("long").alias("ts_ms"),
+                offset.cast("long").alias("offset"),
+                F.col("__txn").alias("txn_id"),
+                order.cast("long").alias("txn_order"),
+                (total if total is not None
+                 else F.lit(None)).cast("long").alias("txn_total"),
+            )
+
+        hdr_dst, det_dst = s.dir("hdr"), s.dir("det")
+        stores = {
+            "det": {"path": det_dst, "keys": ["l_orderkey", "l_linenumber"],
+                    "version_col": "ts_ms", "tiebreak_col": "offset",
+                    "columns": ["l_orderkey", "l_linenumber", "l_quantity",
+                                "ts_ms", "offset"]},
+            "hdr": {"path": hdr_dst, "keys": ["o_orderkey"],
+                    "version_col": "ts_ms", "tiebreak_col": "offset",
+                    "columns": ["o_orderkey", "o_orderstatus", "o_totalprice",
+                                "ts_ms", "offset"]},
+        }
+
+        def stream_txns(events, tag):
+            stream = s.replay(events, files=2, per_trigger=2, fmt="json",
+                              name=f"src/{tag}")
+            s.wait(silver_txn_multi_upsert_stream(
+                stream, stores, s.dir(f"ckpt/{tag}"), pending_path=s.dir("pend"),
+                available_now=True,
+            ))
+
         odd_o = orders.filter(k % 2 == 1).withColumn(
             "__txn", F.concat(F.lit("a"), k))
         odd_l = li.filter(lk % 2 == 1).withColumn(
@@ -2887,7 +2135,7 @@ def cdc_snapshot_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "keys": ["l_orderkey", "l_linenumber"],
                         "order_col": "l_orderkey"},
             },
-            watermark_version=W, n_chunks=6, interleave_hook=hook,
+            watermark_version=_SNAPSHOT_W, n_chunks=6, interleave_hook=hook,
         )
         hdr = read_silver(spark, hdr_dst).select(
             "o_orderkey", "o_orderstatus", "o_totalprice",
@@ -2895,15 +2143,11 @@ def cdc_snapshot_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         det = read_silver(spark, det_dst).select(
             "l_orderkey", "l_linenumber", "l_quantity",
             F.col("ts_ms").alias("det_ts"))
-        return (
+        return s.materialize(
             hdr.join(det, hdr.o_orderkey == det.l_orderkey)
             .select("o_orderkey", "o_orderstatus", "o_totalprice", "hdr_ts",
                     "l_linenumber", "l_quantity", "det_ts")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, hdr_dst, det_dst, pend, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_agg_topkweighted_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2917,54 +2161,25 @@ def stream_agg_topkweighted_state(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle — exact per-item weight sums DuckDB recomputes with one
     GROUP BY (truncation-regime guarantees are pinned in
     tests/test_summing_ttl.py alongside the unweighted column's)."""
-    from ..streaming.pipeline import read_silver, silver_summing_stream
-
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/tkwst_src_{run}"
-    dst = f"{root}/tkwst_out_{run}"
-    ckpt = f"{root}/tkwst_ckpt_{run}"
-    try:
+    with scratch(spark, "tkwst") as s:
         events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
             "event_type",
             (F.col("user_id") % 7).alias("u7"),
             (F.lit(1) + F.col("user_id") % 5).cast("long").alias("wt"),
         )
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+        state = _summing_replay(
+            s, events, keys=["event_type"],
+            agg_spec={"tk": ("u7", "topkweighted:wt")}, topk_cap=16,
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = silver_summing_stream(
-                stream, dst, ckpt, keys=["event_type"],
-                agg_spec={"tk": ("u7", "topkweighted:wt")}, topk_cap=16,
-                available_now=True,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("topkweighted stream did not finish in 300s")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        return (
-            read_silver(spark, dst)
-            .select("event_type", F.explode("tk").alias("e"))
+        return s.materialize(
+            state.select("event_type", F.explode("tk").alias("e"))
             .select(
                 "event_type",
                 F.col("e.item").alias("item"),
                 F.col("e.cnt").alias("w_sum"),
                 F.col("e.err").alias("err"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def cdc_snapshot_pause_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2984,71 +2199,19 @@ def cdc_snapshot_pause_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     converged state.  The query fails loudly (RuntimeError) if the
     pause did not actually bite, so it cannot silently degenerate into
     the uninterrupted run."""
-    from ..streaming.pipeline import read_silver, silver_upsert_stream
+    from ..streaming.pipeline import read_silver
     from ..streaming.snapshot import (
         process_signals, signal_pause_snapshot, signal_resume_snapshot,
         signal_snapshot,
     )
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/prsnap_src_{run}"
-    dst = f"{root}/prsnap_out_{run}"
-    ckpt = f"{root}/prsnap_ckpt_{run}"
-    W = 5_000_000
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderstatus",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-    )
-    k = F.col("o_orderkey")
-    base = F.col("o_totalprice")
-
-    def ev(df, status, price, op, ts, slot):
-        return df.select(
-            k.alias("o_orderkey"),
-            status.alias("o_orderstatus"),
-            price.cast("double").alias("o_totalprice"),
-            F.lit(op).alias("op"),
-            ts.cast("long").alias("ts_ms"),
-            (k * 10 + slot).cast("long").alias("offset"),
-        )
-
-    def stream_merge(events, tag):
-        d = f"{src}/{tag}"
-        events.coalesce(2).write.json(d)
-        stream = spark.readStream.schema(events.schema).json(d)
-        q = silver_upsert_stream(
-            stream, dst, f"{ckpt}/{tag}", keys=["o_orderkey"],
-            available_now=True,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("pause-resume seed stream stalled")
-
-    try:
-        seed = (
-            ev(orders.filter(k % 2 == 1), F.col("o_orderstatus"), base,
-               "c", F.lit(1_000_000), 0)
-            .unionByName(ev(orders.filter(k % 3 == 0), F.lit("U"),
-                            base + 100, "u", F.lit(2_000_000) + k % 1_000_000, 1))
-            .unionByName(ev(orders.filter(k % 9 == 0), F.lit("V"),
-                            base + 170, "u", F.lit(6_000_000) + k, 2))
-        )
-        stream_merge(seed, "seed")
-
-        table_truth = orders.select(
-            "o_orderkey",
-            F.when(k % 3 == 0, F.lit("U")).otherwise(
-                F.col("o_orderstatus")).alias("o_orderstatus"),
-            (base + F.when(k % 3 == 0, 100).otherwise(0))
-            .cast("double").alias("o_totalprice"),
-        )
+    with scratch(spark, "prsnap") as s:
+        dst = s.dir("out")
+        seed, mid, table_truth = _snapshot_schedule(spark, sf_dir)
+        _stream_merge(s, seed, "seed")
         sid = signal_snapshot(
-            dst, order_col="o_orderkey", n_chunks=6, watermark_version=W,
-            signal_id=f"pr_{run}",
+            dst, order_col="o_orderkey", n_chunks=6,
+            watermark_version=_SNAPSHOT_W, signal_id=f"pr_{s.run}",
         )
 
         def pause_hook(i):
@@ -3058,35 +2221,20 @@ def cdc_snapshot_pause_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         done = process_signals(
             table_truth, dst, ["o_orderkey"], interleave_hook=pause_hook,
         )
-        import os as _os
-
-        prog = _os.path.join(dst, "_signals", f"{sid}.progress")
-        if done or not _os.path.exists(prog):
+        prog = os.path.join(dst, "_signals", f"{sid}.progress")
+        if done or not os.path.exists(prog):
             raise RuntimeError("pause did not bite — scenario degenerate")
 
         # change events land WHILE the snapshot is paused
-        mid = (
-            ev(orders.filter(k % 4 == 0), F.lit("X"),
-               base + F.when(k % 3 == 0, 100).otherwise(0) + 300,
-               "u", F.lit(7_000_000) + k, 3)
-            .unionByName(ev(orders.filter(k % 5 == 0),
-                            F.lit(None).cast("string"),
-                            F.lit(None).cast("double"),
-                            "d", F.lit(7_500_000) + k, 4))
-        )
-        stream_merge(mid, "mid")
+        _stream_merge(s, mid, "mid")
 
         signal_resume_snapshot(dst)
         if process_signals(table_truth, dst, ["o_orderkey"]) != [sid]:
             raise RuntimeError("resume did not complete the signal")
-        return (
+        return s.materialize(
             read_silver(spark, dst)
             .select("o_orderkey", "o_orderstatus", "o_totalprice", "ts_ms")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def cdc_snapshot_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3105,83 +2253,21 @@ def cdc_snapshot_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleaved (incremental) or deferred (blocking); what the blocking
     variant adds is the ATOMIC transition, pinned by the in-query
     ordering guard, not by the final values."""
-    from ..streaming.pipeline import (
-        merges_blocked, read_silver, silver_upsert_stream,
-    )
+    from ..streaming.pipeline import merges_blocked, read_silver
     from ..streaming.snapshot import run_blocking_snapshot
 
-    import shutil as _sh
     import threading
     import time as _time
 
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/blksnap_src_{run}"
-    dst = f"{root}/blksnap_out_{run}"
-    ckpt = f"{root}/blksnap_ckpt_{run}"
-    W = 5_000_000
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderstatus",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-    )
-    k = F.col("o_orderkey")
-    base = F.col("o_totalprice")
-
-    def ev(df, status, price, op, ts, slot):
-        return df.select(
-            k.alias("o_orderkey"),
-            status.alias("o_orderstatus"),
-            price.cast("double").alias("o_totalprice"),
-            F.lit(op).alias("op"),
-            ts.cast("long").alias("ts_ms"),
-            (k * 10 + slot).cast("long").alias("offset"),
-        )
-
-    def stream_merge(events, tag):
-        d = f"{src}/{tag}"
-        events.coalesce(2).write.json(d)
-        stream = spark.readStream.schema(events.schema).json(d)
-        q = silver_upsert_stream(
-            stream, dst, f"{ckpt}/{tag}", keys=["o_orderkey"],
-            available_now=True,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("blocking-snapshot stream stalled")
-
-    try:
-        seed = (
-            ev(orders.filter(k % 2 == 1), F.col("o_orderstatus"), base,
-               "c", F.lit(1_000_000), 0)
-            .unionByName(ev(orders.filter(k % 3 == 0), F.lit("U"),
-                            base + 100, "u", F.lit(2_000_000) + k % 1_000_000, 1))
-            .unionByName(ev(orders.filter(k % 9 == 0), F.lit("V"),
-                            base + 170, "u", F.lit(6_000_000) + k, 2))
-        )
-        stream_merge(seed, "seed")
-
-        table_truth = orders.select(
-            "o_orderkey",
-            F.when(k % 3 == 0, F.lit("U")).otherwise(
-                F.col("o_orderstatus")).alias("o_orderstatus"),
-            (base + F.when(k % 3 == 0, 100).otherwise(0))
-            .cast("double").alias("o_totalprice"),
-        )
-        mid = (
-            ev(orders.filter(k % 4 == 0), F.lit("X"),
-               base + F.when(k % 3 == 0, 100).otherwise(0) + 300,
-               "u", F.lit(7_000_000) + k, 3)
-            .unionByName(ev(orders.filter(k % 5 == 0),
-                            F.lit(None).cast("string"),
-                            F.lit(None).cast("double"),
-                            "d", F.lit(7_500_000) + k, 4))
-        )
+    with scratch(spark, "blksnap") as s:
+        dst = s.dir("out")
+        seed, mid, table_truth = _snapshot_schedule(spark, sf_dir)
+        _stream_merge(s, seed, "seed")
 
         merge_done = threading.Event()
 
         def attempt_merge():
-            stream_merge(mid, "mid")
+            _stream_merge(s, mid, "mid")
             merge_done.set()
 
         t = threading.Thread(target=attempt_merge, daemon=True)
@@ -3196,7 +2282,7 @@ def cdc_snapshot_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         run_blocking_snapshot(
             table_truth, dst, ["o_orderkey"],
-            order_col="o_orderkey", watermark_version=W, n_chunks=6,
+            order_col="o_orderkey", watermark_version=_SNAPSHOT_W, n_chunks=6,
             interleave_hook=hook,
         )
         if guard != {"locked": True, "deferred": True}:
@@ -3206,14 +2292,10 @@ def cdc_snapshot_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.join(600)
         if not merge_done.is_set():
             raise TimeoutError("deferred stream merge never completed")
-        return (
+        return s.materialize(
             read_silver(spark, dst)
             .select("o_orderkey", "o_orderstatus", "o_totalprice", "ts_ms")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def cdc_snapshot_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3237,93 +2319,27 @@ def cdc_snapshot_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
       mod-3 rows' 2e6+k with 5e6 and fail the hash;
     * even keys the stream never touched: ABSENT — a buggy unfiltered
       run backfills them and fails on row count."""
-    from ..streaming.pipeline import read_silver, silver_upsert_stream
+    from ..streaming.pipeline import read_silver
     from ..streaming.snapshot import run_incremental_snapshot
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/fltsnap_src_{run}"
-    dst = f"{root}/fltsnap_out_{run}"
-    ckpt = f"{root}/fltsnap_ckpt_{run}"
-    W = 5_000_000
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderstatus",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-    )
-    k = F.col("o_orderkey")
-    base = F.col("o_totalprice")
-
-    def ev(df, status, price, op, ts, slot):
-        return df.select(
-            k.alias("o_orderkey"),
-            status.alias("o_orderstatus"),
-            price.cast("double").alias("o_totalprice"),
-            F.lit(op).alias("op"),
-            ts.cast("long").alias("ts_ms"),
-            (k * 10 + slot).cast("long").alias("offset"),
-        )
-
-    def stream_merge(events, tag):
-        d = f"{src}/{tag}"
-        events.coalesce(2).write.json(d)
-        stream = spark.readStream.schema(events.schema).json(d)
-        q = silver_upsert_stream(
-            stream, dst, f"{ckpt}/{tag}", keys=["o_orderkey"],
-            available_now=True,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("filtered-snapshot seed stream stalled")
-
-    try:
-        seed = (
-            ev(orders.filter(k % 2 == 1), F.col("o_orderstatus"), base,
-               "c", F.lit(1_000_000), 0)
-            .unionByName(ev(orders.filter(k % 3 == 0), F.lit("U"),
-                            base + 100, "u", F.lit(2_000_000) + k % 1_000_000, 1))
-            .unionByName(ev(orders.filter(k % 9 == 0), F.lit("V"),
-                            base + 170, "u", F.lit(6_000_000) + k, 2))
-        )
-        stream_merge(seed, "seed")
-
-        mid = (
-            ev(orders.filter(k % 4 == 0), F.lit("X"),
-               base + F.when(k % 3 == 0, 100).otherwise(0) + 300,
-               "u", F.lit(7_000_000) + k, 3)
-            .unionByName(ev(orders.filter(k % 5 == 0),
-                            F.lit(None).cast("string"),
-                            F.lit(None).cast("double"),
-                            "d", F.lit(7_500_000) + k, 4))
-        )
+    with scratch(spark, "fltsnap") as s:
+        seed, mid, table_truth = _snapshot_schedule(spark, sf_dir)
+        _stream_merge(s, seed, "seed")
 
         def hook(i):
             if i == 2:
-                stream_merge(mid, "mid")
+                _stream_merge(s, mid, "mid")
 
-        table_truth = orders.select(
-            "o_orderkey",
-            F.when(k % 3 == 0, F.lit("U")).otherwise(
-                F.col("o_orderstatus")).alias("o_orderstatus"),
-            (base + F.when(k % 3 == 0, 100).otherwise(0))
-            .cast("double").alias("o_totalprice"),
-        )
         run_incremental_snapshot(
-            table_truth, dst, ["o_orderkey"],
-            order_col="o_orderkey", watermark_version=W, n_chunks=6,
+            table_truth, s.dir("out"), ["o_orderkey"],
+            order_col="o_orderkey", watermark_version=_SNAPSHOT_W, n_chunks=6,
             interleave_hook=hook,
             additional_condition="o_orderkey % 2 = 1",
         )
-        return (
-            read_silver(spark, dst)
+        return s.materialize(
+            read_silver(spark, s.dir("out"))
             .select("o_orderkey", "o_orderstatus", "o_totalprice", "ts_ms")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        for d in (src, dst, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def object_store_native_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3341,18 +2357,15 @@ def object_store_native_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, timestamp round-tripped tick-exact."""
     from ..sources.ch_native import native_encode, read_ch_native
 
-    import shutil as _sh
-
     columns = [
         ("o_orderkey", "Int64"),
         ("status", "String"),
         ("price", "Nullable(Float64)"),
         ("o_orderdate", "DateTime64(6)"),
     ]
-    src = f"{tempfile.gettempdir()}/native_src_{uuid.uuid4().hex[:12]}"
-    try:
-        os_mod = __import__("os")
-        os_mod.makedirs(src, exist_ok=True)
+    with scratch(spark, "native") as s:
+        src = s.dir("src")
+        os.makedirs(src, exist_ok=True)
 
         def encode_segment(seg: int, rows: list[dict]) -> None:
             chunk = []
@@ -3374,9 +2387,7 @@ def object_store_native_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "o_orderdate"),
             encode_segment,
         )
-        return read_ch_native(spark, src, columns).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(src, ignore_errors=True)
+        return s.materialize(read_ch_native(spark, src, columns))
 
 
 def object_store_rowbinary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3393,8 +2404,6 @@ def object_store_rowbinary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     value oracle restated from orders arithmetic."""
     from ..sources.ch_rowbinary import read_rowbinary, rowbinary_encode
 
-    import shutil as _sh
-
     schema = [
         ("o_orderkey", "Int64"),
         ("status", "String"),
@@ -3402,10 +2411,9 @@ def object_store_rowbinary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         ("flag", "UInt8"),
         ("note", "Nullable(String)"),
     ]
-    src = f"{tempfile.gettempdir()}/rb_src_{uuid.uuid4().hex[:12]}"
-    try:
-        os_mod = __import__("os")
-        os_mod.makedirs(src, exist_ok=True)
+    with scratch(spark, "rb") as s:
+        src = s.dir("src")
+        os.makedirs(src, exist_ok=True)
 
         def encode_segment(seg: int, rows: list[dict]) -> None:
             chunk = []
@@ -3427,9 +2435,7 @@ def object_store_rowbinary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
                     "o_orderpriority"),
             encode_segment,
         )
-        return read_rowbinary(spark, src, schema).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(src, ignore_errors=True)
+        return s.materialize(read_rowbinary(spark, src, schema))
 
 
 def object_store_proto_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3448,8 +2454,6 @@ def object_store_proto_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays hash-comparable."""
     from ..sources.protobuf import proto_dump_encode, read_proto
 
-    import shutil as _sh
-
     desc = {
         "name": "order", "fields": [
             {"name": "o_orderkey", "type": "int64", "number": 1},
@@ -3466,10 +2470,9 @@ def object_store_proto_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             }},
         ],
     }
-    src = f"{tempfile.gettempdir()}/proto_src_{uuid.uuid4().hex[:12]}"
-    try:
-        os_mod = __import__("os")
-        os_mod.makedirs(src, exist_ok=True)
+    with scratch(spark, "proto") as s:
+        src = s.dir("src")
+        os.makedirs(src, exist_ok=True)
 
         def encode_segment(seg: int, rows: list[dict]) -> None:
             recs = []
@@ -3493,7 +2496,7 @@ def object_store_proto_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "o_totalprice", "o_orderpriority"),
             encode_segment,
         )
-        return (
+        return s.materialize(
             read_proto(spark, src, desc)
             .select(
                 "o_orderkey", "status", "price", "delta",
@@ -3501,10 +2504,7 @@ def object_store_proto_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("who.cust").alias("cust"),
                 F.col("who.clerk").alias("clerk"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        _sh.rmtree(src, ignore_errors=True)
 
 
 def object_store_tsv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3517,18 +2517,16 @@ def object_store_tsv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's own writer (executor-parallel, one line per row BECAUSE the
     escapes hold), then read back typed.  Full value oracle: the note is
     restated with chr() arithmetic in DuckDB."""
+    from pyspark.sql.types import _parse_datatype_string
+
     from ..sources.ch_formats import read_ch_tsv, write_ch_tsv
 
-    import shutil as _sh
-
-    run = uuid.uuid4().hex[:12]
-    d = f"{tempfile.gettempdir()}/tsv_src_{run}"
     k = F.col("o_orderkey")
     schema_out = (
         "o_orderkey long, o_orderstatus string, o_totalprice double, "
         "note string"
     )
-    try:
+    with scratch(spark, "tsv") as s:
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_orderstatus",
             F.col("o_totalprice").cast("double").alias("o_totalprice"),
@@ -3539,14 +2537,10 @@ def object_store_tsv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("note"),
         )
-        write_ch_tsv(orders.repartition(4), d)
-        from pyspark.sql.types import _parse_datatype_string
-
-        return read_ch_tsv(
-            spark, d, _parse_datatype_string(schema_out)
-        ).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(d, ignore_errors=True)
+        write_ch_tsv(orders.repartition(4), s.dir("src"))
+        return s.materialize(
+            read_ch_tsv(spark, s.dir("src"), _parse_datatype_string(schema_out))
+        )
 
 
 def object_store_typed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3560,19 +2554,6 @@ def object_store_typed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.files import load_table, read_typed_json
 
-    run = uuid.uuid4().hex[:12]
-    bucket = f"{tempfile.gettempdir()}/minio_bucket_{run}"
-    nation = load_table(spark, sf_dir, "nation")
-    # "upload" JSON objects: one per nation row
-    nation.select(
-        F.col("n_nationkey").cast("long").alias("id"),
-        F.concat(F.lit("event for "), F.col("n_name")).alias("message"),
-        F.date_format(
-            F.timestamp_add("HOUR", F.col("n_nationkey").cast("int"), F.to_timestamp(F.lit("2024-06-01 00:00:00"))),
-            "yyyy-MM-dd'T'HH:mm:ss",
-        ).alias("timestamp"),
-    ).write.mode("overwrite").json(bucket)
-
     schema = T.StructType(
         [
             T.StructField("id", T.LongType()),
@@ -3580,31 +2561,21 @@ def object_store_typed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("timestamp", T.TimestampType()),
         ]
     )
-    import shutil as _sh
-
-    try:
-        return read_typed_json(spark, bucket, schema).select(
-            "id", "message", "timestamp"
-        ).localCheckpoint(eager=True)
-    finally:
-        _sh.rmtree(bucket, ignore_errors=True)
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
+    with scratch(spark, "minio_bucket") as s:
+        bucket = s.dir("bucket")
+        nation = load_table(spark, sf_dir, "nation")
+        # "upload" JSON objects: one per nation row
+        nation.select(
+            F.col("n_nationkey").cast("long").alias("id"),
+            F.concat(F.lit("event for "), F.col("n_name")).alias("message"),
+            F.date_format(
+                F.timestamp_add("HOUR", F.col("n_nationkey").cast("int"), F.to_timestamp(F.lit("2024-06-01 00:00:00"))),
+                "yyyy-MM-dd'T'HH:mm:ss",
+            ).alias("timestamp"),
+        ).write.mode("overwrite").json(bucket)
+        return s.materialize(
+            read_typed_json(spark, bucket, schema).select("id", "message", "timestamp")
+        )
 
 QUERIES = {
     "synthetic_transactions": synthetic_transactions,

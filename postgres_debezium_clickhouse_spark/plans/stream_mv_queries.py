@@ -10,64 +10,15 @@ there merges this module's QUERIES/ORACLES so the driver contract
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.files import load_table
+from ._scratch import Scratch, mv_replay, scratch
 from .llm_common import MINHASH_PAIR_CTES as _MH_CTES
 from .llm_common import SHINGLES as _SH_CTES
 
 from ..operators.classifier import pseudo_weights as _pw
-
-
-def _mv_replay(spark: SparkSession, tag: str, source_df: DataFrame,
-               transform, files_per_trigger: int = 2) -> DataFrame:
-    """The shared lifecycle of every registered-MV oracle query: persist
-    the fixture, replay it as a multi-micro-batch stream
-    (``maxFilesPerTrigger`` forces >1 trigger so batch boundaries are
-    actually exercised), register the MV, await with a LOUD timeout (a
-    partial result must never reach the oracle compare), and always drop
-    the registration — a stale entry would make a same-process retry
-    re-register over a live name."""
-    from ..streaming.pipeline import Pipeline
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/{tag}_src_{run}"
-    out = f"{root}/{tag}_out_{run}"
-    ckpt = f"{root}/{tag}_ckpt_{run}"
-    source_df.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(source_df.schema)
-        .option("maxFilesPerTrigger", str(files_per_trigger))
-        .parquet(src)
-    )
-    pipe = Pipeline(spark)
-    name = f"{tag}_mv_{run}"
-    try:
-        mv = pipe.register_mv(name, stream, transform, out, ckpt, available_now=True)
-        try:
-            if not mv.query.awaitTermination(300):
-                mv.query.stop()  # don't leave a zombie stream behind the error
-                raise TimeoutError(
-                    "stream did not finish in 300s — refusing to "
-                    "return a partial result"
-                )
-        finally:
-            pipe.drop_mv(name)
-        # materialize the (small) MV result before deleting the run's
-        # scratch dirs it reads from — each invocation used to leak a
-        # src+out+ckpt trio under tempdir (ADVICE r6, same pattern as
-        # q_ann_ivf_index)
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        import shutil as _sh
-
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
 
 
 def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,7 +35,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.files import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _mv_replay(
+    return mv_replay(
         spark, "qmv", docs,
         lambda df: quality_score(df)
         .filter(F.col("keep"))
@@ -122,7 +73,29 @@ def stream_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _mv_replay(spark, "fmv", docs, _gate)
+    return mv_replay(spark, "fmv", docs, _gate)
+
+
+_DRIFT_EXPECTED = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
+
+
+def _drift_wire(s: Scratch, sf_dir: str) -> DataFrame:
+    """The drift fixture as a 4-file, one-file-per-trigger stream: orders
+    as Debezium-shaped wire rows whose ``after`` image lacks
+    o_orderpriority and carries an unknown ``loyalty_tier`` field iff
+    o_orderkey % 5 = 0."""
+    orders = s.spark.read.parquet(f"{sf_dir}/orders.parquet")
+    after = F.struct(
+        F.col("o_orderkey"),
+        F.col("o_orderstatus"),
+        F.col("o_totalprice"),
+        F.when(F.col("o_orderkey") % 5 == 0, F.lit("gold")).alias("loyalty_tier"),
+    )
+    wire = orders.select(
+        F.col("o_orderkey").alias("offset"),
+        F.to_json(F.struct(F.struct(after.alias("after")).alias("payload"))).alias("value"),
+    )
+    return s.replay(wire, files=4, per_trigger=1)
 
 
 def stream_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,60 +112,22 @@ def stream_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger, not per event."""
     from ..operators.transforms import schema_drift_report
 
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/drift_src_{run}"
-    out = f"{root}/drift_out_{run}"
-    ckpt = f"{root}/drift_ckpt_{run}"
+    with scratch(spark, "drift") as s:
+        out = s.dir("out")
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    after = F.struct(
-        F.col("o_orderkey"),
-        F.col("o_orderstatus"),
-        F.col("o_totalprice"),
-        F.when(F.col("o_orderkey") % 5 == 0, F.lit("gold")).alias("loyalty_tier"),
-    )
-    wire = orders.select(
-        F.col("o_orderkey").alias("offset"),
-        F.to_json(F.struct(F.struct(after.alias("after")).alias("payload"))).alias("value"),
-    )
-    wire.repartition(4).write.mode("overwrite").parquet(src)
+        def _report_batch(batch_df: DataFrame, epoch: int) -> None:
+            # foreachBatch is at-least-once: a retried epoch must OVERWRITE its
+            # own prior output, not append a duplicate — epoch-keyed subdirs
+            # make the write idempotent (r5 advice item).
+            schema_drift_report(batch_df, _DRIFT_EXPECTED).write.mode(
+                "overwrite"
+            ).parquet(f"{out}/epoch={epoch}")
 
-    expected = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
-    stream = (
-        spark.readStream.schema(wire.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-
-    def _report_batch(batch_df: DataFrame, epoch: int) -> None:
-        # foreachBatch is at-least-once: a retried epoch must OVERWRITE its
-        # own prior output, not append a duplicate — epoch-keyed subdirs
-        # make the write idempotent (r5 advice item).
-        schema_drift_report(batch_df, expected).write.mode("overwrite").parquet(
-            f"{out}/epoch={epoch}"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_report_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("drift stream did not finish in 300s")
-    import shutil as _sh
-
-    try:
-        per_batch = spark.read.parquet(out)
-        return per_batch.groupBy("field", "kind").agg(
+        s.drain(_drift_wire(s, sf_dir), _report_batch)
+        return s.materialize(spark.read.parquet(out).groupBy("field", "kind").agg(
             F.sum("n_rows").cast("long").alias("n_rows"),
             F.min("first_offset").cast("long").alias("first_offset"),
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        ))
 
 
 def stream_ann_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,7 +154,7 @@ def stream_ann_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The fixed index: same init contract as ivf_ann_topk_table (16
     # lowest-id vectors), frozen so micro-batches share one materialization.
     cents = ivf_centroids_df(emb, n_centroids=16, id_col="vec_id").localCheckpoint()
-    return _mv_replay(
+    return mv_replay(
         spark, "ann", emb,
         lambda df: assign_ivf_cells(as_double_vec(df), cents).select("vec_id", "cell"),
     )
@@ -267,7 +202,7 @@ def stream_pq_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id")
         )
 
-    return _mv_replay(spark, "pqgate", new_vecs, gate)
+    return mv_replay(spark, "pqgate", new_vecs, gate)
 
 
 def stream_drift_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,67 +220,28 @@ def stream_drift_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotence (same pattern as stream_schema_drift)."""
     from ..operators.transforms import split_on_drift
 
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/quar_src_{run}"
-    out = f"{root}/quar_out_{run}"
-    ckpt = f"{root}/quar_ckpt_{run}"
+    with scratch(spark, "quar") as s:
+        out = s.dir("out")
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    after = F.struct(
-        F.col("o_orderkey"),
-        F.col("o_orderstatus"),
-        F.col("o_totalprice"),
-        F.when(F.col("o_orderkey") % 5 == 0, F.lit("gold")).alias("loyalty_tier"),
-    )
-    wire = orders.select(
-        F.col("o_orderkey").alias("offset"),
-        F.to_json(F.struct(F.struct(after.alias("after")).alias("payload"))).alias("value"),
-    )
-    wire.repartition(4).write.mode("overwrite").parquet(src)
+        def _route_batch(batch_df: DataFrame, epoch: int) -> None:
+            ok, bad = split_on_drift(batch_df, _DRIFT_EXPECTED, policy="quarantine")
+            ok.write.mode("overwrite").parquet(f"{out}/conforming/epoch={epoch}")
+            bad.write.mode("overwrite").parquet(f"{out}/quarantine/epoch={epoch}")
 
-    expected = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
-    stream = (
-        spark.readStream.schema(wire.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+        s.drain(_drift_wire(s, sf_dir), _route_batch)
 
-    def _route_batch(batch_df: DataFrame, epoch: int) -> None:
-        ok, bad = split_on_drift(batch_df, expected, policy="quarantine")
-        ok.write.mode("overwrite").parquet(f"{out}/conforming/epoch={epoch}")
-        bad.write.mode("overwrite").parquet(f"{out}/quarantine/epoch={epoch}")
-
-    q = (
-        stream.writeStream.foreachBatch(_route_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("quarantine stream did not finish in 300s")
-
-    def _summary(route: str) -> DataFrame:
-        return (
-            spark.read.parquet(f"{out}/{route}")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.min("offset").cast("long").alias("min_offset"),
-                F.max("offset").cast("long").alias("max_offset"),
+        def _summary(route: str) -> DataFrame:
+            return (
+                spark.read.parquet(f"{out}/{route}")
+                .agg(
+                    F.count("*").alias("n_rows"),
+                    F.min("offset").cast("long").alias("min_offset"),
+                    F.max("offset").cast("long").alias("max_offset"),
+                )
+                .select(F.lit(route).alias("route"), "n_rows", "min_offset", "max_offset")
             )
-            .select(F.lit(route).alias("route"), "n_rows", "min_offset", "max_offset")
-        )
 
-    import shutil as _sh
-
-    try:
-        return _summary("conforming").unionByName(
-            _summary("quarantine")
-        ).localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh.rmtree(d, ignore_errors=True)
+        return s.materialize(_summary("conforming").unionByName(_summary("quarantine")))
 
 
 def stream_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,7 +267,7 @@ def stream_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.sha2(normalize_text(), 256).alias("__digest"))
         .distinct()
     )
-    return _mv_replay(
+    return mv_replay(
         spark, "sdd", docs.filter(F.col("doc_id") % 5 == 0),
         lambda df: df.withColumn("__digest", F.sha2(normalize_text(), 256))
         .join(corpus_digests, "__digest", "left_anti")
@@ -416,21 +312,8 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("corpus_id"), F.col("shingles").alias("c_sh")
     )
 
-    import shutil as _sh_
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/ndg_src_{run}"
-    out = f"{root}/ndg_out_{run}"
-    ckpt = f"{root}/ndg_ckpt_{run}"
-    try:
-        new_docs = docs.filter(F.col("doc_id") % 5 == 0)
-        new_docs.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(new_docs.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-        )
+    with scratch(spark, "ndg") as s:
+        out = s.dir("out")
 
         # per-batch gate (foreachBatch — the anti join's right side derives
         # from the batch, which a continuous stream transform cannot do);
@@ -457,19 +340,9 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).parquet(f"{out}/epoch={epoch}")
 
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("near-dup gate replay did not finish in 300s")
-        return spark.read.parquet(out).select("doc_id").localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh_.rmtree(d, ignore_errors=True)
+        new_docs = docs.filter(F.col("doc_id") % 5 == 0)
+        s.drain(s.replay(new_docs, files=4, per_trigger=2), gate)
+        return s.materialize(spark.read.parquet(out).select("doc_id"))
 
 
 def stream_image_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,14 +382,8 @@ def stream_image_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "val",
     ).localCheckpoint(eager=True)
 
-    import shutil as _sh_
-
-    run = uuid.uuid4().hex[:12]
-    root = tempfile.gettempdir()
-    src = f"{root}/idg_src_{run}"
-    out = f"{root}/idg_out_{run}"
-    ckpt = f"{root}/idg_ckpt_{run}"
-    try:
+    with scratch(spark, "idg") as s:
+        out = s.dir("out")
         dup_src = base.filter(F.col("doc_id") % 3 == 1)
         new_media = (
             synth_dhash_images(dup_src, perturb=128)
@@ -526,12 +393,6 @@ def stream_image_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                     spark.range(200, 220).select(F.col("id").alias("doc_id"))
                 )
             )
-        )
-        new_media.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(new_media.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
         )
 
         def gate(batch: DataFrame, epoch: int) -> None:
@@ -552,19 +413,8 @@ def stream_image_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).parquet(f"{out}/epoch={epoch}")
 
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("image gate replay did not finish in 300s")
-        return spark.read.parquet(out).select("doc_id").localCheckpoint(eager=True)
-    finally:
-        for d in (src, out, ckpt):
-            _sh_.rmtree(d, ignore_errors=True)
+        s.drain(s.replay(new_media, files=4, per_trigger=2), gate)
+        return s.materialize(spark.read.parquet(out).select("doc_id"))
 
 
 def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -607,7 +457,7 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("log_weight"),
         )
 
-    return _mv_replay(spark, "dsirgate", incoming, gate)
+    return mv_replay(spark, "dsirgate", incoming, gate)
 
 
 def stream_exif_pii_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -623,7 +473,7 @@ def stream_exif_pii_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.exif import exif_metadata, synth_exif_docs
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _mv_replay(
+    return mv_replay(
         spark, "exifgate", docs,
         lambda df: exif_metadata(synth_exif_docs(df))
         .filter(F.col("gps_present"))

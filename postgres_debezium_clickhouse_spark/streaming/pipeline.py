@@ -79,6 +79,18 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.upsert import DELETED_FLAG, merge_touched
 
 
+def _start(writer, available_now: bool,
+           processing_interval_ms: int | None = None) -> StreamingQuery:
+    """Start a sink's ``writer`` under its trigger: ``available_now``
+    drains what is there and stops; else a processing interval polls;
+    else Spark's default trigger."""
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_interval_ms is not None:
+        writer = writer.trigger(processingTime=f"{processing_interval_ms} milliseconds")
+    return writer.start()
+
+
 def bronze_append_stream(
     records: DataFrame,
     path: str,
@@ -101,11 +113,7 @@ def bronze_append_stream(
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_interval_ms is not None:
-        writer = writer.trigger(processingTime=f"{processing_interval_ms} milliseconds")
-    return writer.start()
+    return _start(writer, available_now, processing_interval_ms)
 
 
 from .commit import (  # noqa: E402  (re-exported: the store's public commit API)
@@ -644,11 +652,7 @@ def silver_upsert_stream(
         _cdc_upsert(batch, path, keys, n_buckets, version_col, tiebreak_col)
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_interval_ms is not None:
-        writer = writer.trigger(processingTime=f"{processing_interval_ms} milliseconds")
-    return writer.start()
+    return _start(writer, available_now, processing_interval_ms)
 
 
 def _txn_trigger(batch: DataFrame, batch_id: int, ppath: str, checkpoint: str,
@@ -791,11 +795,7 @@ def silver_txn_upsert_stream(
                      _release, n_buckets, max_broadcast_keys)
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_interval_ms is not None:
-        writer = writer.trigger(processingTime=f"{processing_interval_ms} milliseconds")
-    return writer.start()
+    return _start(writer, available_now, processing_interval_ms)
 
 
 def read_txn_pending(spark: SparkSession, pending_path: str) -> DataFrame:
@@ -915,13 +915,7 @@ def silver_txn_multi_upsert_stream(
     writer = events.writeStream.foreachBatch(_merge).option(
         "checkpointLocation", checkpoint
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_interval_ms is not None:
-        writer = writer.trigger(
-            processingTime=f"{processing_interval_ms} milliseconds"
-        )
-    return writer.start()
+    return _start(writer, available_now, processing_interval_ms)
 
 
 #: vacuum keeps at most this many newest history manifests by default —
@@ -1795,11 +1789,7 @@ def silver_summing_stream(
         )
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_interval_ms is not None:
-        writer = writer.trigger(processingTime=f"{processing_interval_ms} milliseconds")
-    return writer.start()
+    return _start(writer, available_now, processing_interval_ms)
 
 
 def silver_collapsing_stream(
@@ -1959,11 +1949,7 @@ def silver_collapsing_stream(
         )
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_interval_ms is not None:
-        writer = writer.trigger(processingTime=f"{processing_interval_ms} milliseconds")
-    return writer.start()
+    return _start(writer, available_now, processing_interval_ms)
 
 
 def read_collapsed(
@@ -2619,9 +2605,9 @@ class Pipeline:
             .option("checkpointLocation", checkpoint)
             .queryName(name)
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        mv = MaterializedView(name=name, query=writer.start(), target=target_path)
+        mv = MaterializedView(
+            name=name, query=_start(writer, available_now), target=target_path
+        )
         self.views[name] = mv
         return mv
 

@@ -113,6 +113,30 @@ def test_connected_components_long_chain_converges(spark):
     assert set(out.values()) == {0} and len(out) == 13
 
 
+def test_connected_components_refuses_unconverged_labels(spark):
+    """A path longer than the round budget must raise, not return labels
+    that still split one component into several."""
+    from postgres_debezium_clickhouse_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(pairs, max_iter=2)
+
+
+def test_star_cc_refuses_unconverged_labels(spark):
+    from postgres_debezium_clickhouse_spark.operators.dedup import (
+        connected_components_star,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components_star(pairs, max_iter=1)
+
+
 @pytest.mark.slow
 def test_connected_components_matches_union_find(spark):
     """Property check on a pseudo-random graph: the distributed min-label
