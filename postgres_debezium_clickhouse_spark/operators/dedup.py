@@ -2,10 +2,11 @@
 
 Not present in the reference (it has no document corpus), but a first-class
 engine component for the 100 TB target: exact dedup, MinHash+LSH banded
-near-dup, SimHash, n-gram Jaccard.  All operators are pure DataFrame
-expressions (JVM-side, whole-stage codegen) — no Python UDFs — and every
-hash is md5-based so the DuckDB correctness oracles can reproduce results
-bit-for-bit.
+near-dup, SimHash, n-gram Jaccard, dup clusters.  The corpus-sized
+operators are pure DataFrame expressions (JVM-side, whole-stage codegen) —
+no Python UDFs — and every hash is md5-based so the DuckDB correctness
+oracles can reproduce results bit-for-bit.  The one Python kernel is
+``connected_components`` over a pair list that fits one task.
 
 Scale design:
 - NO all-pairs crossJoin anywhere.  Candidate generation is banded LSH:
@@ -14,12 +15,15 @@ Scale design:
   bucket size (near-dup clusters), never O(n²).
 - Exact-verification (Jaccard) runs only on the candidate pairs.
 - SimHash is linear: explode tokens×bits, two grouped aggregations.
+- Builders run no Spark job: candidate pairs, clusters and keep-lists are
+  lazy plans, so constructing a query pins no storage.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: LSH parameters: 4 bands × 2 rows = 8 MinHash functions.  For the target
 #: near-dup threshold j≈0.8 the detect probability is 1-(1-j²)⁴ ≈ 0.996.
@@ -80,10 +84,7 @@ def spread_for_compute(df: DataFrame, size_threshold: int = 4 << 30,
         return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = None
+    size = _plan_bytes(df._jdf.queryExecution().optimizedPlan())
     if size is not None and size < size_threshold:
         if rows_per_task is not None:
             est_rows = max(1, size // 24)
@@ -94,6 +95,36 @@ def spread_for_compute(df: DataFrame, size_threshold: int = 4 << 30,
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
+
+
+def _plan_bytes(plan) -> int | None:
+    """The optimizer's size estimate of a logical plan node, in bytes (no
+    Spark job); None when the node has no estimate."""
+    try:
+        return int(plan.stats().sizeInBytes())
+    except Exception:
+        return None
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """True when ``df``'s inputs are small enough for one task: the summed
+    size estimates of the optimized plan's LEAF relations are at most the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` (≤ 0: never).  The
+    leaves, not ``df`` itself: a self-join's size-only estimate multiplies
+    its sides (the LSH pair list of 25 rows estimates at ~10¹⁷ bytes),
+    while the data a single task would read is bounded by the scans.
+    Leaves without an estimate (an RDD from a Python list) do not fit."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit <= 0:
+        return False
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        size = _plan_bytes(leaves.apply(i))
+        if size is None:
+            return False
+        total += size
+    return total <= limit
 
 
 def normalize_text(col: str = "text") -> F.Column:
@@ -234,12 +265,9 @@ def lsh_candidate_pairs(
         "__salt",
         F.when(bucket_n <= max_bucket_size, F.lit(0)).otherwise(h16.cast("long") % n_sub),
     )
-    # both self-join sides reference this frame: materialize it ONCE
-    # (r18-opt) — without the checkpoint each side re-runs the signature
-    # transforms AND the band-key census shuffle+sort (the executed plan
-    # carried the whole subtree twice).  The frame is docs×N_BANDS rows of
-    # (id, b, bkey, salt) — index-sized, strictly smaller than the corpus.
-    capped = capped.localCheckpoint(eager=True)
+    # both self-join sides reference this frame lazily: the census window's
+    # exchange runs once and the second side reads it as a ReusedExchange
+    # (pinned in tests/test_dedup.py), so no build-time checkpoint job
     left = capped.alias("l")
     right = capped.alias("r")
     return (
@@ -276,8 +304,10 @@ def minhash_lsh_near_dups(
     The shingle arrays feed THREE plan branches (signatures + both join
     sides of the verification); ``persist=True`` materializes them once
     (MEMORY_AND_DISK) instead of recomputing the split/transform per branch
-    — the right call whenever the corpus scan is nontrivial.  Callers own
-    the unpersist (or let it age out)."""
+    — worth it only when the pairs are read more than once; a single
+    read (``connected_components`` on either path) recomputes the cheap
+    split instead of pinning storage.  Callers own the unpersist (or
+    let it age out)."""
     shingled = with_shingles(spread_for_compute(documents))
     if persist:
         shingled = shingled.persist()
@@ -290,79 +320,54 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over an undirected pair set → (node, component),
     component = the MIN node id reachable from the node (deterministic,
-    independent of iteration order).
+    independent of edge order).
 
     The step after near-dup pair generation in a training-data pipeline:
     transitively-linked documents form ONE dup cluster, and the keep-list is
     one canonical doc per component — pairwise drop-either-end would both
     over- and under-delete.
 
-    Algorithm: min-label propagation — each round every node takes the min
-    of its own label and its neighbors' labels, stopping at fixpoint.
-    Rounds = graph diameter, which for dup clusters is tiny (near-clique
-    clusters); for adversarial long-chain graphs the O(log n)-round
-    alternating small-star/large-star algorithm (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") swaps in without
-    changing the contract.  Lineage is truncated per round with an eager
-    localCheckpoint, so the loop's plan does not grow with the iteration
-    count; the convergence check is a scalar count, never a collect of
-    data rows.  No fixpoint within ``max_iter`` rounds raises
-    ``RuntimeError`` instead of returning unconverged labels.
-
-    Round shape (r7): TWO shuffles per round, down from three — the
-    neighbor labels and each node's own labeled row are UNIONED and
-    reduced by one groupBy-min (the self row carries an ``is_self`` flag,
-    so the old label rides the same aggregate and the convergence check
-    needs no join-back).  The edge set is hash-partitioned on the join key
-    ONCE before the loop, so every round's edge-label join reuses that
-    layout and only the (node-sized) label frame moves.
-    """
-    e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    edges = edges.repartition(F.col("b")).localCheckpoint(eager=True)
-    # seed labels with round 1's RESULT directly: label(u) = min(u, min
-    # neighbors) is one groupBy over the symmetric edge set — no join, no
-    # union — and is exactly what the first propagation round would
-    # produce from identity labels (r18: saves one full join round; for
-    # the near-clique dup graphs this path serves, the loop then only
-    # runs the confirming rounds).  Fixpoint and result are unchanged:
-    # every seed label is a reachable node id ≥ the component minimum.
-    labels = (
-        edges.groupBy("a")
-        .agg(F.min("b").alias("__mb"))
-        .select(
-            F.col("a").alias("node"),
-            F.least(F.col("__mb"), F.col("a")).alias("label"),
-        )
+    When the pair frame's inputs fit one task (``_fits_one_task``: the
+    optimizer's leaf-scan estimates, no job), the pairs are repartitioned
+    into ONE task and labelled by a union-find ``mapInPandas`` whose root
+    is always the smaller id — one lazy single-task stage, any diameter (a
+    10 000-link chain is one pass), nothing run or pinned at build time.  The labels
+    are no bigger than that task's state, so they come back with a
+    broadcast hint for the join that attaches them.  Otherwise the
+    distributed ``connected_components_star`` runs with ``max_iter``
+    (O(log² n) rounds, raising ``RuntimeError`` when it does not
+    converge).  Either way ids keep their input dtype; rows with a null
+    endpoint carry no edge."""
+    if not _fits_one_task(pairs):
+        return connected_components_star(pairs, src, dst, max_iter)
+    dtype = pairs.select(F.coalesce(src, dst)).schema[0].dataType  # the wider id type
+    e = pairs.select(F.col(src).cast(dtype).alias("a"), F.col(dst).cast(dtype).alias("b"))
+    schema = T.StructType(
+        [T.StructField("node", dtype), T.StructField("component", dtype)]
     )
-    for _ in range(max_iter):
-        nbr = edges.join(
-            labels.select(F.col("node").alias("b"), F.col("label").alias("l")), "b"
-        ).select(F.col("a").alias("node"), "l", F.lit(False).alias("is_self"))
-        cand = nbr.unionByName(
-            labels.select("node", F.col("label").alias("l"), F.lit(True).alias("is_self"))
-        )
-        merged = (
-            cand.groupBy("node")
-            .agg(
-                F.min("l").alias("label"),
-                # each node has exactly ONE self row (labels is keyed), so
-                # max-over-the-flagged-value recovers the previous label
-                F.max(F.when(F.col("is_self"), F.col("l"))).alias("__old"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = merged.filter(F.col("__old") != F.col("label")).count()
-        labels = merged.drop("__old")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "refusing to return partial labels (raise max_iter, or use "
-            "connected_components_star for long-diameter graphs)"
-        )
-    return labels.select(F.col("node"), F.col("label").alias("component"))
+
+    def label(batches):
+        import pandas as pd
+
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:
+                parent[x], x = root, parent[x]
+            return root
+
+        for pdf in batches:
+            for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+                ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+        nodes = list(parent)
+        yield pd.DataFrame({"node": nodes, "component": [find(n) for n in nodes]})
+
+    return F.broadcast(e.dropna().repartition(1).mapInPandas(label, schema))
 
 
 def connected_components_star(
@@ -373,11 +378,11 @@ def connected_components_star(
     public paper) → (node, component), component = min reachable node id —
     the SAME contract as ``connected_components``.
 
-    Why a second implementation: min-label propagation converges in
-    diameter rounds — ideal for near-clique dup clusters, adversarial for
-    long chains (a 10 000-link chain = 10 000 shuffle rounds).  Star
-    contraction converges in O(log² n) rounds REGARDLESS of diameter by
-    repeatedly rewiring every node to the minimum of its neighborhood:
+    The distributed path of ``connected_components``, for pair lists too
+    big for one task.  Star contraction converges in O(log² n) rounds
+    REGARDLESS of diameter (label propagation needs diameter rounds: a
+    10 000-link chain = 10 000 shuffle rounds) by repeatedly rewiring
+    every node to the minimum of its neighborhood:
 
     - large-star: every node's strictly-LARGER neighbors re-attach to the
       minimum of its closed neighborhood (keeps big ids falling toward
@@ -386,26 +391,23 @@ def connected_components_star(
       to that minimum (contracts the local star).
 
     Each phase is one groupBy + one join on the node key; edges are kept
-    directed ``(hi, lo)`` so both phases stay single-shuffle.  Lineage is
-    truncated per round (eager localCheckpoint); convergence = the edge
-    set reaches a fixpoint (scalar ``exceptAll().count()``, never a
+    directed ``(hi, lo)`` so both phases stay single-shuffle.  The pairs
+    are checkpointed once up front (nodes and edges both read them), and
+    lineage is truncated per round (eager localCheckpoint); convergence =
+    the edge set reaches a fixpoint (scalar ``exceptAll().count()``, never a
     collect).  At the fixpoint the graph is a forest of stars centered at
     component minima, so the label map is one final groupBy-min.  No
     fixpoint within ``max_iter`` rounds raises ``RuntimeError``."""
-    e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
+    # the pairs are read ONCE: nodes and edges both come from this
+    # checkpoint, so a lazy pair plan (LSH + verification) runs one time
+    e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
+        eager=True
     )
-    nodes = (
-        pairs.select(F.col(src).alias("node"))
-        .union(pairs.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = e.select(F.col("a").alias("node")).union(e.select("b")).distinct()
     # directed invariant: hi > lo
     edges = (
-        e.select(
-            F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
-        )
+        e.filter(F.col("a") != F.col("b"))
+        .select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
         .distinct()
         .localCheckpoint(eager=True)
     )

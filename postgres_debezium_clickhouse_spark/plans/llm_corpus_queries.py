@@ -137,18 +137,18 @@ def q_corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     different planted eval text with them.  "abcd ab ae" under merges
     [a+b, ab+c, d+e] folds to [abc·d, ab, a·e] = 5 subwords over 8 base
     symbols per doc, so every per-doc stat is a constant the oracle
-    states; a broken rank order or application pass shifts the counts."""
-    from ..operators.tokenizer import bpe_encode, bpe_top_merges
+    states; a broken rank order or application pass shifts the counts.
+    The learned table feeds the Arrow encoder as a lazy frame, so building
+    the query runs no Spark job."""
+    from ..operators.tokenizer import bpe_encode_arrow, bpe_top_merges
 
     train = load_table(spark, sf_dir, "documents").select(
         F.lit("abc abc ab de").alias("text")
     )
-    table = sorted(bpe_top_merges(train, k=3).collect(), key=lambda r: r.merge_rank)
-    merges = [(r.left_sym, r.right_sym) for r in table]
     eval_docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.lit("abcd ab ae").alias("text")
     )
-    return bpe_encode(eval_docs, merges)
+    return bpe_encode_arrow(eval_docs, bpe_top_merges(train, k=3))
 
 
 def q_corpus_bytebpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

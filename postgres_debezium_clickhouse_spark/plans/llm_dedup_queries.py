@@ -48,7 +48,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     but A≁C, dropping per-pair either loses C's cluster membership or keeps
     a dup — the component label is the correct grouping."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_near_dups(docs, threshold=0.8, persist=True)
+    pairs = minhash_lsh_near_dups(docs, threshold=0.8)
     comp = connected_components(pairs.select("doc_a", "doc_b"))
     return (
         docs.select("doc_id")
@@ -59,12 +59,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract and oracle as ``dedup_clusters``, computed by the
-    O(log²n)-round star-contraction algorithm instead of diameter-round
-    min-label propagation — the documented scale swap-in for long-chain
-    dup graphs, driver-checked against the identical recursive-CTE
-    closure."""
+    O(log²n)-round star-contraction algorithm — the distributed path
+    ``connected_components`` takes when the pairs do not fit one task —
+    driver-checked against the identical recursive-CTE closure."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_near_dups(docs, threshold=0.8, persist=True)
+    pairs = minhash_lsh_near_dups(docs, threshold=0.8)
     comp = connected_components_star(pairs.select("doc_a", "doc_b"))
     return (
         docs.select("doc_id")
@@ -86,7 +85,7 @@ def q_corpus_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE closure + the same md5-prefix split rule on the
     canonical id."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_near_dups(docs, threshold=0.8, persist=True)
+    pairs = minhash_lsh_near_dups(docs, threshold=0.8)
     comp = connected_components(pairs.select("doc_a", "doc_b"))
     asg = (
         docs.select("doc_id")
@@ -266,7 +265,7 @@ def q_dedup_cluster_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     else is the drop set.  The end-to-end answer a curation pipeline
     actually needs from the dedup stage."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_near_dups(docs, threshold=0.8, persist=True)
+    pairs = minhash_lsh_near_dups(docs, threshold=0.8)
     comp = connected_components(pairs.select("doc_a", "doc_b"))
     assignment = (
         docs.select("doc_id")

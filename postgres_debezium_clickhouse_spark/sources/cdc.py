@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 from ..functions import ts_to_micros
 from ..schemas import CUSTOMER_CDC_ROW, ORDERS_CDC_ROW
 from ..session import ensure_session_confs
+from .files import _read_parquet
 
 N_PARTITIONS = 8  # synthetic topic partition count
 
@@ -133,7 +134,8 @@ def materialized_wire_log(
             import shutil
 
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    # the published directory is never rewritten: its schema is cached
+    return _read_parquet(spark, path, immutable=True)
 SNAPSHOT_TS = 1_000_000
 UPDATE1_TS = 2_000_000
 UPDATE2_TS = 3_000_000

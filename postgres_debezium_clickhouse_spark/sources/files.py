@@ -11,6 +11,9 @@ replaces bucket-watch + Kafka hop (SURVEY §3.3).
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,6 +34,33 @@ TABLES = [
 ]
 
 
+#: inferred parquet schemas keyed on (realpath, st_mtime_ns, st_size) of a
+#: regular file: a rewritten file gets a new key, so a hit is never stale
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str, immutable: bool = False) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs its footer (schema inference)
+    job only on the first read of a regular file; later reads pass the
+    cached schema.  Non-local paths are always inferred, and so are
+    directories — a file rewritten inside one leaves the directory's stat
+    unchanged — unless the caller vouches with ``immutable`` that the
+    directory is published once and never rewritten (a content-addressed
+    cache entry)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not (stat.S_ISREG(st.st_mode) or immutable):
+        return spark.read.parquet(path)
+    key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
+    if key not in _SCHEMAS:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S9 — one fixture table (columnar parquet scan; Catalyst pushes
     filters/pruning into the scan automatically).
@@ -39,12 +69,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (illegal for Spark's parquet reader) — read as int64 ns via
     ``nanosAsLong`` (session.py) and truncate to µs TIMESTAMP_NTZ, exactly
     what DuckDB's reader does, so oracle comparisons see identical values.
+    Repeated loads of an unchanged fixture file run no Spark job
+    (``_read_parquet``).
     """
     # The caller's session (e.g. the driver harness's) may not carry the
     # engine-required confs (ANSI off, nanos read path) — set them here,
     # idempotently, so every query works on any session.
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for col_name, dtype in df.dtypes:
         if name == "events" and col_name == "ts" and dtype == "bigint":
             df = df.withColumn(

@@ -7,6 +7,7 @@ scale-oriented; tests only shrink parallelism for latency.
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -36,3 +37,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def sf01_dir() -> str:
+    """The sf0.01 fixtures next to the default ones; skips when absent."""
+    path = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    if not os.path.isdir(path):
+        pytest.skip("no sf0.01 fixtures")
+    return path

@@ -32,8 +32,6 @@ PKG = os.path.join(
 # lines as it appears times in this list.
 ALLOWED: dict[str, list[tuple[str, str]]] = {
     "plans/llm_corpus_queries.py": [
-        ("bpe_top_merges(train, k=3).collect()",
-         "k-row merge table (k=3) — tokenizer training emits top-k only"),
         ("bytebpe_top_merges(train, k=3).collect()",
          "k-row merge table (k=3)"),
     ],
@@ -45,7 +43,7 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
     ],
     "operators/graph.py": [
         (".collect()[0].d",
-         "1-row convergence scalar per CC iteration"),
+         "1-row convergence scalar per PageRank iteration"),
     ],
     "operators/similarity.py": [
         ("limit(n_centroids).collect()",
@@ -60,10 +58,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "probed-cell ids: ≤ n_cells distinct values"),
     ],
     "operators/tokenizer.py": [
-        (".collect()",
-         "BPE top-k merge table (k rows)"),
-        (".collect()",
-         "byte-BPE top-k merge table (k rows)"),
         ('.select(F.explode(F.expr(_WP_SYMS)).alias("s")).distinct().collect()',
          "wordpiece alphabet: distinct symbols (vocab-bounded)"),
         ("wordpiece_top_merges(documents, k=k, text_col=text_col).collect()",

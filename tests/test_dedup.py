@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
+from _jobs import spark_jobs
 from pyspark.sql import functions as F
 
 from postgres_debezium_clickhouse_spark.operators.dedup import (
@@ -90,14 +93,51 @@ def test_ngram_jaccard_blocked_respects_blocks(spark):
     assert pairs[(4, 5)] == 0.0  # same block, disjoint shingles
 
 
+def _pairs(spark, edges):
+    """A pair frame built from pandas: a LocalRelation, whose size estimate
+    lets ``connected_components`` take its one-task kernel (a frame from
+    a Python list has no estimate and takes the distributed path)."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(edges, columns=["doc_a", "doc_b"]))
+
+
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _union_find(edges):
+    """Sequential union-find reference: node → min id of its component."""
+    parent = {n: n for e in edges for n in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    members = {}
+    for n in parent:
+        members.setdefault(find(n), set()).add(n)
+    return {n: min(m) for m in members.values() for n in m}
+
+
 def test_connected_components_transitive_chain(spark):
     from postgres_debezium_clickhouse_spark.operators.dedup import connected_components
 
     # chain 1-2-3 (1~3 only transitively), separate pair 10-11, edge given
-    # in both orientations to exercise the symmetrize+distinct
-    pairs = spark.createDataFrame(
-        [(1, 2), (3, 2), (10, 11)], ["doc_a", "doc_b"]
-    )
+    # in both orientations
+    pairs = _pairs(spark, [(1, 2), (3, 2), (10, 11)])
     out = {r.node: r.component for r in connected_components(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
@@ -105,24 +145,89 @@ def test_connected_components_transitive_chain(spark):
 def test_connected_components_long_chain_converges(spark):
     from postgres_debezium_clickhouse_spark.operators.dedup import connected_components
 
-    # a 12-node path graph: worst case for min-propagation (diameter 11)
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], ["doc_a", "doc_b"]
-    )
+    # a 12-node path graph, edges listed from the far end (diameter 11)
+    pairs = _pairs(spark, [(i + 1, i) for i in reversed(range(12))])
     out = {r.node: r.component for r in connected_components(pairs).collect()}
     assert set(out.values()) == {0} and len(out) == 13
 
 
-def test_connected_components_refuses_unconverged_labels(spark):
-    """A path longer than the round budget must raise, not return labels
-    that still split one component into several."""
+def test_connected_components_kernel_labels_long_path(spark):
+    """A 10 000-link path is one pass of the one-task union-find kernel:
+    every node labelled 0, ids keep their input dtype."""
+    from pyspark.sql import types as T
+
+    from postgres_debezium_clickhouse_spark.operators.dedup import (
+        connected_components,
+        _fits_one_task,
+    )
+
+    n = 10_000
+    pairs = spark.range(n).select(
+        F.col("id").cast("int").alias("doc_a"), (F.col("id") + 1).cast("int").alias("doc_b")
+    )
+    assert _fits_one_task(pairs)
+    comp = connected_components(pairs)
+    assert "MapInPandas" in comp._jdf.queryExecution().executedPlan().toString()
+    assert comp.schema["node"].dataType == T.IntegerType()
+    out = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n")).collect()
+    assert [(r.component, r.n) for r in out] == [(0, n + 1)]
+
+
+def test_cc_guard_sizes_on_leaves_not_join_estimate(spark, sf01_dir):
+    """The LSH pair list's own size-only estimate is a self-join product
+    (~10¹⁷+ bytes for a few dozen rows); the guard sums the leaf scans
+    instead and picks the kernel."""
+    from postgres_debezium_clickhouse_spark.operators.dedup import _fits_one_task
+    from postgres_debezium_clickhouse_spark.sources.files import load_table
+
+    docs = load_table(spark, sf01_dir, "documents")
+    pairs = minhash_lsh_near_dups(docs, threshold=0.8).select("doc_a", "doc_b")
+    estimate = int(pairs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    assert estimate > 10**9 * limit
+    assert _fits_one_task(pairs)
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        assert not _fits_one_task(pairs)
+
+
+def test_star_path_reads_the_lsh_pairs_once(spark):
+    """On the distributed path the lazy LSH pair plan runs ONCE: star
+    contraction checkpoints the pairs and builds its nodes and edges from
+    that checkpoint, so the documents are read exactly as often as by one
+    execution of the pairs."""
+    from pyspark.sql.types import StringType
+
     from postgres_debezium_clickhouse_spark.operators.dedup import connected_components
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], ["doc_a", "doc_b"]
-    )
-    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
-        connected_components(pairs, max_iter=2)
+    reads = spark.sparkContext.accumulator(0)
+
+    def seen(text):
+        reads.add(1)
+        return text
+
+    docs = _docs(spark).withColumn("text", F.udf(seen, StringType())("text"))
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        pairs = minhash_lsh_near_dups(docs, threshold=0.7).select("doc_a", "doc_b")
+        pairs.write.format("noop").mode("overwrite").save()
+        once, reads.value = reads.value, 0
+        with spark_jobs(spark) as jobs:
+            comp = connected_components(pairs)
+        labels = {r.node: r.component for r in comp.collect()}
+    assert jobs, "the star path runs its rounds eagerly"
+    assert once > 0 and reads.value == once
+    assert labels == {1: 1, 2: 1, 3: 1, 5: 1}
+
+
+def test_connected_components_refuses_unconverged_labels(spark):
+    """On the distributed path, a path longer than the round budget must
+    raise, not return labels that still split one component into
+    several."""
+    from postgres_debezium_clickhouse_spark.operators.dedup import connected_components
+
+    pairs = _pairs(spark, [(i, i + 1) for i in range(6)])
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+            connected_components(pairs, max_iter=2)
 
 
 def test_star_cc_refuses_unconverged_labels(spark):
@@ -137,10 +242,9 @@ def test_star_cc_refuses_unconverged_labels(spark):
         connected_components_star(pairs, max_iter=1)
 
 
-@pytest.mark.slow
 def test_connected_components_matches_union_find(spark):
-    """Property check on a pseudo-random graph: the distributed min-label
-    propagation must agree with a sequential union-find."""
+    """Property check on a pseudo-random graph: the union-find kernel must
+    agree with an in-test sequential union-find."""
     import random as _random
 
     from postgres_debezium_clickhouse_spark.operators.dedup import connected_components
@@ -149,28 +253,41 @@ def test_connected_components_matches_union_find(spark):
     nodes = list(range(200))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(150)]
     edges = [(a, b) for a, b in edges if a != b]
+    got = {r.node: r.component for r in connected_components(_pairs(spark, edges)).collect()}
+    assert got == _union_find(edges)
 
-    parent = {n: n for n in nodes}
 
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+def test_lsh_pairs_build_lazily_and_reuse_the_census_exchange(spark):
+    """Building the candidate pairs runs no job; executing them shuffles the
+    band-key census once — the second self-join side is a ReusedExchange."""
+    with spark_jobs(spark) as jobs:
+        pairs = lsh_candidate_pairs(_docs(spark))
+    assert jobs == []
+    assert {(r.doc_a, r.doc_b) for r in pairs.collect()} >= {(1, 2), (1, 5), (2, 5)}
+    assert "ReusedExchange" in pairs._jdf.queryExecution().executedPlan().toString()
 
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expected = {}
-    for n in {x for e in edges for x in e}:  # only nodes appearing in pairs
-        root = find(n)
-        expected.setdefault(root, set()).add(n)
-    want = {n: min(members) for members in expected.values() for n in members}
 
-    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    got = {r.node: r.component for r in connected_components(pairs).collect()}
-    assert got == want
+def test_cluster_and_bpe_queries_build_lazily(spark, sf_dir):
+    """Once a fixture's schema is cached, building ``dedup_clusters`` or
+    ``corpus_bpe_encode`` runs no Spark job, and executing them leaves the
+    session's cached and checkpointed storage at its starting level."""
+    from postgres_debezium_clickhouse_spark.plans.llm_corpus_queries import (
+        q_corpus_bpe_encode,
+    )
+    from postgres_debezium_clickhouse_spark.plans.llm_dedup_queries import q_dedup_clusters
+
+    def stored():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return sum(r.memSize() + r.diskSize() for r in infos)
+
+    start = stored()
+    for query in (q_dedup_clusters, q_corpus_bpe_encode):
+        query(spark, sf_dir)  # the first build may read the fixture footer
+        with spark_jobs(spark) as jobs:
+            df = query(spark, sf_dir)
+        assert jobs == [], query.__name__
+        df.write.format("noop").mode("overwrite").save()
+        assert stored() <= start, query.__name__
 
 
 def test_incremental_dedup_batch_vs_corpus(spark):
@@ -219,10 +336,10 @@ def test_incremental_dedup_shuffle_fallback_same_result(spark):
 
 
 @pytest.mark.slow
-def test_star_cc_matches_min_label_and_union_find(spark):
+def test_star_cc_matches_kernel_and_union_find(spark):
     """The star-contraction implementation must produce EXACTLY the same
-    (node, component) map as min-label propagation / sequential union-find
-    on a pseudo-random graph."""
+    (node, component) map as the union-find kernel and a sequential
+    union-find on a pseudo-random graph."""
     import random as _random
 
     from postgres_debezium_clickhouse_spark.operators.dedup import (
@@ -234,17 +351,17 @@ def test_star_cc_matches_min_label_and_union_find(spark):
     nodes = list(range(150))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(120)]
     edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+    pairs = _pairs(spark, edges)
     want = {r.node: r.component for r in connected_components(pairs).collect()}
     got = {r.node: r.component for r in connected_components_star(pairs).collect()}
-    assert got == want
+    assert got == want == _union_find(edges)
 
 
 @pytest.mark.slow
 def test_star_cc_long_chain_logarithmic_rounds(spark):
-    """A 200-link path graph (diameter 200): min-label propagation needs
+    """A 200-link path graph (diameter 200): label propagation would need
     ~200 rounds, star contraction must finish well inside its default
-    iteration budget — the scale reason the variant exists."""
+    iteration budget — why it is the distributed path."""
     from postgres_debezium_clickhouse_spark.operators.dedup import (
         connected_components_star,
     )

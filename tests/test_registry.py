@@ -95,6 +95,7 @@ def test_no_query_plans_a_cartesian_product(spark, sf_dir):
         "corpus_tokenizer_fertility",  # wraps the encode chain above + lang agg (r15)
         "corpus_unigram_prune",     # same attaches + vocab-sized alt-DP map (r12)
         "corpus_wordpiece_encode",  # scalar attach: 1-row broadcast piece map (r12)
+        "corpus_bpe_encode",        # scalar attach: 1-row broadcast learned merge table (k rows)
         "text_bm25_topk",           # scalar attach: 1-row broadcast N/avgdl totals (r12)
         "corpus_dsir_weights",      # scalar attaches: 1-row broadcast feature totals (r12)
         "text_bigram_backoff",      # scalar attach: 1-row broadcast corpus-total (r12)

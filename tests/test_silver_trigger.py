@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 
+from _jobs import ran_stages, spark_jobs
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -21,7 +22,15 @@ EVENTS = "id long, val string, op string, ts_ms long, offset long"
 def _upsert(spark, rows, src, store, ckpt, schema=EVENTS):
     """Append ``rows`` as one JSON file under ``src`` and run the upsert
     sink over it to completion; returns the finished query."""
+    _feed(spark, rows, src, schema)
+    return _drain(spark, src, store, ckpt, schema)
+
+
+def _feed(spark, rows, src, schema=EVENTS):
     spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").json(src)
+
+
+def _drain(spark, src, store, ckpt, schema=EVENTS):
     q = pl.silver_upsert_stream(
         spark.readStream.schema(schema).json(src), store, ckpt,
         keys=["id"], available_now=True,
@@ -176,18 +185,6 @@ def test_manifest_without_union_flag_reads_through_merge_schema(spark, tmp_path)
 # -- per-trigger budget ---------------------------------------------------
 
 
-def _group_stages(sc, group):
-    st_ = sc.statusTracker()
-    jobs = st_.getJobIdsForGroup(group)
-    stages = []
-    for j in jobs:
-        for s in st_.getJobInfo(j).stageIds:
-            info = st_.getStageInfo(s)
-            if info is not None and info.numCompletedTasks > 0:
-                stages.append(info)
-    return jobs, stages
-
-
 def test_steady_trigger_budget_and_layout(spark, tmp_path):
     """A steady-state trigger of 30 events into a 64-bucket store:
 
@@ -210,20 +207,19 @@ def test_steady_trigger_budget_and_layout(spark, tmp_path):
     # warm-up trigger, then the measured one (each its own query run)
     for rep in (1, 2):
         batch = [((i * 97 + rep) % 3000, f"u{rep}", "u", 1 + rep, i) for i in range(30)]
-        q = _upsert(spark, batch, f"{src}{rep}", store, f"{ckpt}{rep}")
-    # `q` and `batch` are now the measured trigger's
+        _feed(spark, batch, f"{src}{rep}")
+        with spark_jobs(spark) as jobs:
+            _drain(spark, f"{src}{rep}", store, f"{ckpt}{rep}")
+    # `jobs` and `batch` are now the measured trigger's
 
-    jobs, stages = _group_stages(sc, str(q.runId))
+    stages = ran_stages(spark, jobs)
     assert 0 < len(jobs) <= 7, len(jobs)
     assert not [s.name for s in stages if s.name.startswith("parquet at")]
     assert max(s.numTasks for s in stages) <= cores + 1, [(s.name, s.numTasks) for s in stages]
 
-    sc.setJobGroup("open-full-read", "open a full silver read")
-    try:
+    with spark_jobs(spark) as open_jobs:
         full = pl.read_silver(spark, store)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("open-full-read") == []
+    assert open_jobs == []
     assert len(_manifest(store)["files"]) == 64
 
     m = _manifest(store)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from _jobs import spark_jobs
 
 from postgres_debezium_clickhouse_spark.operators.similarity import (
     cosine_topk,
@@ -656,14 +657,10 @@ def test_ivfpq_rerank_rejects_shortlist_without_adc_d2(spark):
 
     docs = _pq_fixture(spark, n=8)
     bad = spark.createDataFrame([(0, 5)], "query_id long, neighbor_id long")
-    sc = spark.sparkContext
-    sc.setJobGroup("shortlist-schema-check", "no job expected")
-    try:
+    with spark_jobs(spark) as jobs:
         with pytest.raises(ValueError, match="adc_d2"):
             ivfpq_rerank_topk(docs, docs, docs, docs, docs, shortlist_df=bad)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("shortlist-schema-check") == []
+    assert jobs == []
 
 
 def test_ivfpq_encode_init_books_equal_full_residual_init(spark):

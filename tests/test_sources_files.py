@@ -73,3 +73,22 @@ def test_compute_table_stats_feeds_cbo(spark, tmp_path):
         assert stats_rows and "50 rows" in stats_rows[0].data_type
     finally:
         spark.sql("DROP TABLE IF EXISTS stats_probe")
+
+
+def test_load_table_caches_a_fixture_schema_until_the_file_changes(spark, tmp_path):
+    """A second load of an unchanged parquet file runs no footer job; a
+    rewritten file is read with its new schema."""
+    import pandas as pd
+    from _jobs import spark_jobs
+
+    path = tmp_path / "t.parquet"
+    pd.DataFrame({"a": [1, 2]}).to_parquet(path)
+    assert files_src.load_table(spark, str(tmp_path), "t").columns == ["a"]
+    with spark_jobs(spark) as jobs:
+        again = files_src.load_table(spark, str(tmp_path), "t")
+    assert jobs == []
+    assert sorted(r.a for r in again.collect()) == [1, 2]
+    pd.DataFrame({"a": [3], "b": ["x"]}).to_parquet(path)
+    fresh = files_src.load_table(spark, str(tmp_path), "t")
+    assert fresh.columns == ["a", "b"]
+    assert [tuple(r) for r in fresh.collect()] == [(3, "x")]

@@ -6,6 +6,7 @@ stays time-travelable)."""
 from __future__ import annotations
 
 import pytest
+from _jobs import ran_stages, spark_jobs
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -131,27 +132,11 @@ def test_merge_stage_width_stays_bounded(spark, dirs):
     -> 3.4s at sf0.001).  The session conf (session.py) must keep the
     fix; this test recreates the scale session's initialPartitionNum and
     asserts no merge stage runs ultra-wide."""
-    import threading
-
     from pyspark.sql import functions as F
-
-    tracker = spark.sparkContext.statusTracker()
-    seen = []
-    stop = threading.Event()
-
-    def poll():
-        while not stop.is_set():
-            for sid in tracker.getActiveStageIds() or []:
-                info = tracker.getStageInfo(sid)
-                if info:
-                    seen.append(info.numTasks)
-            stop.wait(0.01)
 
     df = spark.createDataFrame(
         [(i % 50, float(i)) for i in range(10_000)], "k long, v double"
     )
-    t = threading.Thread(target=poll, daemon=True)
-    t.start()
     prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     try:
         spark.conf.set(
@@ -159,15 +144,15 @@ def test_merge_stage_width_stays_bounded(spark, dirs):
         agg = df.groupBy("k").agg(F.sum("v").alias("s"))
         agg.persist()
         try:
-            agg.count()
-            agg.select("k").distinct().count()
+            with spark_jobs(spark) as jobs:
+                agg.count()
+                agg.select("k").distinct().count()
         finally:
             agg.unpersist()
     finally:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum", prev)
-        stop.set()
-        t.join(2)
+    seen = [s.numTasks for s in ran_stages(spark, jobs)]
     assert seen, "listener saw no stages"
     assert max(seen) <= 256, f"cached-plan shuffle ran a {max(seen)}-task stage"
 

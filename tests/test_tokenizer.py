@@ -5,7 +5,11 @@ deterministically, and the loop must stop early when no pair remains."""
 
 from __future__ import annotations
 
+import collections
+
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from postgres_debezium_clickhouse_spark.operators.tokenizer import (
@@ -21,6 +25,53 @@ def test_bpe_merged_symbol_feeds_next_round(spark):
     # round 1: (h,e)=15 ties (e,l)=15 -> 'e' < 'h' wins; then el+l, h+ell
     assert got == [("e", "l", "el", 15), ("el", "l", "ell", 15),
                    ("h", "ell", "hell", 15)]
+
+
+def _reference_bpe(vocab: dict, k: int) -> list:
+    """Textbook BPE over a {word: count} vocabulary: each round merges the
+    most frequent adjacent pair (ties: smallest (left, right)), scanning
+    every word left to right without overlap."""
+    words = {tuple(w): c for w, c in vocab.items()}
+    table = []
+    for rank in range(1, k + 1):
+        counts = collections.Counter()
+        for syms, c in words.items():
+            for pair in zip(syms, syms[1:]):
+                counts[pair] += c
+        if not counts:
+            break
+        best = max(counts.values())
+        left, right = min(p for p, n in counts.items() if n == best)
+        table.append((rank, left, right, left + right, best))
+        merged = {}
+        for syms, c in words.items():
+            out, i = [], 0
+            while i < len(syms):
+                if syms[i:i + 2] == (left, right):
+                    out.append(left + right)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            merged[tuple(out)] = c
+        words = merged
+    return table
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    vocab=st.dictionaries(st.text("abc", min_size=1, max_size=6),
+                          st.integers(1, 3), min_size=1, max_size=8),
+    k=st.integers(1, 6),
+)
+def test_bpe_learner_matches_python_reference(spark, vocab, k):
+    """Counts of 1-3 over a three-letter alphabet tie often: the one-task
+    learner must make the reference's choice in every round."""
+    text = " ".join(w for w, c in vocab.items() for _ in range(c))
+    docs = spark.createDataFrame([(text,)], ["text"])
+    got = sorted(tuple(r) for r in bpe_top_merges(docs, k=k).collect())
+    assert got == _reference_bpe(vocab, k)
 
 
 def test_bpe_stops_early_when_no_pairs_remain(spark):
@@ -217,6 +268,24 @@ def test_bpe_encode_arrow_k100_learned_merges(spark):
     expr40 = sorted(map(tuple, bpe_encode(docs_df, rows[:40]).collect()))
     arrow40 = sorted(map(tuple, bpe_encode_arrow(docs_df, rows[:40]).collect()))
     assert arrow40 == expr40
+
+
+def test_bpe_encode_arrow_takes_the_learned_frame(spark):
+    """The merge frame from ``bpe_top_merges`` encodes exactly like its
+    collected rows, without a job at build time."""
+    from _jobs import spark_jobs
+
+    from postgres_debezium_clickhouse_spark.operators.tokenizer import bpe_encode_arrow
+
+    train = spark.createDataFrame([("hello hello hell yellow",)] * 3, ["text"])
+    docs = spark.createDataFrame(
+        [(1, "hello yell"), (2, "low hell o"), (3, "")], "doc_id long, text string")
+    rows = bpe_top_merges(train, k=4).collect()
+    with spark_jobs(spark) as jobs:
+        lazy = bpe_encode_arrow(docs, bpe_top_merges(train, k=4))
+    assert jobs == []
+    assert sorted(map(tuple, lazy.collect())) == sorted(
+        map(tuple, bpe_encode_arrow(docs, rows).collect()))
 
 
 def test_bpe_encode_arrow_preserves_id_dtype(spark):
