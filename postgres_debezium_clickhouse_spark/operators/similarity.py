@@ -1089,7 +1089,10 @@ def ivfpq_rerank_topk(
     (the rerank-recall query shares one materialized shortlist between
     its adc and rerank branches this way).  Its columns are checked from
     the schema at call time: a frame without ``query_id_col``,
-    ``neighbor_id`` or ``adc_d2`` raises ``ValueError``."""
+    ``neighbor_id`` or ``adc_d2`` raises ``ValueError``.  Its per-query
+    row count is checked at execute time, inside the rerank window (no
+    extra job): a query with more than ``shortlist`` rows fails the
+    query with a ``raise_error`` naming it."""
     from pyspark.sql import Window
 
     if shortlist_df is not None:
@@ -1121,8 +1124,18 @@ def ivfpq_rerank_topk(
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("exact_d2").asc(), F.col("neighbor_id").asc()
     )
+    rn = F.row_number().over(w)
+    if shortlist_df is not None:
+        # same partition and order as the rank: one Window operator
+        n = F.count(F.lit(1)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        rn = F.when(n > shortlist, F.raise_error(F.concat(
+            F.lit(f"shortlist_df holds more than {shortlist} rows for "
+                  f"{query_id_col} "), F.col(query_id_col).cast("string"),
+            F.lit(f"; pass the output of ivfpq_adc_topk(..., k={shortlist})"),
+        ))).otherwise(rn)
     return (
-        exact.withColumn("__rn", F.row_number().over(w))
+        exact.withColumn("__rn", rn)
         .filter(F.col("__rn") <= k)
         .select(query_id_col, "neighbor_id", "exact_d2", "adc_d2")
     )

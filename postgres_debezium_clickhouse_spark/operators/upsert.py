@@ -23,10 +23,11 @@ exactly the shuffle a keyed upsert fundamentally requires, nothing more.
 ``apply_cdc`` merges *per micro-batch*: it unions the (small) batch with
 only the current rows whose keys appear in the batch when
 ``changed_keys_only=True``, so a 1000-executor cluster never rewrites the
-whole table per trigger.  The bucketed silver store bounds ``current``
-to the touched buckets before the merge, so its sinks use
-:func:`merge_touched` instead — one aggregate over batch ∪ current, no
-changed-keys pass.  AQE handles skewed keys (session.py).
+whole table per trigger.  The bucketed silver store is merge-on-read:
+its readers apply :func:`merge_touched` of the stored delta rows over the
+base rows, and its fold applies it to batch ∪ deltas over the touched
+buckets' rows — one aggregate over events ∪ current, no changed-keys
+pass.  AQE handles skewed keys (session.py).
 """
 
 from __future__ import annotations

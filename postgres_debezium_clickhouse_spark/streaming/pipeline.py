@@ -22,28 +22,34 @@ Mapping:
   errors.tolerance=none, abcsvb-connector-secure.json:51-53)
 
 Scale: bronze append is shuffle-free (narrow projection → partitioned
-parquet).  Silver upsert is bounded O(touched buckets) per trigger, for
-both the merge and its write I/O: only the buckets whose keys appear in
-the batch are read, merged (one latest-wins aggregate over batch ∪ those
-buckets' rows, ``operators.upsert.merge_touched``) and re-published at
-core width; every other bucket's files are untouched (the analogue of
-ReplacingMergeTree merging only affected parts,
-basic_example/clickhouse.sql:51).  A trigger lists no directories and
-reads no parquet footers: the manifest names every live file and records
-the store's union schema.
+parquet).  The keyed upsert sinks are merge-on-read, like the reference's
+ReplacingMergeTree (basic_example/clickhouse.sql:40-82): each insert
+lands as a part, ``SELECT … FINAL`` collapses versions at read time, and
+background merges fold parts later.  Here a trigger writes its batch's
+latest-wins rows as ONE delta file — no touched-bucket collect, no read
+of current rows — and every reader applies FINAL over base ∪ deltas
+(one latest-wins aggregate, ``operators.upsert.merge_touched``).  Every
+few triggers the trigger is instead the FOLD: only the buckets whose keys
+appear in the batch or the deltas are read, merged and re-published at
+core width, and the deltas are cleared; every other bucket's files are
+untouched.  A trigger lists no directories and reads no parquet footers:
+the manifest names every live file and records the store's union schema.
 
 Silver store layout (manifest-committed, bucketed)::
 
     <path>/_manifest.json                      # atomic commit point
-    <path>/__epoch=<v>/__bucket=<b>/part-*.parquet
+    <path>/__epoch=<v>/__bucket=<b>/part-*.parquet   # base: "files"
+    <path>/__epoch=<v>/part-*.parquet                # a delta: "deltas"
 
-``_manifest.json`` lists the LIVE data files; each publish writes fresh
-files for the touched buckets under a new ``__epoch`` dir, then atomically
-replaces the manifest (write-temp + ``os.replace``).  Files referenced by
-any committed manifest are never mutated, so a reader that loaded a
-manifest sees a consistent snapshot even while a publish is in flight;
-replaced files stay on disk until ``vacuum_silver`` passes their grace
-period.
+``_manifest.json`` lists the LIVE data files: ``files`` (the bucketed
+base) and ``deltas`` (one key-sorted file per trigger since the last
+fold, with ``delta_spec`` naming the merge columns).  Each publish writes
+fresh files under a new ``__epoch`` dir, then atomically replaces the
+manifest (write-temp + ``os.replace``) — exactly one manifest commit per
+trigger, delta or fold.  Files referenced by any committed manifest are
+never mutated, so a reader that loaded a manifest sees a consistent
+snapshot even while a publish is in flight; replaced files stay on disk
+until ``vacuum_silver`` passes their grace period.
 
 Writer contract: ONE writer per store (the streaming sink; run
 ``compact_silver`` only while the stream is stopped).  Two guards turn a
@@ -68,6 +74,7 @@ import json
 import os
 import shutil
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -76,7 +83,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.upsert import DELETED_FLAG, merge_touched
+from ..operators.upsert import DELETED_FLAG, apply_cdc, merge_touched
 
 
 def _start(writer, available_now: bool,
@@ -125,7 +132,7 @@ from .commit import (  # noqa: E402  (re-exported: the store's public commit API
     ManifestCommitError,
 )
 
-#: default number of hash buckets for a new silver store.  Per-trigger
+#: default number of hash buckets for a new silver store.  A fold's
 #: write I/O is O(touched buckets); at 100 TB raise this so a single
 #: bucket stays executor-sized (the value is recorded in the manifest at
 #: store creation, so readers/writers never depend on the default).
@@ -205,11 +212,12 @@ def _read_manifest_version(path: str, version: int) -> dict:
             f"no manifest for version {version} at {path}; "
             f"available: {silver_versions(path)}"
         ) from None
-    missing = [f for f in manifest["files"] if not os.path.exists(os.path.join(path, f))]
+    files = manifest["files"] + manifest.get(DELTAS, [])
+    missing = [f for f in files if not os.path.exists(os.path.join(path, f))]
     if missing:
         raise ValueError(
             f"version {version} at {path} was vacuumed: {len(missing)} of "
-            f"{len(manifest['files'])} files gone (first: {missing[0]}); "
+            f"{len(files)} files gone (first: {missing[0]}); "
             "retain versions with vacuum_silver(retain_versions=...)"
         )
     return manifest
@@ -232,17 +240,24 @@ def _manifest_schema(manifest: dict) -> T.StructType:
     return T.StructType.fromJson(json.loads(manifest["schema"]))
 
 
-def _read_live_files(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    """Load the manifest's live-file set as one DataFrame.  ``basePath``
+#: manifest keys of the merge-on-read layout: ``deltas`` lists the delta
+#: files (one per trigger since the last fold, oldest first), and
+#: ``delta_spec`` the keys and version/tiebreak/op columns they merge by
+DELTAS = "deltas"
+DELTA_SPEC = "delta_spec"
+
+
+def _read_files(spark: SparkSession, path: str, manifest: dict,
+                files: list[str]) -> DataFrame:
+    """Load ``files`` (store-relative) as one DataFrame.  ``basePath``
     keeps the ``__epoch``/``__bucket`` partition columns derivable.
     Additive schema evolution across epochs (an untouched bucket may
     predate a column the source added, or keep one it dropped) is honored
     by reading with the manifest's union schema: files lacking a column
     read it as NULL, and no footer job runs.  A manifest without the
     union flag (written before it existed) reads through ``mergeSchema``,
-    which opens every footer.  A zero-file manifest (e.g. compaction GC'd
-    every row) reconstructs an empty frame from the recorded schema."""
-    files = manifest["files"]
+    which opens every footer.  No files (e.g. compaction GC'd every row)
+    reconstructs an empty frame from the recorded schema."""
     if not files:
         return spark.createDataFrame([], _manifest_schema(manifest))
     reader = spark.read.option("basePath", path)
@@ -253,6 +268,28 @@ def _read_live_files(spark: SparkSession, path: str, manifest: dict) -> DataFram
     return reader.parquet(*[os.path.join(path, f) for f in files]).drop(
         "__epoch", "__bucket"
     )
+
+
+def _read_deltas(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
+    """The manifest's delta rows as batch events: the stored flag is
+    dropped, so a merge re-derives it from ``op`` exactly as it does for
+    a trigger's batch."""
+    return _read_files(spark, path, manifest, manifest[DELTAS]).drop(DELETED_FLAG)
+
+
+def _read_live_files(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
+    """The FINAL view of a manifest: its base files, and when it holds
+    deltas, :func:`merge_touched` of the delta rows over the base rows —
+    the fold's own merge, so winners, tie-breaks and the stored
+    ``__deleted`` rule are the eager path's by construction."""
+    base = _read_files(spark, path, manifest, manifest["files"])
+    if not manifest.get(DELTAS):
+        return base
+    spec = manifest[DELTA_SPEC]
+    return merge_touched(
+        _read_deltas(spark, path, manifest), base, spec["keys"],
+        spec["version_col"], spec["tiebreak_col"], spec["op_col"],
+    ).select(*base.columns)
 
 
 def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
@@ -283,40 +320,23 @@ def _store_schema(path: str, manifest: dict, kept: list[str], df: DataFrame) -> 
     if manifest.get(SCHEMA_UNION):
         prev = _manifest_schema(manifest)
     else:
-        prev = _read_live_files(df.sparkSession, path, {**manifest, "files": kept}).schema
+        prev = _read_files(df.sparkSession, path, manifest, kept).schema
     return _merge_schemas(prev, df.schema)
 
 
-def _publish_buckets(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    manifest: dict,
-    replaced_buckets: set[int],
-    manifest_extra: dict | None = None,
-) -> None:
-    """Write ``df`` as fresh files under a new ``__epoch`` dir (one
-    key-sorted file per bucket — the O1 sparse-index layout within a
-    bucket), then commit: new manifest = old live files minus
-    ``replaced_buckets`` plus the new epoch's files, with the union schema
-    of every live file (see :func:`_read_live_files`).
-
-    Two guards make a concurrent publisher fail LOUDLY instead of losing
-    data: the epoch claim (taken before any file I/O — the leftover
-    ``rmtree`` below may only run while holding it) and the conditional
-    manifest commit (CAS on the version this publish was derived from).
-    The silver store is still a single-writer-per-store design — one
-    streaming sink, with ``compact_silver`` run only while the stream is
-    stopped — these guards turn a violated assumption into an error."""
+@contextmanager
+def _claimed_epoch(path: str, manifest: dict):
+    """Hold the claim on epoch ``manifest["version"] + 1`` and yield its
+    directory, empty.  Two guards make a concurrent publisher fail LOUDLY
+    instead of losing data: this claim (taken before any file I/O — the
+    leftover ``rmtree`` below may only run while holding it) and the
+    conditional manifest commit the caller makes (CAS on the version the
+    publish was derived from).  The silver store is still a
+    single-writer-per-store design — one streaming sink, with
+    ``compact_silver`` run only while the stream is stopped — these
+    guards turn a violated assumption into an error."""
     epoch = manifest["version"] + 1
-    n_buckets = manifest["n_buckets"]
     epoch_dir = os.path.join(path, f"__epoch={epoch}")
-    # EXPLICIT width: a bare repartition(col) starts at AQE's
-    # initialPartitionNum (2048) and AQE never coalesces user repartitions.
-    # Hashing on __bucket puts each bucket in exactly one task (one
-    # key-sorted file per bucket at any width); core width, because a
-    # small trigger touches few buckets and more tasks are pure overhead.
-    width = max(1, min(len(replaced_buckets), df.sparkSession.sparkContext.defaultParallelism))
     claim = _claim_epoch(path, epoch)
     try:
         # Re-verify AFTER claiming and BEFORE any file I/O: a publisher
@@ -342,6 +362,58 @@ def _publish_buckets(
         # leftovers (the recheck would have failed).
         if os.path.isdir(epoch_dir):
             shutil.rmtree(epoch_dir)
+        yield epoch_dir
+    finally:
+        COMMIT_BACKEND.release_claim(claim)
+
+
+def _bloom_options(manifest: dict) -> dict[str, str]:
+    """CH-style per-column BLOOM FILTERS (r10): declared once via
+    set_bloom_filters, honored by EVERY publisher (upserts, deltas,
+    mutations, TTL, compaction, projections) — parquet-mr writes a
+    split-block bloom per column chunk, and Spark's reader prunes row
+    groups on equality predicates against it.  The point-lookup
+    accelerator for columns the sort order can NOT serve (the
+    bloom_filter index type of clickhouse MergeTree skip indexes)."""
+    opts = {}
+    for c, ndv in manifest.get("bloom_cols", {}).items():
+        opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
+        opts[f"parquet.bloom.filter.expected.ndv#{c}"] = str(ndv)
+    return opts
+
+
+def _publish_buckets(
+    df: DataFrame,
+    path: str,
+    keys: list[str],
+    manifest: dict,
+    replaced_buckets: set[int],
+    manifest_extra: dict | None = None,
+) -> None:
+    """Write ``df`` as fresh files under a new ``__epoch`` dir (one
+    key-sorted file per bucket — the O1 sparse-index layout within a
+    bucket), then commit under :func:`_claimed_epoch`: new manifest = old
+    live files minus ``replaced_buckets`` plus the new epoch's files, with
+    the union schema of every live file (see :func:`_read_files`).
+
+    A manifest holding deltas may only be republished by the fold, which
+    clears them through ``manifest_extra`` in the same commit: a bucket
+    rewrite that carried them forward would let a delta row override
+    what the rewrite decided (a mutation's tombstone, say)."""
+    if manifest.get(DELTAS) and DELTAS not in (manifest_extra or {}):
+        raise RuntimeError(
+            f"{path} holds {len(manifest[DELTAS])} unfolded delta files; "
+            "fold them (_fold_deltas) before republishing buckets"
+        )
+    epoch = manifest["version"] + 1
+    n_buckets = manifest["n_buckets"]
+    # EXPLICIT width: a bare repartition(col) starts at AQE's
+    # initialPartitionNum (2048) and AQE never coalesces user repartitions.
+    # Hashing on __bucket puts each bucket in exactly one task (one
+    # key-sorted file per bucket at any width); core width, because a
+    # small trigger touches few buckets and more tasks are pure overhead.
+    width = max(1, min(len(replaced_buckets), df.sparkSession.sparkContext.defaultParallelism))
+    with _claimed_epoch(path, manifest) as epoch_dir:
         out = (
             df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
             .repartition(width, "__bucket")
@@ -361,17 +433,7 @@ def _publish_buckets(
         # directory layout is unchanged (path/__epoch=N/__bucket=B/), so
         # readers and vacuum see the exact same tree.
         projections = manifest.get("projections", {})
-        # CH-style per-column BLOOM FILTERS (r10): declared once via
-        # set_bloom_filters, honored by EVERY publisher (upserts,
-        # mutations, TTL, compaction, projections) — parquet-mr writes a
-        # split-block bloom per column chunk, and Spark's reader prunes
-        # row groups on equality predicates against it.  The point-lookup
-        # accelerator for columns the sort order can NOT serve (the
-        # bloom_filter index type of clickhouse MergeTree skip indexes).
-        bloom_opts = {}
-        for c, ndv in manifest.get("bloom_cols", {}).items():
-            bloom_opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
-            bloom_opts[f"parquet.bloom.filter.expected.ndv#{c}"] = str(ndv)
+        bloom_opts = _bloom_options(manifest)
         if projections:
             # every projection write re-evaluates df's plan — pin it once
             df.persist()
@@ -454,9 +516,52 @@ def _publish_buckets(
         finally:
             if projections:
                 df.unpersist()
-    finally:
-        COMMIT_BACKEND.release_claim(claim)
 
+
+def _publish_delta(rows: DataFrame, path: str, manifest: dict, spec: dict) -> bool:
+    """Commit ``rows`` (one trigger's latest-wins rows, flag included) as
+    ONE delta file, key-sorted, under :func:`_claimed_epoch`: the new
+    manifest keeps every base file and appends the delta to
+    ``manifest[DELTAS]``.  A column the store already holds keeps its
+    stored type (the batch is cast to it), so a delta never narrows the
+    schema readers apply to the base.  Returns False, committing
+    nothing, when ``rows`` is empty."""
+    import pyarrow.parquet as pq
+
+    stored = {f.name: f.dataType for f in _manifest_schema(manifest).fields}
+    rows = rows.withColumns({
+        f.name: rows[f.name].cast(stored[f.name]) for f in rows.schema.fields
+        if f.name in stored and stored[f.name] != f.dataType
+        and not isinstance(f.dataType, T.StructType)
+    })
+    epoch = manifest["version"] + 1
+    with _claimed_epoch(path, manifest) as epoch_dir:
+        # coalesce, not repartition: the one task that sorts and writes
+        # the file also runs the aggregate's final merge, over the same
+        # rows, instead of a second exchange
+        rows.coalesce(1).sortWithinPartitions(*spec["keys"]).write.options(
+            **_bloom_options(manifest)
+        ).parquet(epoch_dir)
+        names = sorted(
+            f for f in (os.listdir(epoch_dir) if os.path.isdir(epoch_dir) else [])
+            if f.endswith(".parquet")
+            and pq.read_metadata(os.path.join(epoch_dir, f)).num_rows
+        )
+        if not names:
+            shutil.rmtree(epoch_dir, ignore_errors=True)
+            return False
+        _write_manifest(
+            path,
+            {
+                **manifest,
+                "version": epoch,
+                DELTAS: manifest.get(DELTAS, []) + [f"__epoch={epoch}/{f}" for f in names],
+                DELTA_SPEC: spec,
+                "schema": _merge_schemas(_manifest_schema(manifest), rows.schema).json(),
+            },
+            expected_version=manifest["version"],
+        )
+    return True
 
 
 def _touched_bucket_merge(
@@ -470,13 +575,12 @@ def _touched_bucket_merge(
     vacuum_every: int = 16,
     manifest_extra: dict | None = None,
 ) -> None:
-    """Shared per-trigger scaffolding for every keyed silver sink (review
-    r8: the upsert and summing sinks had copy-pasted this and could
-    silently diverge): read the manifest (or default a fresh store),
-    compute the batch's touched buckets from ``prepare(batch)``, load ONLY
-    those buckets' live files, delegate the merge to
-    ``merge_fn(current_or_None, prepared)``, publish through the
-    epoch-claim + CAS commit, and run vacuum on a cadence.
+    """The eager touched-bucket merge: every summing-sink trigger, and
+    the keyed upsert sinks' FOLD (see :func:`_cdc_upsert`).  Read the
+    manifest (or default a fresh store), compute the batch's touched
+    buckets from ``prepare(batch)``, load ONLY those buckets' base files,
+    delegate the merge to ``merge_fn(current_or_None, prepared)``, publish
+    through the epoch-claim + CAS commit, and run vacuum on a cadence.
 
     ``legacy_mode`` decides what happens on a pre-manifest flat store:
     ``"migrate"`` (the upsert sink) reads it as current state and
@@ -532,7 +636,7 @@ def _touched_bucket_merge(
                     if int(f.split("__bucket=")[1].split("/")[0]) in touched
                 ]
                 current = (
-                    _read_live_files(spark, path, {**manifest, "files": live_touched})
+                    _read_files(spark, path, manifest, live_touched)
                     if live_touched else None
                 )
             _publish_buckets(
@@ -546,27 +650,102 @@ def _touched_bucket_merge(
         batch.unpersist()
     for f in legacy_files:  # superseded by the first manifest commit
         os.remove(os.path.join(path, f))
+    _vacuum_on_cadence(path, manifest["version"] + 1, vacuum_every)
+
+
+def _vacuum_on_cadence(path: str, version: int, every: int = 16) -> None:
     # vacuum walks the store tree (O(files), not O(touched)) — run it on a
     # cadence, not per trigger, so steady-state trigger cost stays bounded
-    # by the touched buckets; grace still protects readers
-    if (manifest["version"] + 1) % vacuum_every == 0:
+    # by what the trigger writes; grace still protects readers
+    if version % every == 0:
         vacuum_silver(path)
+
+
+#: merge-on-read fold cadence of the keyed upsert sinks: a trigger folds
+#: when the manifest already holds FOLD_DELTAS deltas, or when the delta
+#: files' bytes reach FOLD_BYTES_FRACTION of the base files' bytes (which
+#: bounds the extra rows every read merges)
+FOLD_DELTAS = 8
+FOLD_BYTES_FRACTION = 0.25
+
+
+def _fold_due(path: str, manifest: dict | None, spec: dict) -> bool:
+    """Whether the next keyed upsert trigger must fold.  Decided from the
+    manifest and driver-side file sizes — no Spark job.  An empty, flat
+    (pre-manifest) or pre-union-schema store always folds, so does one
+    with projections (their files stay exact), and one whose deltas were
+    written under different merge columns."""
+    if manifest is None or not manifest.get(SCHEMA_UNION) or manifest.get("projections"):
+        return True
+    deltas = manifest.get(DELTAS, [])
+    if not (manifest["files"] or deltas) or len(deltas) >= FOLD_DELTAS:
+        return True
+    if deltas and manifest[DELTA_SPEC] != spec:
+        return True
+
+    def size(files):
+        return sum(os.path.getsize(os.path.join(path, f)) for f in files)
+
+    return size(deltas) >= FOLD_BYTES_FRACTION * size(manifest["files"])
+
+
+def _fold(spark: SparkSession, events: DataFrame | None, path: str, spec: dict,
+          n_buckets: int, legacy_mode: str = "migrate") -> None:
+    """The FOLD: :func:`_touched_bucket_merge` with ``events`` ∪ the
+    manifest's delta rows as the events, republishing the buckets they
+    touch and clearing the deltas in the SAME commit."""
+    manifest = _read_manifest(path)
+    if manifest is not None and manifest.get(DELTAS):
+        deltas = _read_deltas(spark, path, manifest)
+        events = deltas if events is None else events.unionByName(
+            deltas, allowMissingColumns=True
+        )
+    keys = spec["keys"]
+    _touched_bucket_merge(
+        events, path, keys, n_buckets,
+        prepare=lambda b: b,
+        merge_fn=lambda current, prepared: merge_touched(
+            prepared, current, keys, spec["version_col"], spec["tiebreak_col"],
+            spec["op_col"],
+        ),
+        legacy_mode=legacy_mode,
+        manifest_extra={DELTAS: []},
+    )
+
+
+def _fold_deltas(spark: SparkSession, path: str) -> dict | None:
+    """Fold a store's deltas into its base buckets as one commit (a no-op
+    without deltas) and return the manifest after it.  Every writer other
+    than the upsert trigger runs this first: they rewrite base buckets,
+    and a delta left on top would override what they decided."""
+    manifest = _read_manifest(path)
+    if manifest is None or not manifest.get(DELTAS):
+        return manifest
+    _fold(spark, None, path, manifest[DELTA_SPEC], manifest["n_buckets"])
+    return _read_manifest(path)
 
 
 def _cdc_upsert(batch: DataFrame, path: str, keys: list[str], n_buckets: int,
                 version_col: str, tiebreak_col: str | None, op_col: str = "op",
                 legacy_mode: str = "migrate") -> None:
-    """One trigger of a keyed upsert sink: :func:`_touched_bucket_merge`
-    with the latest-wins merge :func:`merge_touched` (rewrite-mode: the
-    store keeps tombstones across batches)."""
-    _touched_bucket_merge(
-        batch, path, keys, n_buckets,
-        prepare=lambda b: b,
-        merge_fn=lambda current, prepared: merge_touched(
-            prepared, current, keys, version_col, tiebreak_col, op_col
-        ),
-        legacy_mode=legacy_mode,
-    )
+    """One trigger of a keyed upsert sink, merge-on-read: the batch's
+    latest-wins rows (``apply_cdc`` in rewrite mode — the store keeps
+    tombstones across batches) become ONE delta file and ONE manifest
+    commit; there is no touched-bucket collect and no read of current
+    rows.  Readers apply FINAL over base ∪ deltas
+    (:func:`_read_live_files`).  When :func:`_fold_due`, the trigger is
+    the fold instead — the touched-bucket merge of batch ∪ deltas — and
+    is still exactly one commit."""
+    spec = {"keys": list(keys), "version_col": version_col,
+            "tiebreak_col": tiebreak_col, "op_col": op_col}
+    manifest = _read_manifest(path)
+    if _fold_due(path, manifest, spec):
+        _fold(batch.sparkSession, batch, path, spec, n_buckets, legacy_mode)
+    elif _publish_delta(
+        apply_cdc(batch, keys, version_col, tiebreak_col, op_col, delete_mode="rewrite"),
+        path, manifest, spec,
+    ):
+        _vacuum_on_cadence(path, manifest["version"] + 1)
 
 
 #: marker file under the store's ``_signals/`` dir while an ad-hoc
@@ -619,8 +798,10 @@ def silver_upsert_stream(
     processing_interval_ms: int | None = None,
 ) -> StreamingQuery:
     """S8 — the ReplacingMergeTree-equivalent keyed upsert sink: per
-    micro-batch, merge the batch into the silver store with latest-wins
-    semantics (eager FINAL — downstream readers never need dedup-on-read).
+    micro-batch, add the batch to the silver store with latest-wins
+    semantics.  The store is merge-on-read: a trigger appends one delta
+    file and ``read_silver`` applies FINAL, so readers must go through
+    ``read_silver`` (or the other store readers) rather than the files.
 
     The store ALWAYS retains tombstones (``__deleted`` rows) internally,
     regardless of ``delete_mode``: physically dropping a delete would lose
@@ -631,13 +812,14 @@ def silver_upsert_stream(
     them (abcsvb-connector-secure.json:33-34).  Use ``read_silver`` (or
     filter ``__deleted`` yourself) to consume the store.
 
-    Per trigger, only the hash buckets containing batch keys are read,
-    merged (one latest-wins aggregate over the batch and those buckets'
-    rows) and re-published; untouched buckets' files are not opened,
-    written, or moved (see the store-layout contract in the module
-    docstring).  ``max_broadcast_keys`` is kept for compatibility: the
-    bucketed merge has no changed-keys join, so it no longer has an
-    effect.
+    Per trigger, the batch's latest-wins rows become one key-sorted delta
+    file and one manifest commit; every few triggers (``_fold_due``) the
+    trigger is the fold instead, which reads, merges and re-publishes only
+    the hash buckets containing batch or delta keys — untouched buckets'
+    files are not opened, written, or moved (see the store-layout
+    contract in the module docstring).  ``max_broadcast_keys`` is kept for
+    compatibility: neither path has a changed-keys join, so it no longer
+    has an effect.
 
     foreachBatch because the merge is keyed state over an external store;
     the merge itself is `operators.upsert.merge_touched` (batch-tested
@@ -683,8 +865,8 @@ def _txn_trigger(batch: DataFrame, batch_id: int, ppath: str, checkpoint: str,
         ]
         universe = batch
         if pend_files:
-            universe = _read_live_files(
-                batch.sparkSession, ppath, {**pmanifest, "files": pend_files}
+            universe = _read_files(
+                batch.sparkSession, ppath, pmanifest, pend_files
             ).unionByName(batch, allowMissingColumns=True)
         universe = universe.dropDuplicates([txn_id_col, txn_order_col])
         universe.persist()
@@ -931,13 +1113,13 @@ def vacuum_silver(
     retain_versions: int = 0,
     retain_history: int = HISTORY_RETAIN_DEFAULT,
 ) -> int:
-    """Delete data files no committed manifest references anymore, once
-    older than ``grace_s`` (grace covers readers that loaded a previous
-    manifest — their snapshot stays intact for at least that long; the
-    Delta ``VACUUM`` analogue).  The streaming sink runs it automatically
-    every 16 publishes (it walks the store tree — O(files) — so per-trigger
-    would break the O(touched) trigger bound), keeping a long-running
-    stream's dead files bounded.  Returns the number of files deleted.
+    """Delete data files (base, delta or projection) no committed
+    manifest references anymore, once older than ``grace_s`` (grace
+    covers readers that loaded a previous manifest — their snapshot stays
+    intact for at least that long; the Delta ``VACUUM`` analogue).  The
+    streaming sink runs it automatically every 16 publishes (it walks the
+    store tree — O(files) — so per-trigger would break the trigger's
+    bound), keeping a long-running stream's dead files bounded.  Returns the number of files deleted.
 
     ``retain_versions`` (r7, time travel): additionally pin the files of
     the newest N HISTORY versions, so ``read_silver(as_of_version=...)``
@@ -957,7 +1139,7 @@ def vacuum_silver(
         return 0
 
     def _all_files(m: dict) -> set[str]:
-        files = set(m["files"])
+        files = set(m["files"]) | set(m.get(DELTAS, []))
         for pspec in m.get("projections", {}).values():
             files |= set(pspec.get("files", []))
         return files
@@ -1065,7 +1247,7 @@ def compact_silver(
     bucketed under the first manifest, and the superseded flat files
     removed — compaction doesn't require a streaming trigger to have
     migrated the store first."""
-    manifest = _read_manifest(path)
+    manifest = _fold_deltas(spark, path)
     legacy_files: list[str] = []
     if manifest is None:
         if os.path.isdir(path):
@@ -1113,10 +1295,12 @@ def mutate_silver(
     through the same epoch-claim + CAS commit as every other writer, and
     — with manifest history — the pre-mutation state stays reachable via
     ``read_silver(as_of_version=…)``, which is exactly the audit story a
-    destructive mutation needs.  Returns the number of rows mutated."""
+    destructive mutation needs.  Like every writer but the upsert
+    trigger, it first folds the store's deltas (:func:`_fold_deltas`, one
+    commit of its own).  Returns the number of rows mutated."""
     if not delete and not set_exprs:
         raise ValueError("mutation needs set_exprs or delete=True")
-    manifest = _read_manifest(path)
+    manifest = _fold_deltas(spark, path)
     if manifest is None:
         raise FileNotFoundError(f"no silver store at {path}")
     df = _read_live_files(spark, path, manifest)
@@ -1169,7 +1353,7 @@ def optimize_deduplicate(
     the number of rows tombstoned."""
     from pyspark.sql import Window
 
-    manifest = _read_manifest(path)
+    manifest = _fold_deltas(spark, path)
     if manifest is None:
         raise FileNotFoundError(f"no silver store at {path}")
     df = _read_live_files(spark, path, manifest)
@@ -2045,7 +2229,7 @@ def add_projection(
     read path needs no coordination — it is a second file set under the
     same snapshot-isolated manifest.  Backfill here republishes every
     bucket once (O(store), like CH MATERIALIZE)."""
-    manifest = _read_manifest(path)
+    manifest = _fold_deltas(spark, path)
     if manifest is None:
         raise FileNotFoundError(f"no silver store at {path}")
     if name in manifest.get("projections", {}):
@@ -2098,7 +2282,7 @@ def read_silver_projection(
     pspec = manifest.get("projections", {}).get(name)
     if pspec is None:
         raise ValueError(f"no projection {name!r} at {path}")
-    df = _read_live_files(spark, path, {**manifest, "files": pspec["files"]})
+    df = _read_files(spark, path, manifest, pspec["files"])
     if DELETED_FLAG in df.columns and not include_deleted:
         df = df.filter(~F.col(DELETED_FLAG)).drop(DELETED_FLAG)
     return df
@@ -2151,13 +2335,12 @@ def read_silver_auto(
     if manifest is None:
         raise FileNotFoundError(f"no silver store at {path}")
 
-    def _layout(files: list[str]) -> DataFrame:
-        df = _read_live_files(spark, path, {**manifest, "files": files})
+    def _visible(df: DataFrame) -> DataFrame:
         if DELETED_FLAG in df.columns and not include_deleted:
             df = df.filter(~F.col(DELETED_FLAG)).drop(DELETED_FLAG)
         return df
 
-    primary = _layout(manifest["files"])
+    primary = _visible(_read_live_files(spark, path, manifest))
     if where is None:
         return primary
     projections = manifest.get("projections", {})
@@ -2177,7 +2360,9 @@ def read_silver_auto(
             if s > best:
                 best_name, best = pname, s
         if best_name is not None:
-            return _layout(projections[best_name]["files"]).filter(where)
+            return _visible(
+                _read_files(spark, path, manifest, projections[best_name]["files"])
+            ).filter(where)
     return primary.filter(where)
 
 
@@ -2245,7 +2430,7 @@ def rebucket_silver(spark: SparkSession, path: str, keys: list[str],
     ``n_buckets``, so time travel composes.  Run like compaction: only
     while the owning stream is stopped (single-writer store).  Returns
     the new version number."""
-    manifest = _read_manifest(path)
+    manifest = _fold_deltas(spark, path)
     if manifest is None:
         raise FileNotFoundError(f"no silver store at {path}")
     if new_n_buckets == manifest["n_buckets"]:
@@ -2283,11 +2468,13 @@ def set_bloom_filters(path: str, cols: dict[str, int]) -> None:
 
 def describe_silver(spark: SparkSession, path: str) -> DataFrame:
     """r10 — the ``system.parts`` observability surface: one row per
-    LIVE data file of the current manifest, across the primary layout
-    and every projection → (version, n_buckets, layout, bucket, epoch,
-    file, bytes).  Driver-side listing bounded by the live file count
-    (same O(files) class as vacuum — an observability call, not a data
-    path); missing files report bytes = -1 rather than raising, so the
+    LIVE data file of the current manifest, across the primary layout,
+    the deltas and every projection → (version, n_buckets, layout,
+    bucket, epoch, file, bytes).  A delta is its own ``delta`` layout
+    with a NULL bucket: one unbucketed file per trigger since the last
+    fold, ClickHouse's level-0 parts.  Driver-side listing bounded by the
+    live file count (same O(files) class as vacuum — an observability
+    call, not a data path); missing files report bytes = -1 rather than raising, so the
     monitor that calls this can be the thing that DETECTS corruption."""
     manifest = _read_manifest(path)
     if manifest is None:
@@ -2299,7 +2486,7 @@ def describe_silver(spark: SparkSession, path: str) -> DataFrame:
                 size = os.path.getsize(os.path.join(path, f))
             except OSError:
                 size = -1
-            bucket = int(f.split("__bucket=")[1].split("/")[0])
+            bucket = int(f.split("__bucket=")[1].split("/")[0]) if "__bucket=" in f else None
             epoch = int(f.split("__epoch=")[1].split("/")[0])
             yield (
                 manifest["version"], manifest["n_buckets"], layout,
@@ -2307,6 +2494,7 @@ def describe_silver(spark: SparkSession, path: str) -> DataFrame:
             )
 
     data = list(rows_for("primary", manifest["files"]))
+    data.extend(rows_for("delta", manifest.get(DELTAS, [])))
     for pname, pspec in manifest.get("projections", {}).items():
         data.extend(rows_for(f"proj:{pname}", pspec.get("files", [])))
     return spark.createDataFrame(
@@ -2333,7 +2521,7 @@ def freeze_silver(path: str, snapshot_dir: str) -> int:
         raise FileNotFoundError(f"no silver store at {path}")
     if os.path.exists(snapshot_dir):
         raise FileExistsError(f"snapshot target {snapshot_dir} already exists")
-    all_files = list(manifest["files"])
+    all_files = manifest["files"] + manifest.get(DELTAS, [])
     for pspec in manifest.get("projections", {}).values():
         all_files.extend(pspec.get("files", []))
     n = 0
@@ -2366,7 +2554,7 @@ def restore_silver(spark: SparkSession, path: str, keys: list[str],
     never see a half-restored store, and a concurrent publisher loses
     the CAS loudly.  Run like compaction: owning stream stopped.
     Returns the new version number."""
-    manifest = _read_manifest(path)
+    manifest = _fold_deltas(spark, path)
     if manifest is None:
         raise FileNotFoundError(f"no silver store at {path}")
     state = read_silver(spark, path, include_deleted=True, as_of_version=version)
@@ -2406,7 +2594,7 @@ def ttl_rollup_silver(
     rows' buckets ∪ the coarsened keys' target buckets; everything
     publishes through the usual epoch claim + CAS commit.  Returns the
     number of rows rolled up."""
-    manifest = _read_manifest(path)
+    manifest = _fold_deltas(spark, path)
     if manifest is None:
         raise FileNotFoundError(f"no silver store at {path}")
     df = _read_live_files(spark, path, manifest)
@@ -2490,7 +2678,9 @@ def read_silver(
 
     Loads the last-committed manifest's file set — a consistent snapshot
     even mid-publish, since committed files are immutable until vacuumed
-    (falls back to a plain directory read for legacy flat stores).
+    (falls back to a plain directory read for legacy flat stores) — and,
+    when it holds deltas, applies FINAL over base ∪ deltas: one
+    latest-wins aggregate, the merge the fold itself runs.
 
     ``as_of_version`` (r7, time travel): read the store exactly as it was
     at that committed manifest version — the reproducibility primitive a

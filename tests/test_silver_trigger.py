@@ -1,7 +1,9 @@
 """The keyed silver sink's per-trigger contract: the one-aggregate
 touched-bucket merge keeps stored tombstones, the manifest's union schema
-replaces footer reads, and a steady-state trigger stays within its job,
-stage-name and task-width budget with one key-sorted file per bucket."""
+replaces footer reads, a delta trigger writes one file in at most three
+jobs, and a folding trigger stays within its job, stage-name and
+task-width budget with one key-sorted file per bucket — each trigger one
+claim and one manifest commit."""
 
 from __future__ import annotations
 
@@ -99,10 +101,10 @@ def test_merge_touched_matches_model(spark, stored, batch):
     assert {r.id: (r.val, r["__deleted"]) for r in got.collect()} == want
 
 
-def test_mutate_deleted_row_stays_deleted_when_bucket_mate_updates(spark, tmp_path):
+def test_mutate_deleted_row_stays_deleted_when_bucket_mate_updates(spark, tmp_path, monkeypatch):
     """``mutate_silver`` sets the flag and leaves ``op`` alone; a later
-    trigger that rewrites the bucket for a DIFFERENT key must keep it
-    deleted."""
+    trigger for a DIFFERENT key of its bucket must keep it deleted, both
+    as a delta merged at read and as the fold that rewrites the bucket."""
     store, src = str(tmp_path / "silver"), str(tmp_path / "src")
     ids = list(range(1, 200))
     _upsert(spark, [(i, f"v{i}", "c", 100, i) for i in ids], src, store, str(tmp_path / "c1"))
@@ -111,16 +113,25 @@ def test_mutate_deleted_row_stays_deleted_when_bucket_mate_updates(spark, tmp_pa
     victim = 7
     mate = next(i for i in ids if i != victim and bucket[i] == bucket[victim])
 
+    def check(val):
+        live = {r.id: r.val for r in pl.read_silver(spark, store).collect()}
+        assert victim not in live and live[mate] == val and len(live) == len(ids) - 1
+        full = {r.id: (r.op, r["__deleted"])
+                for r in pl.read_silver(spark, store, include_deleted=True).collect()}
+        assert full[victim] == ("c", True)
+
     assert pl.mutate_silver(spark, store, ["id"], where=F.col("id") == victim, delete=True) == 1
     _upsert(spark, [(mate, "new", "u", 200, 1)], src, store, str(tmp_path / "c1"))
+    assert len(_manifest(store)[pl.DELTAS]) == 1
+    check("new")
 
-    assert bucket[victim] in {_bucket(f) for f in _manifest(store)["files"]
-                              if f.startswith(f"__epoch={_manifest(store)['version']}/")}
-    live = {r.id: r.val for r in pl.read_silver(spark, store).collect()}
-    assert victim not in live and live[mate] == "new" and len(live) == len(ids) - 1
-    full = {r.id: (r.op, r["__deleted"])
-            for r in pl.read_silver(spark, store, include_deleted=True).collect()}
-    assert full[victim] == ("c", True)
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 0)
+    _upsert(spark, [(mate, "newer", "u", 300, 1)], src, store, str(tmp_path / "c1"))
+    m = _manifest(store)
+    assert m[pl.DELTAS] == []
+    assert bucket[victim] in {_bucket(f) for f in m["files"]
+                              if f.startswith(f"__epoch={m['version']}/")}
+    check("newer")
 
 
 # -- union schema ---------------------------------------------------------
@@ -147,7 +158,8 @@ def _wide_then_narrow_into_empty_buckets(spark, tmp_path):
 def test_union_schema_keeps_dropped_column_on_untouched_rows(spark, tmp_path):
     store, fresh = _wide_then_narrow_into_empty_buckets(spark, tmp_path)
     m = _manifest(store)
-    new_files = [f for f in m["files"] if f.startswith(f"__epoch={m['version']}/")]
+    new_files = [f for f in m["files"] + m.get(pl.DELTAS, [])
+                 if f.startswith(f"__epoch={m['version']}/")]
     # the newest epoch's files lack `tier`; the manifest still records it
     assert "tier" not in spark.read.parquet(os.path.join(store, new_files[0])).columns
     assert m[pl.SCHEMA_UNION] is True
@@ -185,8 +197,95 @@ def test_manifest_without_union_flag_reads_through_merge_schema(spark, tmp_path)
 # -- per-trigger budget ---------------------------------------------------
 
 
-def test_steady_trigger_budget_and_layout(spark, tmp_path):
-    """A steady-state trigger of 30 events into a 64-bucket store:
+class _CountingBackend(pl.CommitBackend):
+    """The active commit backend, counting epoch claims and manifest CAS
+    commits."""
+
+    def __init__(self, inner):
+        self.inner, self.claims, self.commits = inner, 0, 0
+
+    def read_manifest(self, path):
+        return self.inner.read_manifest(path)
+
+    def commit_manifest(self, path, manifest, expected_version=None):
+        self.inner.commit_manifest(path, manifest, expected_version)
+        self.commits += 1
+
+    def claim_epoch(self, path, epoch, stale_s=pl.EPOCH_CLAIM_STALE_S):
+        self.claims += 1
+        return self.inner.claim_epoch(path, epoch, stale_s)
+
+    def release_claim(self, token):
+        self.inner.release_claim(token)
+
+
+def _parquet_files(store):
+    return {os.path.relpath(os.path.join(root, f), store)
+            for root, _dirs, files in os.walk(store) for f in files if f.endswith(".parquet")}
+
+
+def _measured_trigger(spark, tmp_path, monkeypatch):
+    """A 3000-row store in 64 buckets, one warm-up trigger, then one
+    measured trigger of 30 events.  Returns the store, the measured
+    batch, its job ids, its counting backend, and the manifest and
+    parquet files before it."""
+    store, src, ckpt = str(tmp_path / "silver"), str(tmp_path / "src"), str(tmp_path / "c")
+    ids = list(range(3000))
+    _upsert(spark, [(i, f"v{i}", "c", 1, i) for i in ids], src, store, ckpt + "0")
+    assert _manifest(store)["n_buckets"] == 64
+    for rep in (1, 2):  # warm-up trigger, then the measured one
+        batch = [((i * 97 + rep) % 3000, f"u{rep}", "u", 1 + rep, i) for i in range(30)]
+        _feed(spark, batch, f"{src}{rep}")
+        before, files_before = _manifest(store), _parquet_files(store)
+        backend = _CountingBackend(pl.COMMIT_BACKEND)
+        monkeypatch.setattr(pl, "COMMIT_BACKEND", backend)
+        with spark_jobs(spark) as jobs:
+            _drain(spark, f"{src}{rep}", store, f"{ckpt}{rep}")
+        monkeypatch.setattr(pl, "COMMIT_BACKEND", backend.inner)
+    return store, batch, jobs, backend, before, files_before
+
+
+def _check_state(spark, store, batch):
+    full = pl.read_silver(spark, store)
+    assert full.count() == 3000
+    assert {r.id: r.val for r in full.filter(F.col("val") == "u2").collect()} == {
+        r[0]: "u2" for r in batch
+    }
+
+
+def test_delta_trigger_budget(spark, tmp_path, monkeypatch):
+    """A steady-state trigger between folds appends ONE delta: at most 3
+    Spark jobs (the batch's latest-wins aggregate and its write), exactly
+    one parquet file written, one epoch claim, one CAS commit, the base
+    file list unchanged, and no stage wider than the cores plus the
+    batch's one input file.  Opening the merged read runs no job."""
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 16)
+    store, batch, jobs, backend, before, files_before = _measured_trigger(
+        spark, tmp_path, monkeypatch)
+
+    assert 0 < len(jobs) <= 3, len(jobs)
+    stages = ran_stages(spark, jobs)
+    assert not [s.name for s in stages if s.name.startswith("parquet at")]
+    cores = spark.sparkContext.defaultParallelism
+    assert max(s.numTasks for s in stages) <= cores + 1, [(s.name, s.numTasks) for s in stages]
+    assert (backend.claims, backend.commits) == (1, 1)
+    m = _manifest(store)
+    written = _parquet_files(store) - files_before
+    assert len(written) == 1 and m[pl.DELTAS] == before[pl.DELTAS] + sorted(written)
+    assert m["files"] == before["files"] and len(m[pl.DELTAS]) == 2
+    assert m["version"] == before["version"] + 1
+    keys = [r.id for r in spark.read.parquet(os.path.join(store, *written)).collect()]
+    assert keys == sorted(keys) and len(keys) == len({r[0] for r in batch})
+
+    with spark_jobs(spark) as open_jobs:
+        pl.read_silver(spark, store)
+    assert open_jobs == []
+    _check_state(spark, store, batch)
+
+
+def test_fold_trigger_budget_and_layout(spark, tmp_path, monkeypatch):
+    """A folding trigger (forced every trigger here) into a 64-bucket
+    store:
 
     - at most 7 Spark jobs (touched-bucket collect, merge, publish);
     - no ``parquet at …`` stage, i.e. no file-listing and no footer
@@ -196,33 +295,27 @@ def test_steady_trigger_budget_and_layout(spark, tmp_path):
       merge's map stage scans the touched files at core width and the
       batch beside them; the publish writes at core width, not one task
       per bucket;
+    - one epoch claim and one CAS commit, the deltas cleared;
     - the new epoch holds exactly one key-sorted file per touched bucket,
       with more touched buckets than write tasks."""
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 0)
+    store, batch, jobs, backend, _before, _files = _measured_trigger(
+        spark, tmp_path, monkeypatch)
     sc = spark.sparkContext
     cores = sc.defaultParallelism
-    store, src, ckpt = str(tmp_path / "silver"), str(tmp_path / "src"), str(tmp_path / "c")
-    ids = list(range(3000))
-    _upsert(spark, [(i, f"v{i}", "c", 1, i) for i in ids], src, store, ckpt + "0")
-    assert _manifest(store)["n_buckets"] == 64
-    # warm-up trigger, then the measured one (each its own query run)
-    for rep in (1, 2):
-        batch = [((i * 97 + rep) % 3000, f"u{rep}", "u", 1 + rep, i) for i in range(30)]
-        _feed(spark, batch, f"{src}{rep}")
-        with spark_jobs(spark) as jobs:
-            _drain(spark, f"{src}{rep}", store, f"{ckpt}{rep}")
-    # `jobs` and `batch` are now the measured trigger's
 
     stages = ran_stages(spark, jobs)
     assert 0 < len(jobs) <= 7, len(jobs)
     assert not [s.name for s in stages if s.name.startswith("parquet at")]
     assert max(s.numTasks for s in stages) <= cores + 1, [(s.name, s.numTasks) for s in stages]
+    assert (backend.claims, backend.commits) == (1, 1)
 
     with spark_jobs(spark) as open_jobs:
-        full = pl.read_silver(spark, store)
+        pl.read_silver(spark, store)
     assert open_jobs == []
-    assert len(_manifest(store)["files"]) == 64
-
     m = _manifest(store)
+    assert len(m["files"]) == 64 and m[pl.DELTAS] == []
+
     epoch = f"__epoch={m['version']}/"
     touched = {_bucket(f) for f in m["files"] if f.startswith(epoch)}
     assert touched == set(_bucket_of(spark, [r[0] for r in batch], 64).values())
@@ -232,7 +325,27 @@ def test_steady_trigger_budget_and_layout(spark, tmp_path):
         assert len(files) == 1, (b, files)
         keys = [r.id for r in spark.read.parquet(os.path.join(store, files[0])).collect()]
         assert keys == sorted(keys)
-    assert full.count() == len(ids)
-    assert {r.id: r.val for r in full.filter(F.col("val") == "u2").collect()} == {
-        r[0]: "u2" for r in batch
-    }
+    _check_state(spark, store, batch)
+
+
+def test_fold_clears_every_delta_in_the_trigger_commit(spark, tmp_path, monkeypatch):
+    """With the cadence at 2, triggers go delta, delta, fold: the fold
+    republishes the buckets of its batch AND of both deltas, in the one
+    commit of its trigger, and every trigger is one version."""
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 2)
+    store, src, ckpt = str(tmp_path / "silver"), str(tmp_path / "src"), str(tmp_path / "c")
+    _upsert(spark, [(i, f"v{i}", "c", 1, i) for i in range(300)], src, store, ckpt)
+    v0 = _manifest(store)["version"]
+    batches = [[(10, "a", "u", 2, 0)], [(20, "b", "u", 2, 0), (30, None, "d", 2, 1)],
+               [(40, "c", "u", 2, 0)]]
+    for n, rows in enumerate(batches, 1):
+        _upsert(spark, rows, f"{src}{n}", store, f"{ckpt}{n}")
+        m = _manifest(store)
+        assert m["version"] == v0 + n
+        assert len(m[pl.DELTAS]) == (n if n < 3 else 0)
+    epoch = f"__epoch={m['version']}/"
+    assert {_bucket(f) for f in m["files"] if f.startswith(epoch)} == set(
+        _bucket_of(spark, [10, 20, 30, 40], 64).values())
+    live = {r.id: r.val for r in pl.read_silver(spark, store).collect()}
+    assert len(live) == 299 and 30 not in live
+    assert (live[10], live[20], live[40]) == ("a", "b", "c")

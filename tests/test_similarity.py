@@ -663,6 +663,33 @@ def test_ivfpq_rerank_rejects_shortlist_without_adc_d2(spark):
     assert jobs == []
 
 
+def test_ivfpq_rerank_oversize_shortlist_raises_at_execute(spark):
+    """A shortlist with more than ``shortlist`` rows for a query builds
+    without a job and fails when executed, naming the query; one within
+    the bound reranks normally."""
+    from postgres_debezium_clickhouse_spark.operators.similarity import (
+        ivfpq_rerank_topk,
+    )
+
+    docs = _pq_fixture(spark, n=12)
+    queries = docs.filter("vec_id < 2")
+
+    def short(n):
+        return spark.createDataFrame(
+            [(q, c, float(c)) for q in (0, 1) for c in range(2, 2 + n)],
+            "query_id long, neighbor_id long, adc_d2 double")
+
+    with spark_jobs(spark) as jobs:
+        over = ivfpq_rerank_topk(queries, docs, docs, docs, docs, k=2, shortlist=3,
+                                 dim=16, shortlist_df=short(4))
+    assert jobs == []
+    with pytest.raises(Exception, match="more than 3 rows for query_id"):
+        over.collect()
+    ok = ivfpq_rerank_topk(queries, docs, docs, docs, docs, k=2, shortlist=3,
+                           dim=16, shortlist_df=short(3)).collect()
+    assert sorted(r.query_id for r in ok) == [0, 0, 1, 1]
+
+
 def test_ivfpq_encode_init_books_equal_full_residual_init(spark):
     """With refine_iters=0 ivfpq_encode trains its codebooks on the ks
     lowest-id residuals only (a TakeOrdered shortcut); they must equal

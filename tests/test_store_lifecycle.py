@@ -37,6 +37,28 @@ def test_describe_silver_lists_every_live_file(spark, tmp_path):
     assert all(r.version == m["version"] for r in rows)
 
 
+def test_describe_and_freeze_cover_deltas(spark, tmp_path):
+    """An upsert trigger on a non-empty store lands as a delta:
+    ``describe_silver`` lists it as its own layout with a NULL bucket,
+    and a frozen snapshot carries it, reading the merged state."""
+    path, snap = str(tmp_path / "store"), str(tmp_path / "snap")
+    events = "k long, val string, op string, ts_ms long, offset long"
+    pl._cdc_upsert(spark.createDataFrame([(i, f"v{i}", "c", 1, i) for i in range(50)], events),
+                   path, ["k"], 4, "ts_ms", "offset")
+    pl._cdc_upsert(spark.createDataFrame([(3, "new", "u", 2, 0), (4, None, "d", 2, 1)], events),
+                   path, ["k"], 4, "ts_ms", "offset")
+    m = pl._read_manifest(path)
+    assert len(m[pl.DELTAS]) == 1
+    rows = pl.describe_silver(spark, path).collect()
+    delta = [r for r in rows if r.layout == "delta"]
+    assert [(r.file, r.bucket, r.epoch) for r in delta] == [(m[pl.DELTAS][0], None, m["version"])]
+    assert delta[0].bytes > 0 and len(rows) == len(m["files"]) + 1
+    assert pl.freeze_silver(path, snap) == len(m["files"]) + 1
+    state = {(r.k, r.val) for r in pl.read_silver(spark, snap).collect()}
+    assert state == {(r.k, r.val) for r in pl.read_silver(spark, path).collect()}
+    assert (3, "new") in state and len(state) == 49
+
+
 def test_freeze_is_zero_copy_and_immune_to_source_changes(spark, tmp_path):
     path = str(tmp_path / "store")
     snap = str(tmp_path / "snap")

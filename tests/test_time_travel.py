@@ -92,7 +92,8 @@ def test_vacuum_retain_versions_keeps_time_travel_alive(spark, dirs):
     assert removed == 0
 
 
-def test_vacuumed_version_fails_loudly(spark, dirs):
+def test_vacuumed_version_fails_loudly(spark, dirs, monkeypatch):
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 0)  # the 2nd trigger rewrites v1's bucket
     _publish(spark, dirs, 1, [(1, "a1", "c", 100, 1)])
     _publish(spark, dirs, 2, [(1, "a2", "u", 200, 2)])
     versions = pl.silver_versions(dirs["silver"])
@@ -103,6 +104,33 @@ def test_vacuumed_version_fails_loudly(spark, dirs):
     assert _state(spark, dirs) == {1: "a2"}
     with pytest.raises(ValueError, match="vacuumed"):
         pl.read_silver(spark, dirs["silver"], as_of_version=versions[0])
+
+
+def test_vacuum_keeps_current_and_retained_deltas(spark, dirs, monkeypatch):
+    """Delta files are live while the current manifest or a retained
+    version lists them; once a fold supersedes them and vacuum reclaims
+    them, reading a version that needs them fails loudly."""
+    monkeypatch.setattr(pl, "FOLD_BYTES_FRACTION", float("inf"))  # tiny store: count only
+    _publish(spark, dirs, 1, [(1, "a1", "c", 100, 1), (2, "b1", "c", 100, 2)])
+    _publish(spark, dirs, 2, [(1, "a2", "u", 200, 3)])
+    _publish(spark, dirs, 3, [(2, None, "d", 300, 4)])
+    _v1, v2, v3 = pl.silver_versions(dirs["silver"])
+    assert len(pl._read_manifest(dirs["silver"])[pl.DELTAS]) == 2
+    _age_store(dirs["silver"])
+    assert pl.vacuum_silver(dirs["silver"], grace_s=600) == 0
+    assert _state(spark, dirs) == {1: "a2"}
+    assert _state(spark, dirs, as_of_version=v2) == {1: "a2", 2: "b1"}
+
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 0)
+    _publish(spark, dirs, 4, [(3, "c1", "c", 400, 5)])
+    assert pl._read_manifest(dirs["silver"])[pl.DELTAS] == []
+    _age_store(dirs["silver"])
+    assert pl.vacuum_silver(dirs["silver"], grace_s=600, retain_versions=2) == 0
+    assert _state(spark, dirs, as_of_version=v3) == {1: "a2"}  # v3 pinned
+    assert pl.vacuum_silver(dirs["silver"], grace_s=600) > 0
+    assert _state(spark, dirs) == {1: "a2", 3: "c1"}
+    with pytest.raises(ValueError, match="vacuumed"):
+        pl.read_silver(spark, dirs["silver"], as_of_version=v3)
 
 
 @pytest.mark.slow
