@@ -291,7 +291,7 @@ def split_on_drift(
       ``corrupt_filter``); conforming events keep flowing.
     * ``policy='widen'`` — nothing is quarantined: unknown fields ride
       through to the sink, which accepts additive evolution (apply_cdc's
-      schema alignment / the manifest's union schema in _read_files)
+      schema alignment / the manifest's union schema in _SilverStore)
       — the second frame is empty by construction.
 
     A row with no ``after`` image (delete/tombstone) carries no field
@@ -336,7 +336,7 @@ def schema_drift_report(
     backfill once the registry is updated).  The tolerate-side is already
     handled (PERMISSIVE parsing nulls unknown fields; the silver store's
     union schema accepts additive evolution — see apply_cdc /
-    _read_files); this operator closes the loop by making drift
+    _SilverStore); this operator closes the loop by making drift
     OBSERVABLE instead of silent.
 
     Scale: one map pass (json_object_keys + two array_except) + explodes

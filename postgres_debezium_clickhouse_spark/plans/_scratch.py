@@ -95,16 +95,11 @@ class Scratch:
         """Commit ``df`` as the next full version of the run's store
         ``name`` (every bucket rewritten, rows live) and return its path.
         The first call seeds version 0 with ``STORE_BUCKETS`` buckets."""
-        from ..streaming.pipeline import _publish_buckets, _read_manifest
+        from ..streaming.pipeline import _SilverStore
 
         path = self.dir(name)
-        manifest = _read_manifest(path) or {
-            "version": 0, "n_buckets": STORE_BUCKETS, "files": [],
-        }
-        _publish_buckets(
-            df.withColumn("__deleted", F.lit(False)), path, keys, manifest,
-            set(range(manifest["n_buckets"])),
-        )
+        store = _SilverStore.load_or_new(path, STORE_BUCKETS)
+        store.publish(df.withColumn("__deleted", F.lit(False)), keys, store.all_buckets)
         return path
 
     @staticmethod

@@ -1092,7 +1092,7 @@ def stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a wider schema) streams updates carrying a NEW ``channel``
     column for keys ≡3 (mod 10).  The store must evolve in place:
     old epochs' files lack the column (the manifest's union schema
-    null-fills them, pipeline._read_files), untouched rows read back with NULL
+    null-fills them, pipeline._SilverStore), untouched rows read back with NULL
     channel, updated rows carry value + doubled price via latest-wins.
     Closed form over orders — exactly what the oracle states."""
     from ..streaming.pipeline import read_silver, silver_upsert_stream

@@ -14,7 +14,7 @@ design):
   instead of silently dropping the winner's rows.
 * ``claim_epoch`` / ``release_claim`` — the single-writer guard for one
   epoch, taken BEFORE any data-file I/O (the crash-leftover cleanup in
-  ``pipeline._claimed_epoch`` may only run while holding it).  A claim older
+  ``pipeline._SilverStore._claim`` may only run while holding it).  A claim older
   than ``stale_s`` belongs to a crashed publisher — its epoch is
   uncommitted by definition — and is stolen.
 

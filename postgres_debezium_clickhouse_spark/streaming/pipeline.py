@@ -51,11 +51,20 @@ never mutated, so a reader that loaded a manifest sees a consistent
 snapshot even while a publish is in flight; replaced files stay on disk
 until ``vacuum_silver`` passes their grace period.
 
+One class owns this layout and the manifest format: ``_SilverStore``, a
+snapshot of one committed manifest.  Every trigger, maintenance op and
+reader goes through it — manifest reads, the live files per layout, the
+touched-bucket collect, the FINAL read, the bucket and delta publishes,
+the fold, metadata edits, legacy flat-store migration and vacuum's live
+set — and tests/test_silver_store_guard.py keeps manifest access out of
+every other function.
+
 Writer contract: ONE writer per store (the streaming sink; run
-``compact_silver`` only while the stream is stopped).  Two guards turn a
-violated assumption into a loud :class:`ManifestCommitError` instead of
-silent row loss: an exclusive per-epoch claim file taken before any file
-I/O, and a conditional (compare-and-swap on version) manifest commit.
+``compact_silver`` only while the stream is stopped).  Every write goes
+through the store's one commit path, whose two guards turn a violated
+assumption into a loud :class:`ManifestCommitError` instead of silent
+row loss: an exclusive per-epoch claim file taken before any file I/O,
+and a conditional (compare-and-swap on version) manifest commit.
 The commit contract lives behind :class:`CommitBackend`
 (streaming/commit.py): local-FS impl today; an object-store port
 implements the same two primitives as conditional puts (S3
@@ -140,8 +149,8 @@ DEFAULT_SILVER_BUCKETS = 64
 
 #: The active commit backend (manifest + epoch-claim control plane).
 #: LocalFS by default; swap for :class:`InMemoryConditionalPutBackend`
-#: (tests) or an S3/GCS conditional-put impl (deployment) — the store
-#: code only ever talks through the three wrappers below.
+#: (tests) or an S3/GCS conditional-put impl (deployment).  Resolved at
+#: call time, by the two wrappers below and by :class:`_SilverStore`.
 COMMIT_BACKEND: CommitBackend = LocalFSCommitBackend()
 
 
@@ -149,32 +158,13 @@ def _read_manifest(path: str) -> dict | None:
     return COMMIT_BACKEND.read_manifest(path)
 
 
-#: immutable per-version manifest copies for time travel live here.
-HISTORY_DIR = "_history"
-
-
 def _write_manifest(path: str, manifest: dict, expected_version: int | None = None) -> None:
     COMMIT_BACKEND.commit_manifest(path, manifest, expected_version)
-    # Data-plane history copy (r7, time travel): one immutable
-    # `_manifest.v<N>.json` per committed version, written AFTER the CAS
-    # succeeds.  Plain file IO, not the commit backend — history is an
-    # audit/reproducibility artifact on the data plane (like the parquet
-    # itself), not a coordination primitive, and it must never fail a
-    # commit that already won.
-    v = manifest.get("version")
-    if v is None:
-        return
-    try:
-        hdir = os.path.join(path, HISTORY_DIR)
-        os.makedirs(hdir, exist_ok=True)
-        hpath = os.path.join(hdir, f"_manifest.v{v}.json")
-        if not os.path.exists(hpath):  # versions are immutable once written
-            tmp = f"{hpath}.tmp-{os.getpid()}"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            os.replace(tmp, hpath)
-    except OSError:
-        pass
+    _SilverStore.keep_history(path, manifest)
+
+
+#: immutable per-version manifest copies for time travel live here.
+HISTORY_DIR = "_history"
 
 
 def silver_versions(path: str) -> list[int]:
@@ -189,42 +179,10 @@ def silver_versions(path: str) -> list[int]:
                     versions.add(int(f[len("_manifest.v"):-len(".json")]))
                 except ValueError:
                     continue
-    cur = _read_manifest(path)
-    if cur is not None and "version" in cur:
-        versions.add(cur["version"])
+    cur = _SilverStore.load(path)
+    if cur is not None:
+        versions.add(cur.version)
     return sorted(versions)
-
-
-def _read_manifest_version(path: str, version: int) -> dict:
-    """Manifest as of ``version`` — current if it matches, else the history
-    copy; raises with the available versions when absent, and when any of
-    the version's data files was already vacuumed (a stale snapshot must
-    fail loudly, not return silently partial state)."""
-    cur = _read_manifest(path)
-    if cur is not None and cur.get("version") == version:
-        return cur
-    hpath = os.path.join(path, HISTORY_DIR, f"_manifest.v{version}.json")
-    try:
-        with open(hpath) as fh:
-            manifest = json.load(fh)
-    except FileNotFoundError:
-        raise ValueError(
-            f"no manifest for version {version} at {path}; "
-            f"available: {silver_versions(path)}"
-        ) from None
-    files = manifest["files"] + manifest.get(DELTAS, [])
-    missing = [f for f in files if not os.path.exists(os.path.join(path, f))]
-    if missing:
-        raise ValueError(
-            f"version {version} at {path} was vacuumed: {len(missing)} of "
-            f"{len(files)} files gone (first: {missing[0]}); "
-            "retain versions with vacuum_silver(retain_versions=...)"
-        )
-    return manifest
-
-
-def _claim_epoch(path: str, epoch: int, stale_s: float = EPOCH_CLAIM_STALE_S) -> str:
-    return COMMIT_BACKEND.claim_epoch(path, epoch, stale_s)
 
 
 def _bucket_expr(keys: list[str], n_buckets: int):
@@ -235,61 +193,11 @@ def _bucket_expr(keys: list[str], n_buckets: int):
 #: (manifests written before it record only the last publish's frame).
 SCHEMA_UNION = "schema_union"
 
-
-def _manifest_schema(manifest: dict) -> T.StructType:
-    return T.StructType.fromJson(json.loads(manifest["schema"]))
-
-
 #: manifest keys of the merge-on-read layout: ``deltas`` lists the delta
 #: files (one per trigger since the last fold, oldest first), and
 #: ``delta_spec`` the keys and version/tiebreak/op columns they merge by
 DELTAS = "deltas"
 DELTA_SPEC = "delta_spec"
-
-
-def _read_files(spark: SparkSession, path: str, manifest: dict,
-                files: list[str]) -> DataFrame:
-    """Load ``files`` (store-relative) as one DataFrame.  ``basePath``
-    keeps the ``__epoch``/``__bucket`` partition columns derivable.
-    Additive schema evolution across epochs (an untouched bucket may
-    predate a column the source added, or keep one it dropped) is honored
-    by reading with the manifest's union schema: files lacking a column
-    read it as NULL, and no footer job runs.  A manifest without the
-    union flag (written before it existed) reads through ``mergeSchema``,
-    which opens every footer.  No files (e.g. compaction GC'd every row)
-    reconstructs an empty frame from the recorded schema."""
-    if not files:
-        return spark.createDataFrame([], _manifest_schema(manifest))
-    reader = spark.read.option("basePath", path)
-    if manifest.get(SCHEMA_UNION):
-        reader = reader.schema(_manifest_schema(manifest))
-    else:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[os.path.join(path, f) for f in files]).drop(
-        "__epoch", "__bucket"
-    )
-
-
-def _read_deltas(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    """The manifest's delta rows as batch events: the stored flag is
-    dropped, so a merge re-derives it from ``op`` exactly as it does for
-    a trigger's batch."""
-    return _read_files(spark, path, manifest, manifest[DELTAS]).drop(DELETED_FLAG)
-
-
-def _read_live_files(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    """The FINAL view of a manifest: its base files, and when it holds
-    deltas, :func:`merge_touched` of the delta rows over the base rows —
-    the fold's own merge, so winners, tie-breaks and the stored
-    ``__deleted`` rule are the eager path's by construction."""
-    base = _read_files(spark, path, manifest, manifest["files"])
-    if not manifest.get(DELTAS):
-        return base
-    spec = manifest[DELTA_SPEC]
-    return merge_touched(
-        _read_deltas(spark, path, manifest), base, spec["keys"],
-        spec["version_col"], spec["tiebreak_col"], spec["op_col"],
-    ).select(*base.columns)
 
 
 def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
@@ -311,299 +219,534 @@ def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
     return T.StructType(out + list(fields.values()))
 
 
-def _store_schema(path: str, manifest: dict, kept: list[str], df: DataFrame) -> T.StructType:
-    """Union schema of the files the next version keeps plus ``df``.  A
-    manifest without the union flag is upgraded once, from the kept
-    files' footers."""
-    if not kept:
-        return df.schema
-    if manifest.get(SCHEMA_UNION):
-        prev = _manifest_schema(manifest)
-    else:
-        prev = _read_files(df.sparkSession, path, manifest, kept).schema
-    return _merge_schemas(prev, df.schema)
+#: merge-on-read fold cadence of the keyed upsert sinks: a trigger folds
+#: when the manifest already holds FOLD_DELTAS deltas, or when the delta
+#: files' bytes reach FOLD_BYTES_FRACTION of the base files' bytes (which
+#: bounds the extra rows every read merges)
+FOLD_DELTAS = 8
+FOLD_BYTES_FRACTION = 0.25
 
 
-@contextmanager
-def _claimed_epoch(path: str, manifest: dict):
-    """Hold the claim on epoch ``manifest["version"] + 1`` and yield its
-    directory, empty.  Two guards make a concurrent publisher fail LOUDLY
-    instead of losing data: this claim (taken before any file I/O — the
-    leftover ``rmtree`` below may only run while holding it) and the
-    conditional manifest commit the caller makes (CAS on the version the
-    publish was derived from).  The silver store is still a
-    single-writer-per-store design — one streaming sink, with
-    ``compact_silver`` run only while the stream is stopped — these
-    guards turn a violated assumption into an error."""
-    epoch = manifest["version"] + 1
-    epoch_dir = os.path.join(path, f"__epoch={epoch}")
-    claim = _claim_epoch(path, epoch)
-    try:
-        # Re-verify AFTER claiming and BEFORE any file I/O: a publisher
-        # holding a STALE manifest (another publish committed since it
-        # read) would otherwise treat the committed epoch v+1 as crash
-        # leftovers and rmtree the winner's live files.  Loud failure
-        # here, while the store is still untouched.
-        cur = _read_manifest(path)
-        cur_version = cur["version"] if cur is not None else 0
-        if cur_version != manifest["version"]:
-            raise ManifestCommitError(
-                f"concurrent publish at {path}: store is at version "
-                f"{cur_version}, expected {manifest['version']}"
-            )
-        # Crash recovery: epoch v+1 is by definition UNCOMMITTED (the
-        # manifest holds v), so anything already under its dir is leftovers
-        # of a publish that died between the file write and the manifest
-        # swap.  A replayed batch must not commit those alongside its own
-        # files — that would silently duplicate every row in the touched
-        # buckets.  Safe only under the epoch claim + version recheck: a
-        # LIVE concurrent publisher can't be mid-write here (it would have
-        # failed the claim), and a committed epoch can't be mistaken for
-        # leftovers (the recheck would have failed).
-        if os.path.isdir(epoch_dir):
-            shutil.rmtree(epoch_dir)
-        yield epoch_dir
-    finally:
-        COMMIT_BACKEND.release_claim(claim)
+class _SilverStore:
+    """One committed snapshot of a silver store, and the only code that
+    knows the manifest format and the file layout (module docstring).
 
+    A snapshot is one manifest version.  Every write through it — a
+    bucket publish, a delta, a fold, a metadata edit — commits version
+    + 1 through the one commit path (:meth:`_claim`, then :meth:`_commit`
+    with a CAS on the snapshot's version), so a writer whose snapshot went
+    stale fails loudly instead of overwriting the newer version."""
 
-def _bloom_options(manifest: dict) -> dict[str, str]:
-    """CH-style per-column BLOOM FILTERS (r10): declared once via
-    set_bloom_filters, honored by EVERY publisher (upserts, deltas,
-    mutations, TTL, compaction, projections) — parquet-mr writes a
-    split-block bloom per column chunk, and Spark's reader prunes row
-    groups on equality predicates against it.  The point-lookup
-    accelerator for columns the sort order can NOT serve (the
-    bloom_filter index type of clickhouse MergeTree skip indexes)."""
-    opts = {}
-    for c, ndv in manifest.get("bloom_cols", {}).items():
-        opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
-        opts[f"parquet.bloom.filter.expected.ndv#{c}"] = str(ndv)
-    return opts
+    def __init__(self, path: str, manifest: dict, legacy: list[str] | None = None):
+        self.path, self.manifest = path, manifest
+        #: a pre-manifest flat store's parquet files: this snapshot's
+        #: rows, removed once its first publish commits
+        self.legacy = legacy or []
 
+    # -- opening a snapshot ----------------------------------------------
 
-def _publish_buckets(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    manifest: dict,
-    replaced_buckets: set[int],
-    manifest_extra: dict | None = None,
-) -> None:
-    """Write ``df`` as fresh files under a new ``__epoch`` dir (one
-    key-sorted file per bucket — the O1 sparse-index layout within a
-    bucket), then commit under :func:`_claimed_epoch`: new manifest = old
-    live files minus ``replaced_buckets`` plus the new epoch's files, with
-    the union schema of every live file (see :func:`_read_files`).
+    @classmethod
+    def load(cls, path: str) -> _SilverStore | None:
+        """The current snapshot, or None when ``path`` has no manifest."""
+        manifest = _read_manifest(path)
+        return None if manifest is None else cls(path, manifest)
 
-    A manifest holding deltas may only be republished by the fold, which
-    clears them through ``manifest_extra`` in the same commit: a bucket
-    rewrite that carried them forward would let a delta row override
-    what the rewrite decided (a mutation's tombstone, say)."""
-    if manifest.get(DELTAS) and DELTAS not in (manifest_extra or {}):
-        raise RuntimeError(
-            f"{path} holds {len(manifest[DELTAS])} unfolded delta files; "
-            "fold them (_fold_deltas) before republishing buckets"
-        )
-    epoch = manifest["version"] + 1
-    n_buckets = manifest["n_buckets"]
-    # EXPLICIT width: a bare repartition(col) starts at AQE's
-    # initialPartitionNum (2048) and AQE never coalesces user repartitions.
-    # Hashing on __bucket puts each bucket in exactly one task (one
-    # key-sorted file per bucket at any width); core width, because a
-    # small trigger touches few buckets and more tasks are pure overhead.
-    width = max(1, min(len(replaced_buckets), df.sparkSession.sparkContext.defaultParallelism))
-    with _claimed_epoch(path, manifest) as epoch_dir:
-        out = (
-            df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-            .repartition(width, "__bucket")
-            .sortWithinPartitions("__bucket", *keys)
-        )
-        # Write INTO the epoch dir, partitioned by __bucket ONLY (r9 fix,
-        # closes ADVICE r9 item 1 for real): with __epoch as a partition
-        # column its sort key is a foldable literal, so ConstantFolding
-        # strips it from OUR sort while the writer's required ordering
-        # still references the attribute — never satisfied → the
-        # dynamic-partition writer inserted its own (epoch, bucket) sort,
-        # which is NOT stable and silently destroyed the per-bucket key
-        # order (measured: a sec-sorted projection came out scan-ordered).
-        # With the requirement reduced to (__bucket), our (__bucket, keys)
-        # sort satisfies it by prefix and the writer adds nothing — the O1
-        # in-bucket order is now contractual, not TimSort luck.  The
-        # directory layout is unchanged (path/__epoch=N/__bucket=B/), so
-        # readers and vacuum see the exact same tree.
-        projections = manifest.get("projections", {})
-        bloom_opts = _bloom_options(manifest)
-        if projections:
-            # every projection write re-evaluates df's plan — pin it once
-            df.persist()
-        try:
-            out.write.mode("append").options(**bloom_opts).partitionBy(
-                "__bucket"
-            ).parquet(epoch_dir)
+    @classmethod
+    def load_or_new(cls, path: str, n_buckets: int, migrate: bool = False) -> _SilverStore:
+        """The current snapshot, or an empty version 0 of ``n_buckets``
+        buckets when there is none."""
+        return cls.load(path) or cls._new(path, n_buckets, migrate)
 
-            def _collect_epoch_files(root: str, rel_prefix: str) -> list[str]:
-                edir = os.path.join(root, f"__epoch={epoch}")
-                files = []
-                for bucket_dir in sorted(os.listdir(edir)) if os.path.isdir(edir) else []:
-                    full = os.path.join(edir, bucket_dir)
-                    if not bucket_dir.startswith("__bucket=") or not os.path.isdir(full):
-                        continue
-                    files += [
-                        f"{rel_prefix}__epoch={epoch}/{bucket_dir}/{f}"
-                        for f in sorted(os.listdir(full))
-                        if f.endswith(".parquet")
-                    ]
-                return files
-
-            def _kept(files: list[str]) -> list[str]:
-                return [
-                    f for f in files
-                    if int(f.split("__bucket=")[1].split("/")[0]) not in replaced_buckets
-                ]
-
-            new_files = _collect_epoch_files(path, "")
-            kept = _kept(manifest["files"])
-
-            # CH-style per-part PROJECTIONS (r9): for every declared
-            # projection, the SAME replaced buckets are rewritten under
-            # __proj_<name>/, sorted by the projection's keys — one extra
-            # write per projection per publish (CH's own maintenance
-            # cost), atomically committed by the same manifest swap.  The
-            # projection shares the primary's bucket ids, so kept/replaced
-            # bookkeeping is identical.
-            proj_updates = {}
-            for pname, pspec in projections.items():
-                proot = os.path.join(path, f"__proj_{pname}")
-                pepoch_dir = os.path.join(proot, f"__epoch={epoch}")
-                if os.path.isdir(pepoch_dir):  # crash leftovers, same rule
-                    shutil.rmtree(pepoch_dir)
-                pout = (
-                    df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-                    .repartition(width, "__bucket")
-                    .sortWithinPartitions("__bucket", *pspec["keys"])
-                )
-                pout.write.mode("append").options(**bloom_opts).partitionBy(
-                    "__bucket"
-                ).parquet(pepoch_dir)
-                proj_updates[pname] = {
-                    **pspec,
-                    "files": _kept(pspec.get("files", []))
-                    + _collect_epoch_files(proot, f"__proj_{pname}/"),
-                }
-
-            _write_manifest(
-                path,
-                {
-                    # sink-specific fields (e.g. the summing sink's applied-
-                    # batch watermarks) CARRY FORWARD through every publisher
-                    # — compaction/mutations must not silently drop them
-                    **{
-                        k: v for k, v in manifest.items()
-                        if k not in ("version", "n_buckets", "files", "schema")
-                    },
-                    "version": epoch,
-                    "n_buckets": n_buckets,
-                    "files": kept + new_files,
-                    "schema": _store_schema(path, manifest, kept, df).json(),
-                    SCHEMA_UNION: True,
-                    "sort_keys": list(keys),  # r10: primary in-bucket order, for projection routing
-                    **({"projections": proj_updates} if projections else {}),
-                    **(manifest_extra or {}),
-                },
-                expected_version=manifest["version"],
-            )
-        finally:
-            if projections:
-                df.unpersist()
-
-
-def _publish_delta(rows: DataFrame, path: str, manifest: dict, spec: dict) -> bool:
-    """Commit ``rows`` (one trigger's latest-wins rows, flag included) as
-    ONE delta file, key-sorted, under :func:`_claimed_epoch`: the new
-    manifest keeps every base file and appends the delta to
-    ``manifest[DELTAS]``.  A column the store already holds keeps its
-    stored type (the batch is cast to it), so a delta never narrows the
-    schema readers apply to the base.  Returns False, committing
-    nothing, when ``rows`` is empty."""
-    import pyarrow.parquet as pq
-
-    stored = {f.name: f.dataType for f in _manifest_schema(manifest).fields}
-    rows = rows.withColumns({
-        f.name: rows[f.name].cast(stored[f.name]) for f in rows.schema.fields
-        if f.name in stored and stored[f.name] != f.dataType
-        and not isinstance(f.dataType, T.StructType)
-    })
-    epoch = manifest["version"] + 1
-    with _claimed_epoch(path, manifest) as epoch_dir:
-        # coalesce, not repartition: the one task that sorts and writes
-        # the file also runs the aggregate's final merge, over the same
-        # rows, instead of a second exchange
-        rows.coalesce(1).sortWithinPartitions(*spec["keys"]).write.options(
-            **_bloom_options(manifest)
-        ).parquet(epoch_dir)
-        names = sorted(
-            f for f in (os.listdir(epoch_dir) if os.path.isdir(epoch_dir) else [])
-            if f.endswith(".parquet")
-            and pq.read_metadata(os.path.join(epoch_dir, f)).num_rows
-        )
-        if not names:
-            shutil.rmtree(epoch_dir, ignore_errors=True)
-            return False
-        _write_manifest(
-            path,
-            {
-                **manifest,
-                "version": epoch,
-                DELTAS: manifest.get(DELTAS, []) + [f"__epoch={epoch}/{f}" for f in names],
-                DELTA_SPEC: spec,
-                "schema": _merge_schemas(_manifest_schema(manifest), rows.schema).json(),
-            },
-            expected_version=manifest["version"],
-        )
-    return True
-
-
-def _touched_bucket_merge(
-    batch: DataFrame,
-    path: str,
-    keys: list[str],
-    n_buckets: int,
-    prepare,
-    merge_fn,
-    legacy_mode: str = "migrate",
-    vacuum_every: int = 16,
-    manifest_extra: dict | None = None,
-) -> None:
-    """The eager touched-bucket merge: every summing-sink trigger, and
-    the keyed upsert sinks' FOLD (see :func:`_cdc_upsert`).  Read the
-    manifest (or default a fresh store), compute the batch's touched
-    buckets from ``prepare(batch)``, load ONLY those buckets' base files,
-    delegate the merge to ``merge_fn(current_or_None, prepared)``, publish
-    through the epoch-claim + CAS commit, and run vacuum on a cadence.
-
-    ``legacy_mode`` decides what happens on a pre-manifest flat store:
-    ``"migrate"`` (the upsert sink) reads it as current state and
-    publishes everything bucketed once; any other sink must fail LOUDLY —
-    committing a first manifest over unmigrated flat files would hide the
-    legacy rows from ``read_silver`` forever."""
-    spark = batch.sparkSession
-    manifest = _read_manifest(path)
-    legacy_files = []
-    if manifest is None and os.path.isdir(path):
-        legacy_files = [
-            f for f in os.listdir(path)
+    @classmethod
+    def _new(cls, path: str, n_buckets: int, migrate: bool) -> _SilverStore:
+        """An empty version 0.  A pre-manifest flat store (plain
+        ``*.parquet`` under ``path``) is adopted when ``migrate`` — its
+        rows become the snapshot's rows — and refused otherwise: a first
+        manifest committed over unmigrated flat files would hide their
+        rows from every reader forever."""
+        legacy = [
+            f for f in (os.listdir(path) if os.path.isdir(path) else [])
             if f.endswith(".parquet") and os.path.isfile(os.path.join(path, f))
         ]
-        if legacy_files and legacy_mode != "migrate":
+        if legacy and not migrate:
             raise ValueError(
                 f"pre-manifest flat store at {path}: this sink cannot migrate "
                 "it; run silver_upsert_stream or compact_silver once to "
                 "convert it to the bucketed manifest layout"
             )
-    if manifest is None:
-        manifest = {"version": 0, "n_buckets": n_buckets, "files": []}
-    nb = manifest["n_buckets"]
+        return cls(path, {"version": 0, "n_buckets": n_buckets, "files": []}, legacy)
+
+    @classmethod
+    def open(cls, path: str, spark: SparkSession | None = None, fold_first: bool = False,
+             migrate: bool = False) -> _SilverStore:
+        """The current snapshot of an existing store; raises
+        FileNotFoundError when there is none.  ``fold_first`` folds the
+        deltas first (one commit of its own) and returns the snapshot
+        after it: every writer other than the upsert trigger rewrites base
+        buckets, and a delta left on top would override what it decided.
+        ``migrate`` opens a pre-manifest flat store (see :meth:`_new`)."""
+        store = cls.load(path)
+        if store is None:
+            store = cls._new(path, DEFAULT_SILVER_BUCKETS, migrate=True)
+            if not (migrate and store.legacy):
+                raise FileNotFoundError(f"no silver store at {path}")
+        elif fold_first and store.deltas:
+            store.fold(spark, None, store.manifest[DELTA_SPEC])
+            store = cls.load(path)
+        return store
+
+    @staticmethod
+    def _history_file(path: str, version: int) -> str:
+        return os.path.join(path, HISTORY_DIR, f"_manifest.v{version}.json")
+
+    @classmethod
+    def as_of(cls, path: str, version: int) -> _SilverStore:
+        """The snapshot of committed ``version`` — current if it matches,
+        else its history copy; raises with the available versions when
+        absent, and when any of the version's data files was already
+        vacuumed (a stale snapshot must fail loudly, not return silently
+        partial state)."""
+        cur = cls.load(path)
+        if cur is not None and cur.version == version:
+            return cur
+        try:
+            with open(cls._history_file(path, version)) as fh:
+                store = cls(path, json.load(fh))
+        except FileNotFoundError:
+            raise ValueError(
+                f"no manifest for version {version} at {path}; "
+                f"available: {silver_versions(path)}"
+            ) from None
+        files = store.files + store.deltas
+        missing = [f for f in files if not os.path.exists(os.path.join(path, f))]
+        if missing:
+            raise ValueError(
+                f"version {version} at {path} was vacuumed: {len(missing)} of "
+                f"{len(files)} files gone (first: {missing[0]}); "
+                "retain versions with vacuum_silver(retain_versions=...)"
+            )
+        return store
+
+    @classmethod
+    def keep_history(cls, path: str, manifest: dict) -> None:
+        """Write the immutable ``_history`` copy of a manifest that just
+        won its CAS (time travel).  Plain file IO, not the commit backend:
+        history is an audit artifact on the data plane, like the parquet
+        itself, and must never fail a commit that already won."""
+        v = manifest.get("version")
+        if v is None:
+            return
+        try:
+            hpath = cls._history_file(path, v)
+            os.makedirs(os.path.dirname(hpath), exist_ok=True)
+            if not os.path.exists(hpath):  # versions are immutable once written
+                tmp = f"{hpath}.tmp-{os.getpid()}"
+                with open(tmp, "w") as fh:
+                    json.dump(manifest, fh)
+                os.replace(tmp, hpath)
+        except OSError:
+            pass
+
+    # -- what the snapshot holds -----------------------------------------
+
+    @property
+    def version(self) -> int:
+        return self.manifest["version"]
+
+    @property
+    def n_buckets(self) -> int:
+        return self.manifest["n_buckets"]
+
+    @property
+    def all_buckets(self) -> set[int]:
+        return set(range(self.n_buckets))
+
+    @property
+    def files(self) -> list[str]:
+        return self.manifest["files"]
+
+    @property
+    def deltas(self) -> list[str]:
+        return self.manifest.get(DELTAS, [])
+
+    @property
+    def projections(self) -> dict[str, dict]:
+        return self.manifest.get("projections", {})
+
+    @property
+    def sort_keys(self) -> list[str]:
+        return self.manifest.get("sort_keys", [])
+
+    @property
+    def applied(self) -> dict[str, int]:
+        """The replay watermarks of the non-idempotent sinks."""
+        return self.manifest.get("applied", {})
+
+    @property
+    def schema(self) -> T.StructType:
+        return T.StructType.fromJson(json.loads(self.manifest["schema"]))
+
+    @staticmethod
+    def _bucket_of(f: str) -> int | None:
+        return int(f.split("__bucket=")[1].split("/")[0]) if "__bucket=" in f else None
+
+    def parts(self):
+        """``(layout, file, bucket, epoch)`` of every live file: the base
+        (``primary``), the deltas (``delta``, no bucket) and each
+        projection (``proj:<name>``)."""
+        layouts = [("primary", self.files), ("delta", self.deltas)] + [
+            (f"proj:{p}", s.get("files", [])) for p, s in self.projections.items()
+        ]
+        for layout, files in layouts:
+            for f in files:
+                epoch = int(f.split("__epoch=")[1].split("/")[0])
+                yield layout, f, self._bucket_of(f), epoch
+
+    def touched(self, df: DataFrame, keys: list[str]) -> set[int]:
+        """The buckets of ``df``'s rows by ``keys``: one distinct collect
+        of at most ``n_buckets`` ids."""
+        ids = df.select(_bucket_expr(keys, self.n_buckets).alias("b")).distinct().collect()
+        return {int(r[0]) for r in ids}
+
+    def in_buckets(self, df: DataFrame, keys: list[str], buckets: set[int]) -> DataFrame:
+        return df.filter(_bucket_expr(keys, self.n_buckets).isin(sorted(buckets)))
+
+    # -- reading ---------------------------------------------------------
+
+    def _files_df(self, spark: SparkSession, files: list[str]) -> DataFrame:
+        """Load ``files`` (store-relative) as one DataFrame.  ``basePath``
+        keeps the ``__epoch``/``__bucket`` partition columns derivable.
+        Additive schema evolution across epochs (an untouched bucket may
+        predate a column the source added, or keep one it dropped) is
+        honored by reading with the manifest's union schema: files lacking
+        a column read it as NULL, and no footer job runs.  A manifest
+        without the union flag (written before it existed) reads through
+        ``mergeSchema``, which opens every footer.  No files (e.g.
+        compaction GC'd every row) reconstructs an empty frame from the
+        recorded schema."""
+        if not files:
+            return spark.createDataFrame([], self.schema)
+        reader = spark.read.option("basePath", self.path)
+        if self.manifest.get(SCHEMA_UNION):
+            reader = reader.schema(self.schema)
+        else:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*[os.path.join(self.path, f) for f in files]).drop(
+            "__epoch", "__bucket"
+        )
+
+    def base(self, spark: SparkSession, buckets: set[int]) -> DataFrame | None:
+        """The base rows of ``buckets`` (a flat store's every row), or None
+        when they hold no file."""
+        if self.legacy:
+            # explicit file list, not the directory: a crashed earlier
+            # migration may have left an __epoch dir next to the flat
+            # files, and a whole-dir read would fail on the conflicting
+            # partition structures
+            return spark.read.parquet(*[os.path.join(self.path, f) for f in self.legacy])
+        files = [f for f in self.files if self._bucket_of(f) in buckets]
+        return self._files_df(spark, files) if files else None
+
+    def _delta_rows(self, spark: SparkSession) -> DataFrame:
+        """The delta rows as batch events: the stored flag is dropped, so a
+        merge re-derives it from ``op`` exactly as it does for a
+        trigger's batch."""
+        return self._files_df(spark, self.deltas).drop(DELETED_FLAG)
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        """The FINAL view: the base files, and when the snapshot holds
+        deltas, :func:`merge_touched` of the delta rows over the base rows
+        — the fold's own merge, so winners, tie-breaks and the stored
+        ``__deleted`` rule are the eager path's by construction."""
+        if self.legacy:
+            return self.base(spark, self.all_buckets)
+        base = self._files_df(spark, self.files)
+        if not self.deltas:
+            return base
+        spec = self.manifest[DELTA_SPEC]
+        return merge_touched(
+            self._delta_rows(spark), base, spec["keys"],
+            spec["version_col"], spec["tiebreak_col"], spec["op_col"],
+        ).select(*base.columns)
+
+    def read_projection(self, spark: SparkSession, name: str) -> DataFrame:
+        pspec = self.projections.get(name)
+        if pspec is None:
+            raise ValueError(f"no projection {name!r} at {self.path}")
+        return self._files_df(spark, pspec["files"])
+
+    # -- the one commit path ---------------------------------------------
+
+    @contextmanager
+    def _claim(self):
+        """Hold the claim on epoch ``version + 1`` and yield its directory,
+        empty.  Two guards make a concurrent writer fail LOUDLY instead of
+        losing data: this claim (taken before any file I/O — the leftover
+        ``rmtree`` below may only run while holding it) and the CAS of
+        :meth:`_commit`.  The store is still single-writer — one streaming
+        sink, maintenance only while it is stopped — and these guards turn
+        a violated assumption into an error."""
+        epoch = self.version + 1
+        epoch_dir = os.path.join(self.path, f"__epoch={epoch}")
+        claim = COMMIT_BACKEND.claim_epoch(self.path, epoch, EPOCH_CLAIM_STALE_S)
+        try:
+            # Re-verify AFTER claiming and BEFORE any file I/O: a writer
+            # holding a STALE snapshot (another commit landed since it
+            # read) would otherwise treat the committed epoch v+1 as crash
+            # leftovers and rmtree the winner's live files.  Loud failure
+            # here, while the store is still untouched.
+            cur = _read_manifest(self.path)
+            cur_version = cur["version"] if cur is not None else 0
+            if cur_version != self.version:
+                raise ManifestCommitError(
+                    f"concurrent publish at {self.path}: store is at version "
+                    f"{cur_version}, expected {self.version}"
+                )
+            # Crash recovery: epoch v+1 is by definition UNCOMMITTED (the
+            # manifest holds v), so anything already under its dir is
+            # leftovers of a publish that died between the file write and
+            # the manifest swap.  A replayed batch must not commit those
+            # alongside its own files — that would silently duplicate every
+            # row in the touched buckets.  Safe only under the claim + the
+            # version recheck: a LIVE concurrent writer can't be mid-write
+            # here (it would have failed the claim), and a committed epoch
+            # can't be mistaken for leftovers (the recheck would have
+            # failed).
+            if os.path.isdir(epoch_dir):
+                shutil.rmtree(epoch_dir)
+            yield epoch_dir
+        finally:
+            COMMIT_BACKEND.release_claim(claim)
+
+    def _commit(self, manifest: dict) -> int:
+        """CAS ``manifest`` in as version + 1 (call under :meth:`_claim`);
+        a flat store's files are superseded by this first commit.  Returns
+        the new version."""
+        _write_manifest(self.path, {**manifest, "version": self.version + 1},
+                        expected_version=self.version)
+        for f in self.legacy:
+            os.remove(os.path.join(self.path, f))
+        return self.version + 1
+
+    def edit(self, changes: dict) -> int:
+        """Commit a metadata-only change as the next version (no data file
+        is written), so a writer holding the pre-edit snapshot fails its
+        commit instead of overwriting the edit."""
+        with self._claim():
+            return self._commit({**self.manifest, **changes})
+
+    def with_projection(self, name: str, proj_keys: list[str] | None = None) -> dict:
+        """The manifest change that adds projection ``name`` sorted by
+        ``proj_keys`` (its files written by the publish that commits it),
+        or, without keys, drops it."""
+        projections = dict(self.projections)
+        if proj_keys is None:
+            projections.pop(name, None)
+        else:
+            projections[name] = {"keys": list(proj_keys), "files": []}
+        return {"projections": projections}
+
+    def _write_options(self) -> dict[str, str]:
+        """CH-style per-column BLOOM FILTERS (r10): declared once via
+        set_bloom_filters, honored by EVERY publisher (upserts, deltas,
+        mutations, TTL, compaction, projections) — parquet-mr writes a
+        split-block bloom per column chunk, and Spark's reader prunes row
+        groups on equality predicates against it.  The point-lookup
+        accelerator for columns the sort order can NOT serve (the
+        bloom_filter index type of clickhouse MergeTree skip indexes)."""
+        opts = {}
+        for c, ndv in self.manifest.get("bloom_cols", {}).items():
+            opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
+            opts[f"parquet.bloom.filter.expected.ndv#{c}"] = str(ndv)
+        return opts
+
+    def publish(self, df: DataFrame, keys: list[str], replaced: set[int],
+                edits: dict | None = None) -> int:
+        """Rewrite the ``replaced`` buckets from ``df`` as the next
+        version.  Each layout — the main one sorted by ``keys``, each
+        projection (ClickHouse's per-part PROJECTIONS) by its own keys —
+        gets one key-sorted file per bucket (the O1 sparse-index layout
+        within a bucket) under a new ``__epoch`` dir; the new manifest
+        keeps every other bucket's files, with the union schema of every
+        live file.  ``edits`` (a new width, a new projection, replay
+        watermarks, cleared deltas) apply to the manifest first; every
+        other sink-specific field carries forward.
+
+        A store holding deltas may only be republished by the fold, which
+        clears them in the same commit: a bucket rewrite that carried them
+        forward would let a delta row override what the rewrite decided
+        (a mutation's tombstone, say).  Returns the new version."""
+        m = {**self.manifest, **(edits or {})}
+        if m.get(DELTAS):
+            raise RuntimeError(
+                f"{self.path} holds {len(m[DELTAS])} unfolded delta files; "
+                "fold them (open(fold_first=True)) before republishing buckets"
+            )
+        epoch, n_buckets = self.version + 1, m["n_buckets"]
+        projections = m.get("projections", {})
+        layouts = {"": (keys, m["files"])}
+        layouts.update({f"__proj_{p}/": (s["keys"], s.get("files", []))
+                        for p, s in projections.items()})
+        # EXPLICIT width: a bare repartition(col) starts at AQE's
+        # initialPartitionNum (2048) and AQE never coalesces user
+        # repartitions.  Hashing on __bucket puts each bucket in exactly
+        # one task (one key-sorted file per bucket at any width); core
+        # width, because a small trigger touches few buckets and more tasks
+        # are pure overhead.
+        width = max(1, min(len(replaced), df.sparkSession.sparkContext.defaultParallelism))
+        files = {}
+        with self._claim():
+            if projections:
+                # every layout's write re-evaluates df's plan — pin it once
+                df.persist()
+            try:
+                for prefix, (sort, old) in layouts.items():
+                    edir = os.path.join(self.path, f"{prefix}__epoch={epoch}")
+                    if os.path.isdir(edir):  # crash leftovers, the claim's rule
+                        shutil.rmtree(edir)
+                    # Partitioned by __bucket ONLY, written INTO the epoch
+                    # dir (r9): with __epoch as a partition column its sort
+                    # key is a foldable literal that ConstantFolding strips
+                    # from our sort, so the writer added its own unstable
+                    # (epoch, bucket) sort and destroyed the in-bucket key
+                    # order.  Our (__bucket, keys) sort now satisfies the
+                    # writer's requirement by prefix: the order is
+                    # contractual.
+                    (df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
+                     .repartition(width, "__bucket")
+                     .sortWithinPartitions("__bucket", *sort)
+                     .write.mode("append").options(**self._write_options())
+                     .partitionBy("__bucket").parquet(edir))
+                    written = [
+                        f"{prefix}__epoch={epoch}/{b}/{f}"
+                        for b in (sorted(os.listdir(edir)) if os.path.isdir(edir) else [])
+                        if b.startswith("__bucket=") and os.path.isdir(os.path.join(edir, b))
+                        for f in sorted(os.listdir(os.path.join(edir, b)))
+                        if f.endswith(".parquet")
+                    ]
+                    files[prefix] = [f for f in old if self._bucket_of(f) not in replaced] + written
+                kept = [f for f in m["files"] if self._bucket_of(f) not in replaced]
+                return self._commit({
+                    **m,
+                    "files": files[""],
+                    "schema": self._union_schema(kept, df).json(),
+                    SCHEMA_UNION: True,
+                    "sort_keys": list(keys),  # r10: primary in-bucket order, for projection routing
+                    **({"projections": {p: {**s, "files": files[f"__proj_{p}/"]}
+                                        for p, s in projections.items()}}
+                       if projections else {}),
+                })
+            finally:
+                if projections:
+                    df.unpersist()
+
+    def _union_schema(self, kept: list[str], df: DataFrame) -> T.StructType:
+        """Union schema of the files the next version keeps plus ``df``.  A
+        manifest without the union flag is upgraded once, from the kept
+        files' footers."""
+        if not kept:
+            return df.schema
+        if self.manifest.get(SCHEMA_UNION):
+            prev = self.schema
+        else:
+            prev = self._files_df(df.sparkSession, kept).schema
+        return _merge_schemas(prev, df.schema)
+
+    # -- merge-on-read ---------------------------------------------------
+
+    def publish_delta(self, rows: DataFrame, spec: dict) -> bool:
+        """Commit ``rows`` (one trigger's latest-wins rows, flag included)
+        as ONE key-sorted delta file: the new manifest keeps every base
+        file and appends the delta.  A column the store already holds
+        keeps its stored type (the batch is cast to it), so a delta never
+        narrows the schema readers apply to the base.  Returns False,
+        committing nothing, when ``rows`` is empty."""
+        import pyarrow.parquet as pq
+
+        stored = {f.name: f.dataType for f in self.schema.fields}
+        rows = rows.withColumns({
+            f.name: rows[f.name].cast(stored[f.name]) for f in rows.schema.fields
+            if f.name in stored and stored[f.name] != f.dataType
+            and not isinstance(f.dataType, T.StructType)
+        })
+        with self._claim() as epoch_dir:
+            # coalesce, not repartition: the one task that sorts and writes
+            # the file also runs the aggregate's final merge, over the same
+            # rows, instead of a second exchange
+            rows.coalesce(1).sortWithinPartitions(*spec["keys"]).write.options(
+                **self._write_options()
+            ).parquet(epoch_dir)
+            names = sorted(
+                f for f in (os.listdir(epoch_dir) if os.path.isdir(epoch_dir) else [])
+                if f.endswith(".parquet")
+                and pq.read_metadata(os.path.join(epoch_dir, f)).num_rows
+            )
+            if not names:
+                shutil.rmtree(epoch_dir, ignore_errors=True)
+                return False
+            self._commit({
+                **self.manifest,
+                DELTAS: self.deltas + [f"__epoch={self.version + 1}/{f}" for f in names],
+                DELTA_SPEC: spec,
+                "schema": _merge_schemas(self.schema, rows.schema).json(),
+            })
+        return True
+
+    def fold_due(self, spec: dict) -> bool:
+        """Whether the next keyed upsert trigger must fold.  Decided from
+        the manifest and driver-side file sizes — no Spark job.  An empty,
+        flat (pre-manifest) or pre-union-schema store always folds, so
+        does one with projections (their files stay exact), and one whose
+        deltas were written under different merge columns."""
+        if not self.manifest.get(SCHEMA_UNION) or self.projections:
+            return True
+        if not (self.files or self.deltas) or len(self.deltas) >= FOLD_DELTAS:
+            return True
+        if self.deltas and self.manifest[DELTA_SPEC] != spec:
+            return True
+
+        def size(files):
+            return sum(os.path.getsize(os.path.join(self.path, f)) for f in files)
+
+        return size(self.deltas) >= FOLD_BYTES_FRACTION * size(self.files)
+
+    def fold(self, spark: SparkSession, events: DataFrame | None, spec: dict) -> None:
+        """The FOLD: :func:`_touched_bucket_merge` with ``events`` ∪ the
+        delta rows as the events, republishing the buckets they touch and
+        clearing the deltas in the SAME commit."""
+        if self.deltas:
+            deltas = self._delta_rows(spark)
+            events = deltas if events is None else events.unionByName(
+                deltas, allowMissingColumns=True
+            )
+        keys = spec["keys"]
+        _touched_bucket_merge(
+            events, self, keys,
+            prepare=lambda b: b,
+            merge_fn=lambda current, prepared: merge_touched(
+                prepared, current, keys, spec["version_col"], spec["tiebreak_col"],
+                spec["op_col"],
+            ),
+            edits={DELTAS: []},
+        )
+
+
+def _touched_bucket_merge(
+    batch: DataFrame,
+    store: _SilverStore,
+    keys: list[str],
+    prepare,
+    merge_fn,
+    edits: dict | None = None,
+) -> None:
+    """The eager touched-bucket merge: every summing/collapsing-sink
+    trigger, and the keyed upsert sinks' FOLD (see :func:`_cdc_upsert`).
+    Compute the batch's touched buckets from ``prepare(batch)``, load ONLY
+    those buckets' base files of ``store``, delegate the merge to
+    ``merge_fn(current_or_None, prepared)``, publish it, and run vacuum on
+    a cadence.  A flat store adopted by ``store`` is read whole and
+    published bucketed once."""
+    spark = batch.sparkSession
     # the batch feeds several actions (touched-bucket collect + the merge
     # itself) — evaluate the source once; the try spans every action so a
     # failing merge can't leak the cached frames
@@ -613,44 +756,19 @@ def _touched_bucket_merge(
         if prepared is not batch:
             prepared.persist()
         try:
-            touched = {
-                r[0]
-                for r in prepared.select(
-                    _bucket_expr(keys, nb).alias("b")
-                ).distinct().collect()
-            }
-            if not touched and not legacy_files:
+            touched = store.touched(prepared, keys)
+            if store.legacy:
+                touched = store.all_buckets  # full one-time bucketed publish
+            elif not touched:
                 return  # empty batch: nothing to publish
-            if legacy_files:
-                # explicit file list, not the directory: a crashed earlier
-                # migration may have left an __epoch dir next to the flat
-                # files, and a whole-dir read would fail on the conflicting
-                # partition structures
-                current = spark.read.parquet(
-                    *[os.path.join(path, f) for f in legacy_files]
-                )
-                touched = set(range(nb))  # full one-time bucketed publish
-            else:
-                live_touched = [
-                    f for f in manifest["files"]
-                    if int(f.split("__bucket=")[1].split("/")[0]) in touched
-                ]
-                current = (
-                    _read_files(spark, path, manifest, live_touched)
-                    if live_touched else None
-                )
-            _publish_buckets(
-                merge_fn(current, prepared), path, keys, manifest, touched,
-                manifest_extra=manifest_extra,
-            )
+            store.publish(merge_fn(store.base(spark, touched), prepared), keys,
+                          touched, edits)
         finally:
             if prepared is not batch:
                 prepared.unpersist()
     finally:
         batch.unpersist()
-    for f in legacy_files:  # superseded by the first manifest commit
-        os.remove(os.path.join(path, f))
-    _vacuum_on_cadence(path, manifest["version"] + 1, vacuum_every)
+    _vacuum_on_cadence(store.path, store.version + 1)
 
 
 def _vacuum_on_cadence(path: str, version: int, every: int = 16) -> None:
@@ -661,70 +779,6 @@ def _vacuum_on_cadence(path: str, version: int, every: int = 16) -> None:
         vacuum_silver(path)
 
 
-#: merge-on-read fold cadence of the keyed upsert sinks: a trigger folds
-#: when the manifest already holds FOLD_DELTAS deltas, or when the delta
-#: files' bytes reach FOLD_BYTES_FRACTION of the base files' bytes (which
-#: bounds the extra rows every read merges)
-FOLD_DELTAS = 8
-FOLD_BYTES_FRACTION = 0.25
-
-
-def _fold_due(path: str, manifest: dict | None, spec: dict) -> bool:
-    """Whether the next keyed upsert trigger must fold.  Decided from the
-    manifest and driver-side file sizes — no Spark job.  An empty, flat
-    (pre-manifest) or pre-union-schema store always folds, so does one
-    with projections (their files stay exact), and one whose deltas were
-    written under different merge columns."""
-    if manifest is None or not manifest.get(SCHEMA_UNION) or manifest.get("projections"):
-        return True
-    deltas = manifest.get(DELTAS, [])
-    if not (manifest["files"] or deltas) or len(deltas) >= FOLD_DELTAS:
-        return True
-    if deltas and manifest[DELTA_SPEC] != spec:
-        return True
-
-    def size(files):
-        return sum(os.path.getsize(os.path.join(path, f)) for f in files)
-
-    return size(deltas) >= FOLD_BYTES_FRACTION * size(manifest["files"])
-
-
-def _fold(spark: SparkSession, events: DataFrame | None, path: str, spec: dict,
-          n_buckets: int, legacy_mode: str = "migrate") -> None:
-    """The FOLD: :func:`_touched_bucket_merge` with ``events`` ∪ the
-    manifest's delta rows as the events, republishing the buckets they
-    touch and clearing the deltas in the SAME commit."""
-    manifest = _read_manifest(path)
-    if manifest is not None and manifest.get(DELTAS):
-        deltas = _read_deltas(spark, path, manifest)
-        events = deltas if events is None else events.unionByName(
-            deltas, allowMissingColumns=True
-        )
-    keys = spec["keys"]
-    _touched_bucket_merge(
-        events, path, keys, n_buckets,
-        prepare=lambda b: b,
-        merge_fn=lambda current, prepared: merge_touched(
-            prepared, current, keys, spec["version_col"], spec["tiebreak_col"],
-            spec["op_col"],
-        ),
-        legacy_mode=legacy_mode,
-        manifest_extra={DELTAS: []},
-    )
-
-
-def _fold_deltas(spark: SparkSession, path: str) -> dict | None:
-    """Fold a store's deltas into its base buckets as one commit (a no-op
-    without deltas) and return the manifest after it.  Every writer other
-    than the upsert trigger runs this first: they rewrite base buckets,
-    and a delta left on top would override what they decided."""
-    manifest = _read_manifest(path)
-    if manifest is None or not manifest.get(DELTAS):
-        return manifest
-    _fold(spark, None, path, manifest[DELTA_SPEC], manifest["n_buckets"])
-    return _read_manifest(path)
-
-
 def _cdc_upsert(batch: DataFrame, path: str, keys: list[str], n_buckets: int,
                 version_col: str, tiebreak_col: str | None, op_col: str = "op",
                 legacy_mode: str = "migrate") -> None:
@@ -733,19 +787,20 @@ def _cdc_upsert(batch: DataFrame, path: str, keys: list[str], n_buckets: int,
     tombstones across batches) become ONE delta file and ONE manifest
     commit; there is no touched-bucket collect and no read of current
     rows.  Readers apply FINAL over base ∪ deltas
-    (:func:`_read_live_files`).  When :func:`_fold_due`, the trigger is
-    the fold instead — the touched-bucket merge of batch ∪ deltas — and
-    is still exactly one commit."""
+    (:meth:`_SilverStore.read`).  When :meth:`_SilverStore.fold_due`, the
+    trigger is the fold instead — the touched-bucket merge of batch ∪
+    deltas — and is still exactly one commit.  ``legacy_mode`` other than
+    ``"migrate"`` refuses a pre-manifest flat store."""
     spec = {"keys": list(keys), "version_col": version_col,
             "tiebreak_col": tiebreak_col, "op_col": op_col}
-    manifest = _read_manifest(path)
-    if _fold_due(path, manifest, spec):
-        _fold(batch.sparkSession, batch, path, spec, n_buckets, legacy_mode)
-    elif _publish_delta(
+    store = _SilverStore.load_or_new(path, n_buckets, migrate=legacy_mode == "migrate")
+    if store.fold_due(spec):
+        store.fold(batch.sparkSession, batch, spec)
+    elif store.publish_delta(
         apply_cdc(batch, keys, version_col, tiebreak_col, op_col, delete_mode="rewrite"),
-        path, manifest, spec,
+        spec,
     ):
-        _vacuum_on_cadence(path, manifest["version"] + 1)
+        _vacuum_on_cadence(path, store.version + 1)
 
 
 #: marker file under the store's ``_signals/`` dir while an ad-hoc
@@ -813,7 +868,7 @@ def silver_upsert_stream(
     filter ``__deleted`` yourself) to consume the store.
 
     Per trigger, the batch's latest-wins rows become one key-sorted delta
-    file and one manifest commit; every few triggers (``_fold_due``) the
+    file and one manifest commit; every few triggers (``_SilverStore.fold_due``) the
     trigger is the fold instead, which reads, merges and re-publishes only
     the hash buckets containing batch or delta keys — untouched buckets'
     files are not opened, written, or moved (see the store-layout
@@ -845,29 +900,20 @@ def _txn_trigger(batch: DataFrame, batch_id: int, ppath: str, checkpoint: str,
     pending buckets it touches (deduped on txn id + order); the data rows
     (``is_data``) of COMPLETE transactions go to ``release``, which commits
     them to silver; everything else republishes to pending, last, with the
-    ``_replay_guard`` watermark.  ``txn_cols`` = (id, order, total)."""
+    ``_replay_guard`` watermark.  ``txn_cols`` = (id, order, total).
+    The guard and the pending publish share one pending snapshot."""
     txn_id_col, txn_order_col, txn_total_col = txn_cols
-    keep = _replay_guard(ppath, checkpoint, batch_id)
+    pending = _SilverStore.load_or_new(ppath, n_buckets)
+    keep = _replay_guard(pending, checkpoint, batch_id)
     if keep is None or not batch.take(1):
         return
-    pmanifest = _read_manifest(ppath) or {"version": 0, "n_buckets": n_buckets, "files": []}
     batch.persist()
     try:
-        tx_buckets = {
-            int(r[0])
-            for r in batch.select(
-                _bucket_expr([txn_id_col], pmanifest["n_buckets"]).alias("b")
-            ).distinct().collect()
-        }
-        pend_files = [
-            f for f in pmanifest["files"]
-            if int(f.split("__bucket=")[1].split("/")[0]) in tx_buckets
-        ]
+        tx_buckets = pending.touched(batch, [txn_id_col])
+        buffered = pending.base(batch.sparkSession, tx_buckets)
         universe = batch
-        if pend_files:
-            universe = _read_files(
-                batch.sparkSession, ppath, pmanifest, pend_files
-            ).unionByName(batch, allowMissingColumns=True)
+        if buffered is not None:
+            universe = buffered.unionByName(batch, allowMissingColumns=True)
         universe = universe.dropDuplicates([txn_id_col, txn_order_col])
         universe.persist()
         try:
@@ -882,10 +928,9 @@ def _txn_trigger(batch: DataFrame, batch_id: int, ppath: str, checkpoint: str,
             if max_broadcast_keys and complete.count() <= max_broadcast_keys:
                 complete = F.broadcast(complete)
             release(universe.filter(is_data).join(complete, txn_id_col))
-            _publish_buckets(
-                universe.join(complete, txn_id_col, "left_anti"), ppath,
-                [txn_id_col], pmanifest, tx_buckets,
-                manifest_extra={"applied": keep},
+            pending.publish(
+                universe.join(complete, txn_id_col, "left_anti"), [txn_id_col],
+                tx_buckets, {"applied": keep},
             )
         finally:
             universe.unpersist()
@@ -986,10 +1031,7 @@ def read_txn_pending(spark: SparkSession, pending_path: str) -> DataFrame:
     Observability surface for the txn-consistent sink: alert when a
     transaction has been pending longer than the source's commit
     latency."""
-    manifest = _read_manifest(pending_path)
-    if manifest is None:
-        raise FileNotFoundError(f"no pending store at {pending_path}")
-    return _read_live_files(spark, pending_path, manifest)
+    return _SilverStore.open(pending_path).read(spark)
 
 
 def silver_txn_multi_upsert_stream(
@@ -1134,21 +1176,14 @@ def vacuum_silver(
     and without pruning ``silver_versions``/vacuum pinning become O(total
     versions ever committed).  History prunes are free bookkeeping and
     are NOT counted in the returned data-file total."""
-    manifest = _read_manifest(path)
-    if manifest is None:
+    store = _SilverStore.load(path)
+    if store is None:
         return 0
-
-    def _all_files(m: dict) -> set[str]:
-        files = set(m["files"]) | set(m.get(DELTAS, []))
-        for pspec in m.get("projections", {}).values():
-            files |= set(pspec.get("files", []))
-        return files
-
-    live = _all_files(manifest)
+    live = {f for _, f, _, _ in store.parts()}
     if retain_versions > 0:
         for v in silver_versions(path)[-retain_versions:]:
             try:
-                live |= _all_files(_read_manifest_version(path, v))
+                live |= {f for _, f, _, _ in _SilverStore.as_of(path, v).parts()}
             except ValueError:
                 continue  # already partially vacuumed — nothing left to pin
     cutoff = time.time() - grace_s
@@ -1196,14 +1231,12 @@ def vacuum_silver(
     # manifests only bloats the listing and the pinning walk.
     if retain_history >= 0:
         keep = max(retain_history, retain_versions)
-        cur_v = manifest.get("version")
-        hdir = os.path.join(path, HISTORY_DIR)
         versions = silver_versions(path)
         for v in versions[: max(0, len(versions) - keep)]:
-            if v == cur_v:
+            if v == store.version:
                 continue
             try:
-                os.unlink(os.path.join(hdir, f"_manifest.v{v}.json"))
+                os.unlink(_SilverStore._history_file(path, v))
             except FileNotFoundError:
                 pass
     return removed
@@ -1233,44 +1266,25 @@ def compact_silver(
     ``vacuum_grace_s`` expires (pass 0 to reclaim space immediately when no
     concurrent readers exist).
 
-    Single-writer contract, end to end: compaction publishes through the
-    same ``_publish_buckets`` guards as the streaming sink — the exclusive
-    epoch claim plus the CAS manifest commit — so compacting while a
-    publisher is live makes the LOSER raise ``ManifestCommitError`` with
-    the store untouched (fault-injection: tests/test_streaming.py
-    ``test_compact_silver_loses_race_to_stream_publish_loudly``).  Run it
-    while the stream is stopped; the guards exist to turn a violated
-    assumption into an error, not to enable concurrent writers.
+    Like every writer, it commits through the store's one commit path
+    (:class:`_SilverStore`), so compacting while a publisher is live
+    makes the loser raise ``ManifestCommitError`` with the store
+    untouched.  Run it while the stream is stopped.
 
     A pre-manifest flat store (plain ``part-*.parquet`` under ``path``) is
     migrated in place: its rows are read as the current state, published
     bucketed under the first manifest, and the superseded flat files
     removed — compaction doesn't require a streaming trigger to have
     migrated the store first."""
-    manifest = _fold_deltas(spark, path)
-    legacy_files: list[str] = []
-    if manifest is None:
-        if os.path.isdir(path):
-            legacy_files = [
-                f for f in os.listdir(path)
-                if f.endswith(".parquet") and os.path.isfile(os.path.join(path, f))
-            ]
-        if not legacy_files:
-            raise FileNotFoundError(f"no silver store at {path}")
-        manifest = {"version": 0, "n_buckets": DEFAULT_SILVER_BUCKETS, "files": []}
-        df = spark.read.parquet(*[os.path.join(path, f) for f in legacy_files])
-    else:
-        df = _read_live_files(spark, path, manifest)
+    store = _SilverStore.open(path, spark, fold_first=True, migrate=True)
+    df = store.read(spark)
     before = df.count()
     if drop_tombstones_below_version is not None:
         df = df.filter(
             ~(F.col("__deleted") & (F.col(version_col) < drop_tombstones_below_version))
         )
     n_after = df.count()
-    all_buckets = set(range(manifest["n_buckets"]))
-    _publish_buckets(df, path, keys, manifest, all_buckets)
-    for f in legacy_files:  # superseded by the manifest commit just made
-        os.remove(os.path.join(path, f))
+    store.publish(df, keys, store.all_buckets)
     vacuum_silver(path, grace_s=vacuum_grace_s)
     return before - n_after
 
@@ -1291,31 +1305,21 @@ def mutate_silver(
     reads/compaction/time travel all compose unchanged).
 
     O(touched buckets): only buckets containing matching rows are
-    republished; the rest keep their committed files.  The publish goes
-    through the same epoch-claim + CAS commit as every other writer, and
-    — with manifest history — the pre-mutation state stays reachable via
+    republished; the rest keep their committed files.  With manifest
+    history the pre-mutation state stays reachable via
     ``read_silver(as_of_version=…)``, which is exactly the audit story a
     destructive mutation needs.  Like every writer but the upsert
-    trigger, it first folds the store's deltas (:func:`_fold_deltas`, one
-    commit of its own).  Returns the number of rows mutated."""
+    trigger, it first folds the store's deltas (one commit of its own).
+    Returns the number of rows mutated."""
     if not delete and not set_exprs:
         raise ValueError("mutation needs set_exprs or delete=True")
-    manifest = _fold_deltas(spark, path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
-    df = _read_live_files(spark, path, manifest)
-    nb = manifest["n_buckets"]
+    store = _SilverStore.open(path, spark, fold_first=True)
+    df = store.read(spark)
     live_match = where & ~F.col(DELETED_FLAG)
-    touched = {
-        int(r[0])
-        for r in df.filter(live_match)
-        .select(_bucket_expr(keys, nb).alias("b"))
-        .distinct()
-        .collect()
-    }
+    touched = store.touched(df.filter(live_match), keys)
     if not touched:
         return 0
-    sub = df.filter(_bucket_expr(keys, nb).isin(sorted(touched)))
+    sub = store.in_buckets(df, keys, touched)
     n = sub.filter(live_match).count()
     mutated = sub
     if delete:
@@ -1327,7 +1331,7 @@ def mutate_silver(
             mutated = mutated.withColumn(
                 c, F.when(live_match, expr).otherwise(F.col(c))
             )
-    _publish_buckets(mutated, path, keys, manifest, touched)
+    store.publish(mutated, keys, touched)
     return n
 
 
@@ -1349,15 +1353,11 @@ def optimize_deduplicate(
 
     O(touched buckets): the duplicate scan is one window over live rows
     (shuffles on ``by_cols``), but only buckets CONTAINING losers are
-    republished through the usual epoch-claim + CAS commit.  Returns
-    the number of rows tombstoned."""
+    republished.  Returns the number of rows tombstoned."""
     from pyspark.sql import Window
 
-    manifest = _fold_deltas(spark, path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
-    df = _read_live_files(spark, path, manifest)
-    nb = manifest["n_buckets"]
+    store = _SilverStore.open(path, spark, fold_first=True)
+    df = store.read(spark)
     live = ~F.col(DELETED_FLAG)
     w = Window.partitionBy(*by_cols).orderBy(*[F.col(k).asc() for k in keys])
     losers = (
@@ -1366,15 +1366,10 @@ def optimize_deduplicate(
         .filter(F.col("__rn") > 1)
         .select(*keys)
     )
-    touched = {
-        int(r[0])
-        for r in losers.select(_bucket_expr(keys, nb).alias("b"))
-        .distinct()
-        .collect()
-    }
+    touched = store.touched(losers, keys)
     if not touched:
         return 0
-    sub = df.filter(_bucket_expr(keys, nb).isin(sorted(touched)))
+    sub = store.in_buckets(df, keys, touched)
     n = losers.count()
     marked = sub.join(
         losers.withColumn("__loser", F.lit(True)), keys, "left"
@@ -1383,19 +1378,19 @@ def optimize_deduplicate(
         F.when(F.col("__loser").isNotNull() & live, F.lit(True))
         .otherwise(F.col(DELETED_FLAG)),
     ).drop("__loser")
-    _publish_buckets(marked, path, keys, manifest, touched)
+    store.publish(marked, keys, touched)
     return n
 
 
-def _replay_guard(path: str, checkpoint: str, batch_id: int) -> dict | None:
+def _replay_guard(store: _SilverStore, checkpoint: str, batch_id: int) -> dict | None:
     """Shared replay guard for the NON-IDEMPOTENT sinks (summing /
     aggregating / collapsing — anything whose merge ADDS rather than
     displaces): the manifest records the last applied batch id per
     checkpoint (keyed by checkpoint-path hash so a fresh checkpoint over
     an existing store starts its own sequence).
 
-    Returns the updated ``applied`` map to commit with this batch, or
-    ``None`` if the batch is the legitimate crash-replay (batch_id ==
+    Returns the updated ``applied`` map of ``store`` to commit with this
+    batch, or ``None`` if the batch is the legitimate crash-replay (batch_id ==
     watermark: crash between manifest commit and checkpoint write) and
     must be SKIPPED.  Two loud-failure modes (advice r9):
 
@@ -1406,7 +1401,7 @@ def _replay_guard(path: str, checkpoint: str, batch_id: int) -> dict | None:
       double-apply for the evicted stream → raise with the remedy.
     """
     ckpt_key = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-    applied = (_read_manifest(path) or {}).get("applied", {})
+    path, applied = store.path, store.applied
     watermark = applied.get(ckpt_key, -1)
     if watermark >= batch_id:
         if batch_id < watermark:
@@ -1581,8 +1576,8 @@ def silver_summing_stream(
 
     Same touched-bucket versioned publish as ``silver_upsert_stream``:
     per trigger only buckets containing batch keys are read, merged (one
-    union + one keyed groupBy over those buckets), and re-published
-    behind the epoch claim + CAS manifest commit.  Read with
+    union + one keyed groupBy over those buckets), and re-published as
+    one manifest version.  Read with
     ``read_silver``.  TTL/mutations compose: tombstoned keys stay out of
     the running sums and stay hidden until (unless) the stream delivers
     NEW rows for the key — which restarts it from the new partial only,
@@ -1928,7 +1923,8 @@ def silver_summing_stream(
         # identical batch is a no-op), ADDITION is not idempotent — a
         # micro-batch replayed after a crash between the manifest commit
         # and the checkpoint write would double every sum it carries.
-        keep = _replay_guard(path, checkpoint, batch_id)
+        store = _SilverStore.load_or_new(path, n_buckets)
+        keep = _replay_guard(store, checkpoint, batch_id)
         if keep is None:
             return
 
@@ -1967,9 +1963,8 @@ def silver_summing_stream(
             return merged.unionByName(kept_tombs)
 
         _touched_bucket_merge(
-            batch, path, keys, n_buckets,
-            prepare=_batch_partial, merge_fn=merge_fn, legacy_mode="error",
-            manifest_extra={"applied": keep},
+            batch, store, keys, prepare=_batch_partial, merge_fn=merge_fn,
+            edits={"applied": keep},
         )
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
@@ -2019,7 +2014,7 @@ def silver_collapsing_stream(
     highest-version positive-net row per key.
 
     Merge is ADDITIVE (sign balances), not idempotent → same replay
-    guard + epoch-claim/CAS publish as ``silver_summing_stream``; TTL /
+    guard and touched-bucket publish as ``silver_summing_stream``; TTL /
     mutations compose through the same tombstone rules."""
     if version_col is None and seq_col is None:
         raise ValueError(
@@ -2103,7 +2098,8 @@ def silver_collapsing_stream(
         return merged
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        keep = _replay_guard(path, checkpoint, batch_id)
+        store = _SilverStore.load_or_new(path, n_buckets)
+        keep = _replay_guard(store, checkpoint, batch_id)
         if keep is None:
             return
 
@@ -2127,9 +2123,8 @@ def silver_collapsing_stream(
             return merged.unionByName(kept_tombs)
 
         _touched_bucket_merge(
-            batch, path, keys, n_buckets,
-            prepare=_batch_partial, merge_fn=merge_fn, legacy_mode="error",
-            manifest_extra={"applied": keep},
+            batch, store, keys, prepare=_batch_partial, merge_fn=merge_fn,
+            edits={"applied": keep},
         )
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
@@ -2229,40 +2224,23 @@ def add_projection(
     read path needs no coordination — it is a second file set under the
     same snapshot-isolated manifest.  Backfill here republishes every
     bucket once (O(store), like CH MATERIALIZE)."""
-    manifest = _fold_deltas(spark, path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
-    if name in manifest.get("projections", {}):
+    store = _SilverStore.open(path, spark, fold_first=True)
+    if name in store.projections:
         raise ValueError(f"projection {name!r} already exists at {path}")
-    df = _read_live_files(spark, path, manifest)
-    staged = {
-        **manifest,
-        "projections": {
-            **manifest.get("projections", {}),
-            name: {"keys": list(proj_keys), "files": []},
-        },
-    }
     # the backfill is a full republish (all buckets touched): the main
     # files are rewritten too — one wasted main write, in exchange for
-    # reusing the entire epoch-claim + CAS + crash-recovery machinery
-    # instead of a second bespoke commit path
-    _publish_buckets(df, path, keys, staged, set(range(manifest["n_buckets"])))
+    # the one commit path instead of a second bespoke one
+    store.publish(store.read(spark), keys, store.all_buckets,
+                  store.with_projection(name, proj_keys))
 
 
 def drop_projection(path: str, name: str) -> None:
     """D2-style idempotent drop: removes the projection from the manifest
-    (same version — metadata-only edit); its files become unreferenced
-    and the next vacuum reclaims them."""
-    manifest = _read_manifest(path)
-    if manifest is None or name not in manifest.get("projections", {}):
-        return
-    projections = dict(manifest["projections"])
-    projections.pop(name)
-    _write_manifest(
-        path,
-        {**manifest, "projections": projections},
-        expected_version=manifest["version"],
-    )
+    as a new, metadata-only version; its files become unreferenced and
+    the next vacuum reclaims them."""
+    store = _SilverStore.load(path)
+    if store is not None and name in store.projections:
+        store.edit(store.with_projection(name))
 
 
 def read_silver_projection(
@@ -2276,13 +2254,7 @@ def read_silver_projection(
     as ``read_silver``, different physical order.  Use for secondary-key
     point/range queries: the pushed filter prunes row groups via the
     sorted column's min/max stats."""
-    manifest = _read_manifest(path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
-    pspec = manifest.get("projections", {}).get(name)
-    if pspec is None:
-        raise ValueError(f"no projection {name!r} at {path}")
-    df = _read_files(spark, path, manifest, pspec["files"])
+    df = _SilverStore.open(path).read_projection(spark, name)
     if DELETED_FLAG in df.columns and not include_deleted:
         df = df.filter(~F.col(DELETED_FLAG)).drop(DELETED_FLAG)
     return df
@@ -2331,19 +2303,17 @@ def read_silver_auto(
     and the file set are the same snapshot.  Returns the filtered
     DataFrame; audit which layout was scanned via ``df.inputFiles()``
     (projection files live under ``__proj_<name>/``)."""
-    manifest = _read_manifest(path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
+    store = _SilverStore.open(path)
 
     def _visible(df: DataFrame) -> DataFrame:
         if DELETED_FLAG in df.columns and not include_deleted:
             df = df.filter(~F.col(DELETED_FLAG)).drop(DELETED_FLAG)
         return df
 
-    primary = _visible(_read_live_files(spark, path, manifest))
+    primary = _visible(store.read(spark))
     if where is None:
         return primary
-    projections = manifest.get("projections", {})
+    projections = store.projections
     refs = _predicate_references(primary, where) if projections else None
     if refs:
         def score(sort_keys: list[str]) -> int:
@@ -2354,15 +2324,13 @@ def read_silver_auto(
                 n += 1
             return n
 
-        best_name, best = None, score(manifest.get("sort_keys", []))
+        best_name, best = None, score(store.sort_keys)
         for pname, pspec in projections.items():
             s = score(pspec["keys"])
             if s > best:
                 best_name, best = pname, s
         if best_name is not None:
-            return _visible(
-                _read_files(spark, path, manifest, projections[best_name]["files"])
-            ).filter(where)
+            return _visible(store.read_projection(spark, best_name)).filter(where)
     return primary.filter(where)
 
 
@@ -2418,8 +2386,8 @@ def diff_silver(
 def rebucket_silver(spark: SparkSession, path: str, keys: list[str],
                     new_n_buckets: int) -> int:
     """r9 — change a silver store's bucket width as ONE committed
-    version: read every live file, republish the full state at
-    ``new_n_buckets``, commit via the usual epoch claim + CAS.  The
+    version: read every live file and republish the full state at
+    ``new_n_buckets``.  The
     resize every long-lived store eventually needs — a width sized for
     the first TB is wrong at 100 TB (too few buckets ⇒ huge per-bucket
     rewrites per trigger; too many ⇒ small-file pressure).  Tombstones
@@ -2430,18 +2398,11 @@ def rebucket_silver(spark: SparkSession, path: str, keys: list[str],
     ``n_buckets``, so time travel composes.  Run like compaction: only
     while the owning stream is stopped (single-writer store).  Returns
     the new version number."""
-    manifest = _fold_deltas(spark, path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
-    if new_n_buckets == manifest["n_buckets"]:
-        return manifest["version"]
-    df = _read_live_files(spark, path, manifest)
-    new_manifest = {**manifest, "n_buckets": new_n_buckets}
-    _publish_buckets(
-        df, path, keys, new_manifest,
-        replaced_buckets=set(range(manifest["n_buckets"])),
-    )
-    return _read_manifest(path)["version"]
+    store = _SilverStore.open(path, spark, fold_first=True)
+    if new_n_buckets == store.n_buckets:
+        return store.version
+    return store.publish(store.read(spark), keys, store.all_buckets,
+                         {"n_buckets": new_n_buckets})
 
 
 def set_bloom_filters(path: str, cols: dict[str, int]) -> None:
@@ -2449,21 +2410,15 @@ def set_bloom_filters(path: str, cols: dict[str, int]) -> None:
     store: the ClickHouse ``INDEX … TYPE bloom_filter`` skip-index
     analogue for columns the primary sort order cannot serve.
     ``cols`` maps column → expected distinct count (sizes the filter).
-    Metadata-only (same-version manifest edit, like drop_projection):
-    every LATER publish — upsert trigger, mutation, TTL, compaction,
+    Metadata-only (a new version that writes no data file, like
+    drop_projection): every LATER publish — upsert trigger, mutation, TTL, compaction,
     and each projection copy — writes split-block blooms for these
     columns, and Spark's parquet reader prunes row groups on equality
     predicates against them.  Existing files gain blooms as publishes
     naturally rewrite their buckets (run ``compact_silver`` to backfill
     at once).  Pass ``{}`` to stop writing blooms."""
-    manifest = _read_manifest(path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
-    _write_manifest(
-        path,
-        {**manifest, "bloom_cols": {c: int(n) for c, n in cols.items()}},
-        expected_version=manifest["version"],
-    )
+    store = _SilverStore.open(path)
+    store.edit({"bloom_cols": {c: int(n) for c, n in cols.items()}})
 
 
 def describe_silver(spark: SparkSession, path: str) -> DataFrame:
@@ -2476,27 +2431,16 @@ def describe_silver(spark: SparkSession, path: str) -> DataFrame:
     live file count (same O(files) class as vacuum — an observability
     call, not a data path); missing files report bytes = -1 rather than raising, so the
     monitor that calls this can be the thing that DETECTS corruption."""
-    manifest = _read_manifest(path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
+    store = _SilverStore.open(path)
 
-    def rows_for(layout: str, files: list[str]):
-        for f in files:
-            try:
-                size = os.path.getsize(os.path.join(path, f))
-            except OSError:
-                size = -1
-            bucket = int(f.split("__bucket=")[1].split("/")[0]) if "__bucket=" in f else None
-            epoch = int(f.split("__epoch=")[1].split("/")[0])
-            yield (
-                manifest["version"], manifest["n_buckets"], layout,
-                bucket, epoch, f, size,
-            )
+    def size(f: str) -> int:
+        try:
+            return os.path.getsize(os.path.join(path, f))
+        except OSError:
+            return -1
 
-    data = list(rows_for("primary", manifest["files"]))
-    data.extend(rows_for("delta", manifest.get(DELTAS, [])))
-    for pname, pspec in manifest.get("projections", {}).items():
-        data.extend(rows_for(f"proj:{pname}", pspec.get("files", [])))
+    data = [(store.version, store.n_buckets, layout, bucket, epoch, f, size(f))
+            for layout, f, bucket, epoch in store.parts()]
     return spark.createDataFrame(
         data,
         "version long, n_buckets int, layout string, bucket int, "
@@ -2516,16 +2460,11 @@ def freeze_silver(path: str, snapshot_dir: str) -> int:
     unlinks only the live store's names — the snapshot's links keep the
     inodes alive, which is the whole point of freezing before a risky
     mutation.  Returns the number of files snapshotted."""
-    manifest = _read_manifest(path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
+    store = _SilverStore.open(path)
     if os.path.exists(snapshot_dir):
         raise FileExistsError(f"snapshot target {snapshot_dir} already exists")
-    all_files = manifest["files"] + manifest.get(DELTAS, [])
-    for pspec in manifest.get("projections", {}).values():
-        all_files.extend(pspec.get("files", []))
     n = 0
-    for rel in all_files:
+    for _, rel, _, _ in store.parts():
         src = os.path.join(path, rel)
         dst = os.path.join(snapshot_dir, rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
@@ -2535,7 +2474,7 @@ def freeze_silver(path: str, snapshot_dir: str) -> int:
             shutil.copy2(src, dst)
         n += 1
     with open(os.path.join(snapshot_dir, "_manifest.json.tmp"), "w") as fh:
-        json.dump(manifest, fh)
+        json.dump(store.manifest, fh)
     os.replace(
         os.path.join(snapshot_dir, "_manifest.json.tmp"),
         os.path.join(snapshot_dir, "_manifest.json"),
@@ -2549,20 +2488,13 @@ def restore_silver(spark: SparkSession, path: str, keys: list[str],
     version (the time-travel write path; CH's closest analogues are
     UNDROP/ATTACH-from-backup).  The as-of state — including its
     tombstones, so deletes stay deleted — is republished over every
-    bucket through the normal epoch-claim + CAS commit: history is
-    append-only (the bad versions stay reachable for audit), readers
-    never see a half-restored store, and a concurrent publisher loses
-    the CAS loudly.  Run like compaction: owning stream stopped.
-    Returns the new version number."""
-    manifest = _fold_deltas(spark, path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
-    state = read_silver(spark, path, include_deleted=True, as_of_version=version)
-    _publish_buckets(
-        state, path, keys, manifest,
-        replaced_buckets=set(range(manifest["n_buckets"])),
-    )
-    return _read_manifest(path)["version"]
+    bucket as one new version: history is append-only (the bad versions
+    stay reachable for audit) and readers never see a half-restored
+    store.  Run like compaction: owning stream stopped.  Returns the new
+    version number."""
+    store = _SilverStore.open(path, spark, fold_first=True)
+    state = _SilverStore.as_of(path, version).read(spark)
+    return store.publish(state, keys, store.all_buckets)
 
 
 def ttl_rollup_silver(
@@ -2591,14 +2523,10 @@ def ttl_rollup_silver(
     automatically when present.  Tombstones pass through untouched;
     aggregated dtypes are cast back to the store's, so the schema is
     stable across any number of rollups.  Touched buckets = the expired
-    rows' buckets ∪ the coarsened keys' target buckets; everything
-    publishes through the usual epoch claim + CAS commit.  Returns the
-    number of rows rolled up."""
-    manifest = _fold_deltas(spark, path)
-    if manifest is None:
-        raise FileNotFoundError(f"no silver store at {path}")
-    df = _read_live_files(spark, path, manifest)
-    nb = manifest["n_buckets"]
+    rows' buckets ∪ the coarsened keys' target buckets, published as
+    one version.  Returns the number of rows rolled up."""
+    store = _SilverStore.open(path, spark, fold_first=True)
+    df = store.read(spark)
     spec = dict(agg_spec)
     if "__n_rows" in df.columns and "__n_rows" not in spec:
         spec["__n_rows"] = "sum"
@@ -2619,11 +2547,7 @@ def ttl_rollup_silver(
     # ~(ttl < cutoff) is NULL for NULL ttl and would filter the row out)
     expired = F.coalesce(F.col(ttl_col) < older_than, F.lit(False))
     expired_pred = expired & ~F.col(DELETED_FLAG)
-    src_buckets = {
-        int(r[0])
-        for r in df.filter(expired_pred)
-        .select(_bucket_expr(keys, nb).alias("b")).distinct().collect()
-    }
+    src_buckets = store.touched(df.filter(expired_pred), keys)
     if not src_buckets:
         return 0
     coarse_cols = [
@@ -2632,13 +2556,8 @@ def ttl_rollup_silver(
         for k in keys
     ]
     rolled_keys = df.filter(expired_pred).select(*coarse_cols)
-    tgt_buckets = {
-        int(r[0])
-        for r in rolled_keys.select(_bucket_expr(keys, nb).alias("b"))
-        .distinct().collect()
-    }
-    touched = src_buckets | tgt_buckets
-    sub = df.filter(_bucket_expr(keys, nb).isin(sorted(touched)))
+    touched = src_buckets | store.touched(rolled_keys, keys)
+    sub = store.in_buckets(df, keys, touched)
     n = sub.filter(expired_pred).count()
     dtypes = {f.name: f.dataType for f in sub.schema.fields}
     aggs = [getattr(F, op)(F.col(c)).cast(dtypes[c]).alias(c) for c, op in spec.items()]
@@ -2661,10 +2580,7 @@ def ttl_rollup_silver(
         .agg(*aggs)
         .withColumn(DELETED_FLAG, F.lit(False))
     )
-    _publish_buckets(
-        merged.unionByName(tombs.select(*merged.columns)),
-        path, keys, manifest, touched,
-    )
+    store.publish(merged.unionByName(tombs.select(*merged.columns)), keys, touched)
     return n
 
 
@@ -2695,13 +2611,10 @@ def read_silver(
     store (see silver_upsert_stream) — this is where the two reference
     delete modes diverge."""
     if as_of_version is not None:
-        df = _read_live_files(spark, path, _read_manifest_version(path, as_of_version))
+        store = _SilverStore.as_of(path, as_of_version)
     else:
-        manifest = _read_manifest(path)
-        if manifest is not None:
-            df = _read_live_files(spark, path, manifest)
-        else:
-            df = spark.read.parquet(path)
+        store = _SilverStore.load(path)
+    df = spark.read.parquet(path) if store is None else store.read(spark)
     if include_deleted:
         return df
     return df.filter(~F.col("__deleted")).drop("__deleted")

@@ -1044,9 +1044,9 @@ def run_incremental_snapshot_multi(
 
 
 def _manifest_version(path: str) -> int:
-    from .pipeline import _read_manifest
+    from .pipeline import _SilverStore
 
-    m = _read_manifest(path)
-    if m is None or "version" not in m:
+    store = _SilverStore.load(path)
+    if store is None:
         raise ValueError(f"no committed manifest at {path!r}")
-    return m["version"]
+    return store.version

@@ -25,8 +25,8 @@ def test_describe_and_versions(spark, tmp_path, capsys):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").withColumn(
         "__deleted", F.lit(False)
     )
-    pl._publish_buckets(df, path, ["k"], {"version": 0, "n_buckets": 2, "files": []},
-                        {0, 1})
+    pl._SilverStore(path, {"version": 0, "n_buckets": 2, "files": []}).publish(
+        df, ["k"], {0, 1})
     assert main(["versions", path]) == 0
     assert capsys.readouterr().out.strip() == "1"
     assert main(["describe-store", path]) == 0

@@ -66,17 +66,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
     "streaming/pipeline.py": [
         (").distinct().collect()",
          "touched silver bucket ids: ≤ n_buckets values"),
-        (").distinct().collect()",
-         "txn sinks (single- and multi-store share _txn_trigger): touched "
-         "PENDING bucket ids, ≤ n_buckets values"),
-        (".collect()",
-         "OPTIMIZE stats: 1 row per touched bucket"),
-        (".collect()",
-         "OPTIMIZE stats: 1 row per touched bucket"),
-        ("_bucket_expr(keys, nb).alias(\"b\")).distinct().collect()",
-         "touched bucket ids: ≤ n_buckets values"),
-        (".distinct().collect()",
-         "touched bucket ids: ≤ n_buckets values"),
     ],
     "sources/avro.py": [
         ('files_df.select("path", "content").limit(1).collect()',

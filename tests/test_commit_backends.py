@@ -131,9 +131,9 @@ def test_racing_publishers_one_fails_loudly(spark, dirs, commit_backend):
     _seed_store(spark, dirs)
     stale = pl._read_manifest(dirs["silver"])
     all_buckets = set(range(stale["n_buckets"]))
-    pl._publish_buckets(_row(spark, 50, "winner"), dirs["silver"], ["id"], stale, all_buckets)
+    pl._SilverStore(dirs["silver"], stale).publish(_row(spark, 50, "winner"), ["id"], all_buckets)
     with pytest.raises(ManifestCommitError, match="version"):
-        pl._publish_buckets(_row(spark, 60, "loser"), dirs["silver"], ["id"], stale, all_buckets)
+        pl._SilverStore(dirs["silver"], stale).publish(_row(spark, 60, "loser"), ["id"], all_buckets)
     state = {r.id: r.val for r in pl.read_silver(spark, dirs["silver"]).collect()}
     assert state == {50: "winner"}
 
@@ -141,10 +141,10 @@ def test_racing_publishers_one_fails_loudly(spark, dirs, commit_backend):
     cur = pl._read_manifest(dirs["silver"])
     commit_backend.hold_claim(dirs["silver"], cur["version"] + 1)
     with pytest.raises(ManifestCommitError, match="claimed"):
-        pl._publish_buckets(_row(spark, 60, "loser"), dirs["silver"], ["id"], cur, all_buckets)
+        pl._SilverStore(dirs["silver"], cur).publish(_row(spark, 60, "loser"), ["id"], all_buckets)
     # ...but a stale claim (crashed publisher) is stolen and publish proceeds
     commit_backend.hold_claim(dirs["silver"], cur["version"] + 1, age_s=7200)
-    pl._publish_buckets(_row(spark, 60, "loser"), dirs["silver"], ["id"], cur, all_buckets)
+    pl._SilverStore(dirs["silver"], cur).publish(_row(spark, 60, "loser"), ["id"], all_buckets)
     assert not commit_backend.claim_held(dirs["silver"], cur["version"] + 1)
     assert {r.id: r.val for r in pl.read_silver(spark, dirs["silver"]).collect()} == {60: "loser"}
 
@@ -160,8 +160,8 @@ def test_compact_silver_loses_race_to_stream_publish_loudly(
         m = real_read(path)
         if not fired["done"]:
             fired["done"] = True
-            pl._publish_buckets(
-                _row(spark, 50, "winner"), path, ["id"], m, set(range(m["n_buckets"]))
+            pl._SilverStore(path, m).publish(
+                _row(spark, 50, "winner"), ["id"], set(range(m["n_buckets"]))
             )
         return m
 
@@ -360,3 +360,33 @@ def test_steal_mutex_release_is_read_first(tmp_path):
     # absent (successor released first): no-op, nothing resurrected
     _release_steal_mutex(mutex, "displaced-nonce")
     assert list(tmp_path.iterdir()) == []
+
+
+@pytest.mark.parametrize("edit", ["set_bloom_filters", "drop_projection"])
+def test_metadata_edit_fails_a_stale_publish_loudly(spark, dirs, commit_backend, edit):
+    """A metadata edit commits a new version, so a writer still holding
+    the pre-edit snapshot — a bucket publish or a delta — fails its
+    commit loudly instead of silently overwriting the edit (a lost bloom
+    declaration; a dropped projection resurrected over files the next
+    vacuum may delete)."""
+    _seed_store(spark, dirs)
+    path = dirs["silver"]
+    pl.add_projection(spark, path, ["id"], "p", ["val"])
+    stale = pl._SilverStore.load(path)
+    if edit == "set_bloom_filters":
+        pl.set_bloom_filters(path, {"val": 100})
+    else:
+        pl.drop_projection(path, "p")
+    edited = pl._read_manifest(path)
+    assert edited["version"] == stale.version + 1
+    spec = {"keys": ["id"], "version_col": "ts_ms", "tiebreak_col": "offset", "op_col": "op"}
+    with pytest.raises(ManifestCommitError, match="version"):
+        stale.publish(_row(spark, 50, "late"), ["id"], stale.all_buckets)
+    with pytest.raises(ManifestCommitError, match="version"):
+        stale.publish_delta(_row(spark, 60, "late"), spec)
+    assert pl._read_manifest(path) == edited
+    if edit == "set_bloom_filters":
+        assert edited["bloom_cols"] == {"val": 100}
+    else:
+        assert "p" not in edited["projections"]
+    assert {r.id for r in pl.read_silver(spark, path).collect()} == {1, 2, 3}

@@ -16,9 +16,8 @@ def _seed_store(spark, path, n=400, n_buckets=4):
         [(i, (i * 7919) % 1000, f"v{i}") for i in range(n)],
         "k long, sec long, val string",
     ).withColumn("__deleted", F.lit(False))
-    pl._publish_buckets(
-        df, path, ["k"], {"version": 0, "n_buckets": n_buckets, "files": []},
-        set(range(n_buckets)),
+    pl._SilverStore(path, {"version": 0, "n_buckets": n_buckets, "files": []}).publish(
+        df, ["k"], set(range(n_buckets)),
     )
     return df
 
@@ -148,8 +147,8 @@ def test_primary_bucket_files_key_sorted_by_contract(spark, tmp_path):
         .orderBy(F.rand(7))  # adversarial upstream order
         .withColumn("__deleted", F.lit(False))
     )
-    pl._publish_buckets(
-        df, path, ["k"], {"version": 0, "n_buckets": 4, "files": []}, set(range(4))
+    pl._SilverStore(path, {"version": 0, "n_buckets": 4, "files": []}).publish(
+        df, ["k"], set(range(4))
     )
     m = pl._read_manifest(path)
     for rel in m["files"]:

@@ -1,10 +1,11 @@
 """Stateful model test of the keyed silver store: upsert triggers (with
 out-of-order versions, duplicate deliveries, deletes and a batch that
-adds a column), mutations, compaction, vacuum, time travel and version
-diffs, interleaved by hypothesis and checked against a Python dict after
-every step.  Run at both ends of the merge-on-read fold cadence: a fold
-on every trigger (the eager store) and never a fold (every trigger a
-delta, folded only by the other writers)."""
+adds a column), mutations, compaction, rebucketing, restores, vacuum,
+time travel and version diffs, interleaved by hypothesis and checked
+against a Python dict after every step.  Run at both ends of the
+merge-on-read fold cadence: a fold on every trigger (the eager store)
+and never a fold (every trigger a delta, folded only by the other
+writers)."""
 
 from __future__ import annotations
 
@@ -137,6 +138,24 @@ class SilverModel(RuleBasedStateMachine):
                          if not (r["deleted"] and r["ts"] < horizon)}
         self._commit(before, pre, self.wide)
 
+    @rule(n_buckets=st.integers(2, 8))
+    def rebucket(self, n_buckets):
+        before, pre = self._version(), copy.deepcopy(self.rows)
+        pl.rebucket_silver(self.spark, self.path, ["id"], n_buckets)
+        self._commit(before, pre, self.wide)
+
+    @precondition(lambda self: self.readable)
+    @rule(data=st.data())
+    def restore(self, data):
+        """Roll back to a retained version: its rows, tombstones and
+        schema become the store's next version."""
+        v = data.draw(st.sampled_from(sorted(self.readable)))
+        before, pre, pre_wide = self._version(), copy.deepcopy(self.rows), self.wide
+        pl.restore_silver(self.spark, self.path, ["id"], v)
+        rows, self.wide = self.versions[v]
+        self.rows = copy.deepcopy(rows)
+        self._commit(before, pre, pre_wide)
+
     @rule(retain=st.integers(0, 3))
     def vacuum(self, retain):
         kept = set(pl.silver_versions(self.path)[-retain:]) if retain else set()
@@ -185,20 +204,34 @@ class SilverModel(RuleBasedStateMachine):
     @invariant()
     def read_matches_model(self):
         assert self._read(pl.read_silver(self.spark, self.path)) == self._live(self.rows)
-        full = pl.read_silver(self.spark, self.path, include_deleted=True)
-        assert {r.id: r["__deleted"] for r in full.collect()} == {
+        full = pl.read_silver(self.spark, self.path, include_deleted=True).collect()
+        assert {r.id: r["__deleted"] for r in full} == {
             k: r["deleted"] for k, r in self.rows.items()}
+        assert len(full) == len(self.rows)  # one stored row per key
 
 
-@pytest.mark.parametrize("fold", ["every_trigger", "never"])
-def test_silver_store_matches_dict_model(spark, tmp_path, monkeypatch, fold):
+def _run_model(spark, root, monkeypatch, fold, examples, steps):
     if fold == "every_trigger":
         monkeypatch.setattr(pl, "FOLD_DELTAS", 0)
     else:
         monkeypatch.setattr(pl, "FOLD_DELTAS", float("inf"))
         monkeypatch.setattr(pl, "FOLD_BYTES_FRACTION", float("inf"))
-    SilverModel.spark, SilverModel.root = spark, str(tmp_path)
+    SilverModel.spark, SilverModel.root = spark, root
     run_state_machine_as_test(SilverModel, settings=settings(
-        max_examples=3, stateful_step_count=8, deadline=None, derandomize=True,
+        max_examples=examples, stateful_step_count=steps, deadline=None, derandomize=True,
         suppress_health_check=list(HealthCheck),
     ))
+
+
+@pytest.mark.parametrize("fold", ["every_trigger", "never"])
+def test_silver_store_matches_dict_model(spark, tmp_path, monkeypatch, fold):
+    _run_model(spark, str(tmp_path), monkeypatch, fold, 3, 8)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("fold", ["every_trigger", "never"])
+def test_silver_store_matches_dict_model_wide(spark, tmp_path, monkeypatch, fold):
+    """Fifteen examples instead of three: the default-tier run's
+    derandomized examples reach only some of the rules, these reach every
+    rule at both fold extremes (~2-3 min each)."""
+    _run_model(spark, str(tmp_path), monkeypatch, fold, 15, 10)

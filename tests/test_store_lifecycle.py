@@ -17,9 +17,8 @@ def _seed(spark, path, n=300, n_buckets=4):
         [(i, (i * 7919) % 1000, f"v{i}") for i in range(n)],
         "k long, sec long, val string",
     ).withColumn("__deleted", F.lit(False))
-    pl._publish_buckets(
-        df, path, ["k"], {"version": 0, "n_buckets": n_buckets, "files": []},
-        set(range(n_buckets)),
+    pl._SilverStore(path, {"version": 0, "n_buckets": n_buckets, "files": []}).publish(
+        df, ["k"], set(range(n_buckets)),
     )
 
 

@@ -332,7 +332,7 @@ def test_silver_snapshot_reads_survive_publish_and_vacuum(spark, dirs):
     import os as _os
 
     from postgres_debezium_clickhouse_spark.streaming.pipeline import (
-        _read_live_files,
+        _SilverStore,
         read_silver,
         silver_upsert_stream,
         vacuum_silver,
@@ -351,7 +351,7 @@ def test_silver_snapshot_reads_survive_publish_and_vacuum(spark, dirs):
     q2.awaitTermination(120)
 
     # old-manifest reader: exact pre-publish snapshot, no partial state
-    old_snap = _read_live_files(spark, dirs["silver"], old_manifest)
+    old_snap = _SilverStore(dirs["silver"], old_manifest).read(spark)
     assert {r.id: r.val for r in old_snap.collect()} == {1: "a1", 2: "b1", 3: "c1"}
     # new reader: post-publish state
     assert {r.id: r.val for r in read_silver(spark, dirs["silver"]).collect()} == {
@@ -556,8 +556,8 @@ def test_racing_publishers_one_fails_loudly(spark, dirs):
 
     from postgres_debezium_clickhouse_spark.streaming.pipeline import (
         ManifestCommitError,
-        _publish_buckets,
         _read_manifest,
+        _SilverStore,
         read_silver,
         silver_upsert_stream,
     )
@@ -572,13 +572,13 @@ def test_racing_publishers_one_fails_loudly(spark, dirs):
         [(50, "winner", "c", 500, 1, False)],
         ["id", "val", "op", "ts_ms", "offset", "__deleted"],
     )
-    _publish_buckets(extra, dirs["silver"], ["id"], stale, set(range(stale["n_buckets"])))
+    _SilverStore(dirs["silver"], stale).publish(extra, ["id"], set(range(stale["n_buckets"])))
     loser = spark.createDataFrame(
         [(60, "loser", "c", 600, 1, False)],
         ["id", "val", "op", "ts_ms", "offset", "__deleted"],
     )
     with pytest.raises(ManifestCommitError, match="version"):
-        _publish_buckets(loser, dirs["silver"], ["id"], stale, set(range(stale["n_buckets"])))
+        _SilverStore(dirs["silver"], stale).publish(loser, ["id"], set(range(stale["n_buckets"])))
     # winner's commit intact, loser's rows absent
     state = {r.id: r.val for r in read_silver(spark, dirs["silver"]).collect()}
     assert state == {50: "winner"}
@@ -589,10 +589,10 @@ def test_racing_publishers_one_fails_loudly(spark, dirs):
     with open(claim, "w") as fh:
         fh.write("other")
     with pytest.raises(ManifestCommitError, match="claimed"):
-        _publish_buckets(loser, dirs["silver"], ["id"], cur, set(range(cur["n_buckets"])))
+        _SilverStore(dirs["silver"], cur).publish(loser, ["id"], set(range(cur["n_buckets"])))
     # ...but a stale claim (crashed publisher) is stolen and publish proceeds
     _os.utime(claim, (_time.time() - 7200, _time.time() - 7200))
-    _publish_buckets(loser, dirs["silver"], ["id"], cur, set(range(cur["n_buckets"])))
+    _SilverStore(dirs["silver"], cur).publish(loser, ["id"], set(range(cur["n_buckets"])))
     assert not _os.path.exists(claim)
     assert {r.id: r.val for r in read_silver(spark, dirs["silver"]).collect()} == {60: "loser"}
 
@@ -725,7 +725,7 @@ def test_compact_silver_loses_race_to_stream_publish_loudly(spark, dirs, monkeyp
                 [(50, "winner", "c", 500, 1, False)],
                 ["id", "val", "op", "ts_ms", "offset", "__deleted"],
             )
-            pl._publish_buckets(winner, path, ["id"], m, set(range(m["n_buckets"])))
+            pl._SilverStore(path, m).publish(winner, ["id"], set(range(m["n_buckets"])))
         return m
 
     monkeypatch.setattr(pl, "_read_manifest", read_then_lose_the_race)

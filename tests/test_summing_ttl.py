@@ -69,7 +69,7 @@ def test_ttl_expires_rows_and_keeps_history(spark, dirs):
         [(i, f"u{i}", 1000 + i) for i in range(20)], "k long, val string, ts long"
     ).withColumn("__deleted", F.lit(False))
     manifest = {"version": 0, "n_buckets": 4, "files": []}
-    pl._publish_buckets(base, dirs["silver"], ["k"], manifest, set(range(4)))
+    pl._SilverStore(dirs["silver"], manifest).publish(base, ["k"], set(range(4)))
     n = pl.ttl_silver(spark, dirs["silver"], ["k"], "ts", F.lit(1010))
     assert n == 10                       # ts 1000..1009 expired
     live = {r.k for r in pl.read_silver(spark, dirs["silver"]).collect()}
@@ -372,7 +372,7 @@ def test_ttl_rollup_downsamples_and_composes(spark, tmp_path):
         rows, ["ts", "event_type", "v", "__n_rows"]
     ).withColumn("__deleted", F.lit(False))
     manifest = {"version": 0, "n_buckets": 4, "files": []}
-    pl._publish_buckets(df, path, ["ts", "event_type"], manifest, set(range(4)))
+    pl._SilverStore(path, manifest).publish(df, ["ts", "event_type"], set(range(4)))
 
     day = lambda c: F.date_trunc("day", c)  # noqa: E731
     # rollup 1: everything before day 2 → day granularity
@@ -417,7 +417,7 @@ def test_ttl_rollup_rejects_uncovered_columns(spark, tmp_path):
         [(dt.datetime(2024, 1, 1), "a", 1.0, "extra")],
         ["ts", "k", "v", "other"],
     ).withColumn("__deleted", F.lit(False))
-    pl._publish_buckets(df, path, ["ts", "k"], {"version": 0, "n_buckets": 2, "files": []}, {0, 1})
+    pl._SilverStore(path, {"version": 0, "n_buckets": 2, "files": []}).publish(df, ["ts", "k"], {0, 1})
     with pytest.raises(ValueError, match="missing: \\['other'\\]"):
         pl.ttl_rollup_silver(
             spark, path, ["ts", "k"], "ts", dt.datetime(2025, 1, 1),
@@ -444,7 +444,7 @@ def test_ttl_rollup_keeps_null_ttl_rows(spark, tmp_path):
         "__deleted", F.lit(False)
     )
     manifest = {"version": 0, "n_buckets": 1, "files": []}
-    pl._publish_buckets(df, path, ["ts", "event_type"], manifest, {0})
+    pl._SilverStore(path, manifest).publish(df, ["ts", "event_type"], {0})
     n = pl.ttl_rollup_silver(
         spark, path, ["ts", "event_type"], "ts", dt.datetime(2024, 1, 2),
         coarsen={"ts": lambda c: F.date_trunc("day", c)},
