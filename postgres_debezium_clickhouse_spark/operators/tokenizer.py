@@ -8,17 +8,27 @@ ClickHouse string functions); this extends the corpus-statistics family
 (``vocab_topk``, ``vocab_coverage``) with the op that actually CONSUMES
 those statistics: learning the first K merge rules from the corpus.
 
+The same module holds the other two mainstream subword tokenizers:
+WordPiece (same merge learner, likelihood score, greedy longest-match
+encode) and the Unigram-LM trainer, pruner and Viterbi encoder.
+
 Scale design (100 TB): everything iterates over the WORD-FREQUENCY table,
 which is vocabulary-sized — the corpus is scanned exactly once to build
-it (one map-side-combinable aggregate), then all K merge rounds run in ONE
-single-task Arrow kernel over that table (``_learn_merges``, shared by BPE,
-byte-level BPE and WordPiece), whose state is independent of corpus
-bytes.  A Spark job per round would cost more than the round itself at
-every K, so the learner is a lazy plan: building it runs no job and pins
-no storage, and nothing reaches the driver.
+it (one map-side-combinable aggregate), then all rounds run in ONE
+single-task Arrow kernel over that table, whose state is independent of
+corpus bytes: all K merge rounds in ``_learn_merges`` (shared by BPE,
+byte-level BPE and WordPiece), every unigram EM and prune round in
+``_unigram_kernel``.  A Spark job per round would cost more than the
+round itself, so every trainer is a lazy plan, and every encoder takes
+its learned table as a lazy frame broadcast beside the rows: building
+any of them runs no job and pins no storage, and nothing reaches the
+driver.
 """
 
 from __future__ import annotations
+
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -263,7 +273,7 @@ def bytebpe_encode(
 def _merge_pairs(merges) -> list:
     """Normalize a merge table to rank-ordered ``(left, right)`` string
     pairs.  Accepts bare 2-tuples/lists of symbols, full MERGES_SCHEMA
-    rows (pyspark ``Row`` / 5-tuples from ``bpe_top_merges(...).collect()``
+    rows (pyspark ``Row`` / 5-tuples collected from ``bpe_top_merges``
     — rank-sorted so collect order cannot matter), and raises on anything
     else.  ADVICE r7: the old positional ``(m[0], m[1])`` on a 5-tuple
     silently used the int rank as the left symbol and applied NO merges;
@@ -447,49 +457,26 @@ def bpe_encode_arrow(
 # SentencePiece unigram model; r11).  The OTHER mainstream subword
 # trainer next to BPE: a piece vocabulary with probabilities, trained by
 # EM, segmenting by maximum-likelihood (Viterbi).  This implementation is
-# the deterministic hard-EM (Viterbi-EM) variant, with the Viterbi DP
-# itself expressed as Spark HIGHER-ORDER FUNCTIONS over each word — an
-# aggregate() fold building the dp array, then a second fold walking the
-# backpointers — so training never leaves the JVM (contrast bpe_encode's
-# documented Arrow boundary).  Determinism contract (same as the IVF/PQ
-# family): seed vocab = top-N substrings by (freq desc, piece asc);
-# log-probs rounded to 6 places before the DP so cross-engine libm
-# last-ulp noise cannot flip comparisons; DP ties break toward the
-# smallest backpointer (longest final piece).
+# the deterministic hard-EM (Viterbi-EM) variant.  One plain-Python core —
+# seed vocab, round-6 logp, one Viterbi DP, one hard-EM step — serves
+# training and pruning (inside one single-task kernel over the word
+# table, like ``_learn_merges``) and encoding (an Arrow map over the
+# distinct words against the broadcast vocab).  Determinism contract
+# (mirrored by the DuckDB oracles): seed vocab = top-N substrings by
+# (freq desc, piece asc); log-probs rounded HALF_UP to 6 places exactly
+# like Spark's ``round`` so cross-engine libm last-ulp noise cannot flip
+# comparisons; DP ties break toward the smallest backpointer (longest
+# final piece); unknown pieces cost -1e9 logp.
 # ---------------------------------------------------------------------------
 
-#: forward DP over positions 1..len(w): dp[i] = min over j∈[i-K, i) of
-#: dp[j] − logp(w[j+1..i]) (negated log-likelihood; unknown pieces cost
-#: +1e9, but single chars are always in the vocab so a path exists).
-#: Entry = struct(negs, bp); array_min picks (min cost, then min bp).
-_UNIGRAM_DP = """
-aggregate(
-  sequence(1, length(w)),
-  array(struct(cast(0.0 as double) as negs, -1 as bp)),
-  (acc, i) -> concat(acc, array(
-    array_min(
-      transform(sequence(greatest(i - {K}, 0), i - 1), j ->
-        struct(
-          element_at(acc, j + 1).negs
-            - coalesce(element_at(__vm, substring(w, j + 1, i - j)),
-                       cast(-1000000000.0 as double)) as negs,
-          j as bp))))))
-"""
-
-#: backtrace: walk bp from len(w) to 0, prepending each piece — at most
-#: len(w) steps, so folding over sequence(1, len(w)) with a no-op guard
-#: terminates exactly.
-_UNIGRAM_BT = """
-aggregate(
-  sequence(1, length(w)),
-  struct(length(w) as pos, cast(array() as array<string>) as ts),
-  (acc, x) -> if(acc.pos <= 0, acc,
-    struct(
-      element_at(dp, acc.pos + 1).bp as pos,
-      concat(array(substring(w, element_at(dp, acc.pos + 1).bp + 1,
-                             acc.pos - element_at(dp, acc.pos + 1).bp)),
-             acc.ts) as ts))).ts
-"""
+#: the trained vocabulary: piece, final Viterbi mass, rounded log-prob.
+UNIGRAM_SCHEMA = T.StructType(
+    [
+        T.StructField("piece", T.StringType()),
+        T.StructField("cnt", T.LongType()),
+        T.StructField("logp", T.DoubleType()),
+    ]
+)
 
 
 def unigram_words(
@@ -502,110 +489,108 @@ def unigram_words(
     return _word_counts(documents, text_col).filter(F.length("w") <= max_word_len)
 
 
-def unigram_seed_vocab(
-    words: DataFrame, max_piece_len: int = 4, seed_size: int = 48
-) -> DataFrame:
-    """(piece, freq): the top ``seed_size`` multi-char substrings by
+def _seed_vocab(words: list, max_piece_len: int, seed_size: int) -> dict:
+    """{piece: freq}: the top ``seed_size`` multi-char substrings by
     occurrence-weighted frequency (ties → lexicographic) plus EVERY
-    single character (the segmentability floor).  One explode of all
-    substrings up to ``max_piece_len`` — O(len·K) pieces per word, over
-    DISTINCT words only."""
-    subs = (
-        words.select(
-            "cnt",
-            F.explode(F.expr(
-                f"flatten(transform(sequence(1, length(w)), i -> "
-                f"transform(sequence(1, least({max_piece_len}, length(w) - i + 1)), "
-                f"l -> substring(w, i, l))))"
-            )).alias("piece"),
-        )
-        .groupBy("piece")
-        .agg(F.sum("cnt").alias("freq"))
-    )
-    multi = (
-        subs.filter(F.length("piece") > 1)
-        .orderBy(F.col("freq").desc(), F.col("piece").asc())
-        .limit(seed_size)
-    )
-    return multi.unionByName(subs.filter(F.length("piece") == 1))
+    single character (the segmentability floor)."""
+    freq: dict = {}
+    for w, c in words:
+        for i in range(len(w)):
+            for j in range(i + 1, min(i + max_piece_len, len(w)) + 1):
+                freq[w[i:j]] = freq.get(w[i:j], 0) + c
+    multi = sorted((p for p in freq if len(p) > 1), key=lambda p: (-freq[p], p))
+    return {p: freq[p] for p in multi[:seed_size] + [p for p in freq if len(p) == 1]}
 
 
-def _unigram_logp(vocab_freq: DataFrame) -> DataFrame:
-    """(piece, logp): round(ln(freq/total), 6) — the 6-place rounding IS
-    the determinism contract (see module comment)."""
-    tot = vocab_freq.agg(F.sum("freq").alias("__t"))
-    return (
-        vocab_freq.join(F.broadcast(tot))
-        .select(
-            "piece",
-            F.round(F.log(F.col("freq") / F.col("__t")), 6).alias("logp"),
-        )
-    )
+def _logp(freq: dict) -> dict:
+    """{piece: logp}: ln(freq/total) rounded like Spark's ``round(x, 6)``
+    (HALF_UP on the shortest decimal repr; Python's ``round`` breaks ties
+    differently) — the rounding IS the determinism contract."""
+    total = sum(freq.values())
+    six = Decimal("0.000001")
+    return {
+        p: float(Decimal(repr(math.log(f / total))).quantize(six, rounding=ROUND_HALF_UP))
+        for p, f in freq.items()
+    }
+
+
+def _viterbi(w: str, logp: dict, max_piece_len: int, whole: bool = True) -> tuple:
+    """(cost, pieces): the maximum-likelihood segmentation of ``w`` and its
+    negated log-likelihood.  dp[i] = min over j∈[i-K, i) of
+    (dp[j] − logp(w[j:i]), j) — ties go to the smallest backpointer.
+    ``whole=False`` treats the full-span piece as unknown: the cost of
+    segmenting a piece WITHOUT itself (prune's alternative path; a piece
+    cannot occur as a proper substring of itself, so this is exact)."""
+    n = len(w)
+    dp = [(0.0, -1)]
+    for i in range(1, n + 1):
+        dp.append(min(
+            (dp[j][0] - (logp.get(w[j:i], -1e9) if whole or j or i < n else -1e9), j)
+            for j in range(max(i - max_piece_len, 0), i)
+        ))
+    pieces, pos = [], n
+    while pos > 0:
+        pieces.append(w[dp[pos][1]:pos])
+        pos = dp[pos][1]
+    return dp[n][0], pieces[::-1]
+
+
+def _em_step(words: list, logp: dict, chars: set, max_piece_len: int) -> tuple:
+    """One hard-EM round: (vcnt, freq).  E: every word's Viterbi pieces,
+    weighted by its occurrence count.  M: pieces that won mass keep it as
+    their frequency; single chars that won none keep a 0.5 floor; every
+    other piece drops out of the vocab."""
+    vcnt: dict = {}
+    for w, c in words:
+        for p in _viterbi(w, logp, max_piece_len)[1]:
+            vcnt[p] = vcnt.get(p, 0) + c
+    freq = {p: 0.5 for p in chars}
+    freq.update(vcnt)
+    return vcnt, freq
+
+
+def _unigram_kernel(words: DataFrame, fit) -> DataFrame:
+    """Run ``fit(words, chars) -> (logp, vcnt)`` over the whole (w, cnt)
+    table in ONE ``repartition(1).mapInPandas`` task and return its
+    vocab as a lazy UNIGRAM_SCHEMA frame."""
+
+    def run(batches):
+        import pandas as pd
+
+        table = [(w, int(c)) for pdf in batches for w, c in zip(pdf["w"], pdf["cnt"])]
+        logp, vcnt = fit(table, {x for w, _ in table for x in w})
+        yield pd.DataFrame({"piece": list(logp), "cnt": [vcnt.get(p, 0) for p in logp],
+                            "logp": list(logp.values())})
+
+    return words.repartition(1).mapInPandas(run, UNIGRAM_SCHEMA)
 
 
 def unigram_viterbi_tokens(
     words: DataFrame, vocab_logp: DataFrame, max_piece_len: int = 4
 ) -> DataFrame:
-    """(w, cnt, ts): each word's maximum-likelihood segmentation against
-    the broadcast vocab map — two JVM folds per word, no UDF."""
-    vm = vocab_logp.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("piece", "logp"))
-        ).alias("__vm")
+    """(w, cnt, ts): each distinct word's maximum-likelihood segmentation
+    (``_viterbi``) in an Arrow-batched map; the (piece, logp) vocab is
+    broadcast beside every row as one pair of array columns, so nothing
+    is collected at build time."""
+    arrays = vocab_logp.agg(F.collect_list(F.struct("piece", "logp")).alias("__v")).select(
+        F.transform("__v", lambda v: v.piece).alias("__p"),
+        F.transform("__v", lambda v: v.logp).alias("__lp"),
     )
-    return (
-        words.join(F.broadcast(vm))
-        .withColumn("dp", F.expr(_UNIGRAM_DP.format(K=max_piece_len)))
-        .withColumn("ts", F.expr(_UNIGRAM_BT))
-        .select("w", "cnt", "ts")
+    schema = T.StructType(
+        [words.schema["w"], words.schema["cnt"],
+         T.StructField("ts", T.ArrayType(T.StringType()))]
     )
 
+    def segment(batches):
+        import pandas as pd
 
-#: the alt-cost DP: identical to _UNIGRAM_DP except the FULL-SPAN piece
-#: (j = 0 covering all of w) is treated as unknown — segmenting a piece
-#: "without itself".  A piece cannot occur as a proper substring of
-#: itself, so disallowing the full span IS removing it from the vocab
-#: for this word only; chars are always present, so a path exists.
-_UNIGRAM_DP_NOFULL = """
-aggregate(
-  sequence(1, length(w)),
-  array(struct(cast(0.0 as double) as negs, -1 as bp)),
-  (acc, i) -> concat(acc, array(
-    array_min(
-      transform(sequence(greatest(i - {K}, 0), i - 1), j ->
-        struct(
-          element_at(acc, j + 1).negs
-            - coalesce(if(j = 0 and i = length(w),
-                          cast(null as double),
-                          element_at(__vm, substring(w, j + 1, i - j))),
-                       cast(-1000000000.0 as double)) as negs,
-          j as bp))))))
-"""
+        for pdf in batches:
+            logp = dict(zip(pdf["__p"].iloc[0], pdf["__lp"].iloc[0])) if len(pdf) else {}
+            ts = [_viterbi(w, logp, max_piece_len)[1] for w in pdf["w"]]
+            yield pd.DataFrame({"w": pdf["w"], "cnt": pdf["cnt"], "ts": ts})
 
-
-def _unigram_alt_cost(
-    pieces: DataFrame, vocab_logp: DataFrame, max_piece_len: int = 4
-) -> DataFrame:
-    """(w, alt_negs): the Viterbi cost of segmenting each piece string
-    WITHOUT itself (full span disallowed) — SentencePiece's loss-delta
-    ingredient: removing piece p forces every occurrence onto its best
-    alternative segmentation, so the cost increase per occurrence is
-    alt_negs − (−logp(p)).  Runs over VOCAB-sized rows (≤ seed_size
-    pieces of ≤ max_piece_len chars) against the broadcast vocab map —
-    index-metadata work, never corpus-sized."""
-    vm = vocab_logp.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("piece", "logp"))
-        ).alias("__vm")
-    )
-    return (
-        pieces.join(F.broadcast(vm))
-        .withColumn("dp", F.expr(_UNIGRAM_DP_NOFULL.format(K=max_piece_len)))
-        .select(
-            "w",
-            F.expr("element_at(dp, length(w) + 1).negs").alias("alt_negs"),
-        )
-    )
+    rows = words.select("w", "cnt").crossJoin(F.broadcast(arrays))
+    return rows.mapInPandas(segment, schema)
 
 
 def unigram_prune(
@@ -628,107 +613,60 @@ def unigram_prune(
     Loss delta for piece p (Viterbi-EM form of Kudo's likelihood
     difference): vcnt(p) · (alt_cost(p) + logp(p)) — what the corpus
     cost gains if every Viterbi occurrence of p re-segments through the
-    best alternative path (full-span-disallowed DP, exact because p
-    cannot contain itself).  Single chars are never pruned (the
-    segmentability floor).  Ties break (delta desc, vcnt desc, piece
-    asc) — fully deterministic, mirrored by the DuckDB oracle.
+    best alternative path (``_viterbi(p, whole=False)``).  Single chars
+    are never pruned (the segmentability floor).  Ties break (delta
+    desc, vcnt desc, piece asc) — fully deterministic, mirrored by the
+    DuckDB oracle.
 
     ``expect_rounds`` is a REGIME GUARD (r12 verdict item 5): a fixed
     SQL oracle can only replay a known number of prune rounds, each
-    keeping exactly ``target_multi`` pieces.  When set, the loop raises
-    RuntimeError if the measured round count diverges, or if any fired
-    round's keep_n exceeds ``target_multi`` (both would silently
-    invalidate the oracle's LIMIT) — fixture drift fails loudly instead
-    of as an oracle hash mismatch.
+    keeping exactly ``target_multi`` pieces.  When set, the kernel
+    raises RuntimeError when the frame executes if the measured round
+    count diverges, or if any fired round's keep_n exceeds
+    ``target_multi`` (both would silently invalidate the oracle's
+    LIMIT) — fixture drift fails loudly instead of as an oracle hash
+    mismatch.
 
-    Scale: each round = one E-step over DISTINCT words (broadcast map)
-    + one piece group-by + one vocab-sized alt-DP; the driver-paced
-    loop runs O(log(seed/target)/log(1/shrink)) rounds and every
-    per-round decision aggregate is vocab-metadata-sized, the same
-    bounded-driver-state class as the BPE merge table."""
+    Scale: every round runs inside one single-task kernel over the
+    DISTINCT-word table (``_unigram_kernel``), whose state is
+    vocabulary-sized; building the frame runs no Spark job."""
     if not 0 < shrink < 1:
         raise ValueError(f"shrink must be in (0, 1), got {shrink}")
-    words = unigram_words(documents, text_col, max_word_len).localCheckpoint(
-        eager=True
-    )
-    chars = (
-        words.select(F.explode(F.split("w", "")).alias("piece"))
-        .filter(F.length("piece") == 1)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    vocab = _unigram_logp(
-        unigram_seed_vocab(words, max_piece_len, seed_size)
-    ).localCheckpoint(eager=True)
-    rounds_fired = 0
-    while True:
-        # hard-EM round (same E/M as unigram_train)
-        toks = unigram_viterbi_tokens(words, vocab, max_piece_len)
-        counts = (
-            toks.select("cnt", F.explode("ts").alias("piece"))
-            .groupBy("piece")
-            .agg(F.sum("cnt").alias("vcnt"))
-        )
-        freqs = (
-            chars.join(counts, "piece", "left")
-            .select(
-                "piece",
-                F.coalesce(F.col("vcnt").cast("double"), F.lit(0.5)).alias("freq"),
-            )
-            .unionByName(
-                counts.join(chars, "piece", "left_anti")
-                .select("piece", F.col("vcnt").cast("double").alias("freq"))
-            )
-        )
-        vocab = _unigram_logp(freqs).localCheckpoint(eager=True)
-        vstat = (
-            vocab.join(counts, "piece", "left")
-            .select("piece", "logp", F.coalesce("vcnt", F.lit(0)).alias("vcnt"))
-            .localCheckpoint(eager=True)
-        )
-        multi = vstat.filter(F.length("piece") > 1)
-        n_multi = multi.count()                 # scalar convergence probe
-        if n_multi <= target_multi:
-            if expect_rounds is not None and rounds_fired != expect_rounds:
+
+    def fit(words, chars):
+        logp = _logp(_seed_vocab(words, max_piece_len, seed_size))
+        rounds_fired = 0
+        while True:
+            vcnt, freq = _em_step(words, logp, chars, max_piece_len)
+            logp = _logp(freq)
+            multi = [p for p in logp if len(p) > 1]
+            if len(multi) <= target_multi:
+                if expect_rounds is not None and rounds_fired != expect_rounds:
+                    raise RuntimeError(
+                        f"unigram_prune regime drift: {rounds_fired} prune "
+                        f"round(s) fired, oracle expects {expect_rounds} "
+                        f"(post-EM multi count landed at {len(multi)})"
+                    )
+                return logp, vcnt
+            keep_n = max(target_multi, int(len(multi) * shrink))
+            rounds_fired += 1
+            if expect_rounds is not None and (
+                rounds_fired > expect_rounds or keep_n != target_multi
+            ):
                 raise RuntimeError(
-                    f"unigram_prune regime drift: {rounds_fired} prune "
-                    f"round(s) fired, oracle expects {expect_rounds} "
-                    f"(post-EM multi count landed at {n_multi})"
+                    f"unigram_prune regime drift: round {rounds_fired} fired "
+                    f"with n_multi={len(multi)}, keep_n={keep_n} — oracle "
+                    f"expects exactly {expect_rounds} round(s) keeping "
+                    f"{target_multi}"
                 )
-            return vstat.select(
-                "piece", F.col("vcnt").cast("long").alias("cnt"), "logp"
-            )
-        keep_n = max(target_multi, int(n_multi * shrink))
-        rounds_fired += 1
-        if expect_rounds is not None and (
-            rounds_fired > expect_rounds or keep_n != target_multi
-        ):
-            raise RuntimeError(
-                f"unigram_prune regime drift: round {rounds_fired} fired "
-                f"with n_multi={n_multi}, keep_n={keep_n} — oracle "
-                f"expects exactly {expect_rounds} round(s) keeping "
-                f"{target_multi}"
-            )
-        alt = _unigram_alt_cost(
-            multi.select(F.col("piece").alias("w")), vocab, max_piece_len
-        )
-        ranked = (
-            multi.join(alt, multi.piece == alt.w)
-            .select(
-                "piece", "vcnt",
-                (F.col("vcnt") * (F.col("alt_negs") + F.col("logp")))
-                .alias("delta"),
-            )
-            .orderBy(
-                F.col("delta").desc(), F.col("vcnt").desc(),
-                F.col("piece").asc(),
-            )
-            .limit(keep_n)
-        )
-        kept = freqs.join(
-            ranked.select("piece"), "piece", "left_semi"
-        ).unionByName(freqs.join(chars, "piece", "left_semi"))
-        vocab = _unigram_logp(kept).localCheckpoint(eager=True)
+            delta = {
+                p: vcnt[p] * (_viterbi(p, logp, max_piece_len, whole=False)[0] + logp[p])
+                for p in multi
+            }
+            kept = sorted(multi, key=lambda p: (-delta[p], -vcnt[p], p))[:keep_n]
+            logp = _logp({p: freq[p] for p in [*kept, *chars]})
+
+    return _unigram_kernel(unigram_words(documents, text_col, max_word_len), fit)
 
 
 def unigram_train(
@@ -747,50 +685,20 @@ def unigram_train(
     segmentability guarantee).  Returns (piece, cnt, logp) where cnt is
     the final Viterbi mass (bigint; char floors surface as cnt=0).
 
-    Scale: each round is one broadcast map over DISTINCT words (the DP
-    is O(len·K) per word) + one piece group-by; vocab artifacts are
-    O(seed_size + alphabet) rows, localCheckpoint-frozen per round so
-    the plan does not grow with iterations — the same shape as the BPE
-    trainer's round loop."""
-    words = unigram_words(documents, text_col, max_word_len).localCheckpoint(
-        eager=True
-    )
-    chars = (
-        words.select(F.explode(F.split("w", "")).alias("piece"))
-        .filter(F.length("piece") == 1)
-        .distinct()
-    )
-    vocab = _unigram_logp(
-        unigram_seed_vocab(words, max_piece_len, seed_size)
-    ).localCheckpoint(eager=True)
-    counts = None
-    for _ in range(n_iters):
-        toks = unigram_viterbi_tokens(words, vocab, max_piece_len)
-        counts = (
-            toks.select("cnt", F.explode("ts").alias("piece"))
-            .groupBy("piece")
-            .agg(F.sum("cnt").alias("vcnt"))
-        )
-        freqs = (
-            chars.join(counts, "piece", "left")
-            .select(
-                "piece",
-                F.coalesce(F.col("vcnt").cast("double"), F.lit(0.5)).alias("freq"),
-            )
-            .unionByName(
-                counts.join(chars, "piece", "left_anti")
-                .select("piece", F.col("vcnt").cast("double").alias("freq"))
-            )
-        )
-        vocab = _unigram_logp(freqs).localCheckpoint(eager=True)
-    return (
-        vocab.join(counts, "piece", "left")
-        .select(
-            "piece",
-            F.coalesce("vcnt", F.lit(0)).cast("long").alias("cnt"),
-            "logp",
-        )
-    )
+    Scale: all rounds run in one single-task kernel over the
+    DISTINCT-word table (the DP is O(len·K) per word), the same shape
+    as the BPE merge learner; building the frame runs no Spark job."""
+    if n_iters < 1:
+        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
+
+    def fit(words, chars):
+        logp = _logp(_seed_vocab(words, max_piece_len, seed_size))
+        for _ in range(n_iters):
+            vcnt, freq = _em_step(words, logp, chars, max_piece_len)
+            logp = _logp(freq)
+        return logp, vcnt
+
+    return _unigram_kernel(unigram_words(documents, text_col, max_word_len), fit)
 
 
 # ---------------------------------------------------------------------------
@@ -833,22 +741,18 @@ def wordpiece_top_merges(
 
 
 def wordpiece_vocab(documents: DataFrame, k: int = 3,
-                    text_col: str = "text") -> list[str]:
-    """The deployable vocab: every initial symbol (bare first chars +
-    ##-continuations) plus the ``k`` learned merge pieces."""
-    alpha = [
-        r.s for r in documents.select(
-            F.explode(F.split(F.col(text_col), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .select(F.explode(F.expr(_WP_SYMS)).alias("s")).distinct().collect()
-    ]
-    merges = wordpiece_top_merges(documents, k=k, text_col=text_col).collect()
-    return sorted(set(alpha) | {m.merged for m in merges})
+                    text_col: str = "text") -> DataFrame:
+    """The deployable vocab as a lazy one-column ``piece`` frame: every
+    initial symbol (bare first chars + ##-continuations) plus the ``k``
+    learned merge pieces, distinct."""
+    alpha = _word_counts(documents, text_col).select(F.explode(F.expr(_WP_SYMS)).alias("piece"))
+    merged = wordpiece_top_merges(documents, k=k, text_col=text_col)
+    return alpha.unionByName(merged.select(F.col("merged").alias("piece"))).distinct()
 
 
 def wordpiece_encode(
     documents: DataFrame,
-    vocab: list[str],
+    vocab: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_piece_len: int = 8,
@@ -858,14 +762,16 @@ def wordpiece_encode(
     piece at the cursor (bare at position 0, ``##``-prefixed after);
     any dead end makes the whole word one [UNK] (BERT semantics).
 
-    Per document emits n_words / n_pieces / n_unk — [UNK] counts as one
-    piece.  The walk is one JVM ``aggregate`` fold per DISTINCT word
-    against the broadcast vocab map (vocab-sized work joined back to
-    corpus-sized counts), same split as the unigram encoder; no UDF."""
-    spark = documents.sparkSession
-    vm = spark.createDataFrame([(p, 1) for p in vocab], "piece string, one int") \
-        .agg(F.map_from_entries(F.collect_list(F.struct("piece", "one")))
-             .alias("__wm"))
+    ``vocab`` is a one-column ``piece`` frame such as
+    :func:`wordpiece_vocab`'s.  Per document emits n_words / n_pieces /
+    n_unk — [UNK] counts as one piece.  The walk is one JVM ``aggregate``
+    fold per DISTINCT word against the broadcast vocab map (vocab-sized
+    work joined back to corpus-sized counts); no UDF."""
+    if not isinstance(vocab, DataFrame):
+        raise TypeError(f"vocab must be a DataFrame of pieces, got {type(vocab).__name__}")
+    vm = vocab.agg(
+        F.map_from_entries(F.collect_list(F.struct("piece", F.lit(1)))).alias("__wm")
+    )
     words = (
         documents.select(
             F.explode(

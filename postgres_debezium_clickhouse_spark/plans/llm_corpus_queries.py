@@ -299,9 +299,9 @@ def q_corpus_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11 — unigram-LM tokenizer training (Kudo 2018, the SentencePiece
     model — the OTHER mainstream subword trainer next to BPE), fully
     value-oracled: seed vocab = top-48 substrings by frequency + every
-    char, then ONE Viterbi E-step whose maximum-likelihood DP runs as
-    Spark higher-order-function folds per word (no UDF; the EM loop
-    proper is pytest-covered via the monotone-objective invariant).
+    char, then ONE Viterbi EM round, all inside one lazy single-task
+    kernel over the distinct-word table (the EM loop proper is
+    pytest-covered via the monotone-objective invariant).
     Output: the top-30 pieces by Viterbi mass.  The DuckDB oracle
     re-runs the SAME DP as a recursive CTE (the ADPCM state-machine
     precedent) with the round-6 logp discipline, so segmentation is
@@ -323,7 +323,8 @@ def q_corpus_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_corpus_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11 — unigram ENCODE over the trained model (the BPE family's
     train+encode parity): every document's words segment by the same
-    JVM Viterbi folds against the one-E-step vocab, then per-document
+    Viterbi DP as the trainer (``tokenizer._viterbi``, an Arrow map
+    against the broadcast one-EM-round vocab), then per-document
     subword accounting — n_words / n_subwords / n_chars / compression.
     Segmentation runs once per DISTINCT word and joins back to the
     per-document word counts (the vocabulary-sized work vs corpus-sized
@@ -384,7 +385,9 @@ def q_corpus_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     pieces → final re-estimation.  The DuckDB oracle replays the whole
     chain: TWO word-level recursive DPs (E1, E2) plus the piece-level
     alt-DP, the delta ranking with its (delta desc, vcnt desc, piece asc)
-    tie-break, and the re-normalized round-6 logps.
+    tie-break, and the re-normalized round-6 logps.  The engine runs the
+    whole chain in one lazy single-task kernel (``unigram_prune``), so
+    building this frame runs no Spark job.
 
     Regime constant (same class as sample_full/sketch_full): with
     shrink=0.25 the keep count is max(8, ⌊n·0.25⌋) = 8 whenever the
@@ -392,8 +395,9 @@ def q_corpus_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001/0.01/0.1, so exactly ONE prune round fires at every fixture
     scale and the oracle's LIMIT 8 is the engine's keep_n verbatim.
     ``expect_rounds=1`` turns that measurement into a GUARD (r13): if
-    fixture drift ever changes the round count or keep_n, the engine
-    raises instead of hash-mismatching against the oracle."""
+    fixture drift ever changes the round count or keep_n, the kernel
+    raises when the frame executes instead of hash-mismatching against
+    the oracle."""
     from ..operators.tokenizer import unigram_prune
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -57,12 +57,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ('{r.cell for r in q.select("cell").distinct().collect()}',
          "probed-cell ids: ≤ n_cells distinct values"),
     ],
-    "operators/tokenizer.py": [
-        ('.select(F.explode(F.expr(_WP_SYMS)).alias("s")).distinct().collect()',
-         "wordpiece alphabet: distinct symbols (vocab-bounded)"),
-        ("wordpiece_top_merges(documents, k=k, text_col=text_col).collect()",
-         "wordpiece top-k merge table (k rows)"),
-    ],
     "streaming/pipeline.py": [
         (").distinct().collect()",
          "touched silver bucket ids: ≤ n_buckets values"),

@@ -90,10 +90,8 @@ def test_no_query_plans_a_cartesian_product(spark, sf_dir):
         "similarity_ann_ivfpq_rerank",   # same ADC chain + broadcast shortlist re-rank (r12)
         "similarity_ivfpq_rerank_recall",  # ADC + rerank + exact baseline composed (r12)
         "events_value_histogram",   # scalar attach: 1-row broadcast global min/max
-        "corpus_unigram_vocab",     # scalar attaches: 1-row broadcast vocab map + total (vocab-sized metadata)
-        "corpus_unigram_encode",    # same vocab-map/total attaches, encode side
+        "corpus_unigram_encode",    # scalar attach: 1-row broadcast vocab arrays (vocab-sized metadata)
         "corpus_tokenizer_fertility",  # wraps the encode chain above + lang agg (r15)
-        "corpus_unigram_prune",     # same attaches + vocab-sized alt-DP map (r12)
         "corpus_wordpiece_encode",  # scalar attach: 1-row broadcast piece map (r12)
         "corpus_bpe_encode",        # scalar attach: 1-row broadcast learned merge table (k rows)
         "text_bm25_topk",           # scalar attach: 1-row broadcast N/avgdl totals (r12)

@@ -210,28 +210,79 @@ class SilverModel(RuleBasedStateMachine):
         assert len(full) == len(self.rows)  # one stored row per key
 
 
-def _run_model(spark, root, monkeypatch, fold, examples, steps):
+#: one fixed walk through every rule, the invariant checked after each
+#: step: out-of-order versions, re-delivered events, deletes and a batch
+#: that adds a column, then the maintenance ops on keys the last trigger
+#: wrote (a live and a deleted key for ``mutate``), a restore to the
+#: narrow schema, a tombstone-dropping compaction and a vacuum before
+#: the last time-travel reads.  ``data`` entries pick the drawn value
+#: from the model's state.
+WALK = [
+    ("two_triggers", {"first": ([(0, "x", "c", 3), (1, "y", "c", 2), (2, "z", "c", 4),
+                                 (3, "x", "c", 1)], False, [1]),
+                      "second": ([(1, "z", "u", 5), (2, "x", "d", 6), (0, "y", "u", 1),
+                                  (4, "x", "c", 7)], False, [])}),
+    ("mutate", {"data": lambda m: 1, "delete": False}),
+    ("as_of", {"data": lambda m: min(m.readable)}),
+    ("upsert", {"batch": ([(3, "z", "u", 8), (5, "y", "c", 9), (1, "x", "d", 10)],
+                          True, [0, 2])}),
+    ("diff", {"data": lambda m: min(m.readable)}),
+    ("mutate", {"data": lambda m: 5, "delete": True}),
+    ("mutate", {"data": lambda m: 2, "delete": False}),
+    ("compact", {"horizon": None}),
+    ("upsert", {"batch": ([(4, "y", "u", 11), (0, "z", "u", 12), (4, "x", "d", 2)],
+                          False, [])}),
+    ("rebucket", {"n_buckets": 3}),
+    ("restore", {"data": lambda m: sorted(m.readable)[1]}),
+    ("upsert", {"batch": ([(2, "y", "c", 12), (5, "x", "u", 12)], False, [1])}),
+    ("compact", {"horizon": 12}),
+    ("vacuum", {"retain": 2}),
+    ("as_of", {"data": lambda m: min(m.readable)}),
+    ("diff", {"data": lambda m: min(m.readable)}),
+]
+
+
+class _Drawn:
+    """Stands in for hypothesis' ``data`` argument: every draw returns the
+    value the walk picked."""
+
+    def __init__(self, value):
+        self.value = value
+
+    def draw(self, strategy):
+        return self.value
+
+
+def _fold_at(monkeypatch, fold):
     if fold == "every_trigger":
         monkeypatch.setattr(pl, "FOLD_DELTAS", 0)
     else:
         monkeypatch.setattr(pl, "FOLD_DELTAS", float("inf"))
         monkeypatch.setattr(pl, "FOLD_BYTES_FRACTION", float("inf"))
-    SilverModel.spark, SilverModel.root = spark, root
-    run_state_machine_as_test(SilverModel, settings=settings(
-        max_examples=examples, stateful_step_count=steps, deadline=None, derandomize=True,
-        suppress_health_check=list(HealthCheck),
-    ))
 
 
 @pytest.mark.parametrize("fold", ["every_trigger", "never"])
 def test_silver_store_matches_dict_model(spark, tmp_path, monkeypatch, fold):
-    _run_model(spark, str(tmp_path), monkeypatch, fold, 3, 8)
+    """The fixed ``WALK`` at one fold extreme; it must name every rule."""
+    assert {name for name, _ in WALK} >= {r.function.__name__ for r in SilverModel.rules()}
+    _fold_at(monkeypatch, fold)
+    SilverModel.spark, SilverModel.root = spark, str(tmp_path)
+    model = SilverModel()
+    for name, kwargs in WALK:
+        getattr(model, name)(**{
+            k: _Drawn(v(model)) if k == "data" else v for k, v in kwargs.items()})
+        model.read_matches_model()
 
 
 @pytest.mark.slow
 @pytest.mark.parametrize("fold", ["every_trigger", "never"])
 def test_silver_store_matches_dict_model_wide(spark, tmp_path, monkeypatch, fold):
-    """Fifteen examples instead of three: the default-tier run's
-    derandomized examples reach only some of the rules, these reach every
-    rule at both fold extremes (~2-3 min each)."""
-    _run_model(spark, str(tmp_path), monkeypatch, fold, 15, 10)
+    """Fifteen hypothesis-chosen interleavings of the rules at each fold
+    extreme, where the default tier walks one fixed order (~2-3 min
+    each)."""
+    _fold_at(monkeypatch, fold)
+    SilverModel.spark, SilverModel.root = spark, str(tmp_path)
+    run_state_machine_as_test(SilverModel, settings=settings(
+        max_examples=15, stateful_step_count=10, deadline=None, derandomize=True,
+        suppress_health_check=list(HealthCheck),
+    ))

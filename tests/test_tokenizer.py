@@ -311,12 +311,12 @@ def test_unigram_viterbi_picks_whole_pieces_and_splits_unknowns(spark):
     into the maximum-likelihood pieces — here the frequent 'the'+'cat'
     (two likely pieces beat any char-path)."""
     from postgres_debezium_clickhouse_spark.operators.tokenizer import (
-        _unigram_logp, unigram_seed_vocab, unigram_viterbi_tokens,
-        unigram_words,
+        _logp, _seed_vocab, unigram_viterbi_tokens, unigram_words,
     )
 
     words = unigram_words(_unigram_docs(spark))
-    vocab = _unigram_logp(unigram_seed_vocab(words))
+    seed = _logp(_seed_vocab([(r.w, r.cnt) for r in words.collect()], 4, 48))
+    vocab = spark.createDataFrame(list(seed.items()), "piece string, logp double")
     seg = {r.w: list(r.ts) for r in
            unigram_viterbi_tokens(words, vocab).collect()}
     assert seg["the"] == ["the"] and seg["cat"] == ["cat"]
@@ -342,6 +342,53 @@ def test_unigram_train_counts_floor_and_determinism(spark):
     # pieces that won no Viterbi mass are pruned (e.g. 'at' loses to
     # whole-word pieces everywhere)
     assert "at" not in out1
+
+
+def test_unigram_train_rejects_zero_iterations(spark):
+    """At least one EM round is needed to produce Viterbi counts."""
+    from postgres_debezium_clickhouse_spark.operators.tokenizer import (
+        unigram_train,
+    )
+
+    with pytest.raises(ValueError, match="n_iters"):
+        unigram_train(_unigram_docs(spark), n_iters=0)
+
+
+def test_unigram_and_wordpiece_build_lazily(spark, sf_dir):
+    """Once a fixture's schema is cached, building the unigram trainer,
+    the pruner or any of the unigram/WordPiece tokenizer queries runs no
+    Spark job and leaves the session's cached and checkpointed storage
+    at its starting level: the EM rounds, the prune loop and the vocab
+    all live inside the lazy plan."""
+    from _jobs import spark_jobs
+
+    import __spark_entry__ as m
+    from postgres_debezium_clickhouse_spark.operators.tokenizer import (
+        unigram_prune, unigram_train,
+    )
+    from postgres_debezium_clickhouse_spark.sources.files import load_table
+
+    def stored():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return sum(r.memSize() + r.diskSize() for r in infos)
+
+    def docs():
+        return load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    builds = {
+        "unigram_train": lambda: unigram_train(docs(), n_iters=2),
+        "unigram_prune": lambda: unigram_prune(docs(), target_multi=8, shrink=0.25),
+    }
+    for name in ("corpus_unigram_vocab", "corpus_unigram_encode", "corpus_unigram_prune",
+                 "corpus_tokenizer_fertility", "corpus_wordpiece_encode"):
+        builds[name] = lambda q=m.queries()[name]: q(spark, sf_dir)
+    start = stored()
+    for name, build in builds.items():
+        build()  # the first build may read the fixture footer
+        with spark_jobs(spark) as jobs:
+            build()
+        # storage may only shrink (the context cleaner frees earlier tests' blocks)
+        assert (len(jobs), max(stored() - start, 0)) == (0, 0), name
 
 
 @pytest.mark.slow
@@ -503,7 +550,8 @@ def test_wordpiece_encode_greedy_longest_and_unk(spark):
         "doc_id long, text string",
     )
     vocab = wordpiece_vocab(train, k=3)
-    assert vocab == ["##e", "##y", "##z", "d", "de", "x", "xy", "xz"]
+    assert sorted(r.piece for r in vocab.collect()) == [
+        "##e", "##y", "##z", "d", "de", "x", "xy", "xz"]
     ev = spark.createDataFrame(
         [(1, "xy xyz xz xq de dee"), (2, "qqq"), (3, "x dede")],
         "doc_id long, text string",
@@ -525,7 +573,7 @@ def test_unigram_prune_regime_guard_fires_on_drift(spark):
     exactly ONE prune round keeping target_multi pieces; the
     expect_rounds guard must raise on a corpus where that regime does
     not hold, instead of letting the oracle hash-mismatch."""
-    import pytest
+    from pyspark.errors import PythonException
 
     from postgres_debezium_clickhouse_spark.operators.tokenizer import (
         unigram_prune,
@@ -536,10 +584,35 @@ def test_unigram_prune_regime_guard_fires_on_drift(spark):
     docs = spark.createDataFrame(
         [(1, "ab ab ab"), (2, "ab cd")], "doc_id long, text string"
     )
-    with pytest.raises(RuntimeError, match="regime drift"):
-        unigram_prune(docs, target_multi=8, shrink=0.25, expect_rounds=1)
+    # the guard runs inside the training kernel, so it fires on execute
+    guarded = unigram_prune(docs, target_multi=8, shrink=0.25, expect_rounds=1)
+    with pytest.raises(PythonException, match="regime drift"):
+        guarded.collect()
     # without the guard the same corpus trains fine
     assert unigram_prune(docs, target_multi=8, shrink=0.25).count() > 0
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_corpus_unigram_prune_matches_golden_rows(spark, sf_dir, scale):
+    """``corpus_unigram_prune``'s (piece, cnt, logp) rows equal the ones
+    recorded in tests/unigram_prune_golden.json — the value check for this
+    query on hosts where its DuckDB oracle (two word-level recursive DPs)
+    runs out of memory."""
+    import json
+    import os
+
+    import __spark_entry__ as m
+
+    path = os.path.join(os.path.dirname(sf_dir), scale)
+    if not os.path.isdir(path):
+        pytest.skip(f"no {scale} fixtures")
+    golden = os.path.join(os.path.dirname(__file__), "unigram_prune_golden.json")
+    with open(golden) as fh:
+        want = json.load(fh)[scale]
+    got = sorted([r.piece, r.cnt, r.logp]
+                 for r in m.queries()["corpus_unigram_prune"](spark, path).collect())
+    assert got == want
 
 
 @pytest.mark.slow
