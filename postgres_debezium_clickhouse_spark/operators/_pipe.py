@@ -23,15 +23,31 @@ intermediate is provably consumed by the next Python stage alone.
 Semantics are unchanged by construction: the same batch functions run in
 the same order on the same rows; only the transport between them moves
 from double Arrow serialization to a Python generator handoff.
+
+Adding a media format takes two plain functions and no batch loop.  A
+walker ``walk(blob) -> dict`` parses one blob into a dict keyed by the
+output schema's field names (a list of such dicts for a one-blob → many-rows
+format); ``map_blobs(df, walk, SCHEMA, id_col, media_col)`` runs it over a
+binary (or string) column, one row per ``(id, blob)``.  An encoder
+``encode(d) -> bytes`` builds the fixture blob of doc id ``d``;
+``synth_blobs(ids_df, encode, id_col)`` turns an id frame into
+``(id_col, media)`` rows.  Both return through ``pipe_map``, so a walker
+over a synth's raw output runs in the synth's Python worker.
+
+The sizing helpers live here too: ``spread_for_compute`` fans a small
+scan out before a CPU-bound Python stage, and ``_fits_one_task`` decides
+when a single-task Arrow kernel may take a whole input.
 """
 
 from __future__ import annotations
 
 from typing import Callable, Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
-__all__ = ["pipe_map"]
+__all__ = ["map_blobs", "pipe_map", "spread_for_compute", "synth_blobs"]
 
 #: attribute carrying (seed DataFrame, tuple of batch functions)
 _ATTR = "_pdc_pipe"
@@ -63,3 +79,143 @@ def pipe_map(df: DataFrame, fn: Callable, schema) -> DataFrame:
     out = seed.mapInPandas(_compose(fns), schema=schema)
     setattr(out, _ATTR, (seed, fns))
     return out
+
+
+def map_blobs(df: DataFrame, walk: Callable, schema, id_col: str = "doc_id",
+              media_col: str = "media", explode: bool = False) -> DataFrame:
+    """``walk`` over every ``(id, value)`` of ``df[id_col], df[media_col]``.
+
+    ``value`` is ``bytes`` for a binary column and ``str`` for a string
+    column.  ``schema`` (a ``StructType`` or DDL string) names the output:
+    its first field takes the id, every other field ``f`` is read as
+    ``walk(value)[f]`` — a missing key raises.  With ``explode=True``,
+    ``walk`` returns a list of such dicts, one output row each (an empty
+    list drops the blob)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    out_id, *cols = names
+
+    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = {name: [] for name in names}
+            for i, v in zip(pdf[id_col], pdf[media_col]):
+                v = v if isinstance(v, str) else bytes(v)
+                for m in walk(v) if explode else (walk(v),):
+                    rows[out_id].append(int(i))
+                    for c in cols:
+                        rows[c].append(m[c])
+            yield pd.DataFrame(rows)
+
+    return pipe_map(df, _walk, schema)
+
+
+def synth_blobs(ids_df: DataFrame, encode: Callable, id_col: str = "doc_id",
+                rows_per_task: int | None = None,
+                blob_col: str = "media binary") -> DataFrame:
+    """``(id_col, blob)`` rows, the blob of doc id ``d`` being ``encode(d)``.
+
+    The ids are spread first (``spread_for_compute`` with
+    ``rows_per_task``); ``blob_col`` is the DDL of the output blob column
+    (``"media binary"``, or ``"subtitle string"`` for text fixtures)."""
+    name = blob_col.split()[0]
+
+    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = [int(d) for d in pdf[id_col]]
+            yield pd.DataFrame({id_col: ids, name: [encode(d) for d in ids]})
+
+    spread = spread_for_compute(ids_df.select(id_col), rows_per_task=rows_per_task)
+    return pipe_map(spread, _synth, f"{id_col} long, {blob_col}")
+
+
+def spread_for_compute(df: DataFrame, size_threshold: int = 4 << 30,
+                       rows_per_task: int | None = None) -> DataFrame:
+    """Fan a small scan out to the cluster's parallelism before a
+    CPU-bound stage.
+
+    A small parquet file scans as 1-2 tasks, and AQE's byte-based
+    coalescing keeps it that narrow — correct for I/O, wrong for the
+    md5-per-shingle compute that follows (measured 1 task doing 100% of
+    the hashing on local[32]).
+
+    The partition COUNT alone is not a safe guard: Spark splits a parquet
+    file into byte ranges, but a row group belongs to the split holding
+    its midpoint — a file with one huge row group scans as N splits of
+    which N−1 are EMPTY, so the count looks parallel while one task does
+    all the work (caught by the r12 sf1 scaling decade: the 40-gram build
+    collapsed to 1.6 effective cores, 27× wall on 10× data).  So inputs
+    whose optimizer-estimated size is under ``size_threshold`` are
+    repartitioned unconditionally: shuffling ≤4 GB costs seconds, while a
+    hollow-split parallelism collapse on a per-char CPU stage costs the
+    core count.  Above the threshold the scan's partitioning is trusted —
+    at 100 TB real writers cap row groups (~128 MB), so splits are
+    genuinely parallel and a full-corpus shuffle must not be added.
+
+    ``rows_per_task`` (r19-opt, VERDICT r18 item 6) — the rows-aware
+    target for LIGHT per-row work: tiny-blob walks (exif/subtitles/gzip
+    class, measured ≲0.05 ms of Python per blob) pay more in per-task
+    dispatch than they win in parallelism when every task holds only a
+    handful of rows (measured: a 32-task mapInPandas stage floors at
+    ~0.25 s on local[32] where an 8-task one floors at ~0.06 s).
+    Callers that know their per-row cost pass the row count that
+    amortizes one task's dispatch; the target becomes
+    ``clamp(est_rows / rows_per_task, 1, defaultParallelism)`` — still
+    scale-adaptive (10× the rows ⇒ 10× the tasks until the core cap),
+    still hollow-split-safe (the repartition fires whenever target > 1;
+    at target == 1 the work is one task's either way).  Row count is
+    estimated from the optimizer's size estimate at ~24 bytes/row — the
+    single-key seed projections this is used for all estimate 22-25 B/row
+    (measured across the parquet fixtures); the estimate only steers task
+    COUNT, so a miss costs overhead, never correctness.
+
+    Streaming frames pass through untouched: micro-batch partitioning is
+    the source's (maxFilesPerTrigger-bounded, already parallel), the
+    stream gates are plan-pinned zero-shuffle, and the stats/.rdd probes
+    below are illegal on an unstarted streaming plan (AnalysisException:
+    "must be executed with writeStream.start()")."""
+    if df.isStreaming:
+        return df
+    sc = df.sparkSession.sparkContext
+    target = sc.defaultParallelism
+    size = _plan_bytes(df._jdf.queryExecution().optimizedPlan())
+    if size is not None and size < size_threshold:
+        if rows_per_task is not None:
+            est_rows = max(1, size // 24)
+            target = min(target, -(-est_rows // rows_per_task))
+            if target <= 1:
+                return df
+        return df.repartition(target)
+    if df.rdd.getNumPartitions() < max(2, target // 2):
+        return df.repartition(target)
+    return df
+
+
+def _plan_bytes(plan) -> int | None:
+    """The optimizer's size estimate of a logical plan node, in bytes (no
+    Spark job); None when the node has no estimate."""
+    try:
+        return int(plan.stats().sizeInBytes())
+    except Exception:
+        return None
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """True when ``df``'s inputs are small enough for one task: the summed
+    size estimates of the optimized plan's LEAF relations are at most the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` (≤ 0: never).  The
+    leaves, not ``df`` itself: a self-join's size-only estimate multiplies
+    its sides (the LSH pair list of 25 rows estimates at ~10¹⁷ bytes),
+    while the data a single task would read is bounded by the scans.
+    Leaves without an estimate (an RDD from a Python list) do not fit."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit <= 0:
+        return False
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        size = _plan_bytes(leaves.apply(i))
+        if size is None:
+            return False
+        total += size
+    return total <= limit

@@ -19,15 +19,12 @@ bytes, not rows — see operators/multimodal.py's sizing notes.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import io
 import struct
 import wave
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -559,37 +556,22 @@ def decode_waveforms(media_df: DataFrame, id_col: str = "doc_id",
     ``kafka_skip_broken_messages`` policy applied to media): a corrupt or
     unsupported blob becomes one row with ``err`` set, stats NULL, and
     the job survives."""
+
+    def _stats(blob: bytes) -> dict:
+        try:
+            d = decode_audio(blob)
+        except (ValueError, NotImplementedError) as e:
+            if strict:
+                raise
+            return {**dict.fromkeys(AUDIO_DECODE_SCHEMA.names), "err": str(e)}
+        s = d["samples"]
+        return {"format": d["format"], "channels": d["channels"],
+                "sample_rate": d["sample_rate"], "n_frames": d["n_frames"],
+                "s_sum": sum(s) if s else None, "s_min": min(s) if s else None,
+                "s_max": max(s) if s else None, "err": None}
+
     schema = AUDIO_DECODE_SCHEMA if strict else AUDIO_DEADLETTER_SCHEMA
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    d = decode_audio(bytes(blob))
-                except (ValueError, NotImplementedError) as e:
-                    if strict:
-                        raise
-                    rows["doc_id"].append(doc_id)
-                    for k in ("format", "channels", "sample_rate",
-                              "n_frames", "s_sum", "s_min", "s_max"):
-                        rows[k].append(None)
-                    rows["err"].append(str(e))
-                    continue
-                s = d["samples"]
-                rows["doc_id"].append(doc_id)
-                rows["format"].append(d["format"])
-                rows["channels"].append(d["channels"])
-                rows["sample_rate"].append(d["sample_rate"])
-                rows["n_frames"].append(d["n_frames"])
-                rows["s_sum"].append(sum(s) if s else None)
-                rows["s_min"].append(min(s) if s else None)
-                rows["s_max"].append(max(s) if s else None)
-                if not strict:
-                    rows["err"].append(None)
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _decode, schema=schema)
+    return map_blobs(media_df, _stats, schema, id_col, media_col)
 
 
 AUDIO_ENERGY_SCHEMA = T.StructType([
@@ -617,40 +599,22 @@ def audio_energy_windows(media_df: DataFrame, window_frames: int = 16,
     schema = (AUDIO_ENERGY_SCHEMA if strict else
               T.StructType(AUDIO_ENERGY_SCHEMA.fields + [T.StructField("err", T.StringType())]))
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    d = decode_audio(bytes(blob))
-                except (ValueError, NotImplementedError) as e:
-                    if strict:
-                        raise
-                    rows["doc_id"].append(doc_id)
-                    for k in ("window_index", "n_frames", "sq_sum", "s_peak"):
-                        rows[k].append(None)
-                    rows["err"].append(str(e))
-                    continue
-                ch, samples = d["channels"], d["samples"]
-                step = window_frames * ch
-                for wi in range(0, len(samples), step):  # empty → zero rows
-                    win = samples[wi:wi + step]
-                    rows["doc_id"].append(doc_id)
-                    rows["window_index"].append(wi // step)
-                    rows["n_frames"].append(len(win) // ch)
-                    rows["sq_sum"].append(sum(s * s for s in win))
-                    rows["s_peak"].append(max(abs(s) for s in win))
-                    if not strict:
-                        rows["err"].append(None)
-            yield pd.DataFrame(rows)
+    def _windows(blob: bytes) -> list[dict]:
+        try:
+            d = decode_audio(blob)
+        except (ValueError, NotImplementedError) as e:
+            if strict:
+                raise
+            return [{**dict.fromkeys(schema.names), "err": str(e)}]
+        ch, samples = d["channels"], d["samples"]
+        step = window_frames * ch
+        wins = [samples[wi:wi + step] for wi in range(0, len(samples), step)]  # empty → zero rows
+        return [{"window_index": i, "n_frames": len(win) // ch,
+                 "sq_sum": sum(s * s for s in win),
+                 "s_peak": max(abs(s) for s in win), "err": None}
+                for i, win in enumerate(wins)]
 
-    return pipe_map(media_df, _extract, schema=schema)
-
-
-WAV_BLOB_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("media", T.BinaryType()),
-])
+    return map_blobs(media_df, _windows, schema, id_col, media_col, explode=True)
 
 
 def synth_g711_waveforms(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -666,19 +630,11 @@ def synth_g711_waveforms(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame
     value-checked end to end (the audioop cross-check in
     tests/test_audio.py independently pins the tables)."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                codes = bytes((5 * d + 7 * i) % 256 for i in range(40 + d % 17))
-                ids.append(d)
-                blobs.append(
-                    wav_encode_g711(codes, "mulaw" if d % 2 == 0 else "alaw")
-                )
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        codes = bytes((5 * d + 7 * i) % 256 for i in range(40 + d % 17))
+        return wav_encode_g711(codes, "mulaw" if d % 2 == 0 else "alaw")
 
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=WAV_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def synth_aiff_waveforms(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -695,19 +651,13 @@ def synth_aiff_waveforms(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame
     value-checking the FORM/COMM/SSND walk, the big-endian frame unpack,
     and the extended-float rate decode end to end."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n, ch = 18 + d % 41, 2 if d % 4 == 0 else 1
-                rate = 11025 * (1 + d % 3)
-                samples = [((d * 37 + j * 11) % 1999) - 999 for j in range(n * ch)]
-                ids.append(d)
-                blobs.append(aiff_encode(samples, rate, ch))
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        n, ch = 18 + d % 41, 2 if d % 4 == 0 else 1
+        rate = 11025 * (1 + d % 3)
+        samples = [((d * 37 + j * 11) % 1999) - 999 for j in range(n * ch)]
+        return aiff_encode(samples, rate, ch)
 
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=WAV_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def synth_waveforms(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -721,19 +671,13 @@ def synth_waveforms(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     — closed forms DuckDB reproduces with a ``range()`` cross join, giving
     the decode path a first-principles oracle."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n, ch = 20 + d % 50, 2 if d % 3 == 0 else 1
-                rate = 8000 + (d % 4) * 4000
-                samples = [((d * 31 + j * 7) % 2003) - 1001 for j in range(n * ch)]
-                ids.append(d)
-                blobs.append(wav_encode(samples, rate, ch))
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        n, ch = 20 + d % 50, 2 if d % 3 == 0 else 1
+        rate = 8000 + (d % 4) * 4000
+        samples = [((d * 31 + j * 7) % 2003) - 1001 for j in range(n * ch)]
+        return wav_encode(samples, rate, ch)
 
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=WAV_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 # ---------------------------------------------------------------- MP3 meta
@@ -975,21 +919,11 @@ def mp3_metadata(media_df: DataFrame, id_col: str = "doc_id",
     raise loudly (wrap with a dead-letter catch upstream if the
     transport is at-least-once)."""
 
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in MP3_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = mp3_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                rows["title"].append(m["tags"].get("TIT2"))
-                rows["artist"].append(m["tags"].get("TPE1"))
-                for k in ("version", "sample_rate", "mode", "n_frames",
-                          "bitrate_mode", "kbps_min", "kbps_max",
-                          "duration_ms", "xing_frames"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
+    def _row(blob: bytes) -> dict:
+        m = mp3_meta_walk(blob)
+        return {**m, "title": m["tags"].get("TIT2"), "artist": m["tags"].get("TPE1")}
 
-    return pipe_map(media_df, _walk, schema=MP3_META_SCHEMA)
+    return map_blobs(media_df, _row, MP3_META_SCHEMA, id_col, media_col)
 
 
 def synth_mp3_streams(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -997,21 +931,11 @@ def synth_mp3_streams(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     n_frames = 5 + d%7, sample rate index d%3, mono when d odd, VBR
     (alternating 128/192 + Xing) when d ≡ 1 mod 4, ID3v2.3 tags
     TIT2 = 'track d' / TPE1 = 'artist d%5'."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                ids.append(d)
-                blobs.append(mp3_encode_meta_fixture(
-                    n_frames=5 + d % 7, sr_index=d % 3, mono=bool(d % 2),
-                    vbr=(d % 4 == 1),
-                    tags={"TIT2": f"track {d}", "TPE1": f"artist {d % 5}"},
-                ))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
-
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, lambda d: mp3_encode_meta_fixture(
+        n_frames=5 + d % 7, sr_index=d % 3, mono=bool(d % 2),
+        vbr=(d % 4 == 1),
+        tags={"TIT2": f"track {d}", "TPE1": f"artist {d % 5}"},
+    ), id_col)
 
 
 # ---------------------------------------------------------------- FLAC meta
@@ -1161,20 +1085,11 @@ def flac_metadata(media_df: DataFrame, id_col: str = "doc_id",
     """``flac_meta_walk`` over a binary column via ``mapInPandas`` —
     no shuffle, one typed row per blob (the mp3_metadata twin)."""
 
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in FLAC_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = flac_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                rows["title"].append(m["tags"].get("TITLE"))
-                rows["artist"].append(m["tags"].get("ARTIST"))
-                for k in ("sample_rate", "channels", "bits_per_sample",
-                          "total_samples", "duration_ms", "md5"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
+    def _row(blob: bytes) -> dict:
+        m = flac_meta_walk(blob)
+        return {**m, "title": m["tags"].get("TITLE"), "artist": m["tags"].get("ARTIST")}
 
-    return pipe_map(media_df, _walk, schema=FLAC_META_SCHEMA)
+    return map_blobs(media_df, _row, FLAC_META_SCHEMA, id_col, media_col)
 
 
 def synth_flac_streams(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1182,22 +1097,12 @@ def synth_flac_streams(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     [44100, 48000, 96000][d%3], channels 1 + d%2, total samples
     1000·(1 + d%11); every 3rd doc carries VORBIS_COMMENT tags
     (TITLE='flac d', ARTIST='artist d%5'), the rest STREAMINFO only."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                ids.append(d)
-                blobs.append(flac_encode_meta_fixture(
-                    sample_rate=[44100, 48000, 96000][d % 3],
-                    channels=1 + d % 2,
-                    total_samples=1000 * (1 + d % 11),
-                    tags=(
-                        {"TITLE": f"flac {d}", "ARTIST": f"artist {d % 5}"}
-                        if d % 3 == 0 else None
-                    ),
-                ))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
-
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, lambda d: flac_encode_meta_fixture(
+        sample_rate=[44100, 48000, 96000][d % 3],
+        channels=1 + d % 2,
+        total_samples=1000 * (1 + d % 11),
+        tags=(
+            {"TITLE": f"flac {d}", "ARTIST": f"artist {d % 5}"}
+            if d % 3 == 0 else None
+        ),
+    ), id_col)

@@ -31,14 +31,11 @@ LLM-training-pipeline extension surface.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -309,39 +306,16 @@ ZSTD_META_SCHEMA = T.StructType([
 
 def gzip_metadata(media_df: DataFrame, id_col: str = "doc_id",
                   media_col: str = "media") -> DataFrame:
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in GZIP_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = gzip_members_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                rows["n_members"].append(m["n_members"])
-                rows["first_name"].append(
-                    m["names"][0] if m["names"] else None)
-                rows["mtime_first"].append(m["mtime_first"])
-                rows["os_first"].append(m["os_first"])
-                rows["total_uncompressed"].append(m["total_uncompressed"])
-                rows["total_compressed"].append(m["total_compressed"])
-            yield pd.DataFrame(rows)
+    def _row(blob: bytes) -> dict:
+        m = gzip_members_walk(blob)
+        return {**m, "first_name": m["names"][0] if m["names"] else None}
 
-    return pipe_map(media_df, _walk, schema=GZIP_META_SCHEMA)
+    return map_blobs(media_df, _row, GZIP_META_SCHEMA, id_col, media_col)
 
 
 def zstd_metadata(media_df: DataFrame, id_col: str = "doc_id",
                   media_col: str = "media") -> DataFrame:
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in ZSTD_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = zstd_frames_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("n_frames", "n_skippable", "content_size",
-                          "window_log", "dict_id", "has_checksum",
-                          "n_blocks"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _walk, schema=ZSTD_META_SCHEMA)
+    return map_blobs(media_df, zstd_frames_walk, ZSTD_META_SCHEMA, id_col, media_col)
 
 
 def synth_gzip_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -350,25 +324,19 @@ def synth_gzip_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``'doc {d} member {m} ' × (4 + (d+m)%5)``; FNAME 'm{m}.txt' on even
     members, mtime 1700000000 + d, OS byte 3 (unix)."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                out = bytearray()
-                for m in range(1 + d % 3):
-                    data = (f"doc {d} member {m} "
-                            * (4 + (d + m) % 5)).encode()
-                    out.extend(gzip_encode_member(
-                        data,
-                        name=f"m{m}.txt" if m % 2 == 0 else None,
-                        mtime=1_700_000_000 + d,
-                    ))
-                ids.append(d)
-                blobs.append(bytes(out))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        out = bytearray()
+        for m in range(1 + d % 3):
+            data = (f"doc {d} member {m} "
+                    * (4 + (d + m) % 5)).encode()
+            out.extend(gzip_encode_member(
+                data,
+                name=f"m{m}.txt" if m % 2 == 0 else None,
+                mtime=1_700_000_000 + d,
+            ))
+        return bytes(out)
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=1024), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=1024)
 
 
 def synth_zstd_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -378,25 +346,19 @@ def synth_zstd_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     declared except on d%5==0), dict id 100 + d%50 on d%3==0,
     checksum on odd docs, 64-byte raw blocks."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                out = bytearray()
-                if d % 4 == 0:
-                    out.extend(zstd_skippable_frame(
-                        f"meta {d}".encode(), nibble=d % 16))
-                for f in range(1 + d % 2):
-                    data = (f"doc {d} frame {f} " * (8 + d % 7)).encode()
-                    out.extend(zstd_encode_raw_frame(
-                        data,
-                        with_size=d % 5 != 0,
-                        checksum=d % 2 == 1,
-                        dict_id=(100 + d % 50) if d % 3 == 0 else 0,
-                    ))
-                ids.append(d)
-                blobs.append(bytes(out))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        out = bytearray()
+        if d % 4 == 0:
+            out.extend(zstd_skippable_frame(
+                f"meta {d}".encode(), nibble=d % 16))
+        for f in range(1 + d % 2):
+            data = (f"doc {d} frame {f} " * (8 + d % 7)).encode()
+            out.extend(zstd_encode_raw_frame(
+                data,
+                with_size=d % 5 != 0,
+                checksum=d % 2 == 1,
+                dict_id=(100 + d % 50) if d % 3 == 0 else 0,
+            ))
+        return bytes(out)
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=1024), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=1024)

@@ -31,15 +31,14 @@ writer, not a self round-trip.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
+import io
 import re
 import struct
+import zipfile
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -257,24 +256,15 @@ def office_metadata(media_df: DataFrame, id_col: str = "doc_id",
     typed row per container (``payload_bytes`` = Σ uncompressed size of
     the ``f*.txt`` payload members, CRC-verified)."""
 
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in OFFICE_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = office_meta(bytes(blob))
-                payload = sum(
-                    e["usize"] for e in m["members"]
-                    if e["name"].startswith("f") and e["name"].endswith(".txt")
-                )
-                rows["doc_id"].append(int(doc_id))
-                rows["kind"].append(m["format"])
-                rows["n_members"].append(m["n_members"])
-                rows["payload_bytes"].append(payload)
-                rows["title"].append(m["title"])
-                rows["creator"].append(m["creator"])
-            yield pd.DataFrame(rows)
+    def _row(blob: bytes) -> dict:
+        m = office_meta(blob)
+        payload = sum(
+            e["usize"] for e in m["members"]
+            if e["name"].startswith("f") and e["name"].endswith(".txt")
+        )
+        return {**m, "kind": m["format"], "payload_bytes": payload}
 
-    return pipe_map(media_df, _walk, schema=OFFICE_META_SCHEMA)
+    return map_blobs(media_df, _row, OFFICE_META_SCHEMA, id_col, media_col)
 
 
 def synth_office_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -284,49 +274,40 @@ def synth_office_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     members of exactly 10 + (d+j)%5 bytes each, docProps/core.xml
     title 'off d' / creator 'user d%5' on the OPC kinds."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import zipfile
+    def _encode(d: int) -> bytes:
+        kind = d % 4
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as zf:
+            def put(name, data, method=zipfile.ZIP_DEFLATED):
+                zi = zipfile.ZipInfo(name, (2026, 1, 1, 0, 0, 0))
+                zi.compress_type = method
+                zf.writestr(zi, data)
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                kind = d % 4
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w") as zf:
-                    def put(name, data, method=zipfile.ZIP_DEFLATED):
-                        zi = zipfile.ZipInfo(name, (2026, 1, 1, 0, 0, 0))
-                        zi.compress_type = method
-                        zf.writestr(zi, data)
+            core = (
+                "<cp:coreProperties xmlns:dc='x'>"
+                f"<dc:title>off {d}</dc:title>"
+                f"<dc:creator>user {d % 5}</dc:creator>"
+                "</cp:coreProperties>"
+            )
+            if kind == 0:
+                put("[Content_Types].xml", "<Types/>")
+                put("word/document.xml", "<w:document/>")
+                put("docProps/core.xml", core)
+            elif kind == 1:
+                put("[Content_Types].xml", "<Types/>")
+                put("xl/workbook.xml", "<workbook/>")
+                put("docProps/core.xml", core)
+            elif kind == 2:
+                put("mimetype", "application/epub+zip",
+                    zipfile.ZIP_STORED)
+                put("META-INF/container.xml", "<container/>")
+                put("OEBPS/content.opf",
+                    "<package><metadata>"
+                    f"<dc:title>off {d}</dc:title>"
+                    f"<dc:creator>user {d % 5}</dc:creator>"
+                    "</metadata></package>")
+            for j in range(1 + d % 3):
+                put(f"f{j}.txt", "x" * (10 + (d + j) % 5))
+        return buf.getvalue()
 
-                    core = (
-                        "<cp:coreProperties xmlns:dc='x'>"
-                        f"<dc:title>off {d}</dc:title>"
-                        f"<dc:creator>user {d % 5}</dc:creator>"
-                        "</cp:coreProperties>"
-                    )
-                    if kind == 0:
-                        put("[Content_Types].xml", "<Types/>")
-                        put("word/document.xml", "<w:document/>")
-                        put("docProps/core.xml", core)
-                    elif kind == 1:
-                        put("[Content_Types].xml", "<Types/>")
-                        put("xl/workbook.xml", "<workbook/>")
-                        put("docProps/core.xml", core)
-                    elif kind == 2:
-                        put("mimetype", "application/epub+zip",
-                            zipfile.ZIP_STORED)
-                        put("META-INF/container.xml", "<container/>")
-                        put("OEBPS/content.opf",
-                            "<package><metadata>"
-                            f"<dc:title>off {d}</dc:title>"
-                            f"<dc:creator>user {d % 5}</dc:creator>"
-                            "</metadata></package>")
-                    for j in range(1 + d % 3):
-                        put(f"f{j}.txt", "x" * (10 + (d + j) % 5))
-                ids.append(d)
-                blobs.append(buf.getvalue())
-            yield pd.DataFrame({id_col: ids, "media": blobs})
-
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=256), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=256)

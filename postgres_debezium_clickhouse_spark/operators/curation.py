@@ -438,7 +438,8 @@ def contamination_check(
     map-side hash-join over the exploded training shingles followed by one
     count aggregation on the doc key — no shuffle of corpus text, no
     all-pairs comparison."""
-    from .dedup import spread_for_compute, with_shingles
+    from ._pipe import spread_for_compute
+    from .dedup import with_shingles
 
     if normalize:
         train_docs = train_docs.withColumn(text_col, decontam_normalize(text_col))

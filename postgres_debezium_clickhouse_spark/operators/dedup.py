@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._pipe import _fits_one_task, spread_for_compute
+
 #: LSH parameters: 4 bands × 2 rows = 8 MinHash functions.  For the target
 #: near-dup threshold j≈0.8 the detect probability is 1-(1-j²)⁴ ≈ 0.996.
 N_BANDS = 4
@@ -34,97 +36,6 @@ ROWS_PER_BAND = 2
 #: engine; Spark's xxhash64/hash are not portable to DuckDB).
 SIMHASH_BITS = 60
 
-
-def spread_for_compute(df: DataFrame, size_threshold: int = 4 << 30,
-                       rows_per_task: int | None = None) -> DataFrame:
-    """Fan a small scan out to the cluster's parallelism before a
-    CPU-bound stage.
-
-    A small parquet file scans as 1-2 tasks, and AQE's byte-based
-    coalescing keeps it that narrow — correct for I/O, wrong for the
-    md5-per-shingle compute that follows (measured 1 task doing 100% of
-    the hashing on local[32]).
-
-    The partition COUNT alone is not a safe guard: Spark splits a parquet
-    file into byte ranges, but a row group belongs to the split holding
-    its midpoint — a file with one huge row group scans as N splits of
-    which N−1 are EMPTY, so the count looks parallel while one task does
-    all the work (caught by the r12 sf1 scaling decade: the 40-gram build
-    collapsed to 1.6 effective cores, 27× wall on 10× data).  So inputs
-    whose optimizer-estimated size is under ``size_threshold`` are
-    repartitioned unconditionally: shuffling ≤4 GB costs seconds, while a
-    hollow-split parallelism collapse on a per-char CPU stage costs the
-    core count.  Above the threshold the scan's partitioning is trusted —
-    at 100 TB real writers cap row groups (~128 MB), so splits are
-    genuinely parallel and a full-corpus shuffle must not be added.
-
-    ``rows_per_task`` (r19-opt, VERDICT r18 item 6) — the rows-aware
-    target for LIGHT per-row work: tiny-blob walks (exif/subtitles/gzip
-    class, measured ≲0.05 ms of Python per blob) pay more in per-task
-    dispatch than they win in parallelism when every task holds only a
-    handful of rows (measured: a 32-task mapInPandas stage floors at
-    ~0.25 s on local[32] where an 8-task one floors at ~0.06 s).
-    Callers that know their per-row cost pass the row count that
-    amortizes one task's dispatch; the target becomes
-    ``clamp(est_rows / rows_per_task, 1, defaultParallelism)`` — still
-    scale-adaptive (10× the rows ⇒ 10× the tasks until the core cap),
-    still hollow-split-safe (the repartition fires whenever target > 1;
-    at target == 1 the work is one task's either way).  Row count is
-    estimated from the optimizer's size estimate at ~24 bytes/row — the
-    single-key seed projections this is used for all estimate 22-25 B/row
-    (measured across the parquet fixtures); the estimate only steers task
-    COUNT, so a miss costs overhead, never correctness.
-
-    Streaming frames pass through untouched: micro-batch partitioning is
-    the source's (maxFilesPerTrigger-bounded, already parallel), the
-    stream gates are plan-pinned zero-shuffle, and the stats/.rdd probes
-    below are illegal on an unstarted streaming plan (AnalysisException:
-    "must be executed with writeStream.start()")."""
-    if df.isStreaming:
-        return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    size = _plan_bytes(df._jdf.queryExecution().optimizedPlan())
-    if size is not None and size < size_threshold:
-        if rows_per_task is not None:
-            est_rows = max(1, size // 24)
-            target = min(target, -(-est_rows // rows_per_task))
-            if target <= 1:
-                return df
-        return df.repartition(target)
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        return df.repartition(target)
-    return df
-
-
-def _plan_bytes(plan) -> int | None:
-    """The optimizer's size estimate of a logical plan node, in bytes (no
-    Spark job); None when the node has no estimate."""
-    try:
-        return int(plan.stats().sizeInBytes())
-    except Exception:
-        return None
-
-
-def _fits_one_task(df: DataFrame) -> bool:
-    """True when ``df``'s inputs are small enough for one task: the summed
-    size estimates of the optimized plan's LEAF relations are at most the
-    session's ``spark.sql.autoBroadcastJoinThreshold`` (≤ 0: never).  The
-    leaves, not ``df`` itself: a self-join's size-only estimate multiplies
-    its sides (the LSH pair list of 25 rows estimates at ~10¹⁷ bytes),
-    while the data a single task would read is bounded by the scans.
-    Leaves without an estimate (an RDD from a Python list) do not fit."""
-    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    if limit <= 0:
-        return False
-    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-    total = 0
-    for i in range(leaves.size()):
-        size = _plan_bytes(leaves.apply(i))
-        if size is None:
-            return False
-        total += size
-    return total <= limit
 
 
 def normalize_text(col: str = "text") -> F.Column:

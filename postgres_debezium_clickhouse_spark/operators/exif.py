@@ -30,13 +30,10 @@ LLM-training-pipeline extension surface.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -407,21 +404,7 @@ def exif_metadata(media_df: DataFrame, id_col: str = "doc_id",
                   media_col: str = "media") -> DataFrame:
     """``exif_walk`` over a binary column via ``mapInPandas`` — no
     shuffle, one typed row per blob."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in EXIF_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = exif_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("container", "has_exif", "make", "model",
-                          "orientation", "datetime_original", "iso",
-                          "f_number_x100", "exposure_us", "focal_mm_x10",
-                          "pixel_x", "pixel_y", "gps_present"):
-                    rows[k].append(m.get(k))
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _walk, schema=EXIF_META_SCHEMA)
+    return map_blobs(media_df, exif_walk, EXIF_META_SCHEMA, id_col, media_col)
 
 
 def synth_exif_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -438,31 +421,25 @@ def synth_exif_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     - GPS IFD present when d%3==0
     """
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                container = ["jpeg", "tiff", "webp", "png"][d % 4]
-                no_exif = d % 7 == 0 and container != "tiff"
-                tiff = None
-                if not no_exif:
-                    tiff = exif_encode_tiff(
-                        make=f"maker {d % 3}",
-                        model=f"cam {d % 5}",
-                        orientation=1 + d % 8,
-                        iso=100 * (1 + d % 32),
-                        f_number=(14 + d % 9, 5),
-                        exposure=(1, 25 * (1 + d % 6)),
-                        focal=(35 + d % 11, 2),
-                        pixel_xy=(64 * (1 + d % 5), 48 * (1 + d % 4)),
-                        dt_original=(f"2021:0{1 + d % 9}:15 "
-                                     f"12:00:0{d % 10}"),
-                        gps=d % 3 == 0,
-                        little_endian=d % 2 == 0,
-                    )
-                ids.append(d)
-                blobs.append(exif_wrap(container, tiff))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        container = ["jpeg", "tiff", "webp", "png"][d % 4]
+        no_exif = d % 7 == 0 and container != "tiff"
+        tiff = None
+        if not no_exif:
+            tiff = exif_encode_tiff(
+                make=f"maker {d % 3}",
+                model=f"cam {d % 5}",
+                orientation=1 + d % 8,
+                iso=100 * (1 + d % 32),
+                f_number=(14 + d % 9, 5),
+                exposure=(1, 25 * (1 + d % 6)),
+                focal=(35 + d % 11, 2),
+                pixel_xy=(64 * (1 + d % 5), 48 * (1 + d % 4)),
+                dt_original=(f"2021:0{1 + d % 9}:15 "
+                             f"12:00:0{d % 10}"),
+                gps=d % 3 == 0,
+                little_endian=d % 2 == 0,
+            )
+        return exif_wrap(container, tiff)
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=1024), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=1024)

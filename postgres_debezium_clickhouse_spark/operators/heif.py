@@ -32,13 +32,10 @@ LLM-training-pipeline extension surface.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -321,20 +318,7 @@ def heif_metadata(media_df: DataFrame, id_col: str = "doc_id",
                   media_col: str = "media") -> DataFrame:
     """``heif_meta_walk`` over a binary column via ``mapInPandas`` —
     no shuffle, one typed row per blob (the mp4/webp metadata twin)."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in HEIF_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = heif_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("brand", "primary_type", "width", "height",
-                          "bit_depth", "n_channels", "n_items",
-                          "has_alpha", "n_grid_tiles", "has_exif"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _walk, schema=HEIF_META_SCHEMA)
+    return map_blobs(media_df, heif_meta_walk, HEIF_META_SCHEMA, id_col, media_col)
 
 
 def synth_heif_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -346,23 +330,13 @@ def synth_heif_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     - alpha aux item when d%3=0; Exif item when d%4=0
     - every 7th doc is a grid image with 2 + d%3 tiles
     """
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                ids.append(d)
-                blobs.append(heif_encode_fixture(
-                    brand="avif" if d % 2 == 0 else "heic",
-                    width=64 * (1 + d % 5),
-                    height=48 * (1 + d % 4),
-                    bit_depth=[8, 10, 12][d % 3],
-                    n_channels=3,
-                    alpha=d % 3 == 0,
-                    grid_tiles=(2 + d % 3) if d % 7 == 0 else 0,
-                    exif=d % 4 == 0,
-                ))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
-
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=1024), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, lambda d: heif_encode_fixture(
+        brand="avif" if d % 2 == 0 else "heic",
+        width=64 * (1 + d % 5),
+        height=48 * (1 + d % 4),
+        bit_depth=[8, 10, 12][d % 3],
+        n_channels=3,
+        alpha=d % 3 == 0,
+        grid_tiles=(2 + d % 3) if d % 7 == 0 else 0,
+        exif=d % 4 == 0,
+    ), id_col, rows_per_task=1024)

@@ -34,8 +34,7 @@ scalar wire columns.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, pipe_map, synth_blobs
 
 import struct
 import zlib
@@ -1101,46 +1100,28 @@ def decode_images(media_df: DataFrame, id_col: str = "doc_id",
     survives — every decoder failure is normalized to ValueError (corrupt)
     or NotImplementedError (no codec), so the catch here is exhaustive by
     the decoders' documented error contract."""
+
+    def _stats(blob: bytes) -> dict:
+        try:
+            d = decode_image(blob)
+        except (ValueError, NotImplementedError) as e:
+            if strict:
+                raise
+            return {**dict.fromkeys(DECODE_SCHEMA.names), "err": str(e)}
+        row = {k: d[k] for k in ("format", "width", "height", "channels")}
+        px = d["pixels"]
+        if px is None:
+            row.update(dict.fromkeys(("sum_r", "sum_g", "sum_b", "min_px", "max_px")),
+                       n_pixels=d["width"] * d["height"])
+        else:
+            ch = d["channels"]
+            row.update({k: sum(px[c::ch]) if c < ch else None
+                        for c, k in enumerate(("sum_r", "sum_g", "sum_b"))},
+                       n_pixels=len(px) // ch, min_px=min(px), max_px=max(px))
+        return {**row, "err": None}
+
     schema = DECODE_SCHEMA if strict else DECODE_DEADLETTER_SCHEMA
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in schema.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    d = decode_image(bytes(blob))
-                except (ValueError, NotImplementedError) as e:
-                    if strict:
-                        raise
-                    rows["doc_id"].append(doc_id)
-                    for k in ("format", "width", "height", "channels",
-                              "n_pixels", "sum_r", "sum_g", "sum_b",
-                              "min_px", "max_px"):
-                        rows[k].append(None)
-                    rows["err"].append(str(e))
-                    continue
-                rows["doc_id"].append(doc_id)
-                rows["format"].append(d["format"])
-                rows["width"].append(d["width"])
-                rows["height"].append(d["height"])
-                rows["channels"].append(d["channels"])
-                px = d["pixels"]
-                if px is None:
-                    rows["n_pixels"].append(d["width"] * d["height"])
-                    for k in ("sum_r", "sum_g", "sum_b", "min_px", "max_px"):
-                        rows[k].append(None)
-                else:
-                    ch = d["channels"]
-                    rows["n_pixels"].append(len(px) // ch)
-                    for c, k in enumerate(("sum_r", "sum_g", "sum_b")):
-                        rows[k].append(sum(px[c::ch]) if c < ch else None)
-                    rows["min_px"].append(min(px))
-                    rows["max_px"].append(max(px))
-                if not strict:
-                    rows["err"].append(None)
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _decode, schema=schema)
+    return map_blobs(media_df, _stats, schema, id_col, media_col)
 
 
 RESIZE_SCHEMA = T.StructType([
@@ -1189,49 +1170,26 @@ def resize_images(media_df: DataFrame, width: int, height: int,
     width×height×channels per row regardless of input dims — the
     normalize-for-training shape.  ``strict=False`` adds the dead-letter
     ``err`` column (see DECODE_DEADLETTER_SCHEMA)."""
+
+    def _resize(blob: bytes) -> dict:
+        try:
+            d = decode_image(blob)
+        except (ValueError, NotImplementedError) as e:
+            if strict:
+                raise
+            return {**dict.fromkeys(RESIZE_SCHEMA.names), "err": str(e)}
+        row = {"format": d["format"], "src_w": d["width"], "src_h": d["height"],
+               "width": width, "height": height, "err": None}
+        if d["pixels"] is None:
+            return {**row, **dict.fromkeys(("sum_r", "sum_g", "sum_b"))}
+        ch = d["channels"]
+        px = nn_resize(d["pixels"], d["width"], d["height"], ch, width, height)
+        return {**row, **{k: sum(px[c::ch]) if c < ch else None
+                          for c, k in enumerate(("sum_r", "sum_g", "sum_b"))}}
+
     schema = (RESIZE_SCHEMA if strict else
               T.StructType(RESIZE_SCHEMA.fields + [T.StructField("err", T.StringType())]))
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in schema.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    d = decode_image(bytes(blob))
-                except (ValueError, NotImplementedError) as e:
-                    if strict:
-                        raise
-                    rows["doc_id"].append(doc_id)
-                    for k in ("format", "src_w", "src_h", "width", "height",
-                              "sum_r", "sum_g", "sum_b"):
-                        rows[k].append(None)
-                    rows["err"].append(str(e))
-                    continue
-                rows["doc_id"].append(doc_id)
-                rows["format"].append(d["format"])
-                rows["src_w"].append(d["width"])
-                rows["src_h"].append(d["height"])
-                rows["width"].append(width)
-                rows["height"].append(height)
-                if d["pixels"] is None:
-                    for k in ("sum_r", "sum_g", "sum_b"):
-                        rows[k].append(None)
-                else:
-                    ch = d["channels"]
-                    px = nn_resize(d["pixels"], d["width"], d["height"], ch, width, height)
-                    for c, k in enumerate(("sum_r", "sum_g", "sum_b")):
-                        rows[k].append(sum(px[c::ch]) if c < ch else None)
-                if not strict:
-                    rows["err"].append(None)
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _resize, schema=schema)
-
-
-MEDIA_BLOB_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("media", T.BinaryType()),
-])
+    return map_blobs(media_df, _resize, schema, id_col, media_col)
 
 
 def synth_images(ids_df: DataFrame, id_col: str = "doc_id",
@@ -1259,30 +1217,24 @@ def synth_images(ids_df: DataFrame, id_col: str = "doc_id",
     Both rules and the resulting ``err`` strings are closed-form in
     ``d``, so the oracle checks the dead-letter routing by value."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h = 3 + d % 5, 2 + d % 7
-                if d % 4 == 0:
-                    blob = jpeg_header_bytes(w, h, 3)
-                else:
-                    px = bytes(
-                        (d * 7 + (y * w + x) * 3 + c) % 256
-                        for y in range(h) for x in range(w) for c in range(3)
-                    )
-                    blob = png_encode(w, h, px, 3)
-                if corrupt_every:
-                    if d % corrupt_every == 2:
-                        blob = blob[:20] if blob[:8] == PNG_SIG else blob[:10]
-                    elif d % corrupt_every == 7:
-                        blob = b"\x00corrupt" + blob[:8]
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        w, h = 3 + d % 5, 2 + d % 7
+        if d % 4 == 0:
+            blob = jpeg_header_bytes(w, h, 3)
+        else:
+            px = bytes(
+                (d * 7 + (y * w + x) * 3 + c) % 256
+                for y in range(h) for x in range(w) for c in range(3)
+            )
+            blob = png_encode(w, h, px, 3)
+        if corrupt_every:
+            if d % corrupt_every == 2:
+                blob = blob[:20] if blob[:8] == PNG_SIG else blob[:10]
+            elif d % corrupt_every == 7:
+                blob = b"\x00corrupt" + blob[:8]
+        return blob
 
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=MEDIA_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1352,36 +1304,24 @@ def dhash_images(media_df: DataFrame, id_col: str = "doc_id",
     every other codec gap.  Embarrassingly parallel ``mapInPandas``; the
     output is hash-sized metadata (2 longs/image), so everything
     downstream (banding, pair join) is decoupled from image bytes."""
+
+    def _hash(blob: bytes) -> dict:
+        try:
+            d = decode_image(blob)
+            if d["pixels"] is None:
+                raise NotImplementedError(
+                    "header-only decode has no pixels for dhash"
+                )
+        except (ValueError, NotImplementedError) as e:
+            if strict:
+                raise
+            return {"dhash_hi": None, "dhash_lo": None, "err": str(e)}
+        gray = rgb_to_gray(d["pixels"], d["channels"])
+        hi, lo = dhash_halves(gray, d["width"], d["height"])
+        return {"dhash_hi": hi, "dhash_lo": lo, "err": None}
+
     schema = DHASH_SCHEMA if strict else DHASH_DEADLETTER_SCHEMA
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in schema.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    d = decode_image(bytes(blob))
-                    if d["pixels"] is None:
-                        raise NotImplementedError(
-                            "header-only decode has no pixels for dhash"
-                        )
-                except (ValueError, NotImplementedError) as e:
-                    if strict:
-                        raise
-                    rows["doc_id"].append(doc_id)
-                    rows["dhash_hi"].append(None)
-                    rows["dhash_lo"].append(None)
-                    rows["err"].append(str(e))
-                    continue
-                gray = rgb_to_gray(d["pixels"], d["channels"])
-                hi, lo = dhash_halves(gray, d["width"], d["height"])
-                rows["doc_id"].append(doc_id)
-                rows["dhash_hi"].append(hi)
-                rows["dhash_lo"].append(lo)
-                if not strict:
-                    rows["err"].append(None)
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _hash, schema=schema)
+    return map_blobs(media_df, _hash, schema, id_col, media_col)
 
 
 def dhash_band_keys(hashes: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1490,44 +1430,35 @@ def synth_multiformat_images(ids_df: DataFrame, id_col: str = "doc_id") -> DataF
     Every format is lossless, so ONE DuckDB closed form value-checks
     all four container/codec paths through the same decode_images
     stats."""
+    from .gif import gif_encode
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .gif import gif_encode
+    def _encode(d: int) -> bytes:
+        w, h = 3 + d % 5, 2 + d % 7
+        n = w * h
+        px = bytes(
+            (d * 7 + idx * 3 + c * 5) % 256
+            for idx in range(n) for c in range(3)
+        )
+        kind = d % 4
+        if kind == 0:
+            # every third PNG doc is Adam7-interlaced (r12) — the
+            # pixels are identical by losslessness, so the same
+            # closed form gates the deinterlace path too
+            return png_encode(w, h, px, 3, interlace=(d % 12 == 0) * 1)
+        if kind == 1:
+            npal = 1 << max((n - 1).bit_length(), 1)
+            pal = px + bytes(3 * (npal - n))
+            return gif_encode(w, h, bytes(range(n)), pal)
+        if kind == 2:
+            return bmp_encode(w, h, px)
+        return tiff_encode(
+            w, h, px, 3, big_endian=(d % 8 == 3),
+            rows_per_strip=2,
+            compression=[1, 5, 32773][(d // 4) % 3],
+            predictor=2 if d % 8 == 7 else 1,
+        )
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h = 3 + d % 5, 2 + d % 7
-                n = w * h
-                px = bytes(
-                    (d * 7 + idx * 3 + c * 5) % 256
-                    for idx in range(n) for c in range(3)
-                )
-                kind = d % 4
-                if kind == 0:
-                    # every third PNG doc is Adam7-interlaced (r12) — the
-                    # pixels are identical by losslessness, so the same
-                    # closed form gates the deinterlace path too
-                    blob = png_encode(w, h, px, 3, interlace=(d % 12 == 0) * 1)
-                elif kind == 1:
-                    npal = 1 << max((n - 1).bit_length(), 1)
-                    pal = px + bytes(3 * (npal - n))
-                    blob = gif_encode(w, h, bytes(range(n)), pal)
-                elif kind == 2:
-                    blob = bmp_encode(w, h, px)
-                else:
-                    blob = tiff_encode(
-                        w, h, px, 3, big_endian=(d % 8 == 3),
-                        rows_per_strip=2,
-                        compression=[1, 5, 32773][(d // 4) % 3],
-                        predictor=2 if d % 8 == 7 else 1,
-                    )
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame({id_col: ids, "media": blobs})
-
-    return pipe_map(_spread(ids_df), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def synth_netpbm_images(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1538,27 +1469,21 @@ def synth_netpbm_images(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     closed form.  Every doc carries a header comment so the
     comment-skip path is driver-gated, not just unit-tested."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h = 3 + d % 5, 2 + d % 7
-                n = w * h
-                kind = d % 4
-                ch = 1 if kind < 2 else 3
-                px = bytes(
-                    (d * 7 + idx * 3 + c * 5) % 256
-                    for idx in range(n) for c in range(ch)
-                )
-                blobs.append(pnm_encode(
-                    w, h, px, channels=ch, raw=(kind % 2 == 1),
-                    comment=f"synthetic doc {d}",
-                ))
-                ids.append(d)
-            yield pd.DataFrame({id_col: ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        w, h = 3 + d % 5, 2 + d % 7
+        n = w * h
+        kind = d % 4
+        ch = 1 if kind < 2 else 3
+        px = bytes(
+            (d * 7 + idx * 3 + c * 5) % 256
+            for idx in range(n) for c in range(ch)
+        )
+        return pnm_encode(
+            w, h, px, channels=ch, raw=(kind % 2 == 1),
+            comment=f"synthetic doc {d}",
+        )
 
-    return pipe_map(_spread(ids_df), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def synth_gif_images(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1570,22 +1495,16 @@ def synth_gif_images(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     checks.  GIF is lossless, so the decoded channel sums are
     integer-exact closed forms — the PNG-strength oracle, not JPEG's
     tolerance band."""
+    from .gif import gif_encode
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .gif import gif_encode
+    pal = bytes(c for i in range(256) for c in (i, (i * 7) % 256, (i * 13) % 256))
 
-        pal = bytes(c for i in range(256) for c in (i, (i * 7) % 256, (i * 13) % 256))
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h = 3 + d % 5, 2 + d % 7
-                idx = bytes((5 * d + 11 * i) % 256 for i in range(w * h))
-                ids.append(d)
-                blobs.append(gif_encode(w, h, idx, pal, interlace=(d % 3 == 0)))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        w, h = 3 + d % 5, 2 + d % 7
+        idx = bytes((5 * d + 11 * i) % 256 for i in range(w * h))
+        return gif_encode(w, h, idx, pal, interlace=(d % 3 == 0))
 
-    return pipe_map(_spread(ids_df), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def synth_jpeg_images(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1608,26 +1527,19 @@ def synth_jpeg_images(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     is impossible for a transform codec, hence the verdict pattern; the
     two processes reconstruct identical coefficients, so the band is
     process-independent — tests/test_jpeg.py pins bit-identity)."""
+    from .jpeg import jpeg_encode_baseline, jpeg_encode_progressive
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import jpeg_encode_baseline, jpeg_encode_progressive
+    def _encode(d: int) -> bytes:
+        w, h = 8 + d % 5, 8 + d % 3
+        px = bytes(
+            (d * d * 3 + idx * idx * 7 + idx * d + c * 11) % 256
+            for idx in range(w * h)
+            for c in range(3)
+        )
+        enc = jpeg_encode_progressive if d % 2 else jpeg_encode_baseline
+        return enc(w, h, px, 3)
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 8 + d % 3
-                px = bytes(
-                    (d * d * 3 + idx * idx * 7 + idx * d + c * 11) % 256
-                    for idx in range(w * h)
-                    for c in range(3)
-                )
-                enc = jpeg_encode_progressive if d % 2 else jpeg_encode_baseline
-                ids.append(d)
-                blobs.append(enc(w, h, px, 3))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
-
-    return pipe_map(_spread(ids_df), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def jpeg_roundtrip_check(media_df: DataFrame, id_col: str = "doc_id",
@@ -1701,22 +1613,16 @@ def synth_dhash_images(ids_df: DataFrame, id_col: str = "doc_id",
     in d, so the DuckDB oracle recomputes hashes AND pairs from first
     principles."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h = 8 + d % 5, 8 + d % 3
-                px = bytes(
-                    (d * d * 3 + idx * idx * 7 + idx * d + c * 11
-                     + (perturb if idx == 0 else 0)) % 256
-                    for idx in range(w * h) for c in range(3)
-                )
-                ids.append(d)
-                blobs.append(png_encode(w, h, px, 3))
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        w, h = 8 + d % 5, 8 + d % 3
+        px = bytes(
+            (d * d * 3 + idx * idx * 7 + idx * d + c * 11
+             + (perturb if idx == 0 else 0)) % 256
+            for idx in range(w * h) for c in range(3)
+        )
+        return png_encode(w, h, px, 3)
 
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=MEDIA_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def synth_text_pngs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1728,31 +1634,22 @@ def synth_text_pngs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``résumé <d%13>`` with lang 'en' (UTF-8, non-ASCII on purpose) on
     d % 7 == 0 — all closed-form in ``d`` for the oracle.  Arrow
     mapInPandas, executor-parallel."""
-    from typing import Iterator
 
-    import pandas as pd
+    def _encode(d: int) -> bytes:
+        w, h = 3, 2
+        px = bytes((d * 7 + i) % 256 for i in range(w * h * 3))
+        chunks: list[tuple] = [
+            ("text", "Title", f"doc {d}"),
+            ("text", "Software", "pdc-spark"),
+        ]
+        if d % 5 == 0:
+            chunks.append(("ztxt", "Comment", f"comment {d % 11}"))
+        if d % 7 == 0:
+            chunks.append(
+                ("itxt", "Description", "en", f"résumé {d % 13}"))
+        return png_encode(w, h, px, 3, text_chunks=chunks)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h = 3, 2
-                px = bytes((d * 7 + i) % 256 for i in range(w * h * 3))
-                chunks: list[tuple] = [
-                    ("text", "Title", f"doc {d}"),
-                    ("text", "Software", "pdc-spark"),
-                ]
-                if d % 5 == 0:
-                    chunks.append(("ztxt", "Comment", f"comment {d % 11}"))
-                if d % 7 == 0:
-                    chunks.append(
-                        ("itxt", "Description", "en", f"résumé {d % 13}"))
-                ids.append(d)
-                blobs.append(png_encode(w, h, px, 3, text_chunks=chunks))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
-
-    return pipe_map(_spread(ids_df), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def png_metadata_rows(media_df: DataFrame, id_col: str = "doc_id",
@@ -1761,29 +1658,21 @@ def png_metadata_rows(media_df: DataFrame, id_col: str = "doc_id",
     mapInPandas, map-only): per image the text-chunk count, the
     keywords in file order, and the Title / Comment / Description
     values (NULL when the image carries no such chunk)."""
-    from typing import Iterator
 
-    import pandas as pd
+    def _row(blob: bytes) -> dict:
+        entries = png_text_metadata(blob)
+        by_kw = {kw: val for _, kw, val in entries}
+        return {
+            "n_text": len(entries),
+            "keywords": ",".join(kw for _, kw, _v in entries),
+            "title": by_kw.get("Title"),
+            "comment": by_kw.get("Comment"),
+            "description": by_kw.get("Description"),
+        }
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                entries = png_text_metadata(bytes(blob))
-                by_kw = {kw: val for _, kw, val in entries}
-                rows.append({
-                    id_col: int(doc_id),
-                    "n_text": len(entries),
-                    "keywords": ",".join(kw for _, kw, _v in entries),
-                    "title": by_kw.get("Title"),
-                    "comment": by_kw.get("Comment"),
-                    "description": by_kw.get("Description"),
-                })
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _run,
-        schema=(f"{id_col} long, n_text int, keywords string, "
-                "title string, comment string, description string"),)
+    return map_blobs(media_df, _row,
+        (f"{id_col} long, n_text int, keywords string, "
+         "title string, comment string, description string"), id_col, blob_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1991,38 +1880,27 @@ def synth_exif_jpegs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Every third doc (d%3==0) additionally ships NO APP1 at all —
     has_exif=False is a real case, not a fixture gap.  Arrow
     mapInPandas, executor-parallel."""
-    from typing import Iterator
 
-    import pandas as pd
+    def _encode(d: int) -> bytes:
+        base = jpeg_header_bytes(4 + d % 5, 3 + d % 4, 3)
+        if d % 3 == 0:
+            return base
+        app1 = exif_app1_bytes(
+            make="pdc",
+            model=f"cam {d % 4}",
+            orientation=(d % 8) + 1,
+            datetime_str=(
+                f"2024:03:{(d % 28) + 1:02d} 10:{d % 60:02d}:33"
+            ),
+            datetime_original=(
+                f"2023:12:{(d % 28) + 1:02d} 08:{(d * 7) % 60:02d}:05"
+            ),
+            exposure=(1, ((d % 5) + 1) * 125),
+            big_endian=bool(d % 2),
+        )
+        return base[:2] + app1 + base[2:]
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                base = jpeg_header_bytes(4 + d % 5, 3 + d % 4, 3)
-                if d % 3 == 0:
-                    blob = base
-                else:
-                    app1 = exif_app1_bytes(
-                        make="pdc",
-                        model=f"cam {d % 4}",
-                        orientation=(d % 8) + 1,
-                        datetime_str=(
-                            f"2024:03:{(d % 28) + 1:02d} 10:{d % 60:02d}:33"
-                        ),
-                        datetime_original=(
-                            f"2023:12:{(d % 28) + 1:02d} 08:{(d * 7) % 60:02d}:05"
-                        ),
-                        exposure=(1, ((d % 5) + 1) * 125),
-                        big_endian=bool(d % 2),
-                    )
-                    blob = base[:2] + app1 + base[2:]
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame({id_col: ids, "media": blobs})
-
-    return pipe_map(_spread(ids_df), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def jpeg_exif_rows(media_df: DataFrame, id_col: str = "doc_id",
@@ -2030,21 +1908,8 @@ def jpeg_exif_rows(media_df: DataFrame, id_col: str = "doc_id",
     """r14 — run ``jpeg_exif_metadata`` over a blob column (Arrow
     mapInPandas, map-only — the multimodal-column shape: opaque binary
     in, typed metadata out)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                m = jpeg_exif_metadata(bytes(blob))
-                m[id_col] = int(doc_id)
-                rows.append(m)
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _run,
-        schema=(f"{id_col} long, has_exif boolean, byte_order string, "
-                "n_ifd0 int, orientation int, make string, model string, "
-                "datetime string, datetime_original string, "
-                "exposure_num bigint, exposure_den bigint, has_gps boolean"),)
+    return map_blobs(media_df, jpeg_exif_metadata,
+        (f"{id_col} long, has_exif boolean, byte_order string, "
+         "n_ifd0 int, orientation int, make string, model string, "
+         "datetime string, datetime_original string, "
+         "exposure_num bigint, exposure_den bigint, has_gps boolean"), id_col, blob_col)

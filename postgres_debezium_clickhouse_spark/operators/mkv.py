@@ -32,13 +32,10 @@ Scale: per-blob byte-bounded walk in ``mapInPandas`` — no shuffle.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -299,26 +296,7 @@ def mkv_metadata(media_df: DataFrame, id_col: str = "doc_id",
                  media_col: str = "media") -> DataFrame:
     """``mkv_meta_walk`` over a binary column via ``mapInPandas`` — one
     typed row per blob, no shuffle (the mp4/pdf walk shape)."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in MKV_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = mkv_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("doctype", "timescale_ns", "duration_ms",
-                          "n_tracks", "video_codec", "audio_codec",
-                          "width", "height"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _walk, schema=MKV_META_SCHEMA)
-
-
-MKV_BLOB_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("media", T.BinaryType()),
-])
+    return map_blobs(media_df, mkv_meta_walk, MKV_META_SCHEMA, id_col, media_col)
 
 
 def synth_mkv_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -332,23 +310,17 @@ def synth_mkv_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         audio track (A_OPUS) present iff d%3==0  →  n_tracks 2 else 1
     """
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                ts = 1_000_000 if d % 3 else 500_000
-                dur_ms = 400 * (1 + d % 6)
-                blobs.append(mkv_encode_meta_fixture(
-                    doctype="webm" if d % 2 == 0 else "matroska",
-                    width=64 * (1 + d % 5),
-                    height=36 * (1 + d % 4),
-                    duration_ticks=dur_ms * 1_000_000 / ts,
-                    timescale_ns=ts,
-                    video_codec="V_VP9" if d % 2 == 0 else "V_AV1",
-                    audio_codec="A_OPUS" if d % 3 == 0 else None,
-                ))
-                ids.append(d)
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        ts = 1_000_000 if d % 3 else 500_000
+        dur_ms = 400 * (1 + d % 6)
+        return mkv_encode_meta_fixture(
+            doctype="webm" if d % 2 == 0 else "matroska",
+            width=64 * (1 + d % 5),
+            height=36 * (1 + d % 4),
+            duration_ticks=dur_ms * 1_000_000 / ts,
+            timescale_ns=ts,
+            video_codec="V_VP9" if d % 2 == 0 else "V_AV1",
+            audio_codec="A_OPUS" if d % 3 == 0 else None,
+        )
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=256), _synth, schema=MKV_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=256)

@@ -40,13 +40,10 @@ is part of the LLM-training-data extension surface the brief asks for.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -526,26 +523,7 @@ def mp4_metadata(media_df: DataFrame, id_col: str = "doc_id",
                  media_col: str = "media") -> DataFrame:
     """``mp4_meta_walk`` over a binary column via ``mapInPandas`` — one
     typed row per blob, no shuffle (the pdf/mp3/flac walk shape)."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in MP4_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = mp4_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("brand", "timescale", "duration_ms", "n_tracks",
-                          "width", "height", "video_codec", "audio_codec",
-                          "n_video_samples"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _walk, schema=MP4_META_SCHEMA)
-
-
-MP4_BLOB_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("media", T.BinaryType()),
-])
+    return map_blobs(media_df, mp4_meta_walk, MP4_META_SCHEMA, id_col, media_col)
 
 
 def synth_mp4_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -561,27 +539,21 @@ def synth_mp4_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         mvhd version 1 (64-bit) on every 4th doc — both layouts walked
     """
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                ts = 600 * (1 + d % 3)
-                blobs.append(mp4_encode_meta_fixture(
-                    width=16 * (1 + d % 4),
-                    height=16 * (1 + d % 3),
-                    n_video_samples=1 + d % 6,
-                    duration=500 * (1 + d % 7) * ts // 1000,
-                    timescale=ts,
-                    brand="isom" if d % 2 == 0 else "mp42",
-                    video_codec="avc1" if d % 5 != 0 else "hvc1",
-                    with_audio=d % 3 == 0,
-                    mvhd_v1=d % 4 == 0,
-                ))
-                ids.append(d)
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        ts = 600 * (1 + d % 3)
+        return mp4_encode_meta_fixture(
+            width=16 * (1 + d % 4),
+            height=16 * (1 + d % 3),
+            n_video_samples=1 + d % 6,
+            duration=500 * (1 + d % 7) * ts // 1000,
+            timescale=ts,
+            brand="isom" if d % 2 == 0 else "mp42",
+            video_codec="avc1" if d % 5 != 0 else "hvc1",
+            with_audio=d % 3 == 0,
+            mvhd_v1=d % 4 == 0,
+        )
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=256), _synth, schema=MP4_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=256)
 
 
 FMP4_META_SCHEMA = T.StructType(MP4_META_SCHEMA.fields + [
@@ -595,20 +567,7 @@ def fmp4_metadata(media_df: DataFrame, id_col: str = "doc_id",
     """``mp4_meta_walk`` with the r18 fragment-accounting columns —
     DASH/CMAF files report summed trun samples/durations plus
     ``fragmented``/``n_fragments`` (plain files: false/0)."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in FMP4_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = mp4_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("brand", "timescale", "duration_ms", "n_tracks",
-                          "width", "height", "video_codec", "audio_codec",
-                          "n_video_samples", "fragmented", "n_fragments"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _walk, schema=FMP4_META_SCHEMA)
+    return map_blobs(media_df, mp4_meta_walk, FMP4_META_SCHEMA, id_col, media_col)
 
 
 def synth_fmp4_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -625,26 +584,20 @@ def synth_fmp4_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         fragments, tfhd defaults in the others
     """
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                ts = 600 * (1 + d % 3)
-                blobs.append(mp4_encode_meta_fixture(
-                    width=16 * (1 + d % 4),
-                    height=16 * (1 + d % 3),
-                    n_video_samples=2 + d % 9,
-                    duration=400 * (1 + d % 6) * ts // 1000,
-                    timescale=ts,
-                    brand="isom" if d % 2 == 0 else "mp42",
-                    video_codec="avc1" if d % 5 != 0 else "hvc1",
-                    with_audio=d % 4 == 0,
-                    fragmented=True,
-                    n_fragments=1 + d % 4,
-                    with_mehd=d % 3 != 0,
-                ))
-                ids.append(d)
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        ts = 600 * (1 + d % 3)
+        return mp4_encode_meta_fixture(
+            width=16 * (1 + d % 4),
+            height=16 * (1 + d % 3),
+            n_video_samples=2 + d % 9,
+            duration=400 * (1 + d % 6) * ts // 1000,
+            timescale=ts,
+            brand="isom" if d % 2 == 0 else "mp42",
+            video_codec="avc1" if d % 5 != 0 else "hvc1",
+            with_audio=d % 4 == 0,
+            fragmented=True,
+            n_fragments=1 + d % 4,
+            with_mehd=d % 3 != 0,
+        )
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=256), _synth, schema=MP4_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=256)

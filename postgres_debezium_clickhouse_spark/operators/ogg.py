@@ -35,13 +35,10 @@ Scale: per-blob byte-bounded walk in ``mapInPandas`` — no shuffle.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -344,23 +341,11 @@ def ogg_metadata(media_df: DataFrame, id_col: str = "doc_id",
     """``ogg_meta_walk`` over a binary column via ``mapInPandas`` — no
     shuffle, one typed row per blob (the mp3/flac/mp4 metadata twin)."""
 
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in OGG_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = ogg_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                rows["codec"].append(m["codec"])
-                rows["channels"].append(m["channels"])
-                rows["sample_rate"].append(m["sample_rate"])
-                rows["pre_skip"].append(m["pre_skip"])
-                rows["duration_ms"].append(m["duration_ms"])
-                rows["page_count"].append(m["page_count"])
-                rows["title"].append(m["tags"].get("TITLE"))
-                rows["artist"].append(m["tags"].get("ARTIST"))
-            yield pd.DataFrame(rows)
+    def _row(blob: bytes) -> dict:
+        m = ogg_meta_walk(blob)
+        return {**m, "title": m["tags"].get("TITLE"), "artist": m["tags"].get("ARTIST")}
 
-    return pipe_map(media_df, _walk, schema=OGG_META_SCHEMA)
+    return map_blobs(media_df, _row, OGG_META_SCHEMA, id_col, media_col)
 
 
 def synth_ogg_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -379,31 +364,23 @@ def synth_ogg_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
       else 3
     """
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                split = d % 5 == 0
-                tags = ({"TITLE": f"ogg {d}", "ARTIST": f"artist {d % 5}"}
-                        if d % 3 == 0 else None)
-                vendor = ("pdc-spark" + "x" * 300) if split else "pdc-spark"
-                if d % 2 == 0:
-                    rate = [8000, 44100, 48000][d % 3]
-                    blob = ogg_encode_fixture(
-                        "vorbis", rate, 1 + d % 2,
-                        (rate // 2) * (1 + d % 7),
-                        tags=tags, vendor=vendor, split_comment=split,
-                    )
-                else:
-                    pre = 312 + 100 * (d % 4)
-                    blob = ogg_encode_fixture(
-                        "opus", [48000, 44100, 16000][d % 3], 1 + d % 2,
-                        pre + 960 * (1 + d % 9), tags=tags,
-                        pre_skip=pre, vendor=vendor, split_comment=split,
-                    )
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame({id_col: ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        split = d % 5 == 0
+        tags = ({"TITLE": f"ogg {d}", "ARTIST": f"artist {d % 5}"}
+                if d % 3 == 0 else None)
+        vendor = ("pdc-spark" + "x" * 300) if split else "pdc-spark"
+        if d % 2 == 0:
+            rate = [8000, 44100, 48000][d % 3]
+            return ogg_encode_fixture(
+                "vorbis", rate, 1 + d % 2,
+                (rate // 2) * (1 + d % 7),
+                tags=tags, vendor=vendor, split_comment=split,
+            )
+        pre = 312 + 100 * (d % 4)
+        return ogg_encode_fixture(
+            "opus", [48000, 44100, 16000][d % 3], 1 + d % 2,
+            pre + 960 * (1 + d % 9), tags=tags,
+            pre_skip=pre, vendor=vendor, split_comment=split,
+        )
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=256), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=256)

@@ -29,13 +29,10 @@ every media walk (operators/audio.py mp3/flac twins).
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -687,19 +684,7 @@ def pdf_metadata(media_df: DataFrame, id_col: str = "doc_id",
                  media_col: str = "media") -> DataFrame:
     """``pdf_meta_walk`` over a binary column via ``mapInPandas`` — one
     typed row per blob, no shuffle (the mp3/flac walk shape)."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in PDF_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = pdf_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("version", "n_objects", "page_count", "title",
-                          "author", "producer"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _walk, schema=PDF_META_SCHEMA)
+    return map_blobs(media_df, pdf_meta_walk, PDF_META_SCHEMA, id_col, media_col)
 
 
 def synth_pdf_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -712,28 +697,21 @@ def synth_pdf_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     /Type /XRef FlateDecode cross-reference stream (PNG Up-predictor 12
     when d ≡ 1 mod 4) — both wire forms through one walk."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                has_info = d % 5 != 0
-                title = f"doc {d}" if has_info else None
-                author = f"author {d % 7}" if has_info else None
-                ids.append(d)
-                if d % 2:
-                    blobs.append(pdf_encode_xrefstream_fixture(
-                        n_pages=1 + d % 9, title=title, author=author,
-                        predictor=(d % 4 == 1),
-                    ))
-                else:
-                    blobs.append(pdf_encode_meta_fixture(
-                        n_pages=1 + d % 9, title=title, author=author,
-                        incremental=(d % 4 == 0 and has_info),
-                    ))
-            yield pd.DataFrame({id_col: ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        has_info = d % 5 != 0
+        title = f"doc {d}" if has_info else None
+        author = f"author {d % 7}" if has_info else None
+        if d % 2:
+            return pdf_encode_xrefstream_fixture(
+                n_pages=1 + d % 9, title=title, author=author,
+                predictor=(d % 4 == 1),
+            )
+        return pdf_encode_meta_fixture(
+            n_pages=1 + d % 9, title=title, author=author,
+            incremental=(d % 4 == 0 and has_info),
+        )
 
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=f"{id_col} long, media binary")
+    return synth_blobs(ids_df, _encode, id_col)
 
 
 def pdf_encode_xrefstream_fixture(
@@ -1020,19 +998,11 @@ def pdf_page_text(media_df: DataFrame, id_col: str = "doc_id",
     """``pdf_text_walk`` over a binary column via ``mapInPandas`` — one
     row per PAGE (the row-expansion shape of decode_video_frames)."""
 
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in PDF_TEXT_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                t = pdf_text_walk(bytes(blob))
-                for i, text in enumerate(t["texts"]):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["page"].append(i)
-                    rows["text"].append(text)
-                    rows["n_chars"].append(len(text))
-            yield pd.DataFrame(rows)
+    def _pages(blob: bytes) -> list[dict]:
+        return [{"page": i, "text": text, "n_chars": len(text)}
+                for i, text in enumerate(pdf_text_walk(blob)["texts"])]
 
-    return pipe_map(media_df, _walk, schema=PDF_TEXT_SCHEMA)
+    return map_blobs(media_df, _pages, PDF_TEXT_SCHEMA, id_col, media_col, explode=True)
 
 
 def synth_pdf_text_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1045,28 +1015,18 @@ def synth_pdf_text_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     shows — r18 escape audit) with the SAME decoded text, so the
     oracle is unchanged while the lexer paths are on the oracle gate."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                np_ = 1 + d % 3
-                texts = [
-                    "\n".join(f"doc {d} page {p} line {line}"
-                              for line in range(2 + (d + p) % 2))
-                    for p in range(np_)
-                ]
-                ids.append(d)
-                blobs.append(pdf_encode_meta_fixture(
-                    np_, page_texts=texts,
-                    compress_text=d % 2 == 1,
-                    contents_array=d % 4 == 2,
-                    gnarly_text=d % 5 == 1,
-                ))
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        np_ = 1 + d % 3
+        texts = [
+            "\n".join(f"doc {d} page {p} line {line}"
+                      for line in range(2 + (d + p) % 2))
+            for p in range(np_)
+        ]
+        return pdf_encode_meta_fixture(
+            np_, page_texts=texts,
+            compress_text=d % 2 == 1,
+            contents_array=d % 4 == 2,
+            gnarly_text=d % 5 == 1,
+        )
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media", T.BinaryType()),
-    ])
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=schema)
+    return synth_blobs(ids_df, _encode, id_col)

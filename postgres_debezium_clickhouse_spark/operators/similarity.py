@@ -94,7 +94,7 @@ def cosine_topk(
     ``queries`` must be small (it is broadcast — the right shape for "find
     neighbors of these N items in a 100 TB corpus": one scan of the corpus,
     no corpus shuffle, then a tiny per-query top-k)."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     c = as_double_vec(spread_for_compute(corpus)).select(F.col(id_col), F.col("v").alias("cv"))
     q = as_double_vec(queries, col="embedding", out="v").select(
@@ -129,7 +129,7 @@ def mips_topk(
     closer-by-angle one), unlike cosine which quotients it away.  Same
     scale shape as ``cosine_topk``: one corpus scan, broadcast
     queries, no corpus shuffle, bounded per-query top-k."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     c = as_double_vec(spread_for_compute(corpus)).select(
         F.col(id_col), F.col("v").alias("cv")
@@ -188,7 +188,7 @@ def with_lsh_bucket(
 
 def lsh_ann_buckets(corpus: DataFrame, n_planes: int = 8, id_col: str = "vec_id", dim: int = 64) -> DataFrame:
     """Bucket assignment + occupancy — the ANN index build."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     planes = random_hyperplanes(dim, n_planes)
     bucketed = with_lsh_bucket(as_double_vec(spread_for_compute(corpus)), planes)
@@ -212,7 +212,7 @@ def lsh_ann_topk(
     At scale: corpus bucketed once (writable as a bucketed table), queries
     hashed and joined on bucket — candidate set is n/2^planes per query
     instead of n."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     planes = random_hyperplanes(dim, n_planes)
     c = with_lsh_bucket(as_double_vec(spread_for_compute(corpus)), planes).select(
@@ -486,7 +486,7 @@ def l2_topk(
     and round-6/id tie-break discipline as ``cosine_topk``.
     Returns (query_id, neighbor_id, exact_d2)."""
 
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     c = as_double_vec(spread_for_compute(corpus)).select(
         F.col(id_col), F.col("v").alias("cv")
@@ -595,7 +595,7 @@ def ivf_ann_topk_table(
     at ≤256 cells where constant folding is free; above that, use this).
     Same semantics, same tie-breaks → bit-identical results at equal
     centroids (asserted in tests/test_similarity.py)."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     # materialize the k-row index once (executor-side, bounded): the seed
     # subplan scans the corpus, and both the assign and probe branches
@@ -663,7 +663,7 @@ def ivf_ann_topk(
     Scale shape: the corpus is assigned to cells ONCE (persistable
     partitioned-by-cell = the IVF index); queries fan out to n_probe cells
     via a broadcast join; candidates per query ≈ n_probe·n/n_centroids."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     cents = ivf_centroids(corpus, n_centroids, id_col)
     c = with_ivf_cell(as_double_vec(spread_for_compute(corpus)), cents).select(
@@ -721,7 +721,7 @@ def semantic_dedup(
     once.  SemDeDup's per-pair rule (not transitive closure) is the
     published semantics — chain A~B~C with A≁C still drops B and C, keeping
     only the lowest id per dup neighborhood."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     cents = ivf_centroids(corpus, n_centroids, id_col)
     c = with_ivf_cell(as_double_vec(spread_for_compute(corpus)), cents).select(
@@ -757,7 +757,7 @@ def embedding_near_dups(corpus: DataFrame, threshold: float, id_col: str = "vec_
     Blocking on ``label`` bounds the pair fan-out (the generic trick: any
     cheap equality key — cluster id, LSH bucket, shard — prevents n²); the
     exact cosine then verifies within blocks."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     e = as_double_vec(spread_for_compute(corpus)).select(F.col(id_col), F.col("label"), F.col("v"))
     a = e.select(F.col(id_col).alias("vec_a"), F.col("label"), F.col("v").alias("va"))
@@ -1318,7 +1318,7 @@ def hamming_topk(
     only thing the shortlist stage reads (512× less IO than raw
     vectors), and the exact-cosine refine touches only k rows/query."""
 
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     c = sign_binary_codes(
         as_double_vec(spread_for_compute(corpus)), id_col=id_col
@@ -1368,7 +1368,7 @@ def semdedup_centroid_keep(
     against the plan-literal centroid table.  Cosines are rounded to 6
     places BEFORE every comparison, so the keep frontier is
     engine-portable."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     cents = ivf_centroids(corpus, n_centroids, id_col)
     ctab = "array(" + ",".join(

@@ -27,13 +27,10 @@ computed in the same pass as the parse.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -172,19 +169,7 @@ def subtitle_stats(docs_df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "subtitle") -> DataFrame:
     """``subtitle_walk`` over a string column via ``mapInPandas`` — no
     shuffle, one typed row per document."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in SUBTITLE_SCHEMA.fields}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                m = subtitle_walk(str(text))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("format", "n_cues", "first_start_ms",
-                          "last_end_ms", "speech_ms", "n_chars", "text"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return pipe_map(docs_df, _walk, schema=SUBTITLE_SCHEMA)
+    return map_blobs(docs_df, subtitle_walk, SUBTITLE_SCHEMA, id_col, text_col)
 
 
 def _fmt_srt(ms: int) -> str:
@@ -211,40 +196,33 @@ def synth_subtitle_docs(ids_df: DataFrame,
       a space in the stats)
     """
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, subs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n = 2 + d % 5
-                base = 100 * (d % 7)
-                parts = []
-                if d % 2 == 0:
-                    for c in range(n):
-                        s = 2000 * c + base
-                        e = s + 900 + 100 * (c % 3)
-                        body = (f"doc {d}\ncue {c}" if c % 2 == 1
-                                else f"doc {d} cue {c}")
-                        parts.append(
-                            f"{c + 1}\n{_fmt_srt(s)} --> {_fmt_srt(e)}"
-                            f"\n{body}")
-                    sub = "\n\n".join(parts) + "\n"
-                else:
-                    parts.append("WEBVTT - doc header")
-                    parts.append("NOTE\nsynthetic fixture")
-                    for c in range(n):
-                        s = 2000 * c + base
-                        e = s + 900 + 100 * (c % 3)
-                        ident = f"cue-id-{c}\n" if c == 0 else ""
-                        setting = " position:50%" if c == 1 else ""
-                        body = (f"<b>doc {d}</b> <c.x>cue {c}</c>"
-                                if c % 2 == 0 else f"doc {d} cue {c}")
-                        parts.append(
-                            f"{ident}{_fmt_vtt(s)} --> "
-                            f"{_fmt_vtt(e)}{setting}\n{body}")
-                    sub = "\n\n".join(parts) + "\n"
-                ids.append(d)
-                subs.append(sub)
-            yield pd.DataFrame({id_col: ids, "subtitle": subs})
+    def _encode(d: int) -> str:
+        n = 2 + d % 5
+        base = 100 * (d % 7)
+        parts = []
+        if d % 2 == 0:
+            for c in range(n):
+                s = 2000 * c + base
+                e = s + 900 + 100 * (c % 3)
+                body = (f"doc {d}\ncue {c}" if c % 2 == 1
+                        else f"doc {d} cue {c}")
+                parts.append(
+                    f"{c + 1}\n{_fmt_srt(s)} --> {_fmt_srt(e)}"
+                    f"\n{body}")
+        else:
+            parts.append("WEBVTT - doc header")
+            parts.append("NOTE\nsynthetic fixture")
+            for c in range(n):
+                s = 2000 * c + base
+                e = s + 900 + 100 * (c % 3)
+                ident = f"cue-id-{c}\n" if c == 0 else ""
+                setting = " position:50%" if c == 1 else ""
+                body = (f"<b>doc {d}</b> <c.x>cue {c}</c>"
+                        if c % 2 == 0 else f"doc {d} cue {c}")
+                parts.append(
+                    f"{ident}{_fmt_vtt(s)} --> "
+                    f"{_fmt_vtt(e)}{setting}\n{body}")
+        return "\n\n".join(parts) + "\n"
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=1024), _synth, schema=f"{id_col} long, subtitle string")
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=1024,
+                       blob_col="subtitle string")

@@ -336,7 +336,7 @@ def tfidf_top_terms(
     corpus scale."""
     from pyspark.sql import Window
 
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
     # CPU-bound explode+partial-agg map stage (see lm_5gram_kneser_ney)
@@ -443,7 +443,7 @@ def lm_unigram_logprob(
     applied once per doc, not per token."""
     # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
     # CPU-bound explode+partial-agg map stages (see lm_5gram_kneser_ney)
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     toks = spread_for_compute(documents.select(id_col, text_col)).select(
         F.col(id_col), F.explode(_tokens(text_col)).alias("token")
@@ -776,7 +776,7 @@ def bm25_topk(
     from pyspark.sql import Window
 
     spark = documents.sparkSession
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
     # CPU-bound explode+partial-agg map stage (see lm_5gram_kneser_ney)
@@ -862,7 +862,7 @@ def _ngram_stream(df: DataFrame, n: int, top: int | None = None,
     hash + partial-agg map stage, the ladder's heavy pass, would run
     serial (sf1: 4.7 effective cores on local[32]).  Above 4 GB the
     scan's own splits are trusted and no corpus shuffle is added."""
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     top = n if top is None else top
     names = [f"w{i}" for i in range(top - n + 1, top + 1)]
@@ -1194,7 +1194,7 @@ def zipf_fit(
     sort) — the window rank runs on the bounded ``top_n``-row set."""
     from pyspark.sql import Window
 
-    from .dedup import spread_for_compute
+    from ._pipe import spread_for_compute
 
     # r19-opt (guide §2.5): spread the sub-4GB corpus scan before the
     # CPU-bound explode+partial-agg map stage (see lm_5gram_kneser_ney)

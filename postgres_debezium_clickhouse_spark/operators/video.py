@@ -20,12 +20,8 @@ Scale: one blob → n_frames rows is the video path's row-expansion shape
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -124,47 +120,25 @@ def decode_video_frames(media_df: DataFrame, id_col: str = "doc_id",
     becomes ONE row (``frame_index`` NULL) with ``err`` set, and the job
     survives — the blob's identity is preserved for quarantine even
     though no frames could be extracted."""
+
+    def _frames(blob: bytes) -> list[dict]:
+        try:
+            d = decode_video(blob)
+        except (ValueError, NotImplementedError) as e:
+            if strict:
+                raise
+            return [{**dict.fromkeys(VIDEO_FRAME_SCHEMA.names), "err": str(e)}]
+        w, h = d["width"], d["height"]
+        plane = w * h
+        return [{"frame_index": fi, "width": w, "height": h,
+                 "n_frames": len(d["frames"]), "sum_y": sum(frame[:plane]),
+                 "sum_u": sum(frame[plane:2 * plane]),
+                 "sum_v": sum(frame[2 * plane:]), "min_b": min(frame),
+                 "max_b": max(frame), "err": None}
+                for fi, frame in enumerate(d["frames"])]
+
     schema = VIDEO_FRAME_SCHEMA if strict else VIDEO_DEADLETTER_SCHEMA
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    d = decode_video(bytes(blob))
-                except (ValueError, NotImplementedError) as e:
-                    if strict:
-                        raise
-                    rows["doc_id"].append(doc_id)
-                    for k in ("frame_index", "width", "height", "n_frames",
-                              "sum_y", "sum_u", "sum_v", "min_b", "max_b"):
-                        rows[k].append(None)
-                    rows["err"].append(str(e))
-                    continue
-                w, h = d["width"], d["height"]
-                plane = w * h
-                for fi, frame in enumerate(d["frames"]):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_index"].append(fi)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["n_frames"].append(len(d["frames"]))
-                    rows["sum_y"].append(sum(frame[:plane]))
-                    rows["sum_u"].append(sum(frame[plane:2 * plane]))
-                    rows["sum_v"].append(sum(frame[2 * plane:]))
-                    rows["min_b"].append(min(frame))
-                    rows["max_b"].append(max(frame))
-                    if not strict:
-                        rows["err"].append(None)
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _decode, schema=schema)
-
-
-VIDEO_BLOB_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("media", T.BinaryType()),
-])
+    return map_blobs(media_df, _frames, schema, id_col, media_col, explode=True)
 
 
 def synth_videos(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -177,19 +151,13 @@ def synth_videos(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     — closed forms DuckDB reproduces with ``range()`` cross joins."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h, nf = 2 + d % 3, 2 + d % 5, 1 + d % 4
-                fsize = w * h * 3
-                frames = [
-                    bytes((d * 11 + (f * fsize + j) * 5) % 256 for j in range(fsize))
-                    for f in range(nf)
-                ]
-                ids.append(d)
-                blobs.append(y4m_encode(w, h, frames))
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        w, h, nf = 2 + d % 3, 2 + d % 5, 1 + d % 4
+        fsize = w * h * 3
+        frames = [
+            bytes((d * 11 + (f * fsize + j) * 5) % 256 for j in range(fsize))
+            for f in range(nf)
+        ]
+        return y4m_encode(w, h, frames)
 
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=VIDEO_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col)

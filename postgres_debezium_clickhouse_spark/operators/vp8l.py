@@ -40,13 +40,10 @@ imaging suite's shuffle-free shape.
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -1014,30 +1011,22 @@ def vp8l_pixel_stats(media_df: DataFrame, id_col: str = "doc_id",
     or whole lossless .webp files) via ``mapInPandas`` — integer-exact
     channel sums from DECODED pixels, the imaging suite's contract."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in VP8L_STATS_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                blob = bytes(blob)
-                if blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
-                    if blob[12:16] != b"VP8L":
-                        raise ValueError("not a lossless WebP")
-                    size = struct.unpack("<I", blob[16:20])[0]
-                    blob = blob[20:20 + size]
-                d = vp8l_decode(blob)
-                px = d["pixels"]
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(d["width"])
-                rows["height"].append(d["height"])
-                rows["n_pixels"].append(len(px))
-                rows["sum_r"].append(sum((p >> 16) & 0xFF for p in px))
-                rows["sum_g"].append(sum((p >> 8) & 0xFF for p in px))
-                rows["sum_b"].append(sum(p & 0xFF for p in px))
-                rows["sum_a"].append(sum((p >> 24) & 0xFF for p in px))
-                rows["n_distinct"].append(len(set(px)))
-            yield pd.DataFrame(rows)
+    def _stats(blob: bytes) -> dict:
+        if blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
+            if blob[12:16] != b"VP8L":
+                raise ValueError("not a lossless WebP")
+            size = struct.unpack("<I", blob[16:20])[0]
+            blob = blob[20:20 + size]
+        d = vp8l_decode(blob)
+        px = d["pixels"]
+        return {"width": d["width"], "height": d["height"], "n_pixels": len(px),
+                "sum_r": sum((p >> 16) & 0xFF for p in px),
+                "sum_g": sum((p >> 8) & 0xFF for p in px),
+                "sum_b": sum(p & 0xFF for p in px),
+                "sum_a": sum((p >> 24) & 0xFF for p in px),
+                "n_distinct": len(set(px))}
 
-    return pipe_map(media_df, _decode, schema=VP8L_STATS_SCHEMA)
+    return map_blobs(media_df, _stats, VP8L_STATS_SCHEMA, id_col, media_col)
 
 
 def synth_vp8l_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1054,43 +1043,32 @@ def synth_vp8l_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         through the corpus)
     """
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h, v = 4 + d % 5, 3 + d % 4, d % 5
-                px = []
-                for j in range(w * h):
-                    k = j - j % 5 if v == 1 else (j % 7 if v == 2 else j)
-                    r = (d * 7 + k * 3) % 256
-                    g = (d * 5 + k * 11) % 256
-                    b = (d * 13 + k) % 256
-                    a = (d + k * 17) % 256 if v == 4 else 255
-                    px.append((a << 24) | (r << 16) | (g << 8) | b)
-                kw = {}
-                if v == 1:
-                    kw = dict(use_lz77=True)
-                elif v == 2:
-                    kw = dict(use_cache_bits=4, use_lz77=False)
-                elif v == 3:
-                    kw = dict(subtract_green=True, predictor_mode=d % 14,
-                              use_lz77=False)
-                else:
-                    kw = dict(use_lz77=False)
-                payload = vp8l_encode_fixture(w, h, px, **kw)
-                webp = (b"RIFF"
-                        + struct.pack("<I", 4 + 8 + len(payload)
-                                      + (len(payload) & 1))
-                        + b"WEBPVP8L" + struct.pack("<I", len(payload))
-                        + payload
-                        + (b"\x00" if len(payload) & 1 else b""))
-                ids.append(d)
-                blobs.append(webp)
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        w, h, v = 4 + d % 5, 3 + d % 4, d % 5
+        px = []
+        for j in range(w * h):
+            k = j - j % 5 if v == 1 else (j % 7 if v == 2 else j)
+            r = (d * 7 + k * 3) % 256
+            g = (d * 5 + k * 11) % 256
+            b = (d * 13 + k) % 256
+            a = (d + k * 17) % 256 if v == 4 else 255
+            px.append((a << 24) | (r << 16) | (g << 8) | b)
+        kw = {}
+        if v == 1:
+            kw = dict(use_lz77=True)
+        elif v == 2:
+            kw = dict(use_cache_bits=4, use_lz77=False)
+        elif v == 3:
+            kw = dict(subtract_green=True, predictor_mode=d % 14,
+                      use_lz77=False)
+        else:
+            kw = dict(use_lz77=False)
+        payload = vp8l_encode_fixture(w, h, px, **kw)
+        return (b"RIFF"
+                + struct.pack("<I", 4 + 8 + len(payload)
+                              + (len(payload) & 1))
+                + b"WEBPVP8L" + struct.pack("<I", len(payload))
+                + payload
+                + (b"\x00" if len(payload) & 1 else b""))
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media", T.BinaryType()),
-    ])
-    return pipe_map(_spread(ids_df.select(id_col)), _synth, schema=schema)
+    return synth_blobs(ids_df, _encode, id_col)

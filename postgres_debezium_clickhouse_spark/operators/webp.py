@@ -33,13 +33,10 @@ pipeline has no media path).
 
 from __future__ import annotations
 
-from ._pipe import pipe_map
-from .dedup import spread_for_compute as _spread
+from ._pipe import map_blobs, synth_blobs
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -225,25 +222,7 @@ def webp_metadata(media_df: DataFrame, id_col: str = "doc_id",
                   media_col: str = "media") -> DataFrame:
     """``webp_meta_walk`` over a binary column via ``mapInPandas`` —
     one typed row per blob, no shuffle (the pdf/mp3/mp4 walk shape)."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in WEBP_META_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
-                m = webp_meta_walk(bytes(blob))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("variant", "width", "height", "has_alpha",
-                          "is_animated", "n_frames", "has_exif"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return pipe_map(media_df, _walk, schema=WEBP_META_SCHEMA)
-
-
-WEBP_BLOB_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("media", T.BinaryType()),
-])
+    return map_blobs(media_df, webp_meta_walk, WEBP_META_SCHEMA, id_col, media_col)
 
 
 def synth_webp_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -256,26 +235,18 @@ def synth_webp_docs(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                    animated d%4=2 with 2+d%7 frames, exif d%5=0
     """
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                v = d % 3
-                if v == 0:
-                    b = webp_encode_meta_fixture(
-                        "lossy", 32 + d % 11, 24 + d % 7)
-                elif v == 1:
-                    b = webp_encode_meta_fixture(
-                        "lossless", 16 * (1 + d % 9), 8 * (1 + d % 5),
-                        alpha=d % 2 == 1)
-                else:
-                    b = webp_encode_meta_fixture(
-                        "extended", 100 + d % 50, 80 + d % 30,
-                        alpha=d % 2 == 1, animated=d % 4 == 2,
-                        n_frames=2 + d % 7, exif=d % 5 == 0)
-                ids.append(d)
-                blobs.append(b)
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
+    def _encode(d: int) -> bytes:
+        v = d % 3
+        if v == 0:
+            return webp_encode_meta_fixture(
+                "lossy", 32 + d % 11, 24 + d % 7)
+        if v == 1:
+            return webp_encode_meta_fixture(
+                "lossless", 16 * (1 + d % 9), 8 * (1 + d % 5),
+                alpha=d % 2 == 1)
+        return webp_encode_meta_fixture(
+            "extended", 100 + d % 50, 80 + d % 30,
+            alpha=d % 2 == 1, animated=d % 4 == 2,
+            n_frames=2 + d % 7, exif=d % 5 == 0)
 
-    return pipe_map(_spread(ids_df.select(id_col), rows_per_task=1024), _synth, schema=WEBP_BLOB_SCHEMA)
+    return synth_blobs(ids_df, _encode, id_col, rows_per_task=1024)

@@ -846,10 +846,8 @@ def silver_upsert_stream(
     keys: list[str],
     version_col: str = "ts_ms",
     tiebreak_col: str | None = "offset",
-    delete_mode: str = "drop",
     available_now: bool = False,
     n_buckets: int = DEFAULT_SILVER_BUCKETS,
-    max_broadcast_keys: int = 1_000_000,
     processing_interval_ms: int | None = None,
 ) -> StreamingQuery:
     """S8 — the ReplacingMergeTree-equivalent keyed upsert sink: per
@@ -858,23 +856,20 @@ def silver_upsert_stream(
     file and ``read_silver`` applies FINAL, so readers must go through
     ``read_silver`` (or the other store readers) rather than the files.
 
-    The store ALWAYS retains tombstones (``__deleted`` rows) internally,
-    regardless of ``delete_mode``: physically dropping a delete would lose
-    its version, so an older version of the same key arriving in a LATER
-    micro-batch (cross-batch disorder) would resurrect the row.  The
-    ``delete_mode`` argument selects the READ semantics: 'drop' filters
-    tombstones in ``read_silver`` (init.sql:63 behavior), 'rewrite' exposes
-    them (abcsvb-connector-secure.json:33-34).  Use ``read_silver`` (or
-    filter ``__deleted`` yourself) to consume the store.
+    The store ALWAYS retains tombstones (``__deleted`` rows) internally:
+    physically dropping a delete would lose its version, so an older
+    version of the same key arriving in a LATER micro-batch (cross-batch
+    disorder) would resurrect the row.  Read semantics belong to the
+    reader: ``read_silver`` filters tombstones by default (init.sql:63
+    behavior) and exposes them with ``include_deleted=True``
+    (abcsvb-connector-secure.json:33-34).
 
     Per trigger, the batch's latest-wins rows become one key-sorted delta
     file and one manifest commit; every few triggers (``_SilverStore.fold_due``) the
     trigger is the fold instead, which reads, merges and re-publishes only
     the hash buckets containing batch or delta keys — untouched buckets'
     files are not opened, written, or moved (see the store-layout
-    contract in the module docstring).  ``max_broadcast_keys`` is kept for
-    compatibility: neither path has a changed-keys join, so it no longer
-    has an effect.
+    contract in the module docstring).
 
     foreachBatch because the merge is keyed state over an external store;
     the merge itself is `operators.upsert.merge_touched` (batch-tested

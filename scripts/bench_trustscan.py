@@ -3,7 +3,7 @@
 
 The branch that actually runs at 100 TB — "the optimizer-estimated input
 is big, trust the scan's own partitioning, do NOT add a corpus shuffle"
-(operators/dedup.py spread_for_compute) — never fires on the toy
+(operators/_pipe.py spread_for_compute) — never fires on the toy
 fixtures: every documents table estimates far below the 4 GB threshold,
 so the unconditional-repartition branch always runs instead.  This
 harness makes the trust branch execute end-to-end through the heaviest
@@ -88,10 +88,11 @@ def main() -> int:
          .write.mode("overwrite").parquet(layout))
 
     from postgres_debezium_clickhouse_spark.operators import dedup as dd
+    from postgres_debezium_clickhouse_spark.operators._pipe import spread_for_compute
 
     docs = spark.read.parquet(layout)
     est = int(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    spread = dd.spread_for_compute(docs)
+    spread = spread_for_compute(docs)
     trust_taken = spread is docs
     n_parts = spread.rdd.getNumPartitions()
     cores = spark.sparkContext.defaultParallelism

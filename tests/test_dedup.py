@@ -156,10 +156,8 @@ def test_connected_components_kernel_labels_long_path(spark):
     every node labelled 0, ids keep their input dtype."""
     from pyspark.sql import types as T
 
-    from postgres_debezium_clickhouse_spark.operators.dedup import (
-        connected_components,
-        _fits_one_task,
-    )
+    from postgres_debezium_clickhouse_spark.operators._pipe import _fits_one_task
+    from postgres_debezium_clickhouse_spark.operators.dedup import connected_components
 
     n = 10_000
     pairs = spark.range(n).select(
@@ -177,7 +175,7 @@ def test_cc_guard_sizes_on_leaves_not_join_estimate(spark, sf01_dir):
     """The LSH pair list's own size-only estimate is a self-join product
     (~10¹⁷+ bytes for a few dozen rows); the guard sums the leaf scans
     instead and picks the kernel."""
-    from postgres_debezium_clickhouse_spark.operators.dedup import _fits_one_task
+    from postgres_debezium_clickhouse_spark.operators._pipe import _fits_one_task
     from postgres_debezium_clickhouse_spark.sources.files import load_table
 
     docs = load_table(spark, sf01_dir, "documents")
@@ -716,7 +714,7 @@ def test_spread_for_compute_streaming_passthrough(spark):
     repartition are illegal on an unstarted streaming plan (the
     stream_exif_pii_gate AnalysisException), and the stream gates are
     plan-pinned zero-shuffle, so no repartition may be added either."""
-    from postgres_debezium_clickhouse_spark.operators.dedup import spread_for_compute
+    from postgres_debezium_clickhouse_spark.operators._pipe import spread_for_compute
 
     stream = spark.readStream.format("rate").load()
     assert spread_for_compute(stream) is stream

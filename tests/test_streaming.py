@@ -367,9 +367,9 @@ def test_silver_snapshot_reads_survive_publish_and_vacuum(spark, dirs):
 
 
 def test_silver_stream_backfill_threshold_same_state(spark, dirs):
-    """T5 through the streaming sink: ``max_broadcast_keys=0`` is still
-    accepted and leaves the final silver state unchanged (the bucketed
-    merge has no broadcast join left for it to bound)."""
+    """T5 through the streaming sink: one file per trigger reaches the
+    same final silver state (the sink has no broadcast-size threshold
+    left; the bucketed merge has no broadcast join for one to bound)."""
     from postgres_debezium_clickhouse_spark.streaming.pipeline import (
         read_silver,
         silver_upsert_stream,
@@ -384,7 +384,7 @@ def test_silver_stream_backfill_threshold_same_state(spark, dirs):
     )
     q = silver_upsert_stream(
         stream, dirs["silver"], dirs["ckpt_s"], keys=["id"],
-        available_now=True, max_broadcast_keys=0,
+        available_now=True,
     )
     q.awaitTermination(180)
     state = {r.id: r.val for r in read_silver(spark, dirs["silver"]).collect()}
