@@ -86,7 +86,8 @@ def map_blobs(df: DataFrame, walk: Callable, schema, id_col: str = "doc_id",
     """``walk`` over every ``(id, value)`` of ``df[id_col], df[media_col]``.
 
     ``value`` is ``bytes`` for a binary column and ``str`` for a string
-    column.  ``schema`` (a ``StructType`` or DDL string) names the output:
+    column, and None for a NULL — the walker decides what a missing blob
+    means.  ``schema`` (a ``StructType`` or DDL string) names the output:
     its first field takes the id, every other field ``f`` is read as
     ``walk(value)[f]`` — a missing key raises.  With ``explode=True``,
     ``walk`` returns a list of such dicts, one output row each (an empty
@@ -100,7 +101,7 @@ def map_blobs(df: DataFrame, walk: Callable, schema, id_col: str = "doc_id",
         for pdf in batches:
             rows = {name: [] for name in names}
             for i, v in zip(pdf[id_col], pdf[media_col]):
-                v = v if isinstance(v, str) else bytes(v)
+                v = v if v is None or isinstance(v, str) else bytes(v)
                 for m in walk(v) if explode else (walk(v),):
                     rows[out_id].append(int(i))
                     for c in cols:

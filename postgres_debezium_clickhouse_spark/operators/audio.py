@@ -515,6 +515,8 @@ def wav_decode(blob: bytes) -> dict:
 def decode_audio(blob: bytes) -> dict:
     """Dispatch on magic bytes.  WAV decodes for real; compressed codecs
     raise until a library is wired in."""
+    if blob is None:
+        raise ValueError("NULL media value")
     if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
         return {"format": "wav", **wav_decode(blob)}
     if blob[:4] == b"FORM" and blob[8:12] == b"AIFF":

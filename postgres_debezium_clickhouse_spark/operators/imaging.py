@@ -994,6 +994,8 @@ def decode_image(blob: bytes) -> dict:
     what a dims-only probe of a stripped stream sees) degrades to
     ``pixels=None`` with dims, preserving the old contract.  Other
     formats still raise (honestly) until a codec is wired in."""
+    if blob is None:
+        raise ValueError("NULL media value")
     if blob[:8] == PNG_SIG:
         return {"format": "png", **png_decode(blob)}
     if blob[:2] == b"\xff\xd8":

@@ -83,6 +83,8 @@ def y4m_decode(blob: bytes) -> dict:
 def decode_video(blob: bytes) -> dict:
     """Dispatch on magic bytes.  Y4M decodes for real; compressed
     containers raise until a codec library is wired in."""
+    if blob is None:
+        raise ValueError("NULL media value")
     if blob[:9] == Y4M_MAGIC:
         return {"format": "y4m", **y4m_decode(blob)}
     raise NotImplementedError("no stdlib codec for this video format; wire in pyav")

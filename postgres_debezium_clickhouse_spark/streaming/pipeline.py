@@ -26,19 +26,25 @@ parquet).  The keyed upsert sinks are merge-on-read, like the reference's
 ReplacingMergeTree (basic_example/clickhouse.sql:40-82): each insert
 lands as a part, ``SELECT … FINAL`` collapses versions at read time, and
 background merges fold parts later.  Here a trigger writes its batch's
-latest-wins rows as ONE delta file — no touched-bucket collect, no read
-of current rows — and every reader applies FINAL over base ∪ deltas
-(one latest-wins aggregate, ``operators.upsert.merge_touched``).  Every
-few triggers the trigger is instead the FOLD: only the buckets whose keys
-appear in the batch or the deltas are read, merged and re-published at
-core width, and the deltas are cleared; every other bucket's files are
-untouched.  A trigger lists no directories and reads no parquet footers:
-the manifest names every live file and records the store's union schema.
+rows as they arrived as ONE delta file — no aggregate, no touched-bucket
+collect, no read of current rows: one single-task Spark job — and every
+reader applies FINAL over base ∪ deltas (one latest-wins aggregate,
+``operators.upsert.merge_touched``).  The merges run beside the sink,
+not in it: once the deltas are due, the store's background fold (one
+daemon thread per store, alive only while it folds) reads, merges and
+re-writes only the buckets whose keys appear in the deltas, in one task
+when they are small, and leaves a plan that the next trigger's delta
+commit carries — every other bucket's files are untouched.  A trigger
+folds inline only when it must (an empty, legacy or projected store, or
+deltas piling up past ``3 × FOLD_DELTAS``).  A trigger lists no
+directories and reads no parquet footers: the manifest names every live
+file and records the store's union schema.
 
 Silver store layout (manifest-committed, bucketed)::
 
     <path>/_manifest.json                      # atomic commit point
     <path>/__epoch=<v>/__bucket=<b>/part-*.parquet   # base: "files"
+    <path>/__epoch=-<v>/__bucket=<b>/part-*.parquet  # base a background fold wrote
     <path>/__epoch=<v>/part-*.parquet                # a delta: "deltas"
 
 ``_manifest.json`` lists the LIVE data files: ``files`` (the bucketed
@@ -46,10 +52,14 @@ base) and ``deltas`` (one key-sorted file per trigger since the last
 fold, with ``delta_spec`` naming the merge columns).  Each publish writes
 fresh files under a new ``__epoch`` dir, then atomically replaces the
 manifest (write-temp + ``os.replace``) — exactly one manifest commit per
-trigger, delta or fold.  Files referenced by any committed manifest are
-never mutated, so a reader that loaded a manifest sees a consistent
-snapshot even while a publish is in flight; replaced files stay on disk
-until ``vacuum_silver`` passes their grace period.
+trigger, delta or inline fold.  A background fold of version v writes
+under the negative epoch ``-v``, its own claim namespace, and commits
+nothing itself: its plan rides in a later commit, which applies it only
+if the plan's buckets and the deltas it folded are still as it saw
+them.  Files referenced by any committed manifest are never mutated, so
+a reader that loaded a manifest sees a consistent snapshot even while a
+publish is in flight; replaced files stay on disk until
+``vacuum_silver`` passes their grace period.
 
 One class owns this layout and the manifest format: ``_SilverStore``, a
 snapshot of one committed manifest.  Every trigger, maintenance op and
@@ -59,12 +69,14 @@ the fold, metadata edits, legacy flat-store migration and vacuum's live
 set — and tests/test_silver_store_guard.py keeps manifest access out of
 every other function.
 
-Writer contract: ONE writer per store (the streaming sink; run
-``compact_silver`` only while the stream is stopped).  Every write goes
-through the store's one commit path, whose two guards turn a violated
-assumption into a loud :class:`ManifestCommitError` instead of silent
-row loss: an exclusive per-epoch claim file taken before any file I/O,
-and a conditional (compare-and-swap on version) manifest commit.
+Writer contract: ONE writer per store — the streaming sink plus its
+background fold, in one process (run ``compact_silver`` only while the
+stream is stopped; like every maintenance op it first waits for the
+fold).  Every write goes through the store's one commit path, whose two
+guards turn a violated assumption into a loud
+:class:`ManifestCommitError` instead of silent row loss: an exclusive
+per-epoch claim file taken before any file I/O, and a conditional
+(compare-and-swap on version) manifest commit.
 The commit contract lives behind :class:`CommitBackend`
 (streaming/commit.py): local-FS impl today; an object-store port
 implements the same two primitives as conditional puts (S3
@@ -82,7 +94,9 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 import time
+import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
@@ -92,7 +106,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.upsert import DELETED_FLAG, apply_cdc, merge_touched
+from ..operators._pipe import _fits_one_task
+from ..operators.upsert import DELETED_FLAG, merge_touched
 
 
 def _start(writer, available_now: bool,
@@ -231,11 +246,14 @@ class _SilverStore:
     """One committed snapshot of a silver store, and the only code that
     knows the manifest format and the file layout (module docstring).
 
-    A snapshot is one manifest version.  Every write through it — a
-    bucket publish, a delta, a fold, a metadata edit — commits version
-    + 1 through the one commit path (:meth:`_claim`, then :meth:`_commit`
-    with a CAS on the snapshot's version), so a writer whose snapshot went
-    stale fails loudly instead of overwriting the newer version."""
+    A snapshot is one manifest version.  Every commit through it — a
+    bucket publish, a delta, an inline fold, a fold plan, a metadata edit
+    — is version + 1 through the one commit path (:meth:`_claim`, then
+    :meth:`_commit` with a CAS on the snapshot's version), so a writer
+    whose snapshot went stale fails loudly instead of overwriting the
+    newer version.  A background fold's first step
+    (:meth:`fold_prepare`) writes under a claim of its own and commits
+    nothing."""
 
     def __init__(self, path: str, manifest: dict, legacy: list[str] | None = None):
         self.path, self.manifest = path, manifest
@@ -280,19 +298,26 @@ class _SilverStore:
     def open(cls, path: str, spark: SparkSession | None = None, fold_first: bool = False,
              migrate: bool = False) -> _SilverStore:
         """The current snapshot of an existing store; raises
-        FileNotFoundError when there is none.  ``fold_first`` folds the
-        deltas first (one commit of its own) and returns the snapshot
-        after it: every writer other than the upsert trigger rewrites base
-        buckets, and a delta left on top would override what it decided.
+        FileNotFoundError when there is none.  ``fold_first`` first waits
+        for the store's background fold, then folds the deltas (a commit
+        or two of its own) and returns the snapshot after it: every writer
+        other than the upsert trigger rewrites base buckets, and a delta
+        left on top would override what it decided.
         ``migrate`` opens a pre-manifest flat store (see :meth:`_new`)."""
         store = cls.load(path)
         if store is None:
             store = cls._new(path, DEFAULT_SILVER_BUCKETS, migrate=True)
             if not (migrate and store.legacy):
                 raise FileNotFoundError(f"no silver store at {path}")
-        elif fold_first and store.deltas:
-            store.fold(spark, None, store.manifest[DELTA_SPEC])
-            store = cls.load(path)
+        elif fold_first:
+            # wait out a background fold, commit its plan when it still
+            # applies, and fold what is left here
+            plan = _folder(path).settle()
+            if plan is not None and store.fold_commit(plan):
+                store = cls.load(path)
+            if store.deltas:
+                store.fold(spark, None, store.manifest[DELTA_SPEC])
+                store = cls.load(path)
         return store
 
     @staticmethod
@@ -478,15 +503,17 @@ class _SilverStore:
     # -- the one commit path ---------------------------------------------
 
     @contextmanager
-    def _claim(self):
-        """Hold the claim on epoch ``version + 1`` and yield its directory,
-        empty.  Two guards make a concurrent writer fail LOUDLY instead of
-        losing data: this claim (taken before any file I/O — the leftover
-        ``rmtree`` below may only run while holding it) and the CAS of
-        :meth:`_commit`.  The store is still single-writer — one streaming
-        sink, maintenance only while it is stopped — and these guards turn
-        a violated assumption into an error."""
-        epoch = self.version + 1
+    def _claim(self, epoch: int | None = None):
+        """Hold the claim on ``epoch`` — by default ``version + 1``, the
+        next commit's; a fold's is ``-version`` (:meth:`fold_prepare`) —
+        and yield its directory, empty.  Two guards make a concurrent
+        writer fail LOUDLY instead of losing data: this claim (taken
+        before any file I/O — the leftover ``rmtree`` below may only run
+        while holding it) and the CAS of :meth:`_commit`.  The store is
+        still single-writer — one streaming sink and its folder,
+        maintenance only while it is stopped — and these guards turn a
+        violated assumption into an error."""
+        epoch = self.version + 1 if epoch is None else epoch
         epoch_dir = os.path.join(self.path, f"__epoch={epoch}")
         claim = COMMIT_BACKEND.claim_epoch(self.path, epoch, EPOCH_CLAIM_STALE_S)
         try:
@@ -505,13 +532,14 @@ class _SilverStore:
             # Crash recovery: epoch v+1 is by definition UNCOMMITTED (the
             # manifest holds v), so anything already under its dir is
             # leftovers of a publish that died between the file write and
-            # the manifest swap.  A replayed batch must not commit those
-            # alongside its own files — that would silently duplicate every
-            # row in the touched buckets.  Safe only under the claim + the
-            # version recheck: a LIVE concurrent writer can't be mid-write
-            # here (it would have failed the claim), and a committed epoch
-            # can't be mistaken for leftovers (the recheck would have
-            # failed).
+            # the manifest swap; so is fold epoch -v (a plan of snapshot v
+            # can only commit at a later version).  A replayed batch must
+            # not commit those alongside its own files — that would
+            # silently duplicate every row in the touched buckets.  Safe
+            # only under the claim + the version recheck: a LIVE concurrent
+            # writer can't be mid-write here (it would have failed the
+            # claim), and a committed epoch can't be mistaken for leftovers
+            # (the recheck would have failed).
             if os.path.isdir(epoch_dir):
                 shutil.rmtree(epoch_dir)
             yield epoch_dir
@@ -587,13 +615,7 @@ class _SilverStore:
         layouts = {"": (keys, m["files"])}
         layouts.update({f"__proj_{p}/": (s["keys"], s.get("files", []))
                         for p, s in projections.items()})
-        # EXPLICIT width: a bare repartition(col) starts at AQE's
-        # initialPartitionNum (2048) and AQE never coalesces user
-        # repartitions.  Hashing on __bucket puts each bucket in exactly
-        # one task (one key-sorted file per bucket at any width); core
-        # width, because a small trigger touches few buckets and more tasks
-        # are pure overhead.
-        width = max(1, min(len(replaced), df.sparkSession.sparkContext.defaultParallelism))
+        width = _core_width(df, len(replaced))
         files = {}
         with self._claim():
             if projections:
@@ -601,29 +623,12 @@ class _SilverStore:
                 df.persist()
             try:
                 for prefix, (sort, old) in layouts.items():
-                    edir = os.path.join(self.path, f"{prefix}__epoch={epoch}")
-                    if os.path.isdir(edir):  # crash leftovers, the claim's rule
-                        shutil.rmtree(edir)
-                    # Partitioned by __bucket ONLY, written INTO the epoch
-                    # dir (r9): with __epoch as a partition column its sort
-                    # key is a foldable literal that ConstantFolding strips
-                    # from our sort, so the writer added its own unstable
-                    # (epoch, bucket) sort and destroyed the in-bucket key
-                    # order.  Our (__bucket, keys) sort now satisfies the
-                    # writer's requirement by prefix: the order is
-                    # contractual.
-                    (df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-                     .repartition(width, "__bucket")
-                     .sortWithinPartitions("__bucket", *sort)
-                     .write.mode("append").options(**self._write_options())
-                     .partitionBy("__bucket").parquet(edir))
-                    written = [
-                        f"{prefix}__epoch={epoch}/{b}/{f}"
-                        for b in (sorted(os.listdir(edir)) if os.path.isdir(edir) else [])
-                        if b.startswith("__bucket=") and os.path.isdir(os.path.join(edir, b))
-                        for f in sorted(os.listdir(os.path.join(edir, b)))
-                        if f.endswith(".parquet")
-                    ]
+                    rel = f"{prefix}__epoch={epoch}"
+                    if os.path.isdir(os.path.join(self.path, rel)):
+                        shutil.rmtree(os.path.join(self.path, rel))  # crash leftovers, the claim's rule
+                    bucketed = df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
+                    written = self._write_buckets(
+                        bucketed.repartition(width, "__bucket"), sort, rel)
                     files[prefix] = [f for f in old if self._bucket_of(f) not in replaced] + written
                 kept = [f for f in m["files"] if self._bucket_of(f) not in replaced]
                 return self._commit({
@@ -640,6 +645,29 @@ class _SilverStore:
                 if projections:
                     df.unpersist()
 
+    def _write_buckets(self, bucketed: DataFrame, sort: list[str], rel: str) -> list[str]:
+        """Write ``bucketed`` — a ``__bucket`` column, each bucket in ONE
+        partition — into the store-relative dir ``rel`` as one file per
+        bucket sorted by ``sort``; returns the files, store-relative.
+
+        Partitioned by __bucket ONLY, written INTO the epoch dir (r9): with
+        __epoch as a partition column its sort key is a foldable literal
+        that ConstantFolding strips from our sort, so the writer added its
+        own unstable (epoch, bucket) sort and destroyed the in-bucket key
+        order.  Our (__bucket, keys) sort satisfies the writer's
+        requirement by prefix: the order is contractual."""
+        edir = os.path.join(self.path, rel)
+        (bucketed.sortWithinPartitions("__bucket", *sort)
+         .write.mode("append").options(**self._write_options())
+         .partitionBy("__bucket").parquet(edir))
+        return [
+            f"{rel}/{b}/{f}"
+            for b in (sorted(os.listdir(edir)) if os.path.isdir(edir) else [])
+            if b.startswith("__bucket=") and os.path.isdir(os.path.join(edir, b))
+            for f in sorted(os.listdir(os.path.join(edir, b)))
+            if f.endswith(".parquet")
+        ]
+
     def _union_schema(self, kept: list[str], df: DataFrame) -> T.StructType:
         """Union schema of the files the next version keeps plus ``df``.  A
         manifest without the union flag is upgraded once, from the kept
@@ -654,13 +682,20 @@ class _SilverStore:
 
     # -- merge-on-read ---------------------------------------------------
 
-    def publish_delta(self, rows: DataFrame, spec: dict) -> bool:
-        """Commit ``rows`` (one trigger's latest-wins rows, flag included)
-        as ONE key-sorted delta file: the new manifest keeps every base
-        file and appends the delta.  A column the store already holds
-        keeps its stored type (the batch is cast to it), so a delta never
-        narrows the schema readers apply to the base.  Returns False,
-        committing nothing, when ``rows`` is empty."""
+    def publish_delta(self, rows: DataFrame, spec: dict,
+                      plan: _FoldPlan | None = None) -> _SilverStore | None:
+        """Commit ``rows`` — one trigger's batch as it arrived, any number
+        of events per key — as ONE key-sorted delta file: the new manifest
+        keeps every base file and appends the delta.  The batch needs no
+        aggregate of its own: readers and the fold run latest-wins over
+        the delta rows as events (:meth:`_delta_rows`), and a max over a
+        superset of a key's events picks the same winner.  A column the
+        store already holds keeps its stored type (the batch is cast to
+        it), so a delta never narrows the schema readers apply to the
+        base.  ``plan``, a finished background fold, rides in the same
+        commit when it still applies (:meth:`_folded`).  Returns the
+        committed snapshot, or None — committing nothing — when ``rows``
+        is empty."""
         import pyarrow.parquet as pq
 
         stored = {f.name: f.dataType for f in self.schema.fields}
@@ -669,11 +704,12 @@ class _SilverStore:
             if f.name in stored and stored[f.name] != f.dataType
             and not isinstance(f.dataType, T.StructType)
         })
+        # a small batch is one task end to end — scan, sort, write, no
+        # exchange; a large one (a snapshot, a backfill) still parses at
+        # scan width before the one writing task
+        one = rows.coalesce(1) if _fits_one_task(rows) else rows.repartition(1)
         with self._claim() as epoch_dir:
-            # coalesce, not repartition: the one task that sorts and writes
-            # the file also runs the aggregate's final merge, over the same
-            # rows, instead of a second exchange
-            rows.coalesce(1).sortWithinPartitions(*spec["keys"]).write.options(
+            one.sortWithinPartitions(*spec["keys"]).write.options(
                 **self._write_options()
             ).parquet(epoch_dir)
             names = sorted(
@@ -683,26 +719,38 @@ class _SilverStore:
             )
             if not names:
                 shutil.rmtree(epoch_dir, ignore_errors=True)
-                return False
-            self._commit({
-                **self.manifest,
-                DELTAS: self.deltas + [f"__epoch={self.version + 1}/{f}" for f in names],
+                return None
+            base = (self._folded(plan) if plan is not None else None) or self
+            manifest = {
+                **base.manifest,
+                DELTAS: base.deltas + [f"__epoch={self.version + 1}/{f}" for f in names],
                 DELTA_SPEC: spec,
-                "schema": _merge_schemas(self.schema, rows.schema).json(),
-            })
-        return True
+                "schema": _merge_schemas(base.schema, rows.schema).json(),
+            }
+            return _SilverStore(self.path, {**manifest, "version": self._commit(manifest)})
 
-    def fold_due(self, spec: dict) -> bool:
-        """Whether the next keyed upsert trigger must fold.  Decided from
-        the manifest and driver-side file sizes — no Spark job.  An empty,
-        flat (pre-manifest) or pre-union-schema store always folds, so
-        does one with projections (their files stay exact), and one whose
-        deltas were written under different merge columns."""
+    def must_fold(self, spec: dict) -> bool:
+        """Whether the next keyed upsert trigger must fold inline, as its
+        one commit, instead of appending a delta.  Decided from the
+        manifest — no Spark job.  An empty, flat (pre-manifest) or
+        pre-union-schema store always folds, so does one with projections
+        (their files stay exact), one whose deltas were written under
+        different merge columns, and one holding ``3 × FOLD_DELTAS``
+        deltas (its background fold fell behind)."""
         if not self.manifest.get(SCHEMA_UNION) or self.projections:
             return True
-        if not (self.files or self.deltas) or len(self.deltas) >= FOLD_DELTAS:
+        if not (self.files or self.deltas) or len(self.deltas) >= 3 * FOLD_DELTAS:
             return True
-        if self.deltas and self.manifest[DELTA_SPEC] != spec:
+        return bool(self.deltas) and self.manifest[DELTA_SPEC] != spec
+
+    def fold_due(self) -> bool:
+        """Whether the deltas are due a background fold: FOLD_DELTAS of
+        them, or their bytes reach FOLD_BYTES_FRACTION of the base files'
+        bytes (which bounds the extra rows every read merges).  Driver-side
+        file sizes — no Spark job."""
+        if not self.deltas:
+            return False
+        if len(self.deltas) >= FOLD_DELTAS:
             return True
 
         def size(files):
@@ -711,9 +759,9 @@ class _SilverStore:
         return size(self.deltas) >= FOLD_BYTES_FRACTION * size(self.files)
 
     def fold(self, spark: SparkSession, events: DataFrame | None, spec: dict) -> None:
-        """The FOLD: :func:`_touched_bucket_merge` with ``events`` ∪ the
-        delta rows as the events, republishing the buckets they touch and
-        clearing the deltas in the SAME commit."""
+        """The inline FOLD: :func:`_touched_bucket_merge` with ``events`` ∪
+        the delta rows as the events, republishing the buckets they touch
+        at core width and clearing the deltas in the SAME commit."""
         if self.deltas:
             deltas = self._delta_rows(spark)
             events = deltas if events is None else events.unionByName(
@@ -730,6 +778,188 @@ class _SilverStore:
             edits={DELTAS: []},
         )
 
+    def fold_prepare(self, spark: SparkSession) -> _FoldPlan | None:
+        """The background fold's first step, which commits nothing: merge
+        base ∪ this snapshot's deltas over the buckets the deltas touch,
+        and write those buckets' files under fold epoch ``-version``.
+        That claim namespace is the fold's own, so a fold in flight never
+        holds the epoch of the next commit.  Under :func:`_fits_one_task`
+        the merge, sort and write run in one task, which leaves the other
+        cores to triggers and reads; above it, at core width.  Vacuum
+        leaves the output alone until the plan is spent.  None when there
+        is nothing to fold."""
+        if not self.deltas:
+            return None
+        spec = self.manifest[DELTA_SPEC]
+        keys = spec["keys"]
+        outputs = _folder(self.path).outputs
+        with self._claim(-self.version) as edir:
+            rel = os.path.basename(edir)
+            outputs.add(rel)
+            try:
+                events = self._delta_rows(spark)
+                buckets = self.touched(events, keys)
+                merged = merge_touched(
+                    events, self.base(spark, buckets), keys, spec["version_col"],
+                    spec["tiebreak_col"], spec["op_col"],
+                )
+                bucketed = merged.withColumn("__bucket", _bucket_expr(keys, self.n_buckets))
+                if _fits_one_task(merged):
+                    bucketed = bucketed.coalesce(1)
+                else:
+                    bucketed = bucketed.repartition(_core_width(merged, len(buckets)), "__bucket")
+                written = self._write_buckets(bucketed, keys, rel)
+            except BaseException:
+                outputs.discard(rel)
+                raise
+        return _FoldPlan(
+            rel=rel, n_buckets=self.n_buckets, keys=list(keys), deltas=list(self.deltas),
+            buckets=buckets, written=written, schema=merged.schema,
+            replaced=[f for f in self.files if self._bucket_of(f) in buckets],
+        )
+
+    def _folded(self, plan: _FoldPlan) -> _SilverStore | None:
+        """This snapshot with ``plan`` applied, uncommitted: the plan's
+        buckets take its files and its deltas leave the front of the delta
+        list, while every other manifest field — replay watermarks,
+        schema, bloom columns, later deltas — is this snapshot's.  None
+        when the store moved under the plan: another width or a
+        projection, other files in its buckets, deltas[0:k] not the ones
+        it folded, or a file of it gone."""
+        k = len(plan.deltas)
+        if (self.n_buckets != plan.n_buckets or self.projections
+                or self.deltas[:k] != plan.deltas
+                or [f for f in self.files if self._bucket_of(f) in plan.buckets] != plan.replaced
+                or not all(os.path.exists(os.path.join(self.path, f)) for f in plan.written)):
+            return None
+        return _SilverStore(self.path, {
+            **self.manifest,
+            "files": [f for f in self.files if self._bucket_of(f) not in plan.buckets]
+            + plan.written,
+            DELTAS: self.deltas[k:],
+            "schema": _merge_schemas(self.schema, plan.schema).json(),
+            "sort_keys": plan.keys,
+        })
+
+    def fold_commit(self, plan: _FoldPlan) -> bool:
+        """The background fold's second step as a commit of its own
+        (``open(fold_first=True)``; a running sink carries the plan in its
+        next delta commit instead): commit this snapshot with ``plan``
+        applied (:meth:`_folded`) as the next version.  Returns False,
+        committing nothing, when the plan no longer applies; its files
+        are then garbage for vacuum.  Either way the plan is spent."""
+        try:
+            folded = self._folded(plan)
+            if folded is None:
+                return False
+            self.edit(folded.manifest)
+            return True
+        finally:
+            _folder(self.path).outputs.discard(plan.rel)
+
+
+@dataclass
+class _FoldPlan:
+    """A prepared background fold (:meth:`_SilverStore.fold_prepare`):
+    the deltas it folded, the bucket files it replaces and the files it
+    wrote under its fold epoch dir ``rel``."""
+
+    rel: str
+    n_buckets: int
+    keys: list[str]
+    deltas: list[str]
+    buckets: set[int]
+    replaced: list[str]
+    written: list[str]
+    schema: T.StructType
+
+
+class _Folder:
+    """The background fold of one store in this process (:func:`_folder`).
+    At most one fold is in flight per store, on a daemon thread that is
+    alive only while it runs :meth:`_SilverStore.fold_prepare`; the plan
+    it leaves waits for the next commit to spend it.  The fold never
+    commits by itself, so it cannot race the sink's commit.  ``outputs``
+    names the fold epoch dirs being written or held by an unspent plan —
+    vacuum skips them — and ``vacuum_seen`` the last version the vacuum
+    cadence checked."""
+
+    def __init__(self) -> None:
+        self._mu = threading.Lock()
+        self._thread: threading.Thread | None = None
+        self.plan: _FoldPlan | None = None
+        #: the last fold's failure (None after a fold that succeeds); the
+        #: deltas stay readable and the next due trigger folds again
+        self.error: Exception | None = None
+        self.outputs: set[str] = set()
+        self.vacuum_seen: int | None = None
+
+    def start(self, store: _SilverStore, spark: SparkSession) -> None:
+        """Fold ``store``'s deltas in the background, unless a fold is in
+        flight or its plan is not spent yet."""
+        with self._mu:
+            if self.plan is not None or (self._thread is not None and self._thread.is_alive()):
+                return
+            self._thread = threading.Thread(
+                target=self._run, args=(store, spark), daemon=True,
+                name=f"silver-fold {store.path}",
+            )
+            self._thread.start()
+
+    def _run(self, store: _SilverStore, spark: SparkSession) -> None:
+        try:
+            plan = store.fold_prepare(spark)
+        except Exception as e:  # the thread's boundary: keep the sink running
+            self.error = e
+            warnings.warn(f"background fold of {store.path} failed, its deltas stay "
+                          f"and the next due trigger folds again: {e!r}", RuntimeWarning)
+            return
+        with self._mu:
+            self.plan, self.error = plan, None
+
+    def wait(self, timeout_s: float | None = None) -> bool:
+        """Wait for the in-flight fold; True when none is left running."""
+        t = self._thread
+        if t is not None:
+            t.join(timeout_s)
+        return t is None or not t.is_alive()
+
+    def settle(self) -> _FoldPlan | None:
+        """Wait for the in-flight fold and take its unspent plan."""
+        self.wait()
+        with self._mu:
+            plan, self.plan = self.plan, None
+        return plan
+
+    def spent(self, plan: _FoldPlan | None) -> None:
+        """``plan`` went into a commit, applied or found stale."""
+        if plan is None:
+            return
+        with self._mu:
+            if self.plan is plan:
+                self.plan = None
+        self.outputs.discard(plan.rel)
+
+
+_FOLDERS: dict[str, _Folder] = {}
+_FOLDERS_MU = threading.Lock()
+
+
+def _folder(path: str) -> _Folder:
+    """The :class:`_Folder` of the store at ``path``."""
+    with _FOLDERS_MU:
+        return _FOLDERS.setdefault(os.path.abspath(path), _Folder())
+
+
+def _core_width(df: DataFrame, n_buckets: int) -> int:
+    """Write width of ``n_buckets`` buckets: EXPLICIT, because a bare
+    repartition(col) starts at AQE's initialPartitionNum (2048) and AQE
+    never coalesces user repartitions.  Hashing on __bucket puts each
+    bucket in exactly one task (one key-sorted file per bucket at any
+    width); at most core width, because a small publish touches few
+    buckets and more tasks are pure overhead."""
+    return max(1, min(n_buckets, df.sparkSession.sparkContext.defaultParallelism))
+
 
 def _touched_bucket_merge(
     batch: DataFrame,
@@ -740,7 +970,8 @@ def _touched_bucket_merge(
     edits: dict | None = None,
 ) -> None:
     """The eager touched-bucket merge: every summing/collapsing-sink
-    trigger, and the keyed upsert sinks' FOLD (see :func:`_cdc_upsert`).
+    trigger, and the keyed upsert sinks' inline FOLD (see
+    :func:`_cdc_upsert`).
     Compute the batch's touched buckets from ``prepare(batch)``, load ONLY
     those buckets' base files of ``store``, delegate the merge to
     ``merge_fn(current_or_None, prepared)``, publish it, and run vacuum on
@@ -772,35 +1003,55 @@ def _touched_bucket_merge(
 
 
 def _vacuum_on_cadence(path: str, version: int, every: int = 16) -> None:
-    # vacuum walks the store tree (O(files), not O(touched)) — run it on a
-    # cadence, not per trigger, so steady-state trigger cost stays bounded
-    # by what the trigger writes; grace still protects readers
-    if version % every == 0:
+    """Vacuum once every ``every`` versions: vacuum walks the store tree
+    (O(files), not O(touched)), so running it on a cadence, not per
+    trigger, keeps steady-state trigger cost bounded by what the trigger
+    writes; grace still protects readers.  Every commit counts, not only
+    the caller's: the cadence fires when the versions since its last check
+    passed a multiple of ``every``, so a commit by another writer that
+    lands on the multiple does not skip a round."""
+    folder = _folder(path)
+    seen, folder.vacuum_seen = folder.vacuum_seen, version
+    if seen is None or seen >= version:
+        seen = version - 1
+    if version // every > seen // every:
         vacuum_silver(path)
 
 
 def _cdc_upsert(batch: DataFrame, path: str, keys: list[str], n_buckets: int,
                 version_col: str, tiebreak_col: str | None, op_col: str = "op",
                 legacy_mode: str = "migrate") -> None:
-    """One trigger of a keyed upsert sink, merge-on-read: the batch's
-    latest-wins rows (``apply_cdc`` in rewrite mode — the store keeps
-    tombstones across batches) become ONE delta file and ONE manifest
-    commit; there is no touched-bucket collect and no read of current
-    rows.  Readers apply FINAL over base ∪ deltas
-    (:meth:`_SilverStore.read`).  When :meth:`_SilverStore.fold_due`, the
-    trigger is the fold instead — the touched-bucket merge of batch ∪
-    deltas — and is still exactly one commit.  ``legacy_mode`` other than
-    ``"migrate"`` refuses a pre-manifest flat store."""
+    """One trigger of a keyed upsert sink, merge-on-read: the batch as it
+    arrived becomes ONE delta file and ONE manifest commit — no aggregate,
+    no touched-bucket collect, no read of current rows.  Readers apply
+    FINAL over base ∪ deltas (:meth:`_SilverStore.read`).
+
+    Merges leave the trigger.  Once the deltas are
+    :meth:`_SilverStore.fold_due`, the trigger hands them to the store's
+    background fold (:class:`_Folder`); the plan it prepares rides in a
+    later trigger's delta commit, so every trigger stays exactly one
+    commit.  The trigger folds inline — the touched-bucket merge of
+    batch ∪ deltas, as its one commit — only when it must
+    (:meth:`_SilverStore.must_fold`), after waiting out a fold in flight.
+    ``legacy_mode`` other than ``"migrate"`` refuses a pre-manifest flat
+    store."""
     spec = {"keys": list(keys), "version_col": version_col,
             "tiebreak_col": tiebreak_col, "op_col": op_col}
+    spark = batch.sparkSession
+    folder = _folder(path)
     store = _SilverStore.load_or_new(path, n_buckets, migrate=legacy_mode == "migrate")
-    if store.fold_due(spec):
-        store.fold(batch.sparkSession, batch, spec)
-    elif store.publish_delta(
-        apply_cdc(batch, keys, version_col, tiebreak_col, op_col, delete_mode="rewrite"),
-        spec,
-    ):
-        _vacuum_on_cadence(path, store.version + 1)
+    if store.must_fold(spec):
+        folder.spent(folder.settle())  # the inline fold supersedes its plan
+        store.fold(spark, batch, spec)
+        return
+    plan = folder.plan
+    committed = store.publish_delta(batch, spec, plan)
+    if committed is None:
+        return
+    folder.spent(plan)
+    if committed.fold_due():
+        folder.start(committed, spark)
+    _vacuum_on_cadence(path, committed.version)
 
 
 #: marker file under the store's ``_signals/`` dir while an ad-hoc
@@ -852,9 +1103,10 @@ def silver_upsert_stream(
 ) -> StreamingQuery:
     """S8 — the ReplacingMergeTree-equivalent keyed upsert sink: per
     micro-batch, add the batch to the silver store with latest-wins
-    semantics.  The store is merge-on-read: a trigger appends one delta
-    file and ``read_silver`` applies FINAL, so readers must go through
-    ``read_silver`` (or the other store readers) rather than the files.
+    semantics.  The store is merge-on-read: a trigger appends the batch
+    as one delta file and ``read_silver`` applies FINAL, so readers must
+    go through ``read_silver`` (or the other store readers) rather than
+    the files.
 
     The store ALWAYS retains tombstones (``__deleted`` rows) internally:
     physically dropping a delete would lose its version, so an older
@@ -864,12 +1116,15 @@ def silver_upsert_stream(
     behavior) and exposes them with ``include_deleted=True``
     (abcsvb-connector-secure.json:33-34).
 
-    Per trigger, the batch's latest-wins rows become one key-sorted delta
-    file and one manifest commit; every few triggers (``_SilverStore.fold_due``) the
-    trigger is the fold instead, which reads, merges and re-publishes only
-    the hash buckets containing batch or delta keys — untouched buckets'
-    files are not opened, written, or moved (see the store-layout
-    contract in the module docstring).
+    Per trigger, the batch's rows become one key-sorted delta file and
+    one manifest commit, written by one single-task Spark job.  Once the
+    deltas are due (``_SilverStore.fold_due``), a background fold reads,
+    merges and re-writes only the hash buckets containing delta keys —
+    untouched buckets' files are not opened, written, or moved — and the
+    next trigger's commit carries its result (see the store-layout
+    contract in the module docstring).  The fold thread outlives
+    ``query.stop()`` only until its fold ends; maintenance ops wait for
+    it.
 
     foreachBatch because the merge is keyed state over an external store;
     the merge itself is `operators.upsert.merge_touched` (batch-tested
@@ -1154,9 +1409,11 @@ def vacuum_silver(
     manifest references anymore, once older than ``grace_s`` (grace
     covers readers that loaded a previous manifest — their snapshot stays
     intact for at least that long; the Delta ``VACUUM`` analogue).  The
-    streaming sink runs it automatically every 16 publishes (it walks the
-    store tree — O(files) — so per-trigger would break the trigger's
-    bound), keeping a long-running stream's dead files bounded.  Returns the number of files deleted.
+    streaming sink runs it automatically once every 16 versions (it walks
+    the store tree — O(files) — so per-trigger would break the trigger's
+    bound), keeping a long-running stream's dead files bounded.  The
+    epoch dir of a background fold in flight, or of its unspent plan, is
+    not swept.  Returns the number of files deleted.
 
     ``retain_versions`` (r7, time travel): additionally pin the files of
     the newest N HISTORY versions, so ``read_silver(as_of_version=...)``
@@ -1199,7 +1456,10 @@ def vacuum_silver(
     # their files are manifest-listed (store-root-relative), so dead
     # projection epochs — and the whole subtree of a DROPPED projection —
     # age out with the grace period like any other dead file
-    sweep_roots = [e for e in os.listdir(path) if e.startswith("__epoch=")]
+    # an in-flight fold's epoch dir (its Spark _temporary tree holds no
+    # parquet yet) and an unspent fold plan's files are not dead
+    busy = set(_folder(path).outputs)
+    sweep_roots = [e for e in os.listdir(path) if e.startswith("__epoch=") and e not in busy]
     for proj_dir in (e for e in os.listdir(path) if e.startswith("__proj_")):
         sweep_roots += [
             os.path.join(proj_dir, e)

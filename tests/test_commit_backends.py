@@ -390,3 +390,67 @@ def test_metadata_edit_fails_a_stale_publish_loudly(spark, dirs, commit_backend,
     else:
         assert "p" not in edited["projections"]
     assert {r.id for r in pl.read_silver(spark, path).collect()} == {1, 2, 3}
+
+
+# ---------------------------------------------------------------------------
+# the background fold against the other writers (no threads: each step is
+# called in the racing order)
+# ---------------------------------------------------------------------------
+
+_SPEC = {"keys": ["id"], "version_col": "ts_ms", "tiebreak_col": "offset", "op_col": "op"}
+
+
+def _delta(spark, path, rows, plan=None):
+    return pl._SilverStore.load(path).publish_delta(
+        spark.createDataFrame(rows, EVENT_SCHEMA), _SPEC, plan)
+
+
+def _state(spark, path):
+    return {r.id: r.val for r in pl.read_silver(spark, path).collect()}
+
+
+def test_fold_races_an_append_and_keeps_it(spark, dirs, commit_backend):
+    """A fold prepared at v while the sink appends at v+1 still applies:
+    committed on its own or carried by the next delta commit, it replaces
+    its buckets and keeps every delta appended after it."""
+    _seed_store(spark, dirs)
+    path = dirs["silver"]
+    _delta(spark, path, [(1, "a2", "u", 200, 11)])
+    plan = pl._SilverStore.load(path).fold_prepare(spark)
+    raced = _delta(spark, path, [(2, "b2", "u", 200, 21)])
+    assert pl._SilverStore.load(path).fold_commit(plan)
+    m = pl._read_manifest(path)
+    assert m["version"] == raced.version + 1 and m[pl.DELTAS] == raced.deltas[1:]
+    assert any(f.startswith(f"{plan.rel}/") for f in m["files"])
+    assert _state(spark, path) == {1: "a2", 2: "b2", 3: "c1"}
+
+    plan = pl._SilverStore.load(path).fold_prepare(spark)  # folds b2's delta
+    raced = _delta(spark, path, [(3, "c2", "u", 200, 31)])
+    carried = _delta(spark, path, [(1, None, "d", 300, 12)], plan)
+    assert carried.version == raced.version + 1
+    assert carried.deltas == raced.deltas[1:] + carried.deltas[-1:] and len(carried.deltas) == 2
+    assert pl._read_manifest(path) == carried.manifest
+    assert _state(spark, path) == {2: "b2", 3: "c2"}
+
+
+def test_fold_loses_to_a_mutation_and_commits_nothing(spark, dirs, commit_backend):
+    """A mutation between prepare and commit folds the deltas itself and
+    rewrites the bucket: the plan no longer applies, so neither its own
+    commit nor a delta commit carrying it lands it, and vacuum collects
+    its files."""
+    from pyspark.sql import functions as F
+
+    _seed_store(spark, dirs)
+    path = dirs["silver"]
+    _delta(spark, path, [(1, "a2", "u", 200, 11)])
+    plan = pl._SilverStore.load(path).fold_prepare(spark)
+    assert pl.mutate_silver(spark, path, ["id"], F.col("id") == 1, delete=True) == 1
+    mutated = pl._read_manifest(path)
+    assert not pl._SilverStore.load(path).fold_commit(plan)
+    assert pl._read_manifest(path) == mutated
+    carried = _delta(spark, path, [(3, "c2", "u", 200, 31)], plan)
+    assert carried.version == mutated["version"] + 1 and carried.files == mutated["files"]
+    assert _state(spark, path) == {2: "b1", 3: "c2"}
+    pl.vacuum_silver(path, grace_s=0)
+    assert not any(os.path.exists(os.path.join(path, f)) for f in plan.written)
+    assert _state(spark, path) == {2: "b1", 3: "c2"}

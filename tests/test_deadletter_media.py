@@ -23,6 +23,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from postgres_debezium_clickhouse_spark.operators.audio import (
+    audio_energy_windows,
     decode_audio,
     decode_waveforms,
     synth_waveforms,
@@ -31,7 +32,9 @@ from postgres_debezium_clickhouse_spark.operators.audio import (
 from postgres_debezium_clickhouse_spark.operators.imaging import (
     decode_image,
     decode_images,
+    dhash_images,
     png_encode,
+    resize_images,
     synth_images,
 )
 from postgres_debezium_clickhouse_spark.operators.video import (
@@ -148,3 +151,27 @@ def test_deadletter_audio_and_video_routing(spark):
     assert vrows[0].frame_index is None
     clean = [r for r in video.collect() if r.doc_id != 5]
     assert all(r.err is None for r in clean)
+
+
+_DEADLETTER_OPS = {
+    "decode_images": decode_images,
+    "resize_images": lambda df, strict: resize_images(df, 4, 4, strict=strict),
+    "dhash_images": dhash_images,
+    "decode_waveforms": decode_waveforms,
+    "audio_energy_windows": audio_energy_windows,
+    "decode_video_frames": decode_video_frames,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_DEADLETTER_OPS))
+def test_deadletter_null_blob_is_an_err_row(spark, op):
+    """A NULL media value is a corrupt blob: one err row under
+    ``strict=False`` (next to the junk blob's), a failed job under
+    ``strict=True``."""
+    df = spark.createDataFrame([(1, None), (2, b"junk")], "doc_id long, media binary")
+    rows = _DEADLETTER_OPS[op](df, strict=False).collect()
+    assert sorted(r.doc_id for r in rows) == [1, 2]
+    assert all(r.err for r in rows)
+    assert [r.err for r in rows if r.doc_id == 1] == ["NULL media value"]
+    with pytest.raises(Exception):
+        _DEADLETTER_OPS[op](df.filter("doc_id = 1"), strict=True).collect()

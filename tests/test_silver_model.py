@@ -1,11 +1,12 @@
 """Stateful model test of the keyed silver store: upsert triggers (with
 out-of-order versions, duplicate deliveries, deletes and a batch that
-adds a column), mutations, compaction, rebucketing, restores, vacuum,
-time travel and version diffs, interleaved by hypothesis and checked
-against a Python dict after every step.  Run at both ends of the
-merge-on-read fold cadence: a fold on every trigger (the eager store)
-and never a fold (every trigger a delta, folded only by the other
-writers)."""
+adds a column), the background fold's two steps (called here with no
+thread, so other writers can land between them), mutations, compaction,
+rebucketing, restores, vacuum, time travel and version diffs,
+interleaved by hypothesis and checked against a Python dict after every
+step.  Run at both ends of the merge-on-read fold cadence: a fold on
+every trigger (the eager store) and never a fold (every trigger a delta,
+folded only by the other writers)."""
 
 from __future__ import annotations
 
@@ -54,6 +55,7 @@ class SilverModel(RuleBasedStateMachine):
         self.recent: list[int] = []
         self.versions: dict[int, tuple[dict, bool]] = {}
         self.readable: set[int] = set()
+        self.plan = None  # a prepared fold not committed yet
 
     # -- bookkeeping ---------------------------------------------------
 
@@ -108,6 +110,27 @@ class SilverModel(RuleBasedStateMachine):
         self.wide |= wide
         self.recent = sorted(winners)
         self._commit(before, pre, pre_wide)
+
+    @rule()
+    def fold_prepare(self):
+        """The background fold's first step: a plan of the current deltas
+        (None when there are none), its files written, nothing committed."""
+        store = pl._SilverStore.load(self.path)
+        if self.plan is None and store is not None:
+            self.plan = store.fold_prepare(self.spark)
+
+    @rule()
+    def fold_commit(self):
+        """The second step, on the store as it is now: the plan commits
+        when its buckets and the deltas it folded are unchanged, keeping
+        every later delta; else nothing commits.  The rows are the
+        model's either way."""
+        if self.plan is None:
+            return
+        before = self._version()
+        pl._SilverStore.load(self.path).fold_commit(self.plan)
+        self.plan = None
+        self._commit(before, self.rows, self.wide)
 
     @rule(data=st.data(), delete=st.booleans())
     def mutate(self, data, delete):
@@ -212,22 +235,32 @@ class SilverModel(RuleBasedStateMachine):
 
 #: one fixed walk through every rule, the invariant checked after each
 #: step: out-of-order versions, re-delivered events, deletes and a batch
-#: that adds a column, then the maintenance ops on keys the last trigger
-#: wrote (a live and a deleted key for ``mutate``), a restore to the
-#: narrow schema, a tombstone-dropping compaction and a vacuum before
-#: the last time-travel reads.  ``data`` entries pick the drawn value
-#: from the model's state.
+#: that adds a column; a fold prepared before a trigger and a vacuum
+#: and committed after them (the later delta must survive), and one
+#: prepared before a mutation (it must not commit); then the maintenance
+#: ops on keys the last trigger wrote (a live and a deleted key for
+#: ``mutate``), a restore to the narrow schema, a tombstone-dropping
+#: compaction and a vacuum before the last time-travel reads.  ``data``
+#: entries pick the drawn value from the model's state.
 WALK = [
     ("two_triggers", {"first": ([(0, "x", "c", 3), (1, "y", "c", 2), (2, "z", "c", 4),
                                  (3, "x", "c", 1)], False, [1]),
                       "second": ([(1, "z", "u", 5), (2, "x", "d", 6), (0, "y", "u", 1),
                                   (4, "x", "c", 7)], False, [])}),
+    ("fold_prepare", {}),
+    ("upsert", {"batch": ([(2, "y", "u", 7), (1, "x", "u", 4), (5, "z", "c", 2)],
+                          False, [0])}),
+    ("vacuum", {"retain": 3}),
+    ("as_of", {"data": lambda m: min(m.readable)}),
+    ("fold_commit", {}),
     ("mutate", {"data": lambda m: 1, "delete": False}),
     ("as_of", {"data": lambda m: min(m.readable)}),
     ("upsert", {"batch": ([(3, "z", "u", 8), (5, "y", "c", 9), (1, "x", "d", 10)],
                           True, [0, 2])}),
     ("diff", {"data": lambda m: min(m.readable)}),
+    ("fold_prepare", {}),
     ("mutate", {"data": lambda m: 5, "delete": True}),
+    ("fold_commit", {}),
     ("mutate", {"data": lambda m: 2, "delete": False}),
     ("compact", {"horizon": None}),
     ("upsert", {"batch": ([(4, "y", "u", 11), (0, "z", "u", 12), (4, "x", "d", 2)],

@@ -1,9 +1,10 @@
 """The keyed silver sink's per-trigger contract: the one-aggregate
 touched-bucket merge keeps stored tombstones, the manifest's union schema
-replaces footer reads, a delta trigger writes one file in at most three
-jobs, and a folding trigger stays within its job, stage-name and
-task-width budget with one key-sorted file per bucket — each trigger one
-claim and one manifest commit."""
+replaces footer reads, a delta trigger writes the batch as one file in
+one single-task job, an inline fold stays within its job, stage-name and
+task-width budget with one key-sorted file per bucket, and a background
+fold lands in the next delta's commit — each trigger one claim and one
+manifest commit."""
 
 from __future__ import annotations
 
@@ -254,28 +255,27 @@ def _check_state(spark, store, batch):
 
 
 def test_delta_trigger_budget(spark, tmp_path, monkeypatch):
-    """A steady-state trigger between folds appends ONE delta: at most 3
-    Spark jobs (the batch's latest-wins aggregate and its write), exactly
-    one parquet file written, one epoch claim, one CAS commit, the base
-    file list unchanged, and no stage wider than the cores plus the
-    batch's one input file.  Opening the merged read runs no job."""
+    """A steady-state trigger between folds appends ONE delta holding
+    exactly the batch's rows, key-sorted — no per-trigger aggregate, so
+    the readers' FINAL sees every event — in ONE Spark job of ONE task:
+    exactly one parquet file written, one epoch claim, one CAS commit and
+    the base file list unchanged.  Opening the merged read runs no job."""
     monkeypatch.setattr(pl, "FOLD_DELTAS", 16)
     store, batch, jobs, backend, before, files_before = _measured_trigger(
         spark, tmp_path, monkeypatch)
 
-    assert 0 < len(jobs) <= 3, len(jobs)
+    assert len(jobs) == 1, len(jobs)
     stages = ran_stages(spark, jobs)
-    assert not [s.name for s in stages if s.name.startswith("parquet at")]
-    cores = spark.sparkContext.defaultParallelism
-    assert max(s.numTasks for s in stages) <= cores + 1, [(s.name, s.numTasks) for s in stages]
+    assert [s.numTasks for s in stages] == [1], [(s.name, s.numTasks) for s in stages]
     assert (backend.claims, backend.commits) == (1, 1)
     m = _manifest(store)
     written = _parquet_files(store) - files_before
     assert len(written) == 1 and m[pl.DELTAS] == before[pl.DELTAS] + sorted(written)
     assert m["files"] == before["files"] and len(m[pl.DELTAS]) == 2
     assert m["version"] == before["version"] + 1
-    keys = [r.id for r in spark.read.parquet(os.path.join(store, *written)).collect()]
-    assert keys == sorted(keys) and len(keys) == len({r[0] for r in batch})
+    delta = spark.read.parquet(os.path.join(store, *written))
+    assert delta.columns == ["id", "val", "op", "ts_ms", "offset"]
+    assert [tuple(r) for r in delta.collect()] == sorted(batch)
 
     with spark_jobs(spark) as open_jobs:
         pl.read_silver(spark, store)
@@ -328,10 +328,13 @@ def test_fold_trigger_budget_and_layout(spark, tmp_path, monkeypatch):
     _check_state(spark, store, batch)
 
 
-def test_fold_clears_every_delta_in_the_trigger_commit(spark, tmp_path, monkeypatch):
-    """With the cadence at 2, triggers go delta, delta, fold: the fold
-    republishes the buckets of its batch AND of both deltas, in the one
-    commit of its trigger, and every trigger is one version."""
+def test_background_fold_rides_in_the_next_delta_commit(spark, tmp_path, monkeypatch):
+    """With the cadence at 2, the second delta makes the deltas due: that
+    trigger starts the background fold and commits only its delta.  The
+    fold's plan rides in the third trigger's one commit, which
+    republishes the buckets of both folded deltas from fold epoch
+    ``-version`` and keeps only its own delta; every trigger is one
+    version."""
     monkeypatch.setattr(pl, "FOLD_DELTAS", 2)
     store, src, ckpt = str(tmp_path / "silver"), str(tmp_path / "src"), str(tmp_path / "c")
     _upsert(spark, [(i, f"v{i}", "c", 1, i) for i in range(300)], src, store, ckpt)
@@ -340,12 +343,17 @@ def test_fold_clears_every_delta_in_the_trigger_commit(spark, tmp_path, monkeypa
                [(40, "c", "u", 2, 0)]]
     for n, rows in enumerate(batches, 1):
         _upsert(spark, rows, f"{src}{n}", store, f"{ckpt}{n}")
+        if n == 2:
+            folder = pl._folder(store)
+            assert folder.wait(120) and folder.plan is not None and folder.error is None
         m = _manifest(store)
         assert m["version"] == v0 + n
-        assert len(m[pl.DELTAS]) == (n if n < 3 else 0)
-    epoch = f"__epoch={m['version']}/"
-    assert {_bucket(f) for f in m["files"] if f.startswith(epoch)} == set(
-        _bucket_of(spark, [10, 20, 30, 40], 64).values())
+        assert len(m[pl.DELTAS]) == (n if n < 3 else 1)
+    assert m[pl.DELTAS][0].startswith(f"__epoch={v0 + 3}/")
+    fold_epoch = f"__epoch={-(v0 + 2)}/"
+    assert {_bucket(f) for f in m["files"] if f.startswith(fold_epoch)} == set(
+        _bucket_of(spark, [10, 20, 30], 64).values())
+    assert pl._folder(store).plan is None and not pl._folder(store).outputs
     live = {r.id: r.val for r in pl.read_silver(spark, store).collect()}
     assert len(live) == 299 and 30 not in live
     assert (live[10], live[20], live[40]) == ("a", "b", "c")
