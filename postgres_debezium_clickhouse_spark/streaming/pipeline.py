@@ -35,10 +35,14 @@ daemon thread per store, alive only while it folds) reads, merges and
 re-writes only the buckets whose keys appear in the deltas, in one task
 when they are small, and leaves a plan that the next trigger's delta
 commit carries — every other bucket's files are untouched.  A trigger
-folds inline only when it must (an empty, legacy or projected store, or
-deltas piling up past ``3 × FOLD_DELTAS``).  A trigger lists no
-directories and reads no parquet footers: the manifest names every live
-file and records the store's union schema.
+folds inline only when it must (an empty, legacy, pre-union-schema or
+projected store, deltas written under other merge columns, or deltas
+piling up past ``3 × FOLD_DELTAS``).  Inline or in the background, a
+fold is the same three steps as every other base-bucket rewrite: the
+store's one touched-bucket merge, its one bucket writer and its one
+plan-applying manifest builder.  A trigger lists no directories and
+reads no parquet footers: the manifest names every live file and
+records the store's union schema.
 
 Silver store layout (manifest-committed, bucketed)::
 
@@ -64,10 +68,11 @@ publish is in flight; replaced files stay on disk until
 One class owns this layout and the manifest format: ``_SilverStore``, a
 snapshot of one committed manifest.  Every trigger, maintenance op and
 reader goes through it — manifest reads, the live files per layout, the
-touched-bucket collect, the FINAL read, the bucket and delta publishes,
-the fold, metadata edits, legacy flat-store migration and vacuum's live
-set — and tests/test_silver_store_guard.py keeps manifest access out of
-every other function.
+touched-bucket merge, the FINAL read, the bucket writer and the delta
+publish, applying a rewrite plan to the manifest, metadata edits,
+legacy flat-store migration and vacuum's live set — and
+tests/test_silver_store_guard.py keeps manifest access, a second merge
+and a second bucket writer out of every other function.
 
 Writer contract: ONE writer per store — the streaming sink plus its
 background fold, in one process (run ``compact_silver`` only while the
@@ -99,7 +104,7 @@ import time
 import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -251,9 +256,18 @@ class _SilverStore:
     — is version + 1 through the one commit path (:meth:`_claim`, then
     :meth:`_commit` with a CAS on the snapshot's version), so a writer
     whose snapshot went stale fails loudly instead of overwriting the
-    newer version.  A background fold's first step
-    (:meth:`fold_prepare`) writes under a claim of its own and commits
-    nothing."""
+    newer version.
+
+    Every base-bucket rewrite takes the same three steps: the one
+    touched-bucket merge (:meth:`merge`; the summing, collapsing and
+    transaction triggers pass their own merge function), the one bucket
+    writer (:meth:`_write_plan`, which returns a :class:`_FoldPlan`) and
+    the one plan-applying manifest builder (:meth:`_folded`).
+    :meth:`publish` — and through it the inline fold — writes epoch
+    version + 1 at core width under its commit's claim.  A background
+    fold's first step (:meth:`fold_prepare`) writes fold epoch
+    ``-version`` under a claim of its own and commits nothing; its plan
+    rides in a later commit."""
 
     def __init__(self, path: str, manifest: dict, legacy: list[str] | None = None):
         self.path, self.manifest = path, manifest
@@ -316,7 +330,9 @@ class _SilverStore:
             if plan is not None and store.fold_commit(plan):
                 store = cls.load(path)
             if store.deltas:
-                store.fold(spark, None, store.manifest[DELTA_SPEC])
+                merged, buckets = store.merge(spark, None, store.manifest[DELTA_SPEC])
+                store.publish(merged, store.manifest[DELTA_SPEC]["keys"], buckets, {DELTAS: []})
+                _vacuum_on_cadence(path, store.version + 1)
                 store = cls.load(path)
         return store
 
@@ -588,62 +604,75 @@ class _SilverStore:
             opts[f"parquet.bloom.filter.expected.ndv#{c}"] = str(ndv)
         return opts
 
+    def merge(self, spark: SparkSession, events: DataFrame | None, spec: dict,
+              merge_fn: Callable | None = None) -> tuple[DataFrame, set[int]] | None:
+        """The one touched-bucket merge, of every base-bucket rewrite that
+        folds rows in: ``events`` ∪ this snapshot's delta rows merged over
+        the base rows of the buckets they touch by ``spec["keys"]`` (every
+        bucket of an adopted flat store), with those buckets; None when
+        nothing is touched.  The merge is ``merge_fn(current_or_None,
+        events)``, by default the keyed sinks' latest-wins
+        :func:`merge_touched` by ``spec``'s version, tiebreak and op
+        columns.  Runs the touched-bucket collect; a caller whose events
+        are a live batch persists them first, since the merge reads them
+        again."""
+        if self.deltas:
+            rows = self._delta_rows(spark)
+            events = rows if events is None else events.unionByName(rows, allowMissingColumns=True)
+        keys = spec["keys"]
+        buckets = self.all_buckets if self.legacy else self.touched(events, keys)
+        if not buckets:
+            return None
+        merge_fn = merge_fn or (lambda current, ev: merge_touched(
+            ev, current, keys, spec["version_col"], spec["tiebreak_col"], spec["op_col"]))
+        return merge_fn(self.base(spark, buckets), events), buckets
+
     def publish(self, df: DataFrame, keys: list[str], replaced: set[int],
                 edits: dict | None = None) -> int:
         """Rewrite the ``replaced`` buckets from ``df`` as the next
-        version.  Each layout — the main one sorted by ``keys``, each
-        projection (ClickHouse's per-part PROJECTIONS) by its own keys —
-        gets one key-sorted file per bucket (the O1 sparse-index layout
-        within a bucket) under a new ``__epoch`` dir; the new manifest
-        keeps every other bucket's files, with the union schema of every
-        live file.  ``edits`` (a new width, a new projection, replay
-        watermarks, cleared deltas) apply to the manifest first; every
-        other sink-specific field carries forward.
+        version.  ``edits`` (a new width, a new projection, replay
+        watermarks, cleared deltas) apply to the manifest first; the one
+        bucket writer (:meth:`_write_plan`) writes every layout under
+        epoch version + 1 at core width, and the plan commits through
+        :meth:`_folded`, which carries every other bucket's files and
+        every sink-specific field forward.  A store holding deltas is
+        refused there unless ``edits`` clear them (the inline fold).
+        Returns the new version."""
+        store = _SilverStore(self.path, {**self.manifest, **(edits or {})}, self.legacy)
+        with store._claim():
+            plan = store._write_plan(df, keys, replaced, store.version + 1,
+                                     _core_width(df, len(replaced)))
+            return store._commit(store._folded(plan).manifest)
 
-        A store holding deltas may only be republished by the fold, which
-        clears them in the same commit: a bucket rewrite that carried them
-        forward would let a delta row override what the rewrite decided
-        (a mutation's tombstone, say).  Returns the new version."""
-        m = {**self.manifest, **(edits or {})}
-        if m.get(DELTAS):
-            raise RuntimeError(
-                f"{self.path} holds {len(m[DELTAS])} unfolded delta files; "
-                "fold them (open(fold_first=True)) before republishing buckets"
-            )
-        epoch, n_buckets = self.version + 1, m["n_buckets"]
-        projections = m.get("projections", {})
-        layouts = {"": (keys, m["files"])}
-        layouts.update({f"__proj_{p}/": (s["keys"], s.get("files", []))
-                        for p, s in projections.items()})
-        width = _core_width(df, len(replaced))
-        files = {}
-        with self._claim():
-            if projections:
-                # every layout's write re-evaluates df's plan — pin it once
-                df.persist()
-            try:
-                for prefix, (sort, old) in layouts.items():
-                    rel = f"{prefix}__epoch={epoch}"
-                    if os.path.isdir(os.path.join(self.path, rel)):
-                        shutil.rmtree(os.path.join(self.path, rel))  # crash leftovers, the claim's rule
-                    bucketed = df.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-                    written = self._write_buckets(
-                        bucketed.repartition(width, "__bucket"), sort, rel)
-                    files[prefix] = [f for f in old if self._bucket_of(f) not in replaced] + written
-                kept = [f for f in m["files"] if self._bucket_of(f) not in replaced]
-                return self._commit({
-                    **m,
-                    "files": files[""],
-                    "schema": self._union_schema(kept, df).json(),
-                    SCHEMA_UNION: True,
-                    "sort_keys": list(keys),  # r10: primary in-bucket order, for projection routing
-                    **({"projections": {p: {**s, "files": files[f"__proj_{p}/"]}
-                                        for p, s in projections.items()}}
-                       if projections else {}),
-                })
-            finally:
-                if projections:
-                    df.unpersist()
+    def _write_plan(self, df: DataFrame, keys: list[str], buckets: set[int], epoch: int,
+                    width: int | None, deltas: Sequence[str] = ()) -> _FoldPlan:
+        """The one bucket writer.  ``df`` — the rows of ``buckets``, with
+        ``deltas`` folded in — becomes one file per bucket in every
+        layout, under epoch ``epoch`` (its claim held by the caller), at
+        ``width`` write tasks (one when None).  The main layout is sorted
+        by ``keys``, each projection (ClickHouse's per-part PROJECTIONS)
+        by its own keys: the O1 sparse-index layout within a bucket.
+        Commits nothing; returns the plan :meth:`_folded` applies."""
+        sorts = {"": keys, **{f"__proj_{p}/": s["keys"] for p, s in self.projections.items()}}
+        if self.projections:
+            df.persist()  # every layout's write re-evaluates df's plan — pin it once
+        bucketed = df.withColumn("__bucket", _bucket_expr(keys, self.n_buckets))
+        bucketed = bucketed.repartition(width, "__bucket") if width else bucketed.coalesce(1)
+        try:
+            written = []
+            for prefix, sort in sorts.items():
+                rel = f"{prefix}__epoch={epoch}"
+                if os.path.isdir(os.path.join(self.path, rel)):
+                    shutil.rmtree(os.path.join(self.path, rel))  # crash leftovers: the claim's rule
+                written += self._write_buckets(bucketed, sort, rel)
+        finally:
+            if self.projections:
+                df.unpersist()
+        return _FoldPlan(
+            rel=f"__epoch={epoch}", n_buckets=self.n_buckets, keys=list(keys),
+            deltas=list(deltas), buckets=set(buckets), written=written, schema=df.schema,
+            replaced=self._bucket_files(buckets),
+        )
 
     def _write_buckets(self, bucketed: DataFrame, sort: list[str], rel: str) -> list[str]:
         """Write ``bucketed`` — a ``__bucket`` column, each bucket in ONE
@@ -668,17 +697,17 @@ class _SilverStore:
             if f.endswith(".parquet")
         ]
 
-    def _union_schema(self, kept: list[str], df: DataFrame) -> T.StructType:
-        """Union schema of the files the next version keeps plus ``df``.  A
-        manifest without the union flag is upgraded once, from the kept
-        files' footers."""
+    def _union_schema(self, kept: list[str], schema: T.StructType) -> T.StructType:
+        """Union schema of the files the next version keeps plus the new
+        rows' ``schema``.  A manifest without the union flag is upgraded
+        once, from the kept files' footers."""
         if not kept:
-            return df.schema
+            return schema
         if self.manifest.get(SCHEMA_UNION):
             prev = self.schema
         else:
-            prev = self._files_df(df.sparkSession, kept).schema
-        return _merge_schemas(prev, df.schema)
+            prev = self._files_df(SparkSession.active(), kept).schema
+        return _merge_schemas(prev, schema)
 
     # -- merge-on-read ---------------------------------------------------
 
@@ -758,31 +787,11 @@ class _SilverStore:
 
         return size(self.deltas) >= FOLD_BYTES_FRACTION * size(self.files)
 
-    def fold(self, spark: SparkSession, events: DataFrame | None, spec: dict) -> None:
-        """The inline FOLD: :func:`_touched_bucket_merge` with ``events`` ∪
-        the delta rows as the events, republishing the buckets they touch
-        at core width and clearing the deltas in the SAME commit."""
-        if self.deltas:
-            deltas = self._delta_rows(spark)
-            events = deltas if events is None else events.unionByName(
-                deltas, allowMissingColumns=True
-            )
-        keys = spec["keys"]
-        _touched_bucket_merge(
-            events, self, keys,
-            prepare=lambda b: b,
-            merge_fn=lambda current, prepared: merge_touched(
-                prepared, current, keys, spec["version_col"], spec["tiebreak_col"],
-                spec["op_col"],
-            ),
-            edits={DELTAS: []},
-        )
-
     def fold_prepare(self, spark: SparkSession) -> _FoldPlan | None:
-        """The background fold's first step, which commits nothing: merge
-        base ∪ this snapshot's deltas over the buckets the deltas touch,
-        and write those buckets' files under fold epoch ``-version``.
-        That claim namespace is the fold's own, so a fold in flight never
+        """The background fold's first step, which commits nothing: the
+        touched-bucket merge (:meth:`merge`) of this snapshot's deltas,
+        written by the bucket writer under fold epoch ``-version``.  That
+        claim namespace is the fold's own, so a fold in flight never
         holds the epoch of the next commit.  Under :func:`_fits_one_task`
         the merge, sort and write run in one task, which leaves the other
         cores to triggers and reads; above it, at core width.  Vacuum
@@ -791,55 +800,67 @@ class _SilverStore:
         if not self.deltas:
             return None
         spec = self.manifest[DELTA_SPEC]
-        keys = spec["keys"]
         outputs = _folder(self.path).outputs
         with self._claim(-self.version) as edir:
             rel = os.path.basename(edir)
             outputs.add(rel)
             try:
-                events = self._delta_rows(spark)
-                buckets = self.touched(events, keys)
-                merged = merge_touched(
-                    events, self.base(spark, buckets), keys, spec["version_col"],
-                    spec["tiebreak_col"], spec["op_col"],
-                )
-                bucketed = merged.withColumn("__bucket", _bucket_expr(keys, self.n_buckets))
-                if _fits_one_task(merged):
-                    bucketed = bucketed.coalesce(1)
-                else:
-                    bucketed = bucketed.repartition(_core_width(merged, len(buckets)), "__bucket")
-                written = self._write_buckets(bucketed, keys, rel)
+                merged, buckets = self.merge(spark, None, spec)
+                width = None if _fits_one_task(merged) else _core_width(merged, len(buckets))
+                return self._write_plan(merged, spec["keys"], buckets, -self.version, width,
+                                        self.deltas)
             except BaseException:
                 outputs.discard(rel)
                 raise
-        return _FoldPlan(
-            rel=rel, n_buckets=self.n_buckets, keys=list(keys), deltas=list(self.deltas),
-            buckets=buckets, written=written, schema=merged.schema,
-            replaced=[f for f in self.files if self._bucket_of(f) in buckets],
-        )
+
+    def _bucket_files(self, buckets: set[int], inside: bool = True) -> dict[str, list[str]]:
+        """Each bucketed layout's live files in ``buckets`` (or, not
+        ``inside``, in every other bucket), by directory prefix: ``""``
+        for the main layout, ``__proj_<name>/`` for each projection."""
+        layouts = {"": self.files, **{f"__proj_{p}/": s.get("files", [])
+                                      for p, s in self.projections.items()}}
+        return {p: [f for f in fs if (self._bucket_of(f) in buckets) == inside]
+                for p, fs in layouts.items()}
 
     def _folded(self, plan: _FoldPlan) -> _SilverStore | None:
-        """This snapshot with ``plan`` applied, uncommitted: the plan's
-        buckets take its files and its deltas leave the front of the delta
-        list, while every other manifest field — replay watermarks,
-        schema, bloom columns, later deltas — is this snapshot's.  None
-        when the store moved under the plan: another width or a
-        projection, other files in its buckets, deltas[0:k] not the ones
-        it folded, or a file of it gone."""
+        """This snapshot with ``plan`` applied, uncommitted — the one code
+        that turns a bucket rewrite into a manifest, for a publish, the
+        inline fold and the background fold alike.  In every layout the
+        plan's buckets take its files; the deltas it folded leave the
+        front of the delta list; the schema is the union of the kept
+        files' and the plan's rows' (:meth:`_union_schema`).  Every other
+        manifest field — replay watermarks, bloom columns, later deltas —
+        is this snapshot's.  None when the store moved under the plan:
+        another width, other layouts or files in its buckets, deltas[0:k]
+        not the ones it folded, or a file of it gone.
+
+        A plan that folds no delta may not land on a snapshot holding
+        some: a bucket rewrite that carried them forward would let a
+        delta row override what it decided (a mutation's tombstone, say),
+        so it raises."""
+        if self.deltas and not plan.deltas:
+            raise RuntimeError(
+                f"{self.path} holds {len(self.deltas)} unfolded delta files; "
+                "fold them (open(fold_first=True)) before republishing buckets"
+            )
         k = len(plan.deltas)
-        if (self.n_buckets != plan.n_buckets or self.projections
-                or self.deltas[:k] != plan.deltas
-                or [f for f in self.files if self._bucket_of(f) in plan.buckets] != plan.replaced
+        if (self.n_buckets != plan.n_buckets or self.deltas[:k] != plan.deltas
+                or self._bucket_files(plan.buckets) != plan.replaced
                 or not all(os.path.exists(os.path.join(self.path, f)) for f in plan.written)):
             return None
+        kept = self._bucket_files(plan.buckets, inside=False)
+        files = {p: fs + [f for f in plan.written if f.startswith(f"{p}__epoch=")]
+                 for p, fs in kept.items()}
         return _SilverStore(self.path, {
             **self.manifest,
-            "files": [f for f in self.files if self._bucket_of(f) not in plan.buckets]
-            + plan.written,
+            "files": files[""],
             DELTAS: self.deltas[k:],
-            "schema": _merge_schemas(self.schema, plan.schema).json(),
+            "schema": self._union_schema(kept[""] + self.deltas[k:], plan.schema).json(),
+            SCHEMA_UNION: True,
             "sort_keys": plan.keys,
-        })
+            "projections": {p: {**s, "files": files[f"__proj_{p}/"]}
+                            for p, s in self.projections.items()},
+        }, self.legacy)
 
     def fold_commit(self, plan: _FoldPlan) -> bool:
         """The background fold's second step as a commit of its own
@@ -860,16 +881,19 @@ class _SilverStore:
 
 @dataclass
 class _FoldPlan:
-    """A prepared background fold (:meth:`_SilverStore.fold_prepare`):
-    the deltas it folded, the bucket files it replaces and the files it
-    wrote under its fold epoch dir ``rel``."""
+    """A bucket rewrite written but not committed
+    (:meth:`_SilverStore._write_plan`): a publish's, or a background
+    fold's (:meth:`_SilverStore.fold_prepare`).  The deltas it folded,
+    its buckets, the files of those buckets it replaces per layout, the
+    files it wrote in every layout under epoch dir ``rel`` and its rows'
+    schema; :meth:`_SilverStore._folded` applies it."""
 
     rel: str
     n_buckets: int
     keys: list[str]
     deltas: list[str]
     buckets: set[int]
-    replaced: list[str]
+    replaced: dict[str, list[str]]
     written: list[str]
     schema: T.StructType
 
@@ -961,47 +985,6 @@ def _core_width(df: DataFrame, n_buckets: int) -> int:
     return max(1, min(n_buckets, df.sparkSession.sparkContext.defaultParallelism))
 
 
-def _touched_bucket_merge(
-    batch: DataFrame,
-    store: _SilverStore,
-    keys: list[str],
-    prepare,
-    merge_fn,
-    edits: dict | None = None,
-) -> None:
-    """The eager touched-bucket merge: every summing/collapsing-sink
-    trigger, and the keyed upsert sinks' inline FOLD (see
-    :func:`_cdc_upsert`).
-    Compute the batch's touched buckets from ``prepare(batch)``, load ONLY
-    those buckets' base files of ``store``, delegate the merge to
-    ``merge_fn(current_or_None, prepared)``, publish it, and run vacuum on
-    a cadence.  A flat store adopted by ``store`` is read whole and
-    published bucketed once."""
-    spark = batch.sparkSession
-    # the batch feeds several actions (touched-bucket collect + the merge
-    # itself) — evaluate the source once; the try spans every action so a
-    # failing merge can't leak the cached frames
-    batch.persist()
-    try:
-        prepared = prepare(batch)
-        if prepared is not batch:
-            prepared.persist()
-        try:
-            touched = store.touched(prepared, keys)
-            if store.legacy:
-                touched = store.all_buckets  # full one-time bucketed publish
-            elif not touched:
-                return  # empty batch: nothing to publish
-            store.publish(merge_fn(store.base(spark, touched), prepared), keys,
-                          touched, edits)
-        finally:
-            if prepared is not batch:
-                prepared.unpersist()
-    finally:
-        batch.unpersist()
-    _vacuum_on_cadence(store.path, store.version + 1)
-
-
 def _vacuum_on_cadence(path: str, version: int, every: int = 16) -> None:
     """Vacuum once every ``every`` versions: vacuum walks the store tree
     (O(files), not O(touched)), so running it on a cadence, not per
@@ -1030,8 +1013,9 @@ def _cdc_upsert(batch: DataFrame, path: str, keys: list[str], n_buckets: int,
     :meth:`_SilverStore.fold_due`, the trigger hands them to the store's
     background fold (:class:`_Folder`); the plan it prepares rides in a
     later trigger's delta commit, so every trigger stays exactly one
-    commit.  The trigger folds inline — the touched-bucket merge of
-    batch ∪ deltas, as its one commit — only when it must
+    commit.  The trigger folds inline — :meth:`_SilverStore.merge` of
+    batch ∪ deltas, published with the deltas cleared as its one commit
+    — only when it must
     (:meth:`_SilverStore.must_fold`), after waiting out a fold in flight.
     ``legacy_mode`` other than ``"migrate"`` refuses a pre-manifest flat
     store."""
@@ -1042,7 +1026,15 @@ def _cdc_upsert(batch: DataFrame, path: str, keys: list[str], n_buckets: int,
     store = _SilverStore.load_or_new(path, n_buckets, migrate=legacy_mode == "migrate")
     if store.must_fold(spec):
         folder.spent(folder.settle())  # the inline fold supersedes its plan
-        store.fold(spark, batch, spec)
+        batch.persist()  # read by the touched-bucket collect and the merge
+        try:
+            merged = store.merge(spark, batch, spec)
+            if merged is None:
+                return
+            store.publish(merged[0], keys, merged[1], {DELTAS: []})
+        finally:
+            batch.unpersist()
+        _vacuum_on_cadence(path, store.version + 1)
         return
     plan = folder.plan
     committed = store.publish_delta(batch, spec, plan)
@@ -1159,12 +1151,10 @@ def _txn_trigger(batch: DataFrame, batch_id: int, ppath: str, checkpoint: str,
         return
     batch.persist()
     try:
-        tx_buckets = pending.touched(batch, [txn_id_col])
-        buffered = pending.base(batch.sparkSession, tx_buckets)
-        universe = batch
-        if buffered is not None:
-            universe = buffered.unionByName(batch, allowMissingColumns=True)
-        universe = universe.dropDuplicates([txn_id_col, txn_order_col])
+        universe, tx_buckets = pending.merge(
+            batch.sparkSession, batch, {"keys": [txn_id_col]},
+            lambda buffered, b: (b if buffered is None else buffered.unionByName(
+                b, allowMissingColumns=True)).dropDuplicates([txn_id_col, txn_order_col]))
         universe.persist()
         try:
             totals = universe.groupBy(txn_id_col).agg(
@@ -1751,6 +1741,38 @@ AGG_OPS = ("sum", "min", "max", "kmv", "topk", "hll",
 _KEYED_OPS = ("argmax", "argmin", "qsample", "topkweighted")
 
 
+def _additive_trigger(batch: DataFrame, batch_id: int, path: str, checkpoint: str,
+                      keys: list[str], n_buckets: int, prepare: Callable,
+                      merge_fn: Callable) -> None:
+    """One trigger of an additive sink (summing, collapsing): the batch
+    partial ``prepare(batch)`` merged into the buckets it touches by
+    ``merge_fn(current_or_None, partial)`` (:meth:`_SilverStore.merge`),
+    published with the replay watermark as one commit.
+
+    REPLAY GUARD (r8 review): unlike latest-wins (where re-merging an
+    identical batch is a no-op), ADDITION is not idempotent — a
+    micro-batch replayed after a crash between the manifest commit and the
+    checkpoint write would double every sum it carries."""
+    store = _SilverStore.load_or_new(path, n_buckets)
+    keep = _replay_guard(store, checkpoint, batch_id)
+    if keep is None:
+        return
+    # the batch and its partial each feed several actions (touched-bucket
+    # collect + the merge itself) — evaluate each once; the try spans
+    # every action so a failing merge can't leak the cached frames
+    batch.persist()
+    part = prepare(batch).persist()
+    try:
+        merged = store.merge(batch.sparkSession, part, {"keys": keys}, merge_fn)
+        if merged is None:
+            return  # empty batch: nothing to publish
+        store.publish(merged[0], keys, merged[1], {"applied": keep})
+    finally:
+        part.unpersist()
+        batch.unpersist()
+    _vacuum_on_cadence(path, store.version + 1)
+
+
 def _parse_agg_op(op: str) -> tuple[str, str | None]:
     base, _, ord_col = op.partition(":")
     if base in _KEYED_OPS:
@@ -2174,15 +2196,6 @@ def silver_summing_stream(
         return part
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        # REPLAY GUARD (r8 review): unlike latest-wins (where re-merging an
-        # identical batch is a no-op), ADDITION is not idempotent — a
-        # micro-batch replayed after a crash between the manifest commit
-        # and the checkpoint write would double every sum it carries.
-        store = _SilverStore.load_or_new(path, n_buckets)
-        keep = _replay_guard(store, checkpoint, batch_id)
-        if keep is None:
-            return
-
         def merge_fn(current: DataFrame | None, agg: DataFrame) -> DataFrame:
             if current is None:
                 return agg.withColumn(DELETED_FLAG, F.lit(False))
@@ -2195,7 +2208,7 @@ def silver_summing_stream(
             live = current.filter(~F.col(DELETED_FLAG)).drop(DELETED_FLAG)
             tombs = current.filter(F.col(DELETED_FLAG))
             # no persist on `un`: the batch partial is already cached by
-            # _touched_bucket_merge and the store side is a bucket-pruned
+            # _additive_trigger and the store side is a bucket-pruned
             # file scan — a per-trigger cache here would leak (no safe
             # unpersist point after the publish consumes the plan)
             un = live.unionByName(agg)
@@ -2217,10 +2230,8 @@ def silver_summing_stream(
             kept_tombs = tombs.join(merged.select(*keys), keys, "left_anti")
             return merged.unionByName(kept_tombs)
 
-        _touched_bucket_merge(
-            batch, store, keys, prepare=_batch_partial, merge_fn=merge_fn,
-            edits={"applied": keep},
-        )
+        _additive_trigger(batch, batch_id, path, checkpoint, keys, n_buckets,
+                          _batch_partial, merge_fn)
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
     return _start(writer, available_now, processing_interval_ms)
@@ -2353,11 +2364,6 @@ def silver_collapsing_stream(
         return merged
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        store = _SilverStore.load_or_new(path, n_buckets)
-        keep = _replay_guard(store, checkpoint, batch_id)
-        if keep is None:
-            return
-
         def merge_fn(current: DataFrame | None, part: DataFrame) -> DataFrame:
             if current is None:
                 # the partial IS the merged state for a fresh bucket, so
@@ -2377,10 +2383,8 @@ def silver_collapsing_stream(
             kept_tombs = tombs.join(merged.select(*keys).distinct(), keys, "left_anti")
             return merged.unionByName(kept_tombs)
 
-        _touched_bucket_merge(
-            batch, store, keys, prepare=_batch_partial, merge_fn=merge_fn,
-            edits={"applied": keep},
-        )
+        _additive_trigger(batch, batch_id, path, checkpoint, keys, n_buckets,
+                          _batch_partial, merge_fn)
 
     writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
     return _start(writer, available_now, processing_interval_ms)

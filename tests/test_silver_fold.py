@@ -1,6 +1,9 @@
 """The keyed sink's background fold: its thread's lifetime around
 ``query.stop()``, maintenance waiting for it, a failing fold leaving the
-stream and its deltas alone, and vacuum next to a fold in flight."""
+stream and its deltas alone, vacuum next to a fold in flight — and the
+two inline folds a trigger must run instead: past the ``3 × FOLD_DELTAS``
+backstop behind a held fold, and after a restart under another delta
+spec."""
 
 from __future__ import annotations
 
@@ -258,3 +261,89 @@ def test_at_most_one_fold_in_flight_per_store():
         sys.setswitchinterval(old)
     assert folder.wait(60)
     assert peak[0] == 1 and done[0] > 1
+
+
+def test_backstop_waits_out_the_fold_and_folds_inline(spark, tmp_path, monkeypatch):
+    """Deltas piling up past ``3 × FOLD_DELTAS`` behind a background fold
+    held in its write: the trigger that finds them waits the fold out,
+    spends its plan and folds batch ∪ deltas inline as its one commit."""
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 1)
+    gate, ended = threading.Event(), []
+    real = pl._SilverStore._write_buckets
+
+    def held(self, bucketed, sort, rel):
+        if not rel.startswith("__epoch=-"):
+            return real(self, bucketed, sort, rel)
+        assert gate.wait(120)
+        try:
+            return real(self, bucketed, sort, rel)
+        finally:
+            ended.append(time.monotonic())
+
+    monkeypatch.setattr(pl._SilverStore, "_write_buckets", held)
+    store, src, ckpt = str(tmp_path / "silver"), str(tmp_path / "src"), str(tmp_path / "c")
+    fed = {i: f"v{i}" for i in range(200)}
+    try:
+        _upsert(spark, SEED, src, store, ckpt)
+        for n in (1, 2, 3):  # the first delta starts the held fold; two more pile up
+            _upsert(spark, [(n, f"u{n}", "u", 2, 0)], src, store, ckpt)
+            fed[n] = f"u{n}"
+        folder = pl._folder(store)
+        m = pl._read_manifest(store)
+        assert len(m[pl.DELTAS]) == 3 * pl.FOLD_DELTAS
+        assert len(_fold_threads(store)) == 1 and folder.plan is None and ended == []
+        threading.Timer(1.0, gate.set).start()
+        _upsert(spark, [(4, None, "d", 2, 0), (5, "u5", "u", 2, 1)], src, store, ckpt)
+        done = time.monotonic()
+    finally:
+        gate.set()
+    del fed[4]
+    fed[5] = "u5"
+    assert len(ended) == 1 and ended[0] < done and folder.error is None
+    assert folder.plan is None and not folder.outputs and _fold_threads(store) == []
+    m2 = pl._read_manifest(store)
+    assert m2["version"] == m["version"] + 1 and m2[pl.DELTAS] == []
+    assert not any(f.startswith("__epoch=-") for f in m2["files"])
+    assert _live(spark, store) == fed
+
+
+SEQ_EVENTS = "id long, val string, op string, ts_ms long, offset long, seq long"
+
+
+def test_delta_spec_change_folds_old_deltas_with_the_batch(spark, tmp_path, monkeypatch):
+    """A sink restarted with another ``tiebreak_col`` over a store that
+    still holds deltas: its first trigger folds batch ∪ the old deltas in
+    one commit, latest-wins under the new spec."""
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 16)
+    monkeypatch.setattr(pl, "FOLD_BYTES_FRACTION", 1e9)
+    store, src, ckpt = str(tmp_path / "silver"), str(tmp_path / "src"), str(tmp_path / "c")
+    # id 7's two ts 2 events tie on ts_ms: offset picks "b", seq picks "a"
+    batches = [[(i, f"v{i}", "c", 1, i, 0) for i in range(100)],
+               [(7, "a", "u", 2, 1, 9), (8, None, "d", 2, 2, 0)],
+               [(7, "b", "u", 2, 2, 1)],
+               [(50, "c", "u", 3, 0, 0)]]
+
+    def drain(tiebreak_col):
+        q = pl.silver_upsert_stream(spark.readStream.schema(SEQ_EVENTS).json(src), store, ckpt,
+                                    keys=["id"], tiebreak_col=tiebreak_col, available_now=True)
+        assert q.awaitTermination(180)
+        q.stop()
+
+    for rows in batches[:3]:
+        spark.createDataFrame(rows, SEQ_EVENTS).coalesce(1).write.mode("append").json(src)
+        drain("offset")
+    m = pl._read_manifest(store)
+    assert len(m[pl.DELTAS]) == 2 and m[pl.DELTA_SPEC]["tiebreak_col"] == "offset"
+    assert _live(spark, store)[7] == "b"
+
+    spark.createDataFrame(batches[3], SEQ_EVENTS).coalesce(1).write.mode("append").json(src)
+    drain("seq")
+    m2 = pl._read_manifest(store)
+    assert m2["version"] == m["version"] + 1 and m2[pl.DELTAS] == []
+    model = {}
+    for row in (r for rows in batches for r in rows):
+        k, val, op, ts, _offset, seq = row
+        if k not in model or (ts, seq) > model[k][0]:
+            model[k] = ((ts, seq), val, op)
+    assert _live(spark, store) == {k: val for k, (_, val, op) in model.items() if op != "d"}
+    assert pl._folder(store).plan is None

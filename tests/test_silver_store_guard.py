@@ -1,9 +1,11 @@
-"""Source guard for the silver store: ``_SilverStore``
-(streaming/pipeline.py) is the only code that reads or writes a manifest
-field, commits a manifest, parses a bucket out of a file path or builds a
-default manifest.  Same idiom as tests/test_scratch.py: the guard, plus an
-anti-tautology twin showing the class still does each of these under the
-spelling the guard looks for.
+"""Source guards for the silver store (streaming/pipeline.py).
+
+``_SilverStore`` is the only code that reads or writes a manifest field,
+commits a manifest, parses a bucket out of a file path or builds a
+default manifest; and every base-bucket rewrite goes through its one
+touched-bucket merge (``merge``) and its one bucket writer
+(``_write_plan``).  Same idiom as tests/test_scratch.py: each guard, plus
+an anti-tautology twin showing that it still sees what it looks for.
 """
 
 from __future__ import annotations
@@ -118,3 +120,92 @@ def test_store_still_does_each_guarded_access():
     stops making these accesses under the same spelling."""
     store, _outside, docstrings = _split_pipeline()
     assert {kind for kind, _ in _accesses([store], docstrings)} == KINDS
+
+
+# -- one fold, one bucket writer ------------------------------------------
+
+#: the store's one touched-bucket merge, and the one other reader of
+#: ``merge_touched`` (FINAL over base ∪ deltas)
+MERGE_USERS = {"merge", "read"}
+
+
+def _fork_findings(tree: ast.Module) -> list[tuple[str, str]]:
+    """``(where, kind)`` of every fork of the store's rewrite path in
+    ``tree``: a ``merge_touched`` call outside the merge step and
+    ``_SilverStore.read``, a ``_write_buckets`` with other than one
+    caller, and a module-level function reading base buckets itself
+    (``.base(``)."""
+    store = next(n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "_SilverStore")
+    allowed = {id(node) for m in store.body
+               if isinstance(m, ast.FunctionDef) and m.name in MERGE_USERS
+               for node in ast.walk(m)}
+    found, writers = [], []
+    for top in tree.body:
+        scopes = top.body if isinstance(top, ast.ClassDef) else [top]
+        for scope in scopes:
+            name = getattr(scope, "name", "<module>")
+            for node in ast.walk(scope):
+                if not isinstance(node, ast.Call):
+                    continue
+                func = node.func
+                if isinstance(func, ast.Name) and func.id == "merge_touched" and id(node) not in allowed:
+                    found.append((name, "merge_touched outside the merge step"))
+                elif isinstance(func, ast.Attribute) and func.attr == "_write_buckets":
+                    writers.append(name)
+                elif (isinstance(func, ast.Attribute) and func.attr == "base"
+                      and isinstance(top, ast.FunctionDef)):
+                    found.append((name, "base read outside the store"))
+    if len(writers) != 1:
+        found += [(w, "second bucket writer") for w in writers]
+    return found
+
+
+def test_one_fold_and_one_bucket_writer():
+    """Every base-bucket rewrite — publish, the inline and the background
+    fold, the summing/collapsing and transaction triggers — merges
+    through ``_SilverStore.merge`` and writes through ``_write_plan``,
+    the one caller of ``_write_buckets``."""
+    found = _fork_findings(_parse(PIPELINE))
+    assert not found, "a second merge or bucket-write path in the pipeline:\n" + "\n".join(
+        f"{where}: {kind}" for where, kind in found)
+    store = _split_pipeline()[0]
+    writer = [m.name for m in store.body if isinstance(m, ast.FunctionDef) for node in ast.walk(m)
+              if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+              and node.func.attr == "_write_buckets"]
+    assert writer == ["_write_plan"], writer
+
+
+def test_fork_guard_sees_the_forked_fold():
+    """Anti-tautology twin: the guard flags the forked shape — an inline
+    fold through a free touched-bucket merge beside a background fold
+    with its own merge and its own bucket write."""
+    old = '''
+class _SilverStore:
+    def read(self, spark):
+        return merge_touched(self._delta_rows(spark), base, spec["keys"])
+
+    def publish(self, df, keys, replaced, edits=None):
+        written = self._write_buckets(bucketed.repartition(width, "__bucket"), sort, rel)
+
+    def fold(self, spark, events, spec):
+        _touched_bucket_merge(
+            events, self, keys, prepare=lambda b: b,
+            merge_fn=lambda current, prepared: merge_touched(prepared, current, keys),
+            edits={DELTAS: []},
+        )
+
+    def fold_prepare(self, spark):
+        merged = merge_touched(events, self.base(spark, buckets), keys)
+        written = self._write_buckets(bucketed, keys, rel)
+
+
+def _touched_bucket_merge(batch, store, keys, prepare, merge_fn, edits=None):
+    store.publish(merge_fn(store.base(spark, touched), prepared), keys, touched, edits)
+'''
+    assert sorted(_fork_findings(ast.parse(old))) == [
+        ("_touched_bucket_merge", "base read outside the store"),
+        ("fold", "merge_touched outside the merge step"),
+        ("fold_prepare", "merge_touched outside the merge step"),
+        ("fold_prepare", "second bucket writer"),
+        ("publish", "second bucket writer"),
+    ]
