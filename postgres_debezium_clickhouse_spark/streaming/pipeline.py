@@ -50,20 +50,25 @@ Silver store layout (manifest-committed, bucketed)::
     <path>/__epoch=<v>/__bucket=<b>/part-*.parquet   # base: "files"
     <path>/__epoch=-<v>/__bucket=<b>/part-*.parquet  # base a background fold wrote
     <path>/__epoch=<v>/part-*.parquet                # a delta: "deltas"
+    <path>/__proj_<name>/__epoch=<v>/__bucket=<b>/part-*.parquet  # a projection's copy
 
 ``_manifest.json`` lists the LIVE data files: ``files`` (the bucketed
 base) and ``deltas`` (one key-sorted file per trigger since the last
 fold, with ``delta_spec`` naming the merge columns).  Each publish writes
 fresh files under a new ``__epoch`` dir, then atomically replaces the
 manifest (write-temp + ``os.replace``) — exactly one manifest commit per
-trigger, delta or inline fold.  A background fold of version v writes
-under the negative epoch ``-v``, its own claim namespace, and commits
-nothing itself: its plan rides in a later commit, which applies it only
-if the plan's buckets and the deltas it folded are still as it saw
-them.  Files referenced by any committed manifest are never mutated, so
-a reader that loaded a manifest sees a consistent snapshot even while a
-publish is in flight; replaced files stay on disk until
-``vacuum_silver`` passes their grace period.
+trigger, delta or inline fold.  The manifest is the commit: a data file
+is written once, from Arrow, under its final name in the claimed epoch
+dir — no temporary dir, rename, ``_SUCCESS`` marker or ``.crc`` sidecar
+(each parquet page carries a CRC instead); only a store with bloom
+columns is still written by Spark's writer.  A background fold of
+version v writes under the negative epoch ``-v``, its own claim
+namespace, and commits nothing itself: its plan rides in a later
+commit, which applies it only if the plan's buckets and the deltas it
+folded are still as it saw them.  Files referenced by any committed
+manifest are never mutated, so a reader that loaded a manifest sees a
+consistent snapshot even while a publish is in flight; replaced files
+stay on disk until ``vacuum_silver`` passes their grace period.
 
 One class owns this layout and the manifest format: ``_SilverStore``, a
 snapshot of one committed manifest.  Every trigger, maintenance op and
@@ -95,6 +100,7 @@ mirrors.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -537,10 +543,19 @@ class _SilverStore:
             # holding a STALE snapshot (another commit landed since it
             # read) would otherwise treat the committed epoch v+1 as crash
             # leftovers and rmtree the winner's live files.  Loud failure
-            # here, while the store is still untouched.
+            # here, while the store is still untouched.  A fold epoch only
+            # needs none of the current manifest's files: a fold of
+            # snapshot v may claim after the sink's next commits, since its
+            # plan applies to any later version that still holds what it
+            # folded (:meth:`_folded`).
             cur = _read_manifest(self.path)
             cur_version = cur["version"] if cur is not None else 0
-            if cur_version != self.version:
+            if epoch < 0:
+                if cur is not None and any(
+                        e == epoch for *_, e in _SilverStore(self.path, cur).parts()):
+                    raise ManifestCommitError(
+                        f"fold epoch {epoch} at {self.path} holds live files")
+            elif cur_version != self.version:
                 raise ManifestCommitError(
                     f"concurrent publish at {self.path}: store is at version "
                     f"{cur_version}, expected {self.version}"
@@ -548,14 +563,13 @@ class _SilverStore:
             # Crash recovery: epoch v+1 is by definition UNCOMMITTED (the
             # manifest holds v), so anything already under its dir is
             # leftovers of a publish that died between the file write and
-            # the manifest swap; so is fold epoch -v (a plan of snapshot v
-            # can only commit at a later version).  A replayed batch must
-            # not commit those alongside its own files — that would
-            # silently duplicate every row in the touched buckets.  Safe
-            # only under the claim + the version recheck: a LIVE concurrent
-            # writer can't be mid-write here (it would have failed the
-            # claim), and a committed epoch can't be mistaken for leftovers
-            # (the recheck would have failed).
+            # the manifest swap; so is a fold epoch no live file lies
+            # under.  A replayed batch must not commit those alongside its
+            # own files — that would silently duplicate every row in the
+            # touched buckets.  Safe only under the claim + the recheck: a
+            # LIVE concurrent writer can't be mid-write here (it would have
+            # failed the claim), and a committed epoch can't be mistaken
+            # for leftovers (the recheck would have failed).
             if os.path.isdir(epoch_dir):
                 shutil.rmtree(epoch_dir)
             yield epoch_dir
@@ -589,20 +603,6 @@ class _SilverStore:
         else:
             projections[name] = {"keys": list(proj_keys), "files": []}
         return {"projections": projections}
-
-    def _write_options(self) -> dict[str, str]:
-        """CH-style per-column BLOOM FILTERS (r10): declared once via
-        set_bloom_filters, honored by EVERY publisher (upserts, deltas,
-        mutations, TTL, compaction, projections) — parquet-mr writes a
-        split-block bloom per column chunk, and Spark's reader prunes row
-        groups on equality predicates against it.  The point-lookup
-        accelerator for columns the sort order can NOT serve (the
-        bloom_filter index type of clickhouse MergeTree skip indexes)."""
-        opts = {}
-        for c, ndv in self.manifest.get("bloom_cols", {}).items():
-            opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
-            opts[f"parquet.bloom.filter.expected.ndv#{c}"] = str(ndv)
-        return opts
 
     def merge(self, spark: SparkSession, events: DataFrame | None, spec: dict,
               merge_fn: Callable | None = None) -> tuple[DataFrame, set[int]] | None:
@@ -664,7 +664,7 @@ class _SilverStore:
                 rel = f"{prefix}__epoch={epoch}"
                 if os.path.isdir(os.path.join(self.path, rel)):
                     shutil.rmtree(os.path.join(self.path, rel))  # crash leftovers: the claim's rule
-                written += self._write_buckets(bucketed, sort, rel)
+                written += [r["file"] for r in self._write_buckets(bucketed, sort, rel)]
         finally:
             if self.projections:
                 df.unpersist()
@@ -674,28 +674,149 @@ class _SilverStore:
             replaced=self._bucket_files(buckets),
         )
 
-    def _write_buckets(self, bucketed: DataFrame, sort: list[str], rel: str) -> list[str]:
+    def _write_buckets(self, bucketed: DataFrame, sort: list[str], rel: str) -> list[dict]:
         """Write ``bucketed`` — a ``__bucket`` column, each bucket in ONE
         partition — into the store-relative dir ``rel`` as one file per
-        bucket sorted by ``sort``; returns the files, store-relative.
+        bucket sorted by ``sort``; returns the data-file writer's records
+        (:meth:`_write_files`).  The sort stays in Spark, so null and
+        string order are Spark's."""
+        return self._write_files(bucketed.sortWithinPartitions("__bucket", *sort), rel)
 
-        Partitioned by __bucket ONLY, written INTO the epoch dir (r9): with
-        __epoch as a partition column its sort key is a foldable literal
-        that ConstantFolding strips from our sort, so the writer added its
-        own unstable (epoch, bucket) sort and destroyed the in-bucket key
-        order.  Our (__bucket, keys) sort satisfies the writer's
-        requirement by prefix: the order is contractual."""
+    #: one record per written data file (:meth:`_write_files`)
+    _FILE_RECORD = "layout string, bucket int, file string, rows long, bytes long"
+
+    def _write_files(self, df: DataFrame, rel: str) -> list[dict]:
+        """The one data-file writer, of deltas and bucket files alike:
+        ``df``, sorted within its partitions — with a ``__bucket`` column
+        each bucket in one partition, one file per bucket, else one file
+        per partition — as parquet files written once, under their final
+        names, into the claimed dir ``rel`` (store-relative).  No commit
+        protocol runs: the epoch claim owns the dir, its ``rmtree`` and
+        vacuum own crash leftovers, readers open only manifest-listed
+        files, and the manifest CAS is the commit.  Returns one
+        ``{layout, bucket, file, rows, bytes}`` record per file (``file``
+        store-relative, ``layout`` the dir prefix before ``__epoch=``),
+        sorted by file; an empty ``df`` writes none.
+
+        When ``df``'s inputs fit one task (:func:`_fits_one_task`), the
+        driver writes the files from its ``toArrow()``; above that, the
+        same kernel (:meth:`_arrow_files`) runs in ``mapInArrow`` at
+        ``df``'s width and the driver collects one record per file.  A
+        store with bloom columns is written by Spark's writer instead
+        (:meth:`_spark_files`)."""
+        if self.manifest.get("bloom_cols"):
+            return self._spark_files(df, rel)
+        block = df.sparkSession._jsparkSession.sessionState().newHadoopConf().getLong(
+            "parquet.block.size", 128 * 1024 * 1024)
+        write = functools.partial(_SilverStore._arrow_files, self.path, rel, block)
+        if _fits_one_task(df):
+            import pyarrow as pa
+
+            records = pa.Table.from_batches(write(df.toArrow().to_batches()))
+        else:
+            records = df.mapInArrow(write, self._FILE_RECORD).toArrow()
+        return sorted(records.to_pylist(), key=lambda r: r["file"])
+
+    @staticmethod
+    def _arrow_files(path: str, rel: str, group_bytes: int, batches):
+        """The data-file kernel of :meth:`_write_files`: stream the sorted
+        Arrow ``batches`` of one partition into parquet files under
+        ``path``/``rel`` — a file per run of one ``__bucket`` value (the
+        column itself is not stored), or one file without that column —
+        through pyarrow's ``ParquetWriter``: snappy, a CRC per page (a
+        reader with ``parquet.page.verify-checksum.enabled`` fails on a
+        flipped byte), row groups of about ``group_bytes`` Arrow bytes
+        (the Hadoop conf ``parquet.block.size``).  Yields one Arrow batch
+        of the files' records (the fields of ``_FILE_RECORD``)."""
+        import itertools
+        import uuid
+
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        def runs():
+            for batch in batches:
+                if "__bucket" not in batch.schema.names:
+                    yield None, batch
+                    continue
+                ids = batch.column("__bucket").to_numpy(zero_copy_only=False)
+                cuts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist(), len(ids)]
+                rows = batch.drop_columns(["__bucket"])
+                for a, b in zip(cuts, cuts[1:]):
+                    yield int(ids[a]), rows.slice(a, b - a)
+
+        def flush(writer, buf: list, final: bool) -> list:
+            """Write ``buf`` as row groups of ~``group_bytes``; return the
+            rows short of a whole group (none when ``final``)."""
+            if not buf:
+                return buf
+            table = pa.Table.from_batches(buf)
+            per = max(1, group_bytes * table.num_rows // max(1, table.nbytes))
+            n = table.num_rows if final else per * (table.num_rows // per)
+            if n:
+                writer.write_table(table.slice(0, n), row_group_size=per)
+            return table.slice(n).to_batches()
+
+        recs = []
+        nonempty = ((b, piece) for b, piece in runs() if piece.num_rows)
+        for bucket, group in itertools.groupby(nonempty, key=lambda run: run[0]):
+            pieces = (piece for _, piece in group)
+            first = next(pieces)
+            d = rel if bucket is None else f"{rel}/__bucket={bucket}"
+            f = f"{d}/part-{uuid.uuid4().hex}.snappy.parquet"
+            os.makedirs(os.path.join(path, d), exist_ok=True)
+            rows, buf = 0, []
+            with pq.ParquetWriter(os.path.join(path, f), first.schema,
+                                  compression="snappy", write_page_checksum=True) as writer:
+                for piece in itertools.chain([first], pieces):
+                    rows += piece.num_rows
+                    buf.append(piece)
+                    if sum(b.nbytes for b in buf) >= group_bytes:
+                        buf = flush(writer, buf, final=False)
+                flush(writer, buf, final=True)
+            recs.append({"layout": rel.split("__epoch=")[0], "bucket": bucket, "file": f,
+                         "rows": rows, "bytes": os.path.getsize(os.path.join(path, f))})
+        yield pa.RecordBatch.from_pylist(recs, schema=pa.schema([
+            ("layout", pa.string()), ("bucket", pa.int32()), ("file", pa.string()),
+            ("rows", pa.int64()), ("bytes", pa.int64())]))
+
+    def _spark_files(self, df: DataFrame, rel: str) -> list[dict]:
+        """The one exception to the Arrow writer: a store with CH-style
+        per-column BLOOM FILTERS (r10; declared once via
+        set_bloom_filters, honored by every publisher) is written by
+        Spark's parquet writer, because pyarrow cannot write parquet
+        blooms.  parquet-mr writes a split-block bloom per column chunk,
+        and Spark's reader prunes row groups on equality predicates
+        against it — the point-lookup accelerator for columns the sort
+        order can NOT serve (the bloom_filter index type of clickhouse
+        MergeTree skip indexes).  Partitioned by __bucket only, written
+        into the epoch dir: our (__bucket, keys) sort satisfies the
+        writer's required order by prefix.  The files are found by
+        listing the dir, an empty one removed; same records as
+        :meth:`_write_files`."""
+        import pyarrow.parquet as pq
+
+        opts = {}
+        for c, ndv in self.manifest.get("bloom_cols", {}).items():
+            opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
+            opts[f"parquet.bloom.filter.expected.ndv#{c}"] = str(ndv)
         edir = os.path.join(self.path, rel)
-        (bucketed.sortWithinPartitions("__bucket", *sort)
-         .write.mode("append").options(**self._write_options())
-         .partitionBy("__bucket").parquet(edir))
-        return [
-            f"{rel}/{b}/{f}"
-            for b in (sorted(os.listdir(edir)) if os.path.isdir(edir) else [])
-            if b.startswith("__bucket=") and os.path.isdir(os.path.join(edir, b))
-            for f in sorted(os.listdir(os.path.join(edir, b)))
-            if f.endswith(".parquet")
-        ]
+        writer = df.write.mode("append").options(**opts)
+        if "__bucket" in df.columns:
+            writer = writer.partitionBy("__bucket")
+        writer.parquet(edir)
+        records = []
+        for root, _dirs, names in os.walk(edir):
+            for full in (os.path.join(root, n) for n in names if n.endswith(".parquet")):
+                rows = pq.read_metadata(full).num_rows
+                if not rows:
+                    os.remove(full)
+                    continue
+                f = os.path.relpath(full, self.path)
+                records.append({"layout": rel.split("__epoch=")[0], "bucket": self._bucket_of(f),
+                                "file": f, "rows": rows, "bytes": os.path.getsize(full)})
+        return sorted(records, key=lambda r: r["file"])
 
     def _union_schema(self, kept: list[str], schema: T.StructType) -> T.StructType:
         """Union schema of the files the next version keeps plus the new
@@ -725,8 +846,6 @@ class _SilverStore:
         commit when it still applies (:meth:`_folded`).  Returns the
         committed snapshot, or None — committing nothing — when ``rows``
         is empty."""
-        import pyarrow.parquet as pq
-
         stored = {f.name: f.dataType for f in self.schema.fields}
         rows = rows.withColumns({
             f.name: rows[f.name].cast(stored[f.name]) for f in rows.schema.fields
@@ -738,21 +857,15 @@ class _SilverStore:
         # scan width before the one writing task
         one = rows.coalesce(1) if _fits_one_task(rows) else rows.repartition(1)
         with self._claim() as epoch_dir:
-            one.sortWithinPartitions(*spec["keys"]).write.options(
-                **self._write_options()
-            ).parquet(epoch_dir)
-            names = sorted(
-                f for f in (os.listdir(epoch_dir) if os.path.isdir(epoch_dir) else [])
-                if f.endswith(".parquet")
-                and pq.read_metadata(os.path.join(epoch_dir, f)).num_rows
-            )
-            if not names:
+            written = self._write_files(one.sortWithinPartitions(*spec["keys"]),
+                                        os.path.basename(epoch_dir))
+            if not written:
                 shutil.rmtree(epoch_dir, ignore_errors=True)
                 return None
             base = (self._folded(plan) if plan is not None else None) or self
             manifest = {
                 **base.manifest,
-                DELTAS: base.deltas + [f"__epoch={self.version + 1}/{f}" for f in names],
+                DELTAS: base.deltas + [r["file"] for r in written],
                 DELTA_SPEC: spec,
                 "schema": _merge_schemas(base.schema, rows.schema).json(),
             }
@@ -1446,8 +1559,8 @@ def vacuum_silver(
     # their files are manifest-listed (store-root-relative), so dead
     # projection epochs — and the whole subtree of a DROPPED projection —
     # age out with the grace period like any other dead file
-    # an in-flight fold's epoch dir (its Spark _temporary tree holds no
-    # parquet yet) and an unspent fold plan's files are not dead
+    # an in-flight fold's epoch dir (its files are still being written)
+    # and an unspent fold plan's files are not dead
     busy = set(_folder(path).outputs)
     sweep_roots = [e for e in os.listdir(path) if e.startswith("__epoch=") and e not in busy]
     for proj_dir in (e for e in os.listdir(path) if e.startswith("__proj_")):
@@ -1466,7 +1579,9 @@ def vacuum_silver(
                 if os.path.getmtime(full) <= cutoff:
                     os.remove(full)
                     removed += 1
-        # prune dirs emptied of data files (ignore _SUCCESS etc. leftovers)
+        # prune dirs emptied of data files, with the _SUCCESS and .crc
+        # leftovers of Spark's writer (bloom stores, and epochs written
+        # before the Arrow writer)
         for root, dirs, files in os.walk(os.path.join(path, epoch_dir), topdown=False):
             if not dirs and not any(f.endswith(".parquet") for f in files):
                 shutil.rmtree(root, ignore_errors=True)

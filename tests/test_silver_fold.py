@@ -307,6 +307,37 @@ def test_backstop_waits_out_the_fold_and_folds_inline(spark, tmp_path, monkeypat
     assert _live(spark, store) == fed
 
 
+def test_a_fold_claiming_after_later_commits_still_lands(spark, tmp_path, gated_fold,
+                                                         monkeypatch):
+    """The fold of snapshot 2, held at its start while three triggers
+    commit: its claim on fold epoch -2 still succeeds (no live file lies
+    under it), and its plan lands in the next delta commit instead of
+    failing and being redone from scratch."""
+    gate, ended = gated_fold
+    store, src, ckpt = str(tmp_path / "silver"), str(tmp_path / "src"), str(tmp_path / "c")
+    fed = {i: f"v{i}" for i in range(200)}
+    _upsert(spark, SEED, src, store, ckpt)
+    _upsert(spark, [(1, "u1", "u", 2, 0)], src, store, ckpt)  # due: the fold of v2 starts
+    fed[1] = "u1"
+    folder = pl._folder(store)
+    assert len(_fold_threads(store)) == 1
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 2)  # keep the backstop out of reach
+    for n in (2, 3, 4):
+        _upsert(spark, [(n, f"u{n}", "u", 2, 0)], src, store, ckpt)
+        fed[n] = f"u{n}"
+    assert pl._read_manifest(store)["version"] == 5 and ended == []
+    gate.set()
+    assert folder.wait(120) and folder.error is None
+    assert folder.plan is not None and folder.plan.rel == "__epoch=-2"
+    _upsert(spark, [(5, "u5", "u", 2, 0)], src, store, ckpt)
+    fed[5] = "u5"
+    m = pl._read_manifest(store)
+    assert m["version"] == 6 and any(f.startswith("__epoch=-2/") for f in m["files"])
+    assert [f.split("/")[0] for f in m[pl.DELTAS]] == [f"__epoch={v}" for v in (3, 4, 5, 6)]
+    assert _live(spark, store) == fed
+    assert folder.wait(120)
+
+
 SEQ_EVENTS = "id long, val string, op string, ts_ms long, offset long, seq long"
 
 

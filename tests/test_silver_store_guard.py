@@ -209,3 +209,69 @@ def _touched_bucket_merge(batch, store, keys, prepare, merge_fn, edits=None):
         ("fold_prepare", "second bucket writer"),
         ("publish", "second bucket writer"),
     ]
+
+
+# -- one data-file writer ---------------------------------------------------
+
+#: the one user of Spark's DataFrameWriter: stores with bloom columns,
+#: which pyarrow cannot write
+BLOOM_EXCEPTION = "_spark_files"
+#: the Arrow data-file kernel and the per-layout bucket writer
+ONE_CALLER = ("_arrow_files", "_write_buckets")
+
+
+def _writer_findings(tree: ast.Module) -> list[tuple[str, str]]:
+    """``(where, kind)`` of every way around the one data-file writer in
+    ``tree``: a DataFrameWriter (``.write``, read as a property) outside
+    the bloom exception, and a kernel or ``_write_buckets`` referenced by
+    other than one function."""
+    found, users = [], {name: [] for name in ONE_CALLER}
+    for top in tree.body:
+        scopes = top.body if isinstance(top, ast.ClassDef) else [top]
+        for scope in scopes:
+            where = getattr(scope, "name", "<module>")
+            called = {id(n.func) for n in ast.walk(scope) if isinstance(n, ast.Call)}
+            for node in ast.walk(scope):
+                if not isinstance(node, ast.Attribute):
+                    continue
+                if node.attr == "write" and id(node) not in called and where != BLOOM_EXCEPTION:
+                    found.append((where, "DataFrameWriter outside the bloom exception"))
+                elif node.attr in users:
+                    users[node.attr].append(where)
+    for name, where in users.items():
+        if len(where) != 1:
+            found.append((name, f"{len(where)} callers"))
+    return found
+
+
+def test_one_data_file_writer():
+    """Deltas and bucket files, of every layout, are written by the one
+    Arrow kernel through ``_write_files``; only the bloom exception uses
+    Spark's writer."""
+    found = _writer_findings(_parse(PIPELINE))
+    assert not found, "a second data-file writer in the pipeline:\n" + "\n".join(
+        f"{where}: {kind}" for where, kind in found)
+
+
+def test_writer_guard_sees_a_spark_write():
+    """Anti-tautology twin: the guard flags the delta writer as it was
+    before the Arrow kernel, a Spark write of the claimed epoch dir."""
+    old = '''
+class _SilverStore:
+    def publish_delta(self, rows, spec, plan=None):
+        with self._claim() as epoch_dir:
+            one.sortWithinPartitions(*spec["keys"]).write.options(
+                **self._write_options()
+            ).parquet(epoch_dir)
+
+    def _write_plan(self, df, keys, buckets, epoch, width, deltas=()):
+        written += [r["file"] for r in self._write_buckets(bucketed, sort, rel)]
+
+    def _write_files(self, df, rel):
+        write = functools.partial(_SilverStore._arrow_files, self.path, rel, block)
+
+    def _spark_files(self, df, rel):
+        writer = df.write.mode("append").options(**opts)
+'''
+    assert _writer_findings(ast.parse(old)) == [
+        ("publish_delta", "DataFrameWriter outside the bloom exception")]
