@@ -201,22 +201,30 @@ def _plan_bytes(plan) -> int | None:
         return None
 
 
-def _fits_one_task(df: DataFrame) -> bool:
-    """True when ``df``'s inputs are small enough for one task: the summed
-    size estimates of the optimized plan's LEAF relations are at most the
-    session's ``spark.sql.autoBroadcastJoinThreshold`` (≤ 0: never).  The
-    leaves, not ``df`` itself: a self-join's size-only estimate multiplies
-    its sides (the LSH pair list of 25 rows estimates at ~10¹⁷ bytes),
-    while the data a single task would read is bounded by the scans.
-    Leaves without an estimate (an RDD from a Python list) do not fit."""
-    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    if limit <= 0:
-        return False
+def _leaf_bytes(df: DataFrame) -> int | None:
+    """The summed size estimates of ``df``'s optimized plan's LEAF
+    relations (no Spark job); None when a leaf has no estimate (an RDD
+    from a Python list).  The leaves, not ``df`` itself: a self-join's
+    size-only estimate multiplies its sides (the LSH pair list of 25 rows
+    estimates at ~10¹⁷ bytes), while the data a single task would read is
+    bounded by the scans."""
     leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
     total = 0
     for i in range(leaves.size()):
         size = _plan_bytes(leaves.apply(i))
         if size is None:
-            return False
+            return None
         total += size
-    return total <= limit
+    return total
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """True when ``df``'s inputs are small enough for one task: their
+    :func:`_leaf_bytes` are at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (≤ 0: never).  Leaves without
+    an estimate do not fit."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit <= 0:
+        return False
+    size = _leaf_bytes(df)
+    return size is not None and size <= limit

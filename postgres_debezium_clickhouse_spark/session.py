@@ -66,11 +66,6 @@ _CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
 
-#: Silver data files carry a CRC per parquet page (streaming/pipeline.py);
-#: with this set, a read of a corrupted page fails instead of returning
-#: wrong values.  Files without page CRCs read as before.
-_VERIFY_PAGE_CHECKSUM = "parquet.page.verify-checksum.enabled"
-
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Set the runtime-settable confs the engine's semantics depend on, for
@@ -82,8 +77,9 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
       defaults ANSI on.
     - nanosAsLong — the events fixture stores TIMESTAMP(NANOS), which the
       parquet reader otherwise rejects.
-    - the streaming checkpoint manager and parquet page-CRC verification
-      (see the constants above).
+    - the streaming checkpoint manager (see the constant above), unless
+      the session names its own: a checkpoint on a store whose ``rename``
+      is not atomic needs the default FileContext manager or another.
     """
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -94,8 +90,8 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     # foreign session with a high initialPartitionNum pays uncoalesced
     # shuffles under every persist() in the foreachBatch merges
     spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
-    spark.conf.set(_VERIFY_PAGE_CHECKSUM, "true")
+    if spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None) is None:
+        spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
     return spark
 
 
@@ -156,7 +152,6 @@ def get_spark(
         # (sources/files.py) — same µs truncation DuckDB applies.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
-        .config(f"spark.hadoop.{_VERIFY_PAGE_CHECKSUM}", "true")
     )
     env_master = os.environ.get("SPARK_MASTER")
     if master:

@@ -117,7 +117,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators._pipe import _fits_one_task
+from ..operators._pipe import _fits_one_task, _leaf_bytes
 from ..operators.upsert import DELETED_FLAG, merge_touched
 
 
@@ -473,7 +473,11 @@ class _SilverStore:
         recorded schema."""
         if not files:
             return spark.createDataFrame([], self.schema)
-        reader = spark.read.option("basePath", self.path)
+        # the data files carry a CRC per page (:meth:`_arrow_files`):
+        # verified, a corrupted page fails the read instead of returning
+        # wrong values; files without page CRCs read as before
+        reader = (spark.read.option("basePath", self.path)
+                  .option("parquet.page.verify-checksum.enabled", "true"))
         if self.manifest.get(SCHEMA_UNION):
             reader = reader.schema(self.schema)
         else:
@@ -685,6 +689,14 @@ class _SilverStore:
     #: one record per written data file (:meth:`_write_files`)
     _FILE_RECORD = "layout string, bucket int, file string, rows long, bytes long"
 
+    #: the most input bytes (:func:`_leaf_bytes`: file sizes, so compressed
+    #: for parquet) the driver writes from one ``toArrow()`` collect — a
+    #: bound on driver memory, not a speed choice.  Parquet decodes to
+    #: several times its size, dictionary- or RLE-heavy columns to tens of
+    #: times, so 8 MiB keeps the collect to a few hundred MB, well under
+    #: the default ``spark.driver.maxResultSize`` (1 GiB).
+    _DRIVER_WRITE_BYTES = 8 << 20
+
     def _write_files(self, df: DataFrame, rel: str) -> list[dict]:
         """The one data-file writer, of deltas and bucket files alike:
         ``df``, sorted within its partitions — with a ``__bucket`` column
@@ -698,10 +710,11 @@ class _SilverStore:
         store-relative, ``layout`` the dir prefix before ``__epoch=``),
         sorted by file; an empty ``df`` writes none.
 
-        When ``df``'s inputs fit one task (:func:`_fits_one_task`), the
-        driver writes the files from its ``toArrow()``; above that, the
-        same kernel (:meth:`_arrow_files`) runs in ``mapInArrow`` at
-        ``df``'s width and the driver collects one record per file.  A
+        When ``df``'s inputs fit one task (:func:`_fits_one_task`) and
+        ``_DRIVER_WRITE_BYTES``, the driver writes the files from its
+        ``toArrow()``; otherwise the same kernel (:meth:`_arrow_files`)
+        runs in ``mapInArrow`` at ``df``'s width and the driver collects
+        one record per file.  A
         store with bloom columns is written by Spark's writer instead
         (:meth:`_spark_files`)."""
         if self.manifest.get("bloom_cols"):
@@ -709,7 +722,7 @@ class _SilverStore:
         block = df.sparkSession._jsparkSession.sessionState().newHadoopConf().getLong(
             "parquet.block.size", 128 * 1024 * 1024)
         write = functools.partial(_SilverStore._arrow_files, self.path, rel, block)
-        if _fits_one_task(df):
+        if _fits_one_task(df) and _leaf_bytes(df) <= self._DRIVER_WRITE_BYTES:
             import pyarrow as pa
 
             records = pa.Table.from_batches(write(df.toArrow().to_batches()))
@@ -723,9 +736,9 @@ class _SilverStore:
         Arrow ``batches`` of one partition into parquet files under
         ``path``/``rel`` — a file per run of one ``__bucket`` value (the
         column itself is not stored), or one file without that column —
-        through pyarrow's ``ParquetWriter``: snappy, a CRC per page (a
-        reader with ``parquet.page.verify-checksum.enabled`` fails on a
-        flipped byte), row groups of about ``group_bytes`` Arrow bytes
+        through pyarrow's ``ParquetWriter``: snappy, a CRC per page
+        (:meth:`_files_df` verifies them, so a flipped byte fails the
+        read), row groups of about ``group_bytes`` Arrow bytes
         (the Hadoop conf ``parquet.block.size``).  Yields one Arrow batch
         of the files' records (the fields of ``_FILE_RECORD``)."""
         import itertools

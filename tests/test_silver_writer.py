@@ -236,6 +236,58 @@ def test_map_in_arrow_placement_writes_what_the_driver_writes(spark, tmp_path, m
     assert executor == driver
 
 
+def test_an_input_too_large_for_the_driver_writes_in_map_in_arrow(spark, tmp_path, monkeypatch):
+    """Inputs that fit one task but exceed ``_DRIVER_WRITE_BYTES`` are not
+    collected on the driver: the inline fold, the delta and the background
+    fold all write in ``mapInArrow``, and their files hold what the driver
+    placement writes."""
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 16)
+    fits, mapped, writes = [], [], []
+    frame = type(spark.range(1))  # the session's DataFrame class, not the API base
+    real_fits, real_map = pl._fits_one_task, frame.mapInArrow
+    real_write = pl._SilverStore._write_files
+    monkeypatch.setattr(pl, "_fits_one_task", lambda df: fits.append(real_fits(df)) or fits[-1])
+    monkeypatch.setattr(frame, "mapInArrow",
+                        lambda df, *a, **k: mapped.append(1) or real_map(df, *a, **k))
+    monkeypatch.setattr(pl._SilverStore, "_write_files",
+                        lambda self, df, rel: writes.append(rel) or real_write(self, df, rel))
+    seen = {}
+    for cap in (pl._SilverStore._DRIVER_WRITE_BYTES, 1024):
+        monkeypatch.setattr(pl._SilverStore, "_DRIVER_WRITE_BYTES", cap)
+        fits.clear()
+        mapped.clear()
+        writes.clear()
+        path = str(tmp_path / f"store{cap}")
+        gen1, gen2 = _typed_store(spark, tmp_path / str(cap), path)
+        folder = pl._folder(path)
+        assert folder.wait(120) and folder.plan is not None
+        assert _state(spark, path) == _expected(gen1, gen2)
+        m = pl._read_manifest(path)
+        assert writes == ["__epoch=1", "__epoch=2", "__epoch=-2"] and fits and all(fits)
+        seen[cap] = (len(mapped), _file_rows(path, m["files"] + m[pl.DELTAS]),
+                     _file_rows(path, folder.plan.written))
+    (on_driver, *driver), (in_map, *executor) = seen.values()
+    assert on_driver == 0 and in_map == 3
+    assert executor == driver
+
+
+def test_ensure_session_confs_keeps_a_session_s_own_checkpoint_manager(spark):
+    """A session the engine did not create gets the FileSystem-based
+    checkpoint manager only when it names none: a manager it chose (say,
+    for a store without atomic rename) is left alone."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    own = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    try:
+        spark.conf.unset(key)
+        session.ensure_session_confs(spark)
+        assert spark.conf.get(key) == session._CHECKPOINT_FILE_MANAGER
+        spark.conf.set(key, own)
+        session.ensure_session_confs(spark)
+        assert spark.conf.get(key) == own
+    finally:
+        spark.conf.set(key, session._CHECKPOINT_FILE_MANAGER)
+
+
 def _flip_a_dictionary_byte(file: str, column: str) -> None:
     """Flip one byte near the end of ``column``'s first page (its
     dictionary page): a literal value byte of the snappy stream, so the
