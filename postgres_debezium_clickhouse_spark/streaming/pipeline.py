@@ -714,9 +714,8 @@ class _SilverStore:
         ``_DRIVER_WRITE_BYTES``, the driver writes the files from its
         ``toArrow()``; otherwise the same kernel (:meth:`_arrow_files`)
         runs in ``mapInArrow`` at ``df``'s width and the driver collects
-        one record per file.  A
-        store with bloom columns is written by Spark's writer instead
-        (:meth:`_spark_files`)."""
+        one record per file.  A store with bloom columns is written by
+        Spark's writer instead (:meth:`_spark_files`)."""
         if self.manifest.get("bloom_cols"):
             return self._spark_files(df, rel)
         block = df.sparkSession._jsparkSession.sessionState().newHadoopConf().getLong(
