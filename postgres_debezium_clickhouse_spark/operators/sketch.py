@@ -197,6 +197,18 @@ def qsample_quantile_expr(sketch_col, q: float):
     return F.element_at(vals, idx)
 
 
+def bottom_k(arrays, k: int | None, distinct: bool = True):
+    """The ``k`` smallest elements of the union of ``arrays`` (an array of
+    arrays, e.g. a ``collect_list`` of partial states), sorted — the level-2
+    merge of every bottom-k state here (KMV hashes, rank samples,
+    ``uniqUpTo`` values) and of the aggregating sink's array states.
+    ``distinct=False`` keeps duplicates (a sorted multiset); ``k=None``
+    keeps every element."""
+    flat = F.flatten(arrays)
+    out = F.array_sort(F.array_distinct(flat) if distinct else flat)
+    return out if k is None else F.slice(out, 1, k)
+
+
 def qsample_sketch(
     items: DataFrame,
     group_col: str,
@@ -226,12 +238,7 @@ def qsample_sketch(
     )
     return (
         lvl1.groupBy("grp")
-        .agg(
-            F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("part")))),
-                1, k,
-            ).alias("qsketch")
-        )
+        .agg(bottom_k(F.collect_list("part"), k).alias("qsketch"))
         .select(F.col("grp").alias(group_col), "qsketch")
     )
 
@@ -268,11 +275,7 @@ def kmv_sketch(
     )
     return (
         lvl1.groupBy("grp")
-        .agg(
-            F.slice(
-                F.array_sort(F.flatten(F.collect_list("part"))), 1, k
-            ).alias("sketch")
-        )
+        .agg(bottom_k(F.collect_list("part"), k, distinct=False).alias("sketch"))
         .select(F.col("grp").alias(group_col), "sketch")
     )
 
@@ -304,15 +307,7 @@ def uniq_upto(
     )
     return (
         lvl1.groupBy("grp")
-        .agg(
-            F.size(
-                F.slice(
-                    F.array_sort(F.array_distinct(F.flatten(F.collect_list("part")))),
-                    1,
-                    n + 1,
-                )
-            ).cast("long").alias("u")
-        )
+        .agg(F.size(bottom_k(F.collect_list("part"), n + 1)).cast("long").alias("u"))
         .select(F.col("grp").alias(group_col), "u")
     )
 
@@ -463,11 +458,6 @@ def hll_sketch(
     batch sketches and stored stream states MERGE with each other via
     :func:`hll_merge_expr`.  Two shuffles: (group, j) max-combine, then
     one densify per group over ≤ m collected entries."""
-    m = 1 << p
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda i: F.coalesce(F.element_at(F.col("__hm"), i), F.lit(0)),
-    )
     return (
         hll_registers(items, group_col, item_col, p)
         .groupBy("grp")
@@ -476,7 +466,17 @@ def hll_sketch(
                 F.collect_list(F.struct("__j", "__rho"))
             ).alias("__hm")
         )
-        .select(F.col("grp").alias(group_col), dense.alias("hll"))
+        .select(F.col("grp").alias(group_col), hll_dense_expr(F.col("__hm"), p).alias("hll"))
+    )
+
+
+def hll_dense_expr(registers, p: int = HLL_P):
+    """The m-slot register array (0 = untouched) of a ``register → rho``
+    map column: the one densify of :func:`hll_sketch` and the aggregating
+    sink's ``hll`` state."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit((1 << p) - 1)),
+        lambda i: F.coalesce(F.element_at(registers, i), F.lit(0)),
     )
 
 

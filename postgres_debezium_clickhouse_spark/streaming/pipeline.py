@@ -22,14 +22,19 @@ Mapping:
   errors.tolerance=none, abcsvb-connector-secure.json:51-53)
 
 Scale: bronze append is shuffle-free (narrow projection → partitioned
-parquet).  The keyed upsert sinks are merge-on-read, like the reference's
-ReplacingMergeTree (basic_example/clickhouse.sql:40-82): each insert
-lands as a part, ``SELECT … FINAL`` collapses versions at read time, and
-background merges fold parts later.  Here a trigger writes its batch's
-rows as they arrived as ONE delta file — no aggregate, no touched-bucket
-collect, no read of current rows: one single-task Spark job — and every
-reader applies FINAL over base ∪ deltas (one latest-wins aggregate,
-``operators.upsert.merge_touched``).  The merges run beside the sink,
+parquet).  Every silver sink is merge-on-read, like the reference's
+MergeTree family (basic_example/clickhouse.sql:40-82) — Replacing,
+Summing and Collapsing are one engine that differs only in the merge its
+background merges and FINAL apply: each insert lands as a part,
+``SELECT … FINAL`` merges at read time, and background merges fold parts
+later.  Here a trigger writes ONE delta file — a keyed sink its batch's
+rows as they arrived, a summing or collapsing sink its batch's partial
+state, one row per key — with no touched-bucket collect and no read of
+current rows (a keyed trigger is one single-task Spark job), and every
+reader applies FINAL over base ∪ deltas by the merge the manifest's
+delta spec names (``_merge_of``: latest-wins ``operators.upsert.
+merge_touched`` for a keyed store, the op table's ``-Merge`` functions,
+``_OPS``, for an additive one).  The merges run beside the sink,
 not in it: once the deltas are due, the store's background fold (one
 daemon thread per store, alive only while it folds) reads, merges and
 re-writes only the buckets whose keys appear in the deltas, in one task
@@ -54,7 +59,8 @@ Silver store layout (manifest-committed, bucketed)::
 
 ``_manifest.json`` lists the LIVE data files: ``files`` (the bucketed
 base) and ``deltas`` (one key-sorted file per trigger since the last
-fold, with ``delta_spec`` naming the merge columns).  Each publish writes
+fold, with ``delta_spec`` naming the merge: the store's kind, its keys
+and the kind's columns or ops).  Each publish writes
 fresh files under a new ``__epoch`` dir, then atomically replaces the
 manifest (write-temp + ``os.replace``) — exactly one manifest commit per
 trigger, delta or inline fold.  The manifest is the commit: a data file
@@ -110,14 +116,21 @@ import time
 import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable, Sequence
+from typing import Callable, NamedTuple, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators._pipe import _fits_one_task, _leaf_bytes
+from ..operators.sketch import (
+    bottom_k,
+    hll_dense_expr,
+    hll_merge_expr,
+    hll_register_exprs,
+    kmv_hash_expr,
+)
 from ..operators.upsert import DELETED_FLAG, merge_touched
 
 
@@ -221,7 +234,8 @@ SCHEMA_UNION = "schema_union"
 
 #: manifest keys of the merge-on-read layout: ``deltas`` lists the delta
 #: files (one per trigger since the last fold, oldest first), and
-#: ``delta_spec`` the keys and version/tiebreak/op columns they merge by
+#: ``delta_spec`` the merge they fold by (:func:`_merge_of`): the kind,
+#: the keys, and the kind's columns or ops
 DELTAS = "deltas"
 DELTA_SPEC = "delta_spec"
 
@@ -245,7 +259,7 @@ def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
     return T.StructType(out + list(fields.values()))
 
 
-#: merge-on-read fold cadence of the keyed upsert sinks: a trigger folds
+#: merge-on-read fold cadence of every sink: a trigger folds
 #: when the manifest already holds FOLD_DELTAS deltas, or when the delta
 #: files' bytes reach FOLD_BYTES_FRACTION of the base files' bytes (which
 #: bounds the extra rows every read merges)
@@ -265,10 +279,10 @@ class _SilverStore:
     newer version.
 
     Every base-bucket rewrite takes the same three steps: the one
-    touched-bucket merge (:meth:`merge`; the summing, collapsing and
-    transaction triggers pass their own merge function), the one bucket
-    writer (:meth:`_write_plan`, which returns a :class:`_FoldPlan`) and
-    the one plan-applying manifest builder (:meth:`_folded`).
+    touched-bucket merge (:meth:`merge`, by the merge a delta spec names,
+    :func:`_merge_of`, for every store kind), the one bucket writer
+    (:meth:`_write_plan`, which returns a :class:`_FoldPlan`) and the one
+    plan-applying manifest builder (:meth:`_folded`).
     :meth:`publish` — and through it the inline fold — writes epoch
     version + 1 at core width under its commit's claim.  A background
     fold's first step (:meth:`fold_prepare`) writes fold epoch
@@ -506,19 +520,17 @@ class _SilverStore:
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The FINAL view: the base files, and when the snapshot holds
-        deltas, :func:`merge_touched` of the delta rows over the base rows
-        — the fold's own merge, so winners, tie-breaks and the stored
-        ``__deleted`` rule are the eager path's by construction."""
+        deltas, the delta rows merged over the base rows by the merge the
+        delta spec names (:func:`_merge_of`) — the fold's own merge, so
+        winners, sums and the tombstone rules are the folded store's by
+        construction."""
         if self.legacy:
             return self.base(spark, self.all_buckets)
         base = self._files_df(spark, self.files)
         if not self.deltas:
             return base
-        spec = self.manifest[DELTA_SPEC]
-        return merge_touched(
-            self._delta_rows(spark), base, spec["keys"],
-            spec["version_col"], spec["tiebreak_col"], spec["op_col"],
-        ).select(*base.columns)
+        merge = _merge_of(self.manifest[DELTA_SPEC])
+        return merge(base, self._delta_rows(spark)).select(*base.columns)
 
     def read_projection(self, spark: SparkSession, name: str) -> DataFrame:
         pspec = self.projections.get(name)
@@ -608,28 +620,23 @@ class _SilverStore:
             projections[name] = {"keys": list(proj_keys), "files": []}
         return {"projections": projections}
 
-    def merge(self, spark: SparkSession, events: DataFrame | None, spec: dict,
-              merge_fn: Callable | None = None) -> tuple[DataFrame, set[int]] | None:
+    def merge(self, spark: SparkSession, events: DataFrame | None,
+              spec: dict) -> tuple[DataFrame, set[int]] | None:
         """The one touched-bucket merge, of every base-bucket rewrite that
         folds rows in: ``events`` ∪ this snapshot's delta rows merged over
         the base rows of the buckets they touch by ``spec["keys"]`` (every
         bucket of an adopted flat store), with those buckets; None when
-        nothing is touched.  The merge is ``merge_fn(current_or_None,
-        events)``, by default the keyed sinks' latest-wins
-        :func:`merge_touched` by ``spec``'s version, tiebreak and op
-        columns.  Runs the touched-bucket collect; a caller whose events
-        are a live batch persists them first, since the merge reads them
-        again."""
+        nothing is touched.  The merge is the one ``spec`` names
+        (:func:`_merge_of`).  Runs the touched-bucket collect; a caller
+        whose events are a live batch persists them first, since the
+        merge reads them again."""
         if self.deltas:
             rows = self._delta_rows(spark)
             events = rows if events is None else events.unionByName(rows, allowMissingColumns=True)
-        keys = spec["keys"]
-        buckets = self.all_buckets if self.legacy else self.touched(events, keys)
+        buckets = self.all_buckets if self.legacy else self.touched(events, spec["keys"])
         if not buckets:
             return None
-        merge_fn = merge_fn or (lambda current, ev: merge_touched(
-            ev, current, keys, spec["version_col"], spec["tiebreak_col"], spec["op_col"]))
-        return merge_fn(self.base(spark, buckets), events), buckets
+        return _merge_of(spec)(self.base(spark, buckets), events), buckets
 
     def publish(self, df: DataFrame, keys: list[str], replaced: set[int],
                 edits: dict | None = None) -> int:
@@ -844,14 +851,16 @@ class _SilverStore:
 
     # -- merge-on-read ---------------------------------------------------
 
-    def publish_delta(self, rows: DataFrame, spec: dict,
-                      plan: _FoldPlan | None = None) -> _SilverStore | None:
-        """Commit ``rows`` — one trigger's batch as it arrived, any number
-        of events per key — as ONE key-sorted delta file: the new manifest
-        keeps every base file and appends the delta.  The batch needs no
-        aggregate of its own: readers and the fold run latest-wins over
-        the delta rows as events (:meth:`_delta_rows`), and a max over a
-        superset of a key's events picks the same winner.  A column the
+    def publish_delta(self, rows: DataFrame, spec: dict, plan: _FoldPlan | None = None,
+                      edits: dict | None = None) -> _SilverStore | None:
+        """Commit ``rows`` — a keyed trigger's batch as it arrived, any
+        number of events per key, or an additive trigger's partial state,
+        one row per key — as ONE key-sorted delta file: the new manifest
+        keeps every base file and appends the delta, with ``edits`` (a
+        replay watermark) applied.  Readers and the fold merge the delta
+        rows by the merge ``spec`` names (:func:`_merge_of`), so a keyed
+        batch needs no aggregate of its own: a max over a superset of a
+        key's events picks the same winner.  A column the
         store already holds keeps its stored type (the batch is cast to
         it), so a delta never narrows the schema readers apply to the
         base.  ``plan``, a finished background fold, rides in the same
@@ -877,6 +886,7 @@ class _SilverStore:
             base = (self._folded(plan) if plan is not None else None) or self
             manifest = {
                 **base.manifest,
+                **(edits or {}),
                 DELTAS: base.deltas + [r["file"] for r in written],
                 DELTA_SPEC: spec,
                 "schema": _merge_schemas(base.schema, rows.schema).json(),
@@ -884,8 +894,8 @@ class _SilverStore:
             return _SilverStore(self.path, {**manifest, "version": self._commit(manifest)})
 
     def must_fold(self, spec: dict) -> bool:
-        """Whether the next keyed upsert trigger must fold inline, as its
-        one commit, instead of appending a delta.  Decided from the
+        """Whether the next trigger must fold inline, as its one commit,
+        instead of appending a delta.  Decided from the
         manifest — no Spark job.  An empty, flat (pre-manifest) or
         pre-union-schema store always folds, so does one with projections
         (their files stay exact), one whose deltas were written under
@@ -1129,40 +1139,58 @@ def _vacuum_on_cadence(path: str, version: int, every: int = 16) -> None:
 def _cdc_upsert(batch: DataFrame, path: str, keys: list[str], n_buckets: int,
                 version_col: str, tiebreak_col: str | None, op_col: str = "op",
                 legacy_mode: str = "migrate") -> None:
-    """One trigger of a keyed upsert sink, merge-on-read: the batch as it
-    arrived becomes ONE delta file and ONE manifest commit — no aggregate,
-    no touched-bucket collect, no read of current rows.  Readers apply
-    FINAL over base ∪ deltas (:meth:`_SilverStore.read`).
+    """One trigger of a keyed upsert sink: the batch as it arrived becomes
+    ONE delta file and ONE manifest commit — no aggregate, no
+    touched-bucket collect, no read of current rows — which readers merge
+    latest-wins (:func:`_delta_trigger`).  ``legacy_mode`` other than
+    ``"migrate"`` refuses a pre-manifest flat store."""
+    spec = {"kind": "replacing", "keys": list(keys), "version_col": version_col,
+            "tiebreak_col": tiebreak_col, "op_col": op_col}
+    _delta_trigger(batch, path, spec, n_buckets, migrate=legacy_mode == "migrate")
+
+
+def _delta_trigger(rows: DataFrame, path: str, spec: dict, n_buckets: int,
+                   migrate: bool = True, replay: tuple[str, int] | None = None) -> None:
+    """The one trigger of every merge-on-read sink: ``rows`` — a keyed
+    batch, or an additive sink's partial state — become ONE delta file
+    and ONE manifest commit, merged by readers and the fold with the
+    merge ``spec`` names (:func:`_merge_of`).  ``replay`` — a
+    non-idempotent sink's ``(checkpoint, batch_id)`` — skips a batch the
+    store already applied and commits the new watermark with the delta
+    (:func:`_replay_guard`).
 
     Merges leave the trigger.  Once the deltas are
     :meth:`_SilverStore.fold_due`, the trigger hands them to the store's
     background fold (:class:`_Folder`); the plan it prepares rides in a
     later trigger's delta commit, so every trigger stays exactly one
     commit.  The trigger folds inline — :meth:`_SilverStore.merge` of
-    batch ∪ deltas, published with the deltas cleared as its one commit
-    — only when it must
-    (:meth:`_SilverStore.must_fold`), after waiting out a fold in flight.
-    ``legacy_mode`` other than ``"migrate"`` refuses a pre-manifest flat
-    store."""
-    spec = {"keys": list(keys), "version_col": version_col,
-            "tiebreak_col": tiebreak_col, "op_col": op_col}
-    spark = batch.sparkSession
+    rows ∪ deltas, published with the deltas cleared as its one commit
+    — only when it must (:meth:`_SilverStore.must_fold`), after waiting
+    out a fold in flight.  ``migrate`` adopts a pre-manifest flat store;
+    otherwise one is refused."""
+    spark = rows.sparkSession
     folder = _folder(path)
-    store = _SilverStore.load_or_new(path, n_buckets, migrate=legacy_mode == "migrate")
+    store = _SilverStore.load_or_new(path, n_buckets, migrate=migrate)
+    edits = {}
+    if replay is not None:
+        applied = _replay_guard(store, *replay)
+        if applied is None:
+            return
+        edits = {"applied": applied}
     if store.must_fold(spec):
         folder.spent(folder.settle())  # the inline fold supersedes its plan
-        batch.persist()  # read by the touched-bucket collect and the merge
+        rows.persist()  # read by the touched-bucket collect and the merge
         try:
-            merged = store.merge(spark, batch, spec)
+            merged = store.merge(spark, rows, spec)
             if merged is None:
                 return
-            store.publish(merged[0], keys, merged[1], {DELTAS: []})
+            store.publish(merged[0], spec["keys"], merged[1], {DELTAS: [], **edits})
         finally:
-            batch.unpersist()
+            rows.unpersist()
         _vacuum_on_cadence(path, store.version + 1)
         return
     plan = folder.plan
-    committed = store.publish_delta(batch, spec, plan)
+    committed = store.publish_delta(rows, spec, plan, edits)
     if committed is None:
         return
     folder.spent(plan)
@@ -1196,15 +1224,13 @@ def wait_until_unblocked(
     on the cluster (no Spark job is launched until it returns); raises
     TimeoutError rather than silently interleaving a merge into a
     snapshot that promised consistency."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_s
+    deadline = time.monotonic() + timeout_s
     while merges_blocked(path):
-        if _time.monotonic() > deadline:
+        if time.monotonic() > deadline:
             raise TimeoutError(
                 f"blocking snapshot still holds {path} after {timeout_s}s"
             )
-        _time.sleep(poll_s)
+        time.sleep(poll_s)
 
 
 def silver_upsert_stream(
@@ -1276,10 +1302,8 @@ def _txn_trigger(batch: DataFrame, batch_id: int, ppath: str, checkpoint: str,
         return
     batch.persist()
     try:
-        universe, tx_buckets = pending.merge(
-            batch.sparkSession, batch, {"keys": [txn_id_col]},
-            lambda buffered, b: (b if buffered is None else buffered.unionByName(
-                b, allowMissingColumns=True)).dropDuplicates([txn_id_col, txn_order_col]))
+        universe, tx_buckets = pending.merge(batch.sparkSession, batch, {
+            "kind": "dedup", "keys": [txn_id_col], "by": [txn_id_col, txn_order_col]})
         universe.persist()
         try:
             totals = universe.groupBy(txn_id_col).agg(
@@ -1798,106 +1822,270 @@ def _replay_guard(store: _SilverStore, checkpoint: str, batch_id: int) -> dict |
     return keep
 
 
-#: associative+commutative merge ops the aggregating sink supports — each
-#: is exact and order-insensitive, so batch boundaries can never shift a
-#: result ("sum" runs in DECIMAL, see silver_summing_stream).  "kmv" (r9)
-#: is the mergeable-sketch STATE column — the real AggregatingMergeTree
-#: use (CH ``AggregateFunction(uniq, …)``): the stored value is the KMV
-#: distinct sketch (K smallest md5-derived hashes, operators/sketch.py's
-#: algebra), merged per batch by union+sort+slice; union is
-#: associative+commutative+idempotent, so the state is batch-boundary-
-#: AND duplicate-insensitive.  Read the estimate with
-#: ``operators.sketch.kmv_estimate_expr``.
-#:
-#: "argmax:<ord_col>" / "argmin:<ord_col>" (r9) are the CH
-#: ``argMaxState/argMinState`` analogues — the stored value is a struct
-#: ``(o, v)`` of the extremal ordering value and its payload; merge =
-#: lexicographic struct max/min, associative+commutative with a
-#: deterministic payload tie-break, so the state is batch-boundary-
-#: insensitive like every other op here.  Read the payload as
-#: ``col("<out>.v")``.
-#:
-#: "qsample:<id_col>" (r10, verdict item 4) is the QUANTILE state column
-#: — the CH ``AggregateFunction(quantileTDigest, …)`` slot, realized as
-#: a bottom-k rank sample (Cohen & Kaplan 2007, "Summarizing data using
-#: bottom-k sketches", public paper) instead of a t-digest: the state is
-#: the ``qsample_k`` (hash-of-id, value) pairs with smallest hashes — a
-#: deterministic uniform row sample, so any quantile is read off the
-#: sampled values with rank error O(√(q(1-q)/k)).  Chosen over t-digest
-#: because its merge is the SAME pure-JVM array algebra as the kmv
-#: column (union+dedup+sort+slice: associative, commutative AND
-#: idempotent — duplicate-delivery-proof), where a t-digest merge would
-#: drop to per-row Python.  ``id_col`` must identify a source row
-#: stably across replays (a Kafka offset, an event id): it is the
-#: sampling key that makes the multiset weighting and the determinism
-#: work.  Read with ``operators.sketch.qsample_quantile_expr``.
-#: "topk" (r10) completes the CH ``AggregateFunction`` family
-#: (uniq/argMax/argMin/quantileTDigest/topK): the stored value is a
-#: Space-Saving summary — ≤ ``topk_cap`` (cnt, item, err) structs,
-#: cnt an upper bound on the item's true count and cnt−err a lower
-#: bound — merged per the mergeable-summaries algebra (Agarwal et al.
-#: 2012, public paper): present contributions sum exactly; an item
-#: absent from one summary is charged that summary's min-count as both
-#: count and error; truncate to the cap by (cnt desc, item).  Unlike
-#: the kmv/qsample columns the merge is only bound-preserving, not
-#: bit-associative (truncation loses information — ClickHouse's topK
-#: carries the same caveat), so tests assert the GUARANTEES (heavy
-#: hitters survive; bounds bracket exact counts) rather than
-#: bit-equality across batch splits.  Item values are stored as
-#: strings (CH topK's untyped-array shape).  This op's partial/merge
-#: needs per-item regrouping, so it runs as its own explode→regroup
-#: branch (2 extra small shuffles over ≤2·cap rows per touched key per
-#: trigger) joined back to the main single-shuffle merge.
-#:
-#: "hll" (r10) is the DENSE-register distinct sketch — the CH
-#: ``uniqHLL12`` state column (Flajolet et al. 2007, public paper),
-#: complementing "kmv" exactly as CH's ``uniqCombined`` pairs the two
-#: representations: KMV buys set algebra at 8 bytes/slot, HLL buys
-#: σ=1.04/√m at ~1 byte-equivalent/register.  Stored value = the
-#: 2^``hll_p``-slot max-rho array (``operators.sketch.hll_sketch``
-#: layout, md5-prefix hash, so batch sketches and stored states merge
-#: and every register is deterministic).  Merge = element-wise max
-#: (``zip_with greatest``) — associative, commutative AND idempotent,
-#: the strongest merge class in the family.  Ingest needs per-register
-#: regrouping, so like "topk" it runs as its own (keys, j) branch
-#: joined back to the main merge (bounded: ≤ m rows per touched key);
-#: unlike "topk" its MERGE is a pure array expression in the main
-#: groupBy.  Read with ``operators.sketch.hll_estimate_expr``.
-AGG_OPS = ("sum", "min", "max", "kmv", "topk", "hll",
-           "summap", "minmap", "maxmap", "bitmap", "sortedarray")
-_KEYED_OPS = ("argmax", "argmin", "qsample", "topkweighted")
+class _Op(NamedTuple):
+    """One aggregate op of the additive stores: ClickHouse's
+    ``-State``/``-Merge`` combinator pair.  ``partial(src, arg, p)`` folds
+    a key's source rows into one state, ``merge(out, p)`` folds a key's n
+    states — a base row and any number of delta partials — into one
+    (``p``: the store's delta spec, for the k's and ``sum_scale``).  Each
+    returns an aggregate Column over the rows of one key or, for a state
+    that needs a per-item regroup first, a function of ``(rows, keys,
+    out)`` returning the keys and the state columns.  A merge Column keeps
+    the state's stored type (:func:`_additive_state` casts it back).
+
+    ``arg``: the op is spelled ``<op>:<col>``.  ``scalar``: the state is
+    one plain value, which a TTL rollup can fold.  ``sink``: the store
+    kind whose spec may name the op."""
+
+    partial: Callable
+    merge: Callable
+    arg: bool = False
+    scalar: bool = False
+    sink: str = "summing"
 
 
-def _additive_trigger(batch: DataFrame, batch_id: int, path: str, checkpoint: str,
-                      keys: list[str], n_buckets: int, prepare: Callable,
-                      merge_fn: Callable) -> None:
-    """One trigger of an additive sink (summing, collapsing): the batch
-    partial ``prepare(batch)`` merged into the buckets it touches by
-    ``merge_fn(current_or_None, partial)`` (:meth:`_SilverStore.merge`),
-    published with the replay watermark as one commit.
+def _dec(p: dict, digits: int) -> str:
+    return f"decimal({digits},{p['sum_scale']})"
 
-    REPLAY GUARD (r8 review): unlike latest-wins (where re-merging an
-    identical batch is a no-op), ADDITION is not idempotent — a
-    micro-batch replayed after a crash between the manifest commit and the
-    checkpoint write would double every sum it carries."""
-    store = _SilverStore.load_or_new(path, n_buckets)
-    keep = _replay_guard(store, checkpoint, batch_id)
-    if keep is None:
-        return
-    # the batch and its partial each feed several actions (touched-bucket
-    # collect + the merge itself) — evaluate each once; the try spans
-    # every action so a failing merge can't leak the cached frames
-    batch.persist()
-    part = prepare(batch).persist()
-    try:
-        merged = store.merge(batch.sparkSession, part, {"keys": keys}, merge_fn)
-        if merged is None:
-            return  # empty batch: nothing to publish
-        store.publish(merged[0], keys, merged[1], {"applied": keep})
-    finally:
-        part.unpersist()
-        batch.unpersist()
-    _vacuum_on_cadence(path, store.version + 1)
+
+def _map_fold(maps, pick, p: dict):
+    """Fold a list of ``map<string, numeric>`` per map key by ``pick``
+    (key union, an absent key NULL) into one ``decimal(30, sum_scale)``
+    map — one ``map_zip_with`` per map, no explode."""
+    acc = _dec(p, 30)
+    return F.aggregate(maps, F.expr(f"cast(map() as map<string,{acc}>)"),
+                       lambda a, m: F.map_zip_with(a, m, lambda _k, x, y: pick(x, y).cast(acc)))
+
+
+def _map_op(pick) -> _Op:
+    return _Op(
+        lambda src, arg, p: _map_fold(
+            F.collect_list(F.col(src).cast(f"map<string,{_dec(p, 18)}>")), pick, p),
+        lambda out, p: _map_fold(F.collect_list(out), pick, p),
+    )
+
+
+def _topk_summary(rows: DataFrame, keys: list[str], out: str, cap: int,
+                  item, cnt, err, charge) -> DataFrame:
+    """The Space-Saving summary per key of ``rows`` — ``(item, cnt, err,
+    charge)`` entries, where a NULL item carries only its charge —
+    merged per the mergeable-summaries algebra (Agarwal et al. 2012): an
+    item's count and error sum over its entries, plus every charge of the
+    key less the item's own; then the ``cap`` largest by (cnt, item),
+    stored sorted descending.  Kept items keep the bracket cnt−err ≤
+    true ≤ cnt."""
+    per_item = rows.groupBy(*keys, item.alias("__i")).agg(
+        F.sum(cnt).alias("__c"), F.sum(err).alias("__e"), F.sum(charge).alias("__m"))
+    state = per_item.groupBy(*keys).agg(
+        F.coalesce(F.sum(F.when(F.col("__i").isNull(), F.col("__m"))), F.lit(0)).alias("__tm"),
+        F.collect_list(F.when(F.col("__i").isNotNull(),
+                              F.struct("__c", "__i", "__e", "__m"))).alias("__l"),
+    )
+    entries = F.transform("__l", lambda x: F.struct(
+        (x["__c"] + F.col("__tm") - x["__m"]).cast("long").alias("cnt"),
+        x["__i"].alias("item"),
+        (x["__e"] + F.col("__tm") - x["__m"]).cast("long").alias("err"),
+    ))
+    return state.select(*keys, F.slice(F.sort_array(entries, asc=False), 1, cap).alias(out))
+
+
+def _topk_partial(src: str, weight: str | None, p: dict):
+    """A batch's summary: per item, its row count (``weight=None``) or
+    the sum of its weights in their own type, cast to long after the sum;
+    NULL items, and rows with a NULL weight, are ignored (ClickHouse's
+    topK/topKWeighted)."""
+    counted = F.col(src).isNotNull()
+    if weight is not None:
+        counted = counted & F.col(weight).isNotNull()
+    return lambda rows, keys, out: _topk_summary(
+        rows, keys, out, p["topk_cap"], F.when(counted, F.col(src).cast("string")),
+        F.lit(1) if weight is None else F.col(weight), F.lit(0), F.lit(0))
+
+
+def _topk_merge(out: str, p: dict):
+    """n summaries at once: a full summary (``topk_cap`` items) charges
+    its smallest count to every item it lacks — the NULL entry appended
+    to each summary carries that charge."""
+    cap = p["topk_cap"]
+
+    def frame(rows, keys, _out):
+        charge = F.when(F.size(out) >= cap, F.element_at(F.col(out), -1)["cnt"]).otherwise(0)
+        none = F.array(F.lit(None).cast(rows.schema[out].dataType.elementType))
+        entries = rows.select(*keys, charge.cast("long").alias("__ms"),
+                              F.explode(F.concat(F.col(out), none)).alias("__x"))
+        return _topk_summary(entries, keys, out, cap, F.col("__x.item"), F.col("__x.cnt"),
+                             F.col("__x.err"), F.col("__ms"))
+    return frame
+
+
+def _hll_partial(src: str, p: dict):
+    """A batch's dense HLL state: the (key, register) max-rho regroup,
+    densified as :func:`operators.sketch.hll_sketch` does; a key whose
+    items are all NULL gets the all-zeros array."""
+    def frame(rows, keys, out):
+        j, rho = hll_register_exprs(src, p["hll_p"])
+        regs = rows.select(*keys, j, rho).groupBy(*keys, "__j").agg(F.max("__rho").alias("__rho"))
+        entries = F.collect_list(F.when(F.col("__j").isNotNull(), F.struct("__j", "__rho")))
+        return regs.groupBy(*keys).agg(F.map_from_entries(entries).alias("__hm")).select(
+            *keys, hll_dense_expr(F.col("__hm"), p["hll_p"]).alias(out))
+    return frame
+
+
+def _collapsed(rows: DataFrame, keys: list[str], net: str, order: str, won) -> DataFrame:
+    """The collapsing state per key of ``rows``: the sign balance (the
+    sum of ``net``) and the payload — every other column — of the
+    greatest ``order`` among the ``won`` rows, with that order as
+    ``__ord``."""
+    payload = [c for c in rows.columns if c not in {*keys, net, order}]
+    winner = F.max(F.when(won, F.struct(F.col(order).cast("long").alias("__ord"), *payload)))
+    return rows.groupBy(*keys).agg(
+        F.sum(net).cast("long").alias("__sign_net"), winner.alias("__w"),
+    ).select(*keys, "__sign_net", "__w.*")
+
+
+#: The op table of the additive stores: every op's partial and merge, and
+#: nowhere else (tests/test_silver_store_guard.py).  Every op is
+#: associative and commutative, so batch boundaries never shift a result.
+#:
+#: - ``sum`` runs in DECIMAL: each batch's values enter as
+#:   DECIMAL(18, sum_scale) and accumulate in DECIMAL(30, sum_scale), so a
+#:   running total is exact and order-insensitive.  ``min``/``max`` never
+#:   accumulate.  ``summap``/``minmap``/``maxmap`` (CH SummingMergeTree
+#:   map columns, sumMap/minMap/maxMap) combine a ``map<string,
+#:   numeric>`` per map key, in the same decimal.
+#: - ``bitmap`` (CH groupBitmap): the exact distinct set of an integer
+#:   column as a sorted array; ``sortedarray`` (CH groupArraySorted(N)):
+#:   the ``sorted_k`` smallest values, duplicates kept (not idempotent,
+#:   like sum — the replay guard covers it).
+#: - ``kmv`` (CH uniq state): the ``kmv_k`` smallest md5-derived hashes,
+#:   ``operators.sketch.kmv_sketch``'s algebra; read the estimate with
+#:   ``kmv_estimate_expr``.  ``qsample:<id_col>`` (the quantile state):
+#:   the ``qsample_k`` (id-hash, value) pairs with the smallest hashes, a
+#:   deterministic uniform row sample (Cohen & Kaplan 2007, bottom-k
+#:   sketches); ``id_col`` must identify a source row stably across
+#:   replays.  Read with ``qsample_quantile_expr``.  Both merge by
+#:   union-sort-slice (``operators.sketch.bottom_k``): associative,
+#:   commutative and idempotent.
+#: - ``hll`` (CH uniqHLL12): the dense 2^``hll_p`` max-rho register
+#:   array of ``operators.sketch.hll_sketch``; merge = element-wise max.
+#: - ``argmax:<col>``/``argmin:<col>`` (CH argMaxState/argMinState): the
+#:   struct ``(o, v)`` of the extremal ordering value and its payload;
+#:   read the payload as ``col("<out>.v")``.
+#: - ``topk`` (CH topK): a Space-Saving summary of ≤ ``topk_cap``
+#:   (cnt, item, err) structs, items as strings; ``topkweighted:<col>``
+#:   (CH topKWeighted) counts the weight instead of the rows.  The merge
+#:   is bound-preserving, not bit-associative (truncation loses
+#:   information, as in ClickHouse), so tests assert its guarantees.
+#: - ``collapse:<order>`` is the collapsing stores' one op: the sign
+#:   balance plus the payload of the greatest-order +1 row.
+_OPS: dict[str, _Op] = {
+    "sum": _Op(lambda src, arg, p: F.sum(F.col(src).cast(_dec(p, 18))).cast(_dec(p, 30)),
+               lambda out, p: F.sum(out), scalar=True),
+    "min": _Op(lambda src, arg, p: F.min(src), lambda out, p: F.min(out), scalar=True),
+    "max": _Op(lambda src, arg, p: F.max(src), lambda out, p: F.max(out), scalar=True),
+    "kmv": _Op(
+        lambda src, arg, p: F.slice(F.array_sort(F.collect_set(kmv_hash_expr(src))), 1, p["kmv_k"]),
+        lambda out, p: bottom_k(F.collect_list(out), p["kmv_k"])),
+    "topk": _Op(lambda src, arg, p: _topk_partial(src, None, p), _topk_merge),
+    "hll": _Op(lambda src, arg, p: _hll_partial(src, p), lambda out, p: F.aggregate(
+        F.collect_list(out), F.array_repeat(F.lit(0), 1 << p["hll_p"]), hll_merge_expr)),
+    "summap": _map_op(lambda x, y: F.coalesce(x, F.lit(0)) + F.coalesce(y, F.lit(0))),
+    "minmap": _map_op(F.least),
+    "maxmap": _map_op(F.greatest),
+    "bitmap": _Op(lambda src, arg, p: F.array_sort(F.collect_set(F.col(src).cast("long"))),
+                  lambda out, p: bottom_k(F.collect_list(out), None)),
+    "sortedarray": _Op(
+        lambda src, arg, p: F.slice(
+            F.array_sort(F.collect_list(F.col(src).cast("double"))), 1, p["sorted_k"]),
+        lambda out, p: bottom_k(F.collect_list(out), p["sorted_k"], distinct=False)),
+    "argmax": _Op(lambda src, arg, p: F.max(F.struct(F.col(arg).alias("o"), F.col(src).alias("v"))),
+                  lambda out, p: F.max(out), arg=True),
+    "argmin": _Op(lambda src, arg, p: F.min(F.struct(F.col(arg).alias("o"), F.col(src).alias("v"))),
+                  lambda out, p: F.min(out), arg=True),
+    "qsample": _Op(
+        lambda src, arg, p: F.slice(F.array_sort(F.collect_set(F.struct(
+            kmv_hash_expr(arg).alias("h"), F.col(src).cast("double").alias("v")))), 1, p["qsample_k"]),
+        lambda out, p: bottom_k(F.collect_list(out), p["qsample_k"]), arg=True),
+    "topkweighted": _Op(lambda src, arg, p: _topk_partial(src, arg, p), _topk_merge, arg=True),
+    "collapse": _Op(
+        lambda src, arg, p: lambda rows, keys, out: _collapsed(rows, keys, src, arg, F.col(src) == 1),
+        lambda out, p: lambda rows, keys, _out: _collapsed(
+            rows, keys, out, "__ord", F.col("__ord").isNotNull()),
+        arg=True, sink="collapsing"),
+}
+AGG_OPS = tuple(o for o, e in _OPS.items() if e.sink == "summing" and not e.arg)
+_KEYED_OPS = tuple(o for o, e in _OPS.items() if e.sink == "summing" and e.arg)
+
+
+def _aggregated(rows: DataFrame, keys: list[str], parts: dict) -> DataFrame:
+    """One row per ``keys`` of ``rows``: each part an aggregate Column, or
+    a function of ``(rows, keys, out)`` whose frame joins back on keys."""
+    aggs = [c.alias(out) for out, c in parts.items() if isinstance(c, Column)]
+    frames = [f(rows, keys, out) for out, f in parts.items() if not isinstance(f, Column)]
+    state = rows.groupBy(*keys).agg(*aggs) if aggs else frames.pop(0)
+    for frame in frames:
+        state = state.join(frame, list(keys), "left")
+    return state
+
+
+def _additive_state(rows: DataFrame, spec: dict, merge: bool) -> DataFrame:
+    """The state of an additive store's ``rows`` by the op table, per key
+    (plus ``version_col`` for a versioned collapsing store): source rows
+    folded by each op's partial, or (``merge``) states folded by its
+    merge, each merged state cast back to its type.  A summing store also
+    counts its source rows in ``__n_rows``."""
+    keys = spec["keys"] + ([spec["version_col"]] if spec.get("version_col") else [])
+    parts = {}
+    for out, (src, op) in spec["ops"].items():
+        base, _, arg = op.partition(":")
+        if merge:
+            part = _OPS[base].merge(out, spec)
+            parts[out] = part.cast(rows.schema[out].dataType) if isinstance(part, Column) else part
+        else:
+            parts[out] = _OPS[base].partial(src, arg or None, spec)
+    if spec["kind"] == "summing":
+        parts["__n_rows"] = F.sum("__n_rows") if merge else F.count(F.lit(1))
+    return _aggregated(rows, keys, parts)
+
+
+def _merge_of(spec: dict) -> Callable[[DataFrame | None, DataFrame], DataFrame]:
+    """The one merge of a store, rebuilt from the delta spec that names
+    it (a spec without ``kind`` is a keyed store's): ``merge(current,
+    events)`` folds ``events`` — a batch, delta rows, or both — into
+    ``current``, the stored rows of the buckets they touch (None: none).
+    Every trigger, fold and read merges through it.
+
+    - ``replacing`` (the keyed sinks): latest-wins by the spec's version,
+      tiebreak and op columns (:func:`merge_touched`).
+    - ``summing`` / ``collapsing``: the op table's merges over the live
+      stored rows ∪ the partials (:func:`_additive_state`), by the keys
+      plus a versioned collapsing store's ``version_col``, which also
+      drops net-0 versions.  A tombstoned key (TTL, mutation) restarts
+      from its new partials only, never from its expired totals, and
+      keeps its tombstone until new partials arrive.
+    - ``dedup`` (the transaction sinks' pending buffer, which is eager
+      and writes no deltas): the union, one row per ``by`` tuple."""
+    kind, keys = spec.get("kind", "replacing"), spec["keys"]
+    if kind == "replacing":
+        return lambda current, events: merge_touched(
+            events, current, keys, spec["version_col"], spec["tiebreak_col"], spec["op_col"])
+    if kind == "dedup":
+        return lambda current, events: (events if current is None else current.unionByName(
+            events, allowMissingColumns=True)).dropDuplicates(spec["by"])
+
+    def additive(current: DataFrame | None, events: DataFrame) -> DataFrame:
+        live = events if current is None else current.filter(~F.col(DELETED_FLAG)).drop(
+            DELETED_FLAG).unionByName(events, allowMissingColumns=True)
+        merged = _additive_state(live, spec, merge=True)
+        if kind == "collapsing" and spec["version_col"]:
+            merged = merged.filter(F.col("__sign_net") != 0)
+        merged = merged.withColumn(DELETED_FLAG, F.lit(False))
+        if current is None:
+            return merged
+        tombs = current.filter(F.col(DELETED_FLAG))
+        return merged.unionByName(tombs.join(merged.select(*keys), keys, "left_anti"))
+
+    return additive
 
 
 def _parse_agg_op(op: str) -> tuple[str, str | None]:
@@ -1912,6 +2100,24 @@ def _parse_agg_op(op: str) -> tuple[str, str | None]:
             f"qsample:<id_col>/topkweighted:<weight_col>, got {op!r}"
         )
     return op, None
+
+
+def _additive_stream(events: DataFrame, path: str, checkpoint: str, spec: dict,
+                     n_buckets: int, available_now: bool,
+                     processing_interval_ms: int | None) -> StreamingQuery:
+    """Start an additive sink: per micro-batch, the batch's partial state
+    (one row per key, :func:`_additive_state`) goes through the
+    one trigger (:func:`_delta_trigger`) as a delta, its replay watermark
+    in the same commit.  A small batch is one task end to end: coalesced
+    first, its partial aggregate needs no exchange."""
+
+    def _merge(batch: DataFrame, batch_id: int) -> None:
+        one = batch.coalesce(1) if _fits_one_task(batch) else batch
+        _delta_trigger(_additive_state(one, spec, merge=False), path, spec, n_buckets,
+                       migrate=False, replay=(checkpoint, batch_id))
+
+    writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
+    return _start(writer, available_now, processing_interval_ms)
 
 
 def silver_summing_stream(
@@ -1935,433 +2141,57 @@ def silver_summing_stream(
     (ClickHouse's second MergeTree family after the Replacing one S8
     covers; reference surface: the same ENGINE= slot as clickhouse.sql's
     ReplacingMergeTree tables).  Per micro-batch the batch collapses to
-    ONE partial-sum row per key (map-side combinable groupBy), then
-    merges into the store by per-key ADDITION — the store always holds
-    exactly one row per key carrying the running sums plus ``__n_rows``
-    (the count() companion column CH users keep, since source rows
-    collapse on merge).
+    ONE partial row per key (map-side combinable groupBy), appended as a
+    delta; FINAL — every read, and the fold that rewrites the touched
+    buckets — merges a key's partials and its stored row by per-key
+    ADDITION, so the store holds exactly one row per key carrying the
+    running sums plus ``__n_rows`` (the count() companion column CH users
+    keep, since source rows collapse on merge).
 
     Sums are carried as DECIMAL(30,2) (each batch's doubles enter as
     DECIMAL(18,2)) so the running total is EXACT and order-insensitive —
     disorder, replay order, and bucket boundaries cannot change a single
-    bit, which is also what makes the DuckDB oracle exact.  No version /
-    tiebreak columns are needed: addition commutes, so this sink needs
-    even less from the source than latest-wins does (exactly-once still
-    comes from the checkpoint + the CAS commit).
+    bit, which is also what makes the DuckDB oracle exact.  ``sum_scale``
+    sets the scale: values with more fractional digits are rounded at
+    ingestion.  No version / tiebreak columns are needed: addition
+    commutes.  Addition is not idempotent, so a batch replayed after a
+    crash between the commit and the checkpoint write is skipped by the
+    manifest's replay watermark (``_replay_guard``), committed with the
+    delta.
 
     ``agg_spec`` (AggregatingMergeTree generalization — CH's third
-    MergeTree family): ``{out_col: (src_col, op)}`` with op ∈ ``sum`` /
-    ``min`` / ``max`` — every supported op is associative+commutative, so
-    the same batch-boundary-insensitivity argument holds for all of them
+    MergeTree family): ``{out_col: (src_col, op)}`` with op one of the
+    op table's (``_OPS``): ``sum``/``min``/``max``, the map ops
+    ``summap``/``minmap``/``maxmap``, ``bitmap``, ``sortedarray``, the
+    sketch states ``kmv`` (``kmv_k``), ``qsample:<id_col>``
+    (``qsample_k``), ``hll`` (``hll_p``), ``topk``/``topkweighted:<col>``
+    (``topk_cap``), and ``argmax:<col>``/``argmin:<col>``.  Every op is
+    associative+commutative, so batch boundaries cannot shift a result
     (avg = a sum column + ``__n_rows`` at read time; non-decomposable
     aggs belong in the latest-wins store or a sketch column).
 
-    ``op="summap"/"minmap"/"maxmap"`` (r11) — CH's SummingMergeTree map
-    columns (Nested key/value pairs summed per map-key on merge) and the
-    ``sumMap``/``minMap``/``maxMap`` aggregate states: the source column
-    is ``map<string, numeric>``; the store carries one map per key whose
-    values combine PER MAP-KEY across rows and batches (key union, absent
-    = identity).  summap accumulates in exact decimal like scalar sum;
-    all three are associative+commutative single-expression combines
-    (``map_zip_with`` — no explode, no join-back).
-
-    ``op="kmv"`` (r9) stores a MERGEABLE DISTINCT SKETCH per key — the
-    CH ``AggregateFunction(uniq, col)``-state-column analogue: the value
-    is the array of the ``kmv_k`` smallest md5-derived hashes of ``src``
-    (the exact algebra of ``operators.sketch.kmv_sketch``, so estimates/
-    set-ops compose with the batch sketches).  Merge = union+sort+slice;
-    union is associative, commutative AND idempotent, so the sketch state
-    is insensitive to batch boundaries and even to duplicate delivery —
-    strictly stronger than the additive columns (which need the replay
-    guard; the sketch gets it for free but shares the sink's guard
-    anyway).  Per-key state is bounded at ``kmv_k`` longs regardless of
-    the true distinct count; read the estimate with
-    ``operators.sketch.kmv_estimate_expr(col, kmv_k)``.
-
-    Same touched-bucket versioned publish as ``silver_upsert_stream``:
-    per trigger only buckets containing batch keys are read, merged (one
-    union + one keyed groupBy over those buckets), and re-published as
-    one manifest version.  Read with
-    ``read_silver``.  TTL/mutations compose: tombstoned keys stay out of
-    the running sums and stay hidden until (unless) the stream delivers
-    NEW rows for the key — which restarts it from the new partial only,
-    never resurrecting the expired totals."""
-    # "sum" enters as DECIMAL(18,sum_scale) and accumulates in
-    # DECIMAL(30,sum_scale): values with MORE fractional digits than
-    # sum_scale are rounded at ingestion — the monetary 2-dp default
-    # matches the reference's money columns; widen for other domains.
-    acc = f"decimal(30,{sum_scale})"
-    ingest_t = f"decimal(18,{sum_scale})"
-    spec: dict[str, tuple[str, str]] = dict(agg_spec or {})
+    The manifest's delta spec names the kind, the keys, the op spec and
+    its parameters, so every reader and fold rebuilds the same merge.
+    Read with ``read_silver``.  TTL/mutations compose: tombstoned keys
+    stay out of the running sums and stay hidden until (unless) the
+    stream delivers NEW rows for the key — which restarts it from the new
+    partials only, never resurrecting the expired totals."""
+    ops: dict[str, tuple[str, str]] = dict(agg_spec or {})
     for c in sum_cols or []:
-        spec[c] = (c, "sum")
-    if not spec:
+        ops[c] = (c, "sum")
+    if not ops:
         raise ValueError("need sum_cols and/or agg_spec")
-    for out, (src, op) in spec.items():
+    for out, (src, op) in ops.items():
         try:
             _parse_agg_op(op)
         except ValueError as e:
             raise ValueError(f"agg_spec[{out!r}]: {e}") from None
-
-    from ..operators.sketch import kmv_hash_expr
-
-    # topk columns need per-ITEM regrouping, which no single agg
-    # expression can do — they run as their own explode→regroup branch
-    # (see the AGG_OPS comment) and join back on the keys.  The r12
-    # "topkweighted:<weight_col>" variant (CH topKWeighted) is the SAME
-    # Space-Saving summary with the batch contribution summing the
-    # weight column instead of counting rows — state shape, merge
-    # algebra, bounds and cap truncation are identical, so it rides the
-    # same branch with a per-entry weight column.
-    topk_outs = [
-        (out, src, _parse_agg_op(op)[1]) for out, (src, op) in spec.items()
-        if _parse_agg_op(op)[0] in ("topk", "topkweighted")
-    ]
-    # hll ingest also needs regrouping (per-REGISTER max), so it shares
-    # the branch-and-join-back shape — but its merge is a pure array
-    # expression, so it stays in the main merge groupBy (see _remerge)
-    hll_outs = [
-        (out, src) for out, (src, op) in spec.items()
-        if _parse_agg_op(op)[0] == "hll"
-    ]
-    spec_main = {
-        out: v for out, v in spec.items()
-        if _parse_agg_op(v[1])[0] not in ("topk", "topkweighted", "hll")
-    }
-
-    # typed empty summary for keys with no non-NULL items (ADVICE r10)
-    _TOPK_EMPTY = F.array().cast(
-        "array<struct<cnt:bigint,item:string,err:bigint>>"
-    )
-
-    def _topk_summary(counted: DataFrame, out: str) -> DataFrame:
-        """(keys, __i item, __c cnt-upper, __e err) → ≤cap summary rows
-        per key, stored sorted by (cnt desc, item desc) for determinism."""
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*keys).orderBy(
-            F.desc("__c"), F.desc("__i")
-        )
-        return (
-            counted.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= topk_cap)
-            .groupBy(*keys)
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("__c").cast("long").alias("cnt"),
-                            F.col("__i").alias("item"),
-                            F.col("__e").cast("long").alias("err"),
-                        )
-                    ),
-                    asc=False,
-                ).alias(out)
-            )
-        )
-
-    def _topk_batch_partial(
-        batch: DataFrame, out: str, src: str, weight: str | None
-    ) -> DataFrame:
-        # NULL source values are ignored (matching the kmv/hll/qsample
-        # siblings and ClickHouse topK) rather than occupying a summary
-        # slot as a NULL item; for the weighted variant NULL weights are
-        # skipped too (CH topKWeighted ignores NULL weight rows).
-        filt = F.col(src).isNotNull()
-        if weight is not None:
-            filt = filt & F.col(weight).isNotNull()
-        # sum in the weight column's native type THEN cast the
-        # aggregate — a per-row cast would silently truncate fractional
-        # weights (1.9 → 1) before summing; CH topKWeighted takes
-        # UInt64 so integer columns are unchanged either way
-        contrib = (
-            F.count(F.lit(1)) if weight is None
-            else F.sum(F.col(weight)).cast("long")
-        )
-        counted = (
-            batch.filter(filt)
-            .groupBy(*keys, F.col(src).cast("string").alias("__i"))
-            .agg(contrib.alias("__c"))
-            .withColumn("__e", F.lit(0))
-        )
-        return _topk_summary(counted, out)
-
-    def _topk_merge(un: DataFrame, out: str) -> DataFrame:
-        """Mergeable-summaries combine of the ≤2 summaries per key
-        (store row + batch partial): an item absent from one summary is
-        charged that summary's min-count as count AND error; then
-        truncate.  Kept items keep the bracket cnt−err ≤ true ≤ cnt."""
-        rows = (
-            un.select(*keys, F.col(out))
-            .filter(F.col(out).isNotNull())
-            .withColumn(
-                "__m",
-                F.when(
-                    F.size(out) >= topk_cap,
-                    F.element_at(F.col(out), -1)["cnt"],
-                ).otherwise(F.lit(0)).cast("long"),
-            )
-        )
-        tot = rows.groupBy(*keys).agg(F.sum("__m").alias("__tm"))
-        per_item = (
-            rows.select(*keys, "__m", F.explode(out).alias("e"))
-            .groupBy(*keys, F.col("e.item").alias("__i"))
-            .agg(
-                F.sum("e.cnt").alias("__c0"),
-                F.sum("e.err").alias("__e0"),
-                F.sum("__m").alias("__pm"),
-            )
-            .join(tot, list(keys))
-            .select(
-                *keys,
-                "__i",
-                (F.col("__c0") + F.col("__tm") - F.col("__pm")).alias("__c"),
-                (F.col("__e0") + F.col("__tm") - F.col("__pm")).alias("__e"),
-            )
-        )
-        return _topk_summary(per_item, out)
-
-    def _hll_batch_partial(batch: DataFrame, out: str, src: str) -> DataFrame:
-        """Dense HLL partial per key for one micro-batch: (keys, register)
-        max-rho regroup, then densify to the 2^hll_p-slot array — the
-        exact hll_sketch layout, so stored states and batch partials are
-        interchangeable."""
-        from ..operators.sketch import hll_register_exprs
-
-        m = 1 << hll_p
-        j, rho = hll_register_exprs(src, hll_p)
-        regs = (
-            batch.filter(F.col(src).isNotNull())
-            .select(*keys, j, rho)
-            .groupBy(*keys, "__j")
-            .agg(F.max("__rho").alias("__rho"))
-        )
-        dense = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda i: F.coalesce(F.element_at(F.col("__hm"), i), F.lit(0)),
-        )
-        return (
-            regs.groupBy(*keys)
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct("__j", "__rho"))
-                ).alias("__hm")
-            )
-            .select(*keys, dense.alias(out))
-        )
-
-    def _hll_remerge(out: str):
-        """Union of the ≤2 register arrays per key (store row + batch
-        partial) = element-wise max.  A key whose batch rows were all
-        NULL-item joins a NULL partial; collect_list drops it and the
-        all-zeros seed keeps the type (estimate 0 via linear counting)."""
-        m = 1 << hll_p
-        return F.aggregate(
-            F.collect_list(F.col(out)),
-            F.array_repeat(F.lit(0), m),
-            lambda acc, x: F.zip_with(acc, x, lambda a, b: F.greatest(a, b)),
-        ).alias(out)
-
-    # CH SummingMergeTree map columns / sumMap-minMap-maxMap states (r11):
-    # the source column is map<string, numeric>; the state is one map per
-    # key whose values combine per MAP-KEY across rows and batches.
-    # map_zip_with aligns the union of both maps' keys (absent → NULL),
-    # so each combine is a single JVM expression — no explode, no
-    # join-back.  Values enter as decimal(18,scale) (same per-row
-    # rounding contract as scalar sum) and accumulate in decimal(30,
-    # scale), so summap is exact and order-insensitive like its scalar
-    # sibling; min/max never accumulate.  All three are associative +
-    # commutative, hence batch-boundary-insensitive.
-    map_ingest_t = f"map<string,decimal(18,{sum_scale})>"
-    map_acc_t = f"map<string,decimal(30,{sum_scale})>"
-
-    def _map_combine(base: str):
-        if base == "summap":
-            def val(k, v1, v2):
-                return (
-                    F.coalesce(v1, F.lit(0)) + F.coalesce(v2, F.lit(0))
-                ).cast(f"decimal(30,{sum_scale})")
-        else:
-            # least/greatest skip NULLs (a key absent from one side)
-            pick = F.least if base == "minmap" else F.greatest
-
-            def val(k, v1, v2):
-                return pick(v1, v2).cast(f"decimal(30,{sum_scale})")
-
-        return lambda acc_m, m: F.map_zip_with(acc_m, m, val)
-
-    def _map_agg(col, base: str):
-        return F.aggregate(
-            F.collect_list(col),
-            F.expr(f"cast(map() as {map_acc_t})"),
-            _map_combine(base),
-        )
-
-    def _ingest(out: str, src: str, op: str):
-        base, ord_col = _parse_agg_op(op)
-        if base == "sum":
-            return F.sum(F.col(src).cast(ingest_t)).cast(acc).alias(out)
-        if base in ("summap", "minmap", "maxmap"):
-            return _map_agg(F.col(src).cast(map_ingest_t), base).alias(out)
-        if base == "bitmap":
-            # CH groupBitmapState (uniqExact family): the EXACT distinct
-            # set of an integer column as a sorted array — union-merge is
-            # associative, commutative AND idempotent like kmv, but never
-            # truncated.  Per-key state is O(true distinct count) by the
-            # operator's own contract (CH's roaring bitmap compresses the
-            # same asymptotics); use kmv/hll where an estimate suffices.
-            return F.array_sort(
-                F.collect_set(F.col(src).cast("long"))
-            ).alias(out)
-        if base == "sortedarray":
-            # CH groupArraySortedState(N): the N SMALLEST values per key,
-            # duplicates kept (CH semantics) — bounded at sorted_k; merge
-            # = flatten+sort+slice, associative+commutative (NOT
-            # idempotent, like sum — the sink's replay guard covers it)
-            return F.slice(
-                F.array_sort(F.collect_list(F.col(src).cast("double"))),
-                1, sorted_k,
-            ).alias(out)
-        if base == "kmv":
-            # batch partial sketch: K smallest hashes of the batch's
-            # values for this key (collect_set state is key-local within
-            # one micro-batch, immediately sliced to kmv_k)
-            return F.slice(
-                F.array_sort(F.collect_set(kmv_hash_expr(src))), 1, kmv_k
-            ).alias(out)
-        if base == "qsample":
-            # batch partial: the qsample_k (id-hash, value) pairs with
-            # smallest hashes — a deterministic uniform row sample
-            # (collect_set dedups same-id redelivery within the batch)
-            return F.slice(
-                F.array_sort(
-                    F.collect_set(
-                        F.struct(
-                            kmv_hash_expr(ord_col).alias("h"),
-                            F.col(src).cast("double").alias("v"),
-                        )
-                    )
-                ),
-                1,
-                qsample_k,
-            ).alias(out)
-        if base in ("argmax", "argmin"):
-            picker = F.max if base == "argmax" else F.min
-            return picker(
-                F.struct(F.col(ord_col).alias("o"), F.col(src).alias("v"))
-            ).alias(out)
-        return getattr(F, base)(F.col(src)).alias(out)
-
-    def _remerge(out: str, op: str):
-        base, _ = _parse_agg_op(op)
-        if base == "sum":
-            return F.sum(F.col(out)).cast(acc).alias(out)
-        if base in ("summap", "minmap", "maxmap"):
-            # map-key-union combine of the ≤2 maps per key (store row +
-            # batch partial) — same expression as ingestion
-            return _map_agg(F.col(out), base).alias(out)
-        if base == "bitmap":
-            # exact set union of the ≤2 arrays per key — the kmv merge
-            # without the slice
-            return F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list(F.col(out))))
-            ).alias(out)
-        if base == "sortedarray":
-            # ≤2 arrays per key → flatten, sort, keep the N smallest
-            # (duplicates preserved — no array_distinct here)
-            return F.slice(
-                F.array_sort(F.flatten(F.collect_list(F.col(out)))),
-                1, sorted_k,
-            ).alias(out)
-        if base == "kmv":
-            # sketch union: ≤2 arrays per key (store row + batch partial)
-            # → flatten, dedup, K smallest — bounded at 2·kmv_k inputs
-            return F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list(F.col(out))))
-                ),
-                1,
-                kmv_k,
-            ).alias(out)
-        if base == "qsample":
-            # sample union: ≤2 arrays per key → flatten, dedup, K
-            # smallest by hash — bounded at 2·qsample_k inputs, and
-            # idempotent (same id+value → identical struct)
-            return F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list(F.col(out))))
-                ),
-                1,
-                qsample_k,
-            ).alias(out)
-        if base in ("argmax", "argmin"):
-            return (F.max if base == "argmax" else F.min)(F.col(out)).alias(out)
-        return getattr(F, base)(F.col(out)).alias(out)
-
-    def _batch_partial(batch: DataFrame) -> DataFrame:
-        part = batch.groupBy(*keys).agg(
-            *[_ingest(out, src, op) for out, (src, op) in spec_main.items()],
-            F.count(F.lit(1)).alias("__n_rows"),
-        )
-        for out, src, wcol in topk_outs:
-            part = part.join(
-                _topk_batch_partial(batch, out, src, wcol), list(keys), "left"
-            )
-            # a key whose batch rows were all NULL items has no partial
-            # (NULLs are ignored, matching CH topK and the hll/kmv
-            # siblings); seed the typed empty summary
-            part = part.withColumn(out, F.coalesce(F.col(out), _TOPK_EMPTY))
-        for out, src in hll_outs:
-            part = part.join(_hll_batch_partial(batch, out, src), list(keys), "left")
-            # a key whose batch rows were all NULL items has no partial;
-            # seed the all-zeros array so the first-batch path (which
-            # bypasses _hll_remerge) still stores a well-typed register set
-            part = part.withColumn(
-                out,
-                F.coalesce(F.col(out), F.array_repeat(F.lit(0), 1 << hll_p)),
-            )
-        return part
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        def merge_fn(current: DataFrame | None, agg: DataFrame) -> DataFrame:
-            if current is None:
-                return agg.withColumn(DELETED_FLAG, F.lit(False))
-            # Tombstone-correct composition (review r8: the first cut
-            # dropped the flag and resurrected TTL/mutation deletes with
-            # their full pre-expiry totals): tombstoned keys are EXCLUDED
-            # from the re-sum; a tombstone survives unless the batch
-            # carries new rows for its key, in which case the key restarts
-            # from the new partial only (the CH TTL-then-reinsert shape).
-            live = current.filter(~F.col(DELETED_FLAG)).drop(DELETED_FLAG)
-            tombs = current.filter(F.col(DELETED_FLAG))
-            # no persist on `un`: the batch partial is already cached by
-            # _additive_trigger and the store side is a bucket-pruned
-            # file scan — a per-trigger cache here would leak (no safe
-            # unpersist point after the publish consumes the plan)
-            un = live.unionByName(agg)
-            merged = (
-                un
-                .groupBy(*keys)
-                .agg(
-                    *[_remerge(out, op) for out, (_, op) in spec_main.items()],
-                    *[_hll_remerge(out) for out, _ in hll_outs],
-                    F.sum("__n_rows").alias("__n_rows"),
-                )
-            )
-            for out, _src, _w in topk_outs:
-                merged = merged.join(_topk_merge(un, out), list(keys), "left")
-                merged = merged.withColumn(
-                    out, F.coalesce(F.col(out), _TOPK_EMPTY)
-                )
-            merged = merged.withColumn(DELETED_FLAG, F.lit(False))
-            kept_tombs = tombs.join(merged.select(*keys), keys, "left_anti")
-            return merged.unionByName(kept_tombs)
-
-        _additive_trigger(batch, batch_id, path, checkpoint, keys, n_buckets,
-                          _batch_partial, merge_fn)
-
-    writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    return _start(writer, available_now, processing_interval_ms)
+    spec = {"kind": "summing", "keys": list(keys),
+            "ops": {out: [src, op] for out, (src, op) in ops.items()},
+            "sum_scale": sum_scale, "kmv_k": kmv_k, "qsample_k": qsample_k,
+            "topk_cap": topk_cap, "hll_p": hll_p, "sorted_k": sorted_k}
+    return _additive_stream(events, path, checkpoint, spec, n_buckets, available_now,
+                            processing_interval_ms)
 
 
 def silver_collapsing_stream(
@@ -2397,18 +2227,25 @@ def silver_collapsing_stream(
     arriving in an EARLIER batch than its +1 only works because the
     balance is a sum (order-free); "current payload" still needs the +1
     to carry the higher seq, exactly CH's well-formed-stream contract.
+    A net-0 key is never purged by the merge: its row carries the
+    winning max-seq payload, and a straggler +1 with a LOWER seq arriving
+    later must lose to it (ADVICE r9).  ClickHouse drops collapsed pairs
+    in plain mode only because it demands strict insert order; bound a
+    delete-heavy plain store with ``collapse_purge_silver`` instead.
 
     **Versioned mode** (``version_col=...``): cancellation is exact per
     (key, version) — a -1 cancels the +1 with the SAME version no matter
     the arrival order (CH's VersionedCollapsing semantics for out-of-order
     streams).  State is one row per (key, version) with non-zero net;
-    fully-cancelled versions leave the store at merge time, so state
-    stays bounded for well-formed streams.  Visible state = the
-    highest-version positive-net row per key.
+    the merge drops fully-cancelled versions — safe, since a purged
+    version can never be needed again — so state stays bounded for
+    well-formed streams.  Visible state = the highest-version
+    positive-net row per key.
 
-    Merge is ADDITIVE (sign balances), not idempotent → same replay
-    guard and touched-bucket publish as ``silver_summing_stream``; TTL /
-    mutations compose through the same tombstone rules."""
+    The state is the op table's ``collapse`` op; like the summing sink, a
+    trigger appends the batch's partial state as a delta with its replay
+    watermark (the merge ADDS sign balances, so it is not idempotent),
+    and TTL / mutations compose through the same tombstone rules."""
     if version_col is None and seq_col is None:
         raise ValueError(
             "plain collapsing needs seq_col (no global insert order in a "
@@ -2420,101 +2257,11 @@ def silver_collapsing_stream(
         c for c in events.columns
         if c not in set(state_keys) | {sign_col, seq_col}
     ]
-
-    def _batch_partial(batch: DataFrame) -> DataFrame:
-        # one row per state key: net sign balance + the payload of the
-        # winning +1 row (max struct skips the NULL entries the when()
-        # leaves for cancel rows, so only +1 payloads compete; in
-        # versioned mode all rows of a (key, version) carry the same
-        # payload by CH contract — sign leads the struct so a +1 row
-        # still wins over its cancel copy)
-        win = F.max(
-            F.when(
-                F.col(sign_col) == 1,
-                F.struct(
-                    F.col(sign_col).alias("__sg"),
-                    F.col(order_col).cast("long").alias("__ord"),
-                    *[F.col(c) for c in payload],
-                ),
-            )
-        ).alias("__w")
-        return batch.groupBy(*state_keys).agg(
-            F.sum(sign_col).cast("long").alias("__sign_net"), win
-        ).select(
-            *state_keys,
-            "__sign_net",
-            F.col("__w.__ord").alias("__ord"),
-            *[F.col(f"__w.{c}").alias(c) for c in payload],
-        )
-
-    def _remerge(frame: DataFrame) -> DataFrame:
-        merged = (
-            frame.groupBy(*state_keys)
-            .agg(
-                F.sum("__sign_net").alias("__sign_net"),
-                F.max(
-                    F.when(
-                        F.col("__ord").isNotNull(),
-                        F.struct(
-                            F.col("__ord").alias("__ord"),
-                            *[F.col(c) for c in payload],
-                        ),
-                    )
-                ).alias("__w"),
-            )
-            .select(
-                *state_keys,
-                "__sign_net",
-                F.col("__w.__ord").alias("__ord"),
-                *[F.col(f"__w.{c}").alias(c) for c in payload],
-            )
-        )
-        if version_col:
-            # fully-cancelled versions leave the store at merge time —
-            # safe because cancellation is exact per (key, version) with
-            # no ordering, so a purged version can never be needed again;
-            # this is what bounds versioned state for well-formed streams.
-            #
-            # Plain-seq mode must NOT purge at merge time (ADVICE r9
-            # adjudicated AGAINST the suggested fix, caught by the
-            # sf0.01 scattered replay): a net-0 key's row carries the
-            # winning max-seq payload, and a straggler +1 with a LOWER
-            # seq arriving later must lose to it — purging the row would
-            # resurrect the straggler's stale payload and break the
-            # batch-boundary-insensitivity contract.  ClickHouse gets to
-            # drop collapsed pairs in plain mode only because it demands
-            # strict insert order; our plain mode is order-independent.
-            # Delete-heavy plain streams bound state with the explicit
-            # ``collapse_purge_silver`` maintenance op (OPTIMIZE FINAL
-            # analogue) once the owner knows the log is quiescent.
-            merged = merged.filter(F.col("__sign_net") != 0)
-        return merged
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        def merge_fn(current: DataFrame | None, part: DataFrame) -> DataFrame:
-            if current is None:
-                # the partial IS the merged state for a fresh bucket, so
-                # versioned mode's net-0 purge applies here too (plain
-                # mode keeps net-0 rows — see _remerge for why)
-                if version_col:
-                    part = part.filter(F.col("__sign_net") != 0)
-                return part.withColumn(DELETED_FLAG, F.lit(False))
-            # same tombstone composition as the summing sink: tombstoned
-            # keys stay out of the re-merge; new rows for the key restart
-            # its balance from the batch partial only
-            live = current.filter(~F.col(DELETED_FLAG)).drop(DELETED_FLAG)
-            tombs = current.filter(F.col(DELETED_FLAG))
-            merged = _remerge(live.unionByName(part)).withColumn(
-                DELETED_FLAG, F.lit(False)
-            )
-            kept_tombs = tombs.join(merged.select(*keys).distinct(), keys, "left_anti")
-            return merged.unionByName(kept_tombs)
-
-        _additive_trigger(batch, batch_id, path, checkpoint, keys, n_buckets,
-                          _batch_partial, merge_fn)
-
-    writer = events.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    return _start(writer, available_now, processing_interval_ms)
+    spec = {"kind": "collapsing", "keys": list(keys), "version_col": version_col,
+            "ops": {"__sign_net": [sign_col, f"collapse:{order_col}"]}}
+    rows = events.select(*dict.fromkeys([*state_keys, sign_col, order_col, *payload]))
+    return _additive_stream(rows, path, checkpoint, spec, n_buckets, available_now,
+                            processing_interval_ms)
 
 
 def read_collapsed(
@@ -2902,9 +2649,10 @@ def ttl_rollup_silver(
     total size — without losing the old mass entirely like plain TTL.
 
     Rolled rows MERGE with any existing row at the coarsened key by the
-    same ops (sum/min/max are associative+commutative), so REPEATED
+    same ops — the op table's merges (``_OPS``), the summing sink's own
+    algebra (sum/min/max are associative+commutative) — so REPEATED
     rollups compose: a later cutoff folds newly-expired rows into the
-    day rows earlier rollups created — same algebra as the summing sink.
+    day rows earlier rollups created.
     ``__n_rows`` (the summing sink's companion count) is summed
     automatically when present.  Tombstones pass through untouched;
     aggregated dtypes are cast back to the store's, so the schema is
@@ -2913,20 +2661,21 @@ def ttl_rollup_silver(
     one version.  Returns the number of rows rolled up."""
     store = _SilverStore.open(path, spark, fold_first=True)
     df = store.read(spark)
-    spec = dict(agg_spec)
-    if "__n_rows" in df.columns and "__n_rows" not in spec:
-        spec["__n_rows"] = "sum"
-    covered = set(keys) | set(spec) | {DELETED_FLAG, ttl_col}
+    merges = {c: _OPS[op].merge(c, {}) if op in _OPS and _OPS[op].scalar else None
+              for c, op in agg_spec.items()}
+    if "__n_rows" in df.columns:
+        merges.setdefault("__n_rows", F.sum("__n_rows"))
+    covered = set(keys) | set(merges) | {DELETED_FLAG, ttl_col}
     uncovered = [c for c in df.columns if c not in covered]
     if uncovered:
         raise ValueError(
             f"rollup needs an agg_spec op for every non-key column; missing: {uncovered}"
         )
-    if ttl_col not in keys and ttl_col not in spec:
+    if ttl_col not in keys and ttl_col not in merges:
         raise ValueError("ttl_col must be a key (coarsened) or carry an agg op")
-    for c, op in spec.items():
-        if op not in ("sum", "min", "max"):
-            raise ValueError(f"agg_spec[{c!r}]: op must be sum/min/max, got {op!r}")
+    for c, merge in merges.items():
+        if merge is None:
+            raise ValueError(f"agg_spec[{c!r}]: op must be sum/min/max, got {agg_spec[c]!r}")
 
     # NULL ttl means "never expires": coalesce to False so NULL-ttl rows
     # are neither rolled up nor dropped from live_keep (a bare
@@ -2946,10 +2695,10 @@ def ttl_rollup_silver(
     sub = store.in_buckets(df, keys, touched)
     n = sub.filter(expired_pred).count()
     dtypes = {f.name: f.dataType for f in sub.schema.fields}
-    aggs = [getattr(F, op)(F.col(c)).cast(dtypes[c]).alias(c) for c, op in spec.items()]
+    aggs = [merge.cast(dtypes[c]).alias(c) for c, merge in merges.items()]
     rolled = (
         sub.filter(expired_pred)
-        .select(*coarse_cols, *spec)
+        .select(*coarse_cols, *merges)
         .groupBy(*keys)
         .agg(*aggs)
     )
@@ -2960,7 +2709,7 @@ def ttl_rollup_silver(
     # rolled rows is the uniform merge, not a correctness trade
     merged = (
         live_keep.drop(DELETED_FLAG)
-        .select(*keys, *spec)
+        .select(*keys, *merges)
         .unionByName(rolled)
         .groupBy(*keys)
         .agg(*aggs)
@@ -2976,13 +2725,17 @@ def read_silver(
     include_deleted: bool = False,
     as_of_version: int | None = None,
 ) -> DataFrame:
-    """Read the silver store written by ``silver_upsert_stream``.
+    """Read a silver store (``silver_upsert_stream``, the summing and
+    collapsing sinks, the transaction sinks).
 
     Loads the last-committed manifest's file set — a consistent snapshot
     even mid-publish, since committed files are immutable until vacuumed
     (falls back to a plain directory read for legacy flat stores) — and,
-    when it holds deltas, applies FINAL over base ∪ deltas: one
-    latest-wins aggregate, the merge the fold itself runs.
+    when it holds deltas, applies FINAL over base ∪ deltas by the merge
+    the delta spec names, the merge the fold itself runs: one latest-wins
+    aggregate for a keyed store, the op table's merges for an additive
+    one (a read of a store with deltas outstanding pays that aggregate
+    over the whole store; the fold cadence bounds the deltas).
 
     ``as_of_version`` (r7, time travel): read the store exactly as it was
     at that committed manifest version — the reproducibility primitive a

@@ -1,10 +1,10 @@
 """Plan pins for the r19 structural optimizations (OPTIMIZATION_r19.md
 §1/§4b) — same discipline as tests/test_r19_plans.py: the wins rest on
-plan shape, so the shape itself is the regression surface.  The BROKEN
-shapes are on record in the committed executed before-plans under
-plans/r19/*_executed_before.txt (e.g. llm_quality_funnel scanned
-documents 30×, ivfpq_rerank_recall scanned embeddings 24×); each pin
-sits strictly between the broken and optimized counts.
+plan shape, so the shape itself is the regression surface.  Each test
+quotes its BROKEN shape's count (e.g. llm_quality_funnel scanned
+documents 30×, ivfpq_rerank_recall scanned embeddings 24×); each pin —
+the test's own assertion — sits strictly between the broken and
+optimized counts.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ def test_quality_funnel_single_corpus_pass(spark):
     """The one-pass metadata restructure: every stage count reads the
     checkpointed per-doc frame — the main plan must contain ZERO parquet
     scans (the single corpus read happens in the checkpoint job).
-    Broken shape: 30 scans (plans/r19/llm_quality_funnel_before.txt)."""
+    Broken shape: 30 scans; the zero-scan assertion below pins it."""
     import __spark_entry__ as entry
 
     plan = _fmt(entry.queries()["llm_quality_funnel"](spark, SF_DIR))
@@ -33,7 +33,7 @@ def test_funnel_dedup_bounded_event_scans(spark):
     """The cascade-level checkpoints: events is scanned once per funnel
     step that still needs raw events (b3 + users + the two break scans),
     never once per CONSUMER.  Broken shape: 40 scans in the lazy
-    composition (plans/r19/events_window_funnel_dedup_before.txt)."""
+    composition; the ≤ 4 assertion below pins it."""
     import __spark_entry__ as entry
 
     plan = _fmt(entry.queries()["events_window_funnel_dedup"](spark, SF_DIR))
@@ -56,7 +56,7 @@ def test_ivfpq_recall_shares_one_shortlist(spark):
     """The recall composite runs the ADC shortlist pass once
     (checkpointed |Q|·20 rows) and derives both branches from it —
     bounded scan count and a checkpointed frame in the plan.  Broken
-    shape: 68 scans (plans/r19/similarity_ivfpq_rerank_recall_before.txt)."""
+    shape: 68 scans; the ≤ 8 assertion below pins it."""
     import __spark_entry__ as entry
 
     plan = _fmt(
@@ -69,8 +69,8 @@ def test_source_overlap_scans_corpus_once(spark):
     """The KMV sketch consumes the distinct (source, token) pairs, so
     the EXECUTED final plan reads the corpus exactly once and reuses the
     distinct exchange across the sketch, self-join and size branches.
-    Broken shape: 2 scans + the sketch's own explode
-    (plans/r19/corpus_source_overlap_executed_before.txt)."""
+    Broken shape: 2 scans + the sketch's own explode; the one-scan
+    assertion below pins it."""
     import __spark_entry__ as entry
 
     df = entry.queries()["corpus_source_overlap"](spark, SF_DIR)

@@ -319,3 +319,197 @@ def test_silver_store_matches_dict_model_wide(spark, tmp_path, monkeypatch, fold
         max_examples=15, stateful_step_count=10, deadline=None, derandomize=True,
         suppress_health_check=list(HealthCheck),
     ))
+
+
+# -- the summing store ------------------------------------------------------
+
+#: the delta spec ``silver_summing_stream(keys=["k"], sum_cols=["v"])`` commits
+SUM_SPEC = {"kind": "summing", "keys": ["k"], "ops": {"v": ["v", "sum"]}, "sum_scale": 2,
+            "kmv_k": 256, "qsample_k": 512, "topk_cap": 16, "hll_p": 12, "sorted_k": 64}
+SUM_CKPT = "/checkpoints/summing-model"
+
+_cents = st.lists(st.tuples(st.sampled_from(KEYS), st.integers(-300, 500)), min_size=1, max_size=6)
+
+
+class SummingModel(RuleBasedStateMachine):
+    """A summing store against a dict: ``rows`` maps a stored key to its
+    running sum (in cents), its ``__n_rows`` and its tombstone flag;
+    ``versions`` maps each committed version to a copy of ``rows``.  A
+    trigger is the sink's foreachBatch body: the batch's partial through
+    the one delta trigger, with the replay guard."""
+
+    spark = None
+    root = None
+
+    def __init__(self):
+        super().__init__()
+        self.path = tempfile.mkdtemp(dir=self.root)
+        self.rows: dict[int, dict] = {}
+        self.batch_id = -1
+        self.versions: dict[int, dict] = {}
+        self.plan = None
+
+    def _version(self) -> int:
+        m = pl._read_manifest(self.path)
+        return 0 if m is None else m["version"]
+
+    def _commit(self, before: int, pre: dict) -> None:
+        after = self._version()
+        for v in range(before + 1, after + 1):
+            self.versions[v] = copy.deepcopy(self.rows if v == after else pre)
+
+    @initialize(batch=_cents)
+    def first(self, batch):
+        self.trigger(batch, False)
+
+    @rule(batch=_cents, replay=st.booleans())
+    def trigger(self, batch, replay):
+        """A new batch adds to live keys and restarts absent or tombstoned
+        ones from the batch alone; a replay of the last applied batch id
+        (a crash between the commit and the checkpoint) changes nothing."""
+        replay = replay and self.batch_id >= 0
+        bid = self.batch_id if replay else self.batch_id + 1
+        before, pre = self._version(), copy.deepcopy(self.rows)
+        df = self.spark.createDataFrame([(k, c / 100) for k, c in batch], "k long, v double")
+        part = pl._additive_state(df.coalesce(1), SUM_SPEC, merge=False)
+        pl._delta_trigger(part, self.path, SUM_SPEC, 4, migrate=False, replay=(SUM_CKPT, bid))
+        if replay:
+            assert self._version() == before
+            return
+        self.batch_id = bid
+        for k, c in batch:
+            cur = self.rows.get(k)
+            if cur is None or cur["deleted"]:
+                cur = self.rows[k] = {"cents": 0, "n": 0, "deleted": False}
+            cur["cents"] += c
+            cur["n"] += 1
+        self._commit(before, pre)
+
+    @rule()
+    def fold_prepare(self):
+        store = pl._SilverStore.load(self.path)
+        if self.plan is None and store is not None:
+            self.plan = store.fold_prepare(self.spark)
+
+    @rule()
+    def fold_commit(self):
+        if self.plan is None:
+            return
+        before = self._version()
+        pl._SilverStore.load(self.path).fold_commit(self.plan)
+        self.plan = None
+        self._commit(before, self.rows)
+
+    @rule(k=st.sampled_from(KEYS))
+    def mutate(self, k):
+        """Delete one key: a tombstone keeping its expired totals."""
+        before, pre = self._version(), copy.deepcopy(self.rows)
+        n = pl.mutate_silver(self.spark, self.path, ["k"], F.col("k") == k, delete=True)
+        live = k in self.rows and not self.rows[k]["deleted"]
+        assert n == int(live)
+        if live:
+            self.rows[k]["deleted"] = True
+        self._commit(before, pre)
+
+    @rule(cutoff=st.integers(-100, 600))
+    def ttl(self, cutoff):
+        """Expire every live key whose running sum is below ``cutoff``."""
+        before, pre = self._version(), copy.deepcopy(self.rows)
+        n = pl.ttl_silver(self.spark, self.path, ["k"], "v", F.lit(cutoff / 100))
+        hit = [k for k, r in self.rows.items() if not r["deleted"] and r["cents"] < cutoff]
+        assert n == len(hit)
+        for k in hit:
+            self.rows[k]["deleted"] = True
+        self._commit(before, pre)
+
+    @rule(horizon=st.none() | st.integers(-100, 600))
+    def compact(self, horizon):
+        """Drop the tombstones whose expired sum is below ``horizon``."""
+        before, pre = self._version(), copy.deepcopy(self.rows)
+        pl.compact_silver(self.spark, self.path, ["k"], version_col="v", vacuum_grace_s=600,
+                          drop_tombstones_below_version=None if horizon is None else horizon / 100)
+        if horizon is not None:
+            self.rows = {k: r for k, r in self.rows.items()
+                         if not (r["deleted"] and r["cents"] < horizon)}
+        self._commit(before, pre)
+
+    @precondition(lambda self: self.versions)
+    @rule(data=st.data())
+    def as_of(self, data):
+        v = data.draw(st.sampled_from(sorted(self.versions)))
+        assert self._read(pl.read_silver(self.spark, self.path, include_deleted=True,
+                                         as_of_version=v)) == self._stored(self.versions[v])
+
+    def _read(self, df) -> dict:
+        return {r.k: (int(r.v * 100), r["__n_rows"], r["__deleted"]) for r in df.collect()}
+
+    def _stored(self, rows: dict) -> dict:
+        return {k: (r["cents"], r["n"], r["deleted"]) for k, r in rows.items()}
+
+    @invariant()
+    def read_matches_model(self):
+        """One stored row per key, live or tombstoned, with the model's
+        sum, row count and flag; the default read hides the tombstones."""
+        assert self._read(pl.read_silver(self.spark, self.path, include_deleted=True)) == \
+            self._stored(self.rows)
+        live = {r.k for r in pl.read_silver(self.spark, self.path).collect()}
+        assert live == {k for k, r in self.rows.items() if not r["deleted"]}
+
+
+#: a fixed walk through every summing rule: a replayed batch, a fold
+#: prepared before a trigger (the later delta must survive its commit)
+#: and one prepared before a mutation (it must not commit); mutation and
+#: TTL tombstones followed by new rows for those keys, which restart
+#: from the new rows alone; compactions with and without a tombstone
+#: horizon, and time travel to the first and a middle version.
+SUM_WALK = [
+    ("first", {"batch": [(0, 150), (1, 200), (2, 30), (0, 25)]}),
+    ("trigger", {"batch": [(1, 100), (3, 400)], "replay": False}),
+    ("trigger", {"batch": [(1, 999), (4, 1)], "replay": True}),
+    ("fold_prepare", {}),
+    ("trigger", {"batch": [(2, 70), (5, -40)], "replay": False}),
+    ("fold_commit", {}),
+    ("as_of", {"data": lambda m: min(m.versions)}),
+    ("mutate", {"k": 1}),
+    ("trigger", {"batch": [(1, 5), (0, 5)], "replay": False}),
+    ("fold_prepare", {}),
+    ("ttl", {"cutoff": 101}),
+    ("fold_commit", {}),
+    ("trigger", {"batch": [(2, 11), (5, 60), (4, 2)], "replay": False}),
+    ("trigger", {"batch": [(2, 1)], "replay": True}),
+    ("as_of", {"data": lambda m: sorted(m.versions)[len(m.versions) // 2]}),
+    ("mutate", {"k": 3}),
+    ("compact", {"horizon": None}),
+    ("trigger", {"batch": [(3, 7)], "replay": False}),
+    ("ttl", {"cutoff": 50}),
+    ("compact", {"horizon": 30}),
+    ("trigger", {"batch": [(4, 3), (5, 3)], "replay": False}),
+    ("as_of", {"data": lambda m: max(m.versions)}),
+]
+
+
+@pytest.mark.parametrize("fold", ["every_trigger", "never"])
+def test_summing_store_matches_dict_model(spark, tmp_path, monkeypatch, fold):
+    """The fixed ``SUM_WALK`` at one fold extreme; it must name every rule."""
+    assert {name for name, _ in SUM_WALK} >= {r.function.__name__ for r in SummingModel.rules()}
+    _fold_at(monkeypatch, fold)
+    SummingModel.spark, SummingModel.root = spark, str(tmp_path)
+    model = SummingModel()
+    for name, kwargs in SUM_WALK:
+        getattr(model, name)(**{
+            k: _Drawn(v(model)) if k == "data" else v for k, v in kwargs.items()})
+        model.read_matches_model()
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("fold", ["every_trigger", "never"])
+def test_summing_store_matches_dict_model_wide(spark, tmp_path, monkeypatch, fold):
+    """Fifteen hypothesis-chosen interleavings of the summing rules at
+    each fold extreme: batch boundaries, replays, tombstones before new
+    rows, fold steps around other writes, compactions and time travel."""
+    _fold_at(monkeypatch, fold)
+    SummingModel.spark, SummingModel.root = spark, str(tmp_path)
+    run_state_machine_as_test(SummingModel, settings=settings(
+        max_examples=15, stateful_step_count=10, deadline=None, derandomize=True,
+        suppress_health_check=list(HealthCheck),
+    ))

@@ -2,10 +2,12 @@
 
 ``_SilverStore`` is the only code that reads or writes a manifest field,
 commits a manifest, parses a bucket out of a file path or builds a
-default manifest; and every base-bucket rewrite goes through its one
+default manifest; every base-bucket rewrite goes through its one
 touched-bucket merge (``merge``) and its one bucket writer
-(``_write_plan``).  Same idiom as tests/test_scratch.py: each guard, plus
-an anti-tautology twin showing that it still sees what it looks for.
+(``_write_plan``); every merge is built by the one merge builder
+(``_merge_of``); and the additive stores' ops are dispatched only by the
+op table (``_OPS``).  Same idiom as tests/test_scratch.py: each guard,
+plus an anti-tautology twin showing that it still sees what it looks for.
 """
 
 from __future__ import annotations
@@ -124,21 +126,19 @@ def test_store_still_does_each_guarded_access():
 
 # -- one fold, one bucket writer ------------------------------------------
 
-#: the store's one touched-bucket merge, and the one other reader of
-#: ``merge_touched`` (FINAL over base ∪ deltas)
-MERGE_USERS = {"merge", "read"}
+#: the one merge builder: every store kind's merge, for the store's
+#: touched-bucket merge, its FINAL read and the fold, is built here
+MERGE_BUILDER = "_merge_of"
 
 
 def _fork_findings(tree: ast.Module) -> list[tuple[str, str]]:
     """``(where, kind)`` of every fork of the store's rewrite path in
-    ``tree``: a ``merge_touched`` call outside the merge step and
-    ``_SilverStore.read``, a ``_write_buckets`` with other than one
-    caller, and a module-level function reading base buckets itself
-    (``.base(``)."""
-    store = next(n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "_SilverStore")
-    allowed = {id(node) for m in store.body
-               if isinstance(m, ast.FunctionDef) and m.name in MERGE_USERS
-               for node in ast.walk(m)}
+    ``tree``: a ``merge_touched`` call outside the one merge builder, a
+    ``_write_buckets`` with other than one caller, and a module-level
+    function reading base buckets itself (``.base(``)."""
+    allowed = {id(node) for top in tree.body
+               if isinstance(top, ast.FunctionDef) and top.name == MERGE_BUILDER
+               for node in ast.walk(top)}
     found, writers = [], []
     for top in tree.body:
         scopes = top.body if isinstance(top, ast.ClassDef) else [top]
@@ -162,9 +162,10 @@ def _fork_findings(tree: ast.Module) -> list[tuple[str, str]]:
 
 def test_one_fold_and_one_bucket_writer():
     """Every base-bucket rewrite — publish, the inline and the background
-    fold, the summing/collapsing and transaction triggers — merges
-    through ``_SilverStore.merge`` and writes through ``_write_plan``,
-    the one caller of ``_write_buckets``."""
+    fold of every store kind, the transaction trigger's pending buffer —
+    merges through ``_SilverStore.merge`` by the merge ``_merge_of``
+    builds, and writes through ``_write_plan``, the one caller of
+    ``_write_buckets``."""
     found = _fork_findings(_parse(PIPELINE))
     assert not found, "a second merge or bucket-write path in the pipeline:\n" + "\n".join(
         f"{where}: {kind}" for where, kind in found)
@@ -178,8 +179,13 @@ def test_one_fold_and_one_bucket_writer():
 def test_fork_guard_sees_the_forked_fold():
     """Anti-tautology twin: the guard flags the forked shape — an inline
     fold through a free touched-bucket merge beside a background fold
-    with its own merge and its own bucket write."""
+    with its own merge and its own bucket write, and a read merging by
+    itself — and lets the one merge builder call ``merge_touched``."""
     old = '''
+def _merge_of(spec):
+    return lambda current, events: merge_touched(events, current, spec["keys"])
+
+
 class _SilverStore:
     def read(self, spark):
         return merge_touched(self._delta_rows(spark), base, spec["keys"])
@@ -208,6 +214,7 @@ def _touched_bucket_merge(batch, store, keys, prepare, merge_fn, edits=None):
         ("fold_prepare", "merge_touched outside the merge step"),
         ("fold_prepare", "second bucket writer"),
         ("publish", "second bucket writer"),
+        ("read", "merge_touched outside the merge step"),
     ]
 
 
@@ -275,3 +282,107 @@ class _SilverStore:
 '''
     assert _writer_findings(ast.parse(old)) == [
         ("publish_delta", "DataFrameWriter outside the bloom exception")]
+
+
+# -- one op table -----------------------------------------------------------
+
+#: the additive stores' op table: each op's partial and merge
+OP_TABLE = "_OPS"
+
+
+def _op_table(tree: ast.Module) -> ast.AST | None:
+    tables = [n for n in tree.body if isinstance(n, ast.AnnAssign)
+              and isinstance(n.target, ast.Name) and n.target.id == OP_TABLE]
+    return tables[0] if tables else None
+
+
+def _op_findings(tree: ast.Module, names: set[str]) -> list[tuple[str, str]]:
+    """``(where, op)`` of every dispatch on an op name outside the op
+    table: an op name compared with (``==``, ``in`` a literal tuple …),
+    subscripted or ``.get``-ed by — the if-chains the table replaced."""
+    table = _op_table(tree)
+    skip = {id(n) for n in ast.walk(table)} if table is not None else set()
+    found = []
+
+    def named(node) -> list[str]:
+        elts = node.elts if isinstance(node, (ast.Tuple, ast.List, ast.Set)) else [node]
+        return [e.value for e in elts if isinstance(e, ast.Constant) and e.value in names]
+
+    def visit(node, where):
+        if id(node) in skip:
+            return
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            where = node.name
+        if isinstance(node, ast.Compare):
+            found.extend((where, op) for side in [node.left, *node.comparators]
+                         for op in named(side))
+        elif isinstance(node, ast.Subscript):
+            found.extend((where, op) for op in named(node.slice))
+        elif (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+              and node.func.attr == "get" and node.args):
+            found.extend((where, op) for op in named(node.args[0]))
+        for child in ast.iter_child_nodes(node):
+            visit(child, where)
+
+    visit(tree, "<module>")
+    return found
+
+
+def _table_names(tree: ast.Module) -> set[str]:
+    table = _op_table(tree)
+    assert table is not None and isinstance(table.value, ast.Dict)
+    return {k.value for k in table.value.keys if isinstance(k, ast.Constant)}
+
+
+def test_ops_are_dispatched_only_by_the_op_table():
+    """Every op's algebra — the summing sink's 15 ops and the collapsing
+    stores' one — is a partial and a merge in ``_OPS``: no code outside
+    the table dispatches on an op name, so a new op is one table entry
+    that every trigger, fold and read applies."""
+    import postgres_debezium_clickhouse_spark.streaming.pipeline as pl
+
+    tree = _parse(PIPELINE)
+    names = _table_names(tree)
+    assert names == set(pl._OPS) and len(set(pl.AGG_OPS) | set(pl._KEYED_OPS)) == 15
+    assert set(pl.AGG_OPS) | set(pl._KEYED_OPS) < names
+    found = _op_findings(tree, names)
+    assert not found, "op algebra outside the op table:\n" + "\n".join(
+        f"{where}: {op!r}" for where, op in found)
+
+
+def test_op_guard_sees_the_closure_if_chains():
+    """Anti-tautology twin: the guard flags the summing sink's closures
+    as they were before the op table — ``_ingest``/``_remerge`` if-chains
+    over the op names — and a rollup validating its own op list."""
+    old = '''
+def silver_summing_stream(events, path, checkpoint, keys, agg_spec=None):
+    topk_outs = [(out, src) for out, (src, op) in spec.items()
+                 if _parse_agg_op(op)[0] in ("topk", "topkweighted")]
+
+    def _ingest(out, src, op):
+        base, ord_col = _parse_agg_op(op)
+        if base == "sum":
+            return F.sum(F.col(src).cast(ingest_t)).cast(acc).alias(out)
+        if base in ("summap", "minmap", "maxmap"):
+            return _map_agg(F.col(src).cast(map_ingest_t), base).alias(out)
+        return getattr(F, base)(F.col(src)).alias(out)
+
+    def _remerge(out, op):
+        base, _ = _parse_agg_op(op)
+        if base == "kmv":
+            return F.slice(F.array_sort(F.array_distinct(F.flatten(F.collect_list(out)))), 1, k)
+        return getattr(F, base)(F.col(out)).alias(out)
+
+
+def ttl_rollup_silver(spark, path, keys, ttl_col, older_than, coarsen, agg_spec):
+    for c, op in spec.items():
+        if op not in ("sum", "min", "max"):
+            raise ValueError(op)
+'''
+    names = _table_names(_parse(PIPELINE))
+    assert sorted(_op_findings(ast.parse(old), names)) == sorted([
+        ("silver_summing_stream", "topk"), ("silver_summing_stream", "topkweighted"),
+        ("_ingest", "sum"), ("_ingest", "summap"), ("_ingest", "minmap"), ("_ingest", "maxmap"),
+        ("_remerge", "kmv"),
+        ("ttl_rollup_silver", "sum"), ("ttl_rollup_silver", "min"), ("ttl_rollup_silver", "max"),
+    ])

@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from _jobs import ran_stages, spark_jobs
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -357,3 +358,64 @@ def test_background_fold_rides_in_the_next_delta_commit(spark, tmp_path, monkeyp
     live = {r.id: r.val for r in pl.read_silver(spark, store).collect()}
     assert len(live) == 299 and 30 not in live
     assert (live[10], live[20], live[40]) == ("a", "b", "c")
+
+
+# -- the additive sinks share the delta trigger -----------------------------
+
+_ADDITIVE = {
+    "summing": ("k long, v double",
+                lambda i, rep: (i, float(rep)),
+                lambda stream, store, ckpt: pl.silver_summing_stream(
+                    stream, store, ckpt, keys=["k"], sum_cols=["v"], available_now=True)),
+    "collapsing": ("k long, sign int, seq long, price double",
+                   lambda i, rep: (i, 1 if rep == 0 else -1 if i % 2 else 1, rep * 10_000 + i, 1.0),
+                   lambda stream, store, ckpt: pl.silver_collapsing_stream(
+                       stream, store, ckpt, keys=["k"], seq_col="seq", available_now=True)),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_ADDITIVE))
+def test_additive_delta_trigger_budget(spark, tmp_path, monkeypatch, kind):
+    """A ``sum_cols`` summing trigger and a plain collapsing trigger into
+    a 64-bucket store take the keyed sink's delta path: at most two
+    Spark jobs, exactly one parquet file written — a delta, no base
+    bucket — one epoch claim and one CAS commit, and the replay
+    watermark ``applied`` recorded in that same commit."""
+    import hashlib
+
+    monkeypatch.setattr(pl, "FOLD_DELTAS", 16)
+    schema, row, start = _ADDITIVE[kind]
+    store, src, ckpt = str(tmp_path / "silver"), str(tmp_path / "src"), str(tmp_path / "c")
+    ck = hashlib.md5(ckpt.encode()).hexdigest()[:12]
+    for rep, ids in enumerate([range(3000), range(0, 3000, 97), range(5, 3000, 101)]):
+        spark.createDataFrame([row(i, rep) for i in ids], schema).coalesce(1).write.mode(
+            "append").json(src)
+        before, files_before = _manifest(store) if rep else {}, _parquet_files(store)
+        backend = _CountingBackend(pl.COMMIT_BACKEND)
+        monkeypatch.setattr(pl, "COMMIT_BACKEND", backend)
+        with spark_jobs(spark) as jobs:
+            q = start(spark.readStream.schema(schema).json(src), store, ckpt)
+            assert q.awaitTermination(180)
+        monkeypatch.setattr(pl, "COMMIT_BACKEND", backend.inner)
+    assert _manifest(store)["n_buckets"] == 64
+
+    assert 0 < len(jobs) <= 2, len(jobs)
+    assert (backend.claims, backend.commits) == (1, 1)
+    m = _manifest(store)
+    written = _parquet_files(store) - files_before
+    assert len(written) == 1 and "__bucket=" not in next(iter(written))
+    assert m[pl.DELTAS] == before[pl.DELTAS] + sorted(written)
+    assert m["files"] == before["files"] and m["version"] == before["version"] + 1
+    assert before["applied"] == {ck: 1} and m["applied"] == {ck: 2}
+    assert m[pl.DELTA_SPEC]["kind"] == kind
+
+    state = {r.k: r for r in pl.read_silver(spark, store).collect()}
+    assert len(state) == 3000
+    if kind == "summing":
+        assert (float(state[97].v), state[97]["__n_rows"]) == (1.0, 2)
+        assert (float(state[5].v), state[5]["__n_rows"]) == (2.0, 2)
+        assert (float(state[2].v), state[2]["__n_rows"]) == (0.0, 1)
+    else:
+        # k=97 is odd: its trigger-1 row cancels; k=5's trigger-2 row too;
+        # k=2 keeps its one +1
+        assert {k: state[k]["__sign_net"] for k in (97, 5, 2, 194)} == {97: 0, 5: 0, 2: 1, 194: 2}

@@ -124,8 +124,9 @@ def test_agg_spec_rejects_unknown_op(spark, dirs):
 
 def test_merge_stage_width_stays_bounded(spark, dirs):
     """Regression guard for the r8 shuffle-width cliff: a persisted
-    aggregate (the foreachBatch merges persist the per-batch partial)
-    must still be AQE-coalesced — with
+    aggregate (the transaction trigger persists its merged ``universe``
+    of pending ∪ batch rows before its completeness aggregate) must
+    still be AQE-coalesced — with
     canChangeCachedPlanOutputPartitioning at its FALSE default, a cached
     plan materializes the shuffle at initialPartitionNum uncoalesced
     (measured: 2048-task stages per trigger, stream_summing_state 20.6s
